@@ -1562,7 +1562,7 @@ object ChangelogSql {
       }
     }
 
-  /** Micro-batch trigger for stream starts. Default (confs unset) keeps
+  /** Micro-batch trigger for stream starts. Default (conf unset) keeps
     * the zero-interval continuous trigger.
     *
     * `graft.stream.triggerIntervalMs`: a caller that lands ONE logical
@@ -1570,39 +1570,18 @@ object ChangelogSql {
     * inputs commit one table at a time) sets it a bit above its append
     * latency so the poll does not fire between the appends and split the
     * commit round into one micro-batch per source — fewer, larger
-    * micro-batches paying the per-batch machinery once.
+    * micro-batches paying the per-batch machinery once. (A per-round
+    * Trigger.AvailableNow restart was measured and rejected for the same
+    * gates; see OPTIMIZATION_r16.md.)
     *
-    * `graft.stream.trigger=availableNow`: Trigger.AvailableNow — the
-    * query drains everything available at start as one micro-batch per
-    * source-limit window and terminates. A caller that drives discrete
-    * commit rounds runs ONE such query per round against the same
-    * checkpoint: the round's appends are complete BEFORE the start, so
-    * coalescing is exact with no poll clock to wait on and no
-    * split-round race. Takes precedence over the interval conf when both
-    * are set.
-    *
-    * MEASURED AND REJECTED for the two-source commit-round gates
-    * (r16, ProfilePhases interleaved A/B on q163, 3 pairs): per-round
-    * restarts pay state-store re-acquire inside addBatch (+0.6 s),
-    * re-planning (+0.1-0.25 s) and query start/stop machinery per round,
-    * totalling 12.4-16.8 s per gate vs 10.1-10.3 s for the 1000 ms
-    * interval trigger — and the poll-alignment wait the restarts would
-    * remove measures only 0.08-0.14 s per round in steady state (each
-    * batch exceeds the interval, so the executor's next poll fires
-    * immediately after it — the "falling behind" regime). The conf stays
-    * as the measurement instrument's hook (ProfilePhases) and for
-    * drain-and-terminate callers; no declared gate uses it.
-    *
-    * The final state is identical under any of the three (the
-    * normalize/join/agg operators are deterministic over the same total
-    * input and the sinks materialize by key); this is purely the
-    * optimization guide's "fewer, larger" rule applied to micro-batches. */
+    * The final state is identical either way (the normalize/join/agg
+    * operators are deterministic over the same total input and the sinks
+    * materialize by key); this is purely the optimization guide's
+    * "fewer, larger" rule applied to micro-batches. */
   private def withTrigger[T](spark: SparkSession,
       w: org.apache.spark.sql.streaming.DataStreamWriter[T])
       : org.apache.spark.sql.streaming.DataStreamWriter[T] =
-    if (spark.conf.getOption("graft.stream.trigger").contains("availableNow"))
-      w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else spark.conf.getOption("graft.stream.triggerIntervalMs") match {
+    spark.conf.getOption("graft.stream.triggerIntervalMs") match {
       case Some(ms) => w.trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime(ms.trim.toLong,
           java.util.concurrent.TimeUnit.MILLISECONDS))
@@ -2747,7 +2726,7 @@ object ChangelogSql {
         if (!preserved) src.filter(!anyNull)
           .withColumn("__gk", keyJson)
         else src.withColumn("__gk",
-          when(anyNull, concat(lit(" " + sideTag), payloadJson))
+          when(anyNull, concat(lit("\u0000" + sideTag), payloadJson))
             .otherwise(keyJson))
       keyed.select(col("__gk").as("_1"),
         col(streaming.Cdc.RowKind).as("_2"), payloadJson.as("_3"))

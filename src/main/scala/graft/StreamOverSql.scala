@@ -502,13 +502,7 @@ object StreamOverSql {
         val typed = src.select(keyCol, col(rowtime).as("t"),
             array(slotCols.result(): _*).as("v"))
           .as[(String, java.sql.Timestamp, Seq[Double])]
-        // graft.over.tws=true selects the transformWithState port of the
-        // fused pass (point-write state — the RocksDB/scale path; exact
-        // output equality with the default is spec-pinned)
-        val useTws = spark.conf.getOption("graft.over.tws").contains("true")
-        (if (useTws)
-          graft.streaming.StatefulTws.overMultiAggsByKey(typed, frames, slotOps.result())
-        else StatefulOps.overMultiAggsByKey(typed, frames, slotOps.result()))
+        StatefulOps.overMultiAggsByKey(typed, frames, slotOps.result())
           .toDF("k", "t_ms", "vals", "sums")
       }
 

@@ -458,10 +458,6 @@ object AltCep {
       ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
       es: Encoder[(Seq[(Long, Long, Long)], Seq[List[Run]], Seq[(Int, Seq[BoundEv])])],
       eo: Encoder[(Long, Seq[Seq[Long]])]): Dataset[(Long, Seq[Seq[Long]])] = {
-    // fleet-migration front (r15): RocksDB active routes onto the TWS
-    // port (AltCepTws — emission-equal, spec-pinned); fMGWS fallback
-    if (graft.streaming.Retract.rocksDbActive(ds.sparkSession))
-      return AltCepTws.matchStream(ds, c, delay)
     val withTs = ds
       .map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
       .withWatermark("_2", delay)

@@ -580,11 +580,6 @@ object Cep {
       ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
       es: Encoder[(Seq[(Long, Long, Long)], List[Run])],
       eo: Encoder[(Long, Seq[Seq[Long]])]): Dataset[(Long, Seq[Seq[Long]])] = {
-    // fleet-migration front (r15): RocksDB active routes onto the TWS
-    // port's named-handle state (CepTws — emission-equal, spec-pinned);
-    // the fMGWS fold below stays as the provider-agnostic fallback
-    if (graft.streaming.Retract.rocksDbActive(ds.sparkSession))
-      return CepTws.matchStream(ds, pattern, delay)
     val withTs = ds
       .map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
       .withWatermark("_2", delay)

@@ -10,33 +10,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Reference: flink-table-runtime .../aggregate/GroupAggFunction.java:43
   * (accumulate/retract on RowKind, emits UPDATE_AFTER and a DELETE when a
-  * group empties) and .../rank/RetractableTopNFunction.java:56 (sorted
-  * per-key state, re-ranks and backfills when a ranked row retracts).
+  * group empties) and the rank/ functions for the top-1 and upsert top-N
+  * surfaces. The retractable top-N (RetractableTopNFunction.java:56)
+  * lives in [[RetractTws]].
   *
   * State sizes: groupAggregate keeps one (count, sum) pair per key —
-  * O(keys). retractableTopN keeps every LIVE row of the key (like Flink's
-  * dataState MapState): retracting a top row must backfill from below, so
-  * the full live set is the honest lower bound for exact semantics.
+  * O(keys).
   */
 object Retract {
   import Cdc.{Delete, Insert, UpdateAfter, UpdateBefore}
 
   private[streaming] def isAdd(kind: String): Boolean = kind == Insert || kind == UpdateAfter
   private[streaming] def isRetract(kind: String): Boolean = kind == Delete || kind == UpdateBefore
-
-  /** Is the session's state-store provider RocksDB — the
-    * transformWithState runtime prerequisite, and therefore the routing
-    * signal for fMGWS surfaces that have a TWS port (the
-    * "fleet-migration default" pattern: point-write state when the
-    * provider supports it, whole-GroupState fold otherwise). Read at
-    * plan-construction time; a frame built during ANOTHER query's
-    * StartLock pin window would mis-route, but the failure mode is
-    * transformWithState's loud provider error at start, never silent
-    * wrongness — and front-door construction+start share one thread. */
-  private[graft] def rocksDbActive(
-      spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDBStateStoreProvider"))
 
   /** Streaming group aggregate consuming a changelog of
     * (key, row_kind, value). Emits the refreshed (key, row_kind, count,
@@ -110,123 +95,6 @@ object Retract {
 
     ds.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Retractable top-N per key over a changelog of
-    * (key, row_kind, score, payload). A retraction (-U/-D) removes one
-    * matching (score, payload) instance; the refreshed top-N — including
-    * rows BACKFILLED from below the old cut — is emitted whenever it
-    * changes, as (key, rank, score, payload). */
-  def retractableTopN[K: Encoder](
-      ds: Dataset[(K, String, Double, String)], n: Int)(
-      implicit e1: Encoder[Seq[(Double, String, Int)]],
-      e2: Encoder[(K, Int, Double, String)]): Dataset[(K, Int, Double, String)] = {
-    // RocksDB active: the sorted-counts TWS port (point-write state,
-    // top-boundary cache) — the fMGWS fold below stays as the
-    // provider-agnostic fallback (same routing as the changelog variant)
-    if (rocksDbActive(ds.sparkSession))
-      return RetractTws.retractableTopN(ds, n)
-
-    // live state is a COUNTED multiset (score, payload) -> live count, the
-    // MapState[row, cnt] shape of Flink's JoinRecordStateView/dataState:
-    // retraction lookup is O(1) instead of Seq.indexOf's O(live).
-    def topOf(live: Iterable[(Double, String, Int)]): Seq[(Double, String)] =
-      live.toSeq.sortBy { case (score, payload, _) => (-score, payload) }
-        .iterator.flatMap { case (s, p, c) => Iterator.fill(c)((s, p)) }
-        .take(n).toSeq
-
-    def update(key: K, rows: Iterator[(K, String, Double, String)],
-        state: GroupState[Seq[(Double, String, Int)]]): Iterator[(K, Int, Double, String)] = {
-      val before = state.getOption.getOrElse(Seq.empty)
-      val live = scala.collection.mutable.LinkedHashMap.from(
-        before.map { case (s, p, c) => ((s, p), c) })
-      rows.foreach { case (_, kind, score, payload) =>
-        if (isAdd(kind))
-          live.updateWith((score, payload))(c => Some(c.getOrElse(0) + 1))
-        else if (isRetract(kind)) live.get((score, payload)).foreach { c =>
-          if (c == 1) live.remove((score, payload))
-          else live.update((score, payload), c - 1)
-        }
-      }
-      val after = live.toSeq.map { case ((s, p), c) => (s, p, c) }
-      if (after.isEmpty) state.remove() else state.update(after)
-      val (oldTop, newTop) = (topOf(before), topOf(after))
-      if (newTop == oldTop) Iterator.empty
-      else newTop.iterator.zipWithIndex.map { case ((score, payload), i) =>
-        (key, i + 1, score, payload)
-      }
-    }
-
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** [[retractableTopN]] with an explicit DOWNSTREAM CHANGELOG — the
-    * full RetractableTopNFunction emit contract
-    * (rank/RetractableTopNFunction.java:56 emits updates AND deletes so
-    * a sink keyed by (key, rank) stays exact): whenever a key's top-N
-    * changes, the refreshed ranks emit as ("+U", key, rank, score,
-    * payload) and ranks the refreshed top no longer covers (the top
-    * SHRANK — a retraction below N with nothing to backfill) emit
-    * ("-D", key, rank, oldScore, oldPayload). Feeding an upsert sink
-    * keyed by (key, rank) therefore always materializes to exactly the
-    * current top-N. */
-  def retractableTopNChangelog[K: Encoder](
-      ds: Dataset[(K, String, Double, String)], n: Int)(
-      implicit e1: Encoder[Seq[(Double, String, Int)]],
-      e2: Encoder[(String, K, Int, Double, String)])
-      : Dataset[(String, K, Int, Double, String)] = {
-    // ONE ranking implementation (r15): when the RocksDB provider is
-    // active this surface delegates to the sorted-counts TWS port —
-    // point-write state, top-boundary cache — and the GroupState fold
-    // below remains only as the provider-agnostic fallback (the same
-    // routing StreamJoin.innerJoin uses; transformWithState requires
-    // RocksDB, so the default provider cannot take the port).
-    if (rocksDbActive(ds.sparkSession))
-      return RetractTws.retractableTopNChangelog(ds, n)
-
-    def topOf(live: Iterable[(Double, String, Int)]): Seq[(Double, String)] =
-      live.toSeq.sortBy { case (score, payload, _) => (-score, payload) }
-        .iterator.flatMap { case (s, p, c) => Iterator.fill(c)((s, p)) }
-        .take(n).toSeq
-
-    def update(key: K, rows: Iterator[(K, String, Double, String)],
-        state: GroupState[Seq[(Double, String, Int)]])
-        : Iterator[(String, K, Int, Double, String)] = {
-      val before = state.getOption.getOrElse(Seq.empty)
-      val live = scala.collection.mutable.LinkedHashMap.from(
-        before.map { case (s, p, c) => ((s, p), c) })
-      rows.foreach { case (_, kind, score, payload) =>
-        if (isAdd(kind))
-          live.updateWith((score, payload))(c => Some(c.getOrElse(0) + 1))
-        else if (isRetract(kind)) live.get((score, payload)).foreach { c =>
-          if (c == 1) live.remove((score, payload))
-          else live.update((score, payload), c - 1)
-        }
-      }
-      val after = live.toSeq.map { case ((s, p), c) => (s, p, c) }
-      if (after.isEmpty) state.remove() else state.update(after)
-      val (oldTop, newTop) = (topOf(before), topOf(after))
-      if (newTop == oldTop) Iterator.empty
-      else {
-        val refreshed = newTop.iterator.zipWithIndex.collect {
-          case ((score, payload), i)
-              if oldTop.lift(i) != Some((score, payload)) =>
-            (UpdateAfter, key, i + 1, score, payload)
-        }
-        val shrunk = oldTop.iterator.zipWithIndex.drop(newTop.size).map {
-          case ((score, payload), i) => (Delete, key, i + 1, score, payload)
-        }
-        refreshed ++ shrunk
-      }
-    }
-
-    // APPEND mode: the emitted rows are changelog DELTAS (+U/-D), not
-    // keyed updates — and append is what lets this operator CHAIN
-    // downstream of ChangelogNormalize (Spark allows multiple
-    // flatMapGroupsWithState only when all run in append mode)
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
   /** FAST top-1 (rank/FastTop1Function.java:54 — the

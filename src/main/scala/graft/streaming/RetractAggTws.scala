@@ -326,7 +326,7 @@ object RetractAggTws {
     * (the emission is a changelog delta stream), which is what lets it
     * chain DOWNSTREAM of the join port and of ChangelogNormalize in one
     * continuous statement. Requires the RocksDB state store provider,
-    * like every TWS port.
+    * like every transformWithState operator.
     *
     * `emitRetracts` selects the emission encoding (the reference's
     * generateUpdateBefore planner flag on StreamExecGroupAggregate):

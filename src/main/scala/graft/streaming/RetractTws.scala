@@ -3,25 +3,22 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
-/** `Retract.retractableTopN` re-based on transformWithState — the THIRD
-  * port on the KeyedProcessTws migration template, covering the ranking
-  * operator category (SCALE.md's mapping table; reference
-  * flink-table-runtime/.../rank/RetractableTopNFunction.java:56).
+/** Retractable top-N per key on transformWithState — the ranking
+  * operator category (reference
+  * flink-table-runtime/.../rank/RetractableTopNFunction.java:56: sorted
+  * per-key state, re-ranks and backfills when a ranked row retracts).
   *
-  * Since r15 there is ONE ranking implementation:
+  * ONE ranking implementation:
   * [[retractableTopNChangelogSorted]]'s dataState+sorted-counts
-  * processor. The Double-scored variants ([[retractableTopN]],
-  * [[retractableTopNChangelog]]) are thin wrappers that encode the
-  * score as a DESC [[graft.util.SortKey.fieldDouble]] field on the way
-  * in and decode it from the emitted sort key on the way out — the
-  * duplicate live-multiset fold they used to carry is gone. (One
-  * deliberate refinement rides along: payload ties now break in
-  * CODE-POINT order — Spark's UTF8_BINARY — rather than raw UTF-16
-  * code-unit order; identical for ASCII payloads.)
+  * processor, which the SQL front door lowers onto. The Double-scored
+  * variants ([[retractableTopN]], [[retractableTopNChangelog]]) are thin
+  * wrappers that encode the score as a DESC
+  * [[graft.util.SortKey.fieldDouble]] field on the way in and decode it
+  * from the emitted sort key on the way out. Payload ties break in
+  * CODE-POINT order (Spark's UTF8_BINARY).
   *
-  * Same runtime prerequisite as the template: the RocksDB state store
-  * provider. The fMGWS originals in [[Retract]] remain the
-  * provider-agnostic fallbacks. */
+  * Runtime prerequisite: transformWithState requires the RocksDB state
+  * store provider. */
 object RetractTws {
   import Retract.{isAdd, isRetract}
 
@@ -256,11 +253,13 @@ object RetractTws {
       .transformWithState(new TopNChangelogSortedProc[K](n, emitAll = false),
         TimeMode.None(), OutputMode.Append(), eout)
 
-  /** Drop-in swap for `Retract.retractableTopN`: identical input
-    * contract (key, row_kind, score, payload) and output (key, rank,
-    * score, payload) — since r15 a thin wrapper over the sorted port
-    * (DESC double field encoding in, score decoded from the emitted
-    * sort key out; -D rows dropped — this surface emits the full
+  /** Retractable top-N over a changelog of (key, row_kind, score,
+    * payload): a retraction (-U/-D) removes one matching (score,
+    * payload) instance, and the refreshed top-N — including rows
+    * BACKFILLED from below the old cut — is emitted whenever it changes,
+    * as (key, rank, score, payload). A thin wrapper over the sorted
+    * processor (DESC double field encoding in, score decoded from the
+    * emitted sort key out; -D rows dropped — this surface emits the full
     * refreshed top, vacated ranks are implied by its shrinking). */
   def retractableTopN[K](ds: Dataset[(K, String, Double, String)], n: Int)(
       implicit ek: Encoder[K],
@@ -283,10 +282,12 @@ object RetractTws {
       }
   }
 
-  /** Drop-in swap for `Retract.retractableTopNChangelog`: the full
-    * downstream-changelog emit contract (+U refreshed ranks, explicit
-    * -D for vacated ranks) — since r15 a thin wrapper over the sorted
-    * port. */
+  /** [[retractableTopN]] with an explicit DOWNSTREAM CHANGELOG — the
+    * full RetractableTopNFunction emit contract: refreshed ranks emit as
+    * ("+U", key, rank, score, payload) and ranks the refreshed top no
+    * longer covers emit ("-D", key, rank, oldScore, oldPayload), so an
+    * upsert sink keyed by (key, rank) always materializes to exactly the
+    * current top-N. A thin wrapper over the sorted processor. */
   def retractableTopNChangelog[K](
       ds: Dataset[(K, String, Double, String)], n: Int)(
       implicit ek: Encoder[K],

@@ -337,9 +337,10 @@ object StatefulOps {
   }
 
   /** Shared slot arithmetic and tie ordering of the fused OVER passes —
-    * ONE definition serving the fMGWS executor, the transformWithState
-    * port and the proc-time executor, so the NULL-skip and tie-order
-    * semantics cannot drift between them. */
+    * ONE definition serving the fMGWS executor, the chained
+    * transformWithState pass (StatefulTws) and the proc-time executor,
+    * so the NULL-skip and tie-order semantics cannot drift between
+    * them. */
   private[streaming] object Slots {
     def comb(op: SlotOp, x: Double, y: Double): Double =
       if (x.isNaN) y else if (y.isNaN) x
@@ -408,7 +409,8 @@ object StatefulOps {
       * chained-operator cost — one state buffer retains what the longest
       * frame needs and every slot reads its own window from it): slot i
       * reduces with ops(i) over frames(i). One definition serves the
-      * fMGWS executor and the TWS port, so the semantics cannot drift.
+      * fMGWS executor and the chained TWS pass, so the semantics cannot
+      * drift.
       *
       * Per-slot semantics:
       *  - Unbounded (ROWS): permanent running accumulator, snapshot per
@@ -663,7 +665,8 @@ object StatefulOps {
       : Dataset[(K, Long, Seq[Double], Seq[Double])] = {
 
     // tie order, peer sharing, per-slot frames and NULL-skip live in ONE
-    // place (Slots.Multi) shared with the TWS port — see its scaladoc.
+    // place (Slots.Multi) shared with the chained TWS pass — see its
+    // scaladoc.
     // RANGE frames: rows sharing a rowtime are SQL PEERS — the frame's
     // upper bound is the current row's TIME, so every peer's frame
     // contains all of them and they read ONE shared aggregate (Flink's

@@ -3,499 +3,53 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
-/** The remaining `StatefulOps` operators re-based on transformWithState,
-  * completing the migration the four round-5 templates started
-  * (KeyedProcessTws / StreamJoinTws / RetractTws / DedupTws — see
-  * KeyedProcessTws's scaladoc for the API mapping table and the RocksDB
-  * prerequisite).
+/** The CHAINED multi-spec streaming OVER pass on transformWithState —
+  * the one StatefulOps-family operator whose only body is a TWS
+  * processor, because it must declare an event-time OUTPUT column so a
+  * further pass can consume it as watermarked input (`StreamOverSql`
+  * chains one pass per distinct PARTITION BY). The single-spec fused
+  * pass runs on flatMapGroupsWithState
+  * (`StatefulOps.overMultiAggsByKey`); both delegate the release loop
+  * to `StatefulOps.Slots.Multi`, so frame semantics are defined once.
   *
-  * The shared shape here is the WATERMARK-RELEASE BUFFER that
-  * `eventTimeSort` / `runningSumByKey` / `rowsBoundedSumByKey` all build
-  * on (reference flink-table-runtime RowTimeSortOperator.java,
-  * RowTimeRowsUnboundedPrecedingFunction.java,
-  * RowTimeRowsBoundedPrecedingFunction.java:56): rows wait in per-key
-  * state until the watermark passes them, then release in (t, payload)
-  * order. The fMGWS originals fold the buffer into ONE GroupState value —
-  * whole-state deserialize + rewrite per key per batch even when nothing
-  * releases. Here the buffer is a named `ListState` with a
-  * `minPending` ValueState watermark gate:
-  *
-  *   - a batch that releases nothing (the common case under a long
-  *     watermark delay) is `appendValue` point-writes only — the list is
-  *     never read, Flink's exact elementQueueState access pattern;
-  *   - the full read + rewrite happens only when the watermark actually
-  *     passed the earliest buffered row.
-  *
-  * Timer discipline matches the fMGWS originals' single
-  * `setTimeoutTimestamp`: one live timer per key, re-armed (delete +
-  * register) at the earliest pending release time, so expiry fires the
+  * State is the WATERMARK-RELEASE BUFFER (reference flink-table-runtime
+  * RowTimeRowsBoundedPrecedingFunction.java:56): rows wait in a named
+  * `ListState` with a `minPending` ValueState watermark gate until the
+  * watermark passes them, then release in (t, values, composite) order.
+  * A batch that releases nothing is `appendValue` point-writes only —
+  * the list is never read, Flink's exact elementQueueState access
+  * pattern; the full read + rewrite happens only when the watermark
+  * actually passed the earliest buffered row. One live timer per key,
+  * re-armed at the earliest pending release time, so expiry fires the
   * flush even when the key sees no further traffic.
   *
-  * Contract parity: each op emits EXACTLY the rows its `StatefulOps`
-  * original emits, in the same per-key order, in the same micro-batch —
-  * pinned by exact-equality specs (StatefulTwsSpec) that replay the same
-  * MemoryStream script through both implementations. */
+  * Runtime prerequisite: transformWithState requires the RocksDB state
+  * store provider. */
 object StatefulTws {
 
   // object-level vals: processor init runs per task per micro-batch and
   // encoder construction pays globally-locked runtime reflection (see
   // RetractAggTws for the measurement)
-  private val ePair = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-  private val eNum = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
   private val eLong = Encoders.scalaLong
-  private val eInt = Encoders.scalaInt
-  private val eDouble = Encoders.scalaDouble
-  private val eScorePair = Encoders.tuple(Encoders.scalaDouble, Encoders.STRING)
+  private val eVecRow = Encoders.product[(Long, Seq[Double])]
+  private val eVecBox = Encoders.product[Tuple1[Seq[Double]]]
+  private val eChainRow = Encoders.product[(Long, String, Seq[Double])]
 
-  /** NaN-skipping sum — StatefulOps.Slots.comb's Sum op, shared so the
-    * TWS ports stay output-equal to the fMGWS originals on NaN-sentinel
-    * (NULL) inputs. An all-NaN (or empty) reduction stays NaN. */
-  private def nanSum(acc: Double, v: Double): Double =
-    StatefulOps.Slots.comb(StatefulOps.SlotOp.Sum, acc, v)
-
-  private def nanSumOf(vs: Iterable[Double]): Double =
-    vs.foldLeft(Double.NaN)(nanSum)
-
-  /** Consecutive-equal-timestamp runs of an already-(t, v)-sorted seq —
-    * the RANGE frames' peer groups (complete by the watermark-release
-    * argument in StatefulOps.overSumsByKey). */
-  private def groupPeers(rows: Seq[(Long, Double)]): Seq[(Long, Seq[Double])] = {
-    val out = Seq.newBuilder[(Long, Seq[Double])]
-    var i = 0
-    while (i < rows.length) {
-      val t = rows(i)._1
-      var j = i
-      while (j < rows.length && rows(j)._1 == t) j += 1
-      out += ((t, rows.slice(i, j).map(_._2)))
-      i = j
-    }
-    out.result()
-  }
-
-  /** Single-timer discipline shared by the event-time processors: drop
-    * whatever is armed and re-register at `at` (clamped above the
-    * watermark, the same clamp the fMGWS originals apply). */
+  /** Single-timer discipline: drop whatever is armed and re-register at
+    * `at` (clamped above the watermark, the same clamp the fMGWS
+    * event-time operators apply). */
   private def rearm(h: StatefulProcessorHandle, at: Option[Long], wm: Long): Unit = {
     h.listTimers().foreach(t => h.deleteTimer(t.asInstanceOf[Long]))
-      // t + 1, not t: fMGWS event-time timeouts fire only when the
-      // watermark strictly EXCEEDS the timestamp, while a TWS timer
-      // fires at equality — the timer registers strictly AFTER the fMGWS timeout value (max(t, wm+1) + 1, covering the watermark-clamped corner too) or rows would release one
-      // watermark advance earlier than the original (timing parity)
+    // t + 1, not t: fMGWS event-time timeouts fire only when the
+    // watermark strictly EXCEEDS the timestamp, while a TWS timer fires
+    // at equality — the timer registers strictly AFTER the fMGWS timeout
+    // value (max(t, wm+1) + 1, covering the watermark-clamped corner
+    // too) or rows would release one watermark advance earlier than the
+    // fMGWS fused pass (timing parity)
     at.foreach(t => h.registerTimer(math.max(t, wm + 1) + 1))
   }
 
-  // ---- event-time sort -------------------------------------------------
-
-  private class SortProc[K]
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, String), (K, Long, String)] {
-
-    @transient private var pending: ListState[(Long, String)] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", ePair, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, String)], wm: Long)
-        : Iterator[(K, Long, String)] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) { // nothing releasable: point-append fast path
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        if (still.isEmpty) { pending.clear(); minPending.clear(); rearm(getHandle, None, wm) }
-        else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray)
-          minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        ready.sortBy(identity).iterator.map(r => (key, r._1, r._2))
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, java.sql.Timestamp, String)],
-        tv: TimerValues): Iterator[(K, Long, String)] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, String)] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.eventTimeSort`: identical input
-    * contract (watermarked (key, ts, payload)) and append-mode output. */
-  def eventTimeSort[K: Encoder](ds: Dataset[(K, java.sql.Timestamp, String)])(
-      implicit eo: Encoder[(K, Long, String)]): Dataset[(K, Long, String)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new SortProc[K], TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  // ---- streaming OVER: unbounded-preceding running sum -----------------
-
-  private class RunningSumProc[K]
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, Double), (K, Long, Double, Double)] {
-
-    @transient private var pending: ListState[(Long, Double)] = _
-    @transient private var acc: ValueState[Double] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", eNum, TTLConfig.NONE)
-      acc = getHandle.getValueState("acc", eDouble, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, Double)], wm: Long)
-        : Iterator[(K, Long, Double, Double)] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) {
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        // the accumulator is PERMANENT state, like the fMGWS original and
-        // Flink's unbounded-preceding function: it survives empty buffers
-        var a = if (acc.exists()) acc.get() else Double.NaN
-        val out = ready.sortBy(_._1).map { case (t, v) =>
-          a = nanSum(a, v); (key, t, v, a) }
-        acc.update(a)
-        if (still.isEmpty) { pending.clear(); minPending.clear(); rearm(getHandle, None, wm) }
-        else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray); minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        out.iterator
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, java.sql.Timestamp, Double)],
-        tv: TimerValues): Iterator[(K, Long, Double, Double)] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, Double, Double)] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.runningSumByKey`. */
-  def runningSumByKey[K: Encoder](ds: Dataset[(K, java.sql.Timestamp, Double)])(
-      implicit eo: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new RunningSumProc[K], TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  // ---- streaming OVER: unbounded RANGE frame (peer-sharing) ------------
-
-  private class RangeRunningSumProc[K]
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, Double), (K, Long, Double, Double)] {
-
-    @transient private var pending: ListState[(Long, Double)] = _
-    @transient private var acc: ValueState[Double] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", eNum, TTLConfig.NONE)
-      acc = getHandle.getValueState("acc", eDouble, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, Double)], wm: Long)
-        : Iterator[(K, Long, Double, Double)] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) {
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        var a = if (acc.exists()) acc.get() else Double.NaN
-        // SQL's default frame: tied rowtimes are peers reading one value
-        // (RowTimeRangeUnboundedPrecedingFunction's per-timestamp emit)
-        val out = groupPeers(ready.sortBy(identity)).flatMap { case (t, vs) =>
-          a = vs.foldLeft(a)(nanSum)
-          vs.map(v => (key, t, v, a))
-        }
-        acc.update(a)
-        if (still.isEmpty) { pending.clear(); minPending.clear(); rearm(getHandle, None, wm) }
-        else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray); minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        out.iterator
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, java.sql.Timestamp, Double)],
-        tv: TimerValues): Iterator[(K, Long, Double, Double)] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, Double, Double)] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.rangeRunningSumByKey` (the SQL default
-    * frame, RANGE UNBOUNDED PRECEDING — tied rowtimes share). */
-  def rangeRunningSumByKey[K: Encoder](ds: Dataset[(K, java.sql.Timestamp, Double)])(
-      implicit eo: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new RangeRunningSumProc[K], TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  // ---- streaming OVER: bounded ROWS frame ------------------------------
-
-  private class RowsBoundedProc[K](nRows: Int)
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, Double), (K, Long, Double, Double)] {
-
-    @transient private var pending: ListState[(Long, Double)] = _
-    @transient private var frame: ListState[(Long, Double)] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", eNum, TTLConfig.NONE)
-      // the eviction deque of the last nRows released rows — its own
-      // bounded ListState handle (Flink keeps the same deque in ValueState;
-      // a list handle keeps the rewrite O(nRows), never O(pending))
-      frame = getHandle.getListState("frame", eNum, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, Double)], wm: Long)
-        : Iterator[(K, Long, Double, Double)] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) {
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        var fr = if (frame.exists()) frame.get().toSeq else Seq.empty
-        val out = ready.sortBy(identity).map { case (t, v) =>
-          fr = (fr :+ ((t, v))).takeRight(nRows)
-          (key, t, v, nanSumOf(fr.map(_._2)))
-        }
-        if (out.nonEmpty) frame.put(fr.toArray)
-        if (still.isEmpty) {
-          pending.clear(); minPending.clear(); rearm(getHandle, None, wm)
-        } else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray); minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        out.iterator
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, java.sql.Timestamp, Double)],
-        tv: TimerValues): Iterator[(K, Long, Double, Double)] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, Double, Double)] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.rowsBoundedSumByKey` (frame ROWS
-    * nRows-1 PRECEDING .. CURRENT ROW). */
-  def rowsBoundedSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)], nRows: Int)(
-      implicit eo: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new RowsBoundedProc[K](nRows),
-        TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  // ---- streaming OVER: bounded RANGE frame -----------------------------
-
-  private class RangeBoundedProc[K](rangeMs: Long)
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, Double), (K, Long, Double, Double)] {
-
-    @transient private var pending: ListState[(Long, Double)] = _
-    @transient private var frame: ListState[(Long, Double)] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", eNum, TTLConfig.NONE)
-      frame = getHandle.getListState("frame", eNum, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, Double)], wm: Long)
-        : Iterator[(K, Long, Double, Double)] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) {
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        var fr = if (frame.exists()) frame.get().toSeq else Seq.empty
-        // tied rowtimes are SQL peers: one shared aggregate per timestamp
-        // (RowTimeRangeBoundedPrecedingFunction's per-timer list emit)
-        val out = groupPeers(ready.sortBy(identity)).flatMap { case (t, vs) =>
-          fr = (fr ++ vs.map(v => (t, v))).filter(_._1 >= t - rangeMs)
-          val s = nanSumOf(fr.map(_._2))
-          vs.map(v => (key, t, v, s))
-        }
-        if (out.nonEmpty) frame.put(fr.toArray)
-        if (still.isEmpty) {
-          pending.clear(); minPending.clear(); rearm(getHandle, None, wm)
-        } else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray); minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        out.iterator
-      }
-    }
-
-    override def handleInputRows(key: K, rows: Iterator[(K, java.sql.Timestamp, Double)],
-        tv: TimerValues): Iterator[(K, Long, Double, Double)] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, Double, Double)] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.rangeBoundedSumByKey` (frame RANGE
-    * rangeMs PRECEDING .. CURRENT ROW). */
-  def rangeBoundedSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)], rangeMs: Long)(
-      implicit eo: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new RangeBoundedProc[K](rangeMs),
-        TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  // ---- fused multi-slot OVER (the StreamOverSql execution shape) -------
-
-  private val eVecRow = Encoders.product[(Long, Seq[Double])]
-  private val eVecBox = Encoders.product[Tuple1[Seq[Double]]]
-
-  private class OverAggsProc[K](frame: StatefulOps.OverFrame,
-      framesOrNull: IndexedSeq[StatefulOps.OverFrame],
-      ops: IndexedSeq[StatefulOps.SlotOp])
-      extends StatefulProcessor[K, (K, java.sql.Timestamp, Seq[Double]),
-        (K, Long, Seq[Double], Seq[Double])] {
-
-    @transient private var pending: ListState[(Long, Seq[Double])] = _
-    @transient private var frm: ListState[(Long, Seq[Double])] = _
-    @transient private var acc: ValueState[Tuple1[Seq[Double]]] = _
-    @transient private var minPending: ValueState[Long] = _
-
-    // slot arithmetic / tie order / peer grouping / PER-SLOT frames
-    // shared with the fMGWS executor (StatefulOps.Slots.Multi) —
-    // semantics defined exactly once
-    private val multi = new StatefulOps.Slots.Multi(frame, framesOrNull, ops)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState("pending", eVecRow, TTLConfig.NONE)
-      frm = getHandle.getListState("frame", eVecRow, TTLConfig.NONE)
-      acc = getHandle.getValueState("acc", eVecBox, TTLConfig.NONE)
-      minPending = getHandle.getValueState("minPending", eLong, TTLConfig.NONE)
-    }
-
-    private def flush(key: K, fresh: Seq[(Long, Seq[Double])], wm: Long)
-        : Iterator[(K, Long, Seq[Double], Seq[Double])] = {
-      val curMin = if (minPending.exists()) minPending.get() else Long.MaxValue
-      val newMin = fresh.iterator.map(_._1).foldLeft(curMin)(math.min)
-      if (newMin > wm) { // nothing releasable: point-append fast path
-        if (fresh.nonEmpty) { fresh.foreach(pending.appendValue); minPending.update(newMin) }
-        rearm(getHandle, if (newMin == Long.MaxValue) None else Some(newMin), wm)
-        Iterator.empty
-      } else {
-        val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
-        val (ready, still) = buf.partition(_._1 <= wm)
-        val a0 = if (acc.exists()) acc.get()._1 else Seq.empty[Double]
-        val fr0 = if (frm.exists()) frm.get().toSeq else Seq.empty
-        val (outRows, a, fr) = multi.release(ready, a0, fr0)
-        val out = outRows.map { case (t, v, sums) => (key, t, v, sums) }
-        if (out.nonEmpty) {
-          if (multi.permanent) acc.update(Tuple1(a)) // PERMANENT accumulator
-          if (multi.bounded) frm.put(fr.toArray)
-        }
-        if (still.isEmpty) { pending.clear(); minPending.clear(); rearm(getHandle, None, wm) }
-        else {
-          val m = still.iterator.map(_._1).min
-          pending.put(still.toArray); minPending.update(m)
-          rearm(getHandle, Some(m), wm)
-        }
-        out.iterator
-      }
-    }
-
-    override def handleInputRows(key: K,
-        rows: Iterator[(K, java.sql.Timestamp, Seq[Double])],
-        tv: TimerValues): Iterator[(K, Long, Seq[Double], Seq[Double])] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      flush(key, rows.map(r => (r._2.getTime, r._3)).filter(_._1 > wm).toSeq, wm)
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Long, Seq[Double], Seq[Double])] =
-      flush(key, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** Drop-in swap for `StatefulOps.overAggsByKey` — the FUSED multi-slot
-    * OVER pass the SQL front door executes, on point-write state: the
-    * watermark buffer is a ListState (append-only until release), the
-    * unbounded accumulator a ValueState, the bounded frame its own
-    * ListState. Exact output equality with the fMGWS original incl.
-    * per-slot combine ops, RANGE peer sharing and NaN-as-NULL skipping. */
-  def overAggsByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])],
-      frame: StatefulOps.OverFrame,
-      ops: IndexedSeq[StatefulOps.SlotOp] = null)(
-      implicit eo: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] =
-    ds.groupByKey(_._1)
-      .transformWithState(new OverAggsProc[K](frame, null, ops),
-        TimeMode.EventTime(), OutputMode.Append(), eo)
-
-  /** Drop-in swap for `StatefulOps.overMultiAggsByKey` — the PER-SLOT
-    * frame pass (several OVER windows fused into one operator) on
-    * point-write state; exact output equality with the fMGWS original
-    * (both delegate the release loop to StatefulOps.Slots.Multi). */
-  def overMultiAggsByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])],
-      frames: IndexedSeq[StatefulOps.OverFrame],
-      ops: IndexedSeq[StatefulOps.SlotOp])(
-      implicit eo: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] = {
-    require(frames != null && frames.nonEmpty, "overMultiAggsByKey: no frames")
-    ds.groupByKey(_._1)
-      .transformWithState(new OverAggsProc[K](frames.head, frames, ops),
-        TimeMode.EventTime(), OutputMode.Append(), eo)
-  }
-
-  // ---- chained multi-SPEC OVER (different PARTITION BY per window) -----
-
-  private val eChainRow = Encoders.product[(Long, String, Seq[Double])]
-
-  /** [[OverAggsProc]] for the CHAINED multi-spec pipeline: rows carry a
+  /** One pass of the CHAINED multi-spec pipeline: rows carry a
     * COMPOSITE row key (all partition columns) distinct from the group
     * key, the buffer retains it through the watermark wait, and outputs
     * re-emit it with a TIMESTAMP column so a further pass can consume the
@@ -605,56 +159,4 @@ object StatefulTws {
       .transformWithState(new OverAggsChainProc(frames.head, frames, ops, dropLate),
         "_2", OutputMode.Append(), eo)
   }
-
-  // ---- append-only top-N ----------------------------------------------
-
-  private class TopNProc[K](n: Int)
-      extends StatefulProcessor[K, (K, Double, String), (K, Int, Double, String)] {
-
-    @transient private var live: MapState[(Double, String), Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // only rows inside the current top-N are retained — at most n live
-      // instances per key, the AppendOnlyTopNFunction dataState shape
-      // (rank/AppendOnlyTopNFunction.java:52) as a counted-entry MapState
-      live = getHandle.getMapState("live",
-        eScorePair, eInt, TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, Double, String)],
-        tv: TimerValues): Iterator[(K, Int, Double, String)] = {
-      val before = live.iterator().toSeq // ≤ n instances by invariant
-      val prev = before.iterator
-        .flatMap { case (e, c) => Iterator.fill(c)(e) }.toSeq
-        .sortBy { case (score, payload) => (-score, payload) }
-      val merged = (prev ++ rows.map(r => (r._2, r._3)))
-        .sortBy { case (score, payload) => (-score, payload) }
-        .take(n)
-      if (merged == prev) Iterator.empty
-      else {
-        val after = merged.groupBy(identity).view.mapValues(_.size).toMap
-        before.foreach { case (e, c) =>
-          after.get(e) match {
-            case None => live.removeKey(e)
-            case Some(c2) => if (c2 != c) live.updateValue(e, c2)
-          }
-        }
-        val had = before.iterator.map(_._1).toSet
-        after.foreach { case (e, c) => if (!had(e)) live.updateValue(e, c) }
-        merged.iterator.zipWithIndex.map { case ((score, payload), i) =>
-          (key, i + 1, score, payload)
-        }
-      }
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[(K, Int, Double, String)] =
-      Iterator.empty // no timers: top-N state lives for the key's life
-  }
-
-  /** Drop-in swap for `StatefulOps.topNPerKey`: identical input contract
-    * (key, score, payload) and emit-on-change update-mode output. */
-  def topNPerKey[K: Encoder](ds: Dataset[(K, Double, String)], n: Int)(
-      implicit eo: Encoder[(K, Int, Double, String)]): Dataset[(K, Int, Double, String)] =
-    ds.groupByKey(_._1)
-      .transformWithState(new TopNProc[K](n), TimeMode.None(), OutputMode.Update(), eo)
 }

@@ -3,26 +3,38 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
-/** `StreamJoin.innerJoin` re-based on transformWithState — the SECOND
-  * port on the KeyedProcessTws migration template, and the one that
-  * demonstrates the MAIN scale win called out in SCALE.md: the counted
-  * multiset that the flatMapGroupsWithState implementation folds into one
-  * GroupState value (whole-state deserialize/rewrite per key per batch)
-  * becomes two named `MapState[payload, count]` HANDLES, so a probe
-  * touches exactly the entries it reads or writes — Flink's
-  * JoinRecordStateView MapState shape (flink-table-runtime/.../join/
-  * stream/state/JoinRecordStateViews.java:131) with the same per-entry
-  * access asymptotics.
+/** Retraction-consuming two-sided stream joins on transformWithState
+  * (flink-table-runtime .../join/stream/StreamingJoinOperator.java):
+  * both inputs are CHANGELOGS (row_kind +I/-U/+U/-D per
+  * graft.streaming.Cdc), the output is the changelog of the join. All
+  * four join types are covered:
+  *   - inner:       +I left emits +I (l, r) per live right row of the key;
+  *                  -D left retracts one live instance and emits -D per
+  *                  live right row — symmetrically for the right side;
+  *   - left outer:  an unmatched left row emits (+I l, NULL); when its
+  *                  first right match arrives the pad is RETRACTED and the
+  *                  real join rows emit, and back to the pad when the last
+  *                  match retracts (OuterJoinRecordStateView.java:335);
+  *   - right outer: the mirror image;
+  *   - full outer:  pads on BOTH sides.
   *
-  * Contract parity: identical NET changelog to `StreamJoin.innerJoin`
-  * (asserted spec-equal on scripted changelogs); per-batch emission order
-  * may differ — MapState iteration order is store-defined, while the
-  * fMGWS original iterates insertion order — which is exactly the
-  * order-independence the net-materialization property pins.
+  * State per key: each side's live COUNTED multiset as a named
+  * `MapState[payload, count]` handle, so a probe touches exactly the
+  * entries it reads or writes — Flink's JoinRecordStateView MapState
+  * shape (flink-table-runtime/.../join/stream/state/
+  * JoinRecordStateViews.java:131) with the same per-entry access
+  * asymptotics. Because the join condition is the key itself, every
+  * left row of a key matches every live right row, so Flink's per-record
+  * association count degenerates to the other side's total live count.
   *
-  * Same runtime prerequisite as the template: the RocksDB state store
-  * provider. The fleet default remains the fMGWS implementation; see
-  * KeyedProcessTws's scaladoc for the why. */
+  * Emission order within a micro-batch is store-defined (MapState
+  * iteration order); the NET changelog (counts of +I minus -D per joined
+  * row) is order-independent — the property the specs pin against a
+  * batch join of the end states and against the GroupState reference
+  * fold in the test tree.
+  *
+  * Runtime prerequisite: transformWithState requires the RocksDB state
+  * store provider. */
 object StreamJoinTws {
   import Cdc.{Delete, Insert}
   import Retract.isAdd
@@ -42,6 +54,15 @@ object StreamJoinTws {
       otherSideEntriesIterated.set(0L)
     }
   }
+
+  /** Lifts both sides into one tagged row type (side, key, row_kind,
+    * leftPayload?, rightPayload?) so one keyed operator sees both. */
+  private[streaming] def tagged[K, L, R](
+      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
+      implicit etag: Encoder[(Int, K, String, Option[L], Option[R])])
+      : Dataset[(Int, K, String, Option[L], Option[R])] =
+    left.map(r => (0, r._1, r._2, Option(r._3), Option.empty[R]))
+      .union(right.map(r => (1, r._1, r._2, Option.empty[L], Option(r._3))))
 
   // object-level val: processor init runs per task per micro-batch and
   // encoder construction pays globally-locked runtime reflection (see
@@ -131,7 +152,7 @@ object StreamJoinTws {
       : Dataset[(String, String, String, String)] = {
     implicit val etag: Encoder[(Int, String, String, Option[String], Option[String])] = eTagStr
     implicit val emid: Encoder[(String, String, Option[String], Option[String])] = eMidStr
-    StreamJoin.tagged(left, right)
+    tagged(left, right)
       .groupByKey(_._2)(Encoders.STRING)
       .transformWithState(
         new InnerJoinProc[String, String, String](Encoders.STRING, Encoders.STRING),
@@ -145,13 +166,12 @@ object StreamJoinTws {
     * round-7's completion of the port: pad bookkeeping needs each side's
     * total live count BEFORE the current row applies (does this +I left
     * row end the right side's pad era? does this -D left row restore
-    * it?), which the fMGWS original recomputes by summing its deserialized
-    * state blob. Here the totals are two named ValueState counters —
-    * point-reads — exactly the (joinKey -> count) bookkeeping Flink's
+    * it?). The totals are two named ValueState counters — point-reads —
+    * exactly the (joinKey -> count) bookkeeping Flink's
     * OuterJoinRecordStateView adds over the inner view
     * (join/stream/state/OuterJoinRecordStateViews.java:335's association
     * count, degenerated to one integer because the key IS the join
-    * condition, same note as the fMGWS scaladoc). */
+    * condition, see the object scaladoc). */
   private class OuterJoinProc[K, L, R](
       padLeft: Boolean, padRight: Boolean, encL: Encoder[L], encR: Encoder[R])
       extends StatefulProcessor[K, (Int, K, String, Option[L], Option[R]),
@@ -238,15 +258,15 @@ object StreamJoinTws {
       etag: Encoder[(Int, K, String, Option[L], Option[R])],
       emid: Encoder[(K, String, Option[L], Option[R])])
       : Dataset[(K, String, Option[L], Option[R])] =
-    StreamJoin.tagged(left, right)
+    tagged(left, right)
       .groupByKey(_._2)
       .transformWithState(new OuterJoinProc[K, L, R](padLeft, padRight, el, er),
         TimeMode.None(), OutputMode.Update(), emid)
 
-  /** Inner join of two keyed changelogs — same contract AND output
-    * schema as `StreamJoin.innerJoin` (a drop-in swap per the migration
-    * framing: an inner join never emits null payloads, so the internal
-    * Options unwrap at the edge). */
+  /** Inner join of two keyed changelogs. Input rows: (key, row_kind,
+    * payload). Output rows: (key, row_kind, leftPayload, rightPayload)
+    * with row_kind in {+I, -D} (an inner join never emits null payloads,
+    * so the internal Options unwrap at the edge). */
   def innerJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -254,7 +274,7 @@ object StreamJoinTws {
       emid: Encoder[(K, String, Option[L], Option[R])],
       eout: Encoder[(K, String, L, R)])
       : Dataset[(K, String, L, R)] =
-    StreamJoin.tagged(left, right)
+    tagged(left, right)
       .groupByKey(_._2)
       .transformWithState(new InnerJoinProc[K, L, R](el, er),
         TimeMode.None(), OutputMode.Update(), emid)
@@ -274,7 +294,7 @@ object StreamJoinTws {
       : Dataset[(String, String, Option[String], Option[String])] = {
     implicit val etag: Encoder[(Int, String, String, Option[String], Option[String])] = eTagStr
     implicit val emid: Encoder[(String, String, Option[String], Option[String])] = eMidStr
-    StreamJoin.tagged(left, right)
+    tagged(left, right)
       .groupByKey(_._2)(Encoders.STRING)
       .transformWithState(
         new OuterJoinProc[String, String, String](padLeft, padRight,
@@ -282,8 +302,8 @@ object StreamJoinTws {
         TimeMode.None(), OutputMode.Append(), emid)
   }
 
-  /** Drop-in swap for `StreamJoin.leftOuterJoin` (net-equal changelog,
-    * emission order store-defined like the inner port). */
+  /** LEFT OUTER join: output rows (key, row_kind, leftPayload,
+    * Option(rightPayload)). */
   def leftOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -294,7 +314,8 @@ object StreamJoinTws {
     run(left, right, padLeft = true, padRight = false)
       .map { case (k, kind, l, r) => (k, kind, l.get, r) }
 
-  /** Drop-in swap for `StreamJoin.rightOuterJoin`. */
+  /** RIGHT OUTER join: output rows (key, row_kind, Option(leftPayload),
+    * rightPayload). */
   def rightOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -305,7 +326,8 @@ object StreamJoinTws {
     run(left, right, padLeft = false, padRight = true)
       .map { case (k, kind, l, r) => (k, kind, l, r.get) }
 
-  /** Drop-in swap for `StreamJoin.fullOuterJoin`. */
+  /** FULL OUTER join: output rows (key, row_kind, Option(leftPayload),
+    * Option(rightPayload)) — pads on both sides. */
   def fullOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],

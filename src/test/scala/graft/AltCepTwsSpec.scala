@@ -1,17 +1,20 @@
 package graft
 
-import graft.cep.{AltCep, AltCepTws, Cep, GroupCep}
+import graft.cep.{AltCep, Cep, GroupCep}
 import graft.cep.Cep.{AfterMatch, Quant, StepDef}
 import graft.cep.GroupCep.{Alt, Leaf, Permute}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The transformWithState port of the LOCKSTEP alternation executor must
-  * emit EXACTLY what `AltCep.matchStream` emits for the same script —
-  * the tagged run-list / held-match state decomposition changes the
-  * state layout, never the matches. Scripts cover alternation under
-  * both skip strategies, PERMUTE, held-match expiry re-arbitration, and
-  * out-of-order release. */
+/** The LOCKSTEP alternation executor `AltCep.matchStream` on the RocksDB
+  * state store provider must emit EXACTLY what it emits on the default
+  * provider for the same script — the provider changes where the
+  * run lists and held matches are stored, never the matches. Scripts
+  * cover alternation under both skip strategies, PERMUTE, held-match
+  * expiry re-arbitration, and out-of-order release. (Test names keep
+  * the "TWS" wording of the transformWithState port these scripts were
+  * written for; that port is gone and `AltCep.matchStream` is the one
+  * streaming body.) */
 class AltCepTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -21,14 +24,13 @@ class AltCepTwsSpec extends AnyFunSuite {
 
   private def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
 
-  private def run(useTws: Boolean, sink: String, c: AltCep.CompiledAlt,
+  private def run(sink: String, c: AltCep.CompiledAlt,
       delay: String, batches: Seq[Seq[(Long, Long, Long, Long)]])
       : Seq[(Long, Seq[Seq[Long]])] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = if (useTws) AltCepTws.matchStream(in.toDS(), c, delay)
-              else AltCep.matchStream(in.toDS(), c, delay)
+    val out = AltCep.matchStream(in.toDS(), c, delay)
     val q = out.toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -39,11 +41,11 @@ class AltCepTwsSpec extends AnyFunSuite {
 
   private def assertEqual(c: AltCep.CompiledAlt, delay: String,
       batches: Seq[Seq[(Long, Long, Long, Long)]], tag: String): Unit = {
-    val ref = run(useTws = false, s"atws_${tag}_ref", c, delay, batches)
-    val tws = withRocksDB { run(useTws = true, s"atws_${tag}_new", c, delay, batches) }
+    val ref = run(s"atws_${tag}_ref", c, delay, batches)
+    val rocks = withRocksDB { run(s"atws_${tag}_new", c, delay, batches) }
     def perKey(rows: Seq[(Long, Seq[Seq[Long]])]) =
       rows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    assert(perKey(tws) == perKey(ref), s"tws=$tws ref=$ref")
+    assert(perKey(rocks) == perKey(ref), s"rocks=$rocks ref=$ref")
     assert(ref.nonEmpty, s"script '$tag' matched nothing — not probative")
   }
 

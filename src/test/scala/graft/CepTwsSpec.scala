@@ -1,15 +1,18 @@
 package graft
 
-import graft.cep.{Cep, CepTws}
+import graft.cep.Cep
 import graft.cep.Cep.{Pattern, Quant, StepDef}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The transformWithState streaming-CEP port must emit EXACTLY what
-  * `Cep.matchStream` emits for the same script — the element-queue /
-  * run-list state decomposition (CepOperator.java:82) changes the state
-  * layout, never the matches. Scripts cover out-of-order release, late
-  * drops, quantifiers, and the within-horizon pruning path. */
+/** `Cep.matchStream` on the RocksDB state store provider must emit
+  * EXACTLY what it emits on the default provider for the same script —
+  * the provider changes where the element queue / run list (the keyed
+  * state of CepOperator.java:82) is stored, never the matches. Scripts
+  * cover out-of-order release, late drops, quantifiers, and the
+  * within-horizon pruning path. (Test names keep the "TWS" wording of
+  * the transformWithState port these scripts were written for; that
+  * port is gone and `Cep.matchStream` is the one streaming body.) */
 class CepTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -17,15 +20,14 @@ class CepTwsSpec extends AnyFunSuite {
 
   private def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
 
-  /** Replays `batches` through either executor and collects the sink. */
-  private def run(useTws: Boolean, sink: String, pattern: Pattern,
+  /** Replays `batches` through the executor and collects the sink. */
+  private def run(sink: String, pattern: Pattern,
       delay: String, batches: Seq[Seq[(Long, Long, Long, Long)]])
       : Seq[(Long, Seq[Seq[Long]])] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = if (useTws) CepTws.matchStream(in.toDS(), pattern, delay)
-              else Cep.matchStream(in.toDS(), pattern, delay)
+    val out = Cep.matchStream(in.toDS(), pattern, delay)
     val q = out.toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -36,11 +38,11 @@ class CepTwsSpec extends AnyFunSuite {
 
   private def assertEqual(pattern: Pattern, delay: String,
       batches: Seq[Seq[(Long, Long, Long, Long)]], tag: String): Unit = {
-    val ref = run(useTws = false, s"ctws_${tag}_ref", pattern, delay, batches)
-    val tws = withRocksDB { run(useTws = true, s"ctws_${tag}_new", pattern, delay, batches) }
+    val ref = run(s"ctws_${tag}_ref", pattern, delay, batches)
+    val rocks = withRocksDB { run(s"ctws_${tag}_new", pattern, delay, batches) }
     def perKey(rows: Seq[(Long, Seq[Seq[Long]])]) =
       rows.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    assert(perKey(tws) == perKey(ref), s"tws=$tws ref=$ref")
+    assert(perKey(rocks) == perKey(ref), s"rocks=$rocks ref=$ref")
     assert(ref.nonEmpty, s"script '$tag' matched nothing — not probative")
   }
 
@@ -64,17 +66,15 @@ class CepTwsSpec extends AnyFunSuite {
   test("TWS CEP: watermark-equals-timestamp boundary releases in the same batch as fMGWS") {
     // wm lands EXACTLY on the pending row's timestamp (dummy@30s - 10s
     // delay = 20s): fMGWS event-time timeouts fire only when wm strictly
-    // exceeds the timeout, so the row must NOT release yet — the TWS
-    // timer registers at t+1 for the same timing. Without the final
-    // advance both executors must have emitted nothing; after it, both
-    // release the row (non-vacuous tail).
+    // exceeds the timeout, so the row must NOT release yet on either
+    // provider. Without the final advance both runs must have emitted
+    // nothing; after it, both release the row (non-vacuous tail).
     val p = Pattern.linear(1, 0L)
-    def script(useTws: Boolean, sink: String, withTail: Boolean): Seq[(Long, Seq[Seq[Long]])] = {
+    def script(sink: String, withTail: Boolean): Seq[(Long, Seq[Seq[Long]])] = {
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long)]
-      val out = if (useTws) CepTws.matchStream(in.toDS(), p, "10 seconds")
-                else Cep.matchStream(in.toDS(), p, "10 seconds")
+      val out = Cep.matchStream(in.toDS(), p, "10 seconds")
       val q = out.toDF("key", "step_times").writeStream
         .outputMode("append").format("memory").queryName(sink).start()
       try {
@@ -85,9 +85,9 @@ class CepTwsSpec extends AnyFunSuite {
       spark.table(sink).as[(Long, Seq[Seq[Long]])].collect().toSeq
     }
     Seq(false, true).foreach { tail =>
-      val ref = script(useTws = false, s"ctws_bnd_ref_$tail", tail)
-      val tws = withRocksDB { script(useTws = true, s"ctws_bnd_new_$tail", tail) }
-      assert(tws == ref, s"tail=$tail tws=$tws ref=$ref")
+      val ref = script(s"ctws_bnd_ref_$tail", tail)
+      val rocks = withRocksDB { script(s"ctws_bnd_new_$tail", tail) }
+      assert(rocks == ref, s"tail=$tail rocks=$rocks ref=$ref")
       if (tail) assert(ref.nonEmpty) else assert(ref.isEmpty,
         s"boundary row released at wm==t: $ref")
     }

@@ -2,23 +2,23 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{DedupTws, StatefulOps}
+import graft.streaming.StatefulOps
 
-/** ValueState-backed keep-last dedup vs the flatMapGroupsWithState
-  * original — fourth migration on the KeyedProcessTws template (the
-  * deduplicate category; the state shape is one row per key in both
-  * APIs, so the port must be emission-identical). */
+/** Keep-last dedup (`StatefulOps.keepLastByKey`, the deduplicate
+  * category) on the RocksDB state store provider vs the same operator on
+  * the default provider: the state is one row per key on either store,
+  * so the emissions must be identical. (Test names keep the wording of
+  * the ValueState port these scripts were written for; that port is
+  * gone and `StatefulOps.keepLastByKey` is the one body.) */
 class DedupTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def runScenario(useTws: Boolean, sink: String)
+  private def runScenario(sink: String)
       : Seq[(Long, Long, String)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, String)]
-    val out =
-      if (useTws) DedupTws.keepLastByKey(in.toDS())
-      else StatefulOps.keepLastByKey(in.toDS())
+    val out = StatefulOps.keepLastByKey(in.toDS())
     val q = out.toDF("k", "ts", "payload").writeStream
       .outputMode("update").format("memory").queryName(sink).start()
     try {
@@ -38,48 +38,34 @@ class DedupTwsSpec extends AnyFunSuite {
   }
 
   test("ValueState keep-last dedup equals the GroupState original") {
-    val ref = runScenario(useTws = false, sink = "dtws_ref")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tws = runScenario(useTws = true, sink = "dtws_new")
+    val ref = runScenario(sink = "dtws_ref")
+    TestSpark.withRocksDB {
+      val rocks = runScenario(sink = "dtws_new")
       def multiset(rows: Seq[(Long, Long, String)]) =
         rows.groupBy(identity).view.mapValues(_.size).toMap
-      assert(multiset(tws) == multiset(ref),
-        s"emissions differ:\n tws=${tws.sorted}\n ref=${ref.sorted}")
+      assert(multiset(rocks) == multiset(ref),
+        s"emissions differ:\n rocks=${rocks.sorted}\n ref=${ref.sorted}")
       // key 1 emits twice: batch 1 folds (10,a)+(20,b) into one winner
       // emission (b), batch 3 emits c; the stale row and the duplicate
       // re-send must emit nothing
-      assert(tws.count(_._1 == 1L) == 2, s"key-1 emissions: $tws")
-      assert(tws.contains((1L, 30L, "c")) && tws.contains((2L, 5L, "y")))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+      assert(rocks.count(_._1 == 1L) == 2, s"key-1 emissions: $rocks")
+      assert(rocks.contains((1L, 30L, "c")) && rocks.contains((2L, 5L, "y")))
     }
   }
 
   test("native TTLConfig on the ValueState port: idle-key state expires") {
-    // the transformWithState-native path for Flink's StateTtlConfig —
-    // same observable contract as the fMGWS ttl: a stale row arriving
-    // after the key idled past the ttl emits as a FRESH winner
+    // Flink's StateTtlConfig on the RocksDB provider: a stale row
+    // arriving after the key idled past the ttl emits as a FRESH winner
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withRocksDB {
       val in = MemoryStream[(Long, Long, String)]
-      val out = DedupTws.keepLastByKey(in.toDS(),
+      val out = StatefulOps.keepLastByKey(in.toDS(),
         ttl = Some(java.time.Duration.ofMillis(300)))
       val q = out.toDF("k", "ts", "payload").writeStream
         .outputMode("update").format("memory").queryName("dtws_ttl").start()
-      // processing-time mode reruns batches continuously (TWS
-      // shouldRunAnotherBatch is always true there, so
+      // a processing-time timeout reruns batches continuously
+      // (shouldRunAnotherBatch is always true there, so
       // processAllAvailable never settles) — poll the sink instead
       def await(cond: => Boolean, what: String): Unit = {
         val deadline = System.currentTimeMillis + 60000
@@ -95,11 +81,6 @@ class DedupTwsSpec extends AnyFunSuite {
         await(rows.contains((1L, 10L, "a")),
           s"post-expiry stale row to emit as fresh (got $rows)")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

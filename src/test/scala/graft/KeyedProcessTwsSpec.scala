@@ -1,22 +1,24 @@
 package graft
 
-import graft.streaming.{KeyedProcess, KeyedProcessTws}
+import graft.streaming.KeyedProcess
 import graft.streaming.KeyedProcess.Emit
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
-/** transformWithState port of KeyedProcess must be SPEC-EQUAL to the
-  * flatMapGroupsWithState original on the same inactivity-session
-  * scenario — the migration template for the remaining stateful
-  * operators (KeyedProcessTws scaladoc carries the mapping table). */
+/** `KeyedProcess.process` on the RocksDB state store provider must be
+  * SPEC-EQUAL to the same operator on the default provider for the same
+  * inactivity-session scenario (event-time timers included). (The test
+  * name keeps the wording of the transformWithState port this scenario
+  * was written for; that port is gone and `KeyedProcess.process` is the
+  * one body.) */
 class KeyedProcessTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
 
-  private def runScenario(useTws: Boolean, sink: String): Set[(Long, String)] = {
+  private def runScenario(sink: String): Set[(Long, String)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
@@ -35,11 +37,8 @@ class KeyedProcessTwsSpec extends AnyFunSuite {
       val (c, sum, _) = st.get
       Emit[(Long, Double, Long), String](Seq(s"n=$c,sum=$sum"), None, None)
     }
-    val out =
-      if (useTws) KeyedProcessTws.process[Long, Double, (Long, Double, Long), String](
-        keyed)(onInput, onTimer)
-      else KeyedProcess.process[Long, Double, (Long, Double, Long), String](
-        keyed)(onInput, onTimer)
+    val out = KeyedProcess.process[Long, Double, (Long, Double, Long), String](
+      keyed)(onInput, onTimer)
     val q = out.toDF("k", "summary").writeStream
       .outputMode("update").format("memory").queryName(sink).start()
     in.addData((1L, ts(100), 2.0), (1L, ts(110), 3.0))
@@ -55,21 +54,11 @@ class KeyedProcessTwsSpec extends AnyFunSuite {
   }
 
   test("transformWithState port is spec-equal to flatMapGroupsWithState") {
-    val fmgws = runScenario(useTws = false, sink = "tws_ref")
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tws = runScenario(useTws = true, sink = "tws_new")
-      assert(tws == fmgws, s"tws=$tws fmgws=$fmgws")
-      assert(tws.contains((1L, "n=2,sum=5.0")) && tws.contains((2L, "n=2,sum=10.0")))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val ref = runScenario(sink = "tws_ref")
+    TestSpark.withRocksDB {
+      val rocks = runScenario(sink = "tws_new")
+      assert(rocks == ref, s"rocks=$rocks ref=$ref")
+      assert(rocks.contains((1L, "n=2,sum=5.0")) && rocks.contains((2L, "n=2,sum=10.0")))
     }
   }
 }

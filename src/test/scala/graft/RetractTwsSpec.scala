@@ -1,17 +1,17 @@
 package graft
 
-import graft.streaming.{Retract, RetractTws}
+import graft.streaming.{FmgwsReference, RetractTws}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** transformWithState port of the retractable top-N must emit EXACTLY
-  * what the flatMapGroupsWithState original emits on the same scripted
-  * changelog — third migration on the KeyedProcessTws template (ranking
-  * category). No order caveat here: the refreshed top-N output is sorted
-  * by construction, so equality is plain multiset equality per run. The
-  * script exercises the load-bearing behaviors: duplicate payload counts,
-  * retraction of a top row, and BACKFILL of a row from below the old
-  * cut. */
+/** The transformWithState retractable top-N ([[RetractTws]], the one
+  * ranking implementation) must emit EXACTLY what the
+  * flatMapGroupsWithState reference fold (`FmgwsReference`, test-only)
+  * emits on the same scripted changelog. No order caveat here: the
+  * refreshed top-N output is sorted by construction, so equality is
+  * plain multiset equality per run. The script exercises the
+  * load-bearing behaviors: duplicate payload counts, retraction of a top
+  * row, and BACKFILL of a row from below the old cut. */
 class RetractTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -22,7 +22,7 @@ class RetractTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String, Double, String)]
     val out =
       if (useTws) RetractTws.retractableTopN(in.toDS(), n = 2)
-      else Retract.retractableTopN(in.toDS(), n = 2)
+      else FmgwsReference.retractableTopN(in.toDS(), n = 2)
     val q = out.toDF("k", "rank", "score", "payload").writeStream
       .outputMode("update").format("memory").queryName(sink).start()
     try {
@@ -50,9 +50,9 @@ class RetractTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String, Double, String)]
     val out =
       if (useTws) RetractTws.retractableTopNChangelog(in.toDS(), n = 2)
-      else Retract.retractableTopNChangelog(in.toDS(), n = 2)
-    // the fMGWS original runs in APPEND mode (delta emission, chainable
-    // downstream of ChangelogNormalize); the TWS port keeps Update
+      else FmgwsReference.retractableTopNChangelog(in.toDS(), n = 2)
+    // the fMGWS reference runs in APPEND mode (delta emission, chainable
+    // downstream of ChangelogNormalize); the TWS run keeps Update
     val q = out.toDF("kind", "k", "rank", "score", "payload").writeStream
       .outputMode(if (useTws) "update" else "append")
       .format("memory").queryName(sink).start()
@@ -85,11 +85,7 @@ class RetractTwsSpec extends AnyFunSuite {
 
   test("MapState-backed retractable top-N equals the GroupState original") {
     val ref = runScenario(useTws = false, sink = "rtws_ref")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withRocksDB {
       val tws = runScenario(useTws = true, sink = "rtws_new")
       def multiset(rows: Seq[(Long, Int, Double, String)]) =
         rows.groupBy(identity).view.mapValues(_.size).toMap
@@ -98,11 +94,6 @@ class RetractTwsSpec extends AnyFunSuite {
       // the final refresh for key 1 is the backfilled top: b then c
       assert(tws.toSet.contains((1L, 1, 20.0, "b")) &&
         tws.toSet.contains((1L, 2, 10.0, "c")), s"backfill missing: $tws")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -124,10 +124,10 @@ class StateReaderSpec extends AnyFunSuite {
   }
 
   test("offline read of transformWithState variables by name") {
-    // the TWS ports' point-write state layout stays inspectable — each
-    // named state variable reads back through the `statestore` source's
-    // stateVarName option (State Processor API parity for the Spark 4
-    // state shape the migration landed on)
+    // the transformWithState operators' point-write state layout stays
+    // inspectable — each named state variable reads back through the
+    // `statestore` source's stateVarName option (State Processor API
+    // parity for the Spark 4 state shape)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -135,38 +135,49 @@ class StateReaderSpec extends AnyFunSuite {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      // ValueState: DedupTws's per-key best (ts, payload)
+      // ValueState: RetractAggTws's per-group accumulator — (net row
+      // count, one rendered accumulator per aggregate; SUM(BIGINT)
+      // renders as "sum,count")
+      import graft.streaming.RetractAggTws
       val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-read").toString
-      val in = MemoryStream[(Long, Long, String)]
-      val q = graft.streaming.DedupTws.keepLastByKey(in.toDS())
-        .toDF("k", "t", "p").writeStream
+      val in = MemoryStream[(String, Int, Seq[Option[String]], Seq[Option[String]])]
+      val q = RetractAggTws.groupAggChangelog(in.toDS(),
+          Seq(RetractAggTws.AggSpec("sum_long")))
+        .toDF("k", "kind", "outs").writeStream
         .option("checkpointLocation", ckpt)
-        .outputMode("update").format("memory").queryName("tws_sr_out").start()
-      in.addData((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "x"))
+        .outputMode("append").format("memory").queryName("tws_sr_out").start()
+      in.addData(("a", 1, Seq(Some("10")), Seq(None)),
+        ("a", 1, Seq(Some("5")), Seq(None)), ("b", 1, Seq(Some("7")), Seq(None)))
       q.processAllAvailable(); q.stop()
-      val best = spark.read.format("statestore")
-        .option("stateVarName", "best").load(ckpt)
+      val acc = spark.read.format("statestore")
+        .option("stateVarName", "acc").load(ckpt)
         .selectExpr("key.value", "value._1", "value._2")
-        .as[(Long, Long, String)].collect().toSet
-      assert(best == Set((1L, 20L, "b"), (2L, 5L, "x")), s"best state: $best")
+        .as[(String, Long, Seq[String])].collect().toSet
+      assert(acc == Set(("a", 2L, Seq("15,2")), ("b", 1L, Seq("7,1"))),
+        s"acc state: $acc")
 
-      // ListState: CepTws's pending element queue, one row per entry
+      // ListState: the chained OVER pass's pending watermark buffer, one
+      // row per entry
+      import graft.streaming.StatefulOps.{OverFrame, SlotOp}
       val ckpt2 = java.nio.file.Files.createTempDirectory("graft-tws-read2").toString
-      val in2 = MemoryStream[(Long, Long, Long, Long)]
-      val q2 = graft.cep.CepTws.matchStream(in2.toDS(),
-          graft.cep.Cep.Pattern.linear(2, 0L), "1000 seconds")
-        .toDF("k", "m").writeStream
+      val in2 = MemoryStream[(String, String, java.sql.Timestamp, Seq[Double])]
+      // huge delay keeps both rows pending in the buffer
+      val watermarked = in2.toDF().withWatermark("_3", "1000 seconds")
+        .as[(String, String, java.sql.Timestamp, Seq[Double])]
+      val q2 = graft.streaming.StatefulTws.overMultiAggsChained(watermarked,
+          IndexedSeq(OverFrame.Unbounded), IndexedSeq(SlotOp.Sum), dropLate = true)
+        .toDF("ck", "ts", "vals", "sums").writeStream
         .option("checkpointLocation", ckpt2)
         .outputMode("append").format("memory").queryName("tws_sr_out2").start()
-      // huge delay keeps both rows pending in the element queue
-      in2.addData((7L, 1000000L, 1L, 0L), (7L, 2000000L, 2L, 1L))
+      in2.addData(("7", "7|x", new java.sql.Timestamp(1000L), Seq(1.0)),
+        ("7", "7|y", new java.sql.Timestamp(2000L), Seq(2.0)))
       q2.processAllAvailable(); q2.stop()
       val pending = spark.read.format("statestore")
         .option("stateVarName", "pending")
         .option("flattenCollectionTypes", "true").load(ckpt2)
         .selectExpr("key.value", "list_element._1")
-        .as[(Long, Long)].collect().toSet
-      assert(pending == Set((7L, 1000000L), (7L, 2000000L)),
+        .as[(String, Long)].collect().toSet
+      assert(pending == Set(("7", 1000L), ("7", 2000L)),
         s"pending queue state: $pending")
     } finally {
       prev match {

@@ -1,37 +1,38 @@
 package graft
 
-import graft.streaming.{CoProcess, CoProcessTws, StatefulOps, StatefulTws}
+import graft.streaming.{CoProcess, StatefulOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
-/** Round-7 transformWithState migration: every remaining StatefulOps
-  * operator's TWS port must emit EXACTLY what the flatMapGroupsWithState
-  * original emits for the same MemoryStream script — same rows, same
-  * per-key order (these operators' outputs are deterministically ordered
-  * by construction, unlike the MapState join where only the net is
-  * pinned). Each test replays one script through both implementations
-  * and asserts plain equality of the collected sinks. */
+/** Every StatefulOps operator (and CoProcess) on the RocksDB state store
+  * provider must emit EXACTLY what it emits on the default provider for
+  * the same MemoryStream script — same rows, same per-key order (these
+  * operators' outputs are deterministically ordered by construction).
+  * Each test replays one script on both providers and asserts plain
+  * equality of the collected sinks, plus the hand-computed expectations.
+  * (Test names keep the "TWS" wording of the transformWithState ports
+  * these scripts were written for; those ports are gone and the
+  * flatMapGroupsWithState operator is the one body.) */
 class StatefulTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000)
 
-  /** Runs `body` with the RocksDB state store provider (the TWS runtime
-    * prerequisite), restoring the previous provider after. */
+  /** Runs `body` with the RocksDB state store provider, restoring the
+    * previous provider after. */
   def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
 
   // ---- event-time sort -------------------------------------------------
 
-  private def runSort(useTws: Boolean, sink: String): Seq[(Long, Long, String)] = {
+  private def runSort(sink: String): Seq[(Long, Long, String)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, String)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, String)]
-    val out = if (useTws) StatefulTws.eventTimeSort(watermarked)
-              else StatefulOps.eventTimeSort(watermarked)
+    val out = StatefulOps.eventTimeSort(watermarked)
     val q = out.toDF("k", "t", "v").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -47,27 +48,26 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS event-time sort emits exactly the fMGWS original's rows") {
-    val ref = runSort(useTws = false, "twss_sort_ref")
-    val tws = withRocksDB { runSort(useTws = true, "twss_sort_new") }
-    assert(tws == ref, s"tws=$tws ref=$ref")
+    val ref = runSort("twss_sort_ref")
+    val rocks = withRocksDB { runSort("twss_sort_new") }
+    assert(rocks == ref, s"rocks=$rocks ref=$ref")
     assert(ref.nonEmpty && !ref.exists(_._3 == "late-dropped"))
   }
 
   // ---- running sum (unbounded-preceding OVER) --------------------------
 
-  private def runRunning(useTws: Boolean, sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = if (useTws) StatefulTws.runningSumByKey(watermarked)
-              else StatefulOps.runningSumByKey(watermarked)
+    val out = StatefulOps.runningSumByKey(watermarked)
     val q = out.toDF("k", "t", "v", "running").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
       // the NaN row is a NULL-sentinel input (the SQL layer's encoding):
-      // both implementations must skip it, not poison the accumulator
+      // both runs must skip it, not poison the accumulator
       in.addData((1L, ts(100), 3.0), (1L, ts(50), 1.0), (1L, ts(80), 2.0),
         (1L, ts(60), Double.NaN))
       q.processAllAvailable()
@@ -80,12 +80,12 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS running sum: exact equality incl. accumulator persistence") {
-    val ref = runRunning(useTws = false, "twss_rs_ref")
-    val tws = withRocksDB { runRunning(useTws = true, "twss_rs_new") }
+    val ref = runRunning("twss_rs_ref")
+    val rocks = withRocksDB { runRunning("twss_rs_new") }
     // NaN-safe comparison: Scala's == on Double treats NaN != NaN
     def canon(s: Seq[(Long, Long, Double, Double)]) =
       s.map { case (k, t, v, r) => (k, t, v.toString, r.toString) }
-    assert(canon(tws) == canon(ref), s"tws=$tws ref=$ref")
+    assert(canon(rocks) == canon(ref), s"rocks=$rocks ref=$ref")
     // sanity: running sums follow event time; the NaN input at t=60
     // reads the unchanged accumulator
     assert(ref.map(r => (r._2, r._4)).take(5) ==
@@ -95,14 +95,13 @@ class StatefulTwsSpec extends AnyFunSuite {
 
   // ---- bounded ROWS frame OVER ----------------------------------------
 
-  private def runRowsBounded(useTws: Boolean, sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRowsBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = if (useTws) StatefulTws.rowsBoundedSumByKey(watermarked, nRows = 3)
-              else StatefulOps.rowsBoundedSumByKey(watermarked, nRows = 3)
+    val out = StatefulOps.rowsBoundedSumByKey(watermarked, nRows = 3)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -117,23 +116,22 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS bounded ROWS frame: exact equality incl. frame carry-over") {
-    val ref = runRowsBounded(useTws = false, "twss_rb_ref")
-    val tws = withRocksDB { runRowsBounded(useTws = true, "twss_rb_new") }
-    assert(tws == ref, s"tws=$tws ref=$ref")
+    val ref = runRowsBounded("twss_rb_ref")
+    val rocks = withRocksDB { runRowsBounded("twss_rb_new") }
+    assert(rocks == ref, s"rocks=$rocks ref=$ref")
     // frame ROWS 2 PRECEDING..CURRENT: 1, 3, 6, 9 then (3+4+5)=12 across batches
     assert(ref.map(_._4) == Seq(1.0, 3.0, 6.0, 9.0, 12.0))
   }
 
   // ---- bounded RANGE frame OVER ---------------------------------------
 
-  private def runRangeBounded(useTws: Boolean, sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRangeBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = if (useTws) StatefulTws.rangeBoundedSumByKey(watermarked, rangeMs = 15000L)
-              else StatefulOps.rangeBoundedSumByKey(watermarked, rangeMs = 15000L)
+    val out = StatefulOps.rangeBoundedSumByKey(watermarked, rangeMs = 15000L)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -149,9 +147,9 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS bounded RANGE frame: exact equality incl. time-based eviction") {
-    val ref = runRangeBounded(useTws = false, "twss_rg_ref")
-    val tws = withRocksDB { runRangeBounded(useTws = true, "twss_rg_new") }
-    assert(tws == ref, s"tws=$tws ref=$ref")
+    val ref = runRangeBounded("twss_rg_ref")
+    val rocks = withRocksDB { runRangeBounded("twss_rg_new") }
+    assert(rocks == ref, s"rocks=$rocks ref=$ref")
     // RANGE 15s: 1; 1+2; the t=32 PEERS both read 2+2.5+3 (10 evicted);
     // 2.5+3+4 at 45 (20 evicted); 5 alone — tied rowtimes share one value
     assert(ref.map(_._4) == Seq(1.0, 3.0, 7.5, 7.5, 9.5, 5.0))
@@ -172,14 +170,13 @@ class StatefulTwsSpec extends AnyFunSuite {
 
   // ---- unbounded RANGE frame OVER (SQL default; peers share) ----------
 
-  private def runRangeRunning(useTws: Boolean, sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRangeRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = if (useTws) StatefulTws.rangeRunningSumByKey(watermarked)
-              else StatefulOps.rangeRunningSumByKey(watermarked)
+    val out = StatefulOps.rangeRunningSumByKey(watermarked)
     val q = out.toDF("k", "t", "v", "run_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -194,16 +191,16 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS unbounded RANGE frame: exact equality; tied rowtimes share") {
-    val ref = runRangeRunning(useTws = false, "twss_rr_ref")
-    val tws = withRocksDB { runRangeRunning(useTws = true, "twss_rr_new") }
-    assert(tws == ref, s"tws=$tws ref=$ref")
+    val ref = runRangeRunning("twss_rr_ref")
+    val rocks = withRocksDB { runRangeRunning("twss_rr_new") }
+    assert(rocks == ref, s"rocks=$rocks ref=$ref")
     // the SQL default frame: both t=20 peers read 1+2+3, not 3-then-6
     assert(ref.map(_._4) == Seq(1.0, 6.0, 6.0, 11.0))
   }
 
   // ---- fused multi-slot OVER ------------------------------------------
 
-  private def runOverAggs(useTws: Boolean, sink: String,
+  private def runOverAggs(sink: String,
       frame: graft.streaming.StatefulOps.OverFrame)
       : Seq[(Long, Long, Seq[Double], Seq[Double])] = {
     import spark.implicits._
@@ -213,8 +210,7 @@ class StatefulTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = if (useTws) StatefulTws.overAggsByKey(watermarked, frame, ops)
-              else StatefulOps.overAggsByKey(watermarked, frame, ops)
+    val out = StatefulOps.overAggsByKey(watermarked, frame, ops)
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -239,19 +235,19 @@ class StatefulTwsSpec extends AnyFunSuite {
         (OverFrame.Range(15000L), "range"),
         (OverFrame.UnboundedRange, "urange"),
         (OverFrame.Unbounded: OverFrame, "unb"))) {
-      val ref = runOverAggs(useTws = false, s"twss_oa_${tag}_ref", frame)
-      val tws = withRocksDB { runOverAggs(useTws = true, s"twss_oa_${tag}_new", frame) }
-      assert(canon(tws) == canon(ref), s"[$tag] tws=$tws ref=$ref")
+      val ref = runOverAggs(s"twss_oa_${tag}_ref", frame)
+      val rocks = withRocksDB { runOverAggs(s"twss_oa_${tag}_new", frame) }
+      assert(canon(rocks) == canon(ref), s"[$tag] rocks=$rocks ref=$ref")
       assert(ref.size == 5, s"[$tag] expected 5 released rows, got $ref")
     }
-    // spot-pin the RANGE peer rule on the tws output: both t=20 rows
+    // spot-pin the RANGE peer rule on the reference output: both t=20 rows
     // share one aggregate under a RANGE frame
-    val rng = runOverAggs(useTws = false, "twss_oa_pin", OverFrame.Range(15000L))
+    val rng = runOverAggs("twss_oa_pin", OverFrame.Range(15000L))
       .filter(_._2 == 20000L).map(_._4)
     assert(rng.size == 2 && rng.distinct.size == 1, s"peers differ: $rng")
   }
 
-  private def runOverMulti(useTws: Boolean, sink: String)
+  private def runOverMulti(sink: String)
       : Seq[(Long, Long, Seq[Double], Seq[Double])] = {
     import spark.implicits._
     import graft.streaming.StatefulOps.{OverFrame, SlotOp}
@@ -265,8 +261,7 @@ class StatefulTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = if (useTws) StatefulTws.overMultiAggsByKey(watermarked, frames, ops)
-              else graft.streaming.StatefulOps.overMultiAggsByKey(watermarked, frames, ops)
+    val out = StatefulOps.overMultiAggsByKey(watermarked, frames, ops)
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -287,9 +282,9 @@ class StatefulTwsSpec extends AnyFunSuite {
     def canon(s: Seq[(Long, Long, Seq[Double], Seq[Double])]) =
       s.sortBy(r => (r._2, r._3.mkString(",")))
         .map { case (k, t, vs, ag) => (k, t, vs.mkString(","), ag.mkString(",")) }
-    val ref = runOverMulti(useTws = false, "twss_om_ref")
-    val tws = withRocksDB { runOverMulti(useTws = true, "twss_om_new") }
-    assert(canon(tws) == canon(ref), s"tws=$tws ref=$ref")
+    val ref = runOverMulti("twss_om_ref")
+    val rocks = withRocksDB { runOverMulti("twss_om_new") }
+    assert(canon(rocks) == canon(ref), s"rocks=$rocks ref=$ref")
     assert(ref.size == 5, s"expected 5 released rows, got $ref")
     // pin the per-slot semantics on the released t=30 row: SUM over the
     // last 2 rows (Rows(2)), MIN over [15s,30s], FIRST non-null ever
@@ -304,12 +299,11 @@ class StatefulTwsSpec extends AnyFunSuite {
 
   // ---- append-only top-N ----------------------------------------------
 
-  private def runTopN(useTws: Boolean, sink: String): Seq[(String, Int, Double, String)] = {
+  private def runTopN(sink: String): Seq[(String, Int, Double, String)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Double, String)]
-    val out = if (useTws) StatefulTws.topNPerKey(in.toDS(), n = 2)
-              else StatefulOps.topNPerKey(in.toDS(), n = 2)
+    val out = StatefulOps.topNPerKey(in.toDS(), n = 2)
     val q = out.toDF("k", "rank", "score", "payload").writeStream
       .outputMode("update").format("memory").queryName(sink).start()
     try {
@@ -324,20 +318,20 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS top-N (counted MapState): exact equality incl. emit-on-change") {
-    val ref = runTopN(useTws = false, "twss_topn_ref")
-    val tws = withRocksDB { runTopN(useTws = true, "twss_topn_new") }
+    val ref = runTopN("twss_topn_ref")
+    val rocks = withRocksDB { runTopN("twss_topn_new") }
     // per-key emission sequences must match exactly (cross-key interleaving
     // inside a batch is partition-order-dependent for both)
     def perKey(rows: Seq[(String, Int, Double, String)]) =
       rows.groupBy(_._1).view.mapValues(_.toSeq).toMap
-    assert(perKey(tws) == perKey(ref), s"tws=$tws ref=$ref")
+    assert(perKey(rocks) == perKey(ref), s"rocks=$rocks ref=$ref")
     val aRows = perKey(ref)("a")
     assert(aRows.takeRight(2).map(r => (r._2, r._4)) == Seq((1, "y"), (2, "w")))
   }
 
   // ---- connected streams (CoProcess) ----------------------------------
 
-  private def runConnect(useTws: Boolean, sink: String): Seq[(Long, String)] = {
+  private def runConnect(sink: String): Seq[(Long, String)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val lhs = MemoryStream[(Long, Timestamp, String)]
@@ -347,8 +341,7 @@ class StatefulTwsSpec extends AnyFunSuite {
       CoProcess.Emit[Long, String](Seq(s"$v:${s.getOrElse(-1L)}"), s)
     def onRight(k: Long, t: Long, v: Long, s: Option[Long]) =
       CoProcess.Emit[Long, String](Nil, Some(v))
-    val out = if (useTws) CoProcessTws.connect(lhs.toDS(), rhs.toDS())(onLeft, onRight)
-              else CoProcess.connect(lhs.toDS(), rhs.toDS())(onLeft, onRight)
+    val out = CoProcess.connect(lhs.toDS(), rhs.toDS())(onLeft, onRight)
     // stage batch 1 on BOTH sides before start: a started query may form
     // its first batch between two addData calls, splitting the script
     lhs.addData((1L, ts(5), "a"))
@@ -366,9 +359,9 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS CoProcess connect: exact equality of interleaved replay") {
-    val ref = runConnect(useTws = false, "twss_cp_ref")
-    val tws = withRocksDB { runConnect(useTws = true, "twss_cp_new") }
-    assert(tws == ref, s"tws=$tws ref=$ref")
+    val ref = runConnect("twss_cp_ref")
+    val rocks = withRocksDB { runConnect("twss_cp_new") }
+    assert(rocks == ref, s"rocks=$rocks ref=$ref")
     // batch 1 replays right(t=1) before left(t=5); batch 3's rows both see
     // the state 30 written in batch 2 (batch boundary = replay boundary)
     assert(ref == Seq((1L, "a:10"), (1L, "mid:30"), (1L, "b:30")))

@@ -1,17 +1,16 @@
 package graft
 
-import graft.streaming.{StreamJoin, StreamJoinTws}
+import graft.streaming.{FmgwsReference, StreamJoinTws}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** transformWithState port of the retraction inner join must be
-  * NET-EQUAL to the flatMapGroupsWithState original on the same scripted
-  * changelogs — the second migration on the KeyedProcessTws template, and
-  * the one that splits the counted-multiset GroupState into per-entry
-  * MapState handles (the SCALE.md "main scale win"). Emission ORDER may
-  * differ (MapState iteration order is store-defined), so the assertions
-  * pin the net materialization and the per-kind counts, both
-  * order-independent. */
+/** The transformWithState retraction joins ([[StreamJoinTws]], the one
+  * implementation, with per-entry MapState handles) must be NET-EQUAL to
+  * the flatMapGroupsWithState reference fold (`FmgwsReference`,
+  * test-only, one counted-multiset GroupState per key) on the same
+  * scripted changelogs. Emission ORDER may differ (MapState iteration
+  * order is store-defined), so the assertions pin the net
+  * materialization and the per-kind counts, both order-independent. */
 class StreamJoinTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -23,7 +22,7 @@ class StreamJoinTwsSpec extends AnyFunSuite {
     val rhs = MemoryStream[(Long, String, String)]
     val out =
       if (useTws) StreamJoinTws.innerJoin(lhs.toDS(), rhs.toDS())
-      else StreamJoin.innerJoin(lhs.toDS(), rhs.toDS())
+      else FmgwsReference.innerJoin(lhs.toDS(), rhs.toDS())
     val q = out.toDF("k", "kind", "l", "r").writeStream
       .outputMode("update").format("memory").queryName(sink).start()
     try {
@@ -50,16 +49,16 @@ class StreamJoinTwsSpec extends AnyFunSuite {
           StreamJoinTws.leftOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, Option(l), r) }
         case (false, "left") =>
-          StreamJoin.leftOuterJoin(lhs.toDS(), rhs.toDS())
+          FmgwsReference.leftOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, Option(l), r) }
         case (true, "right") =>
           StreamJoinTws.rightOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, l, Option(r)) }
         case (false, "right") =>
-          StreamJoin.rightOuterJoin(lhs.toDS(), rhs.toDS())
+          FmgwsReference.rightOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, l, Option(r)) }
         case (true, _) => StreamJoinTws.fullOuterJoin(lhs.toDS(), rhs.toDS())
-        case (false, _) => StreamJoin.fullOuterJoin(lhs.toDS(), rhs.toDS())
+        case (false, _) => FmgwsReference.fullOuterJoin(lhs.toDS(), rhs.toDS())
       }
     val q = out.toDF("k", "kind", "l", "r").writeStream
       .outputMode("update").format("memory").queryName(sink).start()

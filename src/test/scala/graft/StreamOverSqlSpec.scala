@@ -163,24 +163,12 @@ class StreamOverSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("graft.over.tws routes the SQL lowering onto the transformWithState port") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevP = spark.conf.getOption(key)
-    val prevT = spark.conf.getOption("graft.over.tws")
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("graft.over.tws", "true")
+  test("fused OVER lowering on the RocksDB provider equals the batch window result") {
     // same end-to-end harness, default RANGE frame with tied rowtimes:
-    // the TWS port must produce the identical batch-window result
-    try runOne("twsroute", "", Window.partitionBy("k").orderBy("ts"), tied = true)
-    finally {
-      prevP match {
-        case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key)
-      }
-      prevT match {
-        case Some(v) => spark.conf.set("graft.over.tws", v)
-        case None => spark.conf.unset("graft.over.tws")
-      }
+    // the fused pass on the RocksDB store must produce the identical
+    // batch-window result
+    TestSpark.withRocksDB {
+      runOne("twsroute", "", Window.partitionBy("k").orderBy("ts"), tied = true)
     }
   }
 

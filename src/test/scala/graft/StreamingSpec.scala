@@ -724,49 +724,53 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("retractable top-N backfills when a ranked row is deleted") {
-    import graft.streaming.Retract
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String, Double, String)]
-    val out = Retract.retractableTopN(in.toDS(), n = 2)
-    val q = out.toDF("k", "rk", "score", "id").writeStream
-      .outputMode("update").format("memory").queryName("rt_out").start()
-    in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"), ("g", "+I", 10.0, "z"))
-    q.processAllAvailable()
-    val top1 = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSet
-    assert(top1.contains(("g", 1, 30.0, "x")) && top1.contains(("g", 2, 20.0, "y")))
-    // retract the leader: z must backfill into the refreshed top-2
-    in.addData(("g", "-D", 30.0, "x"))
-    runToCompletion(q)
-    val all = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSeq
-    assert(all.contains(("g", 1, 20.0, "y")) && all.contains(("g", 2, 10.0, "z")),
-      s"no backfill after retraction: $all")
+    TestSpark.withRocksDB {
+      import graft.streaming.RetractTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[(String, String, Double, String)]
+      val out = RetractTws.retractableTopN(in.toDS(), n = 2)
+      val q = out.toDF("k", "rk", "score", "id").writeStream
+        .outputMode("update").format("memory").queryName("rt_out").start()
+      in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"), ("g", "+I", 10.0, "z"))
+      q.processAllAvailable()
+      val top1 = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSet
+      assert(top1.contains(("g", 1, 30.0, "x")) && top1.contains(("g", 2, 20.0, "y")))
+      // retract the leader: z must backfill into the refreshed top-2
+      in.addData(("g", "-D", 30.0, "x"))
+      runToCompletion(q)
+      val all = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSeq
+      assert(all.contains(("g", 1, 20.0, "y")) && all.contains(("g", 2, 10.0, "z")),
+        s"no backfill after retraction: $all")
+    }
   }
 
   test("retractable top-N changelog emits -D when the top shrinks") {
-    import graft.streaming.Retract
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String, Double, String)]
-    val out = Retract.retractableTopNChangelog(in.toDS(), n = 2)
-    val q = out.toDF("kind", "k", "rk", "score", "id").writeStream
-      .outputMode("append").format("memory").queryName("rtc_out").start()
-    in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"))
-    q.processAllAvailable()
-    val top1 = spark.table("rtc_out")
-      .as[(String, String, Int, Double, String)].collect().toSet
-    assert(top1 == Set(("+U", "g", 1, 30.0, "x"), ("+U", "g", 2, 20.0, "y")),
-      top1.toString)
-    // retract y with nothing to backfill: rank 2 must emit an explicit
-    // -D (the sink keyed by (k, rank) would otherwise keep it forever)
-    in.addData(("g", "-D", 20.0, "y"))
-    runToCompletion(q)
-    val all = spark.table("rtc_out")
-      .as[(String, String, Int, Double, String)].collect().toSeq
-    assert(all.contains(("-D", "g", 2, 20.0, "y")), s"no rank-2 delete: $all")
-    // rank 1 unchanged -> NOT re-emitted in the second commit
-    assert(all.count(r => r._1 == "+U" && r._3 == 1) == 1,
-      s"unchanged rank re-emitted: $all")
+    TestSpark.withRocksDB {
+      import graft.streaming.RetractTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[(String, String, Double, String)]
+      val out = RetractTws.retractableTopNChangelog(in.toDS(), n = 2)
+      val q = out.toDF("kind", "k", "rk", "score", "id").writeStream
+        .outputMode("append").format("memory").queryName("rtc_out").start()
+      in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"))
+      q.processAllAvailable()
+      val top1 = spark.table("rtc_out")
+        .as[(String, String, Int, Double, String)].collect().toSet
+      assert(top1 == Set(("+U", "g", 1, 30.0, "x"), ("+U", "g", 2, 20.0, "y")),
+        top1.toString)
+      // retract y with nothing to backfill: rank 2 must emit an explicit
+      // -D (the sink keyed by (k, rank) would otherwise keep it forever)
+      in.addData(("g", "-D", 20.0, "y"))
+      runToCompletion(q)
+      val all = spark.table("rtc_out")
+        .as[(String, String, Int, Double, String)].collect().toSeq
+      assert(all.contains(("-D", "g", 2, 20.0, "y")), s"no rank-2 delete: $all")
+      // rank 1 unchanged -> NOT re-emitted in the second commit
+      assert(all.count(r => r._1 == "+U" && r._3 == 1) == 1,
+        s"unchanged rank re-emitted: $all")
+    }
   }
 
   test("fastTop1: O(1) leader state under monotone upserts; demotion fails loudly") {
@@ -890,119 +894,127 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("retraction stream-stream join: net changelog equals end-state join") {
-    import graft.streaming.StreamJoin
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lhs = MemoryStream[(Long, String, String)] // (key, kind, l-payload)
-    val rhs = MemoryStream[(Long, String, String)]
-    val out = StreamJoin.innerJoin(lhs.toDS(), rhs.toDS())
-    val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName("sj_out").start()
-    // batch 1: left rows arrive before any right -> no emissions yet
-    lhs.addData((1L, "+I", "l1"), (1L, "+I", "l2"), (2L, "+I", "lx"))
-    q.processAllAvailable()
-    // batch 2: right arrives -> joins with the two live left rows of key 1
-    rhs.addData((1L, "+I", "r1"))
-    q.processAllAvailable()
-    // batch 3: update l1 -> retract (l1,r1), add (l1b,r1); delete key-2 left
-    lhs.addData((1L, "-U", "l1"), (1L, "+U", "l1b"), (2L, "-D", "lx"))
-    rhs.addData((2L, "+I", "ry")) // arrives after lx deletion: no join
-    runToCompletion(q)
+    TestSpark.withRocksDB {
+      import graft.streaming.StreamJoinTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val lhs = MemoryStream[(Long, String, String)] // (key, kind, l-payload)
+      val rhs = MemoryStream[(Long, String, String)]
+      val out = StreamJoinTws.innerJoin(lhs.toDS(), rhs.toDS())
+      val q = out.toDF("k", "kind", "l", "r").writeStream
+        .outputMode("update").format("memory").queryName("sj_out").start()
+      // batch 1: left rows arrive before any right -> no emissions yet
+      lhs.addData((1L, "+I", "l1"), (1L, "+I", "l2"), (2L, "+I", "lx"))
+      q.processAllAvailable()
+      // batch 2: right arrives -> joins with the two live left rows of key 1
+      rhs.addData((1L, "+I", "r1"))
+      q.processAllAvailable()
+      // batch 3: update l1 -> retract (l1,r1), add (l1b,r1); delete key-2 left
+      lhs.addData((1L, "-U", "l1"), (1L, "+U", "l1b"), (2L, "-D", "lx"))
+      rhs.addData((2L, "+I", "ry")) // arrives after lx deletion: no join
+      runToCompletion(q)
 
-    val rows = spark.table("sj_out").as[(Long, String, String, String)].collect()
-    // net materialization: +I count minus -D count per joined row
-    val net = rows.groupBy(r => (r._1, r._3, r._4)).view
-      .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
-      .filter(_._2 > 0).keys.toSet
-    assert(net == Set((1L, "l1b", "r1"), (1L, "l2", "r1")), s"net=$net rows=${rows.toSeq}")
-    // the retraction of (l1, r1) was emitted explicitly
-    assert(rows.contains((1L, "-D", "l1", "r1")), s"missing join retraction: ${rows.toSeq}")
+      val rows = spark.table("sj_out").as[(Long, String, String, String)].collect()
+      // net materialization: +I count minus -D count per joined row
+      val net = rows.groupBy(r => (r._1, r._3, r._4)).view
+        .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
+        .filter(_._2 > 0).keys.toSet
+      assert(net == Set((1L, "l1b", "r1"), (1L, "l2", "r1")), s"net=$net rows=${rows.toSeq}")
+      // the retraction of (l1, r1) was emitted explicitly
+      assert(rows.contains((1L, "-D", "l1", "r1")), s"missing join retraction: ${rows.toSeq}")
+    }
   }
 
   test("left-outer retraction join: null pad retracts when a match arrives") {
-    import graft.streaming.StreamJoin
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lhs = MemoryStream[(Long, String, String)]
-    val rhs = MemoryStream[(Long, String, String)]
-    val out = StreamJoin.leftOuterJoin(lhs.toDS(), rhs.toDS())
-    val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName("lo_out").start()
-    lhs.addData((1L, "+I", "l1")) // no right yet -> null-padded
-    q.processAllAvailable()
-    rhs.addData((1L, "+I", "r1")) // pad retracts, real join emits
-    q.processAllAvailable()
-    rhs.addData((1L, "-D", "r1")) // last match gone -> pad returns
-    runToCompletion(q)
-    val rows = spark.table("lo_out")
-      .as[(Long, String, String, Option[String])].collect().toSeq
-    assert(rows.contains((1L, "+I", "l1", None)), s"missing initial pad: $rows")
-    assert(rows.contains((1L, "-D", "l1", None)), s"pad not retracted: $rows")
-    assert(rows.contains((1L, "+I", "l1", Some("r1"))))
-    assert(rows.contains((1L, "-D", "l1", Some("r1"))))
-    // net materialization after all batches: back to the null-padded row
-    val net = rows.groupBy(r => (r._1, r._3, r._4)).view
-      .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
-      .filter(_._2 > 0).keys.toSet
-    assert(net == Set((1L, "l1", None)), s"net=$net")
+    TestSpark.withRocksDB {
+      import graft.streaming.StreamJoinTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val lhs = MemoryStream[(Long, String, String)]
+      val rhs = MemoryStream[(Long, String, String)]
+      val out = StreamJoinTws.leftOuterJoin(lhs.toDS(), rhs.toDS())
+      val q = out.toDF("k", "kind", "l", "r").writeStream
+        .outputMode("update").format("memory").queryName("lo_out").start()
+      lhs.addData((1L, "+I", "l1")) // no right yet -> null-padded
+      q.processAllAvailable()
+      rhs.addData((1L, "+I", "r1")) // pad retracts, real join emits
+      q.processAllAvailable()
+      rhs.addData((1L, "-D", "r1")) // last match gone -> pad returns
+      runToCompletion(q)
+      val rows = spark.table("lo_out")
+        .as[(Long, String, String, Option[String])].collect().toSeq
+      assert(rows.contains((1L, "+I", "l1", None)), s"missing initial pad: $rows")
+      assert(rows.contains((1L, "-D", "l1", None)), s"pad not retracted: $rows")
+      assert(rows.contains((1L, "+I", "l1", Some("r1"))))
+      assert(rows.contains((1L, "-D", "l1", Some("r1"))))
+      // net materialization after all batches: back to the null-padded row
+      val net = rows.groupBy(r => (r._1, r._3, r._4)).view
+        .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
+        .filter(_._2 > 0).keys.toSet
+      assert(net == Set((1L, "l1", None)), s"net=$net")
+    }
   }
 
   test("right-outer retraction join mirrors left-outer pads") {
-    import graft.streaming.StreamJoin
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lhs = MemoryStream[(Long, String, String)]
-    val rhs = MemoryStream[(Long, String, String)]
-    val out = StreamJoin.rightOuterJoin(lhs.toDS(), rhs.toDS())
-    val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName("ro_out").start()
-    rhs.addData((1L, "+I", "r1")) // no left yet -> null-padded on the left
-    q.processAllAvailable()
-    lhs.addData((1L, "+I", "l1")) // pad retracts, real join emits
-    q.processAllAvailable()
-    lhs.addData((1L, "-D", "l1")) // last match gone -> pad returns
-    runToCompletion(q)
-    val rows = spark.table("ro_out")
-      .as[(Long, String, Option[String], String)].collect().toSeq
-    assert(rows.contains((1L, "+I", None, "r1")), s"missing initial pad: $rows")
-    assert(rows.contains((1L, "-D", None, "r1")), s"pad not retracted: $rows")
-    assert(rows.contains((1L, "+I", Some("l1"), "r1")))
-    assert(rows.contains((1L, "-D", Some("l1"), "r1")))
-    val net = rows.groupBy(r => (r._1, r._3, r._4)).view
-      .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
-      .filter(_._2 > 0).keys.toSet
-    assert(net == Set((1L, None, "r1")), s"net=$net")
+    TestSpark.withRocksDB {
+      import graft.streaming.StreamJoinTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val lhs = MemoryStream[(Long, String, String)]
+      val rhs = MemoryStream[(Long, String, String)]
+      val out = StreamJoinTws.rightOuterJoin(lhs.toDS(), rhs.toDS())
+      val q = out.toDF("k", "kind", "l", "r").writeStream
+        .outputMode("update").format("memory").queryName("ro_out").start()
+      rhs.addData((1L, "+I", "r1")) // no left yet -> null-padded on the left
+      q.processAllAvailable()
+      lhs.addData((1L, "+I", "l1")) // pad retracts, real join emits
+      q.processAllAvailable()
+      lhs.addData((1L, "-D", "l1")) // last match gone -> pad returns
+      runToCompletion(q)
+      val rows = spark.table("ro_out")
+        .as[(Long, String, Option[String], String)].collect().toSeq
+      assert(rows.contains((1L, "+I", None, "r1")), s"missing initial pad: $rows")
+      assert(rows.contains((1L, "-D", None, "r1")), s"pad not retracted: $rows")
+      assert(rows.contains((1L, "+I", Some("l1"), "r1")))
+      assert(rows.contains((1L, "-D", Some("l1"), "r1")))
+      val net = rows.groupBy(r => (r._1, r._3, r._4)).view
+        .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
+        .filter(_._2 > 0).keys.toSet
+      assert(net == Set((1L, None, "r1")), s"net=$net")
+    }
   }
 
   test("full-outer retraction join pads both sides; duplicate rows counted") {
-    import graft.streaming.StreamJoin
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lhs = MemoryStream[(Long, String, String)]
-    val rhs = MemoryStream[(Long, String, String)]
-    val out = StreamJoin.fullOuterJoin(lhs.toDS(), rhs.toDS())
-    val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName("fo_out").start()
-    // duplicate left payloads exercise the counted-multiset state
-    lhs.addData((1L, "+I", "l1"), (1L, "+I", "l1"))
-    rhs.addData((2L, "+I", "r2"))
-    q.processAllAvailable()
-    rhs.addData((1L, "+I", "r1")) // both l1 pads retract, two joins emit
-    q.processAllAvailable()
-    rhs.addData((1L, "-D", "r1")) // pads come back (x2)
-    lhs.addData((1L, "-D", "l1")) // one of the two pads goes away
-    runToCompletion(q)
-    val rows = spark.table("fo_out")
-      .as[(Long, String, Option[String], Option[String])].collect().toSeq
-    val net = rows.groupBy(r => (r._1, r._3, r._4)).view
-      .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
-      .filter(_._2 > 0).toMap
-    // end state: one live l1 pad for key 1, the untouched r2 pad for key 2
-    assert(net == Map((1L, Some("l1"), None) -> 1, (2L, None, Some("r2")) -> 1),
-      s"net=$net rows=$rows")
-    // both directions of pad retraction happened explicitly
-    assert(rows.count(_ == ((1L, "-D", Some("l1"), None))) >= 2, s"rows=$rows")
-    assert(rows.count(_ == ((1L, "+I", Some("l1"), Some("r1")))) == 2, s"rows=$rows")
+    TestSpark.withRocksDB {
+      import graft.streaming.StreamJoinTws
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val lhs = MemoryStream[(Long, String, String)]
+      val rhs = MemoryStream[(Long, String, String)]
+      val out = StreamJoinTws.fullOuterJoin(lhs.toDS(), rhs.toDS())
+      val q = out.toDF("k", "kind", "l", "r").writeStream
+        .outputMode("update").format("memory").queryName("fo_out").start()
+      // duplicate left payloads exercise the counted-multiset state
+      lhs.addData((1L, "+I", "l1"), (1L, "+I", "l1"))
+      rhs.addData((2L, "+I", "r2"))
+      q.processAllAvailable()
+      rhs.addData((1L, "+I", "r1")) // both l1 pads retract, two joins emit
+      q.processAllAvailable()
+      rhs.addData((1L, "-D", "r1")) // pads come back (x2)
+      lhs.addData((1L, "-D", "l1")) // one of the two pads goes away
+      runToCompletion(q)
+      val rows = spark.table("fo_out")
+        .as[(Long, String, Option[String], Option[String])].collect().toSeq
+      val net = rows.groupBy(r => (r._1, r._3, r._4)).view
+        .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
+        .filter(_._2 > 0).toMap
+      // end state: one live l1 pad for key 1, the untouched r2 pad for key 2
+      assert(net == Map((1L, Some("l1"), None) -> 1, (2L, None, Some("r2")) -> 1),
+        s"net=$net rows=$rows")
+      // both directions of pad retraction happened explicitly
+      assert(rows.count(_ == ((1L, "-D", Some("l1"), None))) >= 2, s"rows=$rows")
+      assert(rows.count(_ == ((1L, "+I", Some("l1"), Some("r1")))) == 2, s"rows=$rows")
+    }
   }
 
   test("streaming changelog replay equals the batch signed aggregate") {

@@ -1,18 +1,20 @@
 package graft
 
-import graft.streaming.{TemporalJoin, TemporalJoinTws}
+import graft.streaming.TemporalJoin
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
-/** The transformWithState temporal-join port must emit EXACTLY what the
-  * fMGWS original emits — the version-history MapState split
-  * (TemporalRowTimeJoinOperator.java:78's rightState shape) is a state
-  * layout change only. Output is deterministically ordered per key
-  * (watermark-driven event-time release), so the specs assert plain
-  * equality, covering version selection, late drops, retention, and the
-  * idle TTL. */
+/** `TemporalJoin.temporalJoin` on the RocksDB state store provider must
+  * emit EXACTLY what it emits on the default provider — where the
+  * version history (TemporalRowTimeJoinOperator.java:78's rightState)
+  * is stored never changes the answer. Output is deterministically
+  * ordered per key (watermark-driven event-time release), so the specs
+  * assert plain equality, covering version selection, late drops,
+  * retention, and the idle TTL. (Test names keep the "TWS" wording of
+  * the transformWithState port these scripts were written for; that
+  * port is gone and `TemporalJoin` is the one body.) */
 class TemporalJoinTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -20,15 +22,14 @@ class TemporalJoinTwsSpec extends AnyFunSuite {
 
   private def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
 
-  private def runScript(useTws: Boolean, sink: String, maxIdleMs: Long)
+  private def runScript(sink: String, maxIdleMs: Long)
       : Seq[(Long, Long, String, Option[String])] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val facts = MemoryStream[(Long, Timestamp, String)]
     val versions = MemoryStream[(Long, Timestamp, String)]
     val out =
-      if (useTws) TemporalJoinTws.temporalJoin(facts.toDS(), versions.toDS(), "10 seconds", maxIdleMs)
-      else TemporalJoin.temporalJoin(facts.toDS(), versions.toDS(), "10 seconds", maxIdleMs)
+      TemporalJoin.temporalJoin(facts.toDS(), versions.toDS(), "10 seconds", maxIdleMs)
     // stage batch 1 on BOTH sides before start: a started query may form
     // its first batch between two addData calls, splitting the script
     versions.addData((1L, ts(10), "v1"), (1L, ts(50), "v2"), (2L, ts(5), "w1"))
@@ -53,11 +54,11 @@ class TemporalJoinTwsSpec extends AnyFunSuite {
   }
 
   test("TWS temporal join: exact equality on versioned history + late drops") {
-    val ref = runScript(useTws = false, "tjtws_ref", maxIdleMs = 0L)
-    val tws = withRocksDB { runScript(useTws = true, "tjtws_new", maxIdleMs = 0L) }
+    val ref = runScript("tjtws_ref", maxIdleMs = 0L)
+    val rocks = withRocksDB { runScript("tjtws_new", maxIdleMs = 0L) }
     def perKey(rows: Seq[(Long, Long, String, Option[String])]) =
       rows.groupBy(_._1).view.mapValues(_.toSeq).toMap
-    assert(perKey(tws) == perKey(ref), s"tws=$tws ref=$ref")
+    assert(perKey(rocks) == perKey(ref), s"rocks=$rocks ref=$ref")
     val k1 = perKey(ref)(1L).map(r => (r._3, r._4))
     assert(k1.contains(("f-between", Some("v1"))) && k1.contains(("f-after", Some("v2"))))
     assert(!ref.exists(_._3 == "dropped-late"))
@@ -65,23 +66,22 @@ class TemporalJoinTwsSpec extends AnyFunSuite {
   }
 
   test("TWS temporal join: idle TTL expires a silent key's version state") {
-    val ref = runScript(useTws = false, "tjtws_idle_ref", maxIdleMs = 60000L)
-    val tws = withRocksDB { runScript(useTws = true, "tjtws_idle_new", maxIdleMs = 60000L) }
+    val ref = runScript("tjtws_idle_ref", maxIdleMs = 60000L)
+    val rocks = withRocksDB { runScript("tjtws_idle_new", maxIdleMs = 60000L) }
     def perKey(rows: Seq[(Long, Long, String, Option[String])]) =
       rows.groupBy(_._1).view.mapValues(_.toSeq).toMap
-    assert(perKey(tws) == perKey(ref), s"tws=$tws ref=$ref")
+    assert(perKey(rocks) == perKey(ref), s"rocks=$rocks ref=$ref")
   }
 
-  private def runEdgeScript(useTws: Boolean, sink: String, maxIdleMs: Long)
+  private def runEdgeScript(sink: String, maxIdleMs: Long)
       : Seq[(Long, Long, String, Option[String])] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val facts = MemoryStream[(Long, Timestamp, String)]
     val versions = MemoryStream[(Long, Timestamp, String)]
     val out =
-      if (useTws) TemporalJoinTws.temporalJoin(facts.toDS(), versions.toDS(), "0 seconds", maxIdleMs)
-      else TemporalJoin.temporalJoin(facts.toDS(), versions.toDS(), "0 seconds", maxIdleMs)
-    // DUPLICATE version timestamps: both engines must match the
+      TemporalJoin.temporalJoin(facts.toDS(), versions.toDS(), "0 seconds", maxIdleMs)
+    // DUPLICATE version timestamps: both providers must match the
     // (t, payload)-max ("vb" > "va" lexicographically)
     versions.addData((1L, ts(10), "vb"), (1L, ts(10), "va"))
     facts.addData((1L, ts(20), "f1"))
@@ -106,10 +106,10 @@ class TemporalJoinTwsSpec extends AnyFunSuite {
 
   test("TWS temporal join: duplicate version timestamps + same-firing idle expiry") {
     Seq(0L, 60000L).foreach { idle =>
-      val ref = runEdgeScript(useTws = false, s"tjtws_edge_ref_$idle", idle)
-      val tws = withRocksDB { runEdgeScript(useTws = true, s"tjtws_edge_new_$idle", idle) }
-      assert(tws.sortBy(r => (r._1, r._2)) == ref.sortBy(r => (r._1, r._2)),
-        s"idle=$idle tws=$tws ref=$ref")
+      val ref = runEdgeScript(s"tjtws_edge_ref_$idle", idle)
+      val rocks = withRocksDB { runEdgeScript(s"tjtws_edge_new_$idle", idle) }
+      assert(rocks.sortBy(r => (r._1, r._2)) == ref.sortBy(r => (r._1, r._2)),
+        s"idle=$idle rocks=$rocks ref=$ref")
       // the duplicate-t tie resolves to the payload-max in both
       assert(ref.exists(r => r._3 == "f1" && r._4 == Some("vb")), ref.toString)
     }

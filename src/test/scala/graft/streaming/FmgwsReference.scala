@@ -5,44 +5,118 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import scala.collection.mutable
 
-/** Retraction-consuming two-sided stream joins (flink-table-runtime
-  * .../join/stream/StreamingJoinOperator.java): both inputs are CHANGELOGS
-  * (row_kind +I/-U/+U/-D per graft.streaming.Cdc), the output is the
-  * changelog of the join. All four join types are covered:
-  *   - inner:       +I left emits +I (l, r) per live right row of the key;
-  *                  -D left retracts one live instance and emits -D per
-  *                  live right row — symmetrically for the right side;
-  *   - left outer:  an unmatched left row emits (+I l, NULL); when its
-  *                  first right match arrives the pad is RETRACTED and the
-  *                  real join rows emit, and back to the pad when the last
-  *                  match retracts (OuterJoinRecordStateView.java:335);
-  *   - right outer: the mirror image;
-  *   - full outer:  pads on BOTH sides.
-  *
-  * State per key: the live COUNTED multiset of each side — (payload ->
-  * live count) pairs, the InputSideHasNoUniqueKey state shape Flink keeps
-  * (JoinRecordStateView's MapState[row, cnt]). Retraction lookup is O(1)
-  * in a hash map (was Seq.indexOf + patch, O(live) per retraction — the
-  * round-2 verdict's What's-wrong #3); per-batch cost is O(rows + live)
-  * from state (de)serialization, the floor for GroupState-backed operators.
-  * Because the join condition is the key itself, every left row of a key
-  * matches every live right row, so Flink's per-record association count
-  * degenerates to the other side's total live count — tracked as one
-  * integer, not per row.
-  *
-  * Emission order within a micro-batch follows the union's iteration
-  * order; the NET changelog (counts of +I minus -D per joined row) is
-  * order-independent — the property the specs pin against a batch join
-  * of the end states.
-  */
-object StreamJoin {
+/** Test-only flatMapGroupsWithState references for the operators whose
+  * single implementation is a transformWithState processor: the
+  * retractable top-N ([[RetractTws]]) and the four changelog stream
+  * joins ([[StreamJoinTws]]). Each body is the GroupState fold that used
+  * to ship beside the port, kept verbatim so the equality specs
+  * (RetractTwsSpec, StreamJoinTwsSpec) still replay every script against
+  * an independent implementation on the default state store provider. */
+object FmgwsReference {
   import Cdc.{Delete, Insert, UpdateAfter}
+  import Retract.{isAdd, isRetract}
 
-  import Retract.isAdd
+  /** Retractable top-N per key over a changelog of
+    * (key, row_kind, score, payload). A retraction (-U/-D) removes one
+    * matching (score, payload) instance; the refreshed top-N — including
+    * rows BACKFILLED from below the old cut — is emitted whenever it
+    * changes, as (key, rank, score, payload). */
+  def retractableTopN[K: Encoder](
+      ds: Dataset[(K, String, Double, String)], n: Int)(
+      implicit e1: Encoder[Seq[(Double, String, Int)]],
+      e2: Encoder[(K, Int, Double, String)]): Dataset[(K, Int, Double, String)] = {
+    // live state is a COUNTED multiset (score, payload) -> live count, the
+    // MapState[row, cnt] shape of Flink's JoinRecordStateView/dataState:
+    // retraction lookup is O(1) instead of Seq.indexOf's O(live).
+    def topOf(live: Iterable[(Double, String, Int)]): Seq[(Double, String)] =
+      live.toSeq.sortBy { case (score, payload, _) => (-score, payload) }
+        .iterator.flatMap { case (s, p, c) => Iterator.fill(c)((s, p)) }
+        .take(n).toSeq
 
-  /** Counted-multiset live state per side, (de)serialized as (payload,
-    * count) pairs. */
-  private type Counted[T] = Seq[(T, Int)]
+    def update(key: K, rows: Iterator[(K, String, Double, String)],
+        state: GroupState[Seq[(Double, String, Int)]]): Iterator[(K, Int, Double, String)] = {
+      val before = state.getOption.getOrElse(Seq.empty)
+      val live = scala.collection.mutable.LinkedHashMap.from(
+        before.map { case (s, p, c) => ((s, p), c) })
+      rows.foreach { case (_, kind, score, payload) =>
+        if (isAdd(kind))
+          live.updateWith((score, payload))(c => Some(c.getOrElse(0) + 1))
+        else if (isRetract(kind)) live.get((score, payload)).foreach { c =>
+          if (c == 1) live.remove((score, payload))
+          else live.update((score, payload), c - 1)
+        }
+      }
+      val after = live.toSeq.map { case ((s, p), c) => (s, p, c) }
+      if (after.isEmpty) state.remove() else state.update(after)
+      val (oldTop, newTop) = (topOf(before), topOf(after))
+      if (newTop == oldTop) Iterator.empty
+      else newTop.iterator.zipWithIndex.map { case ((score, payload), i) =>
+        (key, i + 1, score, payload)
+      }
+    }
+
+    ds.groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
+  }
+
+  /** [[retractableTopN]] with an explicit DOWNSTREAM CHANGELOG — the
+    * full RetractableTopNFunction emit contract
+    * (rank/RetractableTopNFunction.java:56 emits updates AND deletes so
+    * a sink keyed by (key, rank) stays exact): whenever a key's top-N
+    * changes, the refreshed ranks emit as ("+U", key, rank, score,
+    * payload) and ranks the refreshed top no longer covers (the top
+    * SHRANK — a retraction below N with nothing to backfill) emit
+    * ("-D", key, rank, oldScore, oldPayload). Feeding an upsert sink
+    * keyed by (key, rank) therefore always materializes to exactly the
+    * current top-N. */
+  def retractableTopNChangelog[K: Encoder](
+      ds: Dataset[(K, String, Double, String)], n: Int)(
+      implicit e1: Encoder[Seq[(Double, String, Int)]],
+      e2: Encoder[(String, K, Int, Double, String)])
+      : Dataset[(String, K, Int, Double, String)] = {
+    def topOf(live: Iterable[(Double, String, Int)]): Seq[(Double, String)] =
+      live.toSeq.sortBy { case (score, payload, _) => (-score, payload) }
+        .iterator.flatMap { case (s, p, c) => Iterator.fill(c)((s, p)) }
+        .take(n).toSeq
+
+    def update(key: K, rows: Iterator[(K, String, Double, String)],
+        state: GroupState[Seq[(Double, String, Int)]])
+        : Iterator[(String, K, Int, Double, String)] = {
+      val before = state.getOption.getOrElse(Seq.empty)
+      val live = scala.collection.mutable.LinkedHashMap.from(
+        before.map { case (s, p, c) => ((s, p), c) })
+      rows.foreach { case (_, kind, score, payload) =>
+        if (isAdd(kind))
+          live.updateWith((score, payload))(c => Some(c.getOrElse(0) + 1))
+        else if (isRetract(kind)) live.get((score, payload)).foreach { c =>
+          if (c == 1) live.remove((score, payload))
+          else live.update((score, payload), c - 1)
+        }
+      }
+      val after = live.toSeq.map { case ((s, p), c) => (s, p, c) }
+      if (after.isEmpty) state.remove() else state.update(after)
+      val (oldTop, newTop) = (topOf(before), topOf(after))
+      if (newTop == oldTop) Iterator.empty
+      else {
+        val refreshed = newTop.iterator.zipWithIndex.collect {
+          case ((score, payload), i)
+              if oldTop.lift(i) != Some((score, payload)) =>
+            (UpdateAfter, key, i + 1, score, payload)
+        }
+        val shrunk = oldTop.iterator.zipWithIndex.drop(newTop.size).map {
+          case ((score, payload), i) => (Delete, key, i + 1, score, payload)
+        }
+        refreshed ++ shrunk
+      }
+    }
+
+    // APPEND mode: the emitted rows are changelog DELTAS (+U/-D), not
+    // keyed updates — and append is what lets this operator CHAIN
+    // downstream of ChangelogNormalize (Spark allows multiple
+    // flatMapGroupsWithState only when all run in append mode)
+    ds.groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
+  }
 
   /** Shared four-way join core. `padLeft` = emit (l, NULL) rows while a
     * left row has no match (left/full outer); `padRight` symmetric. */
@@ -106,25 +180,11 @@ object StreamJoin {
     out.result().iterator
   }
 
-  private[streaming] def tagged[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
-      implicit etag: Encoder[(Int, K, String, Option[L], Option[R])])
-      : Dataset[(Int, K, String, Option[L], Option[R])] =
-    left.map(r => (0, r._1, r._2, Option(r._3), Option.empty[R]))
-      .union(right.map(r => (1, r._1, r._2, Option.empty[L], Option(r._3))))
-
   /** Inner join of two keyed changelogs. Input rows: (key, row_kind,
     * payload). Output rows: (key, row_kind, leftPayload, rightPayload)
-    * with row_kind in {+I, -D}.
-    *
-    * Since r15 this is the fleet-migration FRONT of the stream-stream
-    * join: when the session's state-store provider is RocksDB (the
-    * transformWithState prerequisite) the call routes onto the
-    * [[StreamJoinTws]] point-write port — per-entry MapState access
-    * instead of the whole-GroupState fold below, which remains the
-    * provider-agnostic fallback. Net changelog identical either way
-    * (spec-pinned); per-batch emission ORDER may differ (MapState
-    * iteration order is store-defined). */
+    * with row_kind in {+I, -D}. Net changelog identical to
+    * [[StreamJoinTws.innerJoin]]; per-batch emission ORDER may differ
+    * (MapState iteration order is store-defined). */
   def innerJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -132,9 +192,7 @@ object StreamJoin {
       emid: Encoder[(K, String, Option[L], Option[R])],
       es: Encoder[(Seq[(L, Int)], Seq[(R, Int)])],
       eo: Encoder[(K, String, L, R)]): Dataset[(K, String, L, R)] = {
-    if (Retract.rocksDbActive(left.sparkSession))
-      return StreamJoinTws.innerJoin(left, right)
-    tagged(left, right).groupByKey(_._2)
+    StreamJoinTws.tagged(left, right).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, rows: Iterator[(Int, K, String, Option[L], Option[R])],
             state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
@@ -144,8 +202,7 @@ object StreamJoin {
   }
 
   /** LEFT OUTER join: output rows (key, row_kind, leftPayload,
-    * Option(rightPayload)). RocksDB active routes onto the
-    * [[StreamJoinTws]] point-write port (see [[innerJoin]]). */
+    * Option(rightPayload)). */
   def leftOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -153,9 +210,7 @@ object StreamJoin {
       emid: Encoder[(K, String, Option[L], Option[R])],
       es: Encoder[(Seq[(L, Int)], Seq[(R, Int)])],
       eo: Encoder[(K, String, L, Option[R])]): Dataset[(K, String, L, Option[R])] = {
-    if (Retract.rocksDbActive(left.sparkSession))
-      return StreamJoinTws.leftOuterJoin(left, right)
-    tagged(left, right).groupByKey(_._2)
+    StreamJoinTws.tagged(left, right).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, rows: Iterator[(Int, K, String, Option[L], Option[R])],
             state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
@@ -165,8 +220,7 @@ object StreamJoin {
   }
 
   /** RIGHT OUTER join: output rows (key, row_kind, Option(leftPayload),
-    * rightPayload). RocksDB active routes onto the [[StreamJoinTws]]
-    * point-write port (see [[innerJoin]]). */
+    * rightPayload). */
   def rightOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
@@ -174,9 +228,7 @@ object StreamJoin {
       emid: Encoder[(K, String, Option[L], Option[R])],
       es: Encoder[(Seq[(L, Int)], Seq[(R, Int)])],
       eo: Encoder[(K, String, Option[L], R)]): Dataset[(K, String, Option[L], R)] = {
-    if (Retract.rocksDbActive(left.sparkSession))
-      return StreamJoinTws.rightOuterJoin(left, right)
-    tagged(left, right).groupByKey(_._2)
+    StreamJoinTws.tagged(left, right).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, rows: Iterator[(Int, K, String, Option[L], Option[R])],
             state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
@@ -187,19 +239,14 @@ object StreamJoin {
 
   /** FULL OUTER join: output rows (key, row_kind, Option(leftPayload),
     * Option(rightPayload)) — pads on both sides, each retracted the moment
-    * the row gains its first match and restored when it loses its last.
-    * RocksDB active routes onto the [[StreamJoinTws]] point-write port
-    * (see [[innerJoin]]). */
+    * the row gains its first match and restored when it loses its last. */
   def fullOuterJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
       implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
       etag: Encoder[(Int, K, String, Option[L], Option[R])],
       es: Encoder[(Seq[(L, Int)], Seq[(R, Int)])],
       eo: Encoder[(K, String, Option[L], Option[R])]): Dataset[(K, String, Option[L], Option[R])] = {
-    // eo doubles as the TWS port's mid encoder (same type here)
-    if (Retract.rocksDbActive(left.sparkSession))
-      return StreamJoinTws.fullOuterJoin(left, right)(ek, el, er, etag, eo)
-    tagged(left, right).groupByKey(_._2)
+    StreamJoinTws.tagged(left, right).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, rows: Iterator[(Int, K, String, Option[L], Option[R])],
             state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
