@@ -1,19 +1,65 @@
 package graft
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+
+/** Per-query timing at SPARK_GRAFT_SF_DIR. Every timed pass prints a
+  * `[bench] <query> pass=<p> ...` line with its scheduler counters, each
+  * streaming micro-batch an `[mb]` line, and the run ends with ONE
+  * `{"metric":"total",...}` JSON line. */
 object Bench {
 
-  /** JDK-17 module opens Spark needs when launched outside spark-submit —
-    * must match build.sbt's list so the forked isolation JVMs (below) get
-    * the same runtime as the sbt-forked parent. */
-  private val Jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** Scheduler counters of one query pass: jobs, stages and tasks carry
+    * the fixed per-job coordination cost, summed task time the compute. */
+  private final class Counters extends SparkListener {
+    val jobs, stages, tasks, taskMs = new AtomicLong
+    def reset(): Unit = Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet(): Unit
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet(): Unit
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration): Unit
+    }
+  }
+
+  /** One `[mb]` line per streaming micro-batch: input rows, and per state
+    * operator its rows, updates and commit time. The session-level
+    * listener sees every query a streaming gate starts. */
+  private object MicroBatches extends StreamingQueryListener {
+    import StreamingQueryListener._
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      val p = e.progress
+      val so = p.stateOperators.map(o =>
+        s"${o.operatorName}:rows=${o.numRowsTotal}/upd=${o.numRowsUpdated}" +
+          s"/commitMs=${o.commitTimeMs}").mkString(" | ")
+      println(s"[mb] id=${p.batchId} rows=${p.numInputRows} " +
+        s"durMs=${p.durationMs} state={$so}")
+    }
+  }
+
+  /** Times one pass of a query. The clock covers the query only; the
+    * `[bench]` line prints after the listener bus has drained, so its
+    * counters hold every event of the pass. */
+  private def timedPass(spark: SparkSession, counters: Counters, name: String,
+      pass: Int)(run: => Unit): Either[Throwable, Double] = {
+    counters.reset()
+    val t0 = System.nanoTime()
+    val r = try { run; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
+    try BusDrain(spark) catch { case _: java.util.concurrent.TimeoutException => () }
+    val outcome = r.fold(e => s"error=${e.getClass.getSimpleName}", t => f"wall_s=$t%.3f")
+    println(f"[bench] $name pass=$pass $outcome jobs=${counters.jobs.get} " +
+      f"stages=${counters.stages.get} tasks=${counters.tasks.get} " +
+      f"task_s=${counters.taskMs.get / 1000.0}%.2f")
+    r
+  }
 
   /** Re-run one query in a FRESH JVM (own SparkSession, own JIT, own code
     * cache) and return its best-of-3 seconds. Same-JVM isolation after a
@@ -22,23 +68,21 @@ object Bench {
     * clearCache + GC (round-4 finding: q112 19.6 s in-JVM vs 2.2 s fresh).
     * The child is this same main with a single-query filter and its own
     * warm-up, so pass-1 compilation stays outside the reported min. */
-  private def isolatedFreshJvm(
-      name: String, sfDir: String, cpus: String): Option[Double] = {
+  private def isolatedFreshJvm(name: String): Option[Double] = {
     try {
       val cp = System.getProperty("java.class.path")
       if (cp == null || !cp.contains("spark")) return None // not a full fork classpath
       val javaBin = new java.io.File(
         new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-      val xmx = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-      val cmd: Seq[String] = Seq(javaBin) ++ Jdk17AddOpens ++ Seq(
-        s"-Xmx$xmx", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC", "-cp", cp, "graft.Bench")
+      // The child runs on this JVM's own flags (build.sbt's javaOptions:
+      // module opens, heap, -D confs) and inherits its environment.
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.toSeq
+      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_ONLY", name)
       pb.environment().put("SPARK_GRAFT_PASSES", "3")
       pb.environment().put("SPARK_GRAFT_ISOLATE_N", "0")
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
       pb.redirectErrorStream(true)
       val proc = pb.start()
       // Watchdog: a wedged child must not stall the whole benchmark.
@@ -62,19 +106,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warm-up outside the timed region.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
+    spark.streams.addListener(MicroBatches)
     // Optional comma-separated name filter for targeted perf iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
@@ -87,18 +125,18 @@ object Bench {
       // A query that throws is an ERROR, never a timing sample — a broken
       // query must not pollute the benchmark with its time-to-failure.
       var err: Option[String] = None
-      val times = (1 to math.max(1, passes)).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => err = Some(e.getClass.getSimpleName); None }
+      val times = (1 to math.max(1, passes)).flatMap { p =>
+        timedPass(spark, counters, name, p)(fn(spark, sfDir).count()) match {
+          case Right(t) => Some(t)
+          case Left(e) => err = Some(e.getClass.getSimpleName); None
+        }
       }
-      // Release blocks the query leaked into the BlockManager (cache /
-      // localCheckpoint survive the action): accumulated block memory was
-      // the main in-suite tail inflation — heavy shuffles later in the
-      // suite spilled under pressure created by EARLIER queries. Each
-      // query still pays its own persistence cost inside its timed region.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // Release blocks the query leaked into the BlockManager: accumulated
+      // block memory was the main in-suite tail inflation — heavy shuffles
+      // later in the suite spilled under pressure created by EARLIER
+      // queries. Each query still pays its own persistence cost inside its
+      // timed region.
+      Engine.release(spark)
       (name, times.minOption, err)
     }
     // Self-defending tail: the full suite self-contends on a shared
@@ -113,15 +151,12 @@ object Bench {
     val slowest = results.collect { case (n, Some(t), _) => (n, t) }
       .sortBy(-_._2).take(math.max(0, isolateN)).map(_._1)
     val isolated = slowest.map { name =>
-      name -> isolatedFreshJvm(name, sfDir, cpus).getOrElse {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      name -> isolatedFreshJvm(name).getOrElse {
+        Engine.release(spark)
         System.gc()
         val fn = SparkEntry.queries(name)
-        val times = (1 to 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => None }
+        val times = (1 to 3).flatMap { p =>
+          timedPass(spark, counters, name, p)(fn(spark, sfDir).count()).toOption
         }
         times.minOption.getOrElse(-1.0)
       }

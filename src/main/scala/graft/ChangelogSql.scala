@@ -1528,18 +1528,8 @@ object ChangelogSql {
         -> "true",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
         -> "false")
-    val prevProvider = spark.conf.getOption(provider._1)
     val perfToSet = perf.filter(kv => spark.conf.getOption(kv._1).isEmpty)
-    spark.conf.set(provider._1, provider._2)
-    perfToSet.foreach { case (k, v) => spark.conf.set(k, v) }
-    try start
-    finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(provider._1, v)
-        case None => spark.conf.unset(provider._1)
-      }
-      perfToSet.foreach { case (k, _) => spark.conf.unset(k) }
-    }
+    graft.util.Conf.scoped(spark, provider +: perfToSet: _*)(start)
   }
 
   private def withStateSizing[T](spark: SparkSession)(start: => T): T =
@@ -1550,15 +1540,8 @@ object ChangelogSql {
     graft.util.StartLock.locked {
       spark.conf.getOption("graft.stream.statePartitions") match {
         case None => start
-        case Some(n) =>
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.getOption(key)
-          spark.conf.set(key, n.trim.toInt.toString)
-          try start
-          finally prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
+        case Some(n) => graft.util.Conf.scoped(spark,
+          "spark.sql.shuffle.partitions" -> n.trim.toInt.toString)(start)
       }
     }
 

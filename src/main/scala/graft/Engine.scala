@@ -9,7 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  /** Local cores a session uses by default: `SPARK_GRAFT_CPUS`, else
+    * every available processor. */
+  private lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session factory: every main and the test suite build here. */
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -25,6 +31,13 @@ object Engine {
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s
+  }
+
+  /** Releases what a query left in the BlockManager: cached tables and
+    * every persistent RDD (cache and localCheckpoint survive the action). */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
   /** Register every fixture table as a temp view (events with the derived

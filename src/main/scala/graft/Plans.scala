@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round measurement tool (spark_optimization_guide §1.1/§7.2):
@@ -17,16 +16,7 @@ object Plans {
     require(args.length >= 3, "usage: Plans <sfDir> <outDir> <tag> [query...]")
     val (sfDir, outDir, tag) = (args(0), args(1), args(2))
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -40,11 +30,7 @@ object Plans {
           println(s"[plans] wrote $name")
         } catch { case e: Throwable =>
           System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        } finally {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        } finally Engine.release(spark)
       }
     spark.stop()
   }

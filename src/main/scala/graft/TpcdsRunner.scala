@@ -36,18 +36,11 @@ object TpcdsRunner {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: TpcdsRunner <dataDir> <queryDir> <outDir>")
     val Array(dataDir, queryDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // TPC-DS answer-set division semantics: x/0 is NULL (Hive mode, and
-      // what DuckDB computes for DECIMAL/0) — ANSI mode would instead
-      // abort query90 at small scale factors where the pm window is empty
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
+    // TPC-DS answer-set division semantics: x/0 is NULL (Hive mode, and
+    // what DuckDB computes for DECIMAL/0) — ANSI mode would instead
+    // abort query90 at small scale factors where the pm window is empty
+    spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
     openTables(spark, dataDir)
     Files.createDirectories(Paths.get(outDir))
@@ -85,18 +78,10 @@ object TpcdsRunner {
       }
     }
     val errJson = errors.result()
-      .map { case (n, m) => s""""$n":${ujsonEscape(m)}""" }
+      .map { case (n, m) => s""""$n":${Verify.jsonString(m)}""" }
       .mkString("{", ",", "}")
     Files.write(Paths.get(outDir, "errors.json"), errJson.getBytes("UTF-8"))
     println(s"[tpcds] done: $ok/${queryFiles.length} executed")
     spark.stop()
   }
-
-  private def ujsonEscape(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

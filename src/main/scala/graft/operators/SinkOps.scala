@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Engine, GQuery, QueryModule, Tables}
+import graft.util.Conf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,16 +44,8 @@ object SinkOps extends QueryModule {
     * stateful operator, not one per batch-sized shuffle partition. A
     * production job sizes the same knob UP for large keyspaces. */
   private def withSmallStreamState[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "graft.stream.statePartitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "8")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    Conf.scoped(s, "graft.stream.statePartitions" -> "8")(body)
 
   /** MERGE each commit round's MULTI-TABLE appends into one micro-batch
     * (optimization guide §2.2 "fewer, larger"): a two-source continuous
@@ -65,16 +58,8 @@ object SinkOps extends QueryModule {
     * input and the gates materialize FINAL_STATE); measured on q163:
     * both commit rounds merge, round walls 3.4→2.8 s and 2.1→1.6 s. */
   private def withCommitCoalescedTrigger[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "graft.stream.triggerIntervalMs"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "1000")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    Conf.scoped(s, "graft.stream.triggerIntervalMs" -> "1000")(body)
 
   sealed trait Policy
   case object ErrorPolicy extends Policy

@@ -1,0 +1,54 @@
+package graft
+
+import graft.util.Conf
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The suite's session comes from the engine's one factory, and
+  * `Conf.scoped` restores what it pinned. */
+class SessionFactorySpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  test("TestSpark.spark carries Engine.session's conf") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.timeType.enabled") == "true")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.master == "local[4]")
+  }
+
+  test("graft functions resolve in a new session through the extensions") {
+    val fresh = spark.newSession()
+    val key = fresh.sql("SELECT graft_sort_key(7L, 'k', true) AS k")
+      .collect().head.getString(0)
+    assert(key.nonEmpty)
+  }
+
+  test("Conf.scoped restores a prior value and unsets an absent key") {
+    val (set, absent) = ("graft.test.scoped.set", "graft.test.scoped.absent")
+    spark.conf.set(set, "before")
+    try {
+      val seen = Conf.scoped(spark, set -> "inside", absent -> "pinned") {
+        (spark.conf.get(set), spark.conf.get(absent))
+      }
+      assert(seen == ("inside", "pinned"))
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(absent).isEmpty)
+    } finally spark.conf.unset(set)
+  }
+
+  test("Conf.scoped restores when the body throws") {
+    val (set, absent) = ("graft.test.scoped.set", "graft.test.scoped.absent")
+    spark.conf.set(set, "before")
+    try {
+      intercept[IllegalStateException] {
+        Conf.scoped(spark, set -> "inside", absent -> "pinned") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(absent).isEmpty)
+    } finally spark.conf.unset(set)
+  }
+}

@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole ScalaTest run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val s = Engine.session("local[4]", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -24,15 +15,7 @@ object TestSpark {
   /** Runs `body` with the RocksDB state store provider (the
     * transformWithState runtime), restoring the previous provider after —
     * shared by every TWS-driving spec. */
-  def withRocksDB[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDB[T](body: => T): T =
+    graft.util.Conf.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 }
