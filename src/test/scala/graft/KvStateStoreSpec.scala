@@ -126,6 +126,27 @@ class KvStateStoreSpec extends AnyFunSuite {
     assert(kv.get("k".getBytes).isEmpty)
   }
 
+  test("kv scan: a segment prefix reads its segment, a bare prefix spans segments") {
+    val kv = InMemoryKvService.namespace("spec-scan")
+    Seq("v1/a", "v1/b", "v10/a", "w1/a", "v1", "v1x").foreach(k => kv.put(k.getBytes, k.getBytes))
+    def keys(prefix: String): Set[String] =
+      kv.scan(prefix.getBytes).map { case (k, v) =>
+        assert(new String(v) == new String(k), "scan pairs each key with its value")
+        new String(k)
+      }.toSet
+    assert(keys("v1/") == Set("v1/a", "v1/b"), "v1/ must exclude v10/ cells")
+    assert(keys("v1/a") == Set("v1/a"))
+    assert(keys("v1") == Set("v1/a", "v1/b", "v10/a", "v1", "v1x"))
+    assert(keys("") == Set("v1/a", "v1/b", "v10/a", "w1/a", "v1", "v1x"))
+    assert(kv.get("v1".getBytes).map(new String(_)).contains("v1"), "keys with no '/' read back")
+    kv.delete("v1".getBytes)
+    kv.delete("v1/a".getBytes)
+    kv.delete("v1/b".getBytes)
+    assert(keys("v1/").isEmpty)
+    assert(keys("v1") == Set("v10/a", "v1x"))
+    assert(InMemoryKvService.size("spec-scan") == 3)
+  }
+
   // -- direct provider tests: delta-commit write complexity + compaction --
 
   import org.apache.hadoop.conf.Configuration
@@ -142,9 +163,9 @@ class KvStateStoreSpec extends AnyFunSuite {
   private def krow(i: Long): UnsafeRow = kproj(InternalRow(i)).copy()
   private def vrow(i: Long): UnsafeRow = vproj(InternalRow(i)).copy()
 
-  private def freshProvider(root: String): KvStateStoreProvider = {
+  private def freshProvider(root: String, valueSchema: StructType = vs): KvStateStoreProvider = {
     val p = new KvStateStoreProvider
-    p.init(StateStoreId(root, 0L, 0), ks, vs, NoPrefixKeyStateEncoderSpec(ks),
+    p.init(StateStoreId(root, 0L, 0), ks, valueSchema, NoPrefixKeyStateEncoderSpec(ks),
       false, StateStoreConf.empty, new Configuration(), false, None)
     p
   }
@@ -233,5 +254,109 @@ class KvStateStoreSpec extends AnyFunSuite {
     // latest value of each key wins across layers
     assert(s.get(krow(17 % 5), "default").getLong(0) == 17L)
     s.abort()
+  }
+
+  private def entries(s: StateStore): Map[Long, Long] = {
+    val it = s.iterator("default")
+    val out = Map.newBuilder[Long, Long]
+    while (it.hasNext) { val p = it.next(); out += p.key.getLong(0) -> p.value.getLong(0) }
+    out.result()
+  }
+
+  test("two stores opened on the same version are isolated") {
+    InMemoryKvService.clearAll()
+    val p = freshProvider("/spec-isolated")
+    val s0 = p.getStore(0, None)
+    (1L to 5L).foreach(i => s0.put(krow(i), vrow(i), "default"))
+    assert(s0.commit() == 1L)
+    val a = p.getStore(1, None)
+    val b = p.getStore(1, None)
+    a.put(krow(1), vrow(100), "default")
+    a.remove(krow(2), "default")
+    a.put(krow(6), vrow(6), "default")
+    assert(a.commit() == 2L)
+    // b still reads version 1, plus its own writes only
+    b.put(krow(3), vrow(33), "default")
+    assert(entries(b) == Map(1L -> 1L, 2L -> 2L, 3L -> 33L, 4L -> 4L, 5L -> 5L))
+    b.abort()
+    assert(entries(p.getStore(2, None)) == Map(1L -> 100L, 3L -> 3L, 4L -> 4L, 5L -> 5L, 6L -> 6L))
+    assert(entries(p.getStore(1, None)) == (1L to 5L).map(i => i -> i).toMap)
+  }
+
+  test("an iterator opened before remove() yields the pre-remove entries") {
+    InMemoryKvService.clearAll()
+    val p = freshProvider("/spec-iter")
+    val s = p.getStore(0, None)
+    (1L to 10L).foreach(i => s.put(krow(i), vrow(i * 10), "default"))
+    val it = s.iterator("default")
+    (1L to 5L).foreach(i => s.remove(krow(i), "default"))
+    val seen = Map.newBuilder[Long, Long]
+    while (it.hasNext) { val pr = it.next(); seen += pr.key.getLong(0) -> pr.value.getLong(0) }
+    assert(seen.result() == (1L to 10L).map(i => i -> i * 10).toMap)
+    assert(s.get(krow(1), "default") == null)
+    assert(entries(s) == (6L to 10L).map(i => i -> i * 10).toMap)
+    s.abort()
+  }
+
+  test("metrics equal the recomputed key count and value bytes, from cache and reload") {
+    InMemoryKvService.clearAll()
+    val ss = StructType(Seq(StructField("s", StringType)))
+    val sproj = UnsafeProjection.create(ss)
+    def srow(n: Int): UnsafeRow =
+      sproj(InternalRow(org.apache.spark.unsafe.types.UTF8String.fromString("x" * n))).copy()
+    def check(s: StateStore): Unit = {
+      var keys, bytes = 0L
+      val it = s.iterator("default")
+      while (it.hasNext) { keys += 1; bytes += it.next().value.getSizeInBytes }
+      assert(s.metrics.numKeys == keys)
+      assert(s.metrics.memoryUsedBytes == bytes)
+    }
+    def churn(s: StateStore, salt: Int): Unit = {
+      (1 to 30).foreach(i => s.put(krow(i), srow(i + salt), "default"))
+      (1 to 30 by 3).foreach(i => s.put(krow(i), srow(i * 7 % 50), "default")) // overwrites
+      (2 to 40 by 4).foreach(i => s.remove(krow(i), "default")) // hits and misses
+      check(s)
+    }
+    val p = freshProvider("/spec-metrics", ss)
+    val s1 = p.getStore(0, None)
+    churn(s1, 0)
+    assert(s1.commit() == 1L)
+    val fromCache = p.getStore(1, None)
+    check(fromCache)
+    churn(fromCache, 5)
+    assert(fromCache.commit() == 2L)
+    val reloaded = freshProvider("/spec-metrics", ss).getStore(2, None)
+    check(reloaded)
+    churn(reloaded, 11)
+    reloaded.abort()
+  }
+
+  test("a full commit reads O(CompactEvery) metas, however many versions came before") {
+    InMemoryKvService.clearAll()
+    val p = freshProvider("/spec-reads")
+    val every = KvStateStoreProvider.CompactEvery
+    var v = 0L
+    var ns = ""
+    val readsAt = scala.collection.mutable.Map.empty[Long, Long]
+    while (v < 1000L) {
+      val before = if (ns.isEmpty) 0L else InMemoryKvService.readCount(ns)
+      val s = p.getStore(v, None)
+      s.put(krow(v % 7), vrow(v), "default")
+      v = s.commit()
+      if (ns.isEmpty) ns = InMemoryKvService.namespaces.find(_.contains("spec-reads")).get
+      readsAt(v) = InMemoryKvService.readCount(ns) - before
+    }
+    assert(1000L % every == 0, "v1000 must be a full layer")
+    assert(readsAt(1000L) == readsAt(3 * every),
+      s"full-commit reads grow with history: ${readsAt(3 * every)} at v${3 * every}, " +
+        s"${readsAt(1000L)} at v1000")
+    assert(readsAt(1000L) <= 4 * every, s"full commit read ${readsAt(1000L)} times")
+    // the bounded walk still prunes below the previous full layer (v992)
+    val raw = InMemoryKvService.namespace(ns)
+    assert(raw.get("meta/991".getBytes).isEmpty, "layer v991 should be pruned")
+    assert(raw.get("meta/992".getBytes).map(_(0).toChar).contains('F'))
+    val reloaded = freshProvider("/spec-reads").getStore(1000L, None)
+    assert(entries(reloaded) == (993L to 999L).map(i => i % 7 -> i).toMap)
+    reloaded.abort()
   }
 }
