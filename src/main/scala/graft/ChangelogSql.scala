@@ -78,7 +78,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * so a retraction passes the filter iff the row it retracts did.
   *
   * UPSERT MODE: a relation DECLARED upsert (`graft.upsert.keys` catalog
-  * property — the encoding [[streamInsert]] writes to its own sinks and
+  * property — the encoding the continuous routes write to their sinks and
   * Flink's upsert-kafka tables carry: +U/-D keyed by those columns, no
   * -U) normalizes BEFORE any read ([[normalizeUpsertRels]], the
   * StreamExecChangelogNormalize role): keep-last per key by the commit
@@ -91,6 +91,15 @@ import java.util.concurrent.atomic.AtomicInteger
   * normalization. The STREAM form of the same operator is
   * [[streaming.StatefulOps.normalizeUpsert]] (+I / -U,+U / -D
   * transition emission from keyed state).
+  *
+  * CONTINUOUS: `INSERT INTO sink SELECT …` over changelogs
+  * (Engine.sqlStreamInsert) is the streaming form. [[route]] parses the
+  * body ONCE into its [[Route]] — top-N over a subquery, top-N,
+  * aggregate over an aggregate, COUNT(DISTINCT) aggregate, sign-algebra
+  * aggregate, aggregate over a join, join; first match wins — and
+  * [[start]] lowers it: every aggregate level through [[aggLevel]],
+  * every query through [[startChangelog]]. EXPLAIN CHANGELOG_MODE over
+  * the INSERT prints [[Route.line]].
   */
 object ChangelogSql {
 
@@ -98,8 +107,12 @@ object ChangelogSql {
 
   private def blank(s: String) = graft.util.SqlSplit.blankLiterals(s)
 
+  /** An IllegalArgumentException thrower whose message names `what`. */
+  private def failWith(what: String): String => Nothing =
+    msg => throw new IllegalArgumentException(s"$what: $msg")
+
   /** Top-level clause offsets (paren depth 0 of the blanked text). */
-  private case class Clauses(selectList: String, relation: String,
+  private[graft] case class Clauses(selectList: String, relation: String,
       where: Option[String], groupBy: Option[String],
       having: Option[String], orderBy: Option[String],
       limit: Option[String])
@@ -281,18 +294,10 @@ object ChangelogSql {
   }
 
   private def matchParen(b: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < b.length) {
-      b(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(
+    val close = graft.util.SqlSplit.matchParen(b, open)
+    if (close < 0) throw new IllegalArgumentException(
       s"unbalanced parentheses in SQL statement at offset $open")
+    close
   }
 
   /** Rewrite every supported-aggregate / retractable-UDA call in `list`
@@ -430,11 +435,11 @@ object ChangelogSql {
 
   /** The relation's declared UPSERT key columns, when it is an
     * UPSERT-mode changelog (row_kind ∈ {+U, -D}, keyed — the encoding
-    * [[streamInsert]] writes and Flink's upsert-kafka tables carry).
+    * the continuous routes write and Flink's upsert-kafka tables carry).
     * Mode is declared where Flink declares it — on the TABLE: the
-    * `graft.upsert.keys` catalog property (streamInsert records it on
-    * its sinks automatically). Resolution is BASE-AWARE: a DDL-declared
-    * connector table persists its properties on `__<rel>_base` (the
+    * `graft.upsert.keys` catalog property (the upsert sink writer
+    * records it on plain sinks automatically). Resolution is BASE-AWARE:
+    * a DDL-declared connector table persists its properties on `__<rel>_base` (the
     * user-facing name is a props-less catalog view), so the lookup goes
     * through [[WatermarkDdl.tableOptions]] — which checks the base
     * first — and falls back to the direct table metadata for plain
@@ -460,9 +465,9 @@ object ChangelogSql {
       }.toOption.flatten)
 
   /** Columns of `rel` DECLARED monotonically non-decreasing per upsert
-    * key (`graft.monotone.cols` — recorded by [[streamInsert]] on its
-    * sink when the aggregate provably preserves monotonicity: COUNT/MAX
-    * items over an insert-only input with no HAVING). The reference
+    * key (`graft.monotone.cols` — recorded by the sign-algebra route on
+    * its sink when the aggregate provably preserves monotonicity:
+    * COUNT/MAX items over an insert-only input with no HAVING). The reference
     * derives the same fact in the planner as RelModifiedMonotonicity
     * (RankProcessStrategy.java picks UpdateFastStrategy from it). */
   private[graft] def monotoneColsOf(
@@ -781,7 +786,7 @@ object ChangelogSql {
   /** One relation of a linear join chain. `joinType` (INNER/CROSS/LEFT/
     * RIGHT/FULL) is the join CONNECTING this relation to the accumulated
     * left part — None for the first relation; `on` its ON text. */
-  private case class ChainRel(name: String, alias: Option[String],
+  private[graft] case class ChainRel(name: String, alias: Option[String],
       joinType: Option[String], on: Option[String])
 
   private val JoinHeads = Set("JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS")
@@ -1206,6 +1211,10 @@ object ChangelogSql {
   private val LiveCol = "__graft_cl_live"
   private[graft] val SeqCol = "__graft_cl_seq"
 
+  /** The changelog encoding columns a continuous operator consumes. */
+  private def encodingCol(n: String): Boolean =
+    n == streaming.Cdc.RowKind || n == "cdc_ts" || n == SeqCol
+
   /** MIN/MAX with retraction: net count per VALUE; the result is the
     * extreme of positive-count values — Flink's
     * Min/MaxWithRetractAggFunction (flink-table-runtime
@@ -1309,10 +1318,6 @@ object ChangelogSql {
     }
   }
 
-  /** Does `select` parse as a changelog AGGREGATE over one bare
-    * row_kind-carrying relation — the statement shape [[streamInsert]]
-    * owns? (Raw projections of a changelog stream keep the plain
-    * append-insert path.) */
   /** The chain's single changelog relation, when `fromText` is either a
     * bare changelog relation or a linear join of exactly one changelog
     * with other relations. */
@@ -1332,22 +1337,22 @@ object ChangelogSql {
       }
     }
 
-  private[graft] def streamMatches(spark: SparkSession, select: String): Boolean =
-    parse(select).exists { c =>
-      changelogOfFrom(spark, c.relation) match {
-        case Some(_) =>
-          val aggish = blank(c.selectList) + " " +
-            c.having.map(blank).getOrElse("")
-          val all = aggish + " " + c.where.map(blank).getOrElse("") + " " +
-            c.groupBy.map(blank).getOrElse("") + " " + blank(c.relation)
-          // a statement reading row_kind/cdc_ts itself is a raw
-          // changelog passthrough — the plain append-insert path's job
-          val refsMeta = Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-            ("(?i)\\b" + m + "\\b").r.findFirstIn(all).isDefined)
-          !refsMeta && (c.groupBy.isDefined || callNames(aggish).exists(n =>
-            Supported(n) || retractableUda(n).isDefined))
-        case None => false
-      }
+  /** The sign-algebra route's test: a changelog AGGREGATE over one
+    * changelog relation, bare or joined to other relations, that does
+    * not read row_kind/cdc_ts itself (such a statement is a raw
+    * changelog passthrough — the plain append-insert path's job).
+    * Returns the relation chain and the changelog's index in it. */
+  private def signAggChain(
+      spark: SparkSession, c: Clauses): Option[(Seq[ChainRel], Int)] =
+    changelogOfFrom(spark, c.relation).filter { _ =>
+      val aggish = blank(c.selectList) + " " +
+        c.having.map(blank).getOrElse("")
+      val all = aggish + " " + c.where.map(blank).getOrElse("") + " " +
+        c.groupBy.map(blank).getOrElse("") + " " + blank(c.relation)
+      val refsMeta = Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
+        ("(?i)\\b" + m + "\\b").r.findFirstIn(all).isDefined)
+      !refsMeta && (c.groupBy.isDefined || callNames(aggish).exists(n =>
+        Supported(n) || retractableUda(n).isDefined))
     }
 
   /** Lower the SELECT of a continuous changelog aggregate onto one
@@ -1355,16 +1360,10 @@ object ChangelogSql {
     * columns are the user's select list plus a hidden boolean `LiveCol`
     * — false means the group emptied (or left the HAVING set) and the
     * sink must DELETE it; keys are the GROUP BY columns' OUTPUT names
-    * (the upsert key of the refreshed rows). */
-  private def streamAgg(
-      spark: SparkSession, select: String): (DataFrame, Seq[String], Seq[String]) = {
-    val c = parse(select).getOrElse(throw new IllegalArgumentException(
-      s"not a changelog aggregate statement: $select"))
-    val (chain, clIdx) = changelogOfFrom(spark, c.relation).getOrElse(
-      throw new IllegalArgumentException(
-        "streaming changelog aggregates read ONE changelog relation, " +
-          "bare or linearly joined to STATIC relations " +
-          s"(subqueries/multi-changelog have no rewrite); got FROM ${c.relation}"))
+    * (the upsert key of the refreshed rows). `chain(clIdx)` is the
+    * changelog relation [[signAggChain]] found. */
+  private def signAgg(spark: SparkSession, c: Clauses, chain: Seq[ChainRel],
+      clIdx: Int): (DataFrame, Seq[String], Seq[String]) = {
     val name = chain(clIdx).name
     // the ±1 sign algebra below assumes a RETRACT changelog (every
     // update carries its -U). A declared UPSERT relation is
@@ -1485,30 +1484,8 @@ object ChangelogSql {
     }
   }
 
-  /** Continuous `INSERT INTO sink SELECT <agg> FROM <changelog>` — the
-    * streaming statement form of this module. Each micro-batch appends
-    * the REFRESHED groups to `sink` as an upsert changelog: the user's
-    * columns plus `row_kind` (+U while the group lives, -D when it
-    * empties) and a commit sequence column — exactly what an external
-    * upsert sink (kafka-upsert, JDBC) consumes row by row; on the local
-    * parquet emulation the append IS the scalable write path and
-    * [[materializeUpsertSink]] is the reader's keep-last collapse
-    * (SinkUpsertMaterializer role). The sink table is created by the
-    * stream with this augmented schema. */
-  /** STATE-PARTITION sizing for a continuous job (Flink's per-operator
-    * parallelism lever, `setParallelism` / `table.exec.resource
-    * .default-parallelism`): when the session sets
-    * `graft.stream.statePartitions`, the query STARTS with that many
-    * shuffle partitions — Spark snapshots the value into the stream's
-    * checkpoint, so every stateful operator carries exactly that many
-    * state stores for its whole life — and the session value is
-    * restored right after. A small-state continuous job must not pay
-    * one state-store open/commit per BATCH-sized shuffle partition per
-    * micro-batch; a large one sizes up the same way. */
-  /** Pin the RocksDB state-store provider (the TWS operators' runtime
-    * requirement) plus its production I/O posture for the duration of a
-    * stream start, restoring the session conf afterwards. Must run under
-    * [[graft.util.StartLock]] (the caller's pin+start+restore section).
+  /** Pins for the RocksDB state-store provider (the TWS operators'
+    * runtime requirement) plus its production I/O posture.
     *
     * The two perf settings are the standard large-scale RocksDB posture
     * (optimization guide §1.2 step 3 / §5 — fix the I/O shape, not the
@@ -1519,7 +1496,7 @@ object ChangelogSql {
     * feeds the numRowsTotal metric (450k state updates in q163's first
     * batch each paid it). Both are set only when the session has not
     * explicitly chosen a value, so a user override wins. */
-  private def withRocksDbProvider[T](spark: SparkSession)(start: => T): T = {
+  private def rocksDbPins(spark: SparkSession): Seq[(String, String)] = {
     val provider = "spark.sql.streaming.stateStore.providerClass" ->
       ("org.apache.spark.sql.execution.streaming." +
         "state.RocksDBStateStoreProvider")
@@ -1528,22 +1505,22 @@ object ChangelogSql {
         -> "true",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
         -> "false")
-    val perfToSet = perf.filter(kv => spark.conf.getOption(kv._1).isEmpty)
-    graft.util.Conf.scoped(spark, provider +: perfToSet: _*)(start)
+    provider +: perf.filter(kv => spark.conf.getOption(kv._1).isEmpty)
   }
 
-  private def withStateSizing[T](spark: SparkSession)(start: => T): T =
-    // under StartLock: the pin, the start (which snapshots the conf into
-    // the query's cloned session synchronously), and the restore are one
-    // atomic section — a gateway operation starting concurrently on the
-    // same shared session can never snapshot this job's override
-    graft.util.StartLock.locked {
-      spark.conf.getOption("graft.stream.statePartitions") match {
-        case None => start
-        case Some(n) => graft.util.Conf.scoped(spark,
-          "spark.sql.shuffle.partitions" -> n.trim.toInt.toString)(start)
-      }
-    }
+  /** STATE-PARTITION sizing for a continuous job (Flink's per-operator
+    * parallelism lever, `setParallelism` / `table.exec.resource
+    * .default-parallelism`): when the session sets
+    * `graft.stream.statePartitions`, the query STARTS with that many
+    * shuffle partitions — Spark snapshots the value into the stream's
+    * checkpoint, so every stateful operator carries exactly that many
+    * state stores for its whole life — and the session value is
+    * restored right after. A small-state continuous job must not pay
+    * one state-store open/commit per BATCH-sized shuffle partition per
+    * micro-batch; a large one sizes up the same way. */
+  private def statePartitionPins(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getOption("graft.stream.statePartitions").toSeq.map(n =>
+      "spark.sql.shuffle.partitions" -> n.trim.toInt.toString)
 
   /** Micro-batch trigger for stream starts. Default (conf unset) keeps
     * the zero-interval continuous trigger.
@@ -1571,34 +1548,43 @@ object ChangelogSql {
       case None => w
     }
 
-  def streamInsert(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamInsert expects INSERT INTO <table> SELECT ..., got: $other")
+  /** Start `log` — a changelog frame: the sink's columns plus row_kind —
+    * as a continuous query in `outputMode`, handing every micro-batch,
+    * stamped with its commit sequence [[SeqCol]], to `write`. `rocksDb`
+    * pins the RocksDB provider ([[rocksDbPins]]); the state partitions
+    * follow [[statePartitionPins]]. Under [[graft.util.StartLock]] the
+    * pins, the start (which snapshots the conf into the query's cloned
+    * session synchronously) and the restore are one atomic section: a
+    * gateway operation starting concurrently on the same shared session
+    * can never snapshot this job's pins into ITS checkpoint. */
+  private def startChangelog(spark: SparkSession, log: DataFrame,
+      outputMode: String, write: (DataFrame, Long) => Unit, rocksDb: Boolean,
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.util.StartLock.locked {
+      val pins = (if (rocksDb) rocksDbPins(spark) else Nil) ++
+        statePartitionPins(spark)
+      graft.util.Conf.scoped(spark, pins: _*) {
+        withTrigger(spark, log.writeStream
+          .outputMode(outputMode)
+          .option("checkpointLocation", checkpointDir)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            write(batch.withColumn(SeqCol, lit(batchId)), batchId)
+          })
+          .start()
+      }
     }
-    val (df, keys, monotoneCols) = streamAgg(spark, select)
-    val write = upsertSinkWriter(spark, sink, keys, monotoneCols)
-    withStateSizing(spark) {
-      withTrigger(spark, df.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val log = batch
-            .withColumn(streaming.Cdc.RowKind,
-              when(col(LiveCol), streaming.Cdc.UpdateAfter)
-                .otherwise(streaming.Cdc.Delete))
-            .drop(LiveCol)
-            .withColumn(SeqCol, lit(batchId))
-          write(log, batchId)
-        })
-        .start()
-    }
-  }
 
-  private val StreamInsertRe =
-    """(?is)\s*INSERT\s+INTO\s+`?(\w+)`?\s+(SELECT\b.*)""".r
+  /** Refreshed groups as an upsert changelog: +U while [[LiveCol]] holds,
+    * -D once the group empties (or leaves the HAVING set) — exactly what
+    * an external upsert sink (kafka-upsert, JDBC) consumes row by row;
+    * on the local parquet emulation the append IS the scalable write
+    * path and [[materializeUpsertSink]] is the reader's keep-last
+    * collapse (SinkUpsertMaterializer role). */
+  private def upsertLog(df: DataFrame): DataFrame =
+    df.withColumn(streaming.Cdc.RowKind,
+      when(col(LiveCol), streaming.Cdc.UpdateAfter)
+        .otherwise(streaming.Cdc.Delete))
+      .drop(LiveCol)
 
   /** Per-commit writer for an UPDATE stream (an upsert changelog of the
     * user's columns + row_kind + commit sequence, keyed by `keys`) into
@@ -1759,7 +1745,7 @@ object ChangelogSql {
 
   /** orderItems: (bare column name OR expression text, isDescending)
     * per ORDER BY item, in order — `isBareOrderCol` distinguishes. */
-  private case class TopNShape(outer: Seq[String], parts: Seq[String],
+  private[graft] case class TopNShape(outer: Seq[String], parts: Seq[String],
       orderItems: Seq[(String, Boolean)], rnAlias: String, rel: String, n: Int)
 
   private[graft] def isBareOrderCol(text: String): Boolean =
@@ -1829,28 +1815,13 @@ object ChangelogSql {
     }
   }
 
-  private[graft] def streamTopNMatches(
-      spark: SparkSession, select: String): Boolean =
-    parseStreamTopN(spark, select).isDefined
-
-  /** The rank process strategy [[streamTopN]] would pick for this
-    * statement (the reference's RankProcessStrategy.java analysis):
-    * UpdateFastStrategy when the statement is a DESC top-1 whose input
-    * changelog is upsert-keyed with the partition columns inside the
-    * key and whose ORDER BY column is DECLARED monotone (recorded by
-    * [[streamInsert]] from a COUNT/MAX aggregate over an insert-only
-    * input); RetractStrategy otherwise. Surfaced by EXPLAIN
-    * CHANGELOG_MODE over the INSERT body. */
-  private[graft] def streamTopNStrategy(
-      spark: SparkSession, select: String): Option[String] =
-    parseStreamTopN(spark, select).map { sh =>
-      if (topNFastEligible(spark, sh))
-        "UpdateFastStrategy (FastTop1Function: O(1) leader state)"
-      else
-        "RetractStrategy (RetractableTopNFunction: MapState dataState " +
-          "+ sorted counts)"
-    }
-
+  /** RankProcessStrategy analysis (the reference's
+    * RankProcessStrategy.java): UpdateFastStrategy when the statement is
+    * a DESC top-1 whose input changelog is upsert-keyed with the
+    * partition columns inside the key and whose ORDER BY column is
+    * DECLARED monotone (recorded by the sign-algebra route from a
+    * COUNT/MAX aggregate over an insert-only input); RetractStrategy
+    * otherwise. */
   private def topNFastEligible(spark: SparkSession, sh: TopNShape): Boolean =
     sh.n == 1 && (sh.orderItems match {
       case Seq((col, true)) => // single DESC item over a monotone column
@@ -1859,49 +1830,19 @@ object ChangelogSql {
       case _ => false
     })
 
-  /** Continuous `INSERT INTO sink SELECT ... FROM (... ROW_NUMBER() ...)
-    * WHERE rn <= N` over a changelog relation — the streaming statement
-    * form of RetractableTopNFunction.java:56 (sorted per-key state,
-    * re-ranks and backfills when a ranked row retracts, emits deletes
-    * when the top shrinks). The sink receives an upsert changelog keyed
-    * by (partition columns, rank): +U refreshed ranks, -D vacated
-    * ranks, commit-sequence column per micro-batch —
-    * [[materializeUpsertSink]] shows exactly the current top-N. A
-    * DECLARED UPSERT input chains ChangelogNormalize first
-    * ([[retractStreamOf]]). */
-  def streamTopN(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamTopN expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val shape = parseStreamTopN(spark, select).getOrElse(
-      throw new IllegalArgumentException(
-        s"not a streaming top-N statement: $select"))
-    graft.functions.GraftFunctions.register(spark)
-    // RankProcessStrategy analysis: a DESC top-1 over an upsert
-    // changelog whose ORDER BY column is declared monotone takes the
-    // O(1)-state FastTop1 route, reading the upsert stream RAW (no
-    // ChangelogNormalize — the whole point of UpdateFastStrategy: the
-    // leader can never be demoted, so no retraction state is needed)
-    val fast = topNFastEligible(spark, shape)
-    val src =
-      if (fast) changelogReadStream(spark, shape.rel)
-      else retractStreamOf(spark, shape.rel)
-    streamTopNLowered(spark, sink, shape, src, fast, checkpointDir)
-  }
-
-  /** Lower a validated top-N shape over an arbitrary RETRACT changelog
-    * stream (row_kind + payload columns) and start the continuous
-    * query — shared by the plain statement (src = the changelog
-    * relation, possibly normalize-chained) and the composed
-    * top-N-over-aggregate statement (src = the inner aggregate's
-    * retract stream). */
-  private def streamTopNLowered(spark: SparkSession, sink: String,
-      shape: TopNShape, src: DataFrame, fast: Boolean,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+  /** Lower a validated top-N shape over a changelog stream `src`
+    * (row_kind + payload columns) — the streaming statement form of
+    * RetractableTopNFunction.java:56 (sorted per-key state, re-ranks and
+    * backfills when a ranked row retracts, emits deletes when the top
+    * shrinks), or with `fast` the O(1)-state FastTop1 over the RAW
+    * upsert stream. `src` is the changelog relation (normalize-chained
+    * when DECLARED UPSERT, [[retractStreamOf]]) or a composed
+    * statement's subquery stream. Returns the sink's upsert changelog —
+    * keyed by (partition columns, rank): +U refreshed ranks, -D vacated
+    * ranks, so [[materializeUpsertSink]] shows exactly the current top-N
+    * — and that key. */
+  private def topNLog(spark: SparkSession, shape: TopNShape, src: DataFrame,
+      fast: Boolean): (DataFrame, Seq[String]) = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark) // graft_sort_key
     val cols = src.columns.toSeq
@@ -2047,30 +1988,13 @@ object ChangelogSql {
         else if (timeCols(c)) // restore the declared TIME type
           col(s"__r.`$c`").cast(src.schema(c).dataType).as(c)
         else col(s"__r.`$c`").as(c))): _*)
-    val keys = shape.parts :+ shape.rnAlias
-    val write = upsertSinkWriter(spark, sink, keys)
-    // pin + start + restore under StartLock (one atomic section — see
-    // util.StartLock: a concurrent start on the shared session must
-    // never snapshot this query's provider pin into ITS checkpoint)
-    graft.util.StartLock.locked {
-      withRocksDbProvider(spark) {
-        withStateSizing(spark) {
-          withTrigger(spark, out.writeStream
-            .outputMode("append") // delta emission; chains after normalize
-            .option("checkpointLocation", checkpointDir)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              write(batch.withColumn(SeqCol, lit(batchId)), batchId)
-            })
-            .start()
-        }
-      }
-    }
+    (out, shape.parts :+ shape.rnAlias)
   }
 
   // ---- continuous two-sided retraction JOIN (StreamExecJoin) ---------
 
   /** One side of a parsed continuous join statement. */
-  private case class StreamJoinSide(rel: String, alias: Option[String],
+  private[graft] case class StreamJoinSide(rel: String, alias: Option[String],
       keyCols: Seq[String], selected: Seq[(String, String)]) // (col, outName)
 
   /** `orderTags`: the select list's side per item in STATEMENT order
@@ -2078,22 +2002,9 @@ object ChangelogSql {
     * per-side splits. `whereConjs`: the WHERE clause's top-level AND
     * conjuncts (side classification happens in the lowering, where the
     * schemas are at hand). */
-  private case class StreamJoinShape(
+  private[graft] case class StreamJoinShape(
       left: StreamJoinSide, right: StreamJoinSide, joinType: String,
       orderTags: Seq[Int], whereConjs: Seq[String])
-
-  /** Does `select` read TWO (or more) changelog relations in a linear
-    * join chain — the statement shape [[streamJoin]] owns? (Everything
-    * about the shape beyond this dispatch test — INNER-ness, equi-ON,
-    * bare-column select — is validated LOUDLY inside the lowering:
-    * a user composing two changelogs must get the join path's error,
-    * not the append path's misleading watermark complaint.) */
-  private[graft] def streamJoinMatches(
-      spark: SparkSession, select: String): Boolean =
-    parse(select).exists { c =>
-      parseJoinChain(c.relation).exists(
-        _.count(r => isChangelogRel(spark, r.name)) >= 2)
-    }
 
   /** The FROM/ON/WHERE analysis shared by the plain continuous-join
     * statement and the agg-over-join statement: relation chain, join
@@ -2103,7 +2014,7 @@ object ChangelogSql {
       lName: String, rName: String,
       lCols: Seq[String], rCols: Seq[String],
       pairs: Seq[(String, String)], whereConjs: Seq[String],
-      resolve: String => (Int, String))
+      scope: Scope)
 
   /** Does the select list (or HAVING) call an aggregate function? */
   private def joinSelectHasAgg(spark: SparkSession, c: Clauses): Boolean =
@@ -2139,8 +2050,6 @@ object ChangelogSql {
           "consumes the encodings"))
     // side resolution: qualifier = alias (or bare table name), else
     // unique column membership
-    def encodingCol(n: String) =
-      n == streaming.Cdc.RowKind || n == "cdc_ts" || n == SeqCol
     val lName = lRel.alias.getOrElse(lRel.name.split('.').last)
     val rName = rRel.alias.getOrElse(rRel.name.split('.').last)
     if (lName.equalsIgnoreCase(rName)) bad(
@@ -2190,19 +2099,17 @@ object ChangelogSql {
     if (pairs.isEmpty) bad("empty ON condition")
     JoinCore(lRel, rRel, jt, lName, rName, lCols, rCols, pairs,
       c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_)).getOrElse(Nil),
-      resolve)
+      Scope(resolve, side => if (side == 0) lName else rName, joinAggRef))
   }
 
   /** Validate + extract the continuous-join statement shape; throws a
     * loud, specific error for every inadmissible variant. */
   private def parseStreamJoinShape(
-      spark: SparkSession, select: String): StreamJoinShape = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous two-sided retraction JOIN: $msg")
-    val c = parse(select).getOrElse(bad(s"unparseable statement: $select"))
+      spark: SparkSession, c: Clauses): StreamJoinShape = {
+    val bad = failWith("continuous two-sided retraction JOIN")
     if (c.groupBy.isDefined || c.having.isDefined || joinSelectHasAgg(spark, c))
       bad("this statement AGGREGATES the join — it belongs to the " +
-        "agg-over-join route (streamJoinAgg), which the front door " +
+        "agg-over-join route (Route.JoinAgg), which the front door " +
         "dispatches first; reaching here means it was called directly")
     if (c.orderBy.isDefined || c.limit.isDefined) bad(
       "ORDER BY / LIMIT have no meaning on a continuous changelog")
@@ -2215,7 +2122,7 @@ object ChangelogSql {
     val items = graft.util.SqlSplit.splitTopLevel(c.selectList)
       .map(_.trim).map {
         case ItemRe(e, a) =>
-          val (side, col0) = core.resolve(e)
+          val (side, col0) = core.scope.resolve(e)
           (side, col0, Option(a).getOrElse(col0))
       }
     val dup = items.groupBy(_._3.toLowerCase).collect {
@@ -2292,36 +2199,48 @@ object ChangelogSql {
     (l.result(), r.result())
   }
 
-  /** The route line EXPLAIN CHANGELOG_MODE prints for a continuous join
-    * statement: the operator, the per-side state shape, the key, the
-    * pad bookkeeping (outer types) and the pushed per-side filters. */
   // ---- continuous agg-over-join (StreamExecJoin -> StreamExecGroupAggregate)
 
   /** One aggregate call in an agg-over-join select list. `side`/`col`
     * are (-1, "") for COUNT(*); `srcText` is the original expression
     * text (HAVING substitution + EXPLAIN rendering). */
-  private case class JoinAggCall(fn: String, distinct: Boolean,
+  private[graft] case class JoinAggCall(fn: String, distinct: Boolean,
       side: Int, col: String, out: String, srcText: String)
 
-  /** The agg-over-join statement shape: the synthesized join shape
-    * (selected = every column the aggregate stage needs, under
-    * collision-free internal names), the GROUP BY items with their
-    * OUTPUT names (the sink's upsert key), the aggregate calls, and the
-    * select list's statement order across both kinds. */
-  private case class StreamJoinAggShape(
-      join: StreamJoinShape,
-      groupItems: Seq[(Int, String, String)], // (side, col, outName)
-      aggs: Seq[JoinAggCall],
-      selectOrder: Seq[Either[Int, Int]], // Left(groupIdx) | Right(aggIdx)
-      having: Option[String])
+  /** How one aggregate level names its input: `resolve` maps a column
+    * reference to (side, column), `qual` names a side's admissible
+    * qualifier (the HAVING rewrite) and `ref` the input-stream column
+    * that carries a resolved column. */
+  private[graft] case class Scope(resolve: String => (Int, String),
+      qual: Int => String, ref: (Int, String) => String)
 
-  /** Does `select` AGGREGATE a two-changelog join — the statement shape
-    * [[streamJoinAgg]] owns? (Dispatched BEFORE [[streamJoinMatches]]'
-    * route so an aggregate statement gets this path's errors.) */
-  private[graft] def streamJoinAggMatches(
-      spark: SparkSession, select: String): Boolean =
-    streamJoinMatches(spark, select) && parse(select).exists(c =>
-      c.groupBy.isDefined || c.having.isDefined || joinSelectHasAgg(spark, c))
+  /** The scope of a level over ONE input named `name` (an alias, a
+    * relation name, or "" for an unaliased subquery): a reference is
+    * `col` or `name.col`; `missing` words the unknown-column error. */
+  private def singleScope(name: String, cols: Seq[String],
+      missing: String => String, bad: String => Nothing): Scope = {
+    def canon(n: String): String =
+      cols.find(_.equalsIgnoreCase(n)).getOrElse(bad(missing(n)))
+    def resolve(ref0: String): (Int, String) = {
+      val ref = ref0.trim.replace("`", "")
+      ref.split('.') match {
+        case Array(q, n) if q.equalsIgnoreCase(name) => (0, canon(n))
+        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref")
+        case Array(n) => (0, canon(n))
+        case _ => bad(s"cannot resolve column reference: $ref0")
+      }
+    }
+    Scope(resolve, _ => if (name.isEmpty) "__none__" else name, (_, c0) => c0)
+  }
+
+  /** One aggregate level of a continuous statement: its clauses, its
+    * scope, and its select list parsed against that scope — the GROUP
+    * BY items (side, col, output name; the outputs are the sink's upsert
+    * key), the aggregate calls, and the select list's statement order
+    * across both kinds (Left(groupIdx) | Right(aggIdx)). */
+  private[graft] case class AggLevel(c: Clauses, scope: Scope,
+      groupItems: Seq[(Int, String, String)], aggs: Seq[JoinAggCall],
+      selectOrder: Seq[Either[Int, Int]])
 
   /** Internal (collision-free) name of a joined column inside the
     * agg-over-join topology. */
@@ -2329,13 +2248,12 @@ object ChangelogSql {
     if (side == 0) s"__jl_$col" else s"__jr_$col"
 
   /** Parse + validate an aggregate select list and its GROUP BY against
-    * a side-aware column resolver — the walk shared by the agg-over-join
-    * statement and the composed top-N's inner aggregate. Returns
-    * (groupItems (side, col, out) in GROUP BY order, aggregate calls,
-    * select order anchored onto those two lists). */
-  private def parseAggSelect(c: Clauses,
-      resolve: String => (Int, String), bad: String => Nothing)
-      : (Seq[(Int, String, String)], Seq[JoinAggCall], Seq[Either[Int, Int]]) = {
+    * a level's scope — the walk every aggregate level shares (bare
+    * relation, two-changelog join, aggregate subquery). Group items come
+    * in GROUP BY order; the select order is anchored onto them. */
+  private def parseAggLevel(c: Clauses, scope: Scope,
+      bad: String => Nothing): AggLevel = {
+    val resolve = scope.resolve
     if (c.orderBy.isDefined || c.limit.isDefined) bad(
       "ORDER BY / LIMIT have no meaning on a continuous changelog")
     require(!"""(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined,
@@ -2436,20 +2354,21 @@ object ChangelogSql {
         Left(groupItems.indexWhere(g => g._1 == side && g._2 == col0))
       case r => r
     }
-    (groupItems, aggs, anchored)
+    AggLevel(c, scope, groupItems, aggs, anchored)
   }
 
-  private def parseStreamJoinAggShape(
-      spark: SparkSession, select: String): StreamJoinAggShape = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous aggregate over a two-changelog JOIN: $msg")
-    val c = parse(select).getOrElse(bad(s"unparseable statement: $select"))
+  /** Parse an aggregate over a two-changelog join: the aggregate level
+    * over the join's output, and the synthesized join shape — each side
+    * carries exactly the columns the level reads, under collision-free
+    * internal names ([[joinAggRef]]). The level's WHERE is cleared: it
+    * filters each side below the join state instead
+    * ([[classifyJoinWhere]]). */
+  private def parseJoinAgg(spark: SparkSession, c: Clauses): Route.JoinAgg = {
+    val bad = failWith("continuous aggregate over a two-changelog JOIN")
     val core = parseJoinCore(spark, c, bad)
-    val (groupItems, aggs, anchored) = parseAggSelect(c, core.resolve, bad)
-    // synthesize the join shape: each side carries exactly the columns
-    // the aggregate stage reads, under internal names
-    val needed = (groupItems.map(g => (g._1, g._2)) ++
-      aggs.filter(_.side >= 0).map(a => (a.side, a.col))).distinct
+    val level = parseAggLevel(c.copy(where = None), core.scope, bad)
+    val needed = (level.groupItems.map(g => (g._1, g._2)) ++
+      level.aggs.filter(_.side >= 0).map(a => (a.side, a.col))).distinct
     def sideSel(side: Int) = needed.collect {
       case (s0, col0) if s0 == side => (col0, joinAggRef(side, col0))
     }
@@ -2462,7 +2381,7 @@ object ChangelogSql {
       core.joinType,
       Seq.fill(lSel.size)(0) ++ Seq.fill(rSel.size)(1),
       core.whereConjs)
-    StreamJoinAggShape(join, groupItems, aggs, anchored, c.having)
+    Route.JoinAgg(join, level)
   }
 
   /** Rewrite a HAVING clause onto the aggregate stage's OUTPUT columns:
@@ -2533,97 +2452,6 @@ object ChangelogSql {
       s"${sh.right.rel}; key: $key)$pads$pushed$fused"
   }
 
-  private[graft] def streamJoinExplainText(
-      spark: SparkSession, select: String): String =
-    joinExplainCore(spark, parseStreamJoinShape(spark, select)) +
-      " -> retract changelog sink (+I/-D)"
-
-  /** The route line EXPLAIN CHANGELOG_MODE prints for an agg-over-join
-    * statement: the join operator feeding the retraction-consuming
-    * group aggregate, one topology. */
-  private[graft] def streamJoinAggExplainText(
-      spark: SparkSession, select: String): String = {
-    val sh = parseStreamJoinAggShape(spark, select)
-    val keys =
-      if (sh.groupItems.isEmpty) "GLOBAL"
-      else sh.groupItems.map(_._3).mkString(", ")
-    val aggList = sh.aggs.map(a => a.srcText + " AS " + a.out).mkString(", ")
-    joinExplainCore(spark, sh.join) +
-      " -> retraction-consuming GROUP AGGREGATE (GroupAggFunction on " +
-      "transformWithState; per-group scalar accumulators, counted-value " +
-      "MapState for MIN/MAX/COUNT DISTINCT with the current extreme " +
-      s"cached) — group key: ($keys); aggregates: $aggList" +
-      sh.having.map(h => s"; HAVING $h").getOrElse("") +
-      " -> upsert changelog keyed by the GROUP BY columns"
-  }
-
-  /** Continuous `INSERT INTO sink SELECT ... FROM a <type> JOIN b ON
-    * ...` where BOTH relations are changelogs — the statement form of
-    * StreamExecJoin.java:132 → StreamingJoinOperator.java:36: each
-    * side's live rows are a counted multiset per join key
-    * (JoinRecordStateViews.java:230, InputSideHasNoUniqueKey), an
-    * arriving change point-writes its own side and emits the delta
-    * against the OTHER side's live entries. All four join types lower:
-    * LEFT/RIGHT/FULL take the pad-bookkeeping processor
-    * (OuterJoinRecordStateViews.java:335 — unmatched preserved rows
-    * emit NULL-padded, the pad retracts on first match and restores on
-    * last retraction). DECLARED UPSERT inputs chain ChangelogNormalize
-    * first ([[retractStreamOf]]), exactly like the aggregate and top-N
-    * routes. WHERE pushes single-side conjuncts to their side's stream
-    * BEFORE the join state ([[classifyJoinWhere]] — padded-side and
-    * cross-side predicates reject loudly). The sink receives the join's
-    * RETRACT changelog (+I/-D rows with multiplicity — a join output
-    * has no upsert key), so the live result is `FINAL_STATE(sink)` and
-    * connector sinks (which consume keyed upserts) reject loudly.
-    *
-    * Scale shape: ONE shuffle per micro-batch per side (groupByKey on
-    * the equi-key — the same keyed exchange Flink's operator needs);
-    * state access is O(changes) point writes + O(matches) other-side
-    * iteration per change, probe-pinned in StreamJoinTwsSpec; NULL
-    * equi-key rows filter at the source on unpreserved sides (SQL
-    * equality never matches NULL) and route to side-tagged pad-only
-    * state keys on preserved sides (the row appears padded, never
-    * cross-matches another NULL). */
-  def streamJoin(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamJoin expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val sh = parseStreamJoinShape(spark, select)
-    // connector sinks consume KEYED upserts; a retract changelog has none
-    val sinkProps = scala.util.Try(WatermarkDdl.tableOptions(spark, sink))
-      .getOrElse(Map.empty[String, String])
-    sinkProps.get("connector").foreach(conn =>
-      throw new IllegalArgumentException(
-        s"continuous JOIN into '$conn' table $sink: the join emits a " +
-          "RETRACT changelog (+I/-D with multiplicity, no upsert key) " +
-          "that keyed connector sinks cannot consume; land it in a plain " +
-          "table (FINAL_STATE(sink) reads the live result) or aggregate " +
-          "it with its own continuous statement"))
-    val out = joinChangelogStream(spark, sh)
-    graft.util.StartLock.locked {
-      withRocksDbProvider(spark) {
-        withStateSizing(spark) {
-          withTrigger(spark, out.writeStream
-            .outputMode("append") // delta emission (+I/-D changelog rows)
-            .option("checkpointLocation", checkpointDir)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.withColumn(SeqCol, lit(batchId))
-                .write.mode("append").saveAsTable(sink)
-            })
-            .start()
-        }
-      }
-    }
-  }
-
-  /** Lower a validated join shape onto the TWS join port and return the
-    * join's RETRACT changelog stream: `row_kind` (+I/-D) followed by
-    * the shape's output columns in statement order. Shared by the plain
-    * join statement (which sinks it directly) and the agg-over-join
-    * statement (which chains the group aggregate downstream). */
   /** Is this side a DECLARED UPSERT relation whose key EQUALS the join's
     * equi-key (so the normalize keep-last fold can live INSIDE the join
     * state — [[streaming.StreamJoinTws.fusedJoinChangelog]]) with no
@@ -2634,6 +2462,34 @@ object ChangelogSql {
       ks.map(_.toLowerCase).toSet ==
         side.keyCols.map(_.toLowerCase).toSet)
 
+  /** Lower a validated join shape onto the TWS join port and return the
+    * join's RETRACT changelog stream: `row_kind` (+I/-D) followed by
+    * the shape's output columns in statement order — the statement form
+    * of StreamExecJoin.java:132 → StreamingJoinOperator.java:36: each
+    * side's live rows are a counted multiset per join key
+    * (JoinRecordStateViews.java:230, InputSideHasNoUniqueKey), an
+    * arriving change point-writes its own side and emits the delta
+    * against the OTHER side's live entries. All four join types lower:
+    * LEFT/RIGHT/FULL take the pad-bookkeeping processor
+    * (OuterJoinRecordStateViews.java:335 — unmatched preserved rows
+    * emit NULL-padded, the pad retracts on first match and restores on
+    * last retraction). DECLARED UPSERT inputs chain ChangelogNormalize
+    * first ([[retractStreamOf]]), or fuse it into the join state
+    * ([[joinSideFusable]]). WHERE pushes single-side conjuncts to their
+    * side's stream BEFORE the join state ([[classifyJoinWhere]]).
+    * The plain join statement sinks this stream directly (a join output
+    * has no upsert key, so the live result is `FINAL_STATE(sink)`); the
+    * agg-over-join statement and a composed top-N chain their operator
+    * downstream.
+    *
+    * Scale shape: ONE shuffle per micro-batch per side (groupByKey on
+    * the equi-key — the same keyed exchange Flink's operator needs);
+    * state access is O(changes) point writes + O(matches) other-side
+    * iteration per change, probe-pinned in StreamJoinTwsSpec; NULL
+    * equi-key rows filter at the source on unpreserved sides (SQL
+    * equality never matches NULL) and route to side-tagged pad-only
+    * state keys on preserved sides (the row appears padded, never
+    * cross-matches another NULL). */
   private def joinChangelogStream(
       spark: SparkSession, sh: StreamJoinShape): DataFrame = {
     import spark.implicits._
@@ -2804,145 +2660,6 @@ object ChangelogSql {
     withStructs.select(col(streaming.Cdc.RowKind) +: ordered: _*)
   }
 
-  /** Continuous `INSERT INTO sink SELECT k..., agg(...)... FROM a JOIN b
-    * ON ... [WHERE ...] GROUP BY k... [HAVING ...]` over TWO changelog
-    * relations — the composed topology the reference plans as
-    * StreamExecJoin feeding StreamExecGroupAggregate
-    * (FlinkChangelogModeInferenceProgram wires the join's retract
-    * stream into GroupAggFunction.java:43): the TWS join port emits the
-    * join's +I/-D delta stream, which re-keys on the GROUP BY columns
-    * into the retraction-consuming TWS aggregate
-    * ([[streaming.RetractAggTws]]), and the refreshed groups land in
-    * the sink as an UPSERT changelog keyed by the GROUP BY outputs —
-    * so keyed connector sinks (jdbc, upsert-kafka) work here, unlike
-    * the raw join statement. HAVING evaluates over the refreshed
-    * aggregate row ([[rewriteJoinHaving]]); a group leaving the HAVING
-    * set emits a DELETE, exactly like [[streamAgg]]'s live predicate.
-    *
-    * Scale shape: two keyed exchanges per micro-batch (equi-key into
-    * the join, group key into the aggregate — the same two shuffles
-    * Flink's topology has), state access point-wise on both operators
-    * (probe-pinned in their specs), emission O(touched groups). */
-  def streamJoinAgg(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous aggregate over a two-changelog JOIN: $msg")
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamJoinAgg expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val sh = parseStreamJoinAggShape(spark, select)
-    val joined = joinChangelogStream(spark, sh.join)
-    val groupRefs = sh.groupItems.map(g => (joinAggRef(g._1, g._2), g._3))
-    val aggRefs = sh.aggs.map(a =>
-      (a, if (a.col.isEmpty) "" else joinAggRef(a.side, a.col)))
-    val agged = loweredGroupAgg(spark, joined, groupRefs, aggRefs,
-      sh.selectOrder, retractMode = false, bad)
-    val havingPred = sh.having.map { h =>
-      val sideName = (side: Int) =>
-        if (side == 0)
-          sh.join.left.alias.getOrElse(sh.join.left.rel.split('.').last)
-        else sh.join.right.alias.getOrElse(sh.join.right.rel.split('.').last)
-      val rewritten = rewriteAggHaving(spark, h, sh.aggs,
-        sh.groupItems, sideName, bad)
-      try expr(rewritten)
-      catch { case e: Exception => bad(s"HAVING ($h) did not resolve " +
-        s"against the aggregate outputs (rewritten: $rewritten): " +
-        e.getMessage) }
-    }
-    startGroupAggUpsert(spark, sink, agged, havingPred,
-      sh.groupItems.map(_._3), checkpointDir)
-  }
-
-  /** Shared tail of the upsert-emitting aggregate statements: HAVING as
-    * the live predicate (a group leaving the set emits a DELETE), the
-    * keyed upsert sink writer, and the pinned-provider start. */
-  private def startGroupAggUpsert(spark: SparkSession, sink: String,
-      agged: DataFrame, havingPred: Option[org.apache.spark.sql.Column],
-      keys: Seq[String], checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val base = agged.withColumn("__live",
-      col(streaming.Cdc.RowKind) =!= streaming.Cdc.Delete)
-      .drop(streaming.Cdc.RowKind)
-    val liveCol = havingPred match {
-      case None => col("__live")
-      case Some(p) => col("__live") && coalesce(p, lit(false))
-    }
-    val df = base.withColumn(LiveCol, coalesce(liveCol, lit(false)))
-      .drop("__live")
-    val write = upsertSinkWriter(spark, sink, keys, Seq.empty)
-    graft.util.StartLock.locked {
-      withRocksDbProvider(spark) {
-        withStateSizing(spark) {
-          withTrigger(spark, df.writeStream
-            .outputMode("append") // TWS chain: refreshed-group delta rows
-            .option("checkpointLocation", checkpointDir)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              val log = batch
-                .withColumn(streaming.Cdc.RowKind,
-                  when(col(LiveCol), streaming.Cdc.UpdateAfter)
-                    .otherwise(streaming.Cdc.Delete))
-                .drop(LiveCol)
-                .withColumn(SeqCol, lit(batchId))
-              write(log, batchId)
-            })
-            .start()
-        }
-      }
-    }
-  }
-
-  /** Does `select` aggregate ONE bare changelog relation with a
-    * COUNT(DISTINCT ...) — the one aggregate the sign-algebra route
-    * cannot express (Spark bans distinct aggregation on a streaming
-    * DataFrame)? Such statements lower onto the TWS aggregate instead
-    * (counted-value MapState per group — the same distinct-value data
-    * view Flink's planner splits out). */
-  private[graft] def streamRelAggDistinctMatches(
-      spark: SparkSession, select: String): Boolean =
-    parse(select).exists { c =>
-      c.relation.trim match {
-        case RelRe(n, _) if isChangelogRel(spark, n) =>
-          """(?is)\bCOUNT\s*\(\s*DISTINCT\b""".r
-            .findFirstIn(blank(c.selectList)).isDefined
-        case _ => false
-      }
-    }
-
-  /** Continuous aggregate over ONE changelog relation with
-    * COUNT(DISTINCT) — the TWS-aggregate statement form (the
-    * sign-algebra route's one inexpressible aggregate). Same sink
-    * contract as [[streamInsert]]: upsert changelog keyed by the GROUP
-    * BY outputs. */
-  def streamRelAgg(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous aggregate over a changelog: $msg")
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamRelAgg expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val rsh = parseRelAggShape(spark, select)
-    val src0 = retractStreamOf(spark, rsh.rel).alias(rsh.aliasName)
-    val filtered = rsh.whereConjs.foldLeft(src0)((d, w) => d.filter(expr(w)))
-    val agged = loweredGroupAgg(spark, filtered, rsh.groupItems,
-      rsh.aggs.map(a => (a, a.col)), rsh.selectOrder,
-      retractMode = false, bad)
-    val havingPred = rsh.having.map { h =>
-      val rewritten = rewriteAggHaving(spark, h, rsh.aggs,
-        rsh.groupItems.map { case (c0, out) => (0, c0, out) },
-        _ => rsh.aliasName, bad)
-      try expr(rewritten)
-      catch { case e: Exception => bad(s"HAVING ($h) did not resolve " +
-        s"against the aggregate outputs (rewritten: $rewritten): " +
-        e.getMessage) }
-    }
-    startGroupAggUpsert(spark, sink, agged, havingPred,
-      rsh.groupItems.map(_._2), checkpointDir)
-  }
-
   /** Lower a group aggregate over an arbitrary RETRACT changelog stream
     * `src` (row_kind + payload columns) onto the TWS aggregate
     * processor; returns the aggregate's changelog — row_kind followed
@@ -2951,7 +2668,7 @@ object ChangelogSql {
     * +U/-D refreshed row per touched group (what an upsert sink
     * consumes), true = exact +I/-U/+U/-D pairs (what a DOWNSTREAM
     * retraction-consuming operator — the composed top-N — requires).
-    * Shared by [[streamJoinAgg]] and [[streamTopNAgg]]. */
+    * Called by [[aggLevel]] only. */
   private def loweredGroupAgg(spark: SparkSession, src: DataFrame,
       groupRefs: Seq[(String, String)], // (src column, output name)
       aggRefs: Seq[(JoinAggCall, String)], // (call, src column; "" = COUNT(*))
@@ -3060,62 +2777,8 @@ object ChangelogSql {
     withKey.select(col("__kind").as(streaming.Cdc.RowKind) +: ordered: _*)
   }
 
-  // ---- composed top-N over an aggregate (StreamExecGroupAggregate ->
-  //      StreamExecRank) ----------------------------------------------
-
-  /** The composed top-N's INNER aggregate over ONE changelog relation.
-    * (The STANDALONE single-relation aggregate statement keeps the
-    * richer sign-algebra route — UDAs, static join sides; this parser
-    * covers the TWS-lowerable COUNT/SUM/AVG/MIN/MAX shape the composed
-    * topology needs, because only the TWS aggregate can emit the
-    * retract pairs a downstream rank consumes in append mode.) */
-  private case class RelAggShape(rel: String, aliasName: String,
-      groupItems: Seq[(String, String)],   // (col, out)
-      aggs: Seq[JoinAggCall],
-      selectOrder: Seq[Either[Int, Int]],
-      having: Option[String], whereConjs: Seq[String])
-
-  private def parseRelAggShape(
-      spark: SparkSession, select: String): RelAggShape = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous aggregate over a changelog: $msg")
-    val c = parse(select).getOrElse(
-      bad(s"unparseable inner statement: $select"))
-    val (rel, alias) = c.relation.trim match {
-      case RelRe(n, a) if isChangelogRel(spark, n) => (n, Option(a))
-      case other => bad("the inner FROM must be ONE changelog relation " +
-        s"or a two-changelog JOIN, got: $other")
-    }
-    def encodingCol(n: String) =
-      n == streaming.Cdc.RowKind || n == "cdc_ts" || n == SeqCol
-    val all = blank(c.selectList) + " " +
-      c.where.map(blank).getOrElse("") + " " +
-      c.groupBy.map(blank).getOrElse("") + " " +
-      c.having.map(blank).getOrElse("")
-    Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).foreach(m =>
-      if (("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
-          .findFirstIn(all).isDefined)
-        bad(s"the statement references encoding column $m — the " +
-          "aggregate consumes the encodings"))
-    val relName = alias.getOrElse(rel.split('.').last)
-    val cols = relationColumns(spark, rel).getOrElse(
-      bad(s"cannot resolve $rel")).filterNot(encodingCol)
-    def canon(n: String): String = cols.find(_.equalsIgnoreCase(n))
-      .getOrElse(bad(s"column $n not found on $rel"))
-    def resolve(ref0: String): (Int, String) = {
-      val ref = ref0.trim.replace("`", "")
-      ref.split('.') match {
-        case Array(q, n) if q.equalsIgnoreCase(relName) => (0, canon(n))
-        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref")
-        case Array(n) => (0, canon(n))
-        case _ => bad(s"cannot resolve column reference: $ref0")
-      }
-    }
-    val (g3, aggs, order) = parseAggSelect(c, resolve, bad)
-    RelAggShape(rel, relName, g3.map(g => (g._2, g._3)), aggs, order,
-      c.having,
-      c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_)).getOrElse(Nil))
-  }
+  // ---- composed statements: top-N over an aggregate (StreamExecGroup-
+  //      Aggregate -> StreamExecRank) and aggregates over aggregates ---
 
   private val TopNAsFromParenRe =
     """(?is)^\s*AS\s+`?(\w+)`?\s+FROM\s*\(""".r
@@ -3178,154 +2841,6 @@ object ChangelogSql {
       inner))
   }
 
-  private[graft] def streamTopNAggMatches(
-      spark: SparkSession, select: String): Boolean =
-    parseStreamTopNOverAgg(spark, select).isDefined
-
-  /** Continuous top-N OVER an aggregate in ONE statement — the
-    * reference's StreamExecGroupAggregate -> StreamExecRank chain:
-    * the inner aggregate (ONE changelog relation, or a TWO-changelog
-    * JOIN) lowers in RETRACT emission mode (+I/-U/+U/-D pairs — the
-    * generateUpdateBefore flag Flink sets when a rank consumes an
-    * aggregate), an inner HAVING filters the pair stream STATELESSLY
-    * (a deterministic predicate commutes with a retract changelog:
-    * set entry nets to an insert, set exit to a delete), and the
-    * sorted top-N port ranks the aggregate's output rows. With a
-    * joined inner this is FOUR chained stateful operators in one
-    * query: ChangelogNormalize -> join -> aggregate -> rank. The
-    * FastTop1 route never applies here (the inner's output is not a
-    * DECLARED-monotone upsert table), so the rank strategy is always
-    * RetractStrategy. */
-  def streamTopNAgg(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous top-N over an aggregate: $msg")
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamTopNAgg expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val (shape, inner) = parseStreamTopNOverAgg(spark, select).getOrElse(
-      bad(s"not a top-N-over-aggregate statement: $select"))
-    val src = innerAggRetractStream(spark, inner, bad)
-    streamTopNLowered(spark, sink, shape, src, fast = false, checkpointDir)
-  }
-
-  /** One aggregate LEVEL over an already-lowered retract stream,
-    * emitting RETRACT pairs — the recursion step behind arbitrary-depth
-    * aggregation trees: resolve this level's select/GROUP BY against
-    * the deeper stream's output columns, push this level's WHERE onto
-    * the pair stream (stateless — a deterministic predicate commutes
-    * with a retract changelog), aggregate in retract-pair mode, filter
-    * by HAVING the same stateless way. */
-  private def aggLevelRetract(spark: SparkSession, c: Clauses,
-      src: DataFrame, aliasOpt: Option[String],
-      bad: String => Nothing): DataFrame = {
-    val aliasName = aliasOpt.getOrElse("")
-    val cols = src.columns.toSeq.filterNot(_ == streaming.Cdc.RowKind)
-    def canon(n: String): String = cols.find(_.equalsIgnoreCase(n))
-      .getOrElse(bad(s"column $n is not an output of the inner " +
-        s"aggregate (outputs: ${cols.mkString(", ")})"))
-    def resolve(ref0: String): (Int, String) = {
-      val ref = ref0.trim.replace("`", "")
-      ref.split('.') match {
-        case Array(q, n) if q.equalsIgnoreCase(aliasName) => (0, canon(n))
-        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref")
-        case Array(n) => (0, canon(n))
-        case _ => bad(s"cannot resolve column reference: $ref0")
-      }
-    }
-    val (g3, aggs, order) = parseAggSelect(c, resolve, bad)
-    val aliased = if (aliasName.isEmpty) src else src.alias(aliasName)
-    val filtered = c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_))
-      .getOrElse(Nil).foldLeft(aliased)((d, w) =>
-        d.filter(coalesce(expr(w), lit(false))))
-    val agged = loweredGroupAgg(spark, filtered,
-      g3.map(g => (g._2, g._3)), aggs.map(a => (a, a.col)), order,
-      retractMode = true, bad)
-    applyInnerHaving(spark, agged, c.having, aggs, g3,
-      _ => if (aliasName.isEmpty) "__none__" else aliasName, bad)
-  }
-
-  /** Lower the composed statement's inner subquery to its RETRACT
-    * changelog stream (row_kind + output columns): an aggregate (bare
-    * relation, two-changelog join, or — RECURSIVELY — another
-    * aggregate subquery) in retract-pair emission, or a PLAIN
-    * two-changelog join projection (the rank-over-join plan —
-    * StreamExecJoin feeding StreamExecRank directly; the join's +I/-D
-    * delta stream IS a retract changelog already). The recursion gives
-    * arbitrary-depth aggregation trees: every level consumes the
-    * deeper level's pairs and emits its own. */
-  private def innerAggRetractStream(spark: SparkSession, inner: String,
-      bad: String => Nothing): DataFrame = {
-    val innerClauses = parse(inner)
-    innerClauses.flatMap(ic => parenSubquery(ic.relation).map((ic, _)))
-      .foreach { case (ic, (deeper, aliasOpt)) =>
-        if (!(ic.groupBy.isDefined || joinSelectHasAgg(spark, ic))) bad(
-          "a nested subquery level must aggregate (plain projections " +
-            "fold into the level above); got: " + ic.selectList)
-        return aggLevelRetract(spark, ic,
-          innerAggRetractStream(spark, deeper, bad), aliasOpt, bad)
-      }
-    val twoChangelogs = innerClauses.exists(ic =>
-      parseJoinChain(ic.relation).exists(
-        _.count(r => isChangelogRel(spark, r.name)) >= 2))
-    if (twoChangelogs && innerClauses.exists(ic =>
-        ic.groupBy.isEmpty && ic.having.isEmpty &&
-          !joinSelectHasAgg(spark, ic))) {
-      // rank over a PLAIN join: no aggregate stage — the join port's
-      // delta stream feeds the rank state directly
-      return joinChangelogStream(spark, parseStreamJoinShape(spark, inner))
-    }
-    if (twoChangelogs) {
-      val jsh = parseStreamJoinAggShape(spark, inner)
-      val joined = joinChangelogStream(spark, jsh.join)
-      val groupRefs = jsh.groupItems.map(g => (joinAggRef(g._1, g._2), g._3))
-      val aggRefs = jsh.aggs.map(a =>
-        (a, if (a.col.isEmpty) "" else joinAggRef(a.side, a.col)))
-      val agged = loweredGroupAgg(spark, joined, groupRefs, aggRefs,
-        jsh.selectOrder, retractMode = true, bad)
-      applyInnerHaving(spark, agged, jsh.having, jsh.aggs, jsh.groupItems,
-        side => if (side == 0)
-          jsh.join.left.alias.getOrElse(jsh.join.left.rel.split('.').last)
-        else jsh.join.right.alias.getOrElse(
-          jsh.join.right.rel.split('.').last),
-        bad)
-    } else {
-      val rsh = parseRelAggShape(spark, inner)
-      val src0 = retractStreamOf(spark, rsh.rel).alias(rsh.aliasName)
-      // single-relation WHERE pushes BELOW the aggregate (a
-      // deterministic payload predicate commutes with the changelog)
-      val filtered = rsh.whereConjs.foldLeft(src0)((d, w) => d.filter(expr(w)))
-      val aggRefs = rsh.aggs.map(a => (a, a.col))
-      val agged = loweredGroupAgg(spark, filtered, rsh.groupItems, aggRefs,
-        rsh.selectOrder, retractMode = true, bad)
-      applyInnerHaving(spark, agged, rsh.having, rsh.aggs,
-        rsh.groupItems.map { case (c0, out) => (0, c0, out) },
-        _ => rsh.aliasName, bad)
-    }
-  }
-
-  /** An inner HAVING filters the aggregate's RETRACT pair stream
-    * statelessly: a -U/-D passes iff the row it retracts passed — the
-    * predicate evaluates on the pair's own values, so set entry nets
-    * to an insert and set exit to a delete with no extra state. */
-  private def applyInnerHaving(spark: SparkSession, agged: DataFrame,
-      having: Option[String], aggs: Seq[JoinAggCall],
-      groupItems: Seq[(Int, String, String)], qual: Int => String,
-      bad: String => Nothing): DataFrame =
-    having match {
-      case None => agged
-      case Some(h) =>
-        val rewritten = rewriteAggHaving(spark, h, aggs, groupItems, qual, bad)
-        val pred =
-          try expr(rewritten)
-          catch { case e: Exception => bad(s"HAVING ($h) did not resolve " +
-            s"against the aggregate outputs (rewritten: $rewritten): " +
-            e.getMessage) }
-        agged.filter(coalesce(pred, lit(false)))
-    }
-
   /** Extract a parenthesized FROM-subquery: `( <inner> ) [alias]`.
     * Returns (inner text, alias or None). */
   private def parenSubquery(fromText: String): Option[(String, Option[String])] = {
@@ -3357,124 +2872,357 @@ object ChangelogSql {
       }
     }
 
-  /** Does `select` AGGREGATE a parenthesized subquery that is itself a
-    * continuous aggregate (or join) over changelogs — the rollup shape
-    * [[streamNestedAgg]] owns (any nesting depth)? */
-  private[graft] def streamNestedAggMatches(
-      spark: SparkSession, select: String): Boolean =
-    parse(select).exists { c =>
-      (c.groupBy.isDefined || joinSelectHasAgg(spark, c)) &&
-      parenSubquery(c.relation).exists { case (inner, _) =>
-        refsChangelogDeep(spark, inner)
-      }
+  /** Parse a TWS aggregate over ONE changelog relation: the COUNT(DISTINCT)
+    * statement (the one aggregate the sign-algebra route cannot express
+    * — Spark bans distinct aggregation on a streaming DataFrame — lowers
+    * onto counted-value MapState per group, the same distinct-value
+    * data view Flink's planner splits out) and a composed statement's
+    * inner aggregate (only the TWS aggregate emits the retract pairs a
+    * downstream operator consumes in append mode). Returns the relation,
+    * its name in the statement and the parsed level. */
+  private def relAggLevel(
+      spark: SparkSession, c: Clauses): (String, String, AggLevel) = {
+    val bad = failWith("continuous aggregate over a changelog")
+    val (rel, alias) = c.relation.trim match {
+      case RelRe(n, a) if isChangelogRel(spark, n) => (n, Option(a))
+      case other => bad("the inner FROM must be ONE changelog relation " +
+        s"or a two-changelog JOIN, got: $other")
     }
+    val all = blank(c.selectList) + " " +
+      c.where.map(blank).getOrElse("") + " " +
+      c.groupBy.map(blank).getOrElse("") + " " +
+      c.having.map(blank).getOrElse("")
+    Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).foreach(m =>
+      if (("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
+          .findFirstIn(all).isDefined)
+        bad(s"the statement references encoding column $m — the " +
+          "aggregate consumes the encodings"))
+    val name = alias.getOrElse(rel.split('.').last)
+    val cols = relationColumns(spark, rel).getOrElse(
+      bad(s"cannot resolve $rel")).filterNot(encodingCol)
+    (rel, name, parseAggLevel(c,
+      singleScope(name, cols, n => s"column $n not found on $rel", bad), bad))
+  }
 
-  /** Two-level continuous aggregation in ONE statement —
-    * `SELECT k2, agg(...) FROM ( SELECT k1, k2, agg(...) FROM
-    * <changelog(s)> GROUP BY k1, k2 ) GROUP BY k2` — the reference
-    * plans this as StreamExecGroupAggregate feeding a SECOND
-    * StreamExecGroupAggregate, the inner emitting UPDATE_BEFORE/AFTER
-    * pairs (generateUpdateBefore). Here: the inner aggregate (bare
-    * relation, join, or plain join projection) lowers in RETRACT pair
-    * emission through [[innerAggRetractStream]], an outer WHERE
-    * filters the pair stream statelessly, and the OUTER aggregate
-    * consumes the pairs through the same TWS processor in upsert mode
-    * — refreshed groups keyed by the outer GROUP BY land in the sink. */
-  def streamNestedAgg(spark: SparkSession, statement: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous aggregate over an aggregate: $msg")
-    val (sink, select) = statement match {
-      case StreamInsertRe(s, sel) => (s, sel)
-      case other => throw new IllegalArgumentException(
-        s"streamNestedAgg expects INSERT INTO <table> SELECT ..., got: $other")
-    }
-    val c = parse(select).getOrElse(bad(s"unparseable statement: $select"))
-    val (inner, aliasOpt) = parenSubquery(c.relation).getOrElse(
-      bad(s"FROM must be a parenthesized aggregate subquery, got: ${c.relation}"))
-    val innerDf = innerAggRetractStream(spark, inner, bad)
-    val aliasName = aliasOpt.getOrElse("")
-    val cols = innerDf.columns.toSeq.filterNot(_ == streaming.Cdc.RowKind)
-    def canon(n: String): String = cols.find(_.equalsIgnoreCase(n))
-      .getOrElse(bad(s"column $n is not an output of the inner aggregate " +
-        s"(outputs: ${cols.mkString(", ")})"))
-    def resolve(ref0: String): (Int, String) = {
-      val ref = ref0.trim.replace("`", "")
-      ref.split('.') match {
-        case Array(q, n) if q.equalsIgnoreCase(aliasName) => (0, canon(n))
-        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref")
-        case Array(n) => (0, canon(n))
-        case _ => bad(s"cannot resolve column reference: $ref0")
-      }
-    }
-    val (g3, aggs, order) = parseAggSelect(c, resolve, bad)
-    // outer WHERE: a deterministic predicate over the inner's outputs
-    // commutes with the retract pair stream — stateless filter
-    val aliased =
-      if (aliasName.isEmpty) innerDf else innerDf.alias(aliasName)
-    val filtered = c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_))
-      .getOrElse(Nil).foldLeft(aliased)((d, w) =>
-        d.filter(coalesce(expr(w), lit(false))))
+  /** Lower one aggregate LEVEL over `src` (row_kind + the level's input
+    * columns) onto the TWS aggregate ([[loweredGroupAgg]]): WHERE filters
+    * the input (a deterministic payload predicate commutes with a
+    * retract changelog — a retraction passes iff the row it retracts
+    * did), the aggregate emits in the mode `retract` selects, and HAVING
+    * is, in upsert emission, the live predicate (a group leaving the set
+    * emits a DELETE) or, in retract-pair emission, a stateless filter (a
+    * -U/-D passes iff the row it retracts passed, so set entry nets to
+    * an insert and set exit to a delete). Returns the level's changelog
+    * — retract pairs (row_kind first) or the [[upsertLog]] (row_kind
+    * last) — and its GROUP BY output names, the sink's upsert key. */
+  private def aggLevel(spark: SparkSession, level: AggLevel, src: DataFrame,
+      retract: Boolean, bad: String => Nothing): (DataFrame, Seq[String]) = {
+    val filtered = level.c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_))
+      .getOrElse(Nil).foldLeft(src)((d, w) => d.filter(expr(w)))
+    val ref = level.scope.ref
     val agged = loweredGroupAgg(spark, filtered,
-      g3.map(g => (g._2, g._3)), aggs.map(a => (a, a.col)), order,
-      retractMode = false, bad)
-    val havingPred = c.having.map { h =>
-      val rewritten = rewriteAggHaving(spark, h, aggs, g3,
-        _ => if (aliasName.isEmpty) "__none__" else aliasName, bad)
+      level.groupItems.map { case (side, c0, out) => (ref(side, c0), out) },
+      level.aggs.map(a => (a, if (a.col.isEmpty) "" else ref(a.side, a.col))),
+      level.selectOrder, retract, bad)
+    val having = level.c.having.map { h =>
+      val rewritten = rewriteAggHaving(spark, h, level.aggs,
+        level.groupItems, level.scope.qual, bad)
       try expr(rewritten)
       catch { case e: Exception => bad(s"HAVING ($h) did not resolve " +
         s"against the aggregate outputs (rewritten: $rewritten): " +
         e.getMessage) }
     }
-    startGroupAggUpsert(spark, sink, agged, havingPred,
-      g3.map(_._3), checkpointDir)
+    val keys = level.groupItems.map(_._3)
+    if (retract)
+      (having.fold(agged)(p => agged.filter(coalesce(p, lit(false)))), keys)
+    else {
+      val live = having.foldLeft(
+        col(streaming.Cdc.RowKind) =!= streaming.Cdc.Delete)(
+        (l, p) => l && coalesce(p, lit(false)))
+      (upsertLog(agged.withColumn(LiveCol, coalesce(live, lit(false)))
+        .drop(streaming.Cdc.RowKind)), keys)
+    }
   }
 
-  /** The route line EXPLAIN CHANGELOG_MODE prints for a composed
-    * top-N-over-aggregate statement. */
-  private[graft] def streamTopNAggExplainText(
-      spark: SparkSession, select: String): String = {
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous top-N over an aggregate: $msg")
-    val (shape, inner) = parseStreamTopNOverAgg(spark, select).getOrElse(
-      bad(s"not a top-N-over-aggregate statement: $select"))
-    val innerClauses = parse(inner)
-    val twoChangelogs = innerClauses.exists(ic =>
-      parseJoinChain(ic.relation).exists(
-        _.count(r => isChangelogRel(spark, r.name)) >= 2))
-    val plainJoin = twoChangelogs && innerClauses.exists(ic =>
-      ic.groupBy.isEmpty && ic.having.isEmpty && !joinSelectHasAgg(spark, ic))
-    val nestedInner = innerClauses.exists(ic =>
-      parenSubquery(ic.relation).isDefined)
-    val innerLine =
-      if (nestedInner)
+  // ---- the continuous route ------------------------------------------
+
+  /** The continuous route of an `INSERT INTO sink SELECT …` over
+    * changelogs — the operator chain the reference planner picks for the
+    * statement after changelog-mode inference (GroupAggregate / Rank /
+    * Join) — with the statement parsed for that chain. [[route]] picks
+    * one, [[start]] lowers and starts it, and [[Route.line]] is its
+    * EXPLAIN CHANGELOG_MODE route line. */
+  private[graft] sealed trait Route {
+    def line(spark: SparkSession): String = routeLine(spark, this)
+  }
+
+  private[graft] object Route {
+    /** A route that can also be a composed statement's subquery. */
+    sealed trait Subquery extends Route
+    /** A TWS aggregate level ([[aggLevel]]). */
+    sealed trait Aggregate extends Subquery
+
+    /** Top-N over a subquery — the reference's StreamExecGroupAggregate
+      * -> StreamExecRank chain: `inner` (an aggregate of one changelog,
+      * of a two-changelog join or of another aggregate, or a plain
+      * two-changelog join) emits RETRACT pairs (the generateUpdateBefore
+      * flag Flink sets when a rank consumes an aggregate) and the sorted
+      * top-N port ranks its rows — with a joined inner, FOUR chained
+      * stateful operators in one query: ChangelogNormalize -> join ->
+      * aggregate -> rank. The inner's output is never a
+      * DECLARED-monotone upsert table, so the rank strategy is always
+      * RetractStrategy. */
+    final case class TopNAgg(shape: TopNShape, inner: Subquery) extends Route
+    /** Top-N over one changelog relation ([[topNLog]]); `fast` picks
+      * UpdateFastStrategy ([[topNFastEligible]]). */
+    final case class TopN(shape: TopNShape, fast: Boolean) extends Route
+    /** An aggregate over an aggregate subquery `inner` aliased `alias` —
+      * StreamExecGroupAggregate feeding a second one, the inner emitting
+      * UPDATE_BEFORE/AFTER pairs; any nesting depth. */
+    final case class NestedAgg(c: Clauses, inner: String,
+        alias: Option[String]) extends Aggregate
+    /** The TWS aggregate over ONE changelog relation ([[relAggLevel]]);
+      * as a whole statement, the COUNT(DISTINCT) aggregates. */
+    final case class RelAgg(c: Clauses) extends Aggregate
+    /** The sign-algebra aggregate over one changelog, bare or joined to
+      * static relations ([[signAgg]]). */
+    final case class SignAgg(c: Clauses, chain: Seq[ChainRel], clIdx: Int)
+        extends Route
+    /** An aggregate over a two-changelog join ([[parseJoinAgg]]) —
+      * StreamExecJoin feeding StreamExecGroupAggregate: the join's +I/-D
+      * delta stream re-keys on the GROUP BY columns into the TWS
+      * aggregate, two keyed exchanges per micro-batch (equi-key into the
+      * join, group key into the aggregate — the same two shuffles
+      * Flink's topology has). */
+    final case class JoinAgg(join: StreamJoinShape, level: AggLevel)
+        extends Aggregate
+    /** A two-changelog join ([[joinChangelogStream]]). */
+    final case class Join(shape: StreamJoinShape) extends Subquery
+  }
+
+  /** The route of INSERT body `select`, or None when it is no continuous
+    * changelog statement (the append path's). First match wins, in this
+    * order: top-N over a subquery, top-N, aggregate over an aggregate,
+    * COUNT(DISTINCT) over one changelog, sign-algebra aggregate,
+    * aggregate over a two-changelog join, two-changelog join. A shape a
+    * route owns but cannot lower (a malformed join, a bad subquery)
+    * rejects here with that route's error — never with the append
+    * path's misleading watermark complaint. */
+  private[graft] def route(spark: SparkSession, select: String): Option[Route] =
+    parseStreamTopNOverAgg(spark, select).map { case (shape, inner) =>
+      Route.TopNAgg(shape, subqueryRoute(spark, inner)): Route
+    }.orElse(parseStreamTopN(spark, select).map(shape =>
+      Route.TopN(shape, topNFastEligible(spark, shape))))
+    .orElse(parse(select).flatMap { c =>
+      def aggregates = c.groupBy.isDefined || joinSelectHasAgg(spark, c)
+      val nested =
+        if (aggregates) parenSubquery(c.relation).filter { case (inner, _) =>
+          refsChangelogDeep(spark, inner)
+        }
+        else None
+      def countsDistinct = c.relation.trim match {
+        case RelRe(n, _) if isChangelogRel(spark, n) =>
+          """(?is)\bCOUNT\s*\(\s*DISTINCT\b""".r
+            .findFirstIn(blank(c.selectList)).isDefined
+        case _ => false
+      }
+      nested.map { case (inner, alias) => Route.NestedAgg(c, inner, alias) }
+        .orElse(Option.when(countsDistinct)(Route.RelAgg(c)))
+        .orElse(signAggChain(spark, c).map { case (chain, i) =>
+          Route.SignAgg(c, chain, i) })
+        .orElse(Option.when(readsTwoChangelogs(spark, c))(
+          if (c.having.isDefined || aggregates) parseJoinAgg(spark, c)
+          else Route.Join(parseStreamJoinShape(spark, c))))
+    })
+
+  /** Does FROM join two (or more) changelog relations? (Everything
+    * about the shape beyond this — INNER-ness, equi-ON, bare-column
+    * select — is validated LOUDLY by the join parse.) */
+  private def readsTwoChangelogs(spark: SparkSession, c: Clauses): Boolean =
+    parseJoinChain(c.relation).exists(
+      _.count(r => isChangelogRel(spark, r.name)) >= 2)
+
+  /** The route of a composed statement's subquery `sel`: an aggregate of
+    * a deeper subquery, a plain two-changelog join, an aggregate of a
+    * two-changelog join, else an aggregate of ONE changelog relation. */
+  private def subqueryRoute(spark: SparkSession, sel: String): Route.Subquery = {
+    val c = parse(sel).getOrElse(failWith(
+      "continuous aggregate over a changelog")(s"unparseable inner statement: $sel"))
+    parenSubquery(c.relation) match {
+      case Some((deeper, alias)) => Route.NestedAgg(c, deeper, alias)
+      case None if readsTwoChangelogs(spark, c) =>
+        if (c.groupBy.isDefined || c.having.isDefined ||
+            joinSelectHasAgg(spark, c)) parseJoinAgg(spark, c)
+        else Route.Join(parseStreamJoinShape(spark, c))
+      case None => Route.RelAgg(c)
+    }
+  }
+
+  private val RetractRank =
+    "RetractStrategy (RetractableTopNFunction: MapState dataState + sorted counts)"
+  private val ByGroupKey = " -> upsert changelog keyed by the GROUP BY columns"
+
+  /** The route line EXPLAIN CHANGELOG_MODE prints for a statement on
+    * route `r`: the operator chain, and the sink encoding it writes. */
+  private def routeLine(spark: SparkSession, r: Route): String = r match {
+    case Route.TopNAgg(shape, inner) =>
+      subqueryLine(spark, inner) + s" -> continuous top-N, $RetractRank " +
+        s"over (${(shape.parts :+ shape.rnAlias).mkString(", ")}) " +
+        "-> upsert changelog keyed by (partition columns, rank)"
+    case Route.TopN(_, fast) =>
+      val strategy =
+        if (fast) "UpdateFastStrategy (FastTop1Function: O(1) leader state)"
+        else RetractRank
+      s"continuous top-N, $strategy -> upsert changelog keyed by " +
+        "(partition columns, rank)"
+    case _: Route.NestedAgg =>
+      "two-level continuous aggregation (inner GROUP AGGREGATE in " +
+        "RETRACT pair emission -> outer GROUP AGGREGATE, both " +
+        "GroupAggFunction on transformWithState) -> upsert changelog " +
+        "keyed by the OUTER GROUP BY columns"
+    case _: Route.RelAgg =>
+      "continuous retraction-consuming aggregate (GroupAggFunction " +
+        "on transformWithState — COUNT DISTINCT via counted-value " +
+        "MapState)" + ByGroupKey
+    case _: Route.SignAgg =>
+      "continuous retraction-consuming aggregate (update mode)" + ByGroupKey
+    case Route.JoinAgg(join, level) => joinAggLine(spark, join, level) + ByGroupKey
+    case Route.Join(sh) =>
+      joinExplainCore(spark, sh) + " -> retract changelog sink (+I/-D)"
+  }
+
+  /** The stage line of a subquery route inside a composed statement. */
+  private def subqueryLine(spark: SparkSession, r: Route.Subquery): String =
+    r match {
+      case _: Route.NestedAgg =>
         "nested continuous aggregation tree (one GROUP AGGREGATE per " +
           "level, each in RETRACT pair emission)"
-      else if (plainJoin)
-        joinExplainCore(spark, parseStreamJoinShape(spark, inner)) +
-          " [retract +I/-D emission]"
-      else if (twoChangelogs)
-        streamJoinAggExplainText(spark, inner).stripSuffix(
-          " -> upsert changelog keyed by the GROUP BY columns") +
-          " [RETRACT pair emission]"
-      else {
-        val rsh = parseRelAggShape(spark, inner)
+      case Route.RelAgg(c) =>
+        val (rel, _, level) = relAggLevel(spark, c)
         "retraction-consuming GROUP AGGREGATE (GroupAggFunction on " +
-          s"transformWithState) over ${rsh.rel} — group key: (" +
-          rsh.groupItems.map(_._2).mkString(", ") + "); aggregates: " +
-          rsh.aggs.map(a => a.srcText + " AS " + a.out).mkString(", ") +
-          rsh.having.map(h => s"; HAVING $h").getOrElse("") +
+          s"transformWithState) over $rel — group key: (" +
+          level.groupItems.map(_._3).mkString(", ") + "); aggregates: " +
+          level.aggs.map(a => a.srcText + " AS " + a.out).mkString(", ") +
+          level.c.having.map(h => s"; HAVING $h").getOrElse("") +
           " [RETRACT pair emission]"
-      }
-    innerLine + " -> continuous top-N, RetractStrategy " +
-      "(RetractableTopNFunction: MapState dataState + sorted counts) " +
-      s"over (${(shape.parts :+ shape.rnAlias).mkString(", ")}) " +
-      "-> upsert changelog keyed by (partition columns, rank)"
+      case Route.JoinAgg(join, level) =>
+        joinAggLine(spark, join, level) + " [RETRACT pair emission]"
+      case Route.Join(sh) =>
+        joinExplainCore(spark, sh) + " [retract +I/-D emission]"
+    }
+
+  /** The join operator feeding the retraction-consuming group aggregate,
+    * one topology. */
+  private def joinAggLine(spark: SparkSession, join: StreamJoinShape,
+      level: AggLevel): String = {
+    val keys =
+      if (level.groupItems.isEmpty) "GLOBAL"
+      else level.groupItems.map(_._3).mkString(", ")
+    val aggList = level.aggs.map(a => a.srcText + " AS " + a.out).mkString(", ")
+    joinExplainCore(spark, join) +
+      " -> retraction-consuming GROUP AGGREGATE (GroupAggFunction on " +
+      "transformWithState; per-group scalar accumulators, counted-value " +
+      "MapState for MIN/MAX/COUNT DISTINCT with the current extreme " +
+      s"cached) — group key: ($keys); aggregates: $aggList" +
+      level.c.having.map(h => s"; HAVING $h").getOrElse("")
   }
 
-  /** Keep-last collapse of a [[streamInsert]] sink: the CURRENT
-    * aggregate state per key (rows whose latest change is a -D are
-    * gone) — what an external upsert sink's compacted view would show.
+  /** Lower aggregate route `r` onto [[aggLevel]] over its input stream:
+    * the relation's retract stream, the join's delta stream, or — for an
+    * aggregate over an aggregate — the deeper level's retract pairs (the
+    * recursion behind arbitrary-depth aggregation trees). `bad` words
+    * the enclosing statement's errors. */
+  private def lowerAgg(spark: SparkSession, r: Route.Aggregate,
+      retract: Boolean, bad: String => Nothing): (DataFrame, Seq[String]) =
+    r match {
+      case Route.NestedAgg(c, inner, alias) =>
+        if (!(c.groupBy.isDefined || joinSelectHasAgg(spark, c))) bad(
+          "a nested subquery level must aggregate (plain projections " +
+            "fold into the level above); got: " + c.selectList)
+        val src = subqueryStream(spark, subqueryRoute(spark, inner), bad)
+        val name = alias.getOrElse("")
+        val cols = src.columns.toSeq.filterNot(_ == streaming.Cdc.RowKind)
+        val level = parseAggLevel(c, singleScope(name, cols, n =>
+          s"column $n is not an output of the inner aggregate " +
+            s"(outputs: ${cols.mkString(", ")})", bad), bad)
+        aggLevel(spark, level, if (name.isEmpty) src else src.alias(name),
+          retract, bad)
+      case Route.RelAgg(c) =>
+        val (rel, name, level) = relAggLevel(spark, c)
+        aggLevel(spark, level, retractStreamOf(spark, rel).alias(name),
+          retract, bad)
+      case Route.JoinAgg(join, level) =>
+        aggLevel(spark, level, joinChangelogStream(spark, join), retract, bad)
+    }
+
+  /** A subquery route's RETRACT changelog (row_kind + output columns):
+    * a plain join's +I/-D delta stream (the rank-over-join plan —
+    * StreamExecJoin feeding StreamExecRank directly), or an aggregate
+    * level in retract-pair emission. */
+  private def subqueryStream(spark: SparkSession, r: Route.Subquery,
+      bad: String => Nothing): DataFrame = r match {
+    case Route.Join(sh) => joinChangelogStream(spark, sh)
+    case agg: Route.Aggregate => lowerAgg(spark, agg, retract = true, bad)._1
+  }
+
+  /** Lower route `r` and start it as the continuous query that writes
+    * `sink`: an upsert changelog keyed by the GROUP BY columns (the
+    * aggregates) or by (partition columns, rank) (the top-N routes)
+    * through [[upsertSinkWriter]], or the join's RETRACT changelog
+    * (+I/-D with multiplicity, no upsert key) appended to a plain table.
+    * Every route but the sign-algebra aggregate runs transformWithState
+    * operators and pins the RocksDB provider. */
+  private[graft] def start(spark: SparkSession, sink: String, r: Route,
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val (log, outputMode, write) = r match {
+      case Route.TopNAgg(shape, inner) =>
+        val src = subqueryStream(spark, inner,
+          failWith("continuous top-N over an aggregate"))
+        val (out, keys) = topNLog(spark, shape, src, fast = false)
+        (out, "append", upsertSinkWriter(spark, sink, keys))
+      case Route.TopN(shape, fast) =>
+        // UpdateFastStrategy reads the upsert stream RAW (no
+        // ChangelogNormalize — the whole point: the leader can never be
+        // demoted, so no retraction state is needed)
+        val src =
+          if (fast) changelogReadStream(spark, shape.rel)
+          else retractStreamOf(spark, shape.rel)
+        val (out, keys) = topNLog(spark, shape, src, fast)
+        (out, "append", upsertSinkWriter(spark, sink, keys))
+      case Route.SignAgg(c, chain, clIdx) =>
+        val (df, keys, monotoneCols) = signAgg(spark, c, chain, clIdx)
+        (upsertLog(df), "update",
+          upsertSinkWriter(spark, sink, keys, monotoneCols))
+      case Route.Join(sh) =>
+        // connector sinks consume KEYED upserts; a retract changelog has none
+        val sinkProps = scala.util.Try(WatermarkDdl.tableOptions(spark, sink))
+          .getOrElse(Map.empty[String, String])
+        sinkProps.get("connector").foreach(conn =>
+          throw new IllegalArgumentException(
+            s"continuous JOIN into '$conn' table $sink: the join emits a " +
+              "RETRACT changelog (+I/-D with multiplicity, no upsert key) " +
+              "that keyed connector sinks cannot consume; land it in a plain " +
+              "table (FINAL_STATE(sink) reads the live result) or aggregate " +
+              "it with its own continuous statement"))
+        (joinChangelogStream(spark, sh), "append",
+          (log: DataFrame, _: Long) => log.write.mode("append").saveAsTable(sink))
+      case agg: Route.Aggregate =>
+        val what = agg match {
+          case _: Route.NestedAgg => "continuous aggregate over an aggregate"
+          case _: Route.RelAgg => "continuous aggregate over a changelog"
+          case _: Route.JoinAgg =>
+            "continuous aggregate over a two-changelog JOIN"
+        }
+        val (log, keys) = lowerAgg(spark, agg, retract = false, failWith(what))
+        (log, "append", upsertSinkWriter(spark, sink, keys))
+    }
+    startChangelog(spark, log, outputMode, write,
+      rocksDb = !r.isInstanceOf[Route.SignAgg], checkpointDir)
+  }
+
+  /** Keep-last collapse of an upsert sink a continuous route writes:
+    * the CURRENT aggregate state per key (rows whose latest change is a
+    * -D are gone) — what an external upsert sink's compacted view would show.
     * Keys default to the ones the stream recorded in TBLPROPERTIES. */
   def materializeUpsertSink(spark: SparkSession, sink: String,
       keys: Seq[String] = Seq.empty): DataFrame = {

@@ -174,33 +174,10 @@ object Engine {
   private def streamInsertExplainText(
       spark: SparkSession, sink: String, select: String): String = {
     import spark.implicits._
-    val route =
-      if (ChangelogSql.streamTopNAggMatches(spark, select))
-        ChangelogSql.streamTopNAggExplainText(spark, select)
-      else if (ChangelogSql.streamTopNMatches(spark, select))
-        s"continuous top-N, ${ChangelogSql.streamTopNStrategy(spark,
-          select).get} -> upsert changelog keyed by (partition " +
-          "columns, rank)"
-      else if (ChangelogSql.streamNestedAggMatches(spark, select))
-        "two-level continuous aggregation (inner GROUP AGGREGATE in " +
-          "RETRACT pair emission -> outer GROUP AGGREGATE, both " +
-          "GroupAggFunction on transformWithState) -> upsert changelog " +
-          "keyed by the OUTER GROUP BY columns"
-      else if (ChangelogSql.streamRelAggDistinctMatches(spark, select))
-        "continuous retraction-consuming aggregate (GroupAggFunction " +
-          "on transformWithState — COUNT DISTINCT via counted-value " +
-          "MapState) -> upsert changelog keyed by the GROUP BY columns"
-      else if (ChangelogSql.streamMatches(spark, select))
-        "continuous retraction-consuming aggregate (update mode) " +
-          "-> upsert changelog keyed by the GROUP BY columns"
-      else if (ChangelogSql.streamJoinAggMatches(spark, select))
-        ChangelogSql.streamJoinAggExplainText(spark, select)
-      else if (ChangelogSql.streamJoinMatches(spark, select))
-        ChangelogSql.streamJoinExplainText(spark, select)
-      else
-        "append INSERT (continuous append-mode when a referenced " +
-          "source declares WATERMARK/PROCTIME, plain batch write " +
-          "otherwise)"
+    val route = ChangelogSql.route(spark, select).fold(
+      "append INSERT (continuous append-mode when a referenced source " +
+        "declares WATERMARK/PROCTIME, plain batch write otherwise)")(
+      _.line(spark))
     val inner = ChangelogSql.explainChangelog(spark, select)
       .as[String].collect().head
     s"== Streaming Insert ==\n  sink: $sink\n  route: $route\n\n$inner"
@@ -576,44 +553,13 @@ object Engine {
             "BATCH read; a continuous INSERT reads the changelog " +
             "directly (the retraction-consuming operators maintain the " +
             "live state incrementally)")
-        // retractable TOP-N over a changelog (RetractableTopNFunction):
-        // ROW_NUMBER() OVER (PARTITION BY ... ORDER BY ...) WHERE rn<=N
-        // in the FROM-subquery shape lowers onto the sorted per-key
-        // state operator, refreshing the sink as an upsert changelog
-        // composed rank over an aggregate (StreamExecGroupAggregate ->
-        // StreamExecRank): the inner aggregate (bare changelog or a
-        // two-changelog join) emits retract pairs into the sorted
-        // top-N port — up to FOUR chained stateful operators
-        if (ChangelogSql.streamTopNAggMatches(spark, select))
-          return ChangelogSql.streamTopNAgg(spark, statement, checkpointDir)
-        if (ChangelogSql.streamTopNMatches(spark, select))
-          return ChangelogSql.streamTopN(spark, statement, checkpointDir)
-        // two-level rollup: an aggregate over an aggregate subquery
-        // (StreamExecGroupAggregate feeding a second one — the inner
-        // emits retract pairs, the outer consumes them)
-        if (ChangelogSql.streamNestedAggMatches(spark, select))
-          return ChangelogSql.streamNestedAgg(spark, statement, checkpointDir)
-        // COUNT(DISTINCT) over one changelog: the one aggregate the
-        // sign-algebra route cannot express (Spark bans distinct
-        // aggregation on streams) lowers onto the TWS aggregate
-        if (ChangelogSql.streamRelAggDistinctMatches(spark, select))
-          return ChangelogSql.streamRelAgg(spark, statement, checkpointDir)
-        if (ChangelogSql.streamMatches(spark, select))
-          return ChangelogSql.streamInsert(spark, statement, checkpointDir)
-        // AGGREGATE over a two-changelog join (StreamExecJoin feeding
-        // StreamExecGroupAggregate — one composed continuous topology):
-        // the join's delta stream chains into the retraction-consuming
-        // TWS group aggregate, upsert changelog keyed by GROUP BY.
-        if (ChangelogSql.streamJoinAggMatches(spark, select))
-          return ChangelogSql.streamJoinAgg(spark, statement, checkpointDir)
-        // TWO-SIDED retraction join (StreamExecJoin.java:132): both
-        // FROM relations are changelogs — one continuous statement,
-        // counted-multiset state per side per equi-key, retract
-        // changelog into the sink. Inadmissible variants (multi-way,
-        // cross-side WHERE, non-equi ON) reject inside with the join
-        // path's specific error, never the watermark complaint below.
-        if (ChangelogSql.streamJoinMatches(spark, select))
-          return ChangelogSql.streamJoin(spark, statement, checkpointDir)
+        // the continuous changelog routes (ChangelogSql.route):
+        // inadmissible variants of a shape a route owns reject there
+        // with that route's specific error, never the watermark
+        // complaint below
+        val route = ChangelogSql.route(spark, select)
+        if (route.isDefined)
+          return ChangelogSql.start(spark, sink, route.get, checkpointDir)
         // a declared PROCTIME() attribute also marks a streaming source:
         // proc-time pipelines (arrival-order OVER etc.) legitimately have
         // no watermark at all

@@ -107,12 +107,10 @@ object SqlComposer {
   /** Index of the ')' matching the '(' at char offset `open` — walked on
     * tokens, so parens inside literals/comments can never desync it. */
   private def matchParen(b: String, open: Int): Int = {
-    val t = toks(b)
-    val oi = t.indexWhere(tt => tt.start == open && tt.kind == Kind.LParen)
-    val ci = if (oi < 0) -1 else SqlTokens.matchParen(t, oi)
-    if (ci < 0) throw new IllegalArgumentException(
+    val close = graft.util.SqlSplit.matchParen(b, open)
+    if (close < 0) throw new IllegalArgumentException(
       s"unbalanced parentheses in SQL statement at offset $open")
-    t(ci).start
+    close
   }
 
   /** Outermost `( SELECT ...)` spans as (open, close) char offsets —

@@ -55,7 +55,7 @@ class SqlGateway(spark: SparkSession, port: Int = 0,
     /** Stop every running job and reclaim the checkpoint directory. */
     def stopJobs(): Unit = {
       jobs.foreach(q => try q.stop() catch { case _: Exception => () })
-      Option(checkpoint).foreach(SqlGateway.deleteRecursively)
+      Option(checkpoint).foreach(graft.util.FileTree.deleteRecursively)
     }
     @volatile var columns: Seq[String] = Nil
     @volatile var truncated = false
@@ -364,7 +364,7 @@ class SqlGateway(spark: SparkSession, port: Int = 0,
                                 "INSERT INTO members only")) =>
                         // nothing streamed: reclaim the checkpoint tree
                         op.checkpoint = null
-                        SqlGateway.deleteRecursively(ckptPath)
+                        graft.util.FileTree.deleteRecursively(ckptPath)
                         false
                     }
                   }
@@ -467,19 +467,6 @@ object SqlGateway {
     * cancel() kills by, and the handle tests/tools use to observe an
     * operation's jobs via SparkStatusTracker.getJobIdsForTag. */
   private[graft] def tagOf(oh: String): String = s"graft-gateway-$oh"
-
-  /** Recursive best-effort delete of an operation's checkpoint tree —
-    * `Files.deleteIfExists` alone silently no-ops once a stream has
-    * written anything into the directory. */
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    try {
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-        finally walk.close()
-      }
-    } catch { case _: Exception => () }
 
   /** CLI entry: start the gateway over the fixture catalog and block.
     * Usage: runMain graft.SqlGateway <sfDir> [port]. */

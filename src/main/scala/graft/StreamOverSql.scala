@@ -85,20 +85,6 @@ object StreamOverSql {
   private def blanked(s: String): String =
     graft.util.SqlSplit.blankLiterals(s)
 
-  private def matchParen(b: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < b.length) {
-      b(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
-
   private val SelRe =
     """(?is)^\s*SELECT\s+(.+?)\s+FROM\s+`?(\w+)`?\s*(?:\bWHERE\s+(.+?))?\s*;?\s*$""".r
   private val OverItemRe =
@@ -235,7 +221,7 @@ object StreamOverSql {
     if ("""(?is)\bOVER\s*\(""".r.findFirstIn(b).isEmpty) return None
     val head = FromSubHeadRe.findFirstMatchIn(b).getOrElse(return None)
     val open = head.end - 1
-    val close = matchParen(b, open)
+    val close = graft.util.SqlSplit.matchParen(b, open)
     if (close < 0) return None
     val inner = select.substring(open + 1, close).trim
     if (!inner.regionMatches(true, 0, "SELECT", 0, 6)) return None

@@ -254,17 +254,10 @@ object WindowTvfSql {
   }
 
   private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"window TVF: unbalanced parentheses in: $s")
+    val close = SqlSplit.matchParen(s, open)
+    if (close < 0) throw new IllegalArgumentException(
+      s"window TVF: unbalanced parentheses in: $s")
+    close
   }
 
   private val TableRe = """(?is)\s*TABLE\s+(\w+)(?:\s+PARTITION\s+BY\s+(.+?))?\s*""".r

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Engine, GQuery, QueryModule, Tables}
-import graft.util.Conf
+import graft.util.{Conf, FileTree}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,14 +25,17 @@ object SinkOps extends QueryModule {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.values().forEach { d =>
-        def rm(f: java.io.File): Unit = {
-          val ch = f.listFiles(); if (ch != null) ch.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(d))
-      }, "graft-sink-scratch-cleanup"))
+      scratchDirs.values().forEach(d =>
+        FileTree.deleteRecursively(java.nio.file.Paths.get(d))),
+      "graft-sink-scratch-cleanup"))
   }
+  /** Stops a continuous gate's query, then deletes its checkpoint tree
+    * (a fresh temp dir per gate run). */
+  private def stopGate(q: org.apache.spark.sql.streaming.StreamingQuery,
+      checkpoint: String): Unit =
+    try q.stop()
+    finally FileTree.deleteRecursively(java.nio.file.Paths.get(checkpoint))
+
   private def scratchDir(tag: String): String =
     scratchDirs.computeIfAbsent(tag,
       t => java.nio.file.Files.createTempDirectory(t).toString)
@@ -525,9 +528,10 @@ object SinkOps extends QueryModule {
 
     GQuery(
       // UPSERT-MODE CHANGELOG NORMALIZATION (r12): a relation declared
-      // upsert (graft.upsert.keys — the encoding ChangelogSql.streamInsert
-      // writes and Flink's upsert-kafka carries: +U/-D keyed, NO -U) must
-      // normalize to its CURRENT state before any read
+      // upsert (graft.upsert.keys — the encoding the continuous
+      // ChangelogSql routes write and Flink's upsert-kafka carries:
+      // +U/-D keyed, NO -U) must normalize to its CURRENT state before
+      // any read
       // (StreamExecChangelogNormalize): two +U rows for one key are ONE
       // logical row, so the retract netting — and plain SQL even more so —
       // would double-count. History: every order +U at seq 1, keys %10=0
@@ -713,7 +717,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(c2); q.processAllAvailable()
           append(c3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderpriority", $"o_orderkey",
             $"price".cast("double").as("price"), $"rn")
@@ -791,7 +795,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(v2); q.processAllAvailable()
           append(dels); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderpriority", $"n", $"total".cast("double").as("total"),
             $"lo".cast("double").as("lo"))
@@ -921,7 +925,7 @@ object SinkOps extends QueryModule {
           try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
           finally s.catalog.dropTempView(s"__${t}_in"): Unit
           q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderstatus", $"o_orderkey", $"skey", $"rn")
           .orderBy($"o_orderstatus", $"rn")
@@ -985,7 +989,7 @@ object SinkOps extends QueryModule {
           try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
           finally s.catalog.dropTempView(s"__${t}_in"): Unit
           q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderpriority", $"o_orderkey",
             $"dval".cast("double").as("dval"), $"rn")
@@ -1010,7 +1014,7 @@ object SinkOps extends QueryModule {
       // FAST TOP-1 END TO END (r14, FastTop1Function.java:54 /
       // RankProcessStrategy.UpdateFastStrategy): the full derivation
       // chain under the oracle gate — an INSERT-ONLY-declared source
-      // feeds a continuous MAX aggregate (streamInsert records the
+      // feeds a continuous MAX aggregate (the sign-algebra route records the
       // monotone column on its sink), and a DESC top-1 statement over
       // that sink plan-routes onto the O(1)-leader-state operator while
       // BOTH streams run across two commits (the leader changes when
@@ -1063,8 +1067,8 @@ object SinkOps extends QueryModule {
             finally s.catalog.dropTempView(s"__${t}_in"): Unit
             qa.processAllAvailable()
             qt.processAllAvailable()
-          } finally qt.stop()
-        } finally qa.stop()
+          } finally stopGate(qt, ck2)
+        } finally stopGate(qa, ck1)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderpriority", $"mx", $"rn")
           .orderBy($"rn")
@@ -1126,7 +1130,7 @@ object SinkOps extends QueryModule {
           try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
           finally s.catalog.dropTempView(s"__${t}_in"): Unit
           q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderstatus", $"o_orderpriority",
             $"dval".cast("double").as("dval"), $"o_orderkey", $"rn")
@@ -1222,7 +1226,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(lt, l2); append(rt, r2); q.processAllAvailable()
           append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         s.catalog.refreshTable(sink)
         Engine.sql(s,
           s"SELECT o_orderkey, price, name FROM FINAL_STATE($sink)")
@@ -1316,7 +1320,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(lt, l2); append(rt, r2); q.processAllAvailable()
           append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         s.catalog.refreshTable(sink)
         // NULL pads read back under a marker: the oracle compare is
         // exact-value over sorted frames, and None==None is not equal
@@ -1428,7 +1432,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(lt, l2); append(rt, r2); q.processAllAvailable()
           append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"seg", $"cnt", $"custs",
             $"rev".cast("double").as("rev"),
@@ -1537,7 +1541,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(lt, l2); append(rt, r2); q.processAllAvailable()
           append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"seg", $"rev".cast("double").as("rev"),
             $"rn".cast("long").as("rn"))
@@ -1621,7 +1625,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(c2); q.processAllAvailable()
           append(c3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"prio", $"custs", $"cnt",
             $"rev".cast("double").as("rev"))
@@ -1699,7 +1703,7 @@ object SinkOps extends QueryModule {
           q.processAllAvailable()
           append(c2); q.processAllAvailable()
           append(c3); q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"prio", $"custs",
             $"total".cast("double").as("total"),
@@ -1773,7 +1777,7 @@ object SinkOps extends QueryModule {
           try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
           finally s.catalog.dropTempView(s"__${t}_in"): Unit
           q.processAllAvailable()
-        } finally q.stop()
+        } finally stopGate(q, ckpt)
         graft.ChangelogSql.materializeUpsertSink(s, sink)
           .select($"o_orderstatus", $"o_orderpriority",
             $"price".cast("double").as("price"), $"o_orderkey", $"rn")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming._
   * is flink-table-runtime/.../aggregate/GroupAggFunction.java:43 with
   * the retractable MIN/MAX data views of MinWithRetractAggFunction.java).
   *
-  * Why TWS and not the sign-algebra SQL rewrite `ChangelogSql.streamAgg`
+  * Why TWS and not the sign-algebra SQL rewrite `ChangelogSql.signAgg`
   * uses: that rewrite is a NATIVE update-mode streaming aggregation, and
   * Spark only composes stateful operators in APPEND mode — an
   * update-mode aggregate cannot sit downstream of the join's

@@ -118,6 +118,18 @@ object SqlSplit {
     * there exactly once. */
   def blankLiterals(s: String): String = SqlTokens.blank(s)
 
+  /** Offset of the ')' matching the '(' at char offset `open` of `s`
+    * (raw or blanked text), or -1 when no '(' token starts there or it
+    * never closes — a TOKEN walk ([[SqlTokens.matchParen]]), so a paren
+    * inside a literal, a backticked identifier or a comment never
+    * counts. */
+  def matchParen(s: String, open: Int): Int = {
+    val toks = SqlTokens.tokenize(s)
+    val oi = toks.indexWhere(t => t.start == open && t.kind == SqlTokens.Kind.LParen)
+    val ci = if (oi < 0) -1 else SqlTokens.matchParen(toks, oi)
+    if (ci < 0) -1 else toks(ci).start
+  }
+
   /** Top-level comma split — a TOKEN walk: commas inside parentheses,
     * string literals, backticked identifiers, comments, or (with
     * `angleTypes`) type-argument angle brackets never split. */

@@ -3,8 +3,9 @@ package graft.util
 /** Serializes streaming-query starts that PIN session configuration
   * around `.start()` (the RocksDB state-store provider for
   * transformWithState lowerings, `spark.sql.shuffle.partitions` for
-  * per-job state sizing — the set/restore pattern in
-  * `ChangelogSql.streamTopN` / `withStateSizing`).
+  * per-job state sizing — the set/restore pattern of
+  * `ChangelogSql.startChangelog`, the one start every continuous
+  * changelog route goes through).
   *
   * Why a lock and not a cloned session: `DataStreamWriter.start()`
   * snapshots the conf of the session the DataFrame is BOUND to, and the

@@ -18,6 +18,15 @@ class ChangelogUpsertSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val h = math.abs(getClass.getName.hashCode)
 
+  /** Starts `select` into `sink` on the sign-algebra route, which must be
+    * the route chosen for it. */
+  private def startSignAgg(sink: String, select: String, ckpt: String) =
+    ChangelogSql.route(spark, select) match {
+      case Some(r: ChangelogSql.Route.SignAgg) =>
+        ChangelogSql.start(spark, sink, r, ckpt)
+      case other => fail(s"expected the sign-algebra route, got $other")
+    }
+
   /** An upsert changelog table: k1 set twice (4.0 then 7.5), k2 set then
     * deleted, k3 set once. Current state: k1=7.5, k3=2.0. */
   private def mkUpsertTable(t: String): Unit = {
@@ -79,7 +88,7 @@ class ChangelogUpsertSpec extends AnyFunSuite {
   }
 
   test("a streamInsert sink re-queried through the front door equals its materialization") {
-    // the loop-closer: ChangelogSql.streamInsert writes an upsert
+    // the loop-closer: the sign-algebra route writes an upsert
     // changelog and declares graft.upsert.keys on it; a plain aggregate
     // over that sink must therefore aggregate the CURRENT groups — not
     // the +U/-D history rows
@@ -98,9 +107,8 @@ class ChangelogUpsertSpec extends AnyFunSuite {
       spark.catalog.dropTempView(s"__${src}_in"): Unit
     }
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ups-loop").toString
-    val q = ChangelogSql.streamInsert(spark,
-      s"INSERT INTO $sink SELECT g, COUNT(*) AS n, SUM(x) AS total FROM $src GROUP BY g",
-      ckpt)
+    val q = startSignAgg(sink,
+      s"SELECT g, COUNT(*) AS n, SUM(x) AS total FROM $src GROUP BY g", ckpt)
     try {
       put(("+I", 1L, "g1", 10.0), ("+I", 1L, "g2", 5.0))
       q.processAllAvailable()
@@ -270,9 +278,9 @@ class ChangelogUpsertSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $sink")
     mkUpsertTable(t)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ups-chain").toString
-    val q = ChangelogSql.streamInsert(spark,
-      s"INSERT INTO $sink SELECT k, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) " +
-        s"AS total FROM $t GROUP BY k", ckpt)
+    val q = startSignAgg(sink,
+      s"SELECT k, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS total FROM $t " +
+        "GROUP BY k", ckpt)
     try {
       q.processAllAvailable()
       val got = ChangelogSql.materializeUpsertSink(spark, sink)

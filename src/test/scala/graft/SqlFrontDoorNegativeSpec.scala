@@ -493,6 +493,17 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
       ands.toString)
   }
 
+  test("paren boundary: parens in literals, backticks, comments are inert") {
+    import graft.util.SqlSplit.matchParen
+    val s = "f(a, ')', `b)`, /* ) */ g(c)) + (d"
+    assert(matchParen(s, 1) == s.indexOf(") +"))
+    assert(matchParen(s, s.indexOf("g(") + 1) == s.indexOf(")) +"))
+    // the same offsets on the blanked text
+    assert(matchParen(graft.util.SqlSplit.blankLiterals(s), 1) == s.indexOf(") +"))
+    assert(matchParen(s, s.lastIndexOf('(')) == -1, "unclosed")
+    assert(matchParen(s, 0) == -1, "no '(' at the offset")
+  }
+
   test("window TVF boundary: literal parens/commas inside TVF-adjacent text") {
     import spark.implicits._
     evRows.createOrReplaceTempView("neg_ev_tvf")
