@@ -23,6 +23,7 @@ object SparkEntry {
     MultimodalOps,
     GraphOps,
     SinkOps,
+    ContinuousGates,
     RetractOps,
     TopKAgg)
 

@@ -81,11 +81,6 @@ object SqlHints {
     "table", "async", "output-mode", "capacity", "timeout",
     "retry-predicate", "retry-strategy", "fixed-delay", "max-attempts")
 
-  /** Cheap pre-check: any `&#47;*+` comment token present. */
-  def hasHints(query: String): Boolean =
-    SqlTokens.tokenize(query).exists(t =>
-      t.kind == Kind.Comment && t.text(query).startsWith("/*+"))
-
   // ---------------------------------------------------------- parsing
 
   private final case class RawHint(name: String, idents: Seq[String],

@@ -159,9 +159,4 @@ object Similar {
   def similarTo(str: Column, pattern: String,
                 escape: Option[Char] = Some('\\')): Column =
     str.rlike(toAnchoredRegex(pattern, escape))
-
-  /** NOT SIMILAR TO — null-preserving negation. */
-  def notSimilarTo(str: Column, pattern: String,
-                   escape: Option[Char] = Some('\\')): Column =
-    !similarTo(str, pattern, escape)
 }

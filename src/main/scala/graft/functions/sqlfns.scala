@@ -31,11 +31,6 @@ object sqlfns {
   /** IS_ALPHA(str): all characters are letters. */
   def isAlpha(c: Column): Column = c.rlike("^[A-Za-z]+$")
 
-  /** LISTAGG with deterministic ordering (Flink's LISTAGG over a sorted
-    * group; Spark's collect_list order is partition-dependent, so sort). */
-  def listAgg(c: Column, sep: String): Column =
-    array_join(array_sort(collect_list(c)), sep)
-
   // --- SQL/JSON-path functions (BuiltInFunctionDefinitions.java:1825-1951,
   // runtime semantics in flink-table-runtime .../SqlJsonUtils.java). Built
   // on Spark's codegen'd get_json_object, which implements the same lax

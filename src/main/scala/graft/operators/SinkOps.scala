@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{Engine, GQuery, QueryModule, Tables}
-import graft.util.{Conf, FileTree}
+import graft.operators.ChangelogHistory._
+import graft.util.FileTree
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,40 +30,17 @@ object SinkOps extends QueryModule {
         FileTree.deleteRecursively(java.nio.file.Paths.get(d))),
       "graft-sink-scratch-cleanup"))
   }
-  /** Stops a continuous gate's query, then deletes its checkpoint tree
-    * (a fresh temp dir per gate run). */
-  private def stopGate(q: org.apache.spark.sql.streaming.StreamingQuery,
-      checkpoint: String): Unit =
-    try q.stop()
-    finally FileTree.deleteRecursively(java.nio.file.Paths.get(checkpoint))
-
   private def scratchDir(tag: String): String =
     scratchDirs.computeIfAbsent(tag,
       t => java.nio.file.Files.createTempDirectory(t).toString)
 
-  /** SIZE the continuous gates' state partitions to their workload
-    * (Flink's per-job parallelism lever, honored by the streaming front
-    * door via `graft.stream.statePartitions`): these gates run
-    * small-state jobs over a handful of keys — 8 state stores per
-    * stateful operator, not one per batch-sized shuffle partition. A
-    * production job sizes the same knob UP for large keyspaces. */
-  private def withSmallStreamState[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    Conf.scoped(s, "graft.stream.statePartitions" -> "8")(body)
-
-  /** MERGE each commit round's MULTI-TABLE appends into one micro-batch
-    * (optimization guide §2.2 "fewer, larger"): a two-source continuous
-    * statement under the default zero-interval trigger polls BETWEEN the
-    * two INSERTs of one logical commit round and splits the round into
-    * one micro-batch per source — pure per-batch machinery paid twice.
-    * A poll interval above the append latency lets both appends land
-    * before the next poll. The final state is identical either way (the
-    * normalize/join/agg operators are deterministic over the same total
-    * input and the gates materialize FINAL_STATE); measured on q163:
-    * both commit rounds merge, round walls 3.4→2.8 s and 2.1→1.6 s. */
-  private def withCommitCoalescedTrigger[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    Conf.scoped(s, "graft.stream.triggerIntervalMs" -> "1000")(body)
+  /** Debezium envelopes of an orders history's `Images` rounds: op
+    * c/u/d, `ts_ms` the commit round. */
+  private def debezium(changes: Seq[DataFrame]): DataFrame =
+    changes.zip(Seq("c", "u", "d")).zipWithIndex.map { case ((c, op), i) =>
+      c.select(to_json(struct(lit(op).as("op"), lit(i + 1L).as("ts_ms"),
+        col("before"), col("after"))).as("value"))
+    }.reduce(_ unionByName _)
 
   sealed trait Policy
   case object ErrorPolicy extends Policy
@@ -273,36 +251,17 @@ object SinkOps extends QueryModule {
       (s, d) => {
         import s.implicits._
         import graft.streaming.Cdc
-        import org.apache.spark.sql.types._
-        // NOTE (r16 optimization round): REBALANCE on this shared base
+        // NOTE (r16 optimization round), for q103 and q110-q112 alike:
+        // REBALANCE on the orders history ahead of the envelope decode
         // (the q152 pattern) was measured AGAIN and REJECTED — AQE
         // coalesces the ~3 MB exchange to ~1 partition, so no decode
         // parallelism is gained and the added exchange + query-stage
         // jobs cost ~0.15-0.4 s per gate (q103 1.47 -> 1.84 s warm).
         // Confirms r15's call; at 100 TB the scan has >= cores splits
         // and the serial-decode question does not arise.
-        val base = Tables.orders(s, d).select($"o_orderkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType()
-          .add("o_orderkey", LongType).add("price", DoubleType)
-        val inserts = base.select(to_json(struct(
-          lit("c").as("op"), lit(1L).as("ts_ms"),
-          lit(null).cast(payload).as("before"),
-          struct($"o_orderkey", $"price").as("after"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            lit("u").as("op"), lit(2L).as("ts_ms"),
-            struct($"o_orderkey", $"price").as("before"),
-            struct($"o_orderkey", bumped).as("after"))).as("value"))
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            lit("d").as("op"), lit(3L).as("ts_ms"),
-            struct($"o_orderkey", $"price").as("before"),
-            lit(null).cast(payload).as("after"))).as("value"))
-        val log = Cdc.decodeDebezium(
-          inserts.unionByName(updates).unionByName(deletes), payload)
+        val changes = orders(s, d, Seq("o_orderkey"), DoublePrice,
+          Images(staleDeletes = true))
+        val log = Cdc.decodeDebezium(debezium(changes), imageType(changes.head))
         Cdc.upsertMaterialize(log, Seq("o_orderkey"), "cdc_ts", "cdc_ts")
           .select($"o_orderkey", $"price")
           .orderBy($"o_orderkey")
@@ -334,33 +293,10 @@ object SinkOps extends QueryModule {
       // as data) breaks every column.
       "q146_changelog_sql_agg",
       (s, d) => {
-        import s.implicits._
         import graft.streaming.Cdc
-        import org.apache.spark.sql.types._
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType().add("o_orderkey", LongType)
-          .add("o_orderpriority", StringType).add("price", DoubleType)
-        val inserts = base.select(to_json(struct(
-          lit("c").as("op"), lit(1L).as("ts_ms"),
-          lit(null).cast(payload).as("before"),
-          struct($"o_orderkey", $"o_orderpriority", $"price").as("after"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            lit("u").as("op"), lit(2L).as("ts_ms"),
-            struct($"o_orderkey", $"o_orderpriority", $"price").as("before"),
-            struct($"o_orderkey", $"o_orderpriority", bumped).as("after"))).as("value"))
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            lit("d").as("op"), lit(3L).as("ts_ms"),
-            struct($"o_orderkey", $"o_orderpriority", current).as("before"),
-            lit(null).cast(payload).as("after"))).as("value"))
-        val log = Cdc.decodeDebezium(
-          inserts.unionByName(updates).unionByName(deletes), payload)
+        val changes = orders(s, d, Seq("o_orderkey", "o_orderpriority"),
+          DoublePrice, Images(staleDeletes = false))
+        val log = Cdc.decodeDebezium(debezium(changes), imageType(changes.head))
         log.createOrReplaceTempView("orders_changelog")
         try Engine.sql(s, """
           SELECT o_orderpriority, COUNT(*) AS n,
@@ -401,33 +337,10 @@ object SinkOps extends QueryModule {
       // leak of a retraction row through the join breaks every column.
       "q148_changelog_join_agg",
       (s, d) => {
-        import s.implicits._
         import graft.streaming.Cdc
-        import org.apache.spark.sql.types._
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType().add("o_orderkey", LongType)
-          .add("o_custkey", LongType).add("price", DoubleType)
-        val inserts = base.select(to_json(struct(
-          lit("c").as("op"), lit(1L).as("ts_ms"),
-          lit(null).cast(payload).as("before"),
-          struct($"o_orderkey", $"o_custkey", $"price").as("after"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            lit("u").as("op"), lit(2L).as("ts_ms"),
-            struct($"o_orderkey", $"o_custkey", $"price").as("before"),
-            struct($"o_orderkey", $"o_custkey", bumped).as("after"))).as("value"))
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            lit("d").as("op"), lit(3L).as("ts_ms"),
-            struct($"o_orderkey", $"o_custkey", current).as("before"),
-            lit(null).cast(payload).as("after"))).as("value"))
-        val log = Cdc.decodeDebezium(
-          inserts.unionByName(updates).unionByName(deletes), payload)
+        val changes = orders(s, d, Seq("o_orderkey", "o_custkey"),
+          DoublePrice, Images(staleDeletes = false))
+        val log = Cdc.decodeDebezium(debezium(changes), imageType(changes.head))
         log.createOrReplaceTempView("orders_changelog_j")
         Tables.customer(s, d).createOrReplaceTempView("customer_dim_j")
         try Engine.sql(s, """
@@ -541,31 +454,10 @@ object SinkOps extends QueryModule {
       // breaks every column.
       "q151_upsert_normalize",
       (s, d) => {
-        import s.implicits._
         val t = "ups_q151"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val v1 = base.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderpriority", $"price")
-        val v2 = base.filter($"o_orderkey" % 10 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", bumped)
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val dels = base.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", current)
-        // CTAS through the front door so a prior JVM's orphaned managed
-        // directory heals (sqlHealingCreate) — bare saveAsTable would die
-        // with LOCATION_ALREADY_EXISTS on the second fresh-metastore run
-        v1.unionByName(v2).unionByName(dels)
-          .createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.upsert.keys' = 'o_orderkey')")
+        ContinuousGates.replaceTable(s, t, orders(s, d,
+          Seq("o_orderkey", "o_orderpriority"), DoublePrice, UpsertRows)
+          .reduce(_ unionByName _), Map("graft.upsert.keys" -> "o_orderkey"))
         Engine.sql(s, s"""
           SELECT o_orderpriority, COUNT(*) AS n,
                  CAST(SUM(CAST(price AS DECIMAL(12,2))) AS DOUBLE) AS total,
@@ -603,38 +495,25 @@ object SinkOps extends QueryModule {
       "q152_upsert_kafka_decode",
       (s, d) => {
         import s.implicits._
-        import org.apache.spark.sql.types._
         val t = "upk_q152"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double")
+        val Seq(v1, v2, dels) = orders(s, d,
+          Seq("o_orderkey", "o_orderpriority"), DoublePrice, UpsertRows)
         val keyJson = to_json(struct($"o_orderkey")).cast("binary").as("key")
-        val w1 = base.select(keyJson,
+        val wire = v1.unionByName(v2).select(keyJson,
           to_json(struct($"o_orderkey", $"o_orderpriority", $"price"))
-            .cast("binary").as("value"),
-          lit(1L).as("offset"))
-        val w2 = base.filter($"o_orderkey" % 10 === 0).select(keyJson,
-          to_json(struct($"o_orderkey", $"o_orderpriority",
-            bumped.as("price"))).cast("binary").as("value"),
-          lit(2L).as("offset"))
-        val w3 = base.filter($"o_orderkey" % 17 === 0).select(keyJson,
-          lit(null).cast("binary").as("value"), lit(3L).as("offset"))
-        val schema = new StructType().add("o_orderkey", LongType)
-          .add("o_orderpriority", StringType).add("price", DoubleType)
+            .cast("binary").as("value"), $"cdc_ts".as("offset"))
+          .unionByName(dels.select(keyJson,
+            lit(null).cast("binary").as("value"), $"cdc_ts".as("offset")))
         // the orders scan is ONE task (single small parquet row group),
         // which dragged the whole JSON decode + CTAS through ~1 task —
         // guide §2.5 "input skew: repartition immediately after the
         // read". REBALANCE (not a fixed n) stays AQE-sized at any scale.
         val decoded = graft.sources.KafkaConnector.upsertDecode(
-          w1.unionByName(w2).unionByName(w3).hint("rebalance"),
-          schema, Seq("o_orderkey"),
+          wire.hint("rebalance"), v1.drop("row_kind", "cdc_ts").schema,
+          Seq("o_orderkey"),
           Map("key.format" -> "json", "value.format" -> "json"))
-        decoded.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.upsert.keys' = 'o_orderkey')")
+        ContinuousGates.replaceTable(s, t, decoded,
+          Map("graft.upsert.keys" -> "o_orderkey"))
         Engine.sql(s, s"""
           SELECT o_orderpriority, COUNT(*) AS n,
                  CAST(SUM(CAST(price AS DECIMAL(12,2))) AS DOUBLE) AS total,
@@ -657,164 +536,6 @@ object SinkOps extends QueryModule {
         |""".stripMargin)),
 
     GQuery(
-      // CONTINUOUS RETRACTABLE TOP-N (r13, RetractableTopNFunction.java:
-      // 56): the streaming statement `ROW_NUMBER() OVER (PARTITION BY
-      // ... ORDER BY ...) WHERE rn <= N` over a RETRACT changelog,
-      // running WHILE the history lands in three commits — inserts,
-      // -U/+U price updates (payload refresh at unchanged rank), -D
-      // deletes (rank backfills + explicit vacated-rank deletes). The
-      // materialized upsert sink must equal DuckDB's row_number over
-      // the FINAL state; a missed retraction, stale rank, or surviving
-      // vacated rank breaks rows and hash.
-      "q153_stream_retractable_topn",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q153"
-        val sink = "cl_q153_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderpriority", $"price")
-        val c2 = base.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", $"price")
-          .unionByName(base.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_orderpriority", bumped))
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val c3 = base.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", current)
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        // pre-create the sink through the HEALING front door: a prior
-        // JVM's orphaned managed dir would otherwise kill the stream's
-        // first saveAsTable (the catalog is per-JVM, the warehouse isn't)
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderpriority STRING, o_orderkey BIGINT,
-           price DOUBLE, rn BIGINT, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q153").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderpriority, o_orderkey, price, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-              ORDER BY o_orderkey DESC) AS rn
-            FROM $t) x
-          WHERE rn <= 5""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(c2); q.processAllAvailable()
-          append(c3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderpriority", $"o_orderkey",
-            $"price".cast("double").as("price"), $"rn")
-          .orderBy($"o_orderpriority", $"rn")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0)
-        |SELECT o_orderpriority, o_orderkey, CAST(price AS DOUBLE) AS price, rn
-        |FROM (
-        |  SELECT o_orderkey, o_orderpriority, price,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY o_orderkey DESC) AS rn
-        |  FROM fs) t
-        |WHERE rn <= 5 ORDER BY o_orderpriority, rn
-        |""".stripMargin)),
-
-    GQuery(
-      // ONE-STATEMENT CONTINUOUS AGGREGATE OVER A DECLARED UPSERT
-      // STREAM (r13, StreamExecChangelogNormalize feeding
-      // GroupAggFunction as one topology): q151's upsert history — +U
-      // at 1, %10 keys RE-UPSERTED at 2 (the double-count trap), %17
-      // tombstoned at 3 — lands in three commits while ONE
-      // `INSERT INTO ... SELECT` aggregates it continuously. The
-      // normalize chain emits the -U/+U retract transitions the sign
-      // algebra consumes, so the materialized sink equals the batch
-      // normalize+aggregate: same oracle as q151's final state.
-      "q154_stream_upsert_aggregate",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "ups_q154"
-        val sink = "ups_q154_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val v1 = base.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderpriority", $"price")
-        val v2 = base.filter($"o_orderkey" % 10 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", bumped)
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val dels = base.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", current)
-        v1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.upsert.keys' = 'o_orderkey')")
-        def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        // healing pre-create, as in q153 (orphaned-location defense)
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (o_orderpriority STRING, n BIGINT, total DOUBLE, lo DOUBLE,
-           row_kind STRING, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q154").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderpriority, COUNT(*) AS n,
-                 CAST(SUM(CAST(price AS DECIMAL(12,2))) AS DOUBLE) AS total,
-                 CAST(MIN(CAST(price AS DECIMAL(12,2))) AS DOUBLE) AS lo
-          FROM $t GROUP BY o_orderpriority""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(v2); q.processAllAvailable()
-          append(dels); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderpriority", $"n", $"total".cast("double").as("total"),
-            $"lo".cast("double").as("lo"))
-          .orderBy($"o_orderpriority")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderpriority,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0)
-        |SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(price) AS DOUBLE) AS total,
-        |       CAST(MIN(price) AS DOUBLE) AS lo
-        |FROM fs GROUP BY 1 ORDER BY 1
-        |""".stripMargin)),
-
-    GQuery(
       // FINAL_STATE(t) (r13): the SQL spelling of materialize-first —
       // a BATCH window-function statement (ROW_NUMBER top-3 per
       // priority) over a retract changelog's CURRENT live multiset,
@@ -826,30 +547,10 @@ object SinkOps extends QueryModule {
       // rows and hash.
       "q155_final_state_topn",
       (s, d) => {
-        import s.implicits._
         val t = "cl_q155"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderpriority", $"price")
-        val c2 = base.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", $"price")
-          .unionByName(base.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_orderpriority", bumped))
-        val current = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val c3 = base.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", current)
-        c1.unionByName(c2).unionByName(c3)
-          .createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
+        ContinuousGates.replaceTable(s, t, orders(s, d,
+          Seq("o_orderkey", "o_orderpriority"), DoublePrice, RetractRows)
+          .reduce(_ unionByName _))
         Engine.sql(s, s"""
           SELECT o_orderpriority, o_orderkey,
                  CAST(price AS DOUBLE) AS price, CAST(rn AS BIGINT) AS rn
@@ -874,929 +575,6 @@ object SinkOps extends QueryModule {
         |           ORDER BY o_orderkey DESC) AS rn
         |  FROM fs) t
         |WHERE rn <= 3 ORDER BY o_orderpriority, rn
-        |""".stripMargin)),
-
-    GQuery(
-      // CONTINUOUS TOP-N ORDER BY STRING (r14): the streaming top-N
-      // statement ranking on an arbitrary comparable sort key — the
-      // generated-comparator capability of the reference's
-      // ComparableRecordComparator.java:35, realized as a memcmp
-      // sort-key ENCODING (graft_sort_key / graft.util.SortKey) keyed
-      // into the transformWithState dataState+counts pairing. The order
-      // column is a derived unique STRING (priority # zero-padded key),
-      // partitioned by o_orderstatus so ranks compare across alphabetic
-      // prefixes, with a delete commit forcing rank backfill under
-      // string-keyed retraction matching. Oracle = DuckDB ROW_NUMBER
-      // over the surviving rows on the same string (binary collation on
-      // both sides).
-      "q156_stream_topn_string_order",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q156"
-        val sink = "cl_q156_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderstatus",
-          concat($"o_orderpriority", lit("#"),
-            lpad($"o_orderkey".cast("string"), 12, "0")).as("skey"))
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderstatus", $"skey")
-        val c2 = base.filter($"o_orderkey" % 3 === 0)
-          .select(lit("-D").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderstatus", $"skey")
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderstatus STRING, o_orderkey BIGINT,
-           skey STRING, rn BIGINT, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q156").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderstatus, o_orderkey, skey, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-              ORDER BY skey DESC) AS rn
-            FROM $t) x
-          WHERE rn <= 4""", ckpt)
-        try {
-          q.processAllAvailable()
-          c2.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-          q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderstatus", $"o_orderkey", $"skey", $"rn")
-          .orderBy($"o_orderstatus", $"rn")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |         o_orderpriority || '#' || lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS skey
-        |  FROM orders WHERE o_orderkey % 3 <> 0)
-        |SELECT o_orderstatus, o_orderkey, skey, rn
-        |FROM (
-        |  SELECT o_orderkey, o_orderstatus, skey,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |           ORDER BY skey DESC) AS rn
-        |  FROM fs) t
-        |WHERE rn <= 4 ORDER BY o_orderstatus, rn
-        |""".stripMargin)),
-
-    GQuery(
-      // CONTINUOUS TOP-N ORDER BY DECIMAL, ASCENDING (r14): the other
-      // half of the arbitrary-comparable-sort-key gate — a DECIMAL(18,2)
-      // order column with MIXED SIGNS (tens'-complement encoding path
-      // for negatives) ranked ASC through the SQL front door (q153 is
-      // DESC; a missing-direction default reading as DESC would break
-      // every rank here). Unique by construction (injective in
-      // o_orderkey) so the oracle's ROW_NUMBER is deterministic.
-      "q157_stream_topn_decimal_asc",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q157"
-        val sink = "cl_q157_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority",
-          ($"o_orderkey".cast("decimal(18,2)") -
-            lit("30000.50").cast("decimal(18,2)"))
-            .cast("decimal(18,2)").as("dval"))
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderpriority", $"dval")
-        val c2 = base.filter($"o_orderkey" % 3 === 0)
-          .select(lit("-D").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority", $"dval")
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderpriority STRING, o_orderkey BIGINT,
-           dval DECIMAL(18,2), rn BIGINT, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q157").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderpriority, o_orderkey, dval, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-              ORDER BY dval) AS rn
-            FROM $t) x
-          WHERE rn <= 4""", ckpt)
-        try {
-          q.processAllAvailable()
-          c2.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-          q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderpriority", $"o_orderkey",
-            $"dval".cast("double").as("dval"), $"rn")
-          .orderBy($"o_orderpriority", $"rn")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderkey, o_orderpriority,
-        |         CAST(CAST(o_orderkey AS DECIMAL(18,2)) - 30000.50
-        |              AS DECIMAL(18,2)) AS dval
-        |  FROM orders WHERE o_orderkey % 3 <> 0)
-        |SELECT o_orderpriority, o_orderkey, CAST(dval AS DOUBLE) AS dval, rn
-        |FROM (
-        |  SELECT o_orderkey, o_orderpriority, dval,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-        |           ORDER BY dval) AS rn
-        |  FROM fs) t
-        |WHERE rn <= 4 ORDER BY o_orderpriority, rn
-        |""".stripMargin)),
-
-    GQuery(
-      // FAST TOP-1 END TO END (r14, FastTop1Function.java:54 /
-      // RankProcessStrategy.UpdateFastStrategy): the full derivation
-      // chain under the oracle gate — an INSERT-ONLY-declared source
-      // feeds a continuous MAX aggregate (the sign-algebra route records the
-      // monotone column on its sink), and a DESC top-1 statement over
-      // that sink plan-routes onto the O(1)-leader-state operator while
-      // BOTH streams run across two commits (the leader changes when
-      // the second commit lands a higher key). The materialized answer
-      // must equal DuckDB's rank-1 row over the final aggregate state —
-      // a wrong monotone derivation, a missed leader handoff, or a
-      // stale rank breaks rows and hash.
-      "q158_stream_fasttop1_monotone",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q158"
-        val agg = "cl_q158_agg"
-        val sink = "cl_q158_sink"
-        Seq(t, agg, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority")
-        val c1 = base.filter($"o_orderkey" % 2 === 0)
-          .select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority")
-        val c2 = base.filter($"o_orderkey" % 2 =!= 0)
-          .select(lit("+I").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderpriority")
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
-          "('graft.changelog.mode' = 'insert-only')")
-        Engine.sql(s, s"""CREATE TABLE $agg
-          (o_orderpriority STRING, mx BIGINT, row_kind STRING,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderpriority STRING, mx BIGINT, rn BIGINT,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        val ck1 = java.nio.file.Files.createTempDirectory("graft-q158a").toString
-        val ck2 = java.nio.file.Files.createTempDirectory("graft-q158t").toString
-        val qa = Engine.sqlStreamInsert(s,
-          s"INSERT INTO $agg SELECT o_orderpriority, MAX(o_orderkey) AS mx " +
-            s"FROM $t GROUP BY o_orderpriority", ck1)
-        try {
-          qa.processAllAvailable()
-          val qt = Engine.sqlStreamInsert(s, s"""
-            INSERT INTO $sink
-            SELECT o_orderpriority, mx, rn FROM (
-              SELECT *, ROW_NUMBER() OVER (ORDER BY mx DESC) AS rn
-              FROM $agg) x
-            WHERE rn <= 1""", ck2)
-          try {
-            qt.processAllAvailable()
-            c2.createOrReplaceTempView(s"__${t}_in")
-            try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-            finally s.catalog.dropTempView(s"__${t}_in"): Unit
-            qa.processAllAvailable()
-            qt.processAllAvailable()
-          } finally stopGate(qt, ck2)
-        } finally stopGate(qa, ck1)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderpriority", $"mx", $"rn")
-          .orderBy($"rn")
-      },
-      Some("""
-        |SELECT o_orderpriority, mx, rn FROM (
-        |  SELECT o_orderpriority, CAST(MAX(o_orderkey) AS BIGINT) AS mx,
-        |         ROW_NUMBER() OVER (ORDER BY MAX(o_orderkey) DESC) AS rn
-        |  FROM orders GROUP BY o_orderpriority) t
-        |WHERE rn = 1
-        |""".stripMargin)),
-
-    GQuery(
-      // MULTI-COLUMN ORDER BY in the continuous top-N (r14): the
-      // composite-sort-key capability — `ROW_NUMBER() OVER (PARTITION
-      // BY status ORDER BY priority DESC, dval ASC)` ranks on the
-      // CONCATENATION of direction-baked field encodings (a DESC
-      // variable-width STRING followed by an ASC DECIMAL with mixed
-      // signs — the two hardest field shapes composed), with a delete
-      // commit forcing rank backfill under composite-keyed retraction
-      // matching. Oracle = DuckDB's two-item ROW_NUMBER over the
-      // surviving rows; one mis-ordered field pair (terminator bleed,
-      // inverted-escape slip) breaks ranks, rows and hash.
-      "q159_stream_topn_multicol",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q159"
-        val sink = "cl_q159_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderstatus",
-          $"o_orderpriority",
-          ($"o_orderkey".cast("decimal(18,2)") -
-            lit("30000.50").cast("decimal(18,2)"))
-            .cast("decimal(18,2)").as("dval"))
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderstatus", $"o_orderpriority", $"dval")
-        val c2 = base.filter($"o_orderkey" % 3 === 0)
-          .select(lit("-D").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderstatus", $"o_orderpriority", $"dval")
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderstatus STRING, o_orderpriority STRING,
-           dval DECIMAL(18,2), o_orderkey BIGINT, rn BIGINT,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q159").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderstatus, o_orderpriority, dval, o_orderkey, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-              ORDER BY o_orderpriority DESC, dval) AS rn
-            FROM $t) x
-          WHERE rn <= 3""", ckpt)
-        try {
-          q.processAllAvailable()
-          c2.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-          q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderstatus", $"o_orderpriority",
-            $"dval".cast("double").as("dval"), $"o_orderkey", $"rn")
-          .orderBy($"o_orderstatus", $"rn")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority,
-        |         CAST(CAST(o_orderkey AS DECIMAL(18,2)) - 30000.50
-        |              AS DECIMAL(18,2)) AS dval
-        |  FROM orders WHERE o_orderkey % 3 <> 0)
-        |SELECT o_orderstatus, o_orderpriority, CAST(dval AS DOUBLE) AS dval,
-        |       o_orderkey, rn
-        |FROM (
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority, dval,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |           ORDER BY o_orderpriority DESC, dval) AS rn
-        |  FROM fs) t
-        |WHERE rn <= 3 ORDER BY o_orderstatus, rn
-        |""".stripMargin)),
-
-    GQuery(
-      // CONTINUOUS TWO-SIDED RETRACTION JOIN (r15, StreamExecJoin.java:
-      // 132 -> StreamingJoinOperator.java:36): ONE `INSERT INTO s
-      // SELECT ... FROM a JOIN b ON ...` statement over TWO changelog
-      // relations, running while three commits land on BOTH sides —
-      // inserts, -U/+U price bumps (left) and +U re-upserts (right, a
-      // DECLARED UPSERT relation: the ChangelogNormalize chain feeds
-      // the join's right side, the double-count trap), then -D deletes
-      // on both (right tombstones CASCADE their orders out of the
-      // join). The sink holds the join's RETRACT changelog;
-      // FINAL_STATE nets it and must equal DuckDB's join over the two
-      // final states — a missed retraction on either side, a lost
-      // multiplicity, or a normalize slip breaks rows and hash.
-      "q160_stream_join",
-      (s, d) => withSmallStreamState(s) { withCommitCoalescedTrigger(s) {
-        import s.implicits._
-        val lt = "cl_q160_ord"
-        val rt = "cl_q160_cust"
-        val sink = "cl_q160_sink"
-        Seq(lt, rt, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val l1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"price")
-        val l2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val l3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", currentPrice)
-        val cust = Tables.customer(s, d).select($"c_custkey", $"c_name")
-        val r1 = cust.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"c_custkey", $"c_name".as("name"))
-        val r2 = cust.filter($"c_custkey" % 5 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"c_custkey", concat($"c_name", lit("_v2")).as("name"))
-        val r3 = cust.filter($"c_custkey" % 13 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"c_custkey", lit(null).cast("string").as("name"))
-        l1.createOrReplaceTempView(s"__${lt}_src")
-        try Engine.sql(s, s"CREATE TABLE $lt AS SELECT * FROM __${lt}_src")
-        finally s.catalog.dropTempView(s"__${lt}_src")
-        r1.createOrReplaceTempView(s"__${rt}_src")
-        try Engine.sql(s, s"CREATE TABLE $rt AS SELECT * FROM __${rt}_src")
-        finally s.catalog.dropTempView(s"__${rt}_src")
-        // the right side is a DECLARED UPSERT changelog: the front door
-        // chains ChangelogNormalize in front of the join's right input
-        s.sql(s"ALTER TABLE $rt SET TBLPROPERTIES " +
-          "('graft.upsert.keys' = 'c_custkey')")
-        def append(t: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        // healing pre-create (orphaned-location defense, as in q153)
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderkey BIGINT, price DOUBLE, name STRING,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q160").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o.o_orderkey, o.price, c.name
-          FROM $lt o JOIN $rt c ON o.o_custkey = c.c_custkey""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(lt, l2); append(rt, r2); q.processAllAvailable()
-          append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        s.catalog.refreshTable(sink)
-        Engine.sql(s,
-          s"SELECT o_orderkey, price, name FROM FINAL_STATE($sink)")
-          .select($"o_orderkey", $"price".cast("double").as("price"), $"name")
-          .orderBy($"o_orderkey") }
-      },
-      Some("""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0),
-        |fc AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 5 = 0 THEN c_name || '_v2'
-        |              ELSE c_name END AS name
-        |  FROM customer WHERE c_custkey % 13 <> 0)
-        |SELECT o_orderkey, CAST(price AS DOUBLE) AS price, name
-        |FROM fo JOIN fc ON fo.o_custkey = fc.c_custkey
-        |ORDER BY o_orderkey
-        |""".stripMargin)),
-
-    GQuery(
-      // CONTINUOUS LEFT OUTER retraction JOIN + WHERE pushdown (r15
-      // second pass, OuterJoinRecordStateViews.java:335): q160's
-      // two-changelog history under a LEFT JOIN — customers tombstoned
-      // at commit 3 CASCADE their orders back to NULL-padded rows
-      // (pad restored on last-match retraction) instead of out of the
-      // result, and the left-side WHERE conjunct pushes down to the
-      // orders stream BEFORE the join state (a padded-side or
-      // cross-side predicate would reject). Oracle = DuckDB LEFT JOIN
-      // over the two final states with the same filter; a missed pad
-      // transition or a mispushed filter breaks rows and hash.
-      "q162_stream_outer_join",
-      (s, d) => withSmallStreamState(s) { withCommitCoalescedTrigger(s) {
-        import s.implicits._
-        val lt = "cl_q162_ord"
-        val rt = "cl_q162_cust"
-        val sink = "cl_q162_sink"
-        Seq(lt, rt, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val l1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"price")
-        val l2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val l3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", currentPrice)
-        val cust = Tables.customer(s, d).select($"c_custkey", $"c_name")
-        val r1 = cust.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"c_custkey", $"c_name".as("name"))
-        val r2 = cust.filter($"c_custkey" % 5 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"c_custkey", concat($"c_name", lit("_v2")).as("name"))
-        val r3 = cust.filter($"c_custkey" % 13 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"c_custkey", lit(null).cast("string").as("name"))
-        l1.createOrReplaceTempView(s"__${lt}_src")
-        try Engine.sql(s, s"CREATE TABLE $lt AS SELECT * FROM __${lt}_src")
-        finally s.catalog.dropTempView(s"__${lt}_src")
-        r1.createOrReplaceTempView(s"__${rt}_src")
-        try Engine.sql(s, s"CREATE TABLE $rt AS SELECT * FROM __${rt}_src")
-        finally s.catalog.dropTempView(s"__${rt}_src")
-        s.sql(s"ALTER TABLE $rt SET TBLPROPERTIES " +
-          "('graft.upsert.keys' = 'c_custkey')")
-        def append(t: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderkey BIGINT, price DOUBLE, name STRING,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q162").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o.o_orderkey, o.price, c.name
-          FROM $lt o LEFT JOIN $rt c ON o.o_custkey = c.c_custkey
-          WHERE o.price > 150000.0""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(lt, l2); append(rt, r2); q.processAllAvailable()
-          append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        s.catalog.refreshTable(sink)
-        // NULL pads read back under a marker: the oracle compare is
-        // exact-value over sorted frames, and None==None is not equal
-        // in pandas — both sides coalesce identically, so a missed pad
-        // (or a phantom one) still breaks the match
-        Engine.sql(s,
-          s"SELECT o_orderkey, price, name FROM FINAL_STATE($sink)")
-          .select($"o_orderkey", $"price".cast("double").as("price"),
-            coalesce($"name", lit("<pad>")).as("name"))
-          .orderBy($"o_orderkey") }
-      },
-      Some("""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0),
-        |fc AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 5 = 0 THEN c_name || '_v2'
-        |              ELSE c_name END AS name
-        |  FROM customer WHERE c_custkey % 13 <> 0)
-        |SELECT o_orderkey, CAST(price AS DOUBLE) AS price,
-        |       COALESCE(name, '<pad>') AS name
-        |FROM fo LEFT JOIN fc ON fo.o_custkey = fc.c_custkey
-        |WHERE price > 150000.0
-        |ORDER BY o_orderkey
-        |""".stripMargin)),
-
-    GQuery(
-      // AGG-OVER-JOIN as ONE continuous statement (r15 third pass —
-      // StreamExecJoin feeding StreamExecGroupAggregate,
-      // GroupAggFunction.java:43 consuming the join's retract stream):
-      // `SELECT c.seg, COUNT/SUM/MIN/MAX/AVG/COUNT(DISTINCT) ... FROM
-      // ord JOIN cust GROUP BY c.seg` over TWO changelogs, the right a
-      // DECLARED UPSERT through the normalize chain. Three commits:
-      // inserts; -U/+U price bumps (left) + customers RE-SEGMENTED to
-      // 'MOVED' (right upserts MIGRATE their orders between groups —
-      // retract from the old group, add to the new); -D deletes on
-      // both. The materialized upsert sink must equal DuckDB's
-      // join+GROUP BY over the two final states — a missed group
-      // migration, a lost retraction in any accumulator, or a stale
-      // MIN/MAX extreme breaks rows and hash. DECIMAL sums keep the
-      // compare exact; AVG rounds via the dround convention.
-      "q163_stream_join_agg",
-      (s, d) => withSmallStreamState(s) { withCommitCoalescedTrigger(s) {
-        import s.implicits._
-        val lt = "cl_q163_ord"
-        val rt = "cl_q163_cust"
-        val sink = "cl_q163_sink"
-        Seq(lt, rt, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          graft.Bits.dec($"o_totalprice").as("price"))
-        val bumped = ($"price" + lit(100).cast(graft.Bits.Dec))
-          .cast(graft.Bits.Dec).as("price")
-        val l1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"price")
-        val l2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val l3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", currentPrice)
-        val cust = Tables.customer(s, d)
-          .select($"c_custkey", $"c_mktsegment")
-        val r1 = cust.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"c_custkey", $"c_mktsegment".as("seg"))
-        val r2 = cust.filter($"c_custkey" % 5 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"c_custkey", lit("MOVED").as("seg"))
-        val r3 = cust.filter($"c_custkey" % 13 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"c_custkey", lit(null).cast("string").as("seg"))
-        l1.createOrReplaceTempView(s"__${lt}_src")
-        try Engine.sql(s, s"CREATE TABLE $lt AS SELECT * FROM __${lt}_src")
-        finally s.catalog.dropTempView(s"__${lt}_src")
-        r1.createOrReplaceTempView(s"__${rt}_src")
-        try Engine.sql(s, s"CREATE TABLE $rt AS SELECT * FROM __${rt}_src")
-        finally s.catalog.dropTempView(s"__${rt}_src")
-        s.sql(s"ALTER TABLE $rt SET TBLPROPERTIES " +
-          "('graft.upsert.keys' = 'c_custkey')")
-        def append(t: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        // healing pre-create (orphaned-location defense, as in q160)
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (seg STRING, cnt BIGINT, custs BIGINT, rev DECIMAL(38,2),
-           lo DECIMAL(12,2), hi DECIMAL(12,2), avg_p DOUBLE,
-           row_kind STRING, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q163").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT c.seg, COUNT(*) AS cnt,
-                 COUNT(DISTINCT o.o_custkey) AS custs,
-                 SUM(o.price) AS rev, MIN(o.price) AS lo,
-                 MAX(o.price) AS hi, AVG(o.price) AS avg_p
-          FROM $lt o JOIN $rt c ON o.o_custkey = c.c_custkey
-          GROUP BY c.seg""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(lt, l2); append(rt, r2); q.processAllAvailable()
-          append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"seg", $"cnt", $"custs",
-            $"rev".cast("double").as("rev"),
-            $"lo".cast("double").as("lo"),
-            $"hi".cast("double").as("hi"),
-            graft.Bits.dround($"avg_p", 6).as("avg_p"))
-          .orderBy($"seg") }
-      },
-      Some(s"""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |                   AS DECIMAL(12,2))
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0),
-        |fc AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
-        |              ELSE c_mktsegment END AS seg
-        |  FROM customer WHERE c_custkey % 13 <> 0)
-        |SELECT seg, COUNT(*) AS cnt, COUNT(DISTINCT o_custkey) AS custs,
-        |       CAST(SUM(price) AS DOUBLE) AS rev,
-        |       CAST(MIN(price) AS DOUBLE) AS lo,
-        |       CAST(MAX(price) AS DOUBLE) AS hi,
-        |       ${graft.Bits.droundSql(
-               "CAST(SUM(price) AS DOUBLE) / COUNT(price)", 6)} AS avg_p
-        |FROM fo JOIN fc ON fo.o_custkey = fc.c_custkey
-        |GROUP BY seg ORDER BY seg
-        |""".stripMargin)),
-
-    GQuery(
-      // TOP-N OVER AN AGGREGATE OVER A JOIN — FOUR chained stateful
-      // operators in ONE statement (r15 third pass, the reference's
-      // ChangelogNormalize -> StreamExecJoin ->
-      // StreamExecGroupAggregate -> StreamExecRank plan): rank the
-      // segments by revenue while q163's two-changelog history plays —
-      // price bumps, customers re-segmented to 'MOVED' (their orders
-      // MIGRATE between groups, reshuffling the ranking), deletes on
-      // both sides. The inner aggregate emits RETRACT PAIRS
-      // (generateUpdateBefore) into the sorted rank state; the
-      // materialized sink must equal DuckDB's ROW_NUMBER over the
-      // final-state aggregate — a lost pair, a stale rank, or a missed
-      // group migration breaks rows and hash.
-      "q164_stream_topn_over_agg",
-      (s, d) => withSmallStreamState(s) { withCommitCoalescedTrigger(s) {
-        import s.implicits._
-        val lt = "cl_q164_ord"
-        val rt = "cl_q164_cust"
-        val sink = "cl_q164_sink"
-        Seq(lt, rt, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          graft.Bits.dec($"o_totalprice").as("price"))
-        val bumped = ($"price" + lit(100).cast(graft.Bits.Dec))
-          .cast(graft.Bits.Dec).as("price")
-        val l1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"price")
-        val l2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val l3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", currentPrice)
-        val cust = Tables.customer(s, d)
-          .select($"c_custkey", $"c_mktsegment")
-        val r1 = cust.select(lit("+U").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"c_custkey", $"c_mktsegment".as("seg"))
-        val r2 = cust.filter($"c_custkey" % 5 === 0)
-          .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"c_custkey", lit("MOVED").as("seg"))
-        val r3 = cust.filter($"c_custkey" % 13 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"c_custkey", lit(null).cast("string").as("seg"))
-        l1.createOrReplaceTempView(s"__${lt}_src")
-        try Engine.sql(s, s"CREATE TABLE $lt AS SELECT * FROM __${lt}_src")
-        finally s.catalog.dropTempView(s"__${lt}_src")
-        r1.createOrReplaceTempView(s"__${rt}_src")
-        try Engine.sql(s, s"CREATE TABLE $rt AS SELECT * FROM __${rt}_src")
-        finally s.catalog.dropTempView(s"__${rt}_src")
-        s.sql(s"ALTER TABLE $rt SET TBLPROPERTIES " +
-          "('graft.upsert.keys' = 'c_custkey')")
-        def append(t: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (seg STRING, rev DECIMAL(38,2), rn BIGINT,
-           row_kind STRING, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q164").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT seg, rev, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY rev DESC, seg ASC) AS rn
-            FROM ( SELECT c.seg, SUM(o.price) AS rev
-                   FROM $lt o JOIN $rt c ON o.o_custkey = c.c_custkey
-                   GROUP BY c.seg )
-          ) WHERE rn <= 3""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(lt, l2); append(rt, r2); q.processAllAvailable()
-          append(lt, l3); append(rt, r3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"seg", $"rev".cast("double").as("rev"),
-            $"rn".cast("long").as("rn"))
-          .orderBy($"rn") }
-      },
-      Some("""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |                   AS DECIMAL(12,2))
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0),
-        |fc AS (
-        |  SELECT c_custkey,
-        |         CASE WHEN c_custkey % 5 = 0 THEN 'MOVED'
-        |              ELSE c_mktsegment END AS seg
-        |  FROM customer WHERE c_custkey % 13 <> 0),
-        |agg AS (
-        |  SELECT seg, SUM(price) AS rev
-        |  FROM fo JOIN fc ON fo.o_custkey = fc.c_custkey GROUP BY seg)
-        |SELECT seg, CAST(rev AS DOUBLE) AS rev, rn FROM (
-        |  SELECT seg, rev,
-        |         ROW_NUMBER() OVER (ORDER BY rev DESC, seg ASC) AS rn
-        |  FROM agg) WHERE rn <= 3 ORDER BY rn
-        |""".stripMargin)),
-
-    GQuery(
-      // CONTINUOUS COUNT(DISTINCT) over ONE changelog (r15 third pass):
-      // the one aggregate the sign-algebra route cannot express (Spark
-      // bans distinct aggregation on streaming DataFrames) lowers onto
-      // the TWS group aggregate — counted-value MapState per group (the
-      // distinct-value data view Flink's planner splits out). Orders
-      // stream grouped by priority: distinct customers, row count, and
-      // exact DECIMAL revenue through three commits of inserts, -U/+U
-      // price bumps (which must NOT change the distinct count — same
-      // custkey re-inserted) and -D deletes (which drop a customer only
-      // when their LAST order goes). Oracle = DuckDB over final state.
-      "q165_stream_count_distinct",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q165"
-        val sink = "cl_q165_sink"
-        Seq(t, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          $"o_orderpriority", graft.Bits.dec($"o_totalprice").as("price"))
-        val bumped = ($"price" + lit(100).cast(graft.Bits.Dec))
-          .cast(graft.Bits.Dec).as("price")
-        val c1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"o_orderpriority", $"price")
-        val c2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"o_orderpriority", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", $"o_orderpriority", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val c3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"o_orderpriority", currentPrice)
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (prio STRING, custs BIGINT, cnt BIGINT, rev DECIMAL(38,2),
-           row_kind STRING, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q165").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderpriority AS prio, COUNT(DISTINCT o_custkey) AS custs,
-                 COUNT(*) AS cnt, SUM(price) AS rev
-          FROM $t GROUP BY o_orderpriority""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(c2); q.processAllAvailable()
-          append(c3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"prio", $"custs", $"cnt",
-            $"rev".cast("double").as("rev"))
-          .orderBy($"prio")
-      },
-      Some("""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |                   AS DECIMAL(12,2))
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0)
-        |SELECT o_orderpriority AS prio, COUNT(DISTINCT o_custkey) AS custs,
-        |       COUNT(*) AS cnt, CAST(SUM(price) AS DOUBLE) AS rev
-        |FROM fo GROUP BY o_orderpriority ORDER BY prio
-        |""".stripMargin)),
-
-    GQuery(
-      // TWO-LEVEL ROLLUP in ONE statement (r15 third pass): an
-      // aggregate OVER an aggregate subquery — per-customer revenue
-      // inside, per-priority statistics outside (customer count,
-      // total, the BIGGEST single customer). The inner
-      // StreamExecGroupAggregate emits RETRACT PAIRS; a price bump on
-      // one order must retract that customer's OLD revenue from the
-      // outer SUM and MAX before adding the new one, and a customer
-      // whose last order deletes must leave the outer COUNT. Oracle =
-      // DuckDB's nested aggregate over the final state.
-      "q166_stream_nested_agg",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q166"
-        val sink = "cl_q166_sink"
-        Seq(t, sink).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x"))
-        val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey",
-          $"o_orderpriority", graft.Bits.dec($"o_totalprice").as("price"))
-        val bumped = ($"price" + lit(100).cast(graft.Bits.Dec))
-          .cast(graft.Bits.Dec).as("price")
-        val c1 = ord.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_custkey", $"o_orderpriority", $"price")
-        val c2 = ord.filter($"o_orderkey" % 10 === 0)
-          .select(lit("-U").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"o_orderpriority", $"price")
-          .unionByName(ord.filter($"o_orderkey" % 10 === 0)
-            .select(lit("+U").as("row_kind"), lit(2L).as("cdc_ts"),
-              $"o_orderkey", $"o_custkey", $"o_orderpriority", bumped))
-        val currentPrice = when($"o_orderkey" % 10 === 0, bumped)
-          .otherwise($"price").as("price")
-        val c3 = ord.filter($"o_orderkey" % 17 === 0)
-          .select(lit("-D").as("row_kind"), lit(3L).as("cdc_ts"),
-            $"o_orderkey", $"o_custkey", $"o_orderpriority", currentPrice)
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        def append(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-        }
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (prio STRING, custs BIGINT, total DECIMAL(38,2),
-           top_cust DECIMAL(38,2),
-           row_kind STRING, ${graft.ChangelogSql.SeqCol} BIGINT)
-          USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q166").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT prio, COUNT(*) AS custs, SUM(cust_rev) AS total,
-                 MAX(cust_rev) AS top_cust
-          FROM ( SELECT o_orderpriority AS prio, o_custkey,
-                        SUM(price) AS cust_rev
-                 FROM $t GROUP BY o_orderpriority, o_custkey )
-          GROUP BY prio""", ckpt)
-        try {
-          q.processAllAvailable()
-          append(c2); q.processAllAvailable()
-          append(c3); q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"prio", $"custs",
-            $"total".cast("double").as("total"),
-            $"top_cust".cast("double").as("top_cust"))
-          .orderBy($"prio")
-      },
-      Some("""
-        |WITH fo AS (
-        |  SELECT o_orderkey, o_custkey, o_orderpriority,
-        |         CASE WHEN o_orderkey % 10 = 0
-        |              THEN CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 100
-        |                   AS DECIMAL(12,2))
-        |              ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 17 <> 0),
-        |inner_agg AS (
-        |  SELECT o_orderpriority AS prio, o_custkey,
-        |         SUM(price) AS cust_rev
-        |  FROM fo GROUP BY o_orderpriority, o_custkey)
-        |SELECT prio, COUNT(*) AS custs,
-        |       CAST(SUM(cust_rev) AS DOUBLE) AS total,
-        |       CAST(MAX(cust_rev) AS DOUBLE) AS top_cust
-        |FROM inner_agg GROUP BY prio ORDER BY prio
-        |""".stripMargin)),
-
-    GQuery(
-      // COMPUTED ORDER BY items in the continuous top-N (r15): the
-      // statement ranks on `LENGTH(o_orderpriority) DESC,
-      // price < 150000.0, o_orderkey` — a computed expression, a
-      // BOOLEAN expression (the r15 fieldBoolean encoding; false < true
-      // per SQL, direction-baked like every field) and a bare-column
-      // tiebreak. The expressions project into derived payload columns
-      // BEFORE the state boundary (the reference planner materializes
-      // computed rank fields into the row the same way), so a -D must
-      // re-encode to the identical composite key its +I did — the
-      // delete commit proves retraction matching through computed
-      // fields. Oracle = DuckDB's ROW_NUMBER over the same expressions.
-      "q161_stream_topn_expr",
-      (s, d) => withSmallStreamState(s) {
-        import s.implicits._
-        val t = "cl_q161"
-        val sink = "cl_q161_sink"
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        s.sql(s"DROP TABLE IF EXISTS $sink")
-        val base = Tables.orders(s, d).select($"o_orderkey", $"o_orderstatus",
-          $"o_orderpriority",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val c1 = base.select(lit("+I").as("row_kind"), lit(1L).as("cdc_ts"),
-          $"o_orderkey", $"o_orderstatus", $"o_orderpriority", $"price")
-        val c2 = base.filter($"o_orderkey" % 13 === 0)
-          .select(lit("-D").as("row_kind"), lit(2L).as("cdc_ts"),
-            $"o_orderkey", $"o_orderstatus", $"o_orderpriority", $"price")
-        c1.createOrReplaceTempView(s"__${t}_src")
-        try Engine.sql(s, s"CREATE TABLE $t AS SELECT * FROM __${t}_src")
-        finally s.catalog.dropTempView(s"__${t}_src")
-        Engine.sql(s, s"""CREATE TABLE $sink
-          (row_kind STRING, o_orderstatus STRING, o_orderpriority STRING,
-           price DOUBLE, o_orderkey BIGINT, rn BIGINT,
-           ${graft.ChangelogSql.SeqCol} BIGINT) USING parquet""")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q161").toString
-        val q = Engine.sqlStreamInsert(s, s"""
-          INSERT INTO $sink
-          SELECT o_orderstatus, o_orderpriority, price, o_orderkey, rn FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-              ORDER BY LENGTH(o_orderpriority) DESC, price < 150000.0,
-                       o_orderkey) AS rn
-            FROM $t) x
-          WHERE rn <= 4""", ckpt)
-        try {
-          q.processAllAvailable()
-          c2.createOrReplaceTempView(s"__${t}_in")
-          try s.sql(s"INSERT INTO $t SELECT * FROM __${t}_in"): Unit
-          finally s.catalog.dropTempView(s"__${t}_in"): Unit
-          q.processAllAvailable()
-        } finally stopGate(q, ckpt)
-        graft.ChangelogSql.materializeUpsertSink(s, sink)
-          .select($"o_orderstatus", $"o_orderpriority",
-            $"price".cast("double").as("price"), $"o_orderkey", $"rn")
-          .orderBy($"o_orderstatus", $"rn")
-      },
-      Some("""
-        |WITH fs AS (
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority,
-        |         CAST(o_totalprice AS DECIMAL(12,2)) AS price
-        |  FROM orders WHERE o_orderkey % 13 <> 0)
-        |SELECT o_orderstatus, o_orderpriority, CAST(price AS DOUBLE) AS price,
-        |       o_orderkey, rn
-        |FROM (
-        |  SELECT o_orderkey, o_orderstatus, o_orderpriority, price,
-        |         ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |           ORDER BY LENGTH(o_orderpriority) DESC,
-        |                    (price < 150000.0), o_orderkey) AS rn
-        |  FROM fs) t
-        |WHERE rn <= 4 ORDER BY o_orderstatus, rn
         |""".stripMargin)),
 
     GQuery(
@@ -1857,39 +635,24 @@ object SinkOps extends QueryModule {
         import s.implicits._
         import graft.streaming.Cdc
         import org.apache.spark.sql.types._
-        // NOTE (r16 optimization round): REBALANCE on this shared base
-        // (the q152 pattern) was measured AGAIN and REJECTED — AQE
-        // coalesces the ~3 MB exchange to ~1 partition, so no decode
-        // parallelism is gained and the added exchange + query-stage
-        // jobs cost ~0.15-0.4 s per gate (q103 1.47 -> 1.84 s warm).
-        // Confirms r15's call; at 100 TB the scan has >= cores splits
-        // and the serial-decode question does not arise.
-        val base = Tables.orders(s, d).select($"o_orderkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType()
-          .add("o_orderkey", LongType).add("price", DoubleType)
+        val Seq(ins, upd, del) = orders(s, d, Seq("o_orderkey"), DoublePrice,
+          Images(staleDeletes = true))
+        val payload = imageType(ins)
+        val noOld = lit(null).cast(ArrayType(payload)).as("old")
         // batched inserts: two consecutive orders per canal message
-        val inserts = base
-          .withColumn("__grp", ($"o_orderkey" / 2).cast("long"))
+        val inserts = ins
+          .withColumn("__grp", ($"after.o_orderkey" / 2).cast("long"))
           .groupBy($"__grp")
-          .agg(collect_list(struct($"o_orderkey", $"price")).as("rows"))
-          .select(to_json(struct(
-            $"rows".as("data"), lit(null).cast(ArrayType(payload)).as("old"),
+          .agg(collect_list($"after").as("rows"))
+          .select(to_json(struct($"rows".as("data"), noOld,
             lit("INSERT").as("type"), lit(1L).as("es"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            array(struct($"o_orderkey", bumped)).as("data"),
-            // canal's partial old image: ONLY the changed column
-            array(struct(lit(null).cast(LongType).as("o_orderkey"),
-              $"price")).as("old"),
-            lit("UPDATE").as("type"), lit(2L).as("es"))).as("value"))
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            array(struct($"o_orderkey", $"price")).as("data"),
-            lit(null).cast(ArrayType(payload)).as("old"),
-            lit("DELETE").as("type"), lit(3L).as("es"))).as("value"))
+        val updates = upd.select(to_json(struct(array($"after").as("data"),
+          // canal's partial old image: ONLY the changed column
+          array(struct(lit(null).cast(LongType).as("o_orderkey"),
+            $"before.price".as("price"))).as("old"),
+          lit("UPDATE").as("type"), lit(2L).as("es"))).as("value"))
+        val deletes = del.select(to_json(struct(array($"before").as("data"),
+          noOld, lit("DELETE").as("type"), lit(3L).as("es"))).as("value"))
         val log = Cdc.decodeCanal(
           inserts.unionByName(updates).unionByName(deletes), payload)
         Cdc.upsertMaterialize(log, Seq("o_orderkey"), "cdc_ts", "cdc_ts")
@@ -1916,34 +679,20 @@ object SinkOps extends QueryModule {
         import s.implicits._
         import graft.streaming.Cdc
         import org.apache.spark.sql.types._
-        // NOTE (r16 optimization round): REBALANCE on this shared base
-        // (the q152 pattern) was measured AGAIN and REJECTED — AQE
-        // coalesces the ~3 MB exchange to ~1 partition, so no decode
-        // parallelism is gained and the added exchange + query-stage
-        // jobs cost ~0.15-0.4 s per gate (q103 1.47 -> 1.84 s warm).
-        // Confirms r15's call; at 100 TB the scan has >= cores splits
-        // and the serial-decode question does not arise.
-        val base = Tables.orders(s, d).select($"o_orderkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType()
-          .add("o_orderkey", LongType).add("price", DoubleType)
-        val inserts = base.select(to_json(struct(
-          struct($"o_orderkey", $"price").as("data"),
-          lit(null).cast(payload).as("old"),
-          lit("insert").as("type"), lit(1L).as("ts"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            struct($"o_orderkey", bumped).as("data"),
-            // maxwell's old carries ONLY the changed column
-            struct(lit(null).cast(LongType).as("o_orderkey"), $"price").as("old"),
-            lit("update").as("type"), lit(2L).as("ts"))).as("value"))
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            struct($"o_orderkey", $"price").as("data"),
-            lit(null).cast(payload).as("old"),
-            lit("delete").as("type"), lit(3L).as("ts"))).as("value"))
+        val Seq(ins, upd, del) = orders(s, d, Seq("o_orderkey"), DoublePrice,
+          Images(staleDeletes = true))
+        val payload = imageType(ins)
+        def message(data: Column, old: Column, op: String, ts: Long) =
+          to_json(struct(data.as("data"), old.as("old"), lit(op).as("type"),
+            lit(ts).as("ts"))).as("value")
+        val inserts = ins.select(
+          message($"after", lit(null).cast(payload), "insert", 1))
+        // maxwell's old carries ONLY the changed column
+        val updates = upd.select(message($"after",
+          struct(lit(null).cast(LongType).as("o_orderkey"),
+            $"before.price".as("price")), "update", 2))
+        val deletes = del.select(
+          message($"before", lit(null).cast(payload), "delete", 3))
         val log = Cdc.decodeMaxwell(
           inserts.unionByName(updates).unionByName(deletes), payload)
         Cdc.upsertMaterialize(log, Seq("o_orderkey"), "cdc_ts", "cdc_ts")
@@ -1970,37 +719,15 @@ object SinkOps extends QueryModule {
       (s, d) => {
         import s.implicits._
         import graft.streaming.Cdc
-        import org.apache.spark.sql.types._
-        // NOTE (r16 optimization round): REBALANCE on this shared base
-        // (the q152 pattern) was measured AGAIN and REJECTED — AQE
-        // coalesces the ~3 MB exchange to ~1 partition, so no decode
-        // parallelism is gained and the added exchange + query-stage
-        // jobs cost ~0.15-0.4 s per gate (q103 1.47 -> 1.84 s warm).
-        // Confirms r15's call; at 100 TB the scan has >= cores splits
-        // and the serial-decode question does not arise.
-        val base = Tables.orders(s, d).select($"o_orderkey",
-          graft.Bits.dec($"o_totalprice").cast("double").as("price"))
-        val payload = new StructType()
-          .add("o_orderkey", LongType).add("price", DoubleType)
-        def iso(sec: Int) = f"2024-01-01 00:00:0$sec%d.000000"
-        val inserts = base.select(to_json(struct(
-          lit(null).cast(payload).as("before"),
-          struct($"o_orderkey", $"price").as("after"),
-          lit("I").as("op_type"), lit(iso(1)).as("current_ts"))).as("value"))
-        val bumped = ($"price".cast(graft.Bits.Dec) +
-          lit(100).cast(graft.Bits.Dec)).cast("double").as("price")
-        val updates = base.filter($"o_orderkey" % 10 === 0)
-          .select(to_json(struct(
-            struct($"o_orderkey", $"price").as("before"),
-            struct($"o_orderkey", bumped).as("after"),
-            lit("U").as("op_type"), lit(iso(2)).as("current_ts"))).as("value"))
-        val deletes = base.filter($"o_orderkey" % 17 === 0)
-          .select(to_json(struct(
-            struct($"o_orderkey", $"price").as("before"),
-            lit(null).cast(payload).as("after"),
-            lit("D").as("op_type"), lit(iso(3)).as("current_ts"))).as("value"))
-        val log = Cdc.decodeOgg(
-          inserts.unionByName(updates).unionByName(deletes), payload)
+        val changes = orders(s, d, Seq("o_orderkey"), DoublePrice,
+          Images(staleDeletes = true))
+        val payload = imageType(changes.head)
+        val messages = changes.zip(Seq("I", "U", "D")).zipWithIndex
+          .map { case ((c, op), i) => c.select(to_json(struct(
+            $"before", $"after", lit(op).as("op_type"),
+            lit(f"2024-01-01 00:00:0${i + 1}%d.000000").as("current_ts")))
+            .as("value")) }
+        val log = Cdc.decodeOgg(messages.reduce(_ unionByName _), payload)
         Cdc.upsertMaterialize(log, Seq("o_orderkey"), "cdc_ts", "cdc_ts")
           .select($"o_orderkey", $"price")
           .orderBy($"o_orderkey")

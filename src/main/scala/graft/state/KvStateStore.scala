@@ -120,9 +120,6 @@ object InMemoryKvService {
   def size(name: String): Int =
     Option(spaces.get(name)).map(_.values().asScala.map(_.size).sum).getOrElse(0)
   def namespaces: Seq[String] = spaces.keySet().asScala.toSeq
-  /** Total put+delete RPCs issued against this namespace since clearAll. */
-  def writeCount(name: String): Long =
-    Option(writeCounters.get(name)).map(_.get).getOrElse(0L)
   /** Total get+scan RPCs issued against this namespace since clearAll. */
   def readCount(name: String): Long =
     Option(readCounters.get(name)).map(_.get).getOrElse(0L)

@@ -191,8 +191,4 @@ object Cdc {
       .filter(col("__rn") === 1 && col(RowKind).isin(Insert, UpdateAfter))
       .drop("__rn")
   }
-
-  /** Append-only view of a changelog (retract-free consumers). */
-  def appendOnly(changelog: DataFrame): DataFrame =
-    changelog.filter(col(RowKind).isin(Insert, UpdateAfter))
 }

@@ -365,9 +365,6 @@ object StatefulOps {
           comb(if (ops == null) SlotOp.Sum else ops(i), a(i), b(i)))
       }
 
-    def sumOf(ops: IndexedSeq[SlotOp], rows: Seq[(Long, Seq[Double])]): Seq[Double] =
-      rows.foldLeft(Seq.empty[Double])((z, r) => plus(ops, z, r._2))
-
     /** TOTAL order on (t, values) — the deterministic tie order of the
       * bounded/RANGE frames. Slot comparisons go through
       * java.lang.Double.compare, which totals NaN (greater than every

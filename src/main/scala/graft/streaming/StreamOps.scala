@@ -29,15 +29,6 @@ object StreamOps {
       .groupBy(window(col(tsCol), windowLen).as("w") +: keys: _*)
       .agg(aggs.head, aggs.tail: _*)
 
-  /** HOP (sliding) window aggregation. */
-  def hopAgg(
-      events: DataFrame, tsCol: String, maxOutOfOrder: String,
-      windowLen: String, slide: String,
-      keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(tsCol, maxOutOfOrder)
-      .groupBy(window(col(tsCol), windowLen, slide).as("w") +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-
   /** SESSION window aggregation (dynamic gap supported via gap expression). */
   def sessionAgg(
       events: DataFrame, tsCol: String, maxOutOfOrder: String,
