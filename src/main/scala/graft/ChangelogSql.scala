@@ -1528,11 +1528,13 @@ object ChangelogSql {
     * `graft.stream.triggerIntervalMs`: a caller that lands ONE logical
     * commit as SEVERAL table appends (a multi-source statement whose
     * inputs commit one table at a time) sets it a bit above its append
-    * latency so the poll does not fire between the appends and split the
-    * commit round into one micro-batch per source — fewer, larger
-    * micro-batches paying the per-batch machinery once. (A per-round
-    * Trigger.AvailableNow restart was measured and rejected for the same
-    * gates; see OPTIMIZATION_r16.md.)
+    * latency so the poll usually does not fire between the appends and
+    * split the commit round into one micro-batch per source — fewer,
+    * larger micro-batches paying the per-batch machinery once. It is no
+    * guarantee: a poll can still fall between two appends and split a
+    * round, so the micro-batch count per round varies between runs. (A
+    * per-round Trigger.AvailableNow restart was measured and rejected for
+    * the same gates; see OPTIMIZATION_r16.md.)
     *
     * The final state is identical either way (the normalize/join/agg
     * operators are deterministic over the same total input and the sinks

@@ -703,8 +703,11 @@ object Engine {
                     "<rowtime> (PARTITION BY may differ per item — chained " +
                     "passes; wrap joins in the subquery form). ROW_NUMBER " +
                     "over a window TVF — the reference's WindowRank / " +
-                    "WindowDeduplicate — runs through StatefulOps." +
-                    s"windowTopN / windowDedup. got: $select")
+                    "WindowDeduplicate — is its own form: SELECT <items> " +
+                    "FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY " +
+                    "window_start, window_end [, keys] ORDER BY <col>) AS " +
+                    "rn FROM TABLE(TUMBLE(TABLE t, DESCRIPTOR(ts), size))) " +
+                    s"WHERE rn <= N (rn = 1 deduplicates). got: $select")
               df
             }
             }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * compiles to the RowTime{Rows,Range}{Bounded,Unbounded}Preceding
   * process functions). Spark's window functions reject streaming frames
   * ("non-time-based windows are not supported"), so the clause is lowered
-  * onto [[graft.streaming.StatefulOps.overSumsByKey]]: every aggregate
+  * onto [[graft.streaming.StatefulOps.overMultiAggsByKey]]: every aggregate
   * becomes one or two slots of a value VECTOR summed over the frame in a
   * SINGLE stateful pass — exactly how StreamExecOverAggregate fuses all
   * of a window's aggregates into one operator.

@@ -690,22 +690,4 @@ object Cep {
     matchBatch(spark, stepToMask(events), Pattern.linear(nSteps, within))
       .select(col("key"), flatten(col("step_times")).as("step_times"))
   }
-
-  /** Streaming variant of the linear funnel (same input contract; t in
-    * epoch-µs, `delay` = tolerated out-of-orderness). */
-  def detectStream(
-      ds: Dataset[(Long, Long, Int, Long)], nSteps: Int, within: Long,
-      delay: String = "0 seconds")(
-      implicit ek: Encoder[Long],
-      es: Encoder[(Seq[(Long, Long, Long)], List[Run])],
-      em: Encoder[(Long, Long, Long, Long)],
-      ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
-      eo: Encoder[(Long, Seq[Seq[Long]])],
-      ef: Encoder[(Long, Seq[Long])]): Dataset[(Long, Seq[Long])] = {
-    val masked = ds.map { case (k, t, step, tie) =>
-      (k, t, if (step >= 0) 1L << step else 0L, tie)
-    }
-    matchStream(masked, Pattern.linear(nSteps, within), delay)
-      .map { case (k, st) => (k, st.map(_.head)) }
-  }
 }

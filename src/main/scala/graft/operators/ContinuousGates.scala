@@ -164,11 +164,13 @@ object ContinuousGates extends QueryModule {
     * small-state jobs over a handful of keys, so 8 stores per stateful
     * operator, not one per batch-sized shuffle partition); and when a
     * round appends to more than one source, a 1000 ms trigger, which
-    * MERGES that round's appends into one micro-batch (under the
+    * usually merges that round's appends into one micro-batch (under the
     * zero-interval default a poll between the two INSERTs splits the
-    * round, paying the per-batch machinery twice; the final state is the
-    * same either way; measured on q163: both rounds merge, round walls
-    * 3.4→2.8 s and 2.1→1.6 s). */
+    * round, paying the per-batch machinery twice; measured on q163: both
+    * rounds merged, round walls 3.4→2.8 s and 2.1→1.6 s). It does not
+    * guarantee the merge: a poll can still land between two appends and
+    * split a round (q163 ran 3 or 4 micro-batches, q158 4 or 5, across
+    * Bench runs of one tree). The result is identical either way. */
   def runGate(s: SparkSession, d: String, g: ContinuousGate): DataFrame = {
     val rounds = g.sources.map(src => src -> src.rounds(s, d))
     val pins = ("graft.stream.statePartitions" -> "8") +:

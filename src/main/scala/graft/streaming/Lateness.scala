@@ -222,25 +222,4 @@ object Lateness {
       : Dataset[(K, Long, String, Long, Double)] =
     triggeredTumbleSum(ds, windowMs, FireTrigger.CountT(every),
       evictCount.map(Evict.Count))
-
-  /** CURRENT_WATERMARK() analog (Flink BuiltInFunctionDefinitions
-    * CURRENT_WATERMARK, SURVEY §2.9): annotate every row with the
-    * operator-observed watermark at the moment it was processed —
-    * Spark exposes the watermark only inside stateful operators, so the
-    * function surfaces as a stream transform rather than a scalar
-    * expression. Output: (key, t_ms, value, watermark_ms). */
-  def withCurrentWatermark[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)])(
-      implicit e1: Encoder[Long],
-      e2: Encoder[(K, Long, Double, Long)]): Dataset[(K, Long, Double, Long)] = {
-
-    def tag(key: K, rows: Iterator[(K, java.sql.Timestamp, Double)],
-        state: GroupState[Long]): Iterator[(K, Long, Double, Long)] = {
-      val wm = state.getCurrentWatermarkMs()
-      rows.map(r => (key, r._2.getTime, r._3, wm)).toList.iterator
-    }
-
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(tag)
-  }
 }

@@ -10,12 +10,10 @@ import org.apache.spark.sql.streaming._
   *
   * ONE ranking implementation:
   * [[retractableTopNChangelogSorted]]'s dataState+sorted-counts
-  * processor, which the SQL front door lowers onto. The Double-scored
-  * variants ([[retractableTopN]], [[retractableTopNChangelog]]) are thin
-  * wrappers that encode the score as a DESC
-  * [[graft.util.SortKey.fieldDouble]] field on the way in and decode it
-  * from the emitted sort key on the way out. Payload ties break in
-  * CODE-POINT order (Spark's UTF8_BINARY).
+  * processor, which the SQL front door lowers onto. A Double score
+  * ranks as a [[graft.util.SortKey.fieldDouble]] field (DESC for a
+  * highest-first rank). Payload ties break in CODE-POINT order (Spark's
+  * UTF8_BINARY).
   *
   * Runtime prerequisite: transformWithState requires the RocksDB state
   * store provider. */
@@ -81,11 +79,9 @@ object RetractTws {
     * within a sort key order ascending (code-point order = Spark's
     * UTF8_BINARY).
     *
-    * `emitAll`: false = delta changelog (+U changed ranks, -D vacated
-    * ranks — the RetractableTopNFunction emit contract); true = emit
-    * EVERY rank of the refreshed top whenever it changes (the plain
-    * [[retractableTopN]] surface's contract). */
-  private class TopNChangelogSortedProc[K](n: Int, emitAll: Boolean)
+    * Emission is the delta changelog: +U for changed ranks, -D for
+    * vacated ranks — the RetractableTopNFunction emit contract. */
+  private class TopNChangelogSortedProc[K](n: Int)
       extends StatefulProcessor[K, (K, String, String, String),
         (String, K, Int, String, String)] {
 
@@ -214,14 +210,10 @@ object RetractTws {
         Iterator.empty
       } else {
         boundary.update(Tuple1(after))
-        val refreshed =
-          if (emitAll) after.iterator.zipWithIndex.map {
-            case ((sk, payload), i) => (Cdc.UpdateAfter, key, i + 1, sk, payload)
-          }
-          else after.iterator.zipWithIndex.collect {
-            case ((sk, payload), i) if before.lift(i) != Some((sk, payload)) =>
-              (Cdc.UpdateAfter, key, i + 1, sk, payload)
-          }
+        val refreshed = after.iterator.zipWithIndex.collect {
+          case ((sk, payload), i) if before.lift(i) != Some((sk, payload)) =>
+            (Cdc.UpdateAfter, key, i + 1, sk, payload)
+        }
         val shrunk = before.iterator.zipWithIndex.drop(after.size).map {
           case ((sk, payload), i) => (Cdc.Delete, key, i + 1, sk, payload)
         }
@@ -250,61 +242,6 @@ object RetractTws {
     // UPSERT inputs (Spark rejects an Update-mode query containing an
     // append-mode flatMapGroupsWithState)
     ds.groupByKey(_._1)
-      .transformWithState(new TopNChangelogSortedProc[K](n, emitAll = false),
+      .transformWithState(new TopNChangelogSortedProc[K](n),
         TimeMode.None(), OutputMode.Append(), eout)
-
-  /** Retractable top-N over a changelog of (key, row_kind, score,
-    * payload): a retraction (-U/-D) removes one matching (score,
-    * payload) instance, and the refreshed top-N — including rows
-    * BACKFILLED from below the old cut — is emitted whenever it changes,
-    * as (key, rank, score, payload). A thin wrapper over the sorted
-    * processor (DESC double field encoding in, score decoded from the
-    * emitted sort key out; -D rows dropped — this surface emits the full
-    * refreshed top, vacated ranks are implied by its shrinking). */
-  def retractableTopN[K](ds: Dataset[(K, String, Double, String)], n: Int)(
-      implicit ek: Encoder[K],
-      eout: Encoder[(K, Int, Double, String)]): Dataset[(K, Int, Double, String)] = {
-    implicit val eIn: Encoder[(K, String, String, String)] =
-      Encoders.tuple(ek, Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    implicit val eMid: Encoder[(String, K, Int, String, String)] =
-      Encoders.tuple(Encoders.STRING, ek, Encoders.scalaInt,
-        Encoders.STRING, Encoders.STRING)
-    ds.map { case (k, kind, score, payload) =>
-      (k, kind, graft.util.SortKey.fieldDouble(score, asc = false), payload)
-    }
-      .groupByKey(_._1)
-      .transformWithState(new TopNChangelogSortedProc[K](n, emitAll = true),
-        TimeMode.None(), OutputMode.Append(), eMid)
-      .filter((t: (String, K, Int, String, String)) => t._1 == Cdc.UpdateAfter)
-      .map { t: (String, K, Int, String, String) =>
-        (t._2, t._3,
-          graft.util.SortKey.decodeFieldDouble(t._4, asc = false), t._5)
-      }
-  }
-
-  /** [[retractableTopN]] with an explicit DOWNSTREAM CHANGELOG — the
-    * full RetractableTopNFunction emit contract: refreshed ranks emit as
-    * ("+U", key, rank, score, payload) and ranks the refreshed top no
-    * longer covers emit ("-D", key, rank, oldScore, oldPayload), so an
-    * upsert sink keyed by (key, rank) always materializes to exactly the
-    * current top-N. A thin wrapper over the sorted processor. */
-  def retractableTopNChangelog[K](
-      ds: Dataset[(K, String, Double, String)], n: Int)(
-      implicit ek: Encoder[K],
-      eout: Encoder[(String, K, Int, Double, String)])
-      : Dataset[(String, K, Int, Double, String)] = {
-    implicit val eIn: Encoder[(K, String, String, String)] =
-      Encoders.tuple(ek, Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    implicit val eMid: Encoder[(String, K, Int, String, String)] =
-      Encoders.tuple(Encoders.STRING, ek, Encoders.scalaInt,
-        Encoders.STRING, Encoders.STRING)
-    retractableTopNChangelogSorted(
-      ds.map { case (k, kind, score, payload) =>
-        (k, kind, graft.util.SortKey.fieldDouble(score, asc = false), payload)
-      }, n)
-      .map { case (kind, k, rank, sk, payload) =>
-        (kind, k, rank,
-          graft.util.SortKey.decodeFieldDouble(sk, asc = false), payload)
-      }
-  }
 }

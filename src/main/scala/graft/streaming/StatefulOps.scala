@@ -91,58 +91,48 @@ object StatefulOps {
     * on change, `-D` carrying the last image on delete. This is the
     * stream form of the batch normalization ChangelogSql applies to
     * declared upsert relations; its output feeds any retraction-consuming
-    * operator (Retract.groupAggregate, retractableTopN, ...).
+    * operator (the aggregate routes, [[RetractTws]]'s top-N, the joins).
     *
     * Rows within a batch fold in `seq` order; a row older than the
     * state's seq is DROPPED (the upsert contract says the newest row
     * wins — replaying an older image would retract forward progress).
     * A delete for an absent key emits nothing. State: one
-    * (seq, payload, live) per key; `ttl` is the same OnCreateAndWrite
-    * state-TTL knob as [[keepLastByKey]]. */
+    * (seq, payload, live) per key, kept for the life of the query. */
   def normalizeUpsert[K: Encoder](
-      ds: Dataset[(K, Long, String, Boolean)],
-      ttl: Option[java.time.Duration] = None)(
+      ds: Dataset[(K, Long, String, Boolean)])(
       implicit e1: Encoder[(Long, String, Boolean)],
       e2: Encoder[(String, K, Long, String)]): Dataset[(String, K, Long, String)] = {
 
     def update(key: K, rows: Iterator[(K, Long, String, Boolean)],
         state: GroupState[(Long, String, Boolean)]): Iterator[(String, K, Long, String)] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val out = Seq.newBuilder[(String, K, Long, String)]
-        var cur = state.getOption
-        rows.toSeq.sortBy(_._2).foreach { case (_, seq, payload, isDelete) =>
-          if (!cur.exists(_._1 > seq)) {
-            cur match {
-              case Some((_, prev, true)) if isDelete =>
-                out += (("-D", key, seq, prev))
-                cur = Some((seq, prev, false))
-              case Some((_, prev, true)) =>
-                if (prev != payload) {
-                  out += (("-U", key, seq, prev))
-                  out += (("+U", key, seq, payload))
-                }
-                cur = Some((seq, payload, true))
-              case _ if isDelete => // delete of an absent key: no-op
-                cur = cur.map { case (_, p, _) => (seq, p, false) }
-              case _ =>
-                out += (("+I", key, seq, payload))
-                cur = Some((seq, payload, true))
-            }
+      val out = Seq.newBuilder[(String, K, Long, String)]
+      var cur = state.getOption
+      rows.toSeq.sortBy(_._2).foreach { case (_, seq, payload, isDelete) =>
+        if (!cur.exists(_._1 > seq)) {
+          cur match {
+            case Some((_, prev, true)) if isDelete =>
+              out += (("-D", key, seq, prev))
+              cur = Some((seq, prev, false))
+            case Some((_, prev, true)) =>
+              if (prev != payload) {
+                out += (("-U", key, seq, prev))
+                out += (("+U", key, seq, payload))
+              }
+              cur = Some((seq, payload, true))
+            case _ if isDelete => // delete of an absent key: no-op
+              cur = cur.map { case (_, p, _) => (seq, p, false) }
+            case _ =>
+              out += (("+I", key, seq, payload))
+              cur = Some((seq, payload, true))
           }
         }
-        cur.foreach { s =>
-          state.update(s)
-          ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-        }
-        out.result().iterator
       }
+      cur.foreach(state.update)
+      out.result().iterator
     }
 
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(update)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
   /** Event-time sort (Flink RowTimeSortOperator: emit rows in event-time
@@ -178,75 +168,7 @@ object StatefulOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Streaming OVER aggregation: event-time-ordered running sum per key
-    * (Flink RowTimeRowsUnboundedPrecedingFunction). Rows are released in
-    * watermark order, each annotated with the running sum over everything
-    * released so far for the key. The single-slot special case of
-    * [[overSumsByKey]] — semantic parity is by construction. */
-  def runningSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)])(
-      implicit em: Encoder[(K, java.sql.Timestamp, Seq[Double])],
-      e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      ev: Encoder[(K, Long, Seq[Double], Seq[Double])],
-      e2: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    singleSlot(ds, OverFrame.Unbounded)
-
-  /** Streaming OVER with a bounded ROWS frame: each released row is
-    * annotated with the aggregate over the last `nRows` rows (frame ROWS
-    * nRows-1 PRECEDING .. CURRENT ROW) of its key — Flink
-    * RowTimeRowsBoundedPrecedingFunction.java:56. State is
-    * O(pending + nRows) per key; [[overSumsByKey]]'s Rows case. */
-  def rowsBoundedSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)], nRows: Int)(
-      implicit em: Encoder[(K, java.sql.Timestamp, Seq[Double])],
-      e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      ev: Encoder[(K, Long, Seq[Double], Seq[Double])],
-      e2: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    singleSlot(ds, OverFrame.Rows(nRows))
-
-  /** Streaming OVER with a bounded RANGE frame: each released row is
-    * annotated with the aggregate over rows of its key with t in
-    * [cur - rangeMs, cur] — Flink RowTimeRangeBoundedPrecedingFunction
-    * .java. Rows sharing a rowtime are SQL peers and share one aggregate
-    * value (see [[overSumsByKey]]). State is O(pending +
-    * rows-inside-range) per key; [[overSumsByKey]]'s Range case. */
-  def rangeBoundedSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)], rangeMs: Long)(
-      implicit em: Encoder[(K, java.sql.Timestamp, Seq[Double])],
-      e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      ev: Encoder[(K, Long, Seq[Double], Seq[Double])],
-      e2: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    singleSlot(ds, OverFrame.Range(rangeMs))
-
-  /** Streaming OVER, unbounded RANGE frame (SQL's DEFAULT frame for an
-    * ORDER BY without an explicit frame): the running sum where rows
-    * sharing a rowtime are peers and read the same value — Flink
-    * RowTimeRangeUnboundedPrecedingFunction.java, vs the row-at-a-time
-    * [[runningSumByKey]] (its ROWS sibling). */
-  def rangeRunningSumByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)])(
-      implicit em: Encoder[(K, java.sql.Timestamp, Seq[Double])],
-      e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      ev: Encoder[(K, Long, Seq[Double], Seq[Double])],
-      e2: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] =
-    singleSlot(ds, OverFrame.UnboundedRange)
-
-  private def singleSlot[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Double)], frame: OverFrame)(
-      implicit em: Encoder[(K, java.sql.Timestamp, Seq[Double])],
-      e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      ev: Encoder[(K, Long, Seq[Double], Seq[Double])],
-      e2: Encoder[(K, Long, Double, Double)]): Dataset[(K, Long, Double, Double)] = {
-    import org.apache.spark.sql.functions._
-    // COLUMN ops, not a typed map: map() drops the caller's watermark
-    // designation and the stateful operator's event-time timeout needs it
-    val vec = ds.toDF("k", "t", "v")
-      .select(col("k"), col("t"), array(col("v")).as("vs"))
-      .as[(K, java.sql.Timestamp, Seq[Double])]
-    overSumsByKey(vec, frame).map(r => (r._1, r._2, r._3.head, r._4.head))
-  }
-
-  /** OVER frame shapes shared by [[overSumsByKey]] and the SQL lowering
+  /** OVER frame shapes shared by [[overMultiAggsByKey]] and the SQL lowering
     * (StreamOverSql) — the RowTime{Rows,Range}{Bounded,Unbounded}
     * Preceding family as one parameter. */
   sealed trait OverFrame extends Serializable
@@ -259,7 +181,7 @@ object StatefulOps {
     case object UnboundedRange extends OverFrame
   }
 
-  /** Per-slot combine op of the fused OVER pass ([[overAggsByKey]]). A
+  /** Per-slot combine op of the fused OVER pass ([[overMultiAggsByKey]]). A
     * NaN operand means "NULL input" and is skipped by every op — SQL's
     * NULL-ignoring aggregates in slot form; an all-NaN frame reduces to
     * NaN, which the SQL layer reads back as NULL. First/Last fold to the
@@ -313,9 +235,9 @@ object StatefulOps {
     * (frames re-fold, so nothing ever needs undoing); a RETRACTABLE one
     * is additionally admissible over changelogs — ChangelogSql lowers
     * registered retractable aggregates with the ±1 sign algebra
-    * (retractions call [[retract]]), and [[Retract.groupAggregateWith]]
-    * applies them in continuous streaming state, exactly where Flink
-    * requires the *WithRetract aggregate variants. [[merge]] is what
+    * (retractions call [[retract]]) in batch and in the continuous
+    * aggregate routes, exactly where Flink requires the *WithRetract
+    * aggregate variants. [[merge]] is what
     * makes the batch lowering DISTRIBUTED: partial accumulators combine
     * map-side before the group exchange. */
   trait RetractableOverAgg extends OverAgg {
@@ -420,22 +342,18 @@ object StatefulOps {
       * With a UNIFORM frame this reduces exactly to the historical
       * single-frame behavior (same tie order, same retention buffer) —
       * pinned by the executor-equality specs. */
-    final class Multi(shared: OverFrame, framesOrNull: IndexedSeq[OverFrame],
-        ops: IndexedSeq[SlotOp]) extends Serializable {
-      private def frameOf(i: Int): OverFrame =
-        if (framesOrNull == null) shared else framesOrNull(i)
+    final class Multi(frames: IndexedSeq[OverFrame], ops: IndexedSeq[SlotOp])
+        extends Serializable {
       private def opOf(i: Int): SlotOp = if (ops == null) SlotOp.Sum else ops(i)
-      private val allFrames: Seq[OverFrame] =
-        if (framesOrNull == null) Seq(shared) else framesOrNull
       private val maxRows: Int =
-        allFrames.collect { case OverFrame.Rows(n) => n }.maxOption.getOrElse(0)
+        frames.collect { case OverFrame.Rows(n) => n }.maxOption.getOrElse(0)
       private val maxMs: Option[Long] =
-        allFrames.collect { case OverFrame.Range(ms) => ms }.maxOption
-      private val hasRowAcc = allFrames.contains(OverFrame.Unbounded)
-      private val hasGroupAcc = allFrames.contains(OverFrame.UnboundedRange)
-      private val allUnboundedRows = allFrames.forall(_ == OverFrame.Unbounded)
+        frames.collect { case OverFrame.Range(ms) => ms }.maxOption
+      private val hasRowAcc = frames.contains(OverFrame.Unbounded)
+      private val hasGroupAcc = frames.contains(OverFrame.UnboundedRange)
+      private val allUnboundedRows = frames.forall(_ == OverFrame.Unbounded)
       /** Any slot with an unbounded frame => the accumulator is PERMANENT
-        * key state (the runningSumByKey contract) — never auto-removed. */
+        * key state (the unbounded-preceding contract) — never auto-removed. */
       val permanent: Boolean = hasRowAcc || hasGroupAcc
       /** Any bounded frame => the retention buffer is live state. */
       val bounded: Boolean = maxRows > 0 || maxMs.isDefined
@@ -533,7 +451,7 @@ object StatefulOps {
               val arr = ensureArr(acc, n)
               var i = 0
               while (i < n) {
-                frameOf(i) match {
+                frames(i) match {
                   case OverFrame.Unbounded => opOf(i) match {
                     case SlotOp.Agg(_) =>
                       if (!v(i).isNaN) reduceRegion(arr, i, n, v(i))
@@ -546,7 +464,7 @@ object StatefulOps {
               acc = arr.toSeq
             }
             Array.tabulate(n) { i =>
-              frameOf(i) match {
+              frames(i) match {
                 case OverFrame.Unbounded => opOf(i) match {
                   case SlotOp.Agg(_) => finishRegion(acc, i, n)
                   case _ => accAt(acc, i)
@@ -563,7 +481,7 @@ object StatefulOps {
             val arr = ensureArr(acc, n)
             var i = 0
             while (i < n) {
-              frameOf(i) match {
+              frames(i) match {
                 case OverFrame.UnboundedRange => opOf(i) match {
                   case SlotOp.Agg(_) =>
                     peers.foreach(v => if (!v(i).isNaN) reduceRegion(arr, i, n, v(i)))
@@ -577,7 +495,7 @@ object StatefulOps {
             acc = arr.toSeq
           }
           val groupVals = Array.tabulate(n) { i =>
-            frameOf(i) match {
+            frames(i) match {
               case OverFrame.Range(ms) => slotOver(i, buf.filter(_._1 >= t - ms))
               case OverFrame.UnboundedRange => opOf(i) match {
                 case SlotOp.Agg(_) => finishRegion(acc, i, n)
@@ -597,7 +515,7 @@ object StatefulOps {
             }
           peers.zip(rowVals).foreach { case (v, rv) =>
             out += ((t, v, Seq.tabulate(n) { i =>
-              frameOf(i) match {
+              frames(i) match {
                 case OverFrame.Range(_) | OverFrame.UnboundedRange => groupVals(i)
                 case _ => rv(i)
               }
@@ -609,39 +527,24 @@ object StatefulOps {
     }
   }
 
-  /** Generalized streaming OVER: each row, released in event-time order,
-    * is annotated with the ELEMENTWISE SUMS of a value VECTOR over the
-    * frame — so one stateful pass serves several aggregates sharing one
-    * window spec (a SUM is a value slot, COUNT an indicator slot, AVG a
-    * sum slot divided by a count slot downstream). Frame semantics are
-    * exactly the single-value operators' (runningSumByKey /
-    * rowsBoundedSumByKey / rangeBoundedSumByKey): same late-row drops,
-    * same permanent accumulator for the unbounded frame, same
-    * O(pending + frame) state for the bounded ones. */
-  def overSumsByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])], frame: OverFrame)(
-      implicit e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      e2: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] =
-    overAggsByKey(ds, frame, null)
-
-  /** [[overSumsByKey]] with a per-slot combine op: slot i reduces with
-    * ops(i) (Sum / Min / Max) over the frame, letting one stateful pass
-    * also serve MIN/MAX OVER items. `ops = null` (the overSumsByKey
-    * delegate) means all-Sum. NaN encodes a NULL input — skipped by every
-    * op (SQL NULL-ignoring aggregates); an all-NaN frame reduces to NaN. */
-  def overAggsByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])], frame: OverFrame,
-      ops: IndexedSeq[SlotOp])(
-      implicit e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      e2: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] =
-    overMultiImpl(ds, frame, null, ops)
-
-  /** [[overAggsByKey]] with a PER-SLOT frame: slot i reduces with ops(i)
-    * over frames(i) — several OVER items with different windows fused
-    * into one stateful pass (Slots.Multi; the reference chains one
-    * operator per window instead — StreamExecOverAggregate.java). */
+  /** Generalized streaming OVER, the fused pass StreamOverSql lowers
+    * onto: each row, released in event-time order, is annotated with a
+    * value VECTOR's per-slot aggregates — slot i reduces with ops(i)
+    * over frames(i) (`ops = null` means all-Sum) — so one stateful pass
+    * serves several OVER items, with different windows too (Slots.Multi;
+    * the reference chains one operator per window instead —
+    * StreamExecOverAggregate.java). A SUM is a value slot, COUNT an
+    * indicator slot, AVG a sum slot divided by a count slot downstream.
+    * Each frame is one of Flink's
+    * RowTime{Rows,Range}{Unbounded,Bounded}PrecedingFunction family:
+    * `Unbounded` the running aggregate, `Rows(n)` the last n rows
+    * (RowTimeRowsBoundedPrecedingFunction.java:56), `Range(ms)` the rows
+    * with t in [cur - ms, cur], `UnboundedRange` SQL's default frame; in
+    * both RANGE frames rowtime peers share one value. NaN encodes a NULL
+    * input — skipped by every op (SQL NULL-ignoring aggregates); an
+    * all-NaN frame reduces to NaN. Rows release once the watermark passes
+    * them and late rows drop; the unbounded frames keep a permanent
+    * accumulator, the bounded ones O(pending + frame) state. */
   def overMultiAggsByKey[K: Encoder](
       ds: Dataset[(K, java.sql.Timestamp, Seq[Double])],
       frames: IndexedSeq[OverFrame], ops: IndexedSeq[SlotOp])(
@@ -651,15 +554,6 @@ object StatefulOps {
     require(frames != null && frames.nonEmpty, "overMultiAggsByKey: no frames")
     require(ops == null || ops.length == frames.length,
       s"overMultiAggsByKey: ${frames.length} frames but ${ops.length} ops")
-    overMultiImpl(ds, frames.head, frames, ops)
-  }
-
-  private def overMultiImpl[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])], frame: OverFrame,
-      framesOrNull: IndexedSeq[OverFrame], ops: IndexedSeq[SlotOp])(
-      implicit e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      e2: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] = {
 
     // tie order, peer sharing, per-slot frames and NULL-skip live in ONE
     // place (Slots.Multi) shared with the chained TWS pass — see its
@@ -672,7 +566,7 @@ object StatefulOps {
     // Peer groups cannot split across micro-batches: all non-late rows
     // at a timestamp release in the batch where the watermark crossed
     // it, and a same-t row arriving after that is late and dropped.
-    val multi = new Slots.Multi(frame, framesOrNull, ops)
+    val multi = new Slots.Multi(frames, ops)
 
     def update(key: K, rows: Iterator[(K, java.sql.Timestamp, Seq[Double])],
         state: GroupState[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])])
@@ -682,16 +576,16 @@ object StatefulOps {
           Seq.empty[(Long, Seq[Double])]))
       val wm = state.getCurrentWatermarkMs()
       val buf = pending0 ++ rows.map { r =>
-        require(ops == null || r._3.length == ops.length,
-          s"overAggsByKey: row carries ${r._3.length} slots, ops has ${ops.length}")
+        require(r._3.length == frames.length,
+          s"overMultiAggsByKey: row carries ${r._3.length} slots, frames has ${frames.length}")
         (r._2.getTime, r._3)
       }.filter(_._1 > wm)
       val (ready, pending) = buf.partition(_._1 <= wm)
       val (outRows, acc, frm) = multi.release(ready, acc0, frame0)
       val out = outRows.map { case (t, v, sums) => (key, t, v, sums) }
-      // the unbounded accumulators are PERMANENT state (the
-      // runningSumByKey contract and Flink's unbounded-preceding
-      // functions): a contributing-nothing invocation must not reset them
+      // the unbounded accumulators are PERMANENT state (Flink's
+      // unbounded-preceding functions): a contributing-nothing
+      // invocation must not reset them
       val removable =
         if (multi.permanent) state.getOption.isEmpty
         else pending0.isEmpty && frame0.isEmpty
@@ -977,7 +871,8 @@ object StatefulOps {
     * closed) drop, exactly the window-TVF aggregation contract.
     *
     * Window dedup (StreamExecWindowDeduplicate: keep first/last row per
-    * window and key) is the n=1 case — see [[windowDedup]].
+    * window and key) is the n=1 case ordered by rowtime — the SQL form
+    * `WHERE rn = 1` lowers onto it (WindowTvfSql).
     *
     * Input (key, rowtime, score, payload) with a watermark on rowtime;
     * output (key, winStartUs, winEndUs, rank, score, payload). */
@@ -1036,31 +931,5 @@ object StatefulOps {
 
     ds.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** Streaming WINDOW DEDUPLICATE — StreamExecWindowDeduplicate: the
-    * first (or last) row per key within each tumbling window, emitted
-    * once on window close. The n=1 window rank ordered by rowtime with
-    * the payload as the total-order tie-break (Flink keeps the FIRST
-    * arrival among equal rowtimes in proc-time order; a deterministic
-    * engine breaks the tie on the row itself). */
-  def windowDedup[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, String)],
-      sizeUs: Long, keepFirst: Boolean = true, offUs: Long = 0L)(
-      implicit e1: Encoder[Seq[(Long, Seq[(Double, String)])]],
-      e2: Encoder[(K, Long, Long, Int, Double, String)],
-      e3: Encoder[(K, Long, Long, String)],
-      e4: Encoder[(K, java.sql.Timestamp, Double, String)])
-      : Dataset[(K, Long, Long, String)] = {
-    import org.apache.spark.sql.functions.{col, unix_micros}
-    // untyped projection, NOT a typed map: MapElements re-serializes and
-    // drops the event-time marker the downstream EventTimeTimeout needs
-    val scored = ds.toDF("k", "t", "p")
-      .select(col("k"), col("t"),
-        unix_micros(col("t")).cast("double").as("score"), // µs exact < 2^53
-        col("p"))
-      .as[(K, java.sql.Timestamp, Double, String)]
-    windowTopN(scored, sizeUs, n = 1, asc = keepFirst, offUs = offUs)
-      .map { case (k, ws, we, _, _, payload) => (k, ws, we, payload) }
   }
 }

@@ -58,8 +58,7 @@ object StatefulTws {
     * (t, values) are interchangeable w.r.t. every frame, so attaching
     * composites positionally to the shared release loop's outputs is
     * exact. */
-  private class OverAggsChainProc(frame: StatefulOps.OverFrame,
-      framesOrNull: IndexedSeq[StatefulOps.OverFrame],
+  private class OverAggsChainProc(frames: IndexedSeq[StatefulOps.OverFrame],
       ops: IndexedSeq[StatefulOps.SlotOp], dropLate: Boolean)
       extends StatefulProcessor[String,
         (String, String, java.sql.Timestamp, Seq[Double]),
@@ -70,7 +69,7 @@ object StatefulTws {
     @transient private var acc: ValueState[Tuple1[Seq[Double]]] = _
     @transient private var minPending: ValueState[Long] = _
 
-    private val multi = new StatefulOps.Slots.Multi(frame, framesOrNull, ops)
+    private val multi = new StatefulOps.Slots.Multi(frames, ops)
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       pending = getHandle.getListState("pending", eChainRow, TTLConfig.NONE)
@@ -156,7 +155,7 @@ object StatefulTws {
       : Dataset[(String, java.sql.Timestamp, Seq[Double], Seq[Double])] = {
     require(frames != null && frames.nonEmpty, "overMultiAggsChained: no frames")
     ds.groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new OverAggsChainProc(frames.head, frames, ops, dropLate),
+      .transformWithState(new OverAggsChainProc(frames, ops, dropLate),
         "_2", OutputMode.Append(), eo)
   }
 }

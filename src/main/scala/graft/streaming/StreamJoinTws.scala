@@ -251,35 +251,6 @@ object StreamJoinTws {
       Iterator.empty // no timers: state lives until explicitly retracted
   }
 
-  private def run[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)],
-      padLeft: Boolean, padRight: Boolean)(
-      implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
-      etag: Encoder[(Int, K, String, Option[L], Option[R])],
-      emid: Encoder[(K, String, Option[L], Option[R])])
-      : Dataset[(K, String, Option[L], Option[R])] =
-    tagged(left, right)
-      .groupByKey(_._2)
-      .transformWithState(new OuterJoinProc[K, L, R](padLeft, padRight, el, er),
-        TimeMode.None(), OutputMode.Update(), emid)
-
-  /** Inner join of two keyed changelogs. Input rows: (key, row_kind,
-    * payload). Output rows: (key, row_kind, leftPayload, rightPayload)
-    * with row_kind in {+I, -D} (an inner join never emits null payloads,
-    * so the internal Options unwrap at the edge). */
-  def innerJoin[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
-      implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
-      etag: Encoder[(Int, K, String, Option[L], Option[R])],
-      emid: Encoder[(K, String, Option[L], Option[R])],
-      eout: Encoder[(K, String, L, R)])
-      : Dataset[(K, String, L, R)] =
-    tagged(left, right)
-      .groupByKey(_._2)
-      .transformWithState(new InnerJoinProc[K, L, R](el, er),
-        TimeMode.None(), OutputMode.Update(), emid)
-      .map { case (k, kind, l, r) => (k, kind, l.get, r.get) }
-
   /** The SQL front door's OUTER joins: both sides pre-encoded string
     * tuples like [[innerJoinChangelog]], the padded output carries None
     * on an unmatched side (the sink projects it to NULL columns) —
@@ -301,40 +272,6 @@ object StreamJoinTws {
           Encoders.STRING, Encoders.STRING),
         TimeMode.None(), OutputMode.Append(), emid)
   }
-
-  /** LEFT OUTER join: output rows (key, row_kind, leftPayload,
-    * Option(rightPayload)). */
-  def leftOuterJoin[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
-      implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
-      etag: Encoder[(Int, K, String, Option[L], Option[R])],
-      emid: Encoder[(K, String, Option[L], Option[R])],
-      eout: Encoder[(K, String, L, Option[R])])
-      : Dataset[(K, String, L, Option[R])] =
-    run(left, right, padLeft = true, padRight = false)
-      .map { case (k, kind, l, r) => (k, kind, l.get, r) }
-
-  /** RIGHT OUTER join: output rows (key, row_kind, Option(leftPayload),
-    * rightPayload). */
-  def rightOuterJoin[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
-      implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
-      etag: Encoder[(Int, K, String, Option[L], Option[R])],
-      emid: Encoder[(K, String, Option[L], Option[R])],
-      eout: Encoder[(K, String, Option[L], R)])
-      : Dataset[(K, String, Option[L], R)] =
-    run(left, right, padLeft = false, padRight = true)
-      .map { case (k, kind, l, r) => (k, kind, l, r.get) }
-
-  /** FULL OUTER join: output rows (key, row_kind, Option(leftPayload),
-    * Option(rightPayload)) — pads on both sides. */
-  def fullOuterJoin[K, L, R](
-      left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
-      implicit ek: Encoder[K], el: Encoder[L], er: Encoder[R],
-      etag: Encoder[(Int, K, String, Option[L], Option[R])],
-      emid: Encoder[(K, String, Option[L], Option[R])])
-      : Dataset[(K, String, Option[L], Option[R])] =
-    run(left, right, padLeft = true, padRight = true)
 
   // ---- ChangelogNormalize FUSED into the join (r16 optimization) -----
 

@@ -4,46 +4,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Declarative Structured Streaming counterparts of the Flink streaming
-  * relational operators (SURVEY.md §2.10). These are thin, typed wrappers:
-  * the value is pinning the exact watermark/window/output-mode recipe that
-  * reproduces Flink semantics, and keeping user code declarative so
-  * micro-batch planning, state store choice and RocksDB spill stay Spark's
-  * problem.
+  * relational operators (SURVEY.md §2.10) that Spark has no one-call
+  * form for: the value is pinning the exact watermark/window/output-mode
+  * recipe that reproduces Flink semantics, and keeping user code
+  * declarative so micro-batch planning, state store choice and RocksDB
+  * spill stay Spark's problem. (TUMBLE/SESSION aggregation is Spark's
+  * own `window`/`session_window`, which WindowTvfSql lowers the SQL
+  * forms onto; keep-first dedup within the watermark horizon is
+  * Spark's `dropDuplicatesWithinWatermark`.)
   *
   * Reference:
   *  - watermark assignment: flink-table-runtime
   *    .../wmassigners/WatermarkAssignerOperator.java (bounded out-of-order
   *    strategy = WatermarkStrategy.forBoundedOutOfOrderness,
   *    flink-core .../eventtime/WatermarkStrategy.java:225)
-  *  - window aggs: .../aggregate/window/ + slicing/SliceAssigners.java
-  *  - deduplicate: .../deduplicate/RowTimeDeduplicateFunction.java:31
+  *  - window join: .../join/window/WindowJoinOperator.java
   *  - interval join: .../join/interval/TimeIntervalJoin.java
   */
 object StreamOps {
-
-  /** TUMBLE window aggregation with bounded-out-of-orderness watermark. */
-  def tumbleAgg(
-      events: DataFrame, tsCol: String, maxOutOfOrder: String,
-      windowLen: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(tsCol, maxOutOfOrder)
-      .groupBy(window(col(tsCol), windowLen).as("w") +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** SESSION window aggregation (dynamic gap supported via gap expression). */
-  def sessionAgg(
-      events: DataFrame, tsCol: String, maxOutOfOrder: String,
-      gap: String, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(tsCol, maxOutOfOrder)
-      .groupBy(session_window(col(tsCol), gap).as("w") +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Event-time deduplicate keep-first within the watermark horizon
-    * (Flink: RowTimeDeduplicateFunction keep-first). */
-  def dedupWithinWatermark(
-      events: DataFrame, tsCol: String, maxOutOfOrder: String,
-      keys: Seq[String]): DataFrame =
-    events.withWatermark(tsCol, maxOutOfOrder)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Idleness-tolerant multi-source union — the `WatermarkStrategy
     * .withIdleness` analog (flink-core .../eventtime/WatermarkStrategy

@@ -136,9 +136,9 @@ object SortKey {
     if (asc) ofDouble(v) else invertFixed(ofDouble(v))
 
   /** Inverse of [[fieldDouble]] (all double encodings are bijective 16-hex
-    * fields; NaN decodes to the canonical NaN [[ofDouble]] encoded). Lets
-    * the Double-scored top-N wrappers recover the score from the sorted
-    * port's emitted sort key instead of carrying it twice. */
+    * fields; NaN decodes to the canonical NaN [[ofDouble]] encoded):
+    * recovers a Double score from the sort key a ranked changelog
+    * emits. */
   def decodeFieldDouble(enc: String, asc: Boolean): Double = {
     val e = if (asc) enc else invertFixed(enc)
     val ordered = java.lang.Long.parseUnsignedLong(e, 16)

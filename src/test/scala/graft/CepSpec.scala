@@ -475,10 +475,13 @@ class CepSpec extends AnyFunSuite {
       .as[(Long, Seq[Long])].collect().toSet
     assert(batchRes.nonEmpty, "fixture should contain funnel matches")
 
-    // stream the same rows in event-time order, split into 3 micro-batches
-    val rows = ev.as[(Long, Long, Int, Long)].collect().sortBy(r => (r._2, r._4))
-    val in = MemoryStream[(Long, Long, Int, Long)]
-    val out = Cep.detectStream(in.toDS(), 3, within, "10 seconds")
+    // stream the same rows in event-time order, split into 3 micro-batches;
+    // the NFA reads each step as its variable bitmask (step -1 = no variable)
+    val rows = ev.select($"key", $"t", expr("IF(step >= 0, shiftleft(1L, step), 0L)"),
+        $"tie")
+      .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._2, r._4))
+    val in = MemoryStream[(Long, Long, Long, Long)]
+    val out = Cep.matchStream(in.toDS(), Pattern.linear(3, within), "10 seconds")
     val q = out.toDF("key", "times").writeStream
       .outputMode("append").format("memory").queryName("cep_out").start()
     rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
@@ -487,10 +490,12 @@ class CepSpec extends AnyFunSuite {
     }
     // sentinel far past the data advances the watermark so every buffered
     // row releases (event-time timeouts flush idle keys)
-    in.addData((0L, rows.map(_._2).max + within + 60L * 1000000L, -1, 0L))
+    in.addData((0L, rows.map(_._2).max + within + 60L * 1000000L, 0L, 0L))
     q.processAllAvailable()
     q.stop()
-    val streamRes = spark.table("cep_out").as[(Long, Seq[Long])].collect().toSet
+    // one time per step of the linear pattern, flattened like detectBatch
+    val streamRes = spark.table("cep_out").as[(Long, Seq[Seq[Long]])].collect()
+      .map { case (k, steps) => (k, steps.flatten) }.toSet
     assert(streamRes == batchRes)
   }
 

@@ -7,93 +7,95 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The transformWithState retractable top-N ([[RetractTws]], the one
   * ranking implementation) must emit EXACTLY what the
   * flatMapGroupsWithState reference fold (`FmgwsReference`, test-only)
-  * emits on the same scripted changelog. No order caveat here: the
-  * refreshed top-N output is sorted by construction, so equality is
-  * plain multiset equality per run. The script exercises the
+  * emits on the same scripted changelog. Scores rank highest-first: the
+  * sorted port reads each score as a DESC
+  * [[graft.util.SortKey.fieldDouble]] sort key, and the reference's
+  * emissions are compared in that encoding. No order caveat here: the
+  * emitted changelog is a function of each batch's net changes, so
+  * equality is plain multiset equality per run. The scripts exercise the
   * load-bearing behaviors: duplicate payload counts, retraction of a top
-  * row, and BACKFILL of a row from below the old cut. */
+  * row, BACKFILL of a row from below the old cut, and the explicit -D of
+  * a vacated rank. */
 class RetractTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def runScenario(useTws: Boolean, sink: String)
-      : Seq[(Long, Int, Double, String)] = {
+  private type Change = (Long, String, Double, String) // (key, kind, score, payload)
+  private type Emitted = (String, Long, Int, String, String) // (kind, key, rank, sortKey, payload)
+
+  private def enc(score: Double): String =
+    graft.util.SortKey.fieldDouble(score, asc = false)
+
+  /** Build top-2 {a:30, b:20} with c:10 below the cut and a duplicate b;
+    * retract ONE b instance (top unchanged — no emission for key 1);
+    * retract a (b promotes, c backfills from below the old cut); a no-op
+    * retraction of an absent row must not disturb state. */
+  private val backfillScript: Seq[Seq[Change]] = Seq(
+    Seq((1L, "+I", 30.0, "a"), (1L, "+I", 20.0, "b"), (1L, "+I", 10.0, "c"),
+      (1L, "+I", 20.0, "b"), (2L, "+I", 5.0, "x")),
+    Seq((1L, "-U", 20.0, "b")),
+    Seq((1L, "-D", 30.0, "a")),
+    Seq((1L, "-D", 99.0, "ghost"), (2L, "+I", 7.0, "y")))
+
+  /** Retract b with nothing to backfill (rank 2 vacates -> -D), re-fill,
+    * then retract the leader: promotion without shrink. */
+  private val changelogScript: Seq[Seq[Change]] = Seq(
+    Seq((1L, "+I", 30.0, "a"), (1L, "+I", 20.0, "b")),
+    Seq((1L, "-D", 20.0, "b")),
+    Seq((1L, "+I", 25.0, "c")),
+    Seq((1L, "-D", 30.0, "a")))
+
+  /** `script` through the GroupState reference, its scores re-read as
+    * the sorted port's sort keys. */
+  private def runReference(script: Seq[Seq[Change]], sink: String): Seq[Emitted] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String, Double, String)]
-    val out =
-      if (useTws) RetractTws.retractableTopN(in.toDS(), n = 2)
-      else FmgwsReference.retractableTopN(in.toDS(), n = 2)
-    val q = out.toDF("k", "rank", "score", "payload").writeStream
-      .outputMode("update").format("memory").queryName(sink).start()
-    try {
-      // build top-2 {a:30, b:20} with c:10 below the cut; duplicate b
-      in.addData((1L, "+I", 30.0, "a"), (1L, "+I", 20.0, "b"),
-        (1L, "+I", 10.0, "c"), (1L, "+I", 20.0, "b"), (2L, "+I", 5.0, "x"))
-      q.processAllAvailable()
-      // retract ONE b instance: top stays {a, b} — no emission for key 1
-      in.addData((1L, "-U", 20.0, "b"))
-      q.processAllAvailable()
-      // retract a: b promotes, c backfills from below the old cut
-      in.addData((1L, "-D", 30.0, "a"))
-      q.processAllAvailable()
-      // no-op retraction of an absent row must not disturb state
-      in.addData((1L, "-D", 99.0, "ghost"), (2L, "+I", 7.0, "y"))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).as[(Long, Int, Double, String)].collect().toSeq
+    val in = MemoryStream[Change]
+    // the fMGWS reference runs in APPEND mode (delta emission, chainable
+    // downstream of ChangelogNormalize)
+    val q = FmgwsReference.retractableTopNChangelog(in.toDS(), n = 2)
+      .toDF("kind", "k", "rank", "score", "payload").writeStream
+      .outputMode("append").format("memory").queryName(sink).start()
+    try script.foreach { batch => in.addData(batch); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(sink).as[(String, Long, Int, Double, String)].collect().toSeq
+      .map { case (kind, k, rank, score, payload) => (kind, k, rank, enc(score), payload) }
   }
 
-  private def runChangelogScenario(useTws: Boolean, sink: String)
-      : Seq[(String, Long, Int, Double, String)] = {
+  /** `script` through [[RetractTws.retractableTopNChangelogSorted]]. */
+  private def runSortedPort(script: Seq[Seq[Change]], sink: String): Seq[Emitted] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String, Double, String)]
-    val out =
-      if (useTws) RetractTws.retractableTopNChangelog(in.toDS(), n = 2)
-      else FmgwsReference.retractableTopNChangelog(in.toDS(), n = 2)
-    // the fMGWS reference runs in APPEND mode (delta emission, chainable
-    // downstream of ChangelogNormalize); the TWS run keeps Update
-    val q = out.toDF("kind", "k", "rank", "score", "payload").writeStream
-      .outputMode(if (useTws) "update" else "append")
-      .format("memory").queryName(sink).start()
-    try {
-      in.addData((1L, "+I", 30.0, "a"), (1L, "+I", 20.0, "b"))
-      q.processAllAvailable()
-      // retract b with nothing to backfill: rank 2 vacates -> -D
-      in.addData((1L, "-D", 20.0, "b"))
-      q.processAllAvailable()
-      // re-fill, then retract the leader: promotion without shrink
-      in.addData((1L, "+I", 25.0, "c"))
-      q.processAllAvailable()
-      in.addData((1L, "-D", 30.0, "a"))
+    val in = MemoryStream[(Long, String, String, String)]
+    val q = RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2)
+      .toDF("kind", "k", "rank", "sk", "payload").writeStream
+      .outputMode("append").format("memory").queryName(sink).start()
+    try script.foreach { batch =>
+      in.addData(batch.map { case (k, kind, score, p) => (k, kind, enc(score), p) })
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[(String, Long, Int, Double, String)].collect().toSeq
+    spark.table(sink).as[Emitted].collect().toSeq
   }
+
+  private def multiset[T](rows: Seq[T]) = rows.groupBy(identity).view.mapValues(_.size).toMap
 
   test("MapState-backed changelog top-N equals the GroupState original") {
-    val ref = runChangelogScenario(useTws = false, sink = "rtwsc_ref")
-    val tws = TestSpark.withRocksDB(
-      runChangelogScenario(useTws = true, sink = "rtwsc_new"))
-    def multiset(rows: Seq[(String, Long, Int, Double, String)]) =
-      rows.groupBy(identity).view.mapValues(_.size).toMap
+    val ref = runReference(changelogScript, sink = "rtwsc_ref")
+    val tws = TestSpark.withRocksDB(runSortedPort(changelogScript, sink = "rtwsc_new"))
     assert(multiset(tws) == multiset(ref),
       s"emissions differ:\n tws=${tws.sorted}\n ref=${ref.sorted}")
     // the vacated rank's explicit delete is present on both sides
-    assert(tws.contains(("-D", 1L, 2, 20.0, "b")), tws.toString)
+    assert(tws.contains(("-D", 1L, 2, enc(20.0), "b")), tws.toString)
   }
 
   test("MapState-backed retractable top-N equals the GroupState original") {
-    val ref = runScenario(useTws = false, sink = "rtws_ref")
+    val ref = runReference(backfillScript, sink = "rtws_ref")
     TestSpark.withRocksDB {
-      val tws = runScenario(useTws = true, sink = "rtws_new")
-      def multiset(rows: Seq[(Long, Int, Double, String)]) =
-        rows.groupBy(identity).view.mapValues(_.size).toMap
+      val tws = runSortedPort(backfillScript, sink = "rtws_new")
       assert(multiset(tws) == multiset(ref),
         s"emissions differ:\n tws=${tws.sorted}\n ref=${ref.sorted}")
       // the final refresh for key 1 is the backfilled top: b then c
-      assert(tws.toSet.contains((1L, 1, 20.0, "b")) &&
-        tws.toSet.contains((1L, 2, 10.0, "c")), s"backfill missing: $tws")
+      assert(tws.toSet.contains(("+U", 1L, 1, enc(20.0), "b")) &&
+        tws.toSet.contains(("+U", 1L, 2, enc(10.0), "c")), s"backfill missing: $tws")
     }
   }
 
@@ -126,13 +128,9 @@ class RetractTwsSpec extends AnyFunSuite {
   }
 
   test("sorted-counts port emits exactly the GroupState original's changelog") {
-    val ref = runChangelogScenario(useTws = false, sink = "rtwss_ref")
-      .map { case (kind, k, rank, score, payload) =>
-        (kind, k.toString, rank,
-          graft.util.SortKey.fieldDouble(score, asc = false), payload) }
+    val ref = runReference(changelogScript, sink = "rtwss_ref")
+      .map { case (kind, k, rank, sk, payload) => (kind, k.toString, rank, sk, payload) }
     val sorted = TestSpark.withRocksDB(runSortedScenario("rtwss_new"))
-    def multiset(rows: Seq[(String, String, Int, String, String)]) =
-      rows.groupBy(identity).view.mapValues(_.size).toMap
     assert(multiset(sorted) == multiset(ref),
       s"emissions differ:\n sorted=${sorted.sorted}\n ref=${ref.sorted}")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.{CoProcess, StatefulOps}
+import graft.streaming.StatefulOps.OverFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,14 @@ class StatefulTwsSpec extends AnyFunSuite {
   /** Runs `body` with the RocksDB state store provider, restoring the
     * previous provider after. */
   def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
+
+  /** The collected sink of a one-slot [[StatefulOps.overMultiAggsByKey]] run,
+    * as (k, t, v, frame value). */
+  private def oneSlot(sink: String): Seq[(Long, Long, Double, Double)] = {
+    import spark.implicits._
+    spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])].collect().toSeq
+      .map { case (k, t, v, agg) => (k, t, v.head, agg.head) }
+  }
 
   // ---- event-time sort -------------------------------------------------
 
@@ -59,24 +68,25 @@ class StatefulTwsSpec extends AnyFunSuite {
   private def runRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
-      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = StatefulOps.runningSumByKey(watermarked)
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
+      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(OverFrame.Unbounded), null)
     val q = out.toDF("k", "t", "v", "running").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
       // the NaN row is a NULL-sentinel input (the SQL layer's encoding):
       // both runs must skip it, not poison the accumulator
-      in.addData((1L, ts(100), 3.0), (1L, ts(50), 1.0), (1L, ts(80), 2.0),
-        (1L, ts(60), Double.NaN))
+      in.addData((1L, ts(100), Seq(3.0)), (1L, ts(50), Seq(1.0)),
+        (1L, ts(80), Seq(2.0)), (1L, ts(60), Seq(Double.NaN)))
       q.processAllAvailable()
-      in.addData((1L, ts(200), 4.0))
+      in.addData((1L, ts(200), Seq(4.0)))
       q.processAllAvailable()
-      in.addData((1L, ts(500), 9.0))
+      in.addData((1L, ts(500), Seq(9.0)))
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[(Long, Long, Double, Double)].collect().toSeq
+    oneSlot(sink)
   }
 
   test("TWS running sum: exact equality incl. accumulator persistence") {
@@ -98,21 +108,23 @@ class StatefulTwsSpec extends AnyFunSuite {
   private def runRowsBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
-      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = StatefulOps.rowsBoundedSumByKey(watermarked, nRows = 3)
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
+      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(OverFrame.Rows(3)), null)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
-      in.addData((1L, ts(10), 1.0), (1L, ts(20), 2.0), (1L, ts(30), 3.0), (1L, ts(40), 4.0))
+      in.addData((1L, ts(10), Seq(1.0)), (1L, ts(20), Seq(2.0)), (1L, ts(30), Seq(3.0)),
+        (1L, ts(40), Seq(4.0)))
       q.processAllAvailable()
-      in.addData((1L, ts(100), 5.0)) // releases 10..40 (wm=90)
+      in.addData((1L, ts(100), Seq(5.0))) // releases 10..40 (wm=90)
       q.processAllAvailable()
-      in.addData((1L, ts(200), 6.0)) // releases 100
+      in.addData((1L, ts(200), Seq(6.0))) // releases 100
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[(Long, Long, Double, Double)].collect().toSeq
+    oneSlot(sink)
   }
 
   test("TWS bounded ROWS frame: exact equality incl. frame carry-over") {
@@ -128,22 +140,24 @@ class StatefulTwsSpec extends AnyFunSuite {
   private def runRangeBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
-      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = StatefulOps.rangeBoundedSumByKey(watermarked, rangeMs = 15000L)
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
+      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(OverFrame.Range(15000L)), null)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
-      in.addData((1L, ts(10), 1.0), (1L, ts(20), 2.0), (1L, ts(32), 3.0),
-        (1L, ts(32), 2.5), (1L, ts(45), 4.0)) // tie at t=32: SQL peers
+      in.addData((1L, ts(10), Seq(1.0)), (1L, ts(20), Seq(2.0)),
+        (1L, ts(32), Seq(3.0)), (1L, ts(32), Seq(2.5)),
+        (1L, ts(45), Seq(4.0))) // tie at t=32: SQL peers
       q.processAllAvailable()
-      in.addData((1L, ts(100), 5.0)) // releases 10..45 (wm=90)
+      in.addData((1L, ts(100), Seq(5.0))) // releases 10..45 (wm=90)
       q.processAllAvailable()
-      in.addData((1L, ts(200), 6.0)) // releases 100
+      in.addData((1L, ts(200), Seq(6.0))) // releases 100
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[(Long, Long, Double, Double)].collect().toSeq
+    oneSlot(sink)
   }
 
   test("TWS bounded RANGE frame: exact equality incl. time-based eviction") {
@@ -173,21 +187,22 @@ class StatefulTwsSpec extends AnyFunSuite {
   private def runRangeRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
-      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Double)]
-    val out = StatefulOps.rangeRunningSumByKey(watermarked)
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
+      .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(OverFrame.UnboundedRange), null)
     val q = out.toDF("k", "t", "v", "run_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
-      in.addData((1L, ts(10), 1.0), (1L, ts(20), 3.0), (1L, ts(20), 2.0))
+      in.addData((1L, ts(10), Seq(1.0)), (1L, ts(20), Seq(3.0)), (1L, ts(20), Seq(2.0)))
       q.processAllAvailable()
-      in.addData((1L, ts(100), 5.0)) // releases 10, 20, 20 (wm=90)
+      in.addData((1L, ts(100), Seq(5.0))) // releases 10, 20, 20 (wm=90)
       q.processAllAvailable()
-      in.addData((1L, ts(200), 6.0)) // releases 100: accumulator carried
+      in.addData((1L, ts(200), Seq(6.0))) // releases 100: accumulator carried
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[(Long, Long, Double, Double)].collect().toSeq
+    oneSlot(sink)
   }
 
   test("TWS unbounded RANGE frame: exact equality; tied rowtimes share") {
@@ -210,7 +225,7 @@ class StatefulTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overAggsByKey(watermarked, frame, ops)
+    val out = StatefulOps.overMultiAggsByKey(watermarked, ops.map(_ => frame), ops)
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {

@@ -1,11 +1,13 @@
 package graft
 
+import graft.TestSpark.stringKeyed
 import graft.streaming.{FmgwsReference, StreamJoinTws}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The transformWithState retraction joins ([[StreamJoinTws]], the one
-  * implementation, with per-entry MapState handles) must be NET-EQUAL to
+  * implementation, with per-entry MapState handles; String-keyed like the
+  * SQL join route that runs them) must be NET-EQUAL to
   * the flatMapGroupsWithState reference fold (`FmgwsReference`,
   * test-only, one counted-multiset GroupState per key) on the same
   * scripted changelogs. Emission ORDER may differ (MapState iteration
@@ -21,10 +23,13 @@ class StreamJoinTwsSpec extends AnyFunSuite {
     val lhs = MemoryStream[(Long, String, String)]
     val rhs = MemoryStream[(Long, String, String)]
     val out =
-      if (useTws) StreamJoinTws.innerJoin(lhs.toDS(), rhs.toDS())
+      if (useTws) StreamJoinTws.innerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs))
+        .map { case (k, kind, l, r) => (k.toLong, kind, l, r) }
       else FmgwsReference.innerJoin(lhs.toDS(), rhs.toDS())
+    // the TWS body emits its delta changelog in APPEND mode
     val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName(sink).start()
+      .outputMode(if (useTws) "append" else "update")
+      .format("memory").queryName(sink).start()
     try {
       lhs.addData((1L, "+I", "l1"), (1L, "+I", "l2"), (2L, "+I", "lx"))
       q.processAllAvailable()
@@ -45,23 +50,21 @@ class StreamJoinTwsSpec extends AnyFunSuite {
     val rhs = MemoryStream[(Long, String, String)]
     val out: org.apache.spark.sql.Dataset[(Long, String, Option[String], Option[String])] =
       (useTws, mode) match {
-        case (true, "left") =>
-          StreamJoinTws.leftOuterJoin(lhs.toDS(), rhs.toDS())
-            .map { case (k, kind, l, r) => (k, kind, Option(l), r) }
+        case (true, _) =>
+          StreamJoinTws.outerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs),
+            padLeft = mode != "right", padRight = mode != "left")
+            .map { case (k, kind, l, r) => (k.toLong, kind, l, r) }
         case (false, "left") =>
           FmgwsReference.leftOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, Option(l), r) }
-        case (true, "right") =>
-          StreamJoinTws.rightOuterJoin(lhs.toDS(), rhs.toDS())
-            .map { case (k, kind, l, r) => (k, kind, l, Option(r)) }
         case (false, "right") =>
           FmgwsReference.rightOuterJoin(lhs.toDS(), rhs.toDS())
             .map { case (k, kind, l, r) => (k, kind, l, Option(r)) }
-        case (true, _) => StreamJoinTws.fullOuterJoin(lhs.toDS(), rhs.toDS())
         case (false, _) => FmgwsReference.fullOuterJoin(lhs.toDS(), rhs.toDS())
       }
     val q = out.toDF("k", "kind", "l", "r").writeStream
-      .outputMode("update").format("memory").queryName(sink).start()
+      .outputMode(if (useTws) "append" else "update")
+      .format("memory").queryName(sink).start()
     try {
       lhs.addData((1L, "+I", "l1")) // unmatched: pad on left/full
       q.processAllAvailable()

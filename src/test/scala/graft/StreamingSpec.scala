@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.stringKeyed
 import graft.streaming.{StatefulOps, StreamOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -21,13 +22,44 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
+  /** Runs the continuous statement `INSERT INTO <name>_sink <select>`
+    * through the SQL front door over a fresh retract changelog table
+    * `<name>_src` (row_kind, k, v): each batch of (k, row_kind, v) rows
+    * is one commit the stream catches up on. `read` gets the sink's name
+    * once the stream has stopped — the sink holds the upsert changelog
+    * the statement wrote (its select columns, row_kind and the commit
+    * sequence) — and both tables are dropped after it. */
+  private def changelogInsert[T](name: String, select: String => String,
+      batches: Seq[Seq[(String, String, Double)]])(read: String => T): T = {
+    import spark.implicits._
+    val (src, sink) = (s"${name}_src", s"${name}_sink")
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    Seq(src, sink).foreach(t => Engine.sql(spark, s"DROP TABLE IF EXISTS $t"))
+    try {
+      Engine.sql(spark, s"CREATE TABLE $src (row_kind STRING, k STRING, v DOUBLE) USING parquet")
+      val q = Engine.sqlStreamInsert(spark, s"INSERT INTO $sink ${select(src)}",
+        ckpt.toString)
+      try batches.foreach { batch =>
+        batch.toDF("k", "row_kind", "v").select("row_kind", "k", "v")
+          .write.insertInto(src)
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.catalog.refreshTable(sink)
+      read(sink)
+    } finally {
+      Seq(src, sink).foreach(t => Engine.sql(spark, s"DROP TABLE IF EXISTS $t"))
+      graft.util.FileTree.deleteRecursively(ckpt)
+    }
+  }
+
   test("tumble window aggregation with watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
-    val df = in.toDF().toDF("ts", "k", "v")
-    val agg = StreamOps.tumbleAgg(df, "ts", "10 seconds", "1 minute",
-      Seq(col("k")), Seq(count(lit(1)).as("n"), sum($"v").as("s")))
+    val agg = in.toDF().toDF("ts", "k", "v")
+      .withWatermark("ts", "10 seconds")
+      .groupBy(window(col("ts"), "1 minute").as("w"), col("k"))
+      .agg(count(lit(1)).as("n"), sum($"v").as("s"))
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("tumble_out").start()
     in.addData((ts(0), "a", 1.0), (ts(30), "a", 2.0), (ts(70), "a", 4.0), (ts(10), "b", 8.0))
@@ -42,8 +74,10 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
-    val agg = StreamOps.sessionAgg(in.toDF().toDF("ts", "k", "v"), "ts",
-      "5 seconds", "30 seconds", Seq(col("k")), Seq(count(lit(1)).as("n")))
+    val agg = in.toDF().toDF("ts", "k", "v")
+      .withWatermark("ts", "5 seconds")
+      .groupBy(session_window(col("ts"), "30 seconds").as("w"), col("k"))
+      .agg(count(lit(1)).as("n"))
     val q = agg.writeStream.outputMode("complete")
       .format("memory").queryName("sess_out").start()
     // 0 and 20 merge (gap<30); 100 is a new session
@@ -58,8 +92,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long)]
-    val out = StreamOps.dedupWithinWatermark(
-      in.toDF().toDF("ts", "id"), "ts", "10 seconds", Seq("id"))
+    val out = in.toDF().toDF("ts", "id")
+      .withWatermark("ts", "10 seconds")
+      .dropDuplicatesWithinWatermark(Seq("id"))
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("dedup_out").start()
     in.addData((ts(0), 1L), (ts(1), 1L), (ts(2), 2L), (ts(3), 1L))
@@ -133,11 +168,15 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, Timestamp, String)]
+    // keep-first = the n=1 window rank ordered by rowtime ascending;
+    // untyped projection, not a typed map, so the event-time marker
+    // reaches the operator
     val src = in.toDS().toDF("k", "t", "p")
       .withWatermark("t", "0 seconds")
-      .as[(String, Timestamp, String)]
-    val first = StatefulOps.windowDedup(src, sizeUs = 60_000_000L, keepFirst = true)
-    val q = first.toDF("k", "ws", "we", "p")
+      .select($"k", $"t", unix_micros($"t").cast("double").as("t_us"), $"p")
+      .as[(String, Timestamp, Double, String)]
+    val first = StatefulOps.windowTopN(src, sizeUs = 60_000_000L, n = 1, asc = true)
+    val q = first.toDF("k", "ws", "we", "rank", "t_us", "p")
       .writeStream.outputMode("append").format("memory")
       .queryName("wdedup_out").start()
     in.addData(("a", ts(10), "early"), ("a", ts(50), "late"),
@@ -293,8 +332,8 @@ class StreamingSpec extends AnyFunSuite {
       .withWatermark("ts", "10 seconds")
       .as[(Long, Timestamp, Seq[Double])]
     // slot 0 sums, slot 1 takes the frame MIN with NaN-as-NULL inputs
-    val out = StatefulOps.overAggsByKey(watermarked, OverFrame.Rows(3),
-      Vector(SlotOp.Sum, SlotOp.Min))
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector.fill(2)(OverFrame.Rows(3)), Vector(SlotOp.Sum, SlotOp.Min))
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName("minmax_out").start()
     in.addData((1L, ts(10), Seq(1.0, Double.NaN)), // NULL min input
@@ -348,23 +387,24 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming OVER: running sum released in event-time order") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds")
-      .as[(Long, Timestamp, Double)]
-    val out = StatefulOps.runningSumByKey(watermarked)
+      .as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(StatefulOps.OverFrame.Unbounded), null)
     val q = out.toDF("k", "t", "v", "running").writeStream
       .outputMode("append").format("memory").queryName("rs_out").start()
     // arrive out of order: 100(v=3), 50(v=1), 80(v=2)
-    in.addData((1L, ts(100), 3.0), (1L, ts(50), 1.0), (1L, ts(80), 2.0))
+    in.addData((1L, ts(100), Seq(3.0)), (1L, ts(50), Seq(1.0)), (1L, ts(80), Seq(2.0)))
     q.processAllAvailable()
-    in.addData((1L, ts(200), 4.0)) // watermark -> 190, releases 50,80,100
+    in.addData((1L, ts(200), Seq(4.0))) // watermark -> 190, releases 50,80,100
     q.processAllAvailable()
-    in.addData((1L, ts(500), 9.0)) // releases 200
+    in.addData((1L, ts(500), Seq(9.0))) // releases 200
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("rs_out").as[(Long, Long, Double, Double)]
-      .collect().sortBy(_._2).toSeq
+    val got = spark.table("rs_out").as[(Long, Long, Seq[Double], Seq[Double])]
+      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).sortBy(_._2).toSeq
     // running sums follow EVENT time order despite arrival order
     assert(got.map(r => (r._2, r._4)).take(4) ==
       Seq((50000L, 1.0), (80000L, 3.0), (100000L, 6.0), (200000L, 10.0)), s"got: $got")
@@ -595,22 +635,23 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("withCurrentWatermark annotates rows with the observed watermark") {
-    import graft.streaming.Lateness
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Double)]
     val watermarked = in.toDF().toDF("k", "ts", "v")
       .withWatermark("ts", "10 seconds")
-      .as[(Long, Timestamp, Double)]
-    val out = Lateness.withCurrentWatermark(watermarked)
-    val q = out.toDF("k", "t", "v", "wm").writeStream
-      .outputMode("update").format("memory").queryName("wm_out").start()
+    val out = StatefulOps.annotateCurrentWatermark(watermarked)
+    val q = out.writeStream
+      .outputMode("append").format("memory").queryName("wm_out").start()
     in.addData((1L, ts(100), 1.0)) // first batch: watermark still 0
     q.processAllAvailable()
     in.addData((1L, ts(200), 2.0)) // watermark now 100s - 10s = 90s
     runToCompletion(q)
-    val rows = spark.table("wm_out").as[(Long, Long, Double, Long)]
-      .collect().map(r => (r._2, r._4)).toSet
+    // the annotation is NULL before the first watermark (CURRENT_WATERMARK's
+    // contract); that unset watermark is epoch 0
+    val rows = spark.table("wm_out")
+      .select(unix_millis($"ts"), coalesce(unix_millis($"__graft_wm"), lit(0L)))
+      .as[(Long, Long)].collect().toSet
     assert(rows == Set((100000L, 0L), (200000L, 90000L)), s"got $rows")
   }
 
@@ -619,20 +660,22 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val data = for (k <- 1L to 2L; i <- 0 until 12)
       yield (k, ts(10L * i + k), (i * 7 % 5) + k * 0.5)
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "5 seconds")
-      .as[(Long, Timestamp, Double)]
-    val out = StatefulOps.rowsBoundedSumByKey(watermarked, nRows = 3)
+      .as[(Long, Timestamp, Seq[Double])]
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(StatefulOps.OverFrame.Rows(3)), null)
     val q = out.toDF("k", "t", "v", "agg").writeStream
       .outputMode("append").format("memory").queryName("rb_out").start()
     data.sortBy(_._2.getTime).grouped(8).foreach { chunk =>
-      in.addData(chunk.toSeq); q.processAllAvailable()
+      in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
     }
-    in.addData((1L, ts(100000), 0.0), (2L, ts(100000), 0.0)) // flush watermark
+    in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0))) // flush watermark
     runToCompletion(q)
-    val streamed = spark.table("rb_out").as[(Long, Long, Double, Double)]
-      .collect().toSet.filter(_._2 < 100000000L)
+    val streamed = spark.table("rb_out").as[(Long, Long, Seq[Double], Seq[Double])]
+      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
+      .filter(_._2 < 100000000L)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"k").orderBy($"t").rowsBetween(-2, 0)
     val batch = data.toDF("k", "ts", "v")
@@ -648,21 +691,23 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val data = for (k <- 1L to 2L; i <- 0 until 12)
       yield (k, ts(7L * i + k), (i * 3 % 4) + k.toDouble)
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val watermarked = in.toDF().toDF("k", "ts", "v")
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "5 seconds")
-      .as[(Long, Timestamp, Double)]
+      .as[(Long, Timestamp, Seq[Double])]
     val rangeMs = 20000L
-    val out = StatefulOps.rangeBoundedSumByKey(watermarked, rangeMs)
+    val out = StatefulOps.overMultiAggsByKey(watermarked,
+      Vector(StatefulOps.OverFrame.Range(rangeMs)), null)
     val q = out.toDF("k", "t", "v", "agg").writeStream
       .outputMode("append").format("memory").queryName("rgb_out").start()
     data.sortBy(_._2.getTime).grouped(10).foreach { chunk =>
-      in.addData(chunk.toSeq); q.processAllAvailable()
+      in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
     }
-    in.addData((1L, ts(100000), 0.0), (2L, ts(100000), 0.0))
+    in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0)))
     runToCompletion(q)
-    val streamed = spark.table("rgb_out").as[(Long, Long, Double, Double)]
-      .collect().toSet.filter(_._2 < 100000000L)
+    val streamed = spark.table("rgb_out").as[(Long, Long, Seq[Double], Seq[Double])]
+      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
+      .filter(_._2 < 100000000L)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"k").orderBy($"t").rangeBetween(-rangeMs, 0)
     val batch = data.toDF("k", "ts", "v")
@@ -673,20 +718,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("retraction-consuming group aggregate: -U/+U/-D flow into state") {
-    import graft.streaming.Retract
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String, Double)]
-    val out = Retract.groupAggregate(in.toDS())
-    val q = out.toDF("k", "kind", "cnt", "sum").writeStream
-      .outputMode("update").format("memory").queryName("ra_out").start()
-    in.addData(("a", "+I", 10.0), ("a", "+I", 5.0), ("b", "+I", 3.0))
-    q.processAllAvailable()
-    // update a: -U 10 / +U 12 ; delete b entirely
-    in.addData(("a", "-U", 10.0), ("a", "+U", 12.0), ("b", "-D", 3.0))
-    runToCompletion(q)
-    val rows = spark.table("ra_out").as[(String, String, Long, Double)]
-      .collect().toSeq
+    val rows = changelogInsert("ra",
+      src => s"SELECT k, COUNT(*) AS cnt, SUM(v) AS s FROM $src GROUP BY k",
+      Seq(Seq(("a", "+I", 10.0), ("a", "+I", 5.0), ("b", "+I", 3.0)),
+        // update a: -U 10 / +U 12 ; delete b entirely
+        Seq(("a", "-U", 10.0), ("a", "+U", 12.0), ("b", "-D", 3.0)))) { sink =>
+      spark.table(sink)
+        .select($"k", $"row_kind", $"cnt".cast("long"), $"s".cast("double"))
+        .as[(String, String, Long, Double)].collect().toSeq
+    }
     // batch 1 emissions, then batch 2: refreshed a, deletion marker for b
     assert(rows.contains(("a", "+U", 2L, 15.0)))
     assert(rows.contains(("a", "+U", 2L, 17.0)))
@@ -694,9 +735,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("retractable UDA group aggregate: retract/merge surface in streaming state") {
-    import graft.streaming.{Retract, StatefulOps}
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     object GeoMeanR extends StatefulOps.RetractableOverAgg {
       val size = 2
       def zero = Array(0.0, 0.0)
@@ -706,19 +745,18 @@ class StreamingSpec extends AnyFunSuite {
       def finish(b: Array[Double]): Double =
         if (b(1) <= 0) Double.NaN else math.exp(b(0) / b(1))
     }
-    val in = MemoryStream[(String, String, Double)]
-    val out = Retract.groupAggregateWith(in.toDS(), GeoMeanR)
-    val q = out.toDF("k", "kind", "gm").writeStream
-      .outputMode("update").format("memory").queryName("rau_out").start()
-    in.addData(("a", "+I", 2.0), ("a", "+I", 8.0), ("b", "+I", 3.0))
-    q.processAllAvailable()
-    // update a: retract 8, accumulate 32 -> geomean(2, 32) = 8; empty b
-    in.addData(("a", "-U", 8.0), ("a", "+U", 32.0), ("b", "-D", 3.0))
-    runToCompletion(q)
-    val rows = spark.table("rau_out").as[(String, String, Double)].collect().toSeq
-    assert(rows.exists(r => r._1 == "a" && r._2 == "+U" && math.abs(r._3 - 4.0) < 1e-9),
+    StreamOverSql.registerAggregate("GEO_MEAN_R", GeoMeanR)
+    val rows = changelogInsert("rau",
+      src => s"SELECT k, GEO_MEAN_R(v) AS gm FROM $src GROUP BY k",
+      Seq(Seq(("a", "+I", 2.0), ("a", "+I", 8.0), ("b", "+I", 3.0)),
+        // update a: retract 8, accumulate 32 -> geomean(2, 32) = 8; empty b
+        Seq(("a", "-U", 8.0), ("a", "+U", 32.0), ("b", "-D", 3.0)))) { sink =>
+      spark.table(sink).select($"k", $"row_kind", $"gm".cast("double"))
+        .as[(String, String, Option[Double])].collect().toSeq
+    }
+    assert(rows.exists(r => r._1 == "a" && r._2 == "+U" && r._3.exists(g => math.abs(g - 4.0) < 1e-9)),
       s"batch-1 geomean(2,8)=4 missing: $rows")
-    assert(rows.exists(r => r._1 == "a" && r._2 == "+U" && math.abs(r._3 - 8.0) < 1e-9),
+    assert(rows.exists(r => r._1 == "a" && r._2 == "+U" && r._3.exists(g => math.abs(g - 8.0) < 1e-9)),
       s"batch-2 geomean(2,32)=8 missing: $rows")
     assert(rows.exists(r => r._1 == "b" && r._2 == "-D"), s"missing -D for b: $rows")
   }
@@ -726,20 +764,28 @@ class StreamingSpec extends AnyFunSuite {
   test("retractable top-N backfills when a ranked row is deleted") {
     TestSpark.withRocksDB {
       import graft.streaming.RetractTws
+      import graft.util.SortKey
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val in = MemoryStream[(String, String, Double, String)]
-      val out = RetractTws.retractableTopN(in.toDS(), n = 2)
-      val q = out.toDF("k", "rk", "score", "id").writeStream
-        .outputMode("update").format("memory").queryName("rt_out").start()
-      in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"), ("g", "+I", 10.0, "z"))
+      // highest score first = the DESC double field encoding
+      def row(kind: String, score: Double, id: String) =
+        ("g", kind, SortKey.fieldDouble(score, asc = false), id)
+      val in = MemoryStream[(String, String, String, String)]
+      val out = RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2)
+      val q = out.toDF("kind", "k", "rk", "sk", "id").writeStream
+        .outputMode("append").format("memory").queryName("rt_out").start()
+      def refreshed() = spark.table("rt_out")
+        .as[(String, String, Int, String, String)].collect().toSeq
+        .collect { case ("+U", k, rk, sk, id) =>
+          (k, rk, SortKey.decodeFieldDouble(sk, asc = false), id) }
+      in.addData(row("+I", 30.0, "x"), row("+I", 20.0, "y"), row("+I", 10.0, "z"))
       q.processAllAvailable()
-      val top1 = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSet
+      val top1 = refreshed().toSet
       assert(top1.contains(("g", 1, 30.0, "x")) && top1.contains(("g", 2, 20.0, "y")))
       // retract the leader: z must backfill into the refreshed top-2
-      in.addData(("g", "-D", 30.0, "x"))
+      in.addData(row("-D", 30.0, "x"))
       runToCompletion(q)
-      val all = spark.table("rt_out").as[(String, Int, Double, String)].collect().toSeq
+      val all = refreshed()
       assert(all.contains(("g", 1, 20.0, "y")) && all.contains(("g", 2, 10.0, "z")),
         s"no backfill after retraction: $all")
     }
@@ -748,24 +794,30 @@ class StreamingSpec extends AnyFunSuite {
   test("retractable top-N changelog emits -D when the top shrinks") {
     TestSpark.withRocksDB {
       import graft.streaming.RetractTws
+      import graft.util.SortKey
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
-      val in = MemoryStream[(String, String, Double, String)]
-      val out = RetractTws.retractableTopNChangelog(in.toDS(), n = 2)
-      val q = out.toDF("kind", "k", "rk", "score", "id").writeStream
+      // highest score first = the DESC double field encoding
+      def row(kind: String, score: Double, id: String) =
+        ("g", kind, SortKey.fieldDouble(score, asc = false), id)
+      val in = MemoryStream[(String, String, String, String)]
+      val out = RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2)
+      val q = out.toDF("kind", "k", "rk", "sk", "id").writeStream
         .outputMode("append").format("memory").queryName("rtc_out").start()
-      in.addData(("g", "+I", 30.0, "x"), ("g", "+I", 20.0, "y"))
+      def emitted() = spark.table("rtc_out")
+        .as[(String, String, Int, String, String)].collect().toSeq
+        .map { case (kind, k, rk, sk, id) =>
+          (kind, k, rk, SortKey.decodeFieldDouble(sk, asc = false), id) }
+      in.addData(row("+I", 30.0, "x"), row("+I", 20.0, "y"))
       q.processAllAvailable()
-      val top1 = spark.table("rtc_out")
-        .as[(String, String, Int, Double, String)].collect().toSet
+      val top1 = emitted().toSet
       assert(top1 == Set(("+U", "g", 1, 30.0, "x"), ("+U", "g", 2, 20.0, "y")),
         top1.toString)
       // retract y with nothing to backfill: rank 2 must emit an explicit
       // -D (the sink keyed by (k, rank) would otherwise keep it forever)
-      in.addData(("g", "-D", 20.0, "y"))
+      in.addData(row("-D", 20.0, "y"))
       runToCompletion(q)
-      val all = spark.table("rtc_out")
-        .as[(String, String, Int, Double, String)].collect().toSeq
+      val all = emitted()
       assert(all.contains(("-D", "g", 2, 20.0, "y")), s"no rank-2 delete: $all")
       // rank 1 unchanged -> NOT re-emitted in the second commit
       assert(all.count(r => r._1 == "+U" && r._3 == 1) == 1,
@@ -775,29 +827,36 @@ class StreamingSpec extends AnyFunSuite {
 
   test("fastTop1: O(1) leader state under monotone upserts; demotion fails loudly") {
     import graft.streaming.Retract
+    import graft.util.SortKey
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String, Double)]
-    val out = Retract.fastTop1(in.toDS())
-    val q = out.toDF("k", "rk", "score", "id").writeStream
-      .outputMode("update").format("memory").queryName("ft1_out").start()
+    // one upsert (part, +U, id, commit seq, score as an ASC sort key, id
+    // as the payload); a larger sort key leads
+    def up(seq: Long, k: String, id: String, score: Double) =
+      (k, "+U", id, seq, SortKey.fieldDouble(score, asc = true), id)
+    val in = MemoryStream[(String, String, String, Long, String, String)]
+    val out = Retract.fastTop1SortedChangelog(in.toDS())
+    val q = out.toDF("kind", "k", "rk", "sk", "id").writeStream
+      .outputMode("append").format("memory").queryName("ft1_out").start()
     // count-like monotone scores: x grows, y overtakes, x retakes
-    in.addData(("g", "x", 3.0), ("g", "y", 2.0))
+    in.addData(up(1, "g", "x", 3.0), up(1, "g", "y", 2.0))
     q.processAllAvailable()
-    in.addData(("g", "y", 5.0))
+    in.addData(up(2, "g", "y", 5.0))
     q.processAllAvailable()
-    in.addData(("g", "x", 6.0), ("h", "z", 1.0))
+    in.addData(up(3, "g", "x", 6.0), up(3, "h", "z", 1.0))
     q.processAllAvailable()
     // leader unchanged: no emission
-    in.addData(("g", "y", 5.5))
+    in.addData(up(4, "g", "y", 5.5))
     q.processAllAvailable()
     val rows = spark.table("ft1_out")
-      .as[(String, Int, Double, String)].collect().toSeq
+      .as[(String, String, Int, String, String)].collect().toSeq
+      .map { case (_, k, rk, sk, id) =>
+        (k, rk, SortKey.decodeFieldDouble(sk, asc = true), id) }
     assert(rows.filter(_._1 == "g") ==
       Seq(("g", 1, 3.0, "x"), ("g", 1, 5.0, "y"), ("g", 1, 6.0, "x")), rows.toString)
     assert(rows.contains(("h", 1, 1.0, "z")))
     // a decreasing update violates the UpdateFastStrategy contract
-    in.addData(("g", "x", 4.0))
+    in.addData(up(5, "g", "x", 4.0))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
     }
@@ -845,22 +904,33 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("updatable top-N: an upsert demoting the leader re-ranks and backfills") {
-    import graft.streaming.Retract
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String, Double)]
-    val out = Retract.updatableTopN(in.toDS(), n = 2)
-    val q = out.toDF("k", "rk", "score", "id").writeStream
-      .outputMode("update").format("memory").queryName("ut_out").start()
-    in.addData(("g", "x", 30.0), ("g", "y", 20.0), ("g", "z", 10.0))
-    q.processAllAvailable()
-    // upsert x down to 5: y promotes to 1, z backfills at 2
-    in.addData(("g", "x", 5.0))
-    runToCompletion(q)
-    val all = spark.table("ut_out").as[(String, Int, Double, String)].collect().toSeq
-    assert(all.contains(("g", 1, 30.0, "x")) && all.contains(("g", 2, 20.0, "y")))
-    assert(all.contains(("g", 1, 20.0, "y")) && all.contains(("g", 2, 10.0, "z")),
-      s"no re-rank after demoting upsert: $all")
+    TestSpark.withRocksDB {
+      import graft.streaming.RetractTws
+      import graft.util.SortKey
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      // the upsert relation keyed by (k, id): ChangelogNormalize turns each
+      // new score into -U old / +U new, which the retractable top-N ranks
+      val in = MemoryStream[((String, String), Long, String, Boolean)]
+      val normalized = StatefulOps.normalizeUpsert(in.toDS())
+        .map { case (kind, (k, id), _, score) =>
+          (k, kind, SortKey.fieldDouble(score.toDouble, asc = false), id) }
+      val out = RetractTws.retractableTopNChangelogSorted(normalized, n = 2)
+      val q = out.toDF("kind", "k", "rk", "sk", "id").writeStream
+        .outputMode("append").format("memory").queryName("ut_out").start()
+      def up(seq: Long, id: String, score: Double) = (("g", id), seq, score.toString, false)
+      in.addData(up(1, "x", 30.0), up(1, "y", 20.0), up(1, "z", 10.0))
+      q.processAllAvailable()
+      // upsert x down to 5: y promotes to 1, z backfills at 2
+      in.addData(up(2, "x", 5.0))
+      runToCompletion(q)
+      val all = spark.table("ut_out").as[(String, String, Int, String, String)]
+        .collect().toSeq.collect { case ("+U", k, rk, sk, id) =>
+          (k, rk, SortKey.decodeFieldDouble(sk, asc = false), id) }
+      assert(all.contains(("g", 1, 30.0, "x")) && all.contains(("g", 2, 20.0, "y")))
+      assert(all.contains(("g", 1, 20.0, "y")) && all.contains(("g", 2, 10.0, "z")),
+        s"no re-rank after demoting upsert: $all")
+    }
   }
 
   test("CoProcess: control stream updates shared state read by the data stream") {
@@ -900,9 +970,9 @@ class StreamingSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       val lhs = MemoryStream[(Long, String, String)] // (key, kind, l-payload)
       val rhs = MemoryStream[(Long, String, String)]
-      val out = StreamJoinTws.innerJoin(lhs.toDS(), rhs.toDS())
+      val out = StreamJoinTws.innerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs))
       val q = out.toDF("k", "kind", "l", "r").writeStream
-        .outputMode("update").format("memory").queryName("sj_out").start()
+        .outputMode("append").format("memory").queryName("sj_out").start()
       // batch 1: left rows arrive before any right -> no emissions yet
       lhs.addData((1L, "+I", "l1"), (1L, "+I", "l2"), (2L, "+I", "lx"))
       q.processAllAvailable()
@@ -914,7 +984,8 @@ class StreamingSpec extends AnyFunSuite {
       rhs.addData((2L, "+I", "ry")) // arrives after lx deletion: no join
       runToCompletion(q)
 
-      val rows = spark.table("sj_out").as[(Long, String, String, String)].collect()
+      val rows = spark.table("sj_out").withColumn("k", $"k".cast("long"))
+        .as[(Long, String, String, String)].collect()
       // net materialization: +I count minus -D count per joined row
       val net = rows.groupBy(r => (r._1, r._3, r._4)).view
         .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
@@ -932,16 +1003,17 @@ class StreamingSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       val lhs = MemoryStream[(Long, String, String)]
       val rhs = MemoryStream[(Long, String, String)]
-      val out = StreamJoinTws.leftOuterJoin(lhs.toDS(), rhs.toDS())
+      val out = StreamJoinTws.outerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs),
+        padLeft = true, padRight = false)
       val q = out.toDF("k", "kind", "l", "r").writeStream
-        .outputMode("update").format("memory").queryName("lo_out").start()
+        .outputMode("append").format("memory").queryName("lo_out").start()
       lhs.addData((1L, "+I", "l1")) // no right yet -> null-padded
       q.processAllAvailable()
       rhs.addData((1L, "+I", "r1")) // pad retracts, real join emits
       q.processAllAvailable()
       rhs.addData((1L, "-D", "r1")) // last match gone -> pad returns
       runToCompletion(q)
-      val rows = spark.table("lo_out")
+      val rows = spark.table("lo_out").withColumn("k", $"k".cast("long"))
         .as[(Long, String, String, Option[String])].collect().toSeq
       assert(rows.contains((1L, "+I", "l1", None)), s"missing initial pad: $rows")
       assert(rows.contains((1L, "-D", "l1", None)), s"pad not retracted: $rows")
@@ -962,16 +1034,17 @@ class StreamingSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       val lhs = MemoryStream[(Long, String, String)]
       val rhs = MemoryStream[(Long, String, String)]
-      val out = StreamJoinTws.rightOuterJoin(lhs.toDS(), rhs.toDS())
+      val out = StreamJoinTws.outerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs),
+        padLeft = false, padRight = true)
       val q = out.toDF("k", "kind", "l", "r").writeStream
-        .outputMode("update").format("memory").queryName("ro_out").start()
+        .outputMode("append").format("memory").queryName("ro_out").start()
       rhs.addData((1L, "+I", "r1")) // no left yet -> null-padded on the left
       q.processAllAvailable()
       lhs.addData((1L, "+I", "l1")) // pad retracts, real join emits
       q.processAllAvailable()
       lhs.addData((1L, "-D", "l1")) // last match gone -> pad returns
       runToCompletion(q)
-      val rows = spark.table("ro_out")
+      val rows = spark.table("ro_out").withColumn("k", $"k".cast("long"))
         .as[(Long, String, Option[String], String)].collect().toSeq
       assert(rows.contains((1L, "+I", None, "r1")), s"missing initial pad: $rows")
       assert(rows.contains((1L, "-D", None, "r1")), s"pad not retracted: $rows")
@@ -991,9 +1064,10 @@ class StreamingSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       val lhs = MemoryStream[(Long, String, String)]
       val rhs = MemoryStream[(Long, String, String)]
-      val out = StreamJoinTws.fullOuterJoin(lhs.toDS(), rhs.toDS())
+      val out = StreamJoinTws.outerJoinChangelog(stringKeyed(lhs), stringKeyed(rhs),
+        padLeft = true, padRight = true)
       val q = out.toDF("k", "kind", "l", "r").writeStream
-        .outputMode("update").format("memory").queryName("fo_out").start()
+        .outputMode("append").format("memory").queryName("fo_out").start()
       // duplicate left payloads exercise the counted-multiset state
       lhs.addData((1L, "+I", "l1"), (1L, "+I", "l1"))
       rhs.addData((2L, "+I", "r2"))
@@ -1003,7 +1077,7 @@ class StreamingSpec extends AnyFunSuite {
       rhs.addData((1L, "-D", "r1")) // pads come back (x2)
       lhs.addData((1L, "-D", "l1")) // one of the two pads goes away
       runToCompletion(q)
-      val rows = spark.table("fo_out")
+      val rows = spark.table("fo_out").withColumn("k", $"k".cast("long"))
         .as[(Long, String, Option[String], Option[String])].collect().toSeq
       val net = rows.groupBy(r => (r._1, r._3, r._4)).view
         .mapValues(_.map(r => if (r._2 == "+I") 1 else -1).sum)
@@ -1019,27 +1093,22 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming changelog replay equals the batch signed aggregate") {
     import graft.operators.RetractOps
-    import graft.streaming.Retract
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // the q71 changelog at sf0.001, replayed in 3 micro-batches
     val rows = RetractOps.ordersChangelog(spark, TestSpark.sf)
       .select($"o_orderpriority", col(graft.streaming.Cdc.RowKind),
         $"price".cast("double"))
       .as[(String, String, Double)].collect().toSeq
       .sortBy(r => (r._2, r._1)) // deterministic but kind-interleaved order
-    val in = MemoryStream[(String, String, Double)]
-    val out = Retract.groupAggregate(in.toDS())
-    val q = out.toDF("k", "kind", "cnt", "sum").writeStream
-      .outputMode("update").format("memory").queryName("rp_out").start()
-    rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
-      in.addData(chunk); q.processAllAvailable()
+    // last emission per key (the sink's keep-last view) is the final state
+    val finalRows = changelogInsert("rp",
+      src => s"SELECT k, COUNT(*) AS cnt, SUM(v) AS s FROM $src GROUP BY k",
+      rows.grouped(math.max(1, rows.length / 3)).toSeq) { sink =>
+      ChangelogSql.materializeUpsertSink(spark, sink)
+        .select($"k", $"cnt".cast("long"), $"s".cast("double"))
+        .as[(String, Long, Double)].collect()
+        .map(r => r._1 -> r).toMap
     }
-    q.stop()
-    // last emission per key is the final state
-    val finalRows = spark.table("rp_out").as[(String, String, Long, Double)]
-      .collect().zipWithIndex
-      .groupBy(_._1._1).map { case (k, rs) => k -> rs.maxBy(_._2)._1 }
     val want = RetractOps.retractAggregate(
         RetractOps.ordersChangelog(spark, TestSpark.sf),
         Seq("o_orderpriority"), "price")
@@ -1049,7 +1118,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r._1 -> (r._2, r._3)).toMap
     assert(finalRows.keySet == want.keySet)
     want.foreach { case (k, (cnt, sum)) =>
-      val (_, _, gotCnt, gotSum) = finalRows(k)
+      val (_, gotCnt, gotSum) = finalRows(k)
       assert(gotCnt == cnt, s"$k count: $gotCnt != $cnt")
       // streaming sums doubles in arrival order; batch sums exact decimals —
       // compare with relative tolerance

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** One shared local session for the whole ScalaTest run. */
 object TestSpark {
@@ -18,4 +19,12 @@ object TestSpark {
   def withRocksDB[T](body: => T): T =
     graft.util.Conf.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** A scripted Long-keyed changelog side (key, row_kind, payload) in the
+    * String-keyed form the stream-join bodies take (the SQL join route
+    * encodes its join keys as strings). */
+  def stringKeyed(side: MemoryStream[(Long, String, String)]): Dataset[(String, String, String)] = {
+    import spark.implicits._
+    side.toDS().map { case (k, kind, p) => (k.toString, kind, p) }
+  }
 }

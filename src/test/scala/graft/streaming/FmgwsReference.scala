@@ -183,7 +183,7 @@ object FmgwsReference {
   /** Inner join of two keyed changelogs. Input rows: (key, row_kind,
     * payload). Output rows: (key, row_kind, leftPayload, rightPayload)
     * with row_kind in {+I, -D}. Net changelog identical to
-    * [[StreamJoinTws.innerJoin]]; per-batch emission ORDER may differ
+    * [[StreamJoinTws.innerJoinChangelog]]; per-batch emission ORDER may differ
     * (MapState iteration order is store-defined). */
   def innerJoin[K, L, R](
       left: Dataset[(K, String, L)], right: Dataset[(K, String, R)])(
