@@ -81,19 +81,13 @@ object SinkOps extends QueryModule {
     }
   }
 
-  /** Side outputs: split one DataFrame into tagged outputs by predicate
-    * (each output is an independent lazy plan; write them in one
-    * foreachBatch for a single source pass per sink). */
-  def sideOutputs(df: DataFrame, tags: Map[String, Column]): Map[String, DataFrame] =
-    tags.map { case (tag, pred) => tag -> df.filter(pred) }
-
-  /** Per-tag row counts in a SINGLE pass over the source: one conditional
-    * aggregate per tag, unpivoted to (tag, n) rows by exploding an array
-    * of (tag, count) structs. One FileScan regardless of tag count — the
-    * shape sideOutputs' scaladoc prescribes for sinks, applied to
-    * monitoring counters. Built entirely from typed APIs: tag names only
-    * ever appear as literal VALUES (never spliced into SQL text or column
-    * identifiers), so quotes/spaces/backticks in a tag are inert data. */
+  /** Side outputs (DataStream `OutputTag`), as per-tag row counts in a
+    * SINGLE pass over the source: one conditional aggregate per tag,
+    * unpivoted to (tag, n) rows by exploding an array of (tag, count)
+    * structs. One FileScan regardless of tag count. Built entirely from
+    * typed APIs: tag names only ever appear as literal VALUES (never
+    * spliced into SQL text or column identifiers), so quotes/spaces/
+    * backticks in a tag are inert data. */
   def sideOutputCounts(df: DataFrame, tags: Map[String, Column]): DataFrame = {
     val ordered = tags.toSeq.sortBy(_._1)
     val agg = df.agg(

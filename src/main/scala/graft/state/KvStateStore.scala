@@ -130,23 +130,29 @@ object InMemoryKvService {
   * Enable with:
   * spark.sql.streaming.stateStore.providerClass=graft.state.KvStateStoreProvider
   *
-  * Versioning (LSM-style layers — round-2 hardening over the full-rewrite
-  * prototype): each committed version v is a LAYER under prefix "v<v>/",
-  * either FULL (all live rows) or DELTA (only the keys dirtied by that
-  * micro-batch; a removed key is an explicit 1-byte delete cell). Commit
-  * cost is therefore O(dirty keys) per micro-batch, not O(state). Loading
-  * version v merges the newest full layer f <= v with the deltas f+1..v.
-  * In steady state the provider serves the last committed version from its
-  * in-process cache, so the KV is only scanned on restart/failover. The
-  * cache holds a persistent map (copy-on-write state, as in Flink's state
-  * tables): a store opened from it and the commit that publishes the next
-  * version share structure, so neither copies the state. A full layer is
-  * written every `CompactEvery` commits and prunes all layers below the
-  * PREVIOUS full layer, bounding retained history to <= 2*CompactEvery
-  * versions (reloadable window — ample for Structured Streaming's
-  * last-couple-of-versions retry contract). The KV remains the single
-  * source of truth for every retained version — the PSL design premise of
-  * no separate snapshot files.
+  * Versioning (LSM-style layers): each committed version v > 1 is a DELTA
+  * layer under prefix "v<v>/" holding only the keys that micro-batch
+  * dirtied (a removed key is an explicit 1-byte delete cell), marked
+  * committed by the cell "meta/<v>"; commit cost is O(dirty keys), and a
+  * commit with no dirty key writes its meta cell only. Below the deltas
+  * lies ONE rolling BASE layer: the untagged image of version b under
+  * "base/", with b in the cell "meta/base"; version 1 is written as the
+  * base. Loading version v >= b reads the base plus every delta layer
+  * still present up to v. When 2*`CompactEvery` deltas sit above the
+  * base, the commit folds the oldest `CompactEvery` of them into it —
+  * base meta first, then the merged keys, then the folded layers deleted
+  * in ascending order — so a commit writes at most about three cells per
+  * dirty key, the KV holds one image plus at most 2*`CompactEvery` delta
+  * layers, and the latest `CompactEvery`+1 versions always reload
+  * (ample for Structured Streaming's last-couple-of-versions retry
+  * contract). In steady state the provider serves the last committed
+  * version from its in-process cache, so the KV is only scanned on
+  * restart/failover. The cache holds a persistent map (copy-on-write
+  * state, as in Flink's state tables): a store opened from it and the
+  * commit that publishes the next version share structure, so neither
+  * copies the state. The KV remains the single source of truth for every
+  * retained version — the PSL design premise of no separate snapshot
+  * files.
   */
 class KvStateStoreProvider extends StateStoreProvider {
   import KvStateStoreProvider._
@@ -203,40 +209,55 @@ class KvStateStoreProvider extends StateStoreProvider {
 
   private def layerPrefix(v: Long): Array[Byte] = s"v$v/".getBytes
   private def metaKey(v: Long): Array[Byte] = s"meta/$v".getBytes
+  private def hasLayer(v: Long): Boolean = kv.get(metaKey(v)).isDefined
 
-  /** Layer kind of committed version v: Some('F') full, Some('D') delta. */
-  private def layerKind(v: Long): Option[Char] =
-    kv.get(metaKey(v)).map(_(0).toChar)
+  /** Version of the base layer; 0 before the first commit. */
+  private def baseVersion(): Long =
+    kv.get(BaseMeta).map(b => new String(b).toLong).getOrElse(0L)
 
-  /** Reconstruct the merged state at `version` from KV layers. FAILS
-    * FAST (like HDFSBackedStateStoreProvider's missing-delta error) when
-    * the version is not reconstructible — pruned below the retained
-    * window, or never committed; silently returning an empty map would
+  /** Cells of delta layer v, keyed by the state key they stage. */
+  private def layerCells(v: Long): Iterator[(Key, Array[Byte])] = {
+    val p = layerPrefix(v)
+    kv.scan(p).map { case (k, cell) => (new Key(Arrays.copyOfRange(k, p.length, k.length)), cell) }
+  }
+
+  /** First layer of the run of present delta layers that ends at `top`,
+    * or `top`+1 when layer `top` is absent. Called with the base version,
+    * the run is empty unless a fold was cut short: a fold deletes its
+    * layers in ascending order, cells before meta, so what it leaves is
+    * contiguous, only its first layer may be partial, and reapplying the
+    * run over the base is idempotent. */
+  private def lowestPresent(top: Long): Long = {
+    var lo = top + 1
+    while (lo > 1 && hasLayer(lo - 1)) lo -= 1
+    lo
+  }
+
+  /** Reconstruct the merged state at `version` from the base and delta
+    * layers. FAILS FAST (like HDFSBackedStateStoreProvider's missing-delta
+    * error) when the version is not reconstructible — folded below the
+    * base, or never committed; silently returning an empty map would
     * resume a query over empty aggregation state and produce wrong
     * results with no error. */
   private def loadMerged(version: Long): Snapshot = {
     if (version <= 0) return Snapshot(version, HashMap.empty, 0L)
-    var base = version
-    while (base > 0 && !layerKind(base).contains('F')) base -= 1
-    if (base < 1)
+    val base = baseVersion()
+    if (base < 1 || version < base)
       throw new IllegalStateException(
         s"KvStateStoreProvider: version $version of $storeId is not " +
-          "reconstructible — no full layer at or below it (pruned beyond " +
-          "the retained window, or never committed)")
-    var rows = HashMap.empty[Key, Array[Byte]]
-    (base to version).foreach { v =>
-      if (layerKind(v).isEmpty)
+          s"reconstructible — the base layer is at version $base (folded " +
+          "beyond the retained window, or never committed)")
+    val b = HashMap.newBuilder[Key, Array[Byte]]
+    kv.scan(BasePrefix).foreach { case (k, v) =>
+      b += new Key(Arrays.copyOfRange(k, BasePrefix.length, k.length)) -> v
+    }
+    var rows = b.result()
+    (lowestPresent(base) to version).foreach { v =>
+      if (v > base && !hasLayer(v))
         throw new IllegalStateException(
           s"KvStateStoreProvider: layer $v needed for version $version " +
             s"of $storeId is missing")
-      val p = layerPrefix(v)
-      val cells = kv.scan(p).map { case (k, cell) =>
-        (new Key(Arrays.copyOfRange(k, p.length, k.length)), cell)
-      }
-      // the full base layer is built in one pass; deltas are applied to it
-      if (v == base)
-        rows = HashMap.from(cells.collect { case (k, cell) if cell(0) == CellLive => (k, cell.drop(1)) })
-      else cells.foreach { case (k, cell) =>
+      layerCells(v).foreach { case (k, cell) =>
         rows = if (cell(0) == CellLive) rows.updated(k, cell.drop(1)) else rows.removed(k)
       }
     }
@@ -245,7 +266,7 @@ class KvStateStoreProvider extends StateStoreProvider {
 
   /** One version's view: starts from the committed state of `loadVersion`,
     * stages changes and tracks dirty keys; commit publishes version+1 as a
-    * delta (or periodic full) layer. */
+    * delta layer (version 1 as the base). */
   private class KvStore(val loadVersion: Long) extends StateStore {
     // persistent: put/remove replace `rows`, so the cache and any open
     // iterator keep the version they were given
@@ -335,52 +356,60 @@ class KvStateStoreProvider extends StateStoreProvider {
 
     override def commit(): Long = {
       val next = loadVersion + 1
-      val prefix = layerPrefix(next)
-      // Idempotent re-commit (retried/zombie tasks): sweep any cells a
-      // prior attempt left under v<next>/ so the layer reflects exactly
-      // THIS attempt's writes — otherwise loadMerged would merge a failed
-      // attempt's partial (or different) dirty set into every future
-      // version, silently resurrecting stale state. A clean first commit
-      // scans an empty prefix: zero extra writes.
-      kv.scan(prefix).foreach { case (k, _) => kv.delete(k) }
-      if (layerKind(next).isDefined) kv.delete(metaKey(next))
-      // full layer on the first commit (no base yet) and every CompactEvery
-      // commits thereafter; delta layer (dirty keys only) in between.
-      val writeFull = next == 1 || next % CompactEvery == 0
-      if (writeFull) {
-        rows.foreachEntry((k, v) => kv.put(concat(prefix, k.bytes), liveCell(v)))
-        kv.put(metaKey(next), Array('F'.toByte))
-        pruneBelowPreviousFull(next)
-      } else {
+      if (next == 1) writeBase()
+      else {
+        val prefix = layerPrefix(next)
+        // Idempotent re-commit (retried/zombie tasks): sweep any cells a
+        // prior attempt left under v<next>/ so the layer reflects exactly
+        // THIS attempt's writes — otherwise loadMerged would merge a failed
+        // attempt's partial (or different) dirty set into every future
+        // version, silently resurrecting stale state. A clean first commit
+        // scans an empty prefix: zero extra writes.
+        kv.scan(prefix).foreach { case (k, _) => kv.delete(k) }
+        if (hasLayer(next)) kv.delete(metaKey(next))
         dirty.forEach { k =>
           val v = rows.getOrElse(k, null)
           kv.put(concat(prefix, k.bytes), if (v != null) liveCell(v) else Array(CellDead))
         }
-        kv.put(metaKey(next), Array('D'.toByte))
+        kv.put(metaKey(next), Array.emptyByteArray)
+        val base = baseVersion()
+        if (next - base >= 2 * CompactEvery) fold(base)
       }
       cached = Snapshot(next, rows, bytes) // atomic publish, no copy
       committed = true
       next
     }
 
-    /** Physically remove all layers below the previous full layer — they are
-      * no longer reachable from any loadable version. Full layers sit at
-      * fixed versions (1 and every multiple of CompactEvery), so the
-      * previous one is at most CompactEvery back; below it lies one
-      * contiguous run of layers (one interval, more if a prune was cut
-      * short), found by walking down to the first missing version. A full
-      * commit so reads O(CompactEvery) metas, however long the stream. */
-    private def pruneBelowPreviousFull(justWrote: Long): Unit = {
-      val prevFull = (justWrote - 1 to math.max(1L, justWrote - CompactEvery) by -1)
-        .find(v => layerKind(v).contains('F'))
-      prevFull.foreach { pf =>
-        var lowest = pf
-        while (lowest > 1 && layerKind(lowest - 1).isDefined) lowest -= 1
-        // ascending, so a prune cut short leaves a run the next walk reaches
-        (lowest until pf).foreach { v =>
-          kv.scan(layerPrefix(v)).foreach { case (k, _) => kv.delete(k) }
-          kv.delete(metaKey(v))
-        }
+    /** Version 1 is the base image itself; a re-commit first sweeps what a
+      * prior attempt wrote there. */
+    private def writeBase(): Unit = {
+      kv.scan(BasePrefix).foreach { case (k, _) => kv.delete(k) }
+      rows.foreachEntry((k, v) => kv.put(concat(BasePrefix, k.bytes), v))
+      kv.put(BaseMeta, "1".getBytes)
+    }
+
+    /** Fold the deltas base+1..base+CompactEvery into the base layer. The
+      * base meta advances FIRST: a fold cut short at any later step leaves
+      * the folded layers, or the run of them not yet deleted, for
+      * loadMerged to reapply over a base that holds each key at its old or
+      * its folded value — the same state either way. The next fold merges
+      * and deletes such a run along with its own layers. */
+    private def fold(base: Long): Unit = {
+      val top = base + CompactEvery
+      kv.put(BaseMeta, top.toString.getBytes)
+      val layers = lowestPresent(base) to top
+      val merged = new java.util.HashMap[Key, Array[Byte]]()
+      layers.foreach(v => layerCells(v).foreach { case (k, cell) => merged.put(k, cell) })
+      merged.forEach { (k, cell) =>
+        val bk = concat(BasePrefix, k.bytes)
+        if (cell(0) == CellLive) kv.put(bk, Arrays.copyOfRange(cell, 1, cell.length))
+        else kv.delete(bk)
+      }
+      // ascending, cells before meta: what a cut-short delete leaves is a
+      // contiguous run ending at the new base
+      layers.foreach { v =>
+        kv.scan(layerPrefix(v)).foreach { case (k, _) => kv.delete(k) }
+        kv.delete(metaKey(v))
       }
     }
 
@@ -397,12 +426,16 @@ class KvStateStoreProvider extends StateStoreProvider {
 }
 
 object KvStateStoreProvider {
-  /** Full-layer cadence: bounds retained layer count to <= 2*CompactEvery. */
+  /** Fold cadence: a commit that finds 2*CompactEvery deltas above the
+    * base folds the oldest CompactEvery into it, so the latest
+    * CompactEvery+1 versions always reload. */
   val CompactEvery: Long = 8L
-  // provider-level cell encoding inside layer values: live row vs
-  // delete-in-delta marker.
+  // provider-level cell encoding inside delta layers: live row vs
+  // delete-in-delta marker. Base cells hold the bare row.
   private[state] val CellLive: Byte = 1
   private[state] val CellDead: Byte = 0
+  private val BasePrefix: Array[Byte] = "base/".getBytes
+  private val BaseMeta: Array[Byte] = "meta/base".getBytes
 
   /** A committed version's merged state and its summed value lengths. */
   private final case class Snapshot(version: Long, rows: HashMap[Key, Array[Byte]], bytes: Long)

@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    Flink's late-firing behavior (one PANE update per refinement).
   *  - LATE SIDE OUTPUT: `tagLate` marks rows that are already at-or-below
   *    the stream's current watermark — rows Spark's aggregate would
-  *    silently drop — so the caller can split them to their own sink in a
-  *    foreachBatch (SinkOps.sideOutputs) instead of losing them.
+  *    silently drop — so the caller can route them to their own sink in a
+  *    foreachBatch (a filter on the tag; `SinkOps.sideOutputCounts`, q55,
+  *    counts such tagged outputs) instead of losing them.
   *    Granularity note: Flink drops per WINDOW (event beyond
   *    window.end + lateness); this tags per ELEMENT against the widened
   *    watermark — the same horizon, applied at row granularity.

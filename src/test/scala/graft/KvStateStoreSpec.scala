@@ -154,7 +154,8 @@ class KvStateStoreSpec extends AnyFunSuite {
   import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
   import org.apache.spark.sql.execution.streaming.state._
   import org.apache.spark.sql.types._
-  import graft.state.KvStateStoreProvider
+  import graft.state.{ByteKv, KvStateStoreProvider}
+  import scala.collection.mutable
 
   private val ks = StructType(Seq(StructField("k", LongType)))
   private val vs = StructType(Seq(StructField("v", LongType)))
@@ -163,9 +164,13 @@ class KvStateStoreSpec extends AnyFunSuite {
   private def krow(i: Long): UnsafeRow = kproj(InternalRow(i)).copy()
   private def vrow(i: Long): UnsafeRow = vproj(InternalRow(i)).copy()
 
+  // provider roots live under a temp dir: init creates the store's
+  // checkpoint directory on the local filesystem
+  private lazy val rootDir = java.nio.file.Files.createTempDirectory("graft-kv-spec").toString
+
   private def freshProvider(root: String, valueSchema: StructType = vs): KvStateStoreProvider = {
     val p = new KvStateStoreProvider
-    p.init(StateStoreId(root, 0L, 0), ks, valueSchema, NoPrefixKeyStateEncoderSpec(ks),
+    p.init(StateStoreId(rootDir + root, 0L, 0), ks, valueSchema, NoPrefixKeyStateEncoderSpec(ks),
       false, StateStoreConf.empty, new Configuration(), false, None)
     p
   }
@@ -177,7 +182,7 @@ class KvStateStoreSpec extends AnyFunSuite {
     (1L to 100L).foreach(i => s1.put(krow(i), vrow(i), "default"))
     assert(s1.commit() == 1L)
     val afterFull = InMemoryKvService.totalWrites
-    assert(afterFull >= 100L, "first commit is a full layer")
+    assert(afterFull >= 100L, "first commit writes the base image")
 
     val s2 = p.getStore(1, None)
     s2.put(krow(5), vrow(50), "default")
@@ -228,32 +233,201 @@ class KvStateStoreSpec extends AnyFunSuite {
     s3.abort()
   }
 
-  test("compaction writes periodic full layers and prunes stale history") {
+  test("compaction folds old deltas into one base and deletes them") {
     InMemoryKvService.clearAll()
     val p = freshProvider("/spec-compact")
+    val every = KvStateStoreProvider.CompactEvery
     var v = 0L
-    // 17 commits -> full layers at v1, v8, v16; after v16, layers <8 pruned
-    (1 to 17).foreach { i =>
+    // v1 is the base; the commit that finds 2*CompactEvery deltas above it
+    // (v17) folds v2..v9 into it
+    (1L to 2 * every + 1).foreach { i =>
       val s = p.getStore(v, None)
       s.put(krow(i % 5), vrow(i), "default")
       v = s.commit()
     }
     assert(v == 17L)
-    val ns = InMemoryKvService.namespaces.find(_.contains("spec-compact")).get
-    val raw = InMemoryKvService.namespace(ns)
-    // layers below the previous full (v8) are physically gone
-    assert(raw.scan("v2/".getBytes).isEmpty, "layer v2 should be pruned")
-    assert(raw.get("meta/2".getBytes).isEmpty, "meta for v2 should be pruned")
-    assert(raw.get("meta/16".getBytes).map(_(0).toChar).contains('F'),
-      "v16 should be a full layer")
-    val p2 = freshProvider("/spec-compact")
-    val s = p2.getStore(17, None)
-    (1 to 5).map(_ % 5).distinct.foreach { k =>
-      assert(s.get(krow(k), "default") != null, s"key $k missing after compaction")
+    val raw = rawKv("spec-compact")
+    // the folded layers are physically gone, the rest are whole
+    (2L to 9L).foreach { l =>
+      assert(raw.scan(s"v$l/".getBytes).isEmpty, s"layer v$l should be folded away")
+      assert(raw.get(s"meta/$l".getBytes).isEmpty, s"meta for v$l should be folded away")
     }
-    // latest value of each key wins across layers
-    assert(s.get(krow(17 % 5), "default").getLong(0) == 17L)
+    (10L to 17L).foreach(l => assert(raw.scan(s"v$l/".getBytes).size == 1, s"layer v$l"))
+    // the base meta names the base, whose cells are version 9's image
+    assert(baseOf(raw) == 9L)
+    assert(baseImage(raw) == (5L to 9L).map(i => i % 5 -> i).toMap)
+    // latest value of each key wins across base and deltas
+    val s = freshProvider("/spec-compact").getStore(17, None)
+    assert(entries(s) == (13L to 17L).map(i => i % 5 -> i).toMap)
     s.abort()
+  }
+
+  private def rawKv(tag: String): ByteKv =
+    InMemoryKvService.namespace(InMemoryKvService.namespaces.find(_.contains(tag)).get)
+  private def baseOf(raw: ByteKv): Long = new String(raw.get("meta/base".getBytes).get).toLong
+  private def baseImage(raw: ByteKv): Map[Long, Long] =
+    raw.scan("base/".getBytes).map { case (k, v) =>
+      val key, value = new UnsafeRow(1)
+      key.pointTo(k.drop("base/".length), k.length - "base/".length)
+      value.pointTo(v, v.length)
+      key.getLong(0) -> value.getLong(0)
+    }.toMap
+
+  /** Applies `ops` random puts and removes over keys [0, keys) to `s` and
+    * to `shadow`; returns how many keys the store marks dirty. */
+  private def churn(s: StateStore, rnd: scala.util.Random, shadow: mutable.Map[Long, Long],
+      keys: Int, ops: Int): Int = {
+    val dirty = mutable.Set.empty[Long]
+    (1 to ops).foreach { _ =>
+      val k = rnd.nextInt(keys).toLong
+      if (rnd.nextInt(4) == 0) {
+        s.remove(krow(k), "default")
+        if (shadow.remove(k).isDefined) dirty += k
+      } else {
+        val x = rnd.nextLong()
+        s.put(krow(k), vrow(x), "default")
+        shadow(k) = x
+        dirty += k
+      }
+    }
+    dirty.size
+  }
+
+  /** Every version in [from, to] reloads in a fresh provider and equals
+    * its shadow; every version in [1, from) fails loudly. */
+  private def assertReloads(root: String, from: Long, to: Long, shadowAt: Long => Map[Long, Long]): Unit = {
+    (from to to).foreach { v =>
+      val s = freshProvider(root).getStore(v, None)
+      assert(entries(s) == shadowAt(v), s"v$v of $root")
+      s.abort()
+    }
+    (1L until from).foreach { v =>
+      intercept[IllegalStateException](freshProvider(root).getStore(v, None))
+    }
+  }
+
+  test("commit writes are bounded by 3 per dirty key plus 3 per commit") {
+    InMemoryKvService.clearAll()
+    val rnd = new scala.util.Random(11)
+    val p = freshProvider("/spec-writes")
+    val shadow = mutable.Map.empty[Long, Long]
+    var v = 0L
+    var dirtySum, emptyChecked = 0L
+    val commits = 300
+    (1 to commits).foreach { i =>
+      val s = p.getStore(v, None)
+      val ops = if (i == 1) 150 else if (rnd.nextInt(5) == 0) 0 else 1 + rnd.nextInt(40)
+      val dirty = churn(s, rnd, shadow, 200, ops)
+      val (w0, b0) = (InMemoryKvService.totalWrites, if (v == 0) 0L else baseOf(rawKv("spec-writes")))
+      v = s.commit()
+      dirtySum += dirty
+      if (dirty == 0 && baseOf(rawKv("spec-writes")) == b0) {
+        assert(InMemoryKvService.totalWrites - w0 == 1L, s"zero-dirty commit v$v wrote more than its meta")
+        emptyChecked += 1
+      }
+    }
+    assert(emptyChecked > 0, "no zero-dirty commit without a fold")
+    assert(baseOf(rawKv("spec-writes")) > 1L, "no fold ran")
+    val writes = InMemoryKvService.totalWrites
+    assert(writes <= 3 * dirtySum + 3L * commits,
+      s"$writes writes for $dirtySum dirty keys over $commits commits")
+    val s = freshProvider("/spec-writes").getStore(v, None)
+    assert(entries(s) == shadow.toMap)
+    s.abort()
+  }
+
+  test("the latest CompactEvery+1 versions reload; below the base fails") {
+    InMemoryKvService.clearAll()
+    val every = KvStateStoreProvider.CompactEvery
+    val rnd = new scala.util.Random(23)
+    val p = freshProvider("/spec-window")
+    val shadow = mutable.Map.empty[Long, Long]
+    val shadowAt = mutable.Map(0L -> Map.empty[Long, Long])
+    var v = 0L
+    while (v < 6 * every) {
+      val s = p.getStore(v, None)
+      churn(s, rnd, shadow, 30, if (v == 0) 20 else rnd.nextInt(6))
+      v = s.commit()
+      shadowAt(v) = shadow.toMap
+      val base = baseOf(rawKv("spec-window"))
+      assert(base <= math.max(1L, v - every), s"v$v: the base ($base) cut the retained window")
+      assertReloads("/spec-window", base, v, shadowAt)
+    }
+  }
+
+  test("a fold cut short at any step still reloads every retained version") {
+    InMemoryKvService.clearAll()
+    val every = KvStateStoreProvider.CompactEvery
+    val rnd = new scala.util.Random(5)
+    val p = freshProvider("/spec-cut-run")
+    val shadow = mutable.Map.empty[Long, Long]
+    val shadowAt = mutable.Map(0L -> Map.empty[Long, Long])
+    def step(s: StateStore): Long = {
+      churn(s, rnd, shadow, 40, if (s.version == 0) 30 else 1 + rnd.nextInt(8))
+      val next = s.commit()
+      shadowAt(next) = shadow.toMap
+      next
+    }
+    var v = 0L
+    while (v < 2 * every) v = step(p.getStore(v, None))
+    val raw = rawKv("spec-cut-run")
+    val before = raw.scan(Array.emptyByteArray).toVector // v1..v16, no fold yet
+    v = step(p.getStore(v, None)) // v17 folds v2..v9 into the base
+    val folded = 1 + every
+    assert(baseOf(raw) == folded)
+    val v17 = raw.scan("v17/".getBytes).toVector :+ ("meta/17".getBytes -> Array.emptyByteArray)
+    // the KV as the fold left it after each of its steps
+    def cutAt(tag: String)(edit: ByteKv => Unit): Unit = {
+      freshProvider(s"/spec-cut-$tag")
+      val kv = rawKv(s"spec-cut-$tag")
+      (before ++ v17).foreach { case (k, x) => kv.put(k, x) }
+      kv.put("meta/base".getBytes, folded.toString.getBytes) // step 1
+      edit(kv)
+    }
+    // step 2: the folded layers merged, the later write winning
+    val merged = mutable.LinkedHashMap.empty[Seq[Byte], Array[Byte]]
+    (2L to folded).foreach { l =>
+      val prefix = s"v$l/".getBytes
+      before.foreach { case (k, c) =>
+        if (k.startsWith(prefix)) merged(k.drop(prefix.length).toSeq) = c
+      }
+    }
+    def foldKeys(kv: ByteKv, n: Int): Unit = merged.take(n).foreach { case (k, c) =>
+      val bk = "base/".getBytes ++ k
+      if (c(0) == 1) kv.put(bk, c.drop(1)) else kv.delete(bk)
+    }
+    def dropCells(kv: ByteKv, l: Long, n: Int): Unit =
+      kv.scan(s"v$l/".getBytes).take(n).toVector.foreach { case (k, _) => kv.delete(k) }
+    cutAt("meta")(_ => ()) // step 1 only
+    cutAt("half")(kv => foldKeys(kv, merged.size / 2)) // step 3, half done
+    cutAt("drop") { kv => // step 4: v2..v4 deleted, v5 partly
+      foldKeys(kv, merged.size)
+      (2L to 4L).foreach { l => dropCells(kv, l, Int.MaxValue); kv.delete(s"meta/$l".getBytes) }
+      dropCells(kv, 5L, (kv.scan("v5/".getBytes).size + 1) / 2)
+    }
+    assert(merged.nonEmpty && rawKv("spec-cut-drop").get("meta/5".getBytes).isDefined)
+    Seq("meta", "half", "drop").foreach { tag =>
+      assertReloads(s"/spec-cut-$tag", folded, v, shadowAt)
+      // the next fold merges and deletes what the cut-short one left
+      val cont = freshProvider(s"/spec-cut-$tag")
+      val contRnd = new scala.util.Random(7)
+      val contShadow = mutable.Map.from(shadowAt(v))
+      val contAt = mutable.Map.from(shadowAt)
+      var cv = v
+      while (cv < v + every) {
+        val s = cont.getStore(cv, None)
+        churn(s, contRnd, contShadow, 40, 1 + contRnd.nextInt(8))
+        cv = s.commit()
+        contAt(cv) = contShadow.toMap
+      }
+      val kv = rawKv(s"spec-cut-$tag")
+      assert(baseOf(kv) == v, s"$tag: the next fold did not run")
+      (2L to v).foreach { l =>
+        assert(kv.get(s"meta/$l".getBytes).isEmpty && kv.scan(s"v$l/".getBytes).isEmpty,
+          s"$tag: layer v$l survived the next fold")
+      }
+      assertReloads(s"/spec-cut-$tag", v, cv, contAt)
+    }
   }
 
   private def entries(s: StateStore): Map[Long, Long] = {
@@ -331,7 +505,7 @@ class KvStateStoreSpec extends AnyFunSuite {
     reloaded.abort()
   }
 
-  test("a full commit reads O(CompactEvery) metas, however many versions came before") {
+  test("a fold commit reads O(CompactEvery) cells at any version") {
     InMemoryKvService.clearAll()
     val p = freshProvider("/spec-reads")
     val every = KvStateStoreProvider.CompactEvery
@@ -346,15 +520,20 @@ class KvStateStoreSpec extends AnyFunSuite {
       if (ns.isEmpty) ns = InMemoryKvService.namespaces.find(_.contains("spec-reads")).get
       readsAt(v) = InMemoryKvService.readCount(ns) - before
     }
-    assert(1000L % every == 0, "v1000 must be a full layer")
-    assert(readsAt(1000L) == readsAt(3 * every),
-      s"full-commit reads grow with history: ${readsAt(3 * every)} at v${3 * every}, " +
-        s"${readsAt(1000L)} at v1000")
-    assert(readsAt(1000L) <= 4 * every, s"full commit read ${readsAt(1000L)} times")
-    // the bounded walk still prunes below the previous full layer (v992)
+    // folds run at v17, v25, ...: every version 1 mod CompactEvery from
+    // 2*CompactEvery+1 on; v993 is the last before v1000
+    val (second, last) = (3 * every + 1, 1000L - (1000L - 1) % every)
+    assert(last == 993L)
+    assert(readsAt(last) == readsAt(second),
+      s"fold-commit reads grow with history: ${readsAt(second)} at v$second, " +
+        s"${readsAt(last)} at v$last")
+    assert(readsAt(last) <= 4 * every, s"fold commit read ${readsAt(last)} times")
+    assert(readsAt(last) > readsAt(last - 1), s"v$last did not fold")
+    // the last fold advanced the base to v985 and deleted every layer below
     val raw = InMemoryKvService.namespace(ns)
-    assert(raw.get("meta/991".getBytes).isEmpty, "layer v991 should be pruned")
-    assert(raw.get("meta/992".getBytes).map(_(0).toChar).contains('F'))
+    assert(baseOf(raw) == last - every)
+    assert(raw.get("meta/985".getBytes).isEmpty, "layer v985 should be folded away")
+    assert(raw.get("meta/986".getBytes).isDefined)
     val reloaded = freshProvider("/spec-reads").getStore(1000L, None)
     assert(entries(reloaded) == (993L to 999L).map(i => i % 7 -> i).toMap)
     reloaded.abort()

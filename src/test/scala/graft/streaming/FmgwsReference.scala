@@ -17,50 +17,10 @@ object FmgwsReference {
   import Retract.{isAdd, isRetract}
 
   /** Retractable top-N per key over a changelog of
-    * (key, row_kind, score, payload). A retraction (-U/-D) removes one
-    * matching (score, payload) instance; the refreshed top-N — including
-    * rows BACKFILLED from below the old cut — is emitted whenever it
-    * changes, as (key, rank, score, payload). */
-  def retractableTopN[K: Encoder](
-      ds: Dataset[(K, String, Double, String)], n: Int)(
-      implicit e1: Encoder[Seq[(Double, String, Int)]],
-      e2: Encoder[(K, Int, Double, String)]): Dataset[(K, Int, Double, String)] = {
-    // live state is a COUNTED multiset (score, payload) -> live count, the
-    // MapState[row, cnt] shape of Flink's JoinRecordStateView/dataState:
-    // retraction lookup is O(1) instead of Seq.indexOf's O(live).
-    def topOf(live: Iterable[(Double, String, Int)]): Seq[(Double, String)] =
-      live.toSeq.sortBy { case (score, payload, _) => (-score, payload) }
-        .iterator.flatMap { case (s, p, c) => Iterator.fill(c)((s, p)) }
-        .take(n).toSeq
-
-    def update(key: K, rows: Iterator[(K, String, Double, String)],
-        state: GroupState[Seq[(Double, String, Int)]]): Iterator[(K, Int, Double, String)] = {
-      val before = state.getOption.getOrElse(Seq.empty)
-      val live = scala.collection.mutable.LinkedHashMap.from(
-        before.map { case (s, p, c) => ((s, p), c) })
-      rows.foreach { case (_, kind, score, payload) =>
-        if (isAdd(kind))
-          live.updateWith((score, payload))(c => Some(c.getOrElse(0) + 1))
-        else if (isRetract(kind)) live.get((score, payload)).foreach { c =>
-          if (c == 1) live.remove((score, payload))
-          else live.update((score, payload), c - 1)
-        }
-      }
-      val after = live.toSeq.map { case ((s, p), c) => (s, p, c) }
-      if (after.isEmpty) state.remove() else state.update(after)
-      val (oldTop, newTop) = (topOf(before), topOf(after))
-      if (newTop == oldTop) Iterator.empty
-      else newTop.iterator.zipWithIndex.map { case ((score, payload), i) =>
-        (key, i + 1, score, payload)
-      }
-    }
-
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** [[retractableTopN]] with an explicit DOWNSTREAM CHANGELOG — the
-    * full RetractableTopNFunction emit contract
+    * (key, row_kind, score, payload), with an explicit DOWNSTREAM
+    * CHANGELOG. A retraction (-U/-D) removes one matching (score,
+    * payload) instance from a counted multiset; the emit is the
+    * full RetractableTopNFunction contract
     * (rank/RetractableTopNFunction.java:56 emits updates AND deletes so
     * a sink keyed by (key, rank) stays exact): whenever a key's top-N
     * changes, the refreshed ranks emit as ("+U", key, rank, score,
