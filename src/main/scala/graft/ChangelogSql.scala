@@ -293,13 +293,6 @@ object ChangelogSql {
     calls.filter(n => retractableUda(n).isDefined)
   }
 
-  private def matchParen(b: String, open: Int): Int = {
-    val close = graft.util.SqlSplit.matchParen(b, open)
-    if (close < 0) throw new IllegalArgumentException(
-      s"unbalanced parentheses in SQL statement at offset $open")
-    close
-  }
-
   /** Rewrite every supported-aggregate / retractable-UDA call in `list`
     * into its retraction-consuming form. `weight` is `__net` (live
     * multiset, netting path) or `__sign` (±1 per change row, the
@@ -321,7 +314,7 @@ object ChangelogSql {
       val fn = m.group(1).toUpperCase
       if (m.start >= last && (Supported(fn) || retractableUda(fn).isDefined)) {
         val open = b.indexOf('(', m.start)
-        val close = matchParen(b, open)
+        val close = graft.util.SqlSplit.matchParenOrFail(b, open)
         val arg = list.substring(open + 1, close).trim
         require(!arg.toUpperCase.startsWith("DISTINCT"),
           s"changelog aggregate $fn(DISTINCT ...) is not supported; " +
@@ -1790,7 +1783,7 @@ object ChangelogSql {
     val om = """(?is)ROW_NUMBER\s*\(\s*\)\s*OVER\s*\(""".r
       .findFirstMatchIn(b).getOrElse(return None)
     val open = om.end - 1
-    val close = scala.util.Try(matchParen(b, open)).getOrElse(return None)
+    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, open)).getOrElse(return None)
     val head = b.substring(0, om.end)
     val specB = b.substring(open + 1, close)
     val spec = stmt.substring(open + 1, close)
@@ -2801,7 +2794,7 @@ object ChangelogSql {
     val om = """(?is)ROW_NUMBER\s*\(\s*\)\s*OVER\s*\(""".r
       .findFirstMatchIn(b).getOrElse(return None)
     val open = om.end - 1
-    val close = scala.util.Try(matchParen(b, open)).getOrElse(return None)
+    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, open)).getOrElse(return None)
     val head = b.substring(0, om.end)
     val specB = b.substring(open + 1, close)
     val spec = stmt.substring(open + 1, close)
@@ -2809,7 +2802,7 @@ object ChangelogSql {
       .getOrElse(return None)
     val rn = am.group(1)
     val innerOpen = close + 1 + am.end - 1
-    val innerClose = scala.util.Try(matchParen(b, innerOpen))
+    val innerClose = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, innerOpen))
       .getOrElse(return None)
     val inner = stmt.substring(innerOpen + 1, innerClose)
     if ("""(?is)^\s*SELECT\b""".r.findFirstIn(blank(inner)).isEmpty)
@@ -2849,7 +2842,7 @@ object ChangelogSql {
     val t = fromText.trim
     if (!t.startsWith("(")) return None
     val b = blank(t)
-    val close = scala.util.Try(matchParen(b, 0)).getOrElse(return None)
+    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, 0)).getOrElse(return None)
     val inner = t.substring(1, close)
     val rest = t.substring(close + 1).trim
     val alias =

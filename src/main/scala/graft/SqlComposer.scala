@@ -104,15 +104,6 @@ object SqlComposer {
     false
   }
 
-  /** Index of the ')' matching the '(' at char offset `open` — walked on
-    * tokens, so parens inside literals/comments can never desync it. */
-  private def matchParen(b: String, open: Int): Int = {
-    val close = graft.util.SqlSplit.matchParen(b, open)
-    if (close < 0) throw new IllegalArgumentException(
-      s"unbalanced parentheses in SQL statement at offset $open")
-    close
-  }
-
   /** Outermost `( SELECT ...)` spans as (open, close) char offsets —
     * non-overlapping; nested subqueries inside a span are handled by the
     * recursion through Engine.sql when that span lowers. */
@@ -256,7 +247,7 @@ object SqlComposer {
       val cols =
         if (i < b.length && b(i) == '(' &&
             !nextWord(b, i + 1).equalsIgnoreCase("SELECT")) {
-          val close = matchParen(b, i)
+          val close = graft.util.SqlSplit.matchParenOrFail(b, i)
           val cs = stmt.substring(i + 1, close)
             .split(",").map(_.trim.replace("`", "")).toSeq
           i = close + 1
@@ -270,7 +261,7 @@ object SqlComposer {
       while (i < b.length && b(i).isWhitespace) i += 1
       require(i < b.length && b(i) == '(',
         s"WITH: expected ( after $name AS in: ${stmt.trim.take(120)}")
-      val close = matchParen(b, i)
+      val close = graft.util.SqlSplit.matchParenOrFail(b, i)
       ctes += ((name, cols, stmt.substring(i + 1, close)))
       i = close + 1
       while (i < b.length && b(i).isWhitespace) i += 1

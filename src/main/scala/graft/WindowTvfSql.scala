@@ -121,9 +121,9 @@ object WindowTvfSql {
       // walk balanced parens (on the BLANKED text, so literal content is
       // inert) from TABLE's '(' to find the full span
       val openTable = b.indexOf('(', mm.start)
-      val closeTable = matchParen(b, openTable)
+      val closeTable = SqlSplit.matchParenOrFail(b, openTable)
       val openFn = b.indexOf('(', b.indexOf(mm.group(1), openTable))
-      val closeFn = matchParen(b, openFn)
+      val closeFn = SqlSplit.matchParenOrFail(b, openFn)
       val args = q.substring(openFn + 1, closeFn)
       // top-level GROUP BY (depth 0 of the token stream) = the
       // aggregated shape; per-row TVF annotation with no aggregate is
@@ -244,20 +244,13 @@ object WindowTvfSql {
     var m = re.findFirstMatchIn(b)
     while (m.isDefined) {
       val open = b.indexOf('(', m.get.start)
-      val close = matchParen(b, open)
+      val close = SqlSplit.matchParenOrFail(b, open)
       val args = SqlSplit.splitTopLevel(q.substring(open + 1, close)).map(_.trim)
       q = q.substring(0, m.get.start) + repl(args) + q.substring(close + 1)
       b = blanked(q)
       m = re.findFirstMatchIn(b)
     }
     q
-  }
-
-  private def matchParen(s: String, open: Int): Int = {
-    val close = SqlSplit.matchParen(s, open)
-    if (close < 0) throw new IllegalArgumentException(
-      s"window TVF: unbalanced parentheses in: $s")
-    close
   }
 
   private val TableRe = """(?is)\s*TABLE\s+(\w+)(?:\s+PARTITION\s+BY\s+(.+?))?\s*""".r
@@ -349,10 +342,10 @@ object WindowTvfSql {
     FindRe.findFirstMatchIn(b).exists { mm =>
       val openTable = b.indexOf('(', mm.start)
       val closeTable =
-        try matchParen(b, openTable) catch { case _: Exception => -1 }
+        try SqlSplit.matchParenOrFail(b, openTable) catch { case _: Exception => -1 }
       closeTable > 0 && {
         val openFn = b.indexOf('(', b.indexOf(mm.group(1), openTable))
-        val closeFn = matchParen(b, openFn)
+        val closeFn = SqlSplit.matchParenOrFail(b, openFn)
         val bareTableArgs = scala.util.Try(
           parseTvfArgs(mm.group(1).toUpperCase,
             stmt.substring(openFn + 1, closeFn))).isSuccess

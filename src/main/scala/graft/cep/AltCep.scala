@@ -1,47 +1,56 @@
 package graft.cep
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Row-pattern ALTERNATION (`A | B`) and PERMUTE — the SQL:2016
+/** The one CEP matcher, [[CompiledAlt]], and its two executors: one
+  * per-key batch loop and one watermark-gated streaming body. Every
+  * pattern — a raw [[Cep.Pattern]], a group tree ([[GroupCep]]) or an
+  * alternation/PERMUTE tree — compiles to a CompiledAlt, and every caller
+  * (MATCH_RECOGNIZE's four entry points, the declared CEP queries, the
+  * timeout surface) runs through the executors here.
+  *
+  * Row-pattern ALTERNATION (`A | B`) and PERMUTE are the SQL:2016
   * MATCH_RECOGNIZE grammar beyond Flink 1.16's own scope (its
   * parserImpls.ftl has no alternation production; Oracle's row-pattern
-  * matching and the standard define both).
+  * matching and the standard define both). They compile by VARIANT
+  * ENUMERATION, which is the standard's own definitional semantics:
+  * SQL:2016 19075-5 defines `PERMUTE(P1, ..., Pn)` as exactly the
+  * alternation of all n! permutations in lexicographic order, and an
+  * alternation matches when any one branch matches, preferring earlier
+  * branches. So a pattern tree containing [[GroupCep.Alt]]/[[Permute]]
+  * nodes expands into an ordered list of alternation-free variants, each
+  * compiled onto the linear NFA ([[GroupCep.compileWithBases]]) —
+  * quantifiers, nested groups, strict contiguity and until() all compose
+  * for free. All variants fold onto the SAME logical step ids (ids are
+  * assigned by leaf position in the ORIGINAL tree; a PERMUTE operand keeps
+  * one id across every permutation), so callers see one mask/step
+  * contract. A tree without alternation is ONE variant.
   *
-  * Compilation is VARIANT ENUMERATION, which is the standard's own
-  * definitional semantics: SQL:2016 19075-5 defines
-  * `PERMUTE(P1, ..., Pn)` as exactly the alternation of all n!
-  * permutations in lexicographic order, and an alternation matches when
-  * any one branch matches, preferring earlier branches. So a pattern
-  * tree containing [[GroupCep.Alt]]/[[Permute]] nodes expands into an
-  * ordered list of alternation-free variants, each compiled onto the
-  * existing linear NFA ([[GroupCep.compileWithBases]]) — quantifiers,
-  * nested groups, strict contiguity and until() all compose for free.
-  * All variants fold onto the SAME logical step ids (ids are assigned by
-  * leaf position in the ORIGINAL tree; a PERMUTE operand keeps one id
-  * across every permutation), so callers see one mask/step contract.
-  *
-  * Execution runs the variants in LOCKSTEP over each key's events: one
-  * run-list per variant, every event offered to each variant's NFA with
-  * per-variant `AfterMatch.NoSkip`, and the query's after-match skip
-  * strategy applied GLOBALLY — a match found by one variant prunes the
-  * other variants' runs too, exactly as the standard treats alternation
-  * as one pattern, not independent patterns. Preference order for the
-  * emitted match under SKIP PAST LAST ROW: earliest start, then longest,
-  * then earliest variant (= leftmost alternation branch, the standard's
-  * preferment). This order holds ACROSS completion events, not only among
-  * completions landing on the same row: a completed match is HELD (not
-  * emitted) while any live run could still produce a preferred match —
-  * one starting strictly earlier, or one with the same start whose
-  * variant's maximum match length could beat the held (length, branch)
-  * key. `(A B | A)` over rows a,b therefore emits the left branch's
-  * two-row match even though the right branch completes one event
-  * earlier. Variants of bounded length unblock as soon as the held match
-  * reaches the bound; unbounded (oneOrMore) same-start runs hold the
-  * match until they die — by contiguity, `until`, or the `within`
-  * horizon — so streaming patterns with unbounded quantifiers should set
-  * WITHIN for prompt emission (batch flushes at end of key regardless).
+  * A one-variant matcher runs exactly [[Cep.offerT]] on its pattern, with
+  * the query's skip strategy inside the NFA, then folds each bound event
+  * onto its logical step. Two or more variants run in LOCKSTEP over each
+  * key's events: one run-list per variant, every event offered to each
+  * variant's NFA with per-variant `AfterMatch.NoSkip`, and the query's
+  * after-match skip strategy applied GLOBALLY — a match found by one
+  * variant prunes the other variants' runs too, exactly as the standard
+  * treats alternation as one pattern, not independent patterns.
+  * Preference order for the emitted match under SKIP PAST LAST ROW:
+  * earliest start, then longest, then earliest variant (= leftmost
+  * alternation branch, the standard's preferment). This order holds
+  * ACROSS completion events, not only among completions landing on the
+  * same row: a completed match is HELD (not emitted) while any live run
+  * could still produce a preferred match — one starting strictly
+  * earlier, or one with the same start whose variant's maximum match
+  * length could beat the held (length, branch) key. `(A B | A)` over
+  * rows a,b therefore emits the left branch's two-row match even though
+  * the right branch completes one event earlier. Variants of bounded
+  * length unblock as soon as the held match reaches the bound; unbounded
+  * (oneOrMore) same-start runs hold the match until they die — by
+  * contiguity, `until`, or the `within` horizon — so streaming patterns
+  * with unbounded quantifiers should set WITHIN for prompt emission
+  * (batch flushes at end of key regardless).
   *
   * Scope: alternation inside an UNBOUNDED group (`(A | B)+`) is
   * rejected — a variant fixes the branch choice across loop traversals,
@@ -61,15 +70,21 @@ object AltCep {
     * arbitration (SkipPastLast only; empty for the other strategies). */
   type Held = List[(Int, List[BoundEv])]
 
+  /** The compiled matcher. `after` is the query's skip strategy: inside
+    * the NFA for one variant, applied across variants for two or more. */
   final case class CompiledAlt(variants: IndexedSeq[Compiled], nLogical: Int,
       after: AfterMatch) {
     require(variants.nonEmpty, "alternation enumerated zero non-empty variants")
     def within: Long = variants.head.pattern.within
+    private def single: Boolean = variants.size == 1
+
+    /** One empty run-list per variant: the state of a fresh key. */
+    private[cep] def noRuns: IndexedSeq[List[Run]] = variants.map(_ => List.empty[Run])
 
     /** Upper bound on a completed match's bound-event count per variant —
       * the unblock test for held matches. Long.MaxValue when a loop makes
       * the length unbounded (oneOrMore step or group loop-back). */
-    private[graft] lazy val maxLens: IndexedSeq[Long] = variants.map { v =>
+    private lazy val maxLens: IndexedSeq[Long] = variants.map { v =>
       val p = v.pattern
       if (p.loopTo.nonEmpty ||
           p.steps.exists(s => !s.negated && s.quant == Cep.Quant.OneOrMore))
@@ -88,6 +103,16 @@ object AltCep {
     /** Fold a per-variant bound list onto LOGICAL step ids. */
     private def foldBound(v: Int, b: List[BoundEv]): List[BoundEv] =
       b.map(ev => BoundEv(variants(v).fold(ev.step), ev.t, ev.tie))
+
+    /** The timeout surface's partial matches: every live run that bound
+      * at least one event (one-variant matchers only). */
+    private[cep] def partials(runs: List[Run]): List[List[BoundEv]] =
+      runs.filter(_.bound.nonEmpty).map(_.bound.toList).distinct.map(foldBound(0, _))
+
+    private[cep] def requireTimeouts(): Unit = {
+      require(single, "the timeout surface needs a one-variant matcher (no alternation)")
+      require(within > 0, "the timeout surface needs a within horizon")
+    }
 
     // bound lists are newest-first: .last = match start, .head = match end
     private def startKey(b: Seq[BoundEv]): (Long, Long) = (b.last.t, b.last.tie)
@@ -138,7 +163,7 @@ object AltCep {
     /** Re-arbitrate held matches after runs died OUTSIDE offerAll (the
       * streaming within-horizon expiry): no event is offered, only the
       * block test re-runs against the surviving runs. */
-    private[graft] def drainAfterExpiry(runs: IndexedSeq[List[Run]], held: Held)
+    private[cep] def drainAfterExpiry(runs: IndexedSeq[List[Run]], held: Held)
         : (IndexedSeq[List[Run]], Held, List[List[BoundEv]]) = {
       if (held.isEmpty) (runs, held, Nil)
       else {
@@ -149,7 +174,7 @@ object AltCep {
 
     /** End-of-input flush: no further events can extend a live run, so
       * arbitrate the held matches among themselves (batch key end). */
-    private[graft] def flushHeld(held0: Held): List[List[BoundEv]] = {
+    private[cep] def flushHeld(held0: Held): List[List[BoundEv]] = {
       var held = held0
       val out = List.newBuilder[List[BoundEv]]
       while (held.nonEmpty) {
@@ -161,13 +186,27 @@ object AltCep {
       out.result()
     }
 
-    /** Feed one event to every variant's run-list; returns the new
-      * per-variant runs, the carried held matches, and the emitted
-      * matches as LOGICAL bound-event lists (expanded steps already
-      * folded, duplicates across variants removed), in preference
-      * order. */
-    private[graft] def offerAll(runs: IndexedSeq[List[Run]], held: Held,
-        t: Long, logicalMask: Long, tie: Long = 0L)
+    /** Feed one event (LOGICAL mask) to the matcher: the new per-variant
+      * runs, the carried held matches, the emitted matches and the
+      * within-expired partials, both as LOGICAL bound-event lists. One
+      * variant: the NFA's own output, folded, in completion order. Two or
+      * more: emitted in preference order, duplicates across variants
+      * removed; no partials (the timeout surface is one-variant). */
+    private[cep] def offer(runs: IndexedSeq[List[Run]], held: Held,
+        t: Long, logicalMask: Long, tie: Long)
+        : (IndexedSeq[List[Run]], Held, List[List[BoundEv]], List[List[BoundEv]]) =
+      if (single) {
+        val v = variants.head
+        val (nr, done, timedOut) =
+          Cep.offerT(v.pattern, runs.head, t, v.expandMask(logicalMask), tie)
+        (IndexedSeq(nr), Nil, done.map(foldBound(0, _)), timedOut.map(foldBound(0, _)))
+      } else {
+        val (nr, nh, done) = offerAll(runs, held, t, logicalMask, tie)
+        (nr, nh, done, Nil)
+      }
+
+    private def offerAll(runs: IndexedSeq[List[Run]], held: Held,
+        t: Long, logicalMask: Long, tie: Long)
         : (IndexedSeq[List[Run]], Held, List[List[BoundEv]]) = {
       val results = variants.indices.map { v =>
         Cep.offer(variants(v).pattern, runs(v), t,
@@ -323,7 +362,15 @@ object AltCep {
     cross(perNode)
   }
 
-  /** Compile a pattern tree that may contain Alt/Permute nodes. */
+  /** A raw NFA pattern as a one-variant matcher: identity fold, the event
+    * mask passed through as is, the pattern's own skip strategy. */
+  def compile(p: Pattern): CompiledAlt =
+    CompiledAlt(IndexedSeq(Compiled(p, p.steps.indices, p.nSteps)), p.nSteps, p.after)
+
+  /** Compile a pattern tree. Without Alt/Permute nodes it is one variant,
+    * compiled with the query's skip strategy; with them, two or more
+    * variants with per-variant NoSkip, the skip strategy applied across
+    * variants by the matcher. */
   def compile(nodes: Seq[PatNode], within: Long = 0L,
       after: AfterMatch = AfterMatch.SkipPastLast,
       maxRuns: Int = 64): CompiledAlt = {
@@ -358,140 +405,163 @@ object AltCep {
     require(nonEmpty.size <= MaxVariants,
       s"alternation enumerates ${nonEmpty.size} variants — the cap is " +
         s"$MaxVariants (PERMUTE of 6); simplify the pattern")
-    // per-variant NoSkip: the global skip strategy is applied across
-    // variants by CompiledAlt.offerAll
-    CompiledAlt(
-      nonEmpty.map(v => GroupCep.compileWithBases(
-        v, nLogical, within, AfterMatch.NoSkip, maxRuns)).toIndexedSeq,
-      nLogical, after)
-  }
-
-  /** Drive the compiled matcher over one key's time-ordered
-    * (t, logicalMask) events — the spec surface, mirroring GroupCep.run. */
-  private[graft] def run(c: CompiledAlt, events: Seq[(Long, Long)])
-      : List[Seq[Seq[Long]]] = {
-    var runs: IndexedSeq[List[Run]] = c.variants.map(_ => List.empty[Run])
-    var held: Held = Nil
-    val out = List.newBuilder[Seq[Seq[Long]]]
-    events.foreach { case (t, mask) =>
-      val (nr, nh, done) = c.offerAll(runs, held, t, mask)
-      runs = nr; held = nh
-      done.foreach(b => out += c.stepTimesOf(b))
+    if (!nodes.exists(containsAlt))
+      CompiledAlt(IndexedSeq(GroupCep.compileWithBases(
+        nonEmpty.head, nLogical, within, after, maxRuns)), nLogical, after)
+    else {
+      // Alt needs two non-empty branches with distinct logical ids and
+      // PERMUTE two operands, so an alternation never collapses to one
+      require(nonEmpty.size >= 2, "alternation enumerated a single variant")
+      CompiledAlt(
+        nonEmpty.map(v => GroupCep.compileWithBases(
+          v, nLogical, within, AfterMatch.NoSkip, maxRuns)).toIndexedSeq,
+        nLogical, after)
     }
-    c.flushHeld(held).foreach(b => out += c.stepTimesOf(b))
-    out.result()
   }
 
-  /** Batch executor: same (key, t, mask, tie) contract as Cep.matchBatch
-    * with LOGICAL masks; same secondary-sort execution (one shuffle, one
-    * ordered pass, memory O(variants * maxRuns) per key). */
+  /** The one per-key pass over (key, t, mask, tie) rows in key, then
+    * (t, tie) order. `emit(key, matchNo, timedOut, bound)` projects each
+    * output: complete matches carry their per-key completion index
+    * (`match_no`); with `timeouts`, within-expired partials follow too.
+    * At each key's end held matches flush and, with `timeouts`, the
+    * still-pending partials time out (a bounded input ends with a +inf
+    * watermark, Flink's batch-mode CEP contract). */
+  private def scan[O](c: CompiledAlt, timeouts: Boolean,
+      rows: Iterator[(Long, Long, Long, Long)])(
+      emit: (Long, Long, Boolean, List[BoundEv]) => O): Iterator[O] = {
+    var key = 0L
+    var started = false
+    var runs = c.noRuns
+    var held: Held = Nil
+    var matchNo = 0L
+    def complete(b: List[BoundEv]): O = { matchNo += 1; emit(key, matchNo, false, b) }
+    def timedOut(b: List[BoundEv]): O = emit(key, 0L, true, b)
+    def endKey(): List[O] =
+      if (!started) Nil
+      else (if (timeouts) c.partials(runs.head).map(timedOut) else Nil) ++
+        c.flushHeld(held).map(complete)
+    rows.flatMap { case (k, t, mask, tie) =>
+      val prior = if (started && k != key) endKey() else Nil
+      if (!started || k != key) {
+        key = k; started = true; runs = c.noRuns; held = Nil; matchNo = 0L
+      }
+      val (nr, nh, done, expired) = c.offer(runs, held, t, mask, tie)
+      runs = nr; held = nh
+      prior ++ (if (timeouts) expired.map(timedOut) else Nil) ++ done.map(complete)
+    } ++ Iterator.single(()).flatMap(_ => endKey())
+  }
+
+  /** Drive the matcher over one key's time-ordered (t, logicalMask)
+    * events — the spec surface, on the batch executor's loop. */
+  private[graft] def run(c: CompiledAlt, events: Seq[(Long, Long)])
+      : List[Seq[Seq[Long]]] =
+    scan(c, timeouts = false, events.iterator.map { case (t, m) => (0L, t, m, 0L) })(
+      (_, _, _, b) => c.stepTimesOf(b)).toList
+
+  /** The batch executor: [[Cep.sortedEvents]] (one hash exchange on the
+    * key, in-place partition sort) then `scan` in one partition pass —
+    * per-key history is never collected, memory is O(variants * maxRuns)
+    * per key. */
+  private def batch[O: Encoder](spark: SparkSession, events: DataFrame,
+      c: CompiledAlt, timeouts: Boolean)(
+      emit: (Long, Long, Boolean, List[BoundEv]) => O): Dataset[O] =
+    Cep.sortedEvents(spark, events).mapPartitions(it => scan(c, timeouts, it)(emit))
+
+  /** Batch CEP over columns key, t, mask (bit i = the event satisfies
+    * logical step i), tie (deterministic order for equal times). Output:
+    * (key, step_times: array<array<long>>) — one row per match, inner
+    * arrays indexed by logical step. */
   def matchBatch(spark: SparkSession, events: DataFrame, c: CompiledAlt): DataFrame = {
     import spark.implicits._
-    Cep.sortedEvents(spark, events)
-      .mapPartitions { it =>
-        var curKey = 0L
-        var started = false
-        var runs: IndexedSeq[List[Run]] = c.variants.map(_ => List.empty[Run])
-        var held: Held = Nil
-        def flushKey(): List[(Long, Seq[Seq[Long]])] = {
-          val out = c.flushHeld(held).map(b => (curKey, c.stepTimesOf(b)))
-          held = Nil
-          out
-        }
-        it.flatMap { case (k, t, mask, tie) =>
-          val prior = if (started && k != curKey) flushKey() else Nil
-          if (!started || k != curKey) {
-            runs = c.variants.map(_ => List.empty[Run]); held = Nil
-            curKey = k; started = true
-          }
-          val (nr, nh, done) = c.offerAll(runs, held, t, mask, tie)
-          runs = nr; held = nh
-          prior ++ done.map(b => (k, c.stepTimesOf(b)))
-        } ++ Iterator.single(()).flatMap(_ => if (started) flushKey() else Nil)
-      }
+    batch(spark, events, c, timeouts = false)((k, _, _, b) => (k, c.stepTimesOf(b)))
       .toDF("key", "step_times")
   }
 
-  /** Like `matchBatch` but preserving each match's bound events with
-    * LOGICAL step ids — (key, match_no, bound: array<struct<step, t,
-    * tie>>), the MEASURES/ALL-ROWS raw material (mirrors
-    * Cep.matchBatchBound; the fold already happened). */
+  /** Each match's BOUND EVENTS with logical step ids — (key, match_no,
+    * bound: array<struct<step, t, tie>>, newest-first), the raw material
+    * for MATCH_RECOGNIZE MEASURES and ALL ROWS PER MATCH; (key, match_no)
+    * is a match id. */
   def matchBatchBound(spark: SparkSession, events: DataFrame, c: CompiledAlt): DataFrame = {
     import spark.implicits._
-    Cep.sortedEvents(spark, events)
-      .mapPartitions { it =>
-        var curKey = 0L
-        var started = false
-        var runs: IndexedSeq[List[Run]] = c.variants.map(_ => List.empty[Run])
-        var held: Held = Nil
-        var matchNo = 0L
-        def emit(k: Long, b: List[BoundEv]): (Long, Long, Seq[(Int, Long, Long)]) = {
-          matchNo += 1
-          (k, matchNo, b.map(ev => (ev.step, ev.t, ev.tie)))
-        }
-        def flushKey(): List[(Long, Long, Seq[(Int, Long, Long)])] = {
-          val out = c.flushHeld(held).map(b => emit(curKey, b))
-          held = Nil
-          out
-        }
-        it.flatMap { case (k, t, mask, tie) =>
-          val prior = if (started && k != curKey) flushKey() else Nil
-          if (!started || k != curKey) {
-            runs = c.variants.map(_ => List.empty[Run]); held = Nil
-            curKey = k; started = true; matchNo = 0L
-          }
-          val (nr, nh, done) = c.offerAll(runs, held, t, mask, tie)
-          runs = nr; held = nh
-          prior ++ done.map(b => emit(k, b))
-        } ++ Iterator.single(()).flatMap(_ => if (started) flushKey() else Nil)
-      }
+    batch(spark, events, c, timeouts = false)(
+      (k, n, _, b) => (k, n, b.map(ev => (ev.step, ev.t, ev.tie))))
       .toDF("key", "match_no", "bound")
   }
 
-  /** Streaming executor: same watermark-gated buffer as Cep.matchStream
-    * (rows wait in state until the watermark passes, then feed the
-    * lockstep NFAs in exact (t, tie) order). State carries one run-list
-    * per variant. */
-  def matchStream(ds: Dataset[(Long, Long, Long, Long)], c: CompiledAlt,
-      delay: String = "0 seconds")(
-      implicit ek: Encoder[Long],
-      ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
-      es: Encoder[(Seq[(Long, Long, Long)], Seq[List[Run]], Seq[(Int, Seq[BoundEv])])],
-      eo: Encoder[(Long, Seq[Seq[Long]])]): Dataset[(Long, Seq[Seq[Long]])] = {
-    val withTs = ds
-      .map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
+  /** `matchBatch` plus TIMED-OUT PARTIAL MATCHES — flink-cep's
+    * TimedOutPartialMatchHandler surface (the "order placed but never
+    * paid within the horizon" query). Output: (key, timed_out,
+    * step_times); timed_out=true rows are partials whose `within` horizon
+    * expired — overtaken by a later event or still pending at the end of
+    * input. Timeout emission is independent of the skip strategy. Needs a
+    * one-variant matcher with a within horizon. */
+  def matchBatchWithTimeouts(spark: SparkSession, events: DataFrame,
+      c: CompiledAlt): DataFrame = {
+    c.requireTimeouts()
+    import spark.implicits._
+    batch(spark, events, c, timeouts = true)((k, _, to, b) => (k, to, c.stepTimesOf(b)))
+      .toDF("key", "timed_out", "step_times")
+  }
+
+  private type Pending = Seq[(Long, Long, Long)]
+  private type StreamState = (Pending, Seq[List[Run]], Seq[(Int, Seq[BoundEv])])
+
+  /** The one streaming body, over an append stream with the same (key, t,
+    * mask, tie) contract and `t` in MICROSECONDS since epoch (it doubles
+    * as the watermark clock). The NFA is fronted by a WATERMARK-GATED
+    * buffer in the same keyed state (Flink CepOperator.java:82 buffers in
+    * elementQueueState and processes on watermark): rows wait until the
+    * watermark passes them, then feed the matcher in exact (t, tie) order
+    * — so cross-batch out-of-order arrival within the watermark `delay`
+    * yields the batch executor's matches. Rows at/below the watermark on
+    * arrival are DROPPED, like Flink CEP's late-data handling. State per
+    * key: the pending rows, the per-variant runs and the held matches. */
+  private def stream[O](ds: Dataset[(Long, Long, Long, Long)], c: CompiledAlt,
+      delay: String, timeouts: Boolean)(emit: (Long, Boolean, List[BoundEv]) => O)(
+      implicit eo: Encoder[O]): Dataset[O] = {
+    implicit val ek: Encoder[Long] = ExpressionEncoder[Long]()
+    implicit val ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)] =
+      ExpressionEncoder[(Long, java.sql.Timestamp, Long, Long, Long)]()
+    implicit val es: Encoder[StreamState] = ExpressionEncoder[StreamState]()
+    ds.map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
       .withWatermark("_2", delay)
-    withTs.groupByKey(_._1)
+      .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-            state: GroupState[(Seq[(Long, Long, Long)], Seq[List[Run]], Seq[(Int, Seq[BoundEv])])]) =>
+            state: GroupState[StreamState]) =>
           val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(
-            (Seq.empty[(Long, Long, Long)],
-              c.variants.map(_ => List.empty[Run]): Seq[List[Run]],
-              Seq.empty[(Int, Seq[BoundEv])]))
-          val pending0 = st._1
-          var runs: IndexedSeq[List[Run]] = st._2.toIndexedSeq
-          var held: Held = st._3.map { case (v, b) => (v, b.toList) }.toList
+          val (pending0, runs0, held0) =
+            state.getOption.getOrElse((Seq.empty, c.noRuns, Seq.empty))
+          var runs: IndexedSeq[List[Run]] = runs0.toIndexedSeq
+          var held: Held = held0.map { case (v, b) => (v, b.toList) }.toList
           val fresh = rows.map(r => (r._3, r._4, r._5)).filter(_._1 / 1000 > wm)
           val (ready, pending) = (pending0 ++ fresh).partition(_._1 / 1000 <= wm)
-          val out = List.newBuilder[(Long, Seq[Seq[Long]])]
+          val out = List.newBuilder[O]
           ready.sortBy(r => (r._1, r._3)).foreach { case (t, mask, tie) =>
-            val (nr, nh, done) = c.offerAll(runs, held, t, mask, tie)
+            val (nr, nh, done, expired) = c.offer(runs, held, t, mask, tie)
             runs = nr; held = nh
-            done.foreach(b => out += ((key, c.stepTimesOf(b))))
+            if (timeouts) expired.foreach(b => out += emit(key, true, b))
+            done.foreach(b => out += emit(key, false, b))
           }
+          // within-expired runs are dead even if no further event arrives
+          // for this key: drop them against the watermark (Flink CEP's
+          // cleanup timers; t is µs, the watermark ms) — the timeout
+          // surface emits them first — then re-arbitrate the held matches
+          // they may have blocked
           if (c.within > 0) {
-            runs = runs.map(_.filter(r => wm * 1000 - startT(r) <= c.within))
-            // expiry may have removed the runs blocking a held match:
-            // arbitrate again on the surviving state (no new completions)
-            val (nr, nh, done) = c.drainAfterExpiry(runs, held)
+            val isExpired = (r: Run) => wm * 1000 - startT(r) > c.within
+            if (timeouts) c.partials(runs.head.filter(isExpired))
+              .foreach(b => out += emit(key, true, b))
+            val (nr, nh, done) = c.drainAfterExpiry(runs.map(_.filterNot(isExpired)), held)
             runs = nr; held = nh
-            done.foreach(b => out += ((key, c.stepTimesOf(b))))
+            done.foreach(b => out += emit(key, false, b))
           }
           if (pending.isEmpty && runs.forall(_.isEmpty) && held.isEmpty) state.remove()
           else {
             state.update((pending, runs, held.map { case (v, b) => (v, b: Seq[BoundEv]) }))
+            // wake at the earliest pending row's release time AND — when a
+            // within horizon exists — at the surviving runs' expiry, so
+            // cleanup fires without waiting for another event on this key
             val dataT = pending.map(_._1 / 1000).minOption
             val live = runs.flatten
             val cleanT = if (c.within > 0 && live.nonEmpty)
@@ -502,5 +572,23 @@ object AltCep {
           }
           out.result().iterator
       }
+  }
+
+  /** Streaming CEP: (key, step_times) per match, as `matchBatch`. */
+  def matchStream(ds: Dataset[(Long, Long, Long, Long)], c: CompiledAlt,
+      delay: String = "0 seconds"): Dataset[(Long, Seq[Seq[Long]])] =
+    stream(ds, c, delay, timeouts = false)((k, _, b) => (k, c.stepTimesOf(b)))(
+      ExpressionEncoder[(Long, Seq[Seq[Long]])]())
+
+  /** Streaming counterpart of `matchBatchWithTimeouts`: (key, timed_out,
+    * step_times). The expiry clock is the WATERMARK — timeout rows fire on
+    * the cleanup timer even if the key never sees another event — so a
+    * partial times out exactly once, when no in-flight event can still
+    * complete it. */
+  def matchStreamWithTimeouts(ds: Dataset[(Long, Long, Long, Long)], c: CompiledAlt,
+      delay: String = "0 seconds"): Dataset[(Long, Boolean, Seq[Seq[Long]])] = {
+    c.requireTimeouts()
+    stream(ds, c, delay, timeouts = true)((k, to, b) => (k, to, c.stepTimesOf(b)))(
+      ExpressionEncoder[(Long, Boolean, Seq[Seq[Long]])]())
   }
 }

@@ -1,8 +1,7 @@
 package graft.cep
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** CEP / MATCH_RECOGNIZE-style sequence detection.
   *
@@ -37,12 +36,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * predicate evaluation inside Catalyst codegen — the matcher itself only
   * sees (t, mask).
   *
-  * Scale: the batch executor uses Spark's secondary-sort idiom —
-  * repartition by key + sortWithinPartitions(key, t, tie) + one streaming
-  * mapPartitions pass — so per-key history is NEVER materialized on the
-  * heap; memory is O(live runs), bounded by Pattern.maxRuns. Keys are the
-  * distribution unit exactly like Flink's keyed CEP. The streaming
-  * executor holds the run list as flatMapGroupsWithState state.
+  * This object is the NFA only. Execution is one matcher type,
+  * [[AltCep.CompiledAlt]] (a Pattern compiles to it via
+  * `AltCep.compile(p)`), with one batch executor — Spark's secondary-sort
+  * idiom, repartition by key + sortWithinPartitions(key, t, tie) + one
+  * streaming pass per partition, so per-key history is NEVER
+  * materialized on the heap and memory is O(live runs), bounded by
+  * Pattern.maxRuns — and one watermark-gated streaming body holding the
+  * run list in keyed group state. Keys are the distribution
+  * unit exactly like Flink's keyed CEP.
   */
 object Cep {
 
@@ -440,27 +442,11 @@ object Cep {
     (surviving2, completed2, timedOut)
   }
 
-  /** Bound list (newest-first) -> per-step sorted time arrays. */
-  private[graft] def toStepTimes(p: Pattern, bound: List[BoundEv]): Seq[Seq[Long]] =
-    (0 until p.nSteps).map(i => bound.filter(_.step == i).map(_.t).sorted)
-
-  /** Drive the matcher over one key's time-ordered (t, mask) events —
-    * the testing/spec surface. */
-  private[graft] def run(p: Pattern, events: Seq[(Long, Long)]): List[Seq[Seq[Long]]] = {
-    var runs: List[Run] = Nil
-    val out = List.newBuilder[Seq[Seq[Long]]]
-    events.foreach { case (t, mask) =>
-      val (nr, done) = offer(p, runs, t, mask)
-      runs = nr
-      done.foreach(b => out += toStepTimes(p, b))
-    }
-    out.result()
-  }
-
-  /** The shared secondary-sort prologue of every batch executor (here and
-    * AltCep): cast to the (key, t, mask, tie) contract, ONE hash exchange
-    * on the key, in-place partition sort — so per-key history streams in
-    * exact order without ever materializing on the heap. */
+  /** The secondary-sort prologue of the batch executor
+    * ([[AltCep.matchBatch]]): cast to the (key, t, mask, tie) contract,
+    * ONE hash exchange on the key, in-place partition sort — so per-key
+    * history streams in exact order without ever materializing on the
+    * heap. */
   private[cep] def sortedEvents(spark: SparkSession, events: DataFrame)
       : Dataset[(Long, Long, Long, Long)] = {
     import spark.implicits._
@@ -470,209 +456,6 @@ object Cep {
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("t"), col("tie"))
       .as[(Long, Long, Long, Long)]
-  }
-
-  /** Batch CEP over columns key: Long, t: Long, mask: Long (bit i = event
-    * satisfies step i), tie: Long (deterministic order for equal times).
-    * Output: (key, step_times: array<array<long>>) — one row per match,
-    * inner arrays indexed by step.
-    *
-    * Secondary-sort execution: one shuffle (repartition by key), in-place
-    * partition sort, then a single streaming pass — per-key history is
-    * never collected, memory is O(maxRuns). */
-  def matchBatch(spark: SparkSession, events: DataFrame, pattern: Pattern): DataFrame = {
-    import spark.implicits._
-    sortedEvents(spark, events)
-      .mapPartitions { it =>
-        var curKey = 0L
-        var started = false
-        var runs: List[Run] = Nil
-        it.flatMap { case (k, t, mask, tie) =>
-          if (!started || k != curKey) { runs = Nil; curKey = k; started = true }
-          val (nr, done) = offer(pattern, runs, t, mask, tie)
-          runs = nr
-          done.map(b => (k, toStepTimes(pattern, b)))
-        }
-      }
-      .toDF("key", "step_times")
-  }
-
-  /** Like `matchBatch` but preserving each match's BOUND EVENTS — one row
-    * per match: (key, match_no, bound: array<struct<step, t, tie>>), the
-    * raw material for MATCH_RECOGNIZE MEASURES evaluation (match_no is
-    * the per-key completion index, making (key, match_no) a match id).
-    * Same secondary-sort execution as matchBatch. */
-  def matchBatchBound(spark: SparkSession, events: DataFrame, pattern: Pattern): DataFrame = {
-    import spark.implicits._
-    sortedEvents(spark, events)
-      .mapPartitions { it =>
-        var curKey = 0L
-        var started = false
-        var runs: List[Run] = Nil
-        var matchNo = 0L
-        it.flatMap { case (k, t, mask, tie) =>
-          if (!started || k != curKey) {
-            runs = Nil; curKey = k; started = true; matchNo = 0L
-          }
-          val (nr, done) = offer(pattern, runs, t, mask, tie)
-          runs = nr
-          done.map { b =>
-            matchNo += 1
-            (k, matchNo, b.map(ev => (ev.step, ev.t, ev.tie)))
-          }
-        }
-      }
-      .toDF("key", "match_no", "bound")
-  }
-
-  /** Like `matchBatch`, but ALSO emitting TIMED-OUT PARTIAL MATCHES —
-    * flink-cep's TimedOutPartialMatchHandler surface (the "order placed
-    * but never paid within the horizon" query). Output: (key, timed_out,
-    * step_times); timed_out=false rows are complete matches, true rows
-    * are partials whose `within` horizon expired — either overtaken by a
-    * later event or still pending at end of input (bounded streams end
-    * with a +inf watermark, Flink's batch-mode CEP contract). Timeout
-    * emission is independent of the after-match skip strategy. */
-  def matchBatchWithTimeouts(spark: SparkSession, events: DataFrame,
-      pattern: Pattern): DataFrame = {
-    require(pattern.within > 0, "the timeout surface needs a within horizon")
-    import spark.implicits._
-    sortedEvents(spark, events)
-      .mapPartitions { it =>
-        var curKey = 0L
-        var started = false
-        var runs: List[Run] = Nil
-        def flush(k: Long): List[(Long, Boolean, Seq[Seq[Long]])] = {
-          val out = runs.filter(_.bound.nonEmpty).map(_.bound.toList).distinct
-            .map(b => (k, true, toStepTimes(pattern, b)))
-          runs = Nil
-          out
-        }
-        val base = it.flatMap { case (k, t, mask, tie) =>
-          val pre = if (started && k != curKey) flush(curKey) else Nil
-          if (!started || k != curKey) { runs = Nil; curKey = k; started = true }
-          val (nr, done, timedOut) = offerT(pattern, runs, t, mask, tie)
-          runs = nr
-          pre ++ timedOut.map(b => (k, true, toStepTimes(pattern, b))) ++
-            done.map(b => (k, false, toStepTimes(pattern, b)))
-        }
-        // Iterator#++'s by-name argument evaluates after `base` exhausts,
-        // so this flushes the LAST key's pending runs at end of input.
-        base ++ (if (started) flush(curKey) else Nil)
-      }
-      .toDF("key", "timed_out", "step_times")
-  }
-
-  /** Streaming CEP over an append stream with the same (key, t, mask, tie)
-    * contract, with `t` in MICROSECONDS since epoch (it doubles as the
-    * watermark clock). The NFA is fronted by a WATERMARK-GATED buffer in
-    * the same keyed state (Flink CepOperator.java:82 buffers in
-    * elementQueueState and processes on watermark): rows wait in state
-    * until the watermark passes them, then feed the NFA in exact (t, tie)
-    * order — so cross-batch out-of-order arrival within the watermark
-    * delay yields the same matches as the batch executor. Rows at/below
-    * the watermark on arrival are DROPPED explicitly, like Flink CEP's
-    * late-data handling. `delay` is the watermark delay bounding the
-    * tolerated disorder. */
-  def matchStream(ds: Dataset[(Long, Long, Long, Long)], pattern: Pattern,
-      delay: String = "0 seconds")(
-      implicit ek: Encoder[Long],
-      ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
-      es: Encoder[(Seq[(Long, Long, Long)], List[Run])],
-      eo: Encoder[(Long, Seq[Seq[Long]])]): Dataset[(Long, Seq[Seq[Long]])] = {
-    val withTs = ds
-      .map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
-      .withWatermark("_2", delay)
-    withTs.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-            state: GroupState[(Seq[(Long, Long, Long)], List[Run])]) =>
-          val wm = state.getCurrentWatermarkMs()
-          var (pending0, runs) = state.getOption
-            .getOrElse((Seq.empty[(Long, Long, Long)], List.empty[Run]))
-          val fresh = rows.map(r => (r._3, r._4, r._5)).filter(_._1 / 1000 > wm)
-          val (ready, pending) = (pending0 ++ fresh).partition(_._1 / 1000 <= wm)
-          val out = List.newBuilder[(Long, Seq[Seq[Long]])]
-          ready.sortBy(r => (r._1, r._3)).foreach { case (t, mask, tie) =>
-            val (nr, done) = offer(pattern, runs, t, mask, tie)
-            runs = nr
-            done.foreach(b => out += ((key, toStepTimes(pattern, b))))
-          }
-          // within-expired runs are dead even if no further event arrives
-          // for this key: prune against the watermark so a silent key's
-          // state can be dropped (Flink CEP's cleanup timers; t is µs,
-          // watermark is ms)
-          if (pattern.within > 0)
-            runs = runs.filter(r => wm * 1000 - startT(r) <= pattern.within)
-          if (pending.isEmpty && runs.isEmpty) state.remove()
-          else {
-            state.update((pending, runs))
-            // wake at the earliest pending row's release time AND — when a
-            // within horizon exists — at the surviving runs' expiry, so
-            // cleanup fires without waiting for another event on this key
-            val dataT = pending.map(_._1 / 1000).minOption
-            val cleanT = if (pattern.within > 0 && runs.nonEmpty)
-              Some(runs.map(startT).min / 1000 + pattern.within / 1000 + 1)
-            else None
-            (dataT.toList ++ cleanT.toList).minOption
-              .foreach(t0 => state.setTimeoutTimestamp(math.max(t0, wm + 1)))
-          }
-          out.result().iterator
-      }
-  }
-
-  /** Streaming counterpart of `matchBatchWithTimeouts`: same contract as
-    * `matchStream` but the output carries a `timed_out` flag — false =
-    * complete match, true = partial whose within horizon expired. The
-    * expiry clock is the WATERMARK (timeout rows fire on the cleanup
-    * timer even if the key never sees another event), so a partial times
-    * out exactly once, when no in-flight event can still complete it. */
-  def matchStreamWithTimeouts(ds: Dataset[(Long, Long, Long, Long)],
-      pattern: Pattern, delay: String = "0 seconds")(
-      implicit ek: Encoder[Long],
-      ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
-      es: Encoder[(Seq[(Long, Long, Long)], List[Run])],
-      eo: Encoder[(Long, Boolean, Seq[Seq[Long]])]): Dataset[(Long, Boolean, Seq[Seq[Long]])] = {
-    require(pattern.within > 0, "the timeout surface needs a within horizon")
-    val withTs = ds
-      .map(r => (r._1, new java.sql.Timestamp(r._2 / 1000), r._2, r._3, r._4))
-      .withWatermark("_2", delay)
-    withTs.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-            state: GroupState[(Seq[(Long, Long, Long)], List[Run])]) =>
-          val wm = state.getCurrentWatermarkMs()
-          var (pending0, runs) = state.getOption
-            .getOrElse((Seq.empty[(Long, Long, Long)], List.empty[Run]))
-          val fresh = rows.map(r => (r._3, r._4, r._5)).filter(_._1 / 1000 > wm)
-          val (ready, pending) = (pending0 ++ fresh).partition(_._1 / 1000 <= wm)
-          val out = List.newBuilder[(Long, Boolean, Seq[Seq[Long]])]
-          ready.sortBy(r => (r._1, r._3)).foreach { case (t, mask, tie) =>
-            val (nr, done, timedOut) = offerT(pattern, runs, t, mask, tie)
-            runs = nr
-            timedOut.foreach(b => out += ((key, true, toStepTimes(pattern, b))))
-            done.foreach(b => out += ((key, false, toStepTimes(pattern, b))))
-          }
-          // watermark-driven expiry for runs no event overtook (silent
-          // key): emit as timed out, then drop — fires via the cleanup
-          // timer below, so emission does not wait for the key's traffic
-          val (dead, live) =
-            runs.partition(r => wm * 1000 - startT(r) > pattern.within)
-          dead.filter(_.bound.nonEmpty).map(_.bound.toList).distinct
-            .foreach(b => out += ((key, true, toStepTimes(pattern, b))))
-          runs = live
-          if (pending.isEmpty && runs.isEmpty) state.remove()
-          else {
-            state.update((pending, runs))
-            val dataT = pending.map(_._1 / 1000).minOption
-            val cleanT = if (runs.nonEmpty)
-              Some(runs.map(startT).min / 1000 + pattern.within / 1000 + 1)
-            else None
-            (dataT.toList ++ cleanT.toList).minOption
-              .foreach(t0 => state.setTimeoutTimestamp(math.max(t0, wm + 1)))
-          }
-          out.result().iterator
-      }
   }
 
   // ---- round-1 linear surface, now running on the full NFA ----
@@ -687,7 +470,8 @@ object Cep {
   def detectBatch(
       spark: SparkSession, events: DataFrame,
       nSteps: Int, within: Long): DataFrame = {
-    matchBatch(spark, stepToMask(events), Pattern.linear(nSteps, within))
+    AltCep.matchBatch(spark, stepToMask(events),
+        AltCep.compile(Pattern.linear(nSteps, within)))
       .select(col("key"), flatten(col("step_times")).as("step_times"))
   }
 }

@@ -1,8 +1,5 @@
 package graft.cep
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** GROUP patterns — quantifiers over a SUB-PATTERN (flink-cep
   * pattern/GroupPattern.java: `Pattern.begin(subPattern).times(n)`,
   * `.oneOrMore()`, `.optional()`), the round-3 Pattern-API parity gap.
@@ -21,16 +18,18 @@ import org.apache.spark.sql.functions._
   *  - `optional`: times(0,1).
   *
   * Events carry masks over LOGICAL steps (bit i = satisfies the i-th
-  * inner step across all segments); `expandMask` replicates bits to the
-  * expanded copies and `foldStepTimes` merges copy bindings back, so
+  * leaf of the tree); `expandMask` replicates bits to the expanded copies
+  * and the matcher ([[AltCep.CompiledAlt]], which `AltCep.compile` builds
+  * from a tree) folds every bound event back onto its logical step, so
   * callers never see the expansion. Inner steps may themselves carry
   * quantifiers (`begin(A.times(2) B).oneOrMore` works), and groups NEST
   * arbitrarily (`begin(begin(A).times(2).next(B)).oneOrMore()` —
   * GroupPattern composition): nesting compiles recursively, with
   * multi-target ε-skips where an inner optional group head coincides
-  * with an outer optional copy head. SkipToFirst/SkipToLast with groups
-  * remain out of scope (step identity is ambiguous across copies); the
-  * other after-match strategies compose with nesting.
+  * with an outer optional copy head. All five after-match strategies
+  * compose with nesting; SKIP TO FIRST/LAST resolve their logical
+  * variable through the fold (`Pattern.stepClass`), so every expanded
+  * copy counts toward the boundary.
   */
 object GroupCep {
   import Cep._
@@ -76,90 +75,27 @@ object GroupCep {
     def oneOrMore(nodes: PatNode*): Group = Group(nodes.toIndexedSeq, 1, -1)
   }
 
-  /** One pattern segment: `steps` is the sub-pattern, repeated between
-    * `min` and `max` times as a whole; max = -1 means unbounded
-    * (oneOrMore). A plain step is a 1-step segment with min=max=1.
-    * (The flat, pre-nesting surface — sugar over a one-level [[Group]].) */
-  final case class Seg(steps: IndexedSeq[StepDef], min: Int = 1, max: Int = 1) {
-    require(steps.nonEmpty, "a segment needs at least one step")
-    require(min >= 0, "min repetitions must be >= 0")
-    require(max == -1 || max >= math.max(min, 1),
-      "max repetitions must be -1 (unbounded) or >= max(min, 1)")
-    require(max != -1 || min == 1, "unbounded groups are oneOrMore: min must be 1")
-    def toNode: PatNode = Group(steps.map(Leaf(_)), min, max)
-  }
-  object Seg {
-    def step(s: StepDef = StepDef()): Seg = Seg(IndexedSeq(s))
-    def times(n: Int, steps: StepDef*): Seg = Seg(steps.toIndexedSeq, n, n)
-    def timesRange(m: Int, n: Int, steps: StepDef*): Seg = Seg(steps.toIndexedSeq, m, n)
-    def optional(steps: StepDef*): Seg = Seg(steps.toIndexedSeq, 0, 1)
-    def oneOrMore(steps: StepDef*): Seg = Seg(steps.toIndexedSeq, 1, -1)
-  }
-
-  /** Compiled group pattern: the expanded linear NFA pattern, plus the
+  /** One compiled variant: the expanded linear NFA pattern, plus the
     * expanded-step -> logical-step fold map. */
   final case class Compiled(pattern: Pattern, fold: IndexedSeq[Int], nLogical: Int) {
 
+    /** No expansion: expanded step j is logical step j. The event mask
+      * then passes through untouched, so until() stop bits above the
+      * step bits survive. */
+    val identity: Boolean = fold == (0 until nLogical)
+
     /** Replicate a logical-step bitmask onto the expanded steps. */
-    def expandMask(logical: Long): Long = {
-      var m = 0L
-      var j = 0
-      while (j < fold.length) {
-        if ((logical >>> fold(j) & 1L) == 1L) m |= 1L << j
-        j += 1
-      }
-      m
-    }
-
-    /** Column form of `expandMask` — stays in codegen. */
-    def expandMaskCol(mask: Column): Column =
-      fold.zipWithIndex.map { case (li, j) =>
-        when(shiftright(mask, li).bitwiseAND(lit(1L)) === lit(1L), lit(1L << j))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-
-    /** Merge expanded per-step time arrays back to logical steps. */
-    def foldStepTimes(st: Seq[Seq[Long]]): Seq[Seq[Long]] =
-      (0 until nLogical).map { i =>
-        fold.zipWithIndex.collect { case (li, j) if li == i => st(j) }
-          .flatten.sorted
-      }
-
-    /** Column form of `foldStepTimes`. */
-    def foldStepTimesCol(st: Column): Column =
-      array((0 until nLogical).map { i =>
-        val parts = fold.zipWithIndex.collect {
-          case (li, j) if li == i => st.getItem(j)
+    def expandMask(logical: Long): Long =
+      if (identity) logical
+      else {
+        var m = 0L
+        var j = 0
+        while (j < fold.length) {
+          if ((logical >>> fold(j) & 1L) == 1L) m |= 1L << j
+          j += 1
         }
-        sort_array(flatten(array(parts: _*)))
-      }: _*)
-  }
-
-  def compile(segs: Seq[Seg], within: Long = 0L,
-      after: AfterMatch = AfterMatch.SkipPastLast,
-      maxRuns: Int = 64): Compiled =
-    compileNodes(segs.map(_.toNode), within, after, maxRuns)
-
-  /** Recursive compiler for (possibly nested) group patterns. Expansion
-    * rules per node:
-    *  - Leaf: one NFA step, one logical step;
-    *  - Group times(m,n): the body is inline-expanded n times; each copy
-    *    beyond the first m gets an ε-skip from its head past ALL
-    *    remaining copies (all-or-nothing, canonical-prefix counts);
-    *  - Group oneOrMore: one body copy + a loop-back cycle from the last
-    *    expanded step to the copy head.
-    * Nested optional groups can make one position open several optional
-    * spans — the multi-target skip map + `place` recursion compose them.
-    * Copies of the same body share logical step indices, so masks and
-    * fold maps are nesting-oblivious. */
-  def compileNodes(nodes: Seq[PatNode], within: Long = 0L,
-      after: AfterMatch = AfterMatch.SkipPastLast,
-      maxRuns: Int = 64): Compiled = {
-    var logical = 0
-    val based = nodes.map { n =>
-      val b = logical; logical += leafCountOf(n); (n, b)
-    }
-    compileWithBases(based, logical, within, after, maxRuns)
+        m
+      }
   }
 
   /** Logical (pre-expansion) leaf count of a node; Alt branches all
@@ -172,11 +108,21 @@ object GroupCep {
     case Group(ch, _, _) => ch.map(leafCountOf).sum
   }
 
-  /** `compileNodes` with EXPLICIT logical bases per node and an explicit
-    * logical-step count — the entry AltCep's variant enumeration uses so
-    * every alternation-free variant folds onto the SAME logical ids as
-    * the original (alternation-bearing) tree, variables in unchosen
-    * branches simply binding nothing. */
+  /** Compile one alternation-free variant with EXPLICIT logical bases per
+    * node and an explicit logical-step count — the entry AltCep's variant
+    * enumeration uses so every variant folds onto the SAME logical ids as
+    * the original (possibly alternation-bearing) tree, variables in
+    * unchosen branches simply binding nothing. Expansion rules per node:
+    *  - Leaf: one NFA step, one logical step;
+    *  - Group times(m,n): the body is inline-expanded n times; each copy
+    *    beyond the first m gets an ε-skip from its head past ALL
+    *    remaining copies (all-or-nothing, canonical-prefix counts);
+    *  - Group oneOrMore: one body copy + a loop-back cycle from the last
+    *    expanded step to the copy head.
+    * Nested optional groups can make one position open several optional
+    * spans — the multi-target skip map + `place` recursion compose them.
+    * Copies of the same body share logical step indices, so masks and
+    * fold maps are nesting-oblivious. */
   def compileWithBases(based: Seq[(PatNode, Int)], nLogical: Int,
       within: Long = 0L, after: AfterMatch = AfterMatch.SkipPastLast,
       maxRuns: Int = 64): Compiled = {
@@ -260,39 +206,4 @@ object GroupCep {
         stepClass = fold.toIndexedSeq),
       fold.toIndexedSeq, nLogical)
   }
-
-  /** Drive the compiled matcher over one key's time-ordered
-    * (t, logicalMask) events — the spec surface, mirroring Cep.run. */
-  private[graft] def run(c: Compiled, events: Seq[(Long, Long)]): List[Seq[Seq[Long]]] = {
-    var runs: List[Run] = Nil
-    val out = List.newBuilder[Seq[Seq[Long]]]
-    events.foreach { case (t, mask) =>
-      val (nr, done) = Cep.offer(c.pattern, runs, t, c.expandMask(mask))
-      runs = nr
-      done.foreach(b => out += c.foldStepTimes(Cep.toStepTimes(c.pattern, b)))
-    }
-    out.result()
-  }
-
-  /** Batch executor: same (key, t, mask, tie) contract as Cep.matchBatch
-    * with LOGICAL masks; mask expansion and step-time folding happen in
-    * column expressions around the shared secondary-sort pass. */
-  def matchBatch(spark: SparkSession, events: DataFrame, c: Compiled): DataFrame =
-    Cep.matchBatch(spark,
-        events.withColumn("mask", c.expandMaskCol(col("mask").cast("long"))),
-        c.pattern)
-      .select(col("key"), c.foldStepTimesCol(col("step_times")).as("step_times"))
-
-  /** Streaming executor: Cep.matchStream on the expanded pattern, logical
-    * masks expanded on the way in, step times folded on the way out. */
-  def matchStream(ds: Dataset[(Long, Long, Long, Long)], c: Compiled,
-      delay: String = "0 seconds")(
-      implicit ek: Encoder[Long],
-      em: Encoder[(Long, Long, Long, Long)],
-      ets: Encoder[(Long, java.sql.Timestamp, Long, Long, Long)],
-      es: Encoder[(Seq[(Long, Long, Long)], List[Run])],
-      eo: Encoder[(Long, Seq[Seq[Long]])]): Dataset[(Long, Seq[Seq[Long]])] =
-    Cep.matchStream(ds.map(r => (r._1, r._2, c.expandMask(r._3), r._4)),
-        c.pattern, delay)
-      .map { case (k, st) => (k, c.foldStepTimes(st)) }
 }

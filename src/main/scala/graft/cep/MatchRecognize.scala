@@ -1,15 +1,18 @@
 package graft.cep
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.SqlSplit
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MATCH_RECOGNIZE SQL-text bridge over the NFA (the role of
   * flink-table-planner's StreamExecMatch + MatchRecognize validation:
   * SQL clause -> compiled pattern + predicate columns -> CEP operator).
   * Spark's parser has no MATCH_RECOGNIZE production, so the clause is
-  * parsed here and lowered onto Cep.matchBatch; DEFINE predicates become
-  * Catalyst boolean expressions evaluated in codegen, composed into the
-  * per-event step bitmask the matcher consumes.
+  * parsed here — every PATTERN by one recursive-descent parser into a
+  * pattern tree — and compiled to the one matcher
+  * ([[AltCep.CompiledAlt]]); DEFINE predicates become Catalyst boolean
+  * expressions evaluated in codegen, composed into the per-event bitmask
+  * over the pattern's LOGICAL variables that the matcher consumes.
   *
   * Supported grammar (one clause per line or ';'-free single string):
   *   PARTITION BY <col>
@@ -23,8 +26,8 @@ import org.apache.spark.sql.functions._
   *                                           -- +? reluctant -> relaxed loop
   *           | ( (NAME ...)[+|?|{n}|{m,n}] ) -- GROUP term: the quantifier
   *                                           -- applies to the sub-pattern
-  *                                           -- (GroupPattern.java; runs on
-  *                                           -- the GroupCep expansion)
+  *                                           -- (GroupPattern.java; groups
+  *                                           -- nest, GroupCep expansion)
   *           | ( A B | C )                   -- ALTERNATION (SQL:2016; beyond
   *                                           -- Flink 1.16's grammar) — also
   *                                           -- quantified: (A | B){m,n}
@@ -40,8 +43,8 @@ import org.apache.spark.sql.functions._
   * lists and function calls (coalesce(x,0)) parse correctly.
   *
   * Output of `run`: (key, step_times array<array<long>>) — one row per
-  * match, inner arrays indexed by pattern step, same contract as
-  * Cep.matchBatch. Output of `runMeasures`: one row per match with the
+  * match, inner arrays indexed by pattern variable occurrence (logical
+  * step), same contract as AltCep.matchBatch. Output of `runMeasures`: one row per match with the
   * partition key, match_no, and one column per measure alias
   * (ONE ROW PER MATCH shape, StreamExecMatch MEASURES evaluation).
   */
@@ -49,15 +52,14 @@ object MatchRecognize {
 
   final case class Measure(fn: String, variable: String, column: String, alias: String)
 
-  /** `groups` marks GROUP-quantified spans of the logical step list:
-    * (startStep, endStepExclusive, minReps, maxReps; max = -1 unbounded) —
-    * produced by parenthesized PATTERN terms like ((A B)+ C), executed
-    * through GroupCep. Empty = plain linear pattern (the common case,
-    * runs on the direct Cep path). */
+  /** `tree` is the parsed PATTERN; `steps` lists its LEAVES in
+    * logical-id (DFS) order — a variable name may label several leaves
+    * (one per alternation branch it appears in). */
   final case class Clause(
       partitionBy: String,
       orderBy: String,
       tieBy: Option[String],
+      tree: Seq[GroupCep.PatNode],
       steps: Seq[(String, Cep.StepDef)],
       within: Long,
       after: Cep.AfterMatch,
@@ -66,14 +68,7 @@ object MatchRecognize {
       /** SUBSET union variables: name -> member pattern variables. Usable
         * in MEASURES (a union variable measures over every member's bound
         * events); not referenceable from DEFINE. */
-      subsets: Map[String, Seq[String]] = Map.empty,
-      groups: Seq[(Int, Int, Int, Int)] = Nil,
-      /** Set when the PATTERN uses alternation (`A | B`) or
-        * `PERMUTE(...)`: the full pattern tree, executed through
-        * AltCep's variant enumeration. `steps` then lists the LEAVES in
-        * logical-id (DFS) order; a variable name may label several
-        * leaves (one per alternation branch it appears in). */
-      tree: Option[Seq[GroupCep.PatNode]] = None) {
+      subsets: Map[String, Seq[String]] = Map.empty) {
     /** name -> every logical leaf id it labels (names repeat across
       * alternation branches; elsewhere the list is a singleton). */
     lazy val nameIds: Map[String, Seq[Int]] =
@@ -108,11 +103,6 @@ object MatchRecognize {
     """(?is)(FIRST|LAST|MIN|MAX|SUM|COUNT|AVG)\s*\(\s*(\w+)\.(\w+|\*)\s*\)\s+AS\s+(\w+)""".r
   private val MeasureBareRe = """(?is)(\w+)\.(\w+)\s+AS\s+(\w+)""".r
 
-  /** Split on commas at paren depth 0 only, so IN (1,2) and
-    * coalesce(x,0) survive inside DEFINE/MEASURES entries. */
-  private def splitTopLevel(s: String): Seq[String] =
-    graft.util.SqlSplit.splitTopLevel(s)
-
   private def stepOf(quantTok: Option[String]): Cep.StepDef = quantTok match {
     case None => Cep.StepDef()
     case Some("?") => Cep.StepDef(Cep.Quant.Opt)
@@ -131,74 +121,8 @@ object MatchRecognize {
 
   private val GroupQuantRe = """\s*(\+\?|\+|\?|\{\d+(?:,\d+)?\})""".r
 
-  /** Tokenize a PATTERN body into logical steps + group spans. Terms are
-    * NAME[quant] or a parenthesized sub-pattern with a group quantifier:
-    * ((A B)+ C), ((A B){2} C), ((A B)? C) — the SQL-standard row-pattern
-    * grouping that Flink runs through GroupPattern. An unquantified
-    * paren term is plain grouping and inlines. Nested groups are not
-    * supported (same scope note as GroupCep). */
-  private def parsePattern(body: String)
-      : (Seq[(String, Cep.StepDef)], Seq[(Int, Int, Int, Int)]) = {
-    val steps = Seq.newBuilder[(String, Cep.StepDef)]
-    var groups = Vector.empty[(Int, Int, Int, Int)]
-    var logical = 0
-    var i = 0
-    while (i < body.length) {
-      val ch = body(i)
-      if (ch.isWhitespace) i += 1
-      else if (ch == '(') {
-        var depth = 1
-        var j = i + 1
-        while (j < body.length && depth > 0) {
-          if (body(j) == '(') depth += 1
-          else if (body(j) == ')') depth -= 1
-          j += 1
-        }
-        require(depth == 0, s"PATTERN: unbalanced parentheses in '$body'")
-        val (innerSteps, innerGroups) = parsePattern(body.substring(i + 1, j - 1))
-        require(innerGroups.isEmpty, "PATTERN: nested group quantifiers are not supported")
-        require(innerSteps.nonEmpty, "PATTERN: empty group")
-        val (mn, mx, consumed) =
-          GroupQuantRe.findPrefixMatchOf(body.substring(j)) match {
-            case Some(m) => m.group(1) match {
-              case "+" | "+?" => (1, -1, m.end)
-              case "?" => (0, 1, m.end)
-              case t => t.stripPrefix("{").stripSuffix("}").split(",") match {
-                case Array(n) => (n.trim.toInt, n.trim.toInt, m.end)
-                case Array(a, b) => (a.trim.toInt, b.trim.toInt, m.end)
-                case _ => throw new IllegalArgumentException(s"bad quantifier $t")
-              }
-            }
-            case None => (1, 1, 0)
-          }
-        if (!(mn == 1 && mx == 1))
-          groups :+= ((logical, logical + innerSteps.size, mn, mx))
-        innerSteps.foreach(steps += _)
-        logical += innerSteps.size
-        i = j + consumed
-      } else {
-        StepTok.findPrefixMatchOf(body.substring(i)) match {
-          case Some(m) =>
-            steps += (m.group(1) -> stepOf(Option(m.group(2))))
-            logical += 1
-            i += m.end
-          case None => throw new IllegalArgumentException(
-            s"PATTERN: cannot parse at '${body.substring(i)}'")
-        }
-      }
-    }
-    (steps.result(), groups)
-  }
-
-  /** Does a PATTERN body need the tree parser? Alternation bars and
-    * PERMUTE only — plain/grouped patterns keep the battle-tested flat
-    * path. */
-  private def needsTree(body: String): Boolean =
-    body.contains("|") ||
-      """(?i)\bPERMUTE\s*\(""".r.findFirstIn(body).isDefined
-
-  /** Recursive-descent parser for the SQL:2016 row-pattern grammar with
-    * alternation and PERMUTE:
+  /** The PATTERN parser: recursive descent over the SQL:2016 row-pattern
+    * grammar, groups nesting to any depth:
     *
     *   alt  := seq ('|' seq)*
     *   seq  := term+
@@ -307,27 +231,9 @@ object MatchRecognize {
     (tree, names.result())
   }
 
-  /** Compile a tree clause onto the AltCep variant enumeration. */
-  private def compiledAlt(c: Clause): AltCep.CompiledAlt =
-    AltCep.compile(c.tree.get, within = c.within, after = c.after)
-
-  /** Compile a clause with group spans onto the GroupCep expansion. */
-  private def compiledGroups(c: Clause): GroupCep.Compiled = {
-    val byStart = c.groups.map(g => g._1 -> g).toMap
-    val segs = Seq.newBuilder[GroupCep.Seg]
-    var i = 0
-    while (i < c.steps.size) {
-      byStart.get(i) match {
-        case Some((s, e, mn, mx)) =>
-          segs += GroupCep.Seg(c.steps.slice(s, e).map(_._2).toIndexedSeq, mn, mx)
-          i = e
-        case None =>
-          segs += GroupCep.Seg(IndexedSeq(c.steps(i)._2))
-          i += 1
-      }
-    }
-    GroupCep.compile(segs.result(), within = c.within, after = c.after)
-  }
+  /** The clause's compiled matcher. */
+  private def matcher(c: Clause): AltCep.CompiledAlt =
+    AltCep.compile(c.tree, within = c.within, after = c.after)
 
   def parse(clause: String): Clause = {
     val partition = clause match {
@@ -340,17 +246,8 @@ object MatchRecognize {
     }
     val pStart = PatternStartRe.findFirstMatchIn(clause).getOrElse(
       throw new IllegalArgumentException("MATCH_RECOGNIZE: missing PATTERN"))
-    val pEnd = closeParen(clause, pStart.end)
-    val patternBody = clause.substring(pStart.end, pEnd - 1).trim
-    val (steps, groups, treeOpt) =
-      if (needsTree(patternBody)) {
-        val (tree, leaves) = parsePatternTree(patternBody)
-        (leaves, Nil, Some(tree))
-      } else {
-        val (s, g) = parsePattern(patternBody)
-        (s, g, None)
-      }
-    require(steps.nonEmpty, "MATCH_RECOGNIZE: empty PATTERN")
+    val pClose = SqlSplit.matchParenOrFail(clause, pStart.end - 1)
+    val (tree, steps) = parsePatternTree(clause.substring(pStart.end, pClose).trim)
     val within = clause match {
       case WithinRe(ms) => ms.toLong
       case _ => 0L
@@ -375,7 +272,7 @@ object MatchRecognize {
     }
     val defines = clause match {
       case DefineRe(body) =>
-        splitTopLevel(body).map { d =>
+        SqlSplit.splitTopLevel(body).map { d =>
           val parts = d.split("(?i)\\s+AS\\s+", 2)
           require(parts.length == 2 && """\w+""".r.matches(parts(0).trim),
             s"bad DEFINE entry (need NAME AS <expr>): $d")
@@ -387,7 +284,7 @@ object MatchRecognize {
       s"MATCH_RECOGNIZE: every pattern variable needs a DEFINE; missing " +
         steps.map(_._1).filterNot(defines.contains).mkString(","))
     val measures = clause match {
-      case MeasuresRe(body) => splitTopLevel(body).map {
+      case MeasuresRe(body) => SqlSplit.splitTopLevel(body).map {
         case MeasureFnRe(fn, v, c, alias) =>
           require(fn.equalsIgnoreCase("COUNT") || c != "*",
             s"MATCH_RECOGNIZE: $fn(V.*) — only COUNT accepts *")
@@ -400,7 +297,7 @@ object MatchRecognize {
     }
     val subsets: Map[String, Seq[String]] = clause match {
       case SubsetRe(body) =>
-        splitTopLevel(body).map {
+        SqlSplit.splitTopLevel(body).map {
           case SubsetEntryRe(name, members) =>
             require(!stepIdx.contains(name),
               s"MATCH_RECOGNIZE: SUBSET name $name collides with a pattern variable")
@@ -417,32 +314,27 @@ object MatchRecognize {
       require(stepIdx.contains(m.variable) || subsets.contains(m.variable),
         s"MATCH_RECOGNIZE: unknown pattern variable ${m.variable} in MEASURES")
     }
-    Clause(partition, order, tie, steps, within, after, defines, measures,
-      subsets, groups, treeOpt)
+    Clause(partition, order, tie, tree, steps, within, after, defines, measures,
+      subsets)
   }
 
-  /** Lower a parsed clause onto (tagged events, compiled pattern). */
-  private def lower(df: DataFrame, c: Clause): (DataFrame, Cep.Pattern) = {
+  /** Lower a parsed clause onto the matcher's (key, t, mask, tie) events;
+    * mask bit i = the DEFINE of logical step i holds. */
+  private def lower(df: DataFrame, c: Clause): DataFrame = {
     val mask = c.steps.zipWithIndex.map { case ((name, _), i) =>
       s"IF(${c.defines(name)}, ${1L << i}L, 0L)"
     }.mkString(" + ")
-    val events = df.select(
+    df.select(
       col(c.partitionBy).cast("long").as("key"),
       col(c.orderBy).cast("long").as("t"),
       expr(mask).as("mask"),
       c.tieBy.map(col(_).cast("long")).getOrElse(monotonically_increasing_id()).as("tie"))
-    val pattern = Cep.Pattern(
-      c.steps.map(_._2).toIndexedSeq, within = c.within, after = c.after)
-    (events, pattern)
   }
 
   /** Compile and run the clause against a batch DataFrame. */
   def run(spark: SparkSession, df: DataFrame, clause: String): DataFrame = {
     val c = parse(clause)
-    val (events, pattern) = lower(df, c)
-    if (c.tree.isDefined) AltCep.matchBatch(spark, events, compiledAlt(c))
-    else if (c.groups.isEmpty) Cep.matchBatch(spark, events, pattern)
-    else GroupCep.matchBatch(spark, events, compiledGroups(c))
+    AltCep.matchBatch(spark, lower(df, c), matcher(c))
   }
 
   /** Compile and run a clause WITH MEASURES (ONE ROW PER MATCH): output is
@@ -450,7 +342,7 @@ object MatchRecognize {
     *
     * Evaluation (StreamExecMatch MEASURES role, kept fully relational so
     * it scales like any join+agg): the NFA emits each match's bound
-    * events as (step, t, tie) triples (Cep.matchBatchBound); these
+    * events as (step, t, tie) triples (AltCep.matchBatchBound); these
     * explode, join back to the input rows on (key, t, tie) to recover
     * payload columns, and aggregate per (key, match_no):
     * FIRST/LAST = min/max by (t, tie) among the variable's bound rows,
@@ -461,34 +353,11 @@ object MatchRecognize {
     require(c.measures.nonEmpty, "MATCH_RECOGNIZE: runMeasures needs a MEASURES clause")
     require(c.tieBy.nonEmpty,
       "MATCH_RECOGNIZE: MEASURES requires ORDER BY <time>, <unique tie>")
-    val (events, pattern) = lower(df, c)
-    val stepIdx = c.steps.map(_._1).zipWithIndex.toMap
-
-    // group clauses run on the expanded pattern; measures then test step
-    // membership against the logical variable's SET of expanded copies.
-    // Tree (alternation/PERMUTE) clauses emit LOGICAL ids already — a
-    // variable's ids are its leaves across branches (c.idsOf).
-    val altOpt = c.tree.map(_ => compiledAlt(c))
-    val compOpt =
-      if (c.tree.isDefined || c.groups.isEmpty) None else Some(compiledGroups(c))
-    def inStepOf(i: Int): org.apache.spark.sql.Column =
-      if (altOpt.isDefined) {
-        val ids = c.idsOf(c.steps(i)._1).map(_.toLong)
-        col("__step").isin(ids: _*)
-      } else compOpt match {
-        case None => col("__step") === lit(i)
-        case Some(cp) =>
-          val ids = cp.fold.zipWithIndex.collect { case (li, j) if li == i => j.toLong }
-          col("__step").isin(ids: _*)
-      }
-    val bound = (altOpt match {
-      case Some(ca) => AltCep.matchBatchBound(spark, events, ca)
-      case None => compOpt match {
-        case None => Cep.matchBatchBound(spark, events, pattern)
-        case Some(cp) => Cep.matchBatchBound(spark,
-          events.withColumn("mask", cp.expandMaskCol(col("mask"))), cp.pattern)
-      }
-    })
+    // bound events carry LOGICAL ids: a variable's ids are its leaves
+    // across alternation branches
+    def inStepOf(name: String): org.apache.spark.sql.Column =
+      col("__step").isin(c.idsOf(name).map(_.toLong): _*)
+    val bound = AltCep.matchBatchBound(spark, lower(df, c), matcher(c))
       .select(col("key"), col("match_no"), explode(col("bound")).as("b"))
       .select(col("key"), col("match_no"),
         col("b._1").as("__step"), col("b._2").as("__t"), col("b._3").as("__tie"))
@@ -506,9 +375,10 @@ object MatchRecognize {
 
     val aggs = c.measures.map { m =>
       // a SUBSET (union) variable is the OR of its members' predicates
-      val inStep =
-        if (stepIdx.contains(m.variable)) inStepOf(stepIdx(m.variable))
-        else c.subsets(m.variable).map(v => inStepOf(stepIdx(v))).reduce(_ || _)
+      val inStep = c.subsets.get(m.variable) match {
+        case Some(members) => members.map(inStepOf).reduce(_ || _)
+        case None => inStepOf(m.variable)
+      }
       (m.fn match {
         case "COUNT" => count(when(inStep, lit(1)))
         case "AVG" => avg(when(inStep, col(m.column)))
@@ -558,28 +428,7 @@ object MatchRecognize {
     * stays a plain query. */
   def matchesSql(query: String): Boolean =
     """(?is).*\bMATCH_RECOGNIZE\s*\(.*""".r
-      .matches(graft.util.SqlSplit.blankLiterals(query))
-
-  /** Index just past the parenthesis that closes the MATCH_RECOGNIZE
-    * clause opened at `start` (start = index AFTER the open paren).
-    * Quote-aware: parens inside single-quoted literals don't count. */
-  private def closeParen(query: String, start: Int): Int = {
-    var depth = 1
-    var i = start
-    while (i < query.length && depth > 0) {
-      query(i) match {
-        case '\'' =>
-          i += 1
-          while (i < query.length && query(i) != '\'') i += 1
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    require(depth == 0, "MATCH_RECOGNIZE: unbalanced parentheses")
-    i
-  }
+      .matches(SqlSplit.blankLiterals(query))
 
   /** Execute a full MATCH_RECOGNIZE SQL statement against the session
     * catalog. The outer SELECT list projects the match output (measure
@@ -591,9 +440,9 @@ object MatchRecognize {
       throw new IllegalArgumentException(
         "MATCH_RECOGNIZE statement must be SELECT ... FROM <table> MATCH_RECOGNIZE (...)"))
     val (proj, table) = (head.group(1).trim, head.group(2))
-    val end = closeParen(query, head.end)
-    val clause = query.substring(head.end, end - 1)
-    var tail = query.substring(end).trim
+    val close = SqlSplit.matchParenOrFail(query, head.end - 1)
+    val clause = query.substring(head.end, close)
+    var tail = query.substring(close + 1).trim
     // optional [AS] alias on the MATCH_RECOGNIZE relation
     tail match {
       case MrTailAliasRe(word, rest)
@@ -625,7 +474,7 @@ object MatchRecognize {
     // for SELECT-list aliases.
     val filtered = whereOpt.map(matched.where).getOrElse(matched)
     val sortEntries = orderOpt.toSeq.flatMap(o =>
-      graft.util.SqlSplit.splitTopLevel(o).map(_.trim))
+      SqlSplit.splitTopLevel(o).map(_.trim))
     // expr("c DESC") parses as `c AS DESC` — peel the direction off and
     // apply it as .asc/.desc on the Column
     def sortCol(se: String): org.apache.spark.sql.Column = {
@@ -638,7 +487,7 @@ object MatchRecognize {
     }
     def doProject(df: org.apache.spark.sql.DataFrame) =
       if (proj == "*") df
-      else df.selectExpr(graft.util.SqlSplit.splitTopLevel(proj): _*)
+      else df.selectExpr(SqlSplit.splitTopLevel(proj): _*)
     if (sortEntries.isEmpty) doProject(filtered)
     else if (sortEntries.forall(se => filtered.columns.contains(se.split("""\s+""").head)))
       doProject(filtered.orderBy(sortEntries.map(sortCol): _*))
@@ -655,25 +504,9 @@ object MatchRecognize {
     val c = parse(clause)
     require(c.tieBy.nonEmpty,
       "MATCH_RECOGNIZE: ALL ROWS PER MATCH requires ORDER BY <time>, <unique tie>")
-    val (events, pattern) = lower(df, c)
-    // with groups the bound steps are EXPANDED indices: classify via the
-    // expanded->logical name table (copies share their variable's name);
-    // tree clauses emit LOGICAL ids, whose names are c.steps in order
-    val altOpt = c.tree.map(_ => compiledAlt(c))
-    val compOpt =
-      if (c.tree.isDefined || c.groups.isEmpty) None else Some(compiledGroups(c))
-    val names = compOpt.map(cp => cp.fold.map(li => c.steps(li)._1))
-      .getOrElse(c.steps.map(_._1))
-    val classifier = array(names.map(lit): _*)
-
-    val bound = (altOpt match {
-      case Some(ca) => AltCep.matchBatchBound(spark, events, ca)
-      case None => compOpt match {
-        case None => Cep.matchBatchBound(spark, events, pattern)
-        case Some(cp) => Cep.matchBatchBound(spark,
-          events.withColumn("mask", cp.expandMaskCol(col("mask"))), cp.pattern)
-      }
-    })
+    // bound events carry LOGICAL ids, whose names are c.steps in order
+    val classifier = array(c.steps.map(s => lit(s._1)): _*)
+    val bound = AltCep.matchBatchBound(spark, lower(df, c), matcher(c))
       .select(col("key"), col("match_no"), explode(col("bound")).as("b"))
       .select(col("key"), col("match_no"),
         element_at(classifier, col("b._1").cast("int") + 1).as("classifier"),
@@ -692,30 +525,14 @@ object MatchRecognize {
   }
 
   /** Compile and run the clause against a STREAMING DataFrame — the
-    * StreamExecMatch role: the same clause drives the stateful NFA
-    * executor (Cep.matchStream) over an append stream. */
+    * StreamExecMatch role: the same clause drives the matcher's streaming
+    * body (AltCep.matchStream) over an append stream. */
   def runStream(df: DataFrame, clause: String, delay: String = "0 seconds")
-      : org.apache.spark.sql.Dataset[(Long, Seq[Seq[Long]])] = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+      : Dataset[(Long, Seq[Seq[Long]])] = {
     val c = parse(clause)
-    val (events, pattern) = lower(df, c)
-    implicit val ek: org.apache.spark.sql.Encoder[Long] = ExpressionEncoder[Long]()
-    implicit val erow: org.apache.spark.sql.Encoder[(Long, Long, Long, Long)] =
-      ExpressionEncoder[(Long, Long, Long, Long)]()
-    implicit val ets: org.apache.spark.sql.Encoder[(Long, java.sql.Timestamp, Long, Long, Long)] =
-      ExpressionEncoder[(Long, java.sql.Timestamp, Long, Long, Long)]()
-    implicit val es: org.apache.spark.sql.Encoder[(Seq[(Long, Long, Long)], List[Cep.Run])] =
-      ExpressionEncoder[(Seq[(Long, Long, Long)], List[Cep.Run])]()
-    implicit val eo: org.apache.spark.sql.Encoder[(Long, Seq[Seq[Long]])] =
-      ExpressionEncoder[(Long, Seq[Seq[Long]])]()
-    if (c.tree.isDefined) {
-      implicit val esv: org.apache.spark.sql.Encoder[(Seq[(Long, Long, Long)], Seq[List[Cep.Run]], Seq[(Int, Seq[Cep.BoundEv])])] =
-        ExpressionEncoder[(Seq[(Long, Long, Long)], Seq[List[Cep.Run]], Seq[(Int, Seq[Cep.BoundEv])])]()
-      AltCep.matchStream(events.as[(Long, Long, Long, Long)], compiledAlt(c), delay)
-    } else if (c.groups.isEmpty)
-      Cep.matchStream(events.as[(Long, Long, Long, Long)], pattern, delay)
-    else
-      GroupCep.matchStream(events.as[(Long, Long, Long, Long)],
-        compiledGroups(c), delay)
+    AltCep.matchStream(
+      lower(df, c).as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.scalaLong, Encoders.scalaLong)),
+      matcher(c), delay)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Engine, GQuery, QueryModule, Tables}
-import graft.cep.Cep
+import graft.cep.{AltCep, Cep}
 import org.apache.spark.sql.functions._
 
 /** CEP / MATCH_RECOGNIZE queries, the SQL entry surface, and grouping-set
@@ -146,7 +146,7 @@ object AdvancedOps extends QueryModule {
           IndexedSeq(StepDef(), StepDef(Quant.OneOrMore), StepDef()),
           within = 604800L * 1000000L, after = AfterMatch.NoSkip,
           maxRuns = 8192)
-        Cep.matchBatch(s, ev, p)
+        AltCep.matchBatch(s, ev, AltCep.compile(p))
           .select($"key".as("user_id"),
             element_at(element_at($"step_times", 1), 1).as("s_us"),
             size(element_at($"step_times", 2)).cast("long").as("n_clicks"),
@@ -192,7 +192,7 @@ object AdvancedOps extends QueryModule {
           IndexedSeq(StepDef(), StepDef(negated = true), StepDef()),
           within = 604800L * 1000000L, after = AfterMatch.NoSkip,
           maxRuns = 8192)
-        Cep.matchBatch(s, ev, p)
+        AltCep.matchBatch(s, ev, AltCep.compile(p))
           .select($"key".as("user_id"),
             element_at(element_at($"step_times", 1), 1).as("s_us"),
             element_at(element_at($"step_times", 3), 1).as("p_us"))
@@ -234,7 +234,7 @@ object AdvancedOps extends QueryModule {
             StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef()),
           within = 604800L * 1000000L, after = AfterMatch.NoSkip,
           maxRuns = 8192)
-        Cep.matchBatch(s, ev, p)
+        AltCep.matchBatch(s, ev, AltCep.compile(p))
           .select($"key".as("user_id"),
             element_at(element_at($"step_times", 1), 1).as("s_us"),
             size(element_at($"step_times", 2)).cast("long").as("n_clicks"),

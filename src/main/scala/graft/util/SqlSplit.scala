@@ -130,6 +130,15 @@ object SqlSplit {
     if (ci < 0) -1 else toks(ci).start
   }
 
+  /** `matchParen` that fails loudly: the offset of the ')' matching the
+    * '(' at `open`, or an IllegalArgumentException naming the offset. */
+  def matchParenOrFail(s: String, open: Int): Int = {
+    val close = matchParen(s, open)
+    if (close < 0) throw new IllegalArgumentException(
+      s"unbalanced parentheses in SQL statement at offset $open")
+    close
+  }
+
   /** Top-level comma split — a TOKEN walk: commas inside parentheses,
     * string literals, backticked identifiers, comments, or (with
     * `angleTypes`) type-argument angle brackets never split. */

@@ -137,7 +137,10 @@ class AltCepSpec extends AnyFunSuite {
       (t, m(bits: _*))
     }
     val got = AltCep.run(c, events).toSet
-    val want = (GroupCep.run(vA, events) ++ GroupCep.run(vB, events)).toSet
+    // each variant alone, as a one-variant matcher
+    def alone(v: GroupCep.Compiled) =
+      AltCep.CompiledAlt(IndexedSeq(v), v.nLogical, v.pattern.after)
+    val want = (AltCep.run(alone(vA), events) ++ AltCep.run(alone(vB), events)).toSet
     assert(got == want)
   }
 
@@ -274,7 +277,7 @@ class AltCepSpec extends AnyFunSuite {
     val got = AltCep.matchBatchBound(spark,
         rows.toDF("key", "t", "mask", "tie"), c)
       .as[(Long, Long, Seq[(Int, Long, Long)])].collect().toSeq
-    // bound events are newest-first (Cep.matchBatchBound contract);
+    // bound events are newest-first (AltCep.matchBatchBound contract);
     // B@1 is logical step 1, A@2 logical step 0 — folded per ordering
     assert(got == Seq((1L, 1L, Seq((0, 2L, 2L), (1, 1L, 1L)))))
   }

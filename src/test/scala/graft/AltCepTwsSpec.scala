@@ -6,10 +6,11 @@ import graft.cep.GroupCep.{Alt, Leaf, Permute}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The LOCKSTEP alternation executor `AltCep.matchStream` on the RocksDB
-  * state store provider must emit EXACTLY what it emits on the default
-  * provider for the same script — the provider changes where the
-  * run lists and held matches are stored, never the matches. Scripts
+/** The one streaming body `AltCep.matchStream`, running alternation
+  * matchers in LOCKSTEP, on the RocksDB state store provider must emit
+  * EXACTLY what it emits on the default provider for the same script —
+  * the provider changes where the run lists and held matches are
+  * stored, never the matches. Scripts
   * cover alternation under both skip strategies, PERMUTE, held-match
   * expiry re-arbitration, and out-of-order release. (Test names keep
   * the "TWS" wording of the transformWithState port these scripts were

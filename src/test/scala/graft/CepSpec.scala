@@ -1,6 +1,6 @@
 package graft
 
-import graft.cep.Cep
+import graft.cep.{AltCep, Cep}
 import graft.cep.Cep.{AfterMatch, Pattern, Quant, Rep, StepDef}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,20 +13,20 @@ class CepSpec extends AnyFunSuite {
 
   test("linear A->B->C with relaxed contiguity") {
     val p = Pattern.linear(3, within = 100)
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> none, 3L -> m(1), 4L -> none, 5L -> m(2)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> none, 3L -> m(1), 4L -> none, 5L -> m(2)))
     assert(got == List(Seq(Seq(1L), Seq(3L), Seq(5L))))
   }
 
   test("AFTER MATCH SKIP PAST LAST ROW: no overlapping matches") {
     val p = Pattern.linear(3, within = 100)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(2), 4L -> m(0), 5L -> m(1), 6L -> m(2)))
     assert(got == List(Seq(Seq(1L), Seq(2L), Seq(3L)), Seq(Seq(4L), Seq(5L), Seq(6L))))
   }
 
   test("within horizon prunes stale partials") {
     val p = Pattern.linear(3, within = 100)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(0L -> m(0), 200L -> m(1), 210L -> m(0), 220L -> m(1), 230L -> m(2)))
     assert(got == List(Seq(Seq(210L), Seq(220L), Seq(230L))))
   }
@@ -35,13 +35,13 @@ class CepSpec extends AnyFunSuite {
     // ADVICE round-1 scenario: A@0, A@5, B@12 with within=10 — the A@0 run
     // expires at t=12 but A@5 must still complete (Flink NFA behavior).
     val p = Pattern.linear(2, within = 10)
-    val got = Cep.run(p, Seq(0L -> m(0), 5L -> m(0), 12L -> m(1)))
+    val got = AltCep.run(AltCep.compile(p), Seq(0L -> m(0), 5L -> m(0), 12L -> m(1)))
     assert(got == List(Seq(Seq(5L), Seq(12L))))
   }
 
   test("skip-past-last emits the earliest-started of simultaneous completions") {
     val p = Pattern.linear(3, within = 100)
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(0), 3L -> m(1), 4L -> m(2)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(0), 3L -> m(1), 4L -> m(2)))
     assert(got == List(Seq(Seq(1L), Seq(3L), Seq(4L))))
   }
 
@@ -49,7 +49,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.Times(2)), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(1), 4L -> m(1), 5L -> m(2)))
     // the seed consumes clicks 2,3 (first two); click 4 is ignored by the
     // already-full step (relaxed contiguity), completes at 5
@@ -60,10 +60,10 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(StepDef(), StepDef(strict = true)), within = 100,
       after = AfterMatch.NoSkip)
     // a then immediately b -> match
-    assert(Cep.run(p, Seq(1L -> m(0), 2L -> m(1))) ==
+    assert(AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(1))) ==
       List(Seq(Seq(1L), Seq(2L))))
     // a, noise, b -> the noise event kills the strict wait; later a b works
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> none, 3L -> m(1), 6L -> m(0), 7L -> m(1)))
     assert(got == List(Seq(Seq(6L), Seq(7L))))
   }
@@ -74,7 +74,7 @@ class CepSpec extends AnyFunSuite {
       within = 100, after = AfterMatch.NoSkip)
     // a b1 b2 noise b3 c: the loop ends at the noise; prefixes {b1},{b1,b2}
     // had already branched and complete at c — b3 never binds
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(1), 3L -> m(1),
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(1), 3L -> m(1),
       4L -> none, 5L -> m(1), 6L -> m(2)))
     assert(got.toSet == Set(
       Seq(Seq(1L), Seq(2L), Seq(6L)),
@@ -85,7 +85,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.TimesRange(2, 3)), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(1), 4L -> m(1), 5L -> m(1), 6L -> m(2)))
     // branches advance at counts 2 and 3; count 4 exceeds max (never binds)
     assert(got.toSet == Set(
@@ -97,7 +97,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(1), 4L -> m(2)))
     assert(got.toSet == Set(
       Seq(Seq(1L), Seq(2L), Seq(4L)),
@@ -111,7 +111,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(0), 3L -> m(0), 4L -> m(1)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(0), 3L -> m(0), 4L -> m(1)))
     assert(got.toSet == Set(
       Seq(Seq(1L, 2L, 3L), Seq(4L)),
       Seq(Seq(2L, 3L), Seq(4L)),
@@ -122,7 +122,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore, rep = Rep.Greedy), StepDef()),
       within = 100, after = AfterMatch.NoSkip)
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(1), 4L -> m(2)))
     assert(got == List(Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))
   }
@@ -135,7 +135,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore, rep = Rep.Subsets), StepDef()),
       within = 100, after = AfterMatch.NoSkip, maxRuns = 256)
-    val got = Cep.run(p, evs).toSet
+    val got = AltCep.run(AltCep.compile(p), evs).toSet
     val subsets = Seq(Seq(2L), Seq(3L), Seq(4L), Seq(2L, 3L), Seq(2L, 4L),
       Seq(3L, 4L), Seq(2L, 3L, 4L))
     assert(got == subsets.map(b => Seq(Seq(1L), b, Seq(5L))).toSet, s"got $got")
@@ -144,7 +144,7 @@ class CepSpec extends AnyFunSuite {
     // of consumption — {2,4} absent
     val pc = p.copy(steps = IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore, rep = Rep.Combinations), StepDef()))
-    val gotC = Cep.run(pc, evs).toSet
+    val gotC = AltCep.run(AltCep.compile(pc), evs).toSet
     assert(!gotC.contains(Seq(Seq(1L), Seq(2L, 4L), Seq(5L))))
     assert(gotC.contains(Seq(Seq(1L), Seq(2L, 3L, 4L), Seq(5L))))
   }
@@ -155,12 +155,12 @@ class CepSpec extends AnyFunSuite {
     val branching = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.TimesRange(1, 3)), StepDef()),
       within = 100, after = AfterMatch.NoSkip)
-    assert(Cep.run(branching, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(branching), evs).toSet == Set(
       Seq(Seq(1L), Seq(2L), Seq(4L)),       // count 1 (3 skipped, relaxed)
       Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))  // count 2
     val greedy = branching.copy(steps = IndexedSeq(
       StepDef(), StepDef(Quant.TimesRange(1, 3), rep = Rep.Greedy), StepDef()))
-    assert(Cep.run(greedy, evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))
+    assert(AltCep.run(AltCep.compile(greedy), evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))
   }
 
   test("greedy times(m,n) parked at max still advances on the next step") {
@@ -169,7 +169,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.TimesRange(1, 2), rep = Rep.Greedy), StepDef()),
       within = 100, after = AfterMatch.SkipPastLast)
-    assert(Cep.run(p, evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(5L))))
+    assert(AltCep.run(AltCep.compile(p), evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(5L))))
   }
 
   test("greedy optional binds an ambiguous event; default branches both") {
@@ -178,14 +178,14 @@ class CepSpec extends AnyFunSuite {
     val branching = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.Opt), StepDef()),
       within = 100, after = AfterMatch.NoSkip)
-    assert(Cep.run(branching, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(branching), evs).toSet == Set(
       Seq(Seq(1L), Seq(), Seq(2L)),        // 2 read as C (B absent)
       Seq(Seq(1L), Seq(2L), Seq(3L))))     // 2 read as B, C at 3
     val greedy = branching.copy(steps = IndexedSeq(
       StepDef(), StepDef(Quant.Opt, rep = Rep.Greedy), StepDef()))
     // the ambiguous event binds to B; the ε-sibling (B-absent reading)
     // is killed, so exactly ONE maximal match remains
-    assert(Cep.run(greedy, evs) == List(Seq(Seq(1L), Seq(2L), Seq(3L))))
+    assert(AltCep.run(AltCep.compile(greedy), evs) == List(Seq(Seq(1L), Seq(2L), Seq(3L))))
   }
 
   test("greedy optional still matches absent when the optional never fires") {
@@ -193,7 +193,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.Opt, rep = Rep.Greedy), StepDef()),
       within = 100, after = AfterMatch.NoSkip)
-    assert(Cep.run(p, evs) == List(Seq(Seq(1L), Seq(), Seq(2L))))
+    assert(AltCep.run(AltCep.compile(p), evs) == List(Seq(Seq(1L), Seq(), Seq(2L))))
   }
 
   test("ambiguous event: relaxed branches both readings, greedy consumes in-loop") {
@@ -202,12 +202,12 @@ class CepSpec extends AnyFunSuite {
     val relaxed = Pattern(IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef()),
       within = 100, after = AfterMatch.NoSkip)
-    assert(Cep.run(relaxed, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(relaxed), evs).toSet == Set(
       Seq(Seq(1L), Seq(2L), Seq(3L)),       // 3 read as C
       Seq(Seq(1L), Seq(2L, 3L), Seq(4L)))) // 3 read as B, C at 4
     val greedy = relaxed.copy(steps = IndexedSeq(
       StepDef(), StepDef(Quant.OneOrMore, rep = Rep.Greedy), StepDef()))
-    assert(Cep.run(greedy, evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))
+    assert(AltCep.run(AltCep.compile(greedy), evs) == List(Seq(Seq(1L), Seq(2L, 3L), Seq(4L))))
   }
 
   test("SKIP_TO_LAST / SKIP_TO_FIRST prune by the quantified step's boundary") {
@@ -215,12 +215,12 @@ class CepSpec extends AnyFunSuite {
     val base = IndexedSeq(StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef())
     val evs = Seq(1L -> m(0), 2L -> m(0), 3L -> m(0), 4L -> m(1))
     val toLast = Pattern(base, within = 100, after = AfterMatch.SkipToLast(0))
-    assert(Cep.run(toLast, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(toLast), evs).toSet == Set(
       Seq(Seq(1L, 2L, 3L), Seq(4L)),
       Seq(Seq(3L), Seq(4L))))
     // SKIP_TO_FIRST[a]: boundary is a1 -> nothing pruned, all three emit
     val toFirst = Pattern(base, within = 100, after = AfterMatch.SkipToFirst(0))
-    assert(Cep.run(toFirst, evs).size == 3)
+    assert(AltCep.run(AltCep.compile(toFirst), evs).size == 3)
   }
 
   test("optional middle step matches with and without the optional event") {
@@ -228,10 +228,10 @@ class CepSpec extends AnyFunSuite {
       StepDef(), StepDef(Quant.Opt), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
     // without the optional event
-    assert(Cep.run(p, Seq(1L -> m(0), 5L -> m(2))) ==
+    assert(AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 5L -> m(2))) ==
       List(Seq(Seq(1L), Seq(), Seq(5L))))
     // with it: BOTH the skipped and the taken path complete (NFA branches)
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(1), 3L -> m(2)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(1), 3L -> m(2)))
     assert(got.toSet == Set(
       Seq(Seq(1L), Seq(), Seq(3L)),
       Seq(Seq(1L), Seq(2L), Seq(3L))))
@@ -240,7 +240,7 @@ class CepSpec extends AnyFunSuite {
   test("trailing optional step: match emitted immediately, extended later") {
     val p = Pattern(IndexedSeq(StepDef(), StepDef(Quant.Opt)), within = 100,
       after = AfterMatch.NoSkip)
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(1)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(1)))
     assert(got.toSet == Set(Seq(Seq(1L), Seq()), Seq(Seq(1L), Seq(2L))))
   }
 
@@ -249,10 +249,10 @@ class CepSpec extends AnyFunSuite {
       StepDef(), StepDef(negated = true), StepDef()), within = 100,
       after = AfterMatch.NoSkip)
     // A then C with no B between -> match
-    assert(Cep.run(p, Seq(1L -> m(0), 5L -> m(2))) ==
+    assert(AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 5L -> m(2))) ==
       List(Seq(Seq(1L), Seq(), Seq(5L))))
     // A, B (guard!), C -> the A@1 run dies; A@6 C@7 still matches
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(1), 3L -> m(2), 6L -> m(0), 7L -> m(2)))
     assert(got == List(Seq(Seq(6L), Seq(), Seq(7L))))
   }
@@ -261,14 +261,14 @@ class CepSpec extends AnyFunSuite {
     val evs = Seq(1L -> m(0), 2L -> m(0), 3L -> m(1), 4L -> m(1))
     // pattern A -> B; runs: (1,_),(2,_); B@3 completes both (NoSkip)
     val noSkip = Pattern.linear(2, 100).copy(after = AfterMatch.NoSkip)
-    assert(Cep.run(noSkip, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(noSkip), evs).toSet == Set(
       Seq(Seq(1L), Seq(3L)), Seq(Seq(2L), Seq(3L))))
     // SkipPastLast: earliest only, all runs dropped -> B@4 matches nothing
     val spl = Pattern.linear(2, 100).copy(after = AfterMatch.SkipPastLast)
-    assert(Cep.run(spl, evs) == List(Seq(Seq(1L), Seq(3L))))
+    assert(AltCep.run(AltCep.compile(spl), evs) == List(Seq(Seq(1L), Seq(3L))))
     // SkipToNext: both completions emit (different start events)
     val stn = Pattern.linear(2, 100).copy(after = AfterMatch.SkipToNext)
-    assert(Cep.run(stn, evs).toSet == Set(
+    assert(AltCep.run(AltCep.compile(stn), evs).toSet == Set(
       Seq(Seq(1L), Seq(3L)), Seq(Seq(2L), Seq(3L))))
   }
 
@@ -276,7 +276,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern.linear(2, within = 0).copy(maxRuns = 2)
     val evs = (1L to 10L).map(t => t -> m(0)) :+ (20L -> m(1))
     // 10 seeds, capped at the 2 earliest; SkipPastLast emits the earliest
-    assert(Cep.run(p, evs) == List(Seq(Seq(1L), Seq(20L))))
+    assert(AltCep.run(AltCep.compile(p), evs) == List(Seq(Seq(1L), Seq(20L))))
   }
 
   test("matchBatch agrees with the in-memory matcher on a quantified pattern") {
@@ -287,9 +287,9 @@ class CepSpec extends AnyFunSuite {
     val evs = Seq( // key 1: a b b c ; key 2: a c (no b -> no match)
       (1L, 10L, m(0), 1L), (1L, 20L, m(1), 2L), (1L, 30L, m(1), 3L), (1L, 40L, m(2), 4L),
       (2L, 10L, m(0), 5L), (2L, 40L, m(2), 6L))
-    val got = Cep.matchBatch(spark, evs.toDF("key", "t", "mask", "tie"), p)
+    val got = AltCep.matchBatch(spark, evs.toDF("key", "t", "mask", "tie"), AltCep.compile(p))
       .as[(Long, Seq[Seq[Long]])].collect().toSet
-    val want = Cep.run(p, Seq(10L -> m(0), 20L -> m(1), 30L -> m(1), 40L -> m(2)))
+    val want = AltCep.run(AltCep.compile(p), Seq(10L -> m(0), 20L -> m(1), 30L -> m(1), 40L -> m(2)))
       .map(st => (1L, st)).toSet
     assert(got == want && want.size == 2)
   }
@@ -313,14 +313,14 @@ class CepSpec extends AnyFunSuite {
     val got = MatchRecognize.run(spark, ev, clause)
       .as[(Long, Seq[Seq[Long]])].collect().toSet
     // the same pattern through the direct API: + is greedy per SQL default
-    val direct = Cep.matchBatch(spark,
+    val direct = AltCep.matchBatch(spark,
       ev.select($"user_id".as("key"), $"ts_us".as("t"),
         expr("""CAST(CASE event_type WHEN 'signup' THEN 1 WHEN 'click' THEN 2
                 WHEN 'purchase' THEN 4 ELSE 0 END AS BIGINT)""").as("mask"),
         $"event_id".as("tie")),
-      Pattern(IndexedSeq(StepDef(),
+      AltCep.compile(Pattern(IndexedSeq(StepDef(),
         StepDef(Quant.OneOrMore, rep = Rep.Greedy), StepDef()),
-        within = 604800L * 1000000L, after = AfterMatch.SkipPastLast))
+        within = 604800L * 1000000L, after = AfterMatch.SkipPastLast)))
       .as[(Long, Seq[Seq[Long]])].collect().toSet
     assert(got.nonEmpty && got == direct)
   }
@@ -481,7 +481,7 @@ class CepSpec extends AnyFunSuite {
         $"tie")
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._2, r._4))
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = Cep.matchStream(in.toDS(), Pattern.linear(3, within), "10 seconds")
+    val out = AltCep.matchStream(in.toDS(), AltCep.compile(Pattern.linear(3, within)), "10 seconds")
     val q = out.toDF("key", "times").writeStream
       .outputMode("append").format("memory").queryName("cep_out").start()
     rows.grouped(math.max(1, rows.length / 3)).foreach { chunk =>
@@ -511,7 +511,7 @@ class CepSpec extends AnyFunSuite {
       (1L, us(40), 4L, 1L), // C@40  (batch 1)
       (1L, us(20), 2L, 2L)) // B@20  (batch 2, out of order)
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = Cep.matchStream(in.toDS(), p, "30 seconds")
+    val out = AltCep.matchStream(in.toDS(), AltCep.compile(p), "30 seconds")
     val q = out.toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName("cep_ooo").start()
     in.addData(all.take(2))
@@ -523,8 +523,8 @@ class CepSpec extends AnyFunSuite {
     q.stop()
     val streamRes = spark.table("cep_ooo")
       .as[(Long, Seq[Seq[Long]])].collect().toSet
-    val batchRes = Cep.matchBatch(spark,
-      all.toDF("key", "t", "mask", "tie"), p)
+    val batchRes = AltCep.matchBatch(spark,
+      all.toDF("key", "t", "mask", "tie"), AltCep.compile(p))
       .as[(Long, Seq[Seq[Long]])].collect().toSet
     assert(batchRes == Set((1L, Seq(Seq(us(10)), Seq(us(20)), Seq(us(40))))))
     assert(streamRes == batchRes)
@@ -536,7 +536,7 @@ class CepSpec extends AnyFunSuite {
     val p = Pattern.linear(2, 0L) // A -> B
     def us(sec: Long): Long = sec * 1000000L
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = Cep.matchStream(in.toDS(), p, "5 seconds")
+    val out = AltCep.matchStream(in.toDS(), AltCep.compile(p), "5 seconds")
     val q = out.toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName("cep_late").start()
     in.addData((1L, us(10), 1L, 0L), (1L, us(100), 0L, 1L)) // A@10; wm -> 95
@@ -560,7 +560,7 @@ class CepSpec extends AnyFunSuite {
       after = AfterMatch.NoSkip)
     // A1 A2 C A3 B: loop seals at C, so A3 is skipped (run survives,
     // relaxed contiguity) and B completes with exactly {A1, A2}.
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(0), 3L -> m(2), 4L -> m(0), 5L -> m(1)))
     // every A seeds its own run (multiple partial matches): seed@A1 binds
     // {A1,A2}, seed@A2 binds {A2} — both sealed at C, so neither binds A3;
@@ -571,7 +571,7 @@ class CepSpec extends AnyFunSuite {
     val p0 = Pattern(IndexedSeq(
       StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef()),
       after = AfterMatch.NoSkip)
-    val got0 = Cep.run(p0,
+    val got0 = AltCep.run(AltCep.compile(p0),
       Seq(1L -> m(0), 2L -> m(0), 3L -> m(2), 4L -> m(0), 5L -> m(1)))
     assert(got0.contains(Seq(Seq(1L, 2L, 4L), Seq(5L))))
   }
@@ -583,7 +583,7 @@ class CepSpec extends AnyFunSuite {
     // the stop event also matches B: it seals the loop AND completes the
     // match — the stop event binds to B, never to the loop (Flink
     // contract); both the A1- and A2-seeded runs complete this way
-    val got = Cep.run(p, Seq(1L -> m(0), 2L -> m(0), 3L -> m(1, 2)))
+    val got = AltCep.run(AltCep.compile(p), Seq(1L -> m(0), 2L -> m(0), 3L -> m(1, 2)))
     assert(got.toSet == Set(
       Seq(Seq(1L, 2L), Seq(3L)), Seq(Seq(2L), Seq(3L))))
   }
@@ -594,7 +594,7 @@ class CepSpec extends AnyFunSuite {
       after = AfterMatch.NoSkip)
     // A1 A2 C A3 B: prefix branches {A1} {A1 A2} {A2} advanced before C
     // survive; the parked loop runs die at C; A3 seeds a fresh open run.
-    val got = Cep.run(p,
+    val got = AltCep.run(AltCep.compile(p),
       Seq(1L -> m(0), 2L -> m(0), 3L -> m(2), 4L -> m(0), 5L -> m(1)))
     assert(got.toSet == Set(
       Seq(Seq(1L), Seq(5L)), Seq(Seq(1L, 2L), Seq(5L)),
@@ -611,7 +611,8 @@ class CepSpec extends AnyFunSuite {
       (1L, 0L, m(0), 1L), (1L, 20L, m(0), 2L), (1L, 25L, m(1), 3L),
       (2L, 5L, m(0), 4L))
       .toDF("key", "t", "mask", "tie")
-    val got = Cep.matchBatchWithTimeouts(spark, events, Pattern.linear(2, within = 10))
+    val got = AltCep.matchBatchWithTimeouts(spark, events,
+      AltCep.compile(Pattern.linear(2, within = 10)))
       .as[(Long, Boolean, Seq[Seq[Long]])].collect().toSet
     assert(got == Set(
       (1L, true, Seq(Seq(0L), Seq())),        // A@0 timed out, B never bound
@@ -624,8 +625,8 @@ class CepSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     def us(sec: Long): Long = sec * 1000000L
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = Cep.matchStreamWithTimeouts(in.toDS(),
-      Pattern.linear(2, within = us(10)), "0 seconds")
+    val out = AltCep.matchStreamWithTimeouts(in.toDS(),
+      AltCep.compile(Pattern.linear(2, within = us(10))), "0 seconds")
     val q = out.toDF("key", "timed_out", "times").writeStream
       .outputMode("append").format("memory").queryName("cep_to").start()
     // key 1: A@10, never paid. key 2: A@12 B@15 completes.

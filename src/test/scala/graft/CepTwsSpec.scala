@@ -1,18 +1,18 @@
 package graft
 
-import graft.cep.Cep
+import graft.cep.AltCep
 import graft.cep.Cep.{Pattern, Quant, StepDef}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Cep.matchStream` on the RocksDB state store provider must emit
+/** `AltCep.matchStream` on the RocksDB state store provider must emit
   * EXACTLY what it emits on the default provider for the same script —
   * the provider changes where the element queue / run list (the keyed
   * state of CepOperator.java:82) is stored, never the matches. Scripts
   * cover out-of-order release, late drops, quantifiers, and the
   * within-horizon pruning path. (Test names keep the "TWS" wording of
   * the transformWithState port these scripts were written for; that
-  * port is gone and `Cep.matchStream` is the one streaming body.) */
+  * port is gone and `AltCep.matchStream` is the one streaming body.) */
 class CepTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -27,7 +27,7 @@ class CepTwsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val out = Cep.matchStream(in.toDS(), pattern, delay)
+    val out = AltCep.matchStream(in.toDS(), AltCep.compile(pattern), delay)
     val q = out.toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -74,7 +74,7 @@ class CepTwsSpec extends AnyFunSuite {
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long)]
-      val out = Cep.matchStream(in.toDS(), p, "10 seconds")
+      val out = AltCep.matchStream(in.toDS(), AltCep.compile(p), "10 seconds")
       val q = out.toDF("key", "step_times").writeStream
         .outputMode("append").format("memory").queryName(sink).start()
       try {

@@ -1,8 +1,8 @@
 package graft
 
-import graft.cep.{Cep, GroupCep}
+import graft.cep.AltCep
 import graft.cep.Cep.{AfterMatch, Quant, StepDef}
-import graft.cep.GroupCep.Seg
+import graft.cep.GroupCep.{Group, Leaf, PatNode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,21 +15,31 @@ class GroupCepSpec extends AnyFunSuite {
 
   private def m(bits: Int*): Long = bits.foldLeft(0L)((a, b) => a | (1L << b))
 
+  /** Flat segment sugar: one step, or plain steps repeated as one group. */
+  private object Seg {
+    def step(s: StepDef = StepDef()): PatNode = Group(IndexedSeq(Leaf(s)))
+    def times(n: Int, steps: StepDef*): PatNode = timesRange(n, n, steps: _*)
+    def timesRange(m: Int, n: Int, steps: StepDef*): PatNode =
+      Group(steps.map(Leaf(_)).toIndexedSeq, m, n)
+    def optional(steps: StepDef*): PatNode = timesRange(0, 1, steps: _*)
+    def oneOrMore(steps: StepDef*): PatNode = timesRange(1, -1, steps: _*)
+  }
+
   test("(A B).times(2): one match binding both copies, folded to A/B") {
-    val c = GroupCep.compile(Seq(Seg.times(2, StepDef(), StepDef())))
-    val got = GroupCep.run(c, Seq(
+    val c = AltCep.compile(Seq(Seg.times(2, StepDef(), StepDef())))
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(0)), (4L, m(1))))
     assert(got == List(Seq(Seq(1L, 3L), Seq(2L, 4L))))
     // relaxed contiguity: non-matching events between copies are skipped
-    val noisy = GroupCep.run(c, Seq(
+    val noisy = AltCep.run(c, Seq(
       (1L, m(0)), (2L, 0L), (3L, m(1)), (4L, m(0)), (5L, m(1))))
     assert(noisy == List(Seq(Seq(1L, 4L), Seq(3L, 5L))))
   }
 
   test("(A B).times(1,2) NO SKIP: a match per repetition count") {
-    val c = GroupCep.compile(
+    val c = AltCep.compile(
       Seq(Seg.timesRange(1, 2, StepDef(), StepDef())), after = AfterMatch.NoSkip)
-    val got = GroupCep.run(c, Seq(
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(0)), (4L, m(1)))).toSet
     assert(got == Set(
       Seq(Seq(1L), Seq(2L)),             // count 1 from a@1
@@ -38,11 +48,11 @@ class GroupCepSpec extends AnyFunSuite {
   }
 
   test("(A B).oneOrMore C: un-greedy — every repetition count emits") {
-    val c = GroupCep.compile(
+    val c = AltCep.compile(
       Seq(Seg.oneOrMore(StepDef(), StepDef()), Seg.step()),
       after = AfterMatch.NoSkip)
-    assert(c.pattern.loopTo == Map(1 -> Seq(0)))
-    val got = GroupCep.run(c, Seq(
+    assert(c.variants.head.pattern.loopTo == Map(1 -> Seq(0)))
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(0)), (4L, m(1)), (5L, m(2)))).toSet
     assert(got == Set(
       Seq(Seq(1L), Seq(2L), Seq(5L)),
@@ -51,12 +61,12 @@ class GroupCepSpec extends AnyFunSuite {
   }
 
   test("(A B).optional C: present and absent group both match") {
-    val c = GroupCep.compile(
+    val c = AltCep.compile(
       Seq(Seg.optional(StepDef(), StepDef()), Seg.step()),
       after = AfterMatch.NoSkip)
-    val absent = GroupCep.run(c, Seq((1L, m(2))))
+    val absent = AltCep.run(c, Seq((1L, m(2))))
     assert(absent == List(Seq(Seq(), Seq(), Seq(1L))))
-    val present = GroupCep.run(c, Seq(
+    val present = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(2)))).toSet
     assert(present == Set(
       Seq(Seq(1L), Seq(2L), Seq(3L)),    // group taken
@@ -66,9 +76,9 @@ class GroupCepSpec extends AnyFunSuite {
   test("no resumed gaps: optional copies are canonical prefixes") {
     // (A){1,3}: a a a must yield counts 1,2,3 — never a duplicate from
     // skip-copy-2-take-copy-3
-    val c = GroupCep.compile(
+    val c = AltCep.compile(
       Seq(Seg.timesRange(1, 3, StepDef())), after = AfterMatch.NoSkip)
-    val got = GroupCep.run(c, Seq((1L, m(0)), (2L, m(0)), (3L, m(0))))
+    val got = AltCep.run(c, Seq((1L, m(0)), (2L, m(0)), (3L, m(0))))
     val fromA1 = got.filter(_.head.headOption.contains(1L))
     assert(fromA1 == List(
       Seq(Seq(1L)), Seq(Seq(1L, 2L)), Seq(Seq(1L, 2L, 3L))))
@@ -76,9 +86,9 @@ class GroupCepSpec extends AnyFunSuite {
   }
 
   test("inner quantifiers inside a group: (A.times(2) B).times(2)") {
-    val c = GroupCep.compile(Seq(
+    val c = AltCep.compile(Seq(
       Seg.times(2, StepDef(Quant.Times(2)), StepDef())))
-    val got = GroupCep.run(c, Seq(
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(0)), (3L, m(1)),
       (4L, m(0)), (5L, m(0)), (6L, m(1))))
     assert(got == List(Seq(Seq(1L, 2L, 4L, 5L), Seq(3L, 6L))))
@@ -86,13 +96,13 @@ class GroupCepSpec extends AnyFunSuite {
 
   test("batch executor: logical masks in, folded step_times out") {
     import spark.implicits._
-    val c = GroupCep.compile(Seq(Seg.times(2, StepDef(), StepDef())))
+    val c = AltCep.compile(Seq(Seg.times(2, StepDef(), StepDef())))
     val events = Seq(
       (7L, 1L, m(0), 1L), (7L, 2L, m(1), 2L),
       (7L, 3L, m(0), 3L), (7L, 4L, m(1), 4L),
       (8L, 1L, m(0), 5L)) // key 8: incomplete, no match
       .toDF("key", "t", "mask", "tie")
-    val got = GroupCep.matchBatch(spark, events, c)
+    val got = AltCep.matchBatch(spark, events, c)
       .as[(Long, Seq[Seq[Long]])].collect().toSet
     assert(got == Set((7L, Seq(Seq(1L, 3L), Seq(2L, 4L)))))
   }
@@ -100,18 +110,18 @@ class GroupCepSpec extends AnyFunSuite {
   test("stream equals batch for a oneOrMore group across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val c = GroupCep.compile(
+    val c = AltCep.compile(
       Seq(Seg.oneOrMore(StepDef(), StepDef()), Seg.step()),
       within = 3600L * 1000000L, after = AfterMatch.NoSkip)
     def us(sec: Long): Long = sec * 1000000L
     val rows = Seq(
       (1L, us(1), m(0), 1L), (1L, us(2), m(1), 2L),
       (1L, us(3), m(0), 3L), (1L, us(4), m(1), 4L), (1L, us(5), m(2), 5L))
-    val batch = GroupCep.matchBatch(spark,
+    val batch = AltCep.matchBatch(spark,
         rows.toDF("key", "t", "mask", "tie"), c)
       .as[(Long, Seq[Seq[Long]])].collect().toSet
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = GroupCep.matchStream(in.toDS(), c, "10 seconds")
+    val q = AltCep.matchStream(in.toDS(), c, "10 seconds")
       .toDF("key", "step_times").writeStream
       .outputMode("append").format("memory").queryName("gcep_out").start()
     rows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
@@ -124,16 +134,15 @@ class GroupCepSpec extends AnyFunSuite {
   }
 
   test("NESTED groups: begin(begin(A).times(2).next(B)).oneOrMore()") {
-    import graft.cep.GroupCep.{Group, Leaf}
     // GroupPattern composition: the inner group (A x2) nests inside an
     // unbounded outer group that also carries B. Logical steps: A=0, B=1.
-    val c = GroupCep.compileNodes(
+    val c = AltCep.compile(
       Seq(Group.oneOrMore(Group.times(2, Leaf(StepDef())), Leaf(StepDef()))),
       after = AfterMatch.NoSkip)
-    assert(c.pattern.steps.length == 3) // A A B
-    assert(c.fold == IndexedSeq(0, 0, 1))
-    assert(c.pattern.loopTo == Map(2 -> Seq(0)))
-    val got = GroupCep.run(c, Seq(
+    assert(c.variants.head.pattern.steps.length == 3) // A A B
+    assert(c.variants.head.fold == IndexedSeq(0, 0, 1))
+    assert(c.variants.head.pattern.loopTo == Map(2 -> Seq(0)))
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(0)), (3L, m(1)),
       (4L, m(0)), (5L, m(0)), (6L, m(1)))).toSet
     assert(got == Set(
@@ -145,17 +154,16 @@ class GroupCepSpec extends AnyFunSuite {
   }
 
   test("NESTED optional inside times: multi-target ε-skip composes") {
-    import graft.cep.GroupCep.{Group, Leaf}
     // ((A)? B).times(1,2): copy 2's head is BOTH an optional inner-group
     // head and an optional copy head — two skip targets from one position
-    val c = GroupCep.compileNodes(
+    val c = AltCep.compile(
       Seq(Group.timesRange(1, 2,
         Group.optional(Leaf(StepDef())), Leaf(StepDef()))),
       after = AfterMatch.NoSkip)
-    assert(c.pattern.skipTo == Map(0 -> Seq(1), 2 -> Seq(4, 3)),
-      s"skip map: ${c.pattern.skipTo}")
+    assert(c.variants.head.pattern.skipTo == Map(0 -> Seq(1), 2 -> Seq(4, 3)),
+      s"skip map: ${c.variants.head.pattern.skipTo}")
     // A-present count-1, A-absent count-1, and the count-2 combinations
-    val got = GroupCep.run(c, Seq(
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(1)))).toSet
     assert(got.contains(Seq(Seq(1L), Seq(2L))), s"A-present count-1: $got")
     assert(got.contains(Seq(Seq(), Seq(2L))), s"A-absent count-1: $got")
@@ -166,7 +174,6 @@ class GroupCepSpec extends AnyFunSuite {
 
   test("NESTED groups: batch and stream agree, skip strategies compose") {
     import spark.implicits._
-    import graft.cep.GroupCep.{Group, Leaf}
     implicit val sqlCtx = spark.sqlContext
     def us(sec: Long): Long = sec * 1000000L
     // ((A x2) B).oneOrMore under SkipPastLast AND NoSkip: nested
@@ -175,17 +182,17 @@ class GroupCepSpec extends AnyFunSuite {
     for ((after, sink) <- Seq(
         (AfterMatch.NoSkip: AfterMatch, "gcep_nest_ns"),
         (AfterMatch.SkipPastLast: AfterMatch, "gcep_nest_sp"))) {
-      val c = GroupCep.compileNodes(
+      val c = AltCep.compile(
         Seq(Group.oneOrMore(Group.times(2, Leaf(StepDef())), Leaf(StepDef()))),
         within = 3600L * 1000000L, after = after)
       val rows = Seq(
         (1L, us(1), m(0), 1L), (1L, us(2), m(0), 2L), (1L, us(3), m(1), 3L),
         (1L, us(4), m(0), 4L), (1L, us(5), m(0), 5L), (1L, us(6), m(1), 6L))
-      val batch = GroupCep.matchBatch(spark,
+      val batch = AltCep.matchBatch(spark,
           rows.toDF("key", "t", "mask", "tie"), c)
         .as[(Long, Seq[Seq[Long]])].collect().toSet
       val in = MemoryStream[(Long, Long, Long, Long)]
-      val q = GroupCep.matchStream(in.toDS(), c, "10 seconds")
+      val q = AltCep.matchStream(in.toDS(), c, "10 seconds")
         .toDF("key", "step_times").writeStream
         .outputMode("append").format("memory").queryName(sink).start()
       rows.grouped(2).foreach { chunk => in.addData(chunk); q.processAllAvailable() }
@@ -250,10 +257,10 @@ class GroupCepSpec extends AnyFunSuite {
 
   test("SKIP TO LAST of a quantified group variable is fold-aware across copies") {
     // A B{1,2} D — logical ids A=0 B=1 D=2; B expands to two copies
-    val c = GroupCep.compile(Seq(
+    val c = AltCep.compile(Seq(
       Seg.step(), Seg.timesRange(1, 2, StepDef()), Seg.step()),
       within = 1000L, after = AfterMatch.SkipToLast(1))
-    val got = GroupCep.run(c, Seq(
+    val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(0)), (4L, m(1)), (5L, m(2)),
       (6L, m(1)), (7L, m(2))))
     // the greedy match binds BOTH B copies (t=2 and t=4); the boundary is
@@ -265,16 +272,16 @@ class GroupCepSpec extends AnyFunSuite {
 
   test("compile guards: bit budget, skip targets, unsupported shapes") {
     val e1 = intercept[IllegalArgumentException](
-      GroupCep.compile(Seq(Seg.times(40, StepDef(), StepDef()))))
+      AltCep.compile(Seq(Seg.times(40, StepDef(), StepDef()))))
     assert(e1.getMessage.contains("64"))
-    val e2 = intercept[IllegalArgumentException](GroupCep.compile(
+    val e2 = intercept[IllegalArgumentException](AltCep.compile(
       Seq(Seg.oneOrMore(StepDef(), StepDef())),
       after = AfterMatch.SkipToFirst(9))) // out-of-range logical id
     assert(e2.getMessage.contains("out of range"))
-    val c = GroupCep.compile(Seq(
+    val c = AltCep.compile(Seq(
       Seg.step(), Seg.timesRange(1, 3, StepDef(), StepDef())))
     // copies 2 and 3 of the group are optional; both skip past copy 3
-    assert(c.pattern.skipTo == Map(3 -> Seq(7), 5 -> Seq(7)))
-    assert(c.fold == IndexedSeq(0, 1, 2, 1, 2, 1, 2))
+    assert(c.variants.head.pattern.skipTo == Map(3 -> Seq(7), 5 -> Seq(7)))
+    assert(c.variants.head.fold == IndexedSeq(0, 1, 2, 1, 2, 1, 2))
   }
 }

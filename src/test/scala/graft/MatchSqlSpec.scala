@@ -313,4 +313,59 @@ class MatchSqlSpec extends AnyFunSuite {
       """)
     }
   }
+
+  test("nested group quantifiers in SQL PATTERN: ((A B){2} C)+ D") {
+    import spark.implicits._
+    // uid 1 runs the outer group twice, uid 3 once; uid 2 has only one
+    // (a b) round before its c, so (A B){2} never completes
+    val kinds = Seq(1L -> "a b a b c a b a b c d", 2L -> "a b c d", 3L -> "a b a b c d")
+    kinds.flatMap { case (uid, ks) =>
+      ks.split(" ").toSeq.zipWithIndex.map { case (k, i) => (uid, i + 1L, uid * 100 + i, k) }
+    }.toDF("uid", "t", "eid", "typ").createOrReplaceTempView("mr_nested")
+    val clause = """
+      PARTITION BY uid
+      ORDER BY t, eid
+      PATTERN (((A B){2} C)+ D)
+      AFTER MATCH SKIP PAST LAST ROW
+      DEFINE A AS typ = 'a', B AS typ = 'b', C AS typ = 'c', D AS typ = 'd'
+    """
+    val got = MatchRecognize.run(spark, spark.table("mr_nested"), clause)
+      .as[(Long, Seq[Seq[Long]])].collect().toSet
+    // one match per key: the earliest start, then the longest — both
+    // outer traversals for uid 1
+    assert(got == Set(
+      (1L, Seq(Seq(1L, 3L, 6L, 8L), Seq(2L, 4L, 7L, 9L), Seq(5L, 10L), Seq(11L))),
+      (3L, Seq(Seq(1L, 3L), Seq(2L, 4L), Seq(5L), Seq(6L)))), s"$got")
+    val measured = Engine.sql(spark, """
+      SELECT uid, n_a, last_c, d_t FROM mr_nested MATCH_RECOGNIZE (
+        PARTITION BY uid
+        ORDER BY t, eid
+        MEASURES COUNT(A.*) AS n_a, LAST(C.t) AS last_c, D.t AS d_t
+        ONE ROW PER MATCH
+        PATTERN (((A B){2} C)+ D)
+        AFTER MATCH SKIP PAST LAST ROW
+        DEFINE A AS typ = 'a', B AS typ = 'b', C AS typ = 'c', D AS typ = 'd'
+      ) ORDER BY uid
+    """).as[(Long, Long, Long, Long)].collect().toSeq
+    assert(measured == Seq((1L, 4L, 10L, 11L), (3L, 2L, 5L, 6L)))
+  }
+
+  test("a backticked DEFINE column holding ')' stays inside the clause") {
+    import spark.implicits._
+    Seq((1L, 10L, 1L, 3L), (1L, 20L, 2L, 7L), (1L, 30L, 3L, 9L), (2L, 15L, 4L, 8L))
+      .toDF("uid", "t", "eid", "p)x").createOrReplaceTempView("mr_paren")
+    val got = MatchRecognize.sql(spark, """
+      SELECT uid, first_t, n_b FROM mr_paren MATCH_RECOGNIZE (
+        PARTITION BY uid
+        ORDER BY t, eid
+        MEASURES FIRST(A.t) AS first_t, COUNT(B.*) AS n_b
+        ONE ROW PER MATCH
+        PATTERN (A B+)
+        AFTER MATCH SKIP PAST LAST ROW
+        DEFINE A AS `p)x` < 5, B AS `p)x` > 5
+      ) ORDER BY uid
+    """).as[(Long, Long, Long)].collect().toSeq
+    // the first B completes the match and SKIP PAST LAST ROW drops the rest
+    assert(got == Seq((1L, 10L, 1L)))
+  }
 }

@@ -61,30 +61,40 @@ class RetractTwsSpec extends AnyFunSuite {
       .map { case (kind, k, rank, score, payload) => (kind, k, rank, enc(score), payload) }
   }
 
-  /** `script` through [[RetractTws.retractableTopNChangelogSorted]]. */
-  private def runSortedPort(script: Seq[Seq[Change]], sink: String): Seq[Emitted] = {
+  /** `script` through [[RetractTws.retractableTopNChangelogSorted]],
+    * keyed by the Long key or (`stringKey`) by its decimal String; the
+    * emitted key is read back as a Long either way. */
+  private def runSortedPort(script: Seq[Seq[Change]], sink: String,
+      stringKey: Boolean = false): Seq[Emitted] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String, String)]
-    val q = RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2)
-      .toDF("kind", "k", "rank", "sk", "payload").writeStream
+    val out =
+      if (stringKey) RetractTws.retractableTopNChangelogSorted(
+        in.toDS().map { case (k, kind, sk, p) => (k.toString, kind, sk, p) }, n = 2).toDF()
+      else RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2).toDF()
+    val q = out.toDF("kind", "k", "rank", "sk", "payload").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try script.foreach { batch =>
       in.addData(batch.map { case (k, kind, score, p) => (k, kind, enc(score), p) })
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(sink).as[Emitted].collect().toSeq
+    spark.table(sink).select($"kind", $"k".cast("long"), $"rank", $"sk", $"payload")
+      .as[Emitted].collect().toSeq
   }
 
   private def multiset[T](rows: Seq[T]) = rows.groupBy(identity).view.mapValues(_.size).toMap
 
   test("MapState-backed changelog top-N equals the GroupState original") {
     val ref = runReference(changelogScript, sink = "rtwsc_ref")
-    val tws = TestSpark.withRocksDB(runSortedPort(changelogScript, sink = "rtwsc_new"))
-    assert(multiset(tws) == multiset(ref),
-      s"emissions differ:\n tws=${tws.sorted}\n ref=${ref.sorted}")
-    // the vacated rank's explicit delete is present on both sides
-    assert(tws.contains(("-D", 1L, 2, enc(20.0), "b")), tws.toString)
+    // the sorted port keyed by Long and by String emits the same changelog
+    Seq(false -> "rtwsc_new", true -> "rtwss_new").foreach { case (stringKey, sink) =>
+      val tws = TestSpark.withRocksDB(runSortedPort(changelogScript, sink, stringKey))
+      assert(multiset(tws) == multiset(ref),
+        s"stringKey=$stringKey emissions differ:\n tws=${tws.sorted}\n ref=${ref.sorted}")
+      // the vacated rank's explicit delete is present on both sides
+      assert(tws.contains(("-D", 1L, 2, enc(20.0), "b")), tws.toString)
+    }
   }
 
   test("MapState-backed retractable top-N equals the GroupState original") {
@@ -97,42 +107,6 @@ class RetractTwsSpec extends AnyFunSuite {
       assert(tws.toSet.contains(("+U", 1L, 1, enc(20.0), "b")) &&
         tws.toSet.contains(("+U", 1L, 2, enc(10.0), "c")), s"backfill missing: $tws")
     }
-  }
-
-  /** Same changelog script through the SORTED-COUNTS port (sort keys =
-    * SortKey.ofDouble encodings, asc=false == the original's
-    * descending-score rank): the (kind, key, rank, payload) emission
-    * must be identical — the sorted-counts refinement changes state
-    * I/O complexity, never the answer. */
-  private def runSortedScenario(sink: String)
-      : Seq[(String, String, Int, String, String)] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // descending-score rank = DESC field encoding (direction baked in)
-    val enc = (v: Double) => graft.util.SortKey.fieldDouble(v, asc = false)
-    val in = MemoryStream[(String, String, String, String)]
-    val out = RetractTws.retractableTopNChangelogSorted(in.toDS(), n = 2)
-    val q = out.toDF("kind", "k", "rank", "sk", "payload").writeStream
-      .outputMode("append").format("memory").queryName(sink).start()
-    try {
-      in.addData(("1", "+I", enc(30.0), "a"), ("1", "+I", enc(20.0), "b"))
-      q.processAllAvailable()
-      in.addData(("1", "-D", enc(20.0), "b"))
-      q.processAllAvailable()
-      in.addData(("1", "+I", enc(25.0), "c"))
-      q.processAllAvailable()
-      in.addData(("1", "-D", enc(30.0), "a"))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).as[(String, String, Int, String, String)].collect().toSeq
-  }
-
-  test("sorted-counts port emits exactly the GroupState original's changelog") {
-    val ref = runReference(changelogScript, sink = "rtwss_ref")
-      .map { case (kind, k, rank, sk, payload) => (kind, k.toString, rank, sk, payload) }
-    val sorted = TestSpark.withRocksDB(runSortedScenario("rtwss_new"))
-    assert(multiset(sorted) == multiset(ref),
-      s"emissions differ:\n sorted=${sorted.sorted}\n ref=${ref.sorted}")
   }
 
   /** State-I/O pin for the sorted-counts port: with MANY live rows per
