@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -98,7 +98,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * aggregate over an aggregate, COUNT(DISTINCT) aggregate, sign-algebra
   * aggregate, aggregate over a join, join; first match wins — and
   * [[start]] lowers it: every aggregate level through [[aggLevel]],
-  * every query through [[startChangelog]]. EXPLAIN CHANGELOG_MODE over
+  * every query through [[startStream]]. EXPLAIN CHANGELOG_MODE over
   * the INSERT prints [[Route.line]].
   */
 object ChangelogSql {
@@ -1543,29 +1543,36 @@ object ChangelogSql {
       case None => w
     }
 
-  /** Start `log` — a changelog frame: the sink's columns plus row_kind —
-    * as a continuous query in `outputMode`, handing every micro-batch,
-    * stamped with its commit sequence [[SeqCol]], to `write`. `rocksDb`
-    * pins the RocksDB provider ([[rocksDbPins]]); the state partitions
-    * follow [[statePartitionPins]]. Under [[graft.util.StartLock]] the
-    * pins, the start (which snapshots the conf into the query's cloned
-    * session synchronously) and the restore are one atomic section: a
-    * gateway operation starting concurrently on the same shared session
-    * can never snapshot this job's pins into ITS checkpoint. */
-  private def startChangelog(spark: SparkSession, log: DataFrame,
-      outputMode: String, write: (DataFrame, Long) => Unit, rocksDb: Boolean,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+  /** True when `df`'s analyzed plan runs a transformWithState operator —
+    * whose runtime needs the RocksDB state-store provider. */
+  private def runsTws(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+
+  /** The one start of a continuous INSERT: `df` as a streaming query in
+    * `outputMode` checkpointed at `checkpointDir`, `start` attaching the
+    * sink (a `foreachBatch` writer or a table) and starting it. The
+    * provider follows the plan: a query that runs transformWithState
+    * starts on RocksDB ([[rocksDbPins]]), every other query on the
+    * session's provider. The state partitions follow
+    * [[statePartitionPins]] and the trigger [[withTrigger]]. Under
+    * [[graft.util.StartLock]] the pins, the start (which snapshots the
+    * conf into the query's cloned session synchronously) and the restore
+    * are one atomic section: a gateway operation starting concurrently on
+    * the same shared session can never snapshot this job's pins into ITS
+    * checkpoint. */
+  private[graft] def startStream(spark: SparkSession, df: DataFrame,
+      outputMode: String, checkpointDir: String)(
+      start: org.apache.spark.sql.streaming.DataStreamWriter[Row] =>
+        org.apache.spark.sql.streaming.StreamingQuery)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     graft.util.StartLock.locked {
-      val pins = (if (rocksDb) rocksDbPins(spark) else Nil) ++
+      val pins = (if (runsTws(df)) rocksDbPins(spark) else Nil) ++
         statePartitionPins(spark)
       graft.util.Conf.scoped(spark, pins: _*) {
-        withTrigger(spark, log.writeStream
+        start(withTrigger(spark, df.writeStream
           .outputMode(outputMode)
-          .option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            write(batch.withColumn(SeqCol, lit(batchId)), batchId)
-          })
-          .start()
+          .option("checkpointLocation", checkpointDir)))
       }
     }
 
@@ -3165,8 +3172,9 @@ object ChangelogSql {
     * aggregates) or by (partition columns, rank) (the top-N routes)
     * through [[upsertSinkWriter]], or the join's RETRACT changelog
     * (+I/-D with multiplicity, no upsert key) appended to a plain table.
-    * Every route but the sign-algebra aggregate runs transformWithState
-    * operators and pins the RocksDB provider. */
+    * [[startStream]] picks the provider from the lowered plan: RocksDB
+    * for the transformWithState routes, the session's provider for the
+    * sign-algebra aggregate and the fast top-1 (flatMapGroupsWithState). */
   private[graft] def start(spark: SparkSession, sink: String, r: Route,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val (log, outputMode, write) = r match {
@@ -3211,8 +3219,11 @@ object ChangelogSql {
         val (log, keys) = lowerAgg(spark, agg, retract = false, failWith(what))
         (log, "append", upsertSinkWriter(spark, sink, keys))
     }
-    startChangelog(spark, log, outputMode, write,
-      rocksDb = !r.isInstanceOf[Route.SignAgg], checkpointDir)
+    // every micro-batch, stamped with its commit sequence, goes to `write`
+    startStream(spark, log, outputMode, checkpointDir)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        write(batch.withColumn(SeqCol, lit(batchId)), batchId)
+      }.start())
   }
 
   /** Keep-last collapse of an upsert sink a continuous route writes:

@@ -752,32 +752,20 @@ object Engine {
                   "sink here (kafka needs the client jar + a broker; " +
                   "datagen is read-only)")
             }
-            // under StartLock: the start snapshots the session conf — it
-            // must never observe another front-door query's mid-pin
-            // provider/partition override (util.StartLock)
-            graft.util.StartLock.locked {
-              df.writeStream
-                .outputMode("append")
-                .option("checkpointLocation", checkpointDir)
-                .foreachBatch { (batch: DataFrame, _: Long) =>
-                  writeBatch(batch.toDF(declared.fieldNames.toIndexedSeq: _*)
-                    .select(declared.fields.toSeq.map(f =>
-                      org.apache.spark.sql.functions.col(f.name)
-                        .cast(f.dataType)): _*))
-                }
-                .start()
-            }
+            ChangelogSql.startStream(spark, df, "append", checkpointDir)(
+              _.foreachBatch { (batch: DataFrame, _: Long) =>
+                writeBatch(batch.toDF(declared.fieldNames.toIndexedSeq: _*)
+                  .select(declared.fields.toSeq.map(f =>
+                    org.apache.spark.sql.functions.col(f.name)
+                      .cast(f.dataType)): _*))
+              }.start())
           case None =>
             // an extended sink's computed columns are virtual: write the base
             val target =
               if (spark.catalog.tableExists(s"__${sink}_base")) s"__${sink}_base"
               else sink
-            graft.util.StartLock.locked {
-              df.writeStream
-                .outputMode("append")
-                .option("checkpointLocation", checkpointDir)
-                .toTable(target)
-            }
+            ChangelogSql.startStream(spark, df, "append", checkpointDir)(
+              _.toTable(target))
         }
       case other => throw new IllegalArgumentException(
         s"sqlStreamInsert expects INSERT INTO <table> SELECT ..., got: $other")

@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   * compiles to the RowTime{Rows,Range}{Bounded,Unbounded}Preceding
   * process functions). Spark's window functions reject streaming frames
   * ("non-time-based windows are not supported"), so the clause is lowered
-  * onto [[graft.streaming.StatefulOps.overMultiAggsByKey]]: every aggregate
-  * becomes one or two slots of a value VECTOR summed over the frame in a
-  * SINGLE stateful pass — exactly how StreamExecOverAggregate fuses all
-  * of a window's aggregates into one operator.
+  * onto [[graft.streaming.StatefulTws.overMultiAggsChained]]: every
+  * aggregate becomes one or two slots of a value VECTOR summed over the
+  * frame, and all items sharing a PARTITION BY run in ONE stateful pass —
+  * exactly how StreamExecOverAggregate fuses all of a window's aggregates
+  * into one operator. The pass runs on transformWithState, so the
+  * statement starts on the RocksDB provider (`ChangelogSql.startStream`).
   *
   * Supported statement shape:
   * {{{
@@ -41,9 +43,9 @@ import org.apache.spark.sql.functions._
   * item — items sharing a PARTITION BY run in one fused pass, each slot
   * aggregating over its own window (Slots.Multi) — and since r9 the
   * PARTITION BY may differ per item too: each distinct partition spec
-  * becomes one pass of a CHAINED transformWithState pipeline
-  * ([[lowerChainedSpecs]]), exactly the reference's
-  * one-StreamExecOverAggregate-per-window operator chain.
+  * becomes one pass of a CHAINED pipeline (one spec = a chain of length
+  * one), exactly the reference's one-StreamExecOverAggregate-per-window
+  * operator chain.
   * MIN/MAX/FIRST_VALUE/LAST_VALUE ride a NaN-sentinel slot with a
   * Min/Max/First/Last combine op (a NaN DATA value is indistinguishable
   * from NULL there — the standard float-aggregate caveat);
@@ -59,7 +61,8 @@ import org.apache.spark.sql.functions._
   * written — tied rows are PEERS and share one aggregate value (Flink's
   * RowTimeRange*Function semantics, and what the same text computes in
   * batch); under a ROWS frame they are processed row-at-a-time in
-  * deterministic (t, values) order.
+  * deterministic (t, values) order, the bounded and unbounded frames
+  * alike.
   *
   * NULL semantics: all five aggregates ignore NULL inputs, and a frame
   * with no non-null inputs reads NULL — exact SQL semantics, including
@@ -253,8 +256,8 @@ object StreamOverSql {
     * via `spark.table` — callers (sqlStreamInsert) shadow the name with
     * the watermarked streaming view first. */
   def lower(spark: SparkSession, select: String): DataFrame = {
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.OverFrame
+    import graft.streaming.StatefulTws
+    import graft.streaming.StatefulOps.{OverFrame, SlotOp}
     import spark.implicits._
     val (itemsText, table, whereOpt) = select match {
       case SelRe(items, t, w) => (items, t, Option(w))
@@ -283,12 +286,11 @@ object StreamOverSql {
     require(aggs.map(_.rowtime).distinct.size == 1,
       "every OVER item must share one ORDER BY rowtime column " +
         s"(got: ${aggs.map(_.rowtime).distinct})")
-    // distinct partition specs in first-appearance order
+    // distinct partition specs in first-appearance order. PARTITION BY
+    // is optional (Flink's non-partitioned OVER): without it the whole
+    // stream shares ONE state key — a parallelism-1 operator by
+    // construction, same as the reference's global OVER
     val specs: Seq[Option[String]] = aggs.map(_.pk).distinct
-    // PARTITION BY is optional (Flink's non-partitioned OVER): without
-    // it the whole stream shares ONE state key — a parallelism-1
-    // operator by construction, same as the reference's global OVER
-    val pkOpt = aggs.head.pk
     val rowtime = aggs.head.rowtime
     def parseFrame(text: String): OverFrame = text match {
       // no frame clause = the SQL default, RANGE UNBOUNDED PRECEDING —
@@ -350,7 +352,6 @@ object StreamOverSql {
     require(src0.isStreaming,
       s"$table did not resolve to a streaming read (batch OVER is spark.sql's job)")
     val src = whereOpt.map(src0.where).getOrElse(src0)
-    val pkTypeOpt = pkOpt.map(p => src.schema(p).dataType)
     require(src.schema(rowtime).dataType ==
       org.apache.spark.sql.types.TimestampType,
       s"rowtime $rowtime must be TIMESTAMP, got ${src.schema(rowtime).dataType}")
@@ -366,7 +367,6 @@ object StreamOverSql {
     // SUM(v) + COUNT(v) + AVG(v) over one window share one value and one
     // indicator slot — every buffered row in state carries the minimal
     // vector; the same aggregate over a different frame is its own slot.
-    import graft.streaming.StatefulOps.SlotOp
     def norm(s: String): String = s.toLowerCase.replaceAll("[\\s`]+", "")
     val slotCols = Vector.newBuilder[Column]
     val slotOps = Vector.newBuilder[SlotOp]
@@ -436,9 +436,7 @@ object StreamOverSql {
     val known: Map[String, String] =
       valueSlotByText.map { case (txt, s) => txt -> s"v$s" } ++
         Map(norm(rowtime) -> "t") ++
-        (if (specs.size == 1) pkOpt.map(p => norm(p) -> "k").toMap
-         else specs.zipWithIndex.collect {
-           case (Some(p), i) => norm(p) -> s"k$i" }.toMap)
+        specs.zipWithIndex.collect { case (Some(p), i) => norm(p) -> s"k$i" }
     var overPos = -1
     val outCols: Seq[(String, String)] = items.zip(isOver).map {
       case (_, true) =>
@@ -453,106 +451,24 @@ object StreamOverSql {
           s"rowtime or an aggregated expression (COUNT-only doesn't " +
           s"qualify — its 0/1 indicator is not the value); got '$e'") }
 
-    // the rowtime column is selected UNCAST: the source's watermark (set
-    // by WatermarkDdl.readStream) propagates through a plain alias but
-    // not through a cast, and re-declaring it here would trip Spark's
-    // "redefining watermark" guard
-    val keyCol = pkOpt.map(p => col(p).cast("string")).getOrElse(lit("")).as("k")
     val frames = slotFrames.result()
-    if (specs.size > 1) {
-      require(!procTime,
-        "processing-time OVER supports one PARTITION BY per statement " +
-          s"(got: ${specs.mkString(", ")})")
-      return lowerChainedSpecs(spark, src, rowtime, specs, aggSlots,
-        outCols, known, slotCols.result(), frames, slotOps.result())
-    }
-    val ran =
-      if (procTime) {
-        // proc-time executors ignore the (computed) proctime column's
-        // values — processing time IS the batch tick, emitted as t_ms.
-        // Multi-frame proc-time OVER is not lowered (the reference's
-        // ProcTime*Function family is one operator per window too).
-        require(frames.distinct.size == 1,
-          "processing-time OVER supports one shared frame per statement " +
-            s"(got: ${frames.distinct.mkString(", ")})")
-        val opsV = slotOps.result()
-        require(!opsV.exists(_.isInstanceOf[SlotOp.Agg]),
-          "processing-time OVER does not support user-defined aggregates " +
-            "(the proc-time executors reduce pairwise); use the " +
-            "event-time route")
-        val typed = src.select(keyCol, array(slotCols.result(): _*).as("v"))
-          .as[(String, Seq[Double])]
-        StatefulOps.procOverAggsByKey(typed, frames.head, opsV)
-          .toDF("k", "t_ms", "vals", "sums")
-      } else {
-        val typed = src.select(keyCol, col(rowtime).as("t"),
-            array(slotCols.result(): _*).as("v"))
-          .as[(String, java.sql.Timestamp, Seq[Double])]
-        StatefulOps.overMultiAggsByKey(typed, frames, slotOps.result())
-          .toDF("k", "t_ms", "vals", "sums")
-      }
-
-    def aggCol(i: Int): Column = {
-      val (a, s, c) = aggSlots(i)
-      a.fn match {
-        case "COUNT" => col("sums").getItem(s).cast("long")
-        case "AVG" =>
-          when(col("sums").getItem(c) === 0.0, lit(null).cast("double"))
-            .otherwise(col("sums").getItem(s) / col("sums").getItem(c))
-        case _ => // SUM/MIN/MAX/FIRST_VALUE/LAST_VALUE: NaN = all-NULL frame
-          when(isnan(col("sums").getItem(s)), lit(null).cast("double"))
-            .otherwise(col("sums").getItem(s))
-      }
-    }
-    val projected = outCols.map { case (e, alias) =>
-      (if (e.startsWith("__agg")) aggCol(e.stripPrefix("__agg").toInt)
-       else known(e) match {
-        case "k" => col("k").cast(pkTypeOpt.get) // "k" only mapped when partitioned
-        case "t" => timestamp_millis(col("t_ms"))
-        case vs => // NaN sentinel = the row's own input was NULL
-          val v = col("vals").getItem(vs.stripPrefix("v").toInt)
-          when(isnan(v), lit(null).cast("double")).otherwise(v)
-      }).as(alias)
-    }
-    ran.select(projected: _*)
-  }
-
-  /** CHAINED multi-spec lowering — the round-7 verdict's remaining OVER
-    * gap: one [[graft.streaming.StatefulTws.overMultiAggsChained]] pass
-    * per distinct PARTITION BY, in statement order (the reference chains
-    * one StreamExecOverAggregate per window spec). Pass j is keyed on
-    * spec j's component of a COMPOSITE row key (all partition columns,
-    * null-safe, \u0001-joined); after pass j the aggregate slots spec
-    * j's items read are APPENDED to the row vector, so the final pass's
-    * rows carry every window's results. Each pass declares its output
-    * TIMESTAMP as event time (transformWithState eventTimeColumnName),
-    * and Spark's multi-stateful watermark propagation lags each
-    * downstream operator one batch — rows released at the current
-    * watermark are on time for the next pass. State cost: the chain is
-    * m operators with the SAME per-key buffer shape as the fused pass;
-    * slots other than a pass's own are aggregated with a Rows(1) frame
-    * (one-row retention — no extra state). */
-  private def lowerChainedSpecs(spark: SparkSession, src: DataFrame,
-      rowtime: String, specs: Seq[Option[String]],
-      aggSlots: Seq[(AggItem, Int, Int)],
-      outCols: Seq[(String, String)], known: Map[String, String],
-      slotCols: IndexedSeq[Column],
-      frames: IndexedSeq[graft.streaming.StatefulOps.OverFrame],
-      ops: IndexedSeq[graft.streaming.StatefulOps.SlotOp]): DataFrame = {
-    import graft.streaming.{StatefulOps, StatefulTws}
-    import StatefulOps.{OverFrame, SlotOp}
-    import spark.implicits._
-    require(spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "").contains("RocksDB"),
-      "multi-spec streaming OVER chains transformWithState passes, which " +
-        "need the RocksDB state store provider: set " +
-        "spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql." +
-        "execution.streaming.state.RocksDBStateStoreProvider (or share one " +
-        "PARTITION BY across the OVER items for the single fused pass)")
-    val n0 = slotCols.size
+    val ops = slotOps.result()
+    val slotColsV = slotCols.result()
+    val n0 = slotColsV.size
     val m = specs.size
+    // ROW KEY: every partition column, null-safe, \u0001-joined. The
+    // components are base64-encoded so a partition VALUE containing the
+    // separator (or equal to the null tag) can never desync the split —
+    // the base64 alphabet contains neither the u0001 separator nor the
+    // u0000 null tag
     val sep = "\u0001"
     val nullTag = "\u0000"
+    def compOf(p: Option[String]): Column = p match {
+      case Some(c) => when(col(c).isNull, lit(nullTag))
+        .otherwise(base64(encode(col(c).cast("string"), "UTF-8")))
+      case None => lit("")
+    }
+    val composite = concat_ws(sep, specs.map(compOf): _*)
     // the slots each spec's items READ from their pass's sums
     val readSlots: Seq[Seq[Int]] = specs.map { p =>
       aggSlots.collect { case (a, s, c) if a.pk == p =>
@@ -562,46 +478,70 @@ object StreamOverSql {
     // extended-vector length entering pass j: original slots + carries
     // appended after passes 0..j-1
     def lenAt(j: Int): Int = n0 + readSlots.take(j).map(_.size).sum
-    // pass j materializes sums ONLY for the slots spec j's items read —
-    // every other slot (other specs' originals AND carries) runs under a
-    // Rows(1) frame, so pass j's row-buffer retention is driven by spec
-    // j's own frames alone (a pass never pays another spec's 1-day RANGE)
-    val ownSlots: Seq[Set[Int]] = readSlots.map(_.toSet)
-    def extFrames(j: Int, len: Int): IndexedSeq[OverFrame] =
-      IndexedSeq.tabulate(len)(i =>
-        if (i < n0 && ownSlots(j)(i)) frames(i) else OverFrame.Rows(1))
-    def extOps(len: Int): IndexedSeq[SlotOp] =
-      IndexedSeq.tabulate(len)(i => if (i < n0) ops(i) else SlotOp.Sum)
-    // components are base64-encoded so a partition VALUE containing the
-    // separator (or equal to the null tag) can never desync the split —
-    // the base64 alphabet contains neither the u0001 separator nor the u0000 null tag
-    def compOf(p: Option[String]): Column = p match {
-      case Some(c) => when(col(c).isNull, lit(nullTag))
-        .otherwise(base64(encode(col(c).cast("string"), "UTF-8")))
-      case None => lit("")
-    }
-    val composite = concat_ws(sep, specs.map(compOf): _*)
-    var df = StatefulTws.overMultiAggsChained(
-      src.select(compOf(specs.head).as("_1"), composite.as("_2"),
-          col(rowtime).as("_3"), array(slotCols: _*).as("_4"))
-        .as[(String, String, java.sql.Timestamp, Seq[Double])],
-      extFrames(0, n0), extOps(n0), dropLate = true).toDF("ck", "ts", "vals", "sums")
-    for (j <- 1 until m) {
-      val carries = readSlots(j - 1).map(i => col("sums").getItem(i))
-      val gk = element_at(split(col("ck"), sep, -1), j + 1)
-      df = StatefulTws.overMultiAggsChained(
-        df.select(gk.as("_1"), col("ck").as("_2"), col("ts").as("_3"),
-            concat(col("vals"), array(carries: _*)).as("_4"))
-          .as[(String, String, java.sql.Timestamp, Seq[Double])],
-        extFrames(j, lenAt(j)), extOps(lenAt(j)), dropLate = false)
-        .toDF("ck", "ts", "vals", "sums")
-    }
+
+    // every pass yields (ck = row key, ts, vals, sums)
+    val ran: DataFrame =
+      if (procTime) {
+        // proc-time executors ignore the (computed) proctime column's
+        // values — processing time IS the batch tick, emitted as t_ms.
+        // Multi-frame and multi-spec proc-time OVER are not lowered (the
+        // reference's ProcTime*Function family is one operator per
+        // window too).
+        require(m == 1,
+          "processing-time OVER supports one PARTITION BY per statement " +
+            s"(got: ${specs.mkString(", ")})")
+        require(frames.distinct.size == 1,
+          "processing-time OVER supports one shared frame per statement " +
+            s"(got: ${frames.distinct.mkString(", ")})")
+        require(!ops.exists(_.isInstanceOf[SlotOp.Agg]),
+          "processing-time OVER does not support user-defined aggregates " +
+            "(the proc-time executors reduce pairwise); use the " +
+            "event-time route")
+        val typed = src.select(composite.as("k"), array(slotColsV: _*).as("v"))
+          .as[(String, Seq[Double])]
+        StatefulOps.procOverAggsByKey(typed, frames.head, ops)
+          .toDF("ck", "t_ms", "vals", "sums")
+          .withColumn("ts", timestamp_millis(col("t_ms")))
+      } else {
+        // the event-time passes: one StatefulTws.overMultiAggsChained
+        // pass per spec, in statement order, keyed on the spec's
+        // component of the row key; after pass j the slots spec j's items
+        // read are APPENDED to the row vector, so the last pass's rows
+        // carry every window's results. Pass j materializes sums ONLY for
+        // those slots — every other slot (other specs' originals AND
+        // carries) runs under a Rows(1) frame, so pass j's row-buffer
+        // retention is driven by spec j's own frames alone (a pass never
+        // pays another spec's 1-day RANGE). The rowtime is selected
+        // UNCAST: the source's watermark (set by WatermarkDdl.readStream)
+        // propagates through a plain alias but not through a cast
+        val ownSlots: Seq[Set[Int]] = readSlots.map(_.toSet)
+        def extFrames(j: Int, len: Int): IndexedSeq[OverFrame] =
+          IndexedSeq.tabulate(len)(i =>
+            if (i < n0 && ownSlots(j)(i)) frames(i) else OverFrame.Rows(1))
+        def extOps(len: Int): IndexedSeq[SlotOp] =
+          IndexedSeq.tabulate(len)(i => if (i < n0) ops(i) else SlotOp.Sum)
+        (0 until m).foldLeft(src.select(compOf(specs.head).as("_1"),
+            composite.as("_2"), col(rowtime).as("_3"),
+            array(slotColsV: _*).as("_4"))) { (in, j) =>
+          val input =
+            if (j == 0) in
+            else in.select(element_at(split(col("ck"), sep, -1), j + 1).as("_1"),
+              col("ck").as("_2"), col("ts").as("_3"),
+              concat(col("vals"),
+                array(readSlots(j - 1).map(i => col("sums").getItem(i)): _*)).as("_4"))
+          StatefulTws.overMultiAggsChained(
+            input.as[(String, String, java.sql.Timestamp, Seq[Double])],
+            extFrames(j, lenAt(j)), extOps(lenAt(j)), dropLate = j == 0)
+            .toDF("ck", "ts", "vals", "sums")
+        }
+      }
+
     // spec j's aggregates: the LAST pass reads its own sums; earlier
     // specs read the carry positions appended after their pass
     def sumAt(j: Int, s: Int): Column =
       if (j == m - 1) col("sums").getItem(s)
       else col("vals").getItem(lenAt(j) + readSlots(j).indexOf(s))
-    def aggColM(i: Int): Column = {
+    def aggCol(i: Int): Column = {
       val (a, s, c) = aggSlots(i)
       val j = specs.indexOf(a.pk)
       a.fn match {
@@ -609,13 +549,13 @@ object StreamOverSql {
         case "AVG" =>
           when(sumAt(j, c) === 0.0, lit(null).cast("double"))
             .otherwise(sumAt(j, s) / sumAt(j, c))
-        case _ =>
+        case _ => // SUM/MIN/MAX/FIRST_VALUE/LAST_VALUE: NaN = all-NULL frame
           when(isnan(sumAt(j, s)), lit(null).cast("double"))
             .otherwise(sumAt(j, s))
       }
     }
     val projected = outCols.map { case (e, alias) =>
-      (if (e.startsWith("__agg")) aggColM(e.stripPrefix("__agg").toInt)
+      (if (e.startsWith("__agg")) aggCol(e.stripPrefix("__agg").toInt)
        else known(e) match {
          case "t" => col("ts")
          case ks if ks.startsWith("k") =>
@@ -625,11 +565,11 @@ object StreamOverSql {
              .map(_.dataType).getOrElse(org.apache.spark.sql.types.StringType)
            when(comp === nullTag, lit(null))
              .otherwise(decode(unbase64(comp), "UTF-8")).cast(tpe)
-         case vs =>
+         case vs => // NaN sentinel = the row's own input was NULL
            val v = col("vals").getItem(vs.stripPrefix("v").toInt)
            when(isnan(v), lit(null).cast("double")).otherwise(v)
        }).as(alias)
     }
-    df.select(projected: _*)
+    ran.select(projected: _*)
   }
 }

@@ -232,24 +232,24 @@ object AltCep {
         // (shared across branches), so the boundary is computed on the
         // FOLDED bound list of the preferred match — same boundary/prune
         // rule as the linear executor (Cep.offer), branch-aware.
-        case AfterMatch.SkipToFirst(stepIdx) =>
+        case AfterMatch.SkipToFirst(ids) =>
           if (completed.isEmpty) (newRuns, Nil, Nil)
           else {
             val pref = completed.minBy(prefKey)
             val boundary = foldBound(pref._1, pref._2)
-              .filter(_.step == stepIdx).map(_.t)
+              .filter(b => ids(b.step)).map(_.t)
               .minOption.getOrElse(Long.MaxValue)
             val emitted = pref :: completed.filterNot(_ eq pref)
               .filter(_._2.last.t >= boundary)
             newRuns = newRuns.map(_.filter(r => startT(r) >= boundary))
             (newRuns, Nil, foldEmit(emitted))
           }
-        case AfterMatch.SkipToLast(stepIdx) =>
+        case AfterMatch.SkipToLast(ids) =>
           if (completed.isEmpty) (newRuns, Nil, Nil)
           else {
             val pref = completed.minBy(prefKey)
             val boundary = foldBound(pref._1, pref._2)
-              .filter(_.step == stepIdx).map(_.t)
+              .filter(b => ids(b.step)).map(_.t)
               .maxOption.getOrElse(Long.MaxValue)
             val emitted = pref :: completed.filterNot(_ eq pref)
               .filter(_._2.last.t >= boundary)
@@ -380,12 +380,14 @@ object AltCep {
       // the skip variable is a LOGICAL id shared across branches (same
       // name -> same id): validated here, resolved per match via the
       // variant's fold at emission (offerAll)
-      case AfterMatch.SkipToFirst(i) =>
-        require(i >= 0 && i < nLogical,
-          s"SKIP TO FIRST: logical step $i out of range (0 until $nLogical)")
-      case AfterMatch.SkipToLast(i) =>
-        require(i >= 0 && i < nLogical,
-          s"SKIP TO LAST: logical step $i out of range (0 until $nLogical)")
+      case AfterMatch.SkipToFirst(ids) =>
+        require(ids.nonEmpty && ids.forall(i => i >= 0 && i < nLogical),
+          s"SKIP TO FIRST: logical steps ${ids.mkString(", ")} out of range " +
+            s"(0 until $nLogical)")
+      case AfterMatch.SkipToLast(ids) =>
+        require(ids.nonEmpty && ids.forall(i => i >= 0 && i < nLogical),
+          s"SKIP TO LAST: logical steps ${ids.mkString(", ")} out of range " +
+            s"(0 until $nLogical)")
       case _ => ()
     }
     // the event mask carries one bit per LOGICAL leaf: without this guard

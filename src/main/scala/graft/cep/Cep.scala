@@ -122,14 +122,16 @@ object Cep {
 
   /** AfterMatchSkipStrategy.java analogs. SkipToFirst/SkipToLast prune
     * partial matches that started before the first/last event the emitted
-    * (earliest-started) match bound to `step`. */
+    * (earliest-started) match bound to any of the logical `steps` — every
+    * leaf a pattern variable labels (a name repeats across alternation
+    * branches). */
   sealed trait AfterMatch
   object AfterMatch {
     case object NoSkip extends AfterMatch
     case object SkipToNext extends AfterMatch
     case object SkipPastLast extends AfterMatch
-    final case class SkipToFirst(step: Int) extends AfterMatch
-    final case class SkipToLast(step: Int) extends AfterMatch
+    final case class SkipToFirst(steps: Set[Int]) extends AfterMatch
+    final case class SkipToLast(steps: Set[Int]) extends AfterMatch
   }
 
   /** `skipTo`/`loopTo` are the GROUP-pattern hooks (GroupPattern.java —
@@ -417,11 +419,11 @@ object Cep {
           val starts = completed.map(_.last.t).toSet
           (surviving.filterNot(r => starts.contains(startT(r))), completed)
         }
-      case AfterMatch.SkipToFirst(stepIdx) =>
+      case AfterMatch.SkipToFirst(ids) =>
         if (completed.isEmpty) (surviving, Nil)
         else {
           // fold-aware: any expanded copy of the logical variable counts
-          val boundary = completed.head.filter(b => p.classOf(b.step) == stepIdx)
+          val boundary = completed.head.filter(b => ids(p.classOf(b.step)))
             .map(_.t).minOption.getOrElse(Long.MaxValue)
           // the found (earliest-started) match emits; everything else —
           // completed or partial — starting before the boundary is skipped
@@ -429,10 +431,10 @@ object Cep {
             completed.tail.filter(_.last.t >= boundary)
           (surviving.filter(r => startT(r) >= boundary), emitted)
         }
-      case AfterMatch.SkipToLast(stepIdx) =>
+      case AfterMatch.SkipToLast(ids) =>
         if (completed.isEmpty) (surviving, Nil)
         else {
-          val boundary = completed.head.filter(b => p.classOf(b.step) == stepIdx)
+          val boundary = completed.head.filter(b => ids(p.classOf(b.step)))
             .map(_.t).maxOption.getOrElse(Long.MaxValue)
           val emitted = completed.head ::
             completed.tail.filter(_.last.t >= boundary)

@@ -131,12 +131,14 @@ object GroupCep {
       // the skip variable is a LOGICAL id; the linear executor resolves
       // it through the fold (Pattern.stepClass), so every expanded copy
       // of the variable counts toward the boundary
-      case AfterMatch.SkipToFirst(i) =>
-        require(i >= 0 && i < nLogical,
-          s"SKIP TO FIRST: logical step $i out of range (0 until $nLogical)")
-      case AfterMatch.SkipToLast(i) =>
-        require(i >= 0 && i < nLogical,
-          s"SKIP TO LAST: logical step $i out of range (0 until $nLogical)")
+      case AfterMatch.SkipToFirst(ids) =>
+        require(ids.nonEmpty && ids.forall(i => i >= 0 && i < nLogical),
+          s"SKIP TO FIRST: logical steps ${ids.mkString(", ")} out of range " +
+            s"(0 until $nLogical)")
+      case AfterMatch.SkipToLast(ids) =>
+        require(ids.nonEmpty && ids.forall(i => i >= 0 && i < nLogical),
+          s"SKIP TO LAST: logical steps ${ids.mkString(", ")} out of range " +
+            s"(0 until $nLogical)")
       case _ => ()
     }
     val steps = scala.collection.mutable.ArrayBuffer.empty[StepDef]

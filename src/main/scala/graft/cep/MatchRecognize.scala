@@ -253,11 +253,14 @@ object MatchRecognize {
       case _ => 0L
     }
     val stepIdx = steps.map(_._1).zipWithIndex.toMap
-    def varIdx(name: String): Int = steps.map(_._1)
-      .find(_.equalsIgnoreCase(name))
-      .map(stepIdx)
-      .getOrElse(throw new IllegalArgumentException(
-        s"MATCH_RECOGNIZE: unknown pattern variable $name"))
+    // every logical leaf the skip variable labels — a name repeats
+    // across alternation branches, and whichever branch wins bounds the
+    // skip (the same id set MEASURES reads through Clause.idsOf)
+    def varIds(name: String): Set[Int] = {
+      val ids = steps.indices.filter(i => steps(i)._1.equalsIgnoreCase(name)).toSet
+      require(ids.nonEmpty, s"MATCH_RECOGNIZE: unknown pattern variable $name")
+      ids
+    }
     val after = (clause match {
       case AfterRe(a) => a.toUpperCase.replaceAll("\\s+", " ")
       case _ => "SKIP PAST LAST ROW"
@@ -265,9 +268,9 @@ object MatchRecognize {
       case "SKIP PAST LAST ROW" => Cep.AfterMatch.SkipPastLast
       case "SKIP TO NEXT ROW" => Cep.AfterMatch.SkipToNext
       case s if s.startsWith("SKIP TO FIRST") =>
-        Cep.AfterMatch.SkipToFirst(varIdx(s.split("\\s+").last))
+        Cep.AfterMatch.SkipToFirst(varIds(s.split("\\s+").last))
       case s if s.startsWith("SKIP TO LAST") =>
-        Cep.AfterMatch.SkipToLast(varIdx(s.split("\\s+").last))
+        Cep.AfterMatch.SkipToLast(varIds(s.split("\\s+").last))
       case other => throw new IllegalArgumentException(s"bad AFTER MATCH: $other")
     }
     val defines = clause match {

@@ -168,9 +168,11 @@ object StatefulOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** OVER frame shapes shared by [[overMultiAggsByKey]] and the SQL lowering
-    * (StreamOverSql) — the RowTime{Rows,Range}{Bounded,Unbounded}
-    * Preceding family as one parameter. */
+  /** OVER frame shapes shared by the event-time pass
+    * ([[StatefulTws.overMultiAggsChained]]), the proc-time pass
+    * ([[procOverAggsByKey]]) and the SQL lowering (StreamOverSql) — the
+    * RowTime{Rows,Range}{Bounded,Unbounded}Preceding family as one
+    * parameter. */
   sealed trait OverFrame extends Serializable
   object OverFrame {
     /** Unbounded ROWS frame — row-at-a-time running aggregate. */
@@ -181,7 +183,7 @@ object StatefulOps {
     case object UnboundedRange extends OverFrame
   }
 
-  /** Per-slot combine op of the fused OVER pass ([[overMultiAggsByKey]]). A
+  /** Per-slot combine op of the fused OVER pass ([[Slots.Multi]]). A
     * NaN operand means "NULL input" and is skipped by every op — SQL's
     * NULL-ignoring aggregates in slot form; an all-NaN frame reduces to
     * NaN, which the SQL layer reads back as NULL. First/Last fold to the
@@ -258,11 +260,10 @@ object StatefulOps {
     }
   }
 
-  /** Shared slot arithmetic and tie ordering of the fused OVER passes —
-    * ONE definition serving the fMGWS executor, the chained
-    * transformWithState pass (StatefulTws) and the proc-time executor,
-    * so the NULL-skip and tie-order semantics cannot drift between
-    * them. */
+  /** Shared slot arithmetic and tie ordering of the OVER passes — ONE
+    * definition serving the event-time transformWithState pass
+    * (StatefulTws), the proc-time executor and the cumulate window, so
+    * the NULL-skip and tie-order semantics cannot drift between them. */
   private[streaming] object Slots {
     def comb(op: SlotOp, x: Double, y: Double): Double =
       if (x.isNaN) y else if (y.isNaN) x
@@ -327,9 +328,8 @@ object StatefulOps {
       * StreamExecOverAggregate.java multi-window support, minus its
       * chained-operator cost — one state buffer retains what the longest
       * frame needs and every slot reads its own window from it): slot i
-      * reduces with ops(i) over frames(i). One definition serves the
-      * fMGWS executor and the chained TWS pass, so the semantics cannot
-      * drift.
+      * reduces with ops(i) over frames(i). The event-time TWS pass
+      * (StatefulTws) is its one caller.
       *
       * Per-slot semantics:
       *  - Unbounded (ROWS): permanent running accumulator, snapshot per
@@ -339,9 +339,9 @@ object StatefulOps {
       *  - Range(ms) / UnboundedRange: tied rowtimes are SQL PEERS — every
       *    row of a timestamp reads ONE value computed after the whole
       *    peer group is absorbed.
-      * With a UNIFORM frame this reduces exactly to the historical
-      * single-frame behavior (same tie order, same retention buffer) —
-      * pinned by the executor-equality specs. */
+      * With a UNIFORM frame this reduces exactly to the single-frame
+      * behavior (same retention buffer) — pinned by the equality specs
+      * against the flatMapGroupsWithState reference. */
     final class Multi(frames: IndexedSeq[OverFrame], ops: IndexedSeq[SlotOp])
         extends Serializable {
       private def opOf(i: Int): SlotOp = if (ops == null) SlotOp.Sum else ops(i)
@@ -351,7 +351,6 @@ object StatefulOps {
         frames.collect { case OverFrame.Range(ms) => ms }.maxOption
       private val hasRowAcc = frames.contains(OverFrame.Unbounded)
       private val hasGroupAcc = frames.contains(OverFrame.UnboundedRange)
-      private val allUnboundedRows = frames.forall(_ == OverFrame.Unbounded)
       /** Any slot with an unbounded frame => the accumulator is PERMANENT
         * key state (the unbounded-preceding contract) — never auto-removed. */
       val permanent: Boolean = hasRowAcc || hasGroupAcc
@@ -408,12 +407,6 @@ object StatefulOps {
         a.finish(tmp)
       }
 
-      /** Release tie order: arrival order on ties for the pure
-        * unbounded-ROWS pass (its historical contract), the total
-        * (t, values) order otherwise. */
-      def ordered(ready: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] =
-        if (allUnboundedRows) ready.sortBy(_._1) else ready.sortWith(tieLess)
-
       private def accAt(acc: Seq[Double], i: Int): Double =
         if (i < acc.length) acc(i) else Double.NaN
 
@@ -432,16 +425,18 @@ object StatefulOps {
           case op => rows.foldLeft(Double.NaN)((z, r) => comb(op, z, r._2(i)))
         }
 
-      /** Release `ready` rows (already watermark-filtered). Returns the
-        * per-row (t, values, sums) outputs in release order plus the new
-        * accumulator and retention buffer. */
+      /** Release `ready` rows (already watermark-filtered), which the
+        * caller hands over SORTED in the total (t, values) order of
+        * [[tieLess]] — tied rowtimes release in that deterministic order
+        * under every frame. Returns the per-row (t, values, sums) outputs
+        * in release order plus the new accumulator and retention buffer. */
       def release(ready: Seq[(Long, Seq[Double])], acc0: Seq[Double],
           buf0: Seq[(Long, Seq[Double])])
           : (Seq[(Long, Seq[Double], Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])]) = {
         var acc = acc0
         var buf = buf0
         val out = Seq.newBuilder[(Long, Seq[Double], Seq[Double])]
-        groupByTime(ordered(ready)).foreach { case (t, peers) =>
+        groupByTime(ready).foreach { case (t, peers) =>
           val n = peers.head.length
           // row phase: append to the retention buffer, advance the
           // row-granularity accumulators, snapshot the ROWS-frame values
@@ -525,82 +520,6 @@ object StatefulOps {
         (out.result(), acc, buf)
       }
     }
-  }
-
-  /** Generalized streaming OVER, the fused pass StreamOverSql lowers
-    * onto: each row, released in event-time order, is annotated with a
-    * value VECTOR's per-slot aggregates — slot i reduces with ops(i)
-    * over frames(i) (`ops = null` means all-Sum) — so one stateful pass
-    * serves several OVER items, with different windows too (Slots.Multi;
-    * the reference chains one operator per window instead —
-    * StreamExecOverAggregate.java). A SUM is a value slot, COUNT an
-    * indicator slot, AVG a sum slot divided by a count slot downstream.
-    * Each frame is one of Flink's
-    * RowTime{Rows,Range}{Unbounded,Bounded}PrecedingFunction family:
-    * `Unbounded` the running aggregate, `Rows(n)` the last n rows
-    * (RowTimeRowsBoundedPrecedingFunction.java:56), `Range(ms)` the rows
-    * with t in [cur - ms, cur], `UnboundedRange` SQL's default frame; in
-    * both RANGE frames rowtime peers share one value. NaN encodes a NULL
-    * input — skipped by every op (SQL NULL-ignoring aggregates); an
-    * all-NaN frame reduces to NaN. Rows release once the watermark passes
-    * them and late rows drop; the unbounded frames keep a permanent
-    * accumulator, the bounded ones O(pending + frame) state. */
-  def overMultiAggsByKey[K: Encoder](
-      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])],
-      frames: IndexedSeq[OverFrame], ops: IndexedSeq[SlotOp])(
-      implicit e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
-      e2: Encoder[(K, Long, Seq[Double], Seq[Double])])
-      : Dataset[(K, Long, Seq[Double], Seq[Double])] = {
-    require(frames != null && frames.nonEmpty, "overMultiAggsByKey: no frames")
-    require(ops == null || ops.length == frames.length,
-      s"overMultiAggsByKey: ${frames.length} frames but ${ops.length} ops")
-
-    // tie order, peer sharing, per-slot frames and NULL-skip live in ONE
-    // place (Slots.Multi) shared with the chained TWS pass — see its
-    // scaladoc.
-    // RANGE frames: rows sharing a rowtime are SQL PEERS — the frame's
-    // upper bound is the current row's TIME, so every peer's frame
-    // contains all of them and they read ONE shared aggregate (Flink's
-    // RowTimeRange{Bounded,Unbounded}PrecedingFunction fires one timer
-    // per timestamp and emits the same accumulator to the whole list).
-    // Peer groups cannot split across micro-batches: all non-late rows
-    // at a timestamp release in the batch where the watermark crossed
-    // it, and a same-t row arriving after that is late and dropped.
-    val multi = new Slots.Multi(frames, ops)
-
-    def update(key: K, rows: Iterator[(K, java.sql.Timestamp, Seq[Double])],
-        state: GroupState[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])])
-        : Iterator[(K, Long, Seq[Double], Seq[Double])] = {
-      val (pending0, acc0, frame0) = state.getOption.getOrElse(
-        (Seq.empty[(Long, Seq[Double])], Seq.empty[Double],
-          Seq.empty[(Long, Seq[Double])]))
-      val wm = state.getCurrentWatermarkMs()
-      val buf = pending0 ++ rows.map { r =>
-        require(r._3.length == frames.length,
-          s"overMultiAggsByKey: row carries ${r._3.length} slots, frames has ${frames.length}")
-        (r._2.getTime, r._3)
-      }.filter(_._1 > wm)
-      val (ready, pending) = buf.partition(_._1 <= wm)
-      val (outRows, acc, frm) = multi.release(ready, acc0, frame0)
-      val out = outRows.map { case (t, v, sums) => (key, t, v, sums) }
-      // the unbounded accumulators are PERMANENT state (Flink's
-      // unbounded-preceding functions): a contributing-nothing
-      // invocation must not reset them
-      val removable =
-        if (multi.permanent) state.getOption.isEmpty
-        else pending0.isEmpty && frame0.isEmpty
-      if (pending.isEmpty && out.isEmpty && removable) {
-        if (state.exists) state.remove()
-      } else {
-        state.update((pending, acc, frm))
-        if (pending.nonEmpty)
-          state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-      }
-      out.iterator
-    }
-
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   /** PROCESSING-TIME streaming OVER: the ProcTime{Rows,Range}{Bounded,

@@ -3,13 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
-/** The CHAINED multi-spec streaming OVER pass on transformWithState —
-  * the one StatefulOps-family operator whose only body is a TWS
-  * processor, because it must declare an event-time OUTPUT column so a
-  * further pass can consume it as watermarked input (`StreamOverSql`
-  * chains one pass per distinct PARTITION BY). The single-spec fused
-  * pass runs on flatMapGroupsWithState
-  * (`StatefulOps.overMultiAggsByKey`); both delegate the release loop
+/** The event-time streaming OVER pass on transformWithState — the one
+  * body of every event-time OVER. `StreamOverSql` chains one pass per
+  * distinct PARTITION BY; a statement with one spec is a chain of length
+  * one. The pass declares an event-time OUTPUT column so a further pass
+  * can consume it as watermarked input, and delegates the release loop
   * to `StatefulOps.Slots.Multi`, so frame semantics are defined once.
   *
   * State is the WATERMARK-RELEASE BUFFER (reference flink-table-runtime
@@ -24,7 +22,8 @@ import org.apache.spark.sql.streaming._
   * flush even when the key sees no further traffic.
   *
   * Runtime prerequisite: transformWithState requires the RocksDB state
-  * store provider. */
+  * store provider; every continuous INSERT whose plan runs this pass
+  * starts under it (`ChangelogSql.startStream`). */
 object StatefulTws {
 
   // object-level vals: processor init runs per task per micro-batch and
@@ -37,16 +36,21 @@ object StatefulTws {
 
   /** Single-timer discipline: drop whatever is armed and re-register at
     * `at` (clamped above the watermark, the same clamp the fMGWS
-    * event-time operators apply). */
+    * event-time operators apply).
+    *
+    * The timer sits AT the earliest pending rowtime, so a row releases in
+    * the first batch whose watermark reaches it. Every row a batch
+    * releases is therefore newer than the previous batch's watermark —
+    * what Spark requires of an operator with an event-time output column
+    * (a row at or below it fails the query with
+    * EMITTING_ROWS_OLDER_THAN_WATERMARK_NOT_ALLOWED). A timer one past
+    * the rowtime — flatMapGroupsWithState's strictly-exceeds timeout —
+    * would hold a row whose rowtime equals a batch's watermark to the
+    * next batch, and that batch would fail. Release timing may differ
+    * from the fMGWS reference by a batch; the released rows do not. */
   private def rearm(h: StatefulProcessorHandle, at: Option[Long], wm: Long): Unit = {
     h.listTimers().foreach(t => h.deleteTimer(t.asInstanceOf[Long]))
-    // t + 1, not t: fMGWS event-time timeouts fire only when the
-    // watermark strictly EXCEEDS the timestamp, while a TWS timer fires
-    // at equality — the timer registers strictly AFTER the fMGWS timeout
-    // value (max(t, wm+1) + 1, covering the watermark-clamped corner
-    // too) or rows would release one watermark advance earlier than the
-    // fMGWS fused pass (timing parity)
-    at.foreach(t => h.registerTimer(math.max(t, wm + 1) + 1))
+    at.foreach(t => h.registerTimer(math.max(t, wm + 1)))
   }
 
   /** One pass of the CHAINED multi-spec pipeline: rows carry a
@@ -90,9 +94,8 @@ object StatefulTws {
         val buf = (if (pending.exists()) pending.get().toSeq else Seq.empty) ++ fresh
         val (ready, still) = buf.partition(_._1 <= wm)
         // total release order: the shared comparator on (t, values),
-        // composite as the final tiebreak; Multi.release re-sorts with a
-        // STABLE sort over the same primary comparator, so its k-th
-        // output is this k-th row
+        // composite as the final tiebreak; Multi.release keeps this
+        // order, so its k-th output is this k-th row
         val sorted = ready.sortWith { (a, b) =>
           if (StatefulOps.Slots.tieLess((a._1, a._3), (b._1, b._3))) true
           else if (StatefulOps.Slots.tieLess((b._1, b._3), (a._1, a._3))) false
@@ -136,10 +139,10 @@ object StatefulTws {
       flush(Nil, tv.getCurrentWatermarkInMs())
   }
 
-  /** One pass of the CHAINED multi-spec streaming OVER — the reference
-    * chains one StreamExecOverAggregate operator per window spec
-    * (different PARTITION BY per spec); here each pass is this operator
-    * re-keyed on its spec's partition column. Input rows carry
+  /** One pass of the CHAINED streaming OVER — the reference chains one
+    * StreamExecOverAggregate operator per window spec (different
+    * PARTITION BY per spec); here each pass is this operator re-keyed on
+    * its spec's partition column. Input rows carry
     * (groupKey, compositeRowKey, rowtime, vector); the output declares
     * its TIMESTAMP column as event time (`transformWithState`'s
     * eventTimeColumnName form), so a further pass consumes it as

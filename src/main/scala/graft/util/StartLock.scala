@@ -4,8 +4,8 @@ package graft.util
   * around `.start()` (the RocksDB state-store provider for
   * transformWithState lowerings, `spark.sql.shuffle.partitions` for
   * per-job state sizing — the set/restore pattern of
-  * `ChangelogSql.startChangelog`, the one start every continuous
-  * changelog route goes through).
+  * `ChangelogSql.startStream`, the one start every continuous INSERT
+  * goes through).
   *
   * Why a lock and not a cloned session: `DataStreamWriter.start()`
   * snapshots the conf of the session the DataFrame is BOUND to, and the

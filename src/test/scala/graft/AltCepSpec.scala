@@ -210,7 +210,7 @@ class AltCepSpec extends AnyFunSuite {
     // B-variant run seeded at t=2 SURVIVES the first emission and both
     // completions at p@3 emit — where PAST LAST ROW prunes it
     val first = AltCep.run(
-      AltCep.compile(altP, after = AfterMatch.SkipToFirst(0)), ev)
+      AltCep.compile(altP, after = AfterMatch.SkipToFirst(Set(0))), ev)
     assert(first.toSet == Set(
       Seq(Seq(1L), Seq(), Seq(3L)), Seq(Seq(), Seq(2L), Seq(3L))), s"$first")
     val past = AltCep.run(
@@ -220,11 +220,11 @@ class AltCepSpec extends AnyFunSuite {
     // every run is pruned and only the preferred match emits (the linear
     // executor's minOption.getOrElse(MaxValue) rule, branch-aware)
     val absent = AltCep.run(
-      AltCep.compile(altP, after = AfterMatch.SkipToFirst(1)), ev)
+      AltCep.compile(altP, after = AfterMatch.SkipToFirst(Set(1))), ev)
     assert(absent == List(Seq(Seq(1L), Seq(), Seq(3L))), s"$absent")
     // SKIP TO LAST P: boundary = the match end; nothing can rematch
     val last = AltCep.run(
-      AltCep.compile(altP, after = AfterMatch.SkipToLast(2)), ev)
+      AltCep.compile(altP, after = AfterMatch.SkipToLast(Set(2))), ev)
     assert(last == List(Seq(Seq(1L), Seq(), Seq(3L))), s"$last")
   }
 
@@ -234,7 +234,7 @@ class AltCepSpec extends AnyFunSuite {
       AltCep.compile(Seq(Group(IndexedSeq(alt), 1, -1)))
     }
     assertThrows[IllegalArgumentException] { // skip variable out of range
-      AltCep.compile(sAltP, after = AfterMatch.SkipToFirst(9))
+      AltCep.compile(sAltP, after = AfterMatch.SkipToFirst(Set(9)))
     }
     assertThrows[IllegalArgumentException] { // 2+4+...+2^10 variants
       AltCep.compile(Seq(Group(IndexedSeq(alt), 1, 10)))

@@ -214,12 +214,12 @@ class CepSpec extends AnyFunSuite {
     // doc example: a+ b with SKIP_TO_LAST[a] -> a1a2a3+b and a3+b only
     val base = IndexedSeq(StepDef(Quant.OneOrMore, rep = Rep.Relaxed), StepDef())
     val evs = Seq(1L -> m(0), 2L -> m(0), 3L -> m(0), 4L -> m(1))
-    val toLast = Pattern(base, within = 100, after = AfterMatch.SkipToLast(0))
+    val toLast = Pattern(base, within = 100, after = AfterMatch.SkipToLast(Set(0)))
     assert(AltCep.run(AltCep.compile(toLast), evs).toSet == Set(
       Seq(Seq(1L, 2L, 3L), Seq(4L)),
       Seq(Seq(3L), Seq(4L))))
     // SKIP_TO_FIRST[a]: boundary is a1 -> nothing pruned, all three emit
-    val toFirst = Pattern(base, within = 100, after = AfterMatch.SkipToFirst(0))
+    val toFirst = Pattern(base, within = 100, after = AfterMatch.SkipToFirst(Set(0)))
     assert(AltCep.run(AltCep.compile(toFirst), evs).size == 3)
   }
 

@@ -259,7 +259,7 @@ class GroupCepSpec extends AnyFunSuite {
     // A B{1,2} D — logical ids A=0 B=1 D=2; B expands to two copies
     val c = AltCep.compile(Seq(
       Seg.step(), Seg.timesRange(1, 2, StepDef()), Seg.step()),
-      within = 1000L, after = AfterMatch.SkipToLast(1))
+      within = 1000L, after = AfterMatch.SkipToLast(Set(1)))
     val got = AltCep.run(c, Seq(
       (1L, m(0)), (2L, m(1)), (3L, m(0)), (4L, m(1)), (5L, m(2)),
       (6L, m(1)), (7L, m(2))))
@@ -276,7 +276,7 @@ class GroupCepSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("64"))
     val e2 = intercept[IllegalArgumentException](AltCep.compile(
       Seq(Seg.oneOrMore(StepDef(), StepDef())),
-      after = AfterMatch.SkipToFirst(9))) // out-of-range logical id
+      after = AfterMatch.SkipToFirst(Set(9)))) // out-of-range logical id
     assert(e2.getMessage.contains("out of range"))
     val c = AltCep.compile(Seq(
       Seg.step(), Seg.timesRange(1, 3, StepDef(), StepDef())))

@@ -117,6 +117,45 @@ class MatchSqlSpec extends AnyFunSuite {
     assert(got == Set((1L, 1L, null, 3L), (1L, null, 2L, 3L)), s"$got")
   }
 
+  test("SKIP TO FIRST/LAST of a variable repeated across branches bounds on every leaf") {
+    import spark.implicits._
+    // (match_no, A.t, end time) of PATTERN (pattern) over `view`; `ends`
+    // are the variables that can close a match
+    def run(view: String, pattern: String, skip: String,
+        ends: Seq[String]): Seq[(Long, Long, Long)] = {
+      val measures = ("FIRST(A.t) AS a_t" +:
+        ends.map(v => s"LAST($v.t) AS ${v.toLowerCase}_t")).mkString(", ")
+      val defines = ("A" +: ends).map(v => s"$v AS typ = '${v.toLowerCase}'")
+        .mkString(", ")
+      val end = ends.map(v => s"${v.toLowerCase}_t").mkString("COALESCE(", ", ", ")")
+      Engine.sql(spark, s"""
+        SELECT CAST(match_no AS BIGINT), a_t, $end FROM $view MATCH_RECOGNIZE (
+          PARTITION BY uid ORDER BY t, eid
+          MEASURES $measures
+          ONE ROW PER MATCH
+          PATTERN ($pattern)
+          AFTER MATCH $skip
+          DEFINE $defines)""").as[(Long, Long, Long)].collect().toSeq.sorted
+    }
+    // only the left branch can match on b@3, only the right one on c@3
+    for (close <- Seq("b", "c")) {
+      Seq((1L, 1L, 1L, "a"), (1L, 2L, 2L, "a"), (1L, 3L, 3L, close))
+        .toDF("uid", "t", "eid", "typ").createOrReplaceTempView(s"mr_rep_$close")
+    }
+    for (skip <- Seq("SKIP TO FIRST A", "SKIP TO LAST A")) {
+      val altB = run("mr_rep_b", "A B | A C", skip, Seq("B", "C"))
+      val b = run("mr_rep_b", "A B", skip, Seq("B"))
+      assert(altB == b, s"[$skip] (A B | A C) $altB != (A B) $b")
+      val altC = run("mr_rep_c", "A B | A C", skip, Seq("B", "C"))
+      val c = run("mr_rep_c", "A C", skip, Seq("C"))
+      assert(altC == c, s"[$skip] (A B | A C) $altC != (A C) $c")
+      // the boundary is a@1, so the run that started at a@2 survives: a
+      // left-branch win used to find no bound A (+inf) and drop it
+      assert(altB.map(_._2) == Seq(1L, 2L) && altC.map(_._2) == Seq(1L, 2L),
+        s"[$skip] b: $altB c: $altC")
+    }
+  }
+
   test("ALL ROWS PER MATCH dispatches to the all-rows executor") {
     import spark.implicits._
     fixture()

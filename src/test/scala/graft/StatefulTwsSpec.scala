@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.{OverPass, overFmgws, overTws}
 import graft.streaming.{CoProcess, StatefulOps}
 import graft.streaming.StatefulOps.OverFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -7,15 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
-/** Every StatefulOps operator (and CoProcess) on the RocksDB state store
-  * provider must emit EXACTLY what it emits on the default provider for
-  * the same MemoryStream script — same rows, same per-key order (these
-  * operators' outputs are deterministically ordered by construction).
-  * Each test replays one script on both providers and asserts plain
-  * equality of the collected sinks, plus the hand-computed expectations.
-  * (Test names keep the "TWS" wording of the transformWithState ports
-  * these scripts were written for; those ports are gone and the
-  * flatMapGroupsWithState operator is the one body.) */
+/** Each test replays one MemoryStream script twice and asserts plain
+  * equality of the collected sinks — same rows, same per-key order (these
+  * operators' outputs are deterministically ordered by construction) —
+  * plus the hand-computed expectations:
+  *  - the event-time OVER pass (`StatefulTws.overMultiAggsChained`, the
+  *    one body every event-time OVER runs, on RocksDB) against the
+  *    independent flatMapGroupsWithState reference
+  *    (`FmgwsReference.overMultiAggsByKey`, default provider);
+  *  - the flatMapGroupsWithState operators (event-time sort, top-N,
+  *    CoProcess) on RocksDB against the same body on the default
+  *    provider. */
 class StatefulTwsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -25,8 +28,8 @@ class StatefulTwsSpec extends AnyFunSuite {
     * previous provider after. */
   def withRocksDB[T](body: => T): T = TestSpark.withRocksDB(body)
 
-  /** The collected sink of a one-slot [[StatefulOps.overMultiAggsByKey]] run,
-    * as (k, t, v, frame value). */
+  /** The collected sink of a one-slot OVER pass run, as
+    * (k, t, v, frame value). */
   private def oneSlot(sink: String): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])].collect().toSeq
@@ -65,13 +68,13 @@ class StatefulTwsSpec extends AnyFunSuite {
 
   // ---- running sum (unbounded-preceding OVER) --------------------------
 
-  private def runRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRunning(sink: String, over: OverPass): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
+    val out = over(watermarked,
       Vector(OverFrame.Unbounded), null)
     val q = out.toDF("k", "t", "v", "running").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
@@ -90,28 +93,28 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS running sum: exact equality incl. accumulator persistence") {
-    val ref = runRunning("twss_rs_ref")
-    val rocks = withRocksDB { runRunning("twss_rs_new") }
+    val ref = runRunning("twss_rs_ref", overFmgws)
+    val tws = withRocksDB { runRunning("twss_rs_new", overTws) }
     // NaN-safe comparison: Scala's == on Double treats NaN != NaN
     def canon(s: Seq[(Long, Long, Double, Double)]) =
       s.map { case (k, t, v, r) => (k, t, v.toString, r.toString) }
-    assert(canon(rocks) == canon(ref), s"rocks=$rocks ref=$ref")
+    assert(canon(tws) == canon(ref), s"tws=$tws ref=$ref")
     // sanity: running sums follow event time; the NaN input at t=60
     // reads the unchanged accumulator
-    assert(ref.map(r => (r._2, r._4)).take(5) ==
+    assert(tws.map(r => (r._2, r._4)).take(5) ==
       Seq((50000L, 1.0), (60000L, 1.0), (80000L, 3.0), (100000L, 6.0),
         (200000L, 10.0)))
   }
 
   // ---- bounded ROWS frame OVER ----------------------------------------
 
-  private def runRowsBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRowsBounded(sink: String, over: OverPass): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
+    val out = over(watermarked,
       Vector(OverFrame.Rows(3)), null)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
@@ -128,22 +131,22 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS bounded ROWS frame: exact equality incl. frame carry-over") {
-    val ref = runRowsBounded("twss_rb_ref")
-    val rocks = withRocksDB { runRowsBounded("twss_rb_new") }
-    assert(rocks == ref, s"rocks=$rocks ref=$ref")
+    val ref = runRowsBounded("twss_rb_ref", overFmgws)
+    val tws = withRocksDB { runRowsBounded("twss_rb_new", overTws) }
+    assert(tws == ref, s"tws=$tws ref=$ref")
     // frame ROWS 2 PRECEDING..CURRENT: 1, 3, 6, 9 then (3+4+5)=12 across batches
-    assert(ref.map(_._4) == Seq(1.0, 3.0, 6.0, 9.0, 12.0))
+    assert(tws.map(_._4) == Seq(1.0, 3.0, 6.0, 9.0, 12.0))
   }
 
   // ---- bounded RANGE frame OVER ---------------------------------------
 
-  private def runRangeBounded(sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRangeBounded(sink: String, over: OverPass): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
+    val out = over(watermarked,
       Vector(OverFrame.Range(15000L)), null)
     val q = out.toDF("k", "t", "v", "frame_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
@@ -161,12 +164,12 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS bounded RANGE frame: exact equality incl. time-based eviction") {
-    val ref = runRangeBounded("twss_rg_ref")
-    val rocks = withRocksDB { runRangeBounded("twss_rg_new") }
-    assert(rocks == ref, s"rocks=$rocks ref=$ref")
+    val ref = runRangeBounded("twss_rg_ref", overFmgws)
+    val tws = withRocksDB { runRangeBounded("twss_rg_new", overTws) }
+    assert(tws == ref, s"tws=$tws ref=$ref")
     // RANGE 15s: 1; 1+2; the t=32 PEERS both read 2+2.5+3 (10 evicted);
     // 2.5+3+4 at 45 (20 evicted); 5 alone — tied rowtimes share one value
-    assert(ref.map(_._4) == Seq(1.0, 3.0, 7.5, 7.5, 9.5, 5.0))
+    assert(tws.map(_._4) == Seq(1.0, 3.0, 7.5, 7.5, 9.5, 5.0))
     // batch cross-check: Spark's own RANGE frame has the same peer rule
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -179,18 +182,18 @@ class StatefulTwsSpec extends AnyFunSuite {
           .orderBy(col("ts").cast("long") * 1000).rangeBetween(-15000, 0))
           .as("frame_sum"))
       .as[(Long, Long, Double, Double)].collect().toSet
-    assert(ref.toSet == batch, s"stream ${ref.toSet} != batch $batch")
+    assert(tws.toSet == batch, s"stream ${tws.toSet} != batch $batch")
   }
 
   // ---- unbounded RANGE frame OVER (SQL default; peers share) ----------
 
-  private def runRangeRunning(sink: String): Seq[(Long, Long, Double, Double)] = {
+  private def runRangeRunning(sink: String, over: OverPass): Seq[(Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
+    val out = over(watermarked,
       Vector(OverFrame.UnboundedRange), null)
     val q = out.toDF("k", "t", "v", "run_sum").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
@@ -206,16 +209,16 @@ class StatefulTwsSpec extends AnyFunSuite {
   }
 
   test("TWS unbounded RANGE frame: exact equality; tied rowtimes share") {
-    val ref = runRangeRunning("twss_rr_ref")
-    val rocks = withRocksDB { runRangeRunning("twss_rr_new") }
-    assert(rocks == ref, s"rocks=$rocks ref=$ref")
+    val ref = runRangeRunning("twss_rr_ref", overFmgws)
+    val tws = withRocksDB { runRangeRunning("twss_rr_new", overTws) }
+    assert(tws == ref, s"tws=$tws ref=$ref")
     // the SQL default frame: both t=20 peers read 1+2+3, not 3-then-6
-    assert(ref.map(_._4) == Seq(1.0, 6.0, 6.0, 11.0))
+    assert(tws.map(_._4) == Seq(1.0, 6.0, 6.0, 11.0))
   }
 
   // ---- fused multi-slot OVER ------------------------------------------
 
-  private def runOverAggs(sink: String,
+  private def runOverAggs(sink: String, over: OverPass,
       frame: graft.streaming.StatefulOps.OverFrame)
       : Seq[(Long, Long, Seq[Double], Seq[Double])] = {
     import spark.implicits._
@@ -225,7 +228,7 @@ class StatefulTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked, ops.map(_ => frame), ops)
+    val out = over(watermarked, ops.map(_ => frame), ops)
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -250,19 +253,19 @@ class StatefulTwsSpec extends AnyFunSuite {
         (OverFrame.Range(15000L), "range"),
         (OverFrame.UnboundedRange, "urange"),
         (OverFrame.Unbounded: OverFrame, "unb"))) {
-      val ref = runOverAggs(s"twss_oa_${tag}_ref", frame)
-      val rocks = withRocksDB { runOverAggs(s"twss_oa_${tag}_new", frame) }
-      assert(canon(rocks) == canon(ref), s"[$tag] rocks=$rocks ref=$ref")
-      assert(ref.size == 5, s"[$tag] expected 5 released rows, got $ref")
+      val ref = runOverAggs(s"twss_oa_${tag}_ref", overFmgws, frame)
+      val tws = withRocksDB { runOverAggs(s"twss_oa_${tag}_new", overTws, frame) }
+      assert(canon(tws) == canon(ref), s"[$tag] tws=$tws ref=$ref")
+      assert(tws.size == 5, s"[$tag] expected 5 released rows, got $tws")
     }
-    // spot-pin the RANGE peer rule on the reference output: both t=20 rows
-    // share one aggregate under a RANGE frame
-    val rng = runOverAggs("twss_oa_pin", OverFrame.Range(15000L))
+    // spot-pin the RANGE peer rule: both t=20 rows share one aggregate
+    // under a RANGE frame
+    val rng = withRocksDB { runOverAggs("twss_oa_pin", overTws, OverFrame.Range(15000L)) }
       .filter(_._2 == 20000L).map(_._4)
     assert(rng.size == 2 && rng.distinct.size == 1, s"peers differ: $rng")
   }
 
-  private def runOverMulti(sink: String)
+  private def runOverMulti(sink: String, over: OverPass)
       : Seq[(Long, Long, Seq[Double], Seq[Double])] = {
     import spark.implicits._
     import graft.streaming.StatefulOps.{OverFrame, SlotOp}
@@ -276,7 +279,7 @@ class StatefulTwsSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Timestamp, Seq[Double])]
     val watermarked = in.toDF().toDF("k", "ts", "vs")
       .withWatermark("ts", "10 seconds").as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked, frames, ops)
+    val out = over(watermarked, frames, ops)
     val q = out.toDF("k", "t", "vs", "aggs").writeStream
       .outputMode("append").format("memory").queryName(sink).start()
     try {
@@ -297,19 +300,73 @@ class StatefulTwsSpec extends AnyFunSuite {
     def canon(s: Seq[(Long, Long, Seq[Double], Seq[Double])]) =
       s.sortBy(r => (r._2, r._3.mkString(",")))
         .map { case (k, t, vs, ag) => (k, t, vs.mkString(","), ag.mkString(",")) }
-    val ref = runOverMulti("twss_om_ref")
-    val rocks = withRocksDB { runOverMulti("twss_om_new") }
-    assert(canon(rocks) == canon(ref), s"rocks=$rocks ref=$ref")
-    assert(ref.size == 5, s"expected 5 released rows, got $ref")
+    val ref = runOverMulti("twss_om_ref", overFmgws)
+    val tws = withRocksDB { runOverMulti("twss_om_new", overTws) }
+    assert(canon(tws) == canon(ref), s"tws=$tws ref=$ref")
+    assert(tws.size == 5, s"expected 5 released rows, got $tws")
     // pin the per-slot semantics on the released t=30 row: SUM over the
     // last 2 rows (Rows(2)), MIN over [15s,30s], FIRST non-null ever
     // (2.0 — the t=10 slot-2 input is the NULL sentinel), LAST non-null
     // so far (7.0)
-    val r30 = ref.find(_._2 == 30000L).get._4
+    val r30 = tws.find(_._2 == 30000L).get._4
     assert(r30(0) == 2.5 + 3.0, s"sum slot: $r30")
     assert(r30(1) == 4.0, s"min slot: $r30")
     assert(r30(2) == 2.0, s"first slot: $r30")
     assert(r30(3) == 7.0, s"last slot: $r30")
+  }
+
+  /** The OVER pass under test over `batches` of one key's
+    * (t seconds, value) rows, each value riding four slots with four
+    * frames, then two clock rows that release every scripted row; the
+    * collected sink below the clock. */
+  private def runSplit(sink: String, batches: Seq[Seq[(Long, Double)]])
+      : Seq[(Long, Long, Seq[Double], Seq[Double])] = {
+    import spark.implicits._
+    import graft.streaming.StatefulOps.SlotOp
+    implicit val sqlCtx = spark.sqlContext
+    val frames = Vector[OverFrame](OverFrame.Unbounded, OverFrame.Rows(2),
+      OverFrame.Range(15000L), OverFrame.UnboundedRange)
+    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+    // a 1-minute delay: no scripted row is late in any split
+    val watermarked = in.toDF().toDF("k", "ts", "vs")
+      .withWatermark("ts", "1 minute").as[(Long, Timestamp, Seq[Double])]
+    val out = overTws(watermarked, frames, frames.map(_ => SlotOp.Sum))
+    val q = out.toDF("k", "t", "vs", "aggs").writeStream
+      .outputMode("append").format("memory").queryName(sink).start()
+    try {
+      (batches :+ Seq((200L, 0.0)) :+ Seq((300L, 0.0))).foreach { b =>
+        in.addData(b.map { case (t, v) => (1L, ts(t), Seq.fill(4)(v)) })
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])].collect().toSeq
+      .filter(_._2 < 100000L)
+  }
+
+  test("TWS OVER: tied rowtimes give the same rows however the input is split or ordered") {
+    val rows = Seq((10L, 1.0), (20L, 2.5), (20L, 2.0), (20L, 3.0), (30L, 4.0))
+    val runs = withRocksDB {
+      Seq(
+        "one" -> Seq(rows),
+        "one_rev" -> Seq(rows.reverse),
+        // the t=20 peers straddle the micro-batch boundary
+        "two" -> Seq(rows.take(3), rows.drop(3)),
+        "two_rev" -> Seq(rows.reverse.take(2), rows.reverse.drop(2)))
+        .map { case (tag, batches) => tag -> runSplit(s"twss_split_$tag", batches) }
+    }
+    val (_, first) = runs.head
+    runs.tail.foreach { case (tag, got) =>
+      assert(got == first, s"[$tag] $got != [one] $first") }
+    // ties release in (t, values) order: 2.0, 2.5, 3.0 at t=20
+    assert(first.map(_._3.head) == Seq(1.0, 2.0, 2.5, 3.0, 4.0), s"order: $first")
+    // per frame: unbounded ROWS, ROWS 1 PRECEDING, RANGE 15s, RANGE
+    // unbounded (the t=20 peers share the RANGE values)
+    assert(first.map(_._4) == Seq(
+      Seq(1.0, 1.0, 1.0, 1.0),
+      Seq(3.0, 3.0, 8.5, 8.5),
+      Seq(5.5, 4.5, 8.5, 8.5),
+      Seq(8.5, 5.5, 8.5, 8.5),
+      Seq(12.5, 7.0, 11.5, 12.5)), s"aggregates: $first")
   }
 
   // ---- append-only top-N ----------------------------------------------

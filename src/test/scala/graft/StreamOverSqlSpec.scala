@@ -14,9 +14,18 @@ class StreamOverSqlSpec extends AnyFunSuite {
 
   private val h = math.abs(getClass.getName.hashCode)
 
+  /** Each stateful operator of `q`'s last progress as (operator name,
+    * runs on the RocksDB provider). */
+  private def stateOps(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[(String, Boolean)] =
+    q.lastProgress.stateOperators.toSeq.map(o => (o.operatorName,
+      o.customMetrics.keySet().toString.toLowerCase.contains("rocksdb")))
+
+  /** Runs the one-OVER-item statement with `overClause` end to end and
+    * asserts batch-window equality; returns [[stateOps]] of the query. */
   private def runOne(tag: String, overClause: String,
       batchFrame: org.apache.spark.sql.expressions.WindowSpec,
-      tied: Boolean = false): Unit = {
+      tied: Boolean = false): Seq[(String, Boolean)] = {
     val (src, sink) = (s"ovr_src_${tag}_$h", s"ovr_sink_${tag}_$h")
     Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
     Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
@@ -80,6 +89,7 @@ class StreamOverSqlSpec extends AnyFunSuite {
           r.getDouble(2), r.getDouble(3))).filter(_._2 < cutoff).toSet
       assert(got == want && want.size == (if (tied) 6 else 5),
         s"[$tag] stream $got != batch $want")
+      stateOps(q)
     } finally {
       q.stop()
       Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
@@ -164,12 +174,14 @@ class StreamOverSqlSpec extends AnyFunSuite {
   }
 
   test("fused OVER lowering on the RocksDB provider equals the batch window result") {
-    // same end-to-end harness, default RANGE frame with tied rowtimes:
-    // the fused pass on the RocksDB store must produce the identical
-    // batch-window result
-    TestSpark.withRocksDB {
-      runOne("twsroute", "", Window.partitionBy("k").orderBy("ts"), tied = true)
-    }
+    // same end-to-end harness, default RANGE frame with tied rowtimes, on
+    // the session's default provider: the statement's plan runs the
+    // transformWithState pass, so its start pins RocksDB by itself, and
+    // the pass must produce the identical batch-window result
+    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+      .exists(_.contains("RocksDB")), "session must start on its default provider")
+    val ops = runOne("twsroute", "", Window.partitionBy("k").orderBy("ts"), tied = true)
+    assert(ops == Seq(("transformWithStateExec", true)), s"state operators: $ops")
   }
 
   test("PROCTIME() attribute: ORDER BY pt runs the arrival-order executors") {
@@ -202,6 +214,9 @@ class StreamOverSqlSpec extends AnyFunSuite {
       // watermark ever needed
       assert(got == Set((1L, 10.0, 10.0), (1L, 2.0, 12.0), (1L, 4.0, 6.0),
         (2L, 5.0, 5.0), (2L, 1.0, 6.0)), s"proc-time stream: $got")
+      // no transformWithState in the plan: the session's provider
+      val ops = stateOps(q)
+      assert(ops.nonEmpty && ops.forall(!_._2), s"state operators: $ops")
     } finally {
       q.stop()
       Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
@@ -352,7 +367,7 @@ class StreamOverSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("mismatched PARTITION BY / RESPECT NULLS are rejected loudly") {
+  test("mismatched ORDER BY / RESPECT NULLS are rejected loudly") {
     val (src, sink) = (s"ovr_src_mm_$h", s"ovr_sink_mm_$h")
     Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
     Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
@@ -360,19 +375,19 @@ class StreamOverSqlSpec extends AnyFunSuite {
       CREATE TABLE $src (k BIGINT, v DOUBLE, ts TIMESTAMP,
         WATERMARK FOR ts AS ts - INTERVAL '1' SECOND)""")
     try {
-      // differing PARTITION BY -> matches() is false -> falls through to
-      // spark.sql -> Spark's own streaming planner rejects the window
-      // (frames may differ since r8, partition/order may not)
-      val e = intercept[Exception] {
-        val q = Engine.sqlStreamInsert(spark, s"""
+      // differing ORDER BY -> matches() is false -> falls through to
+      // spark.sql, whose analyzed plan holds a streaming window: the
+      // guidance error (frames and PARTITION BY may differ per item,
+      // the ORDER BY rowtime may not)
+      val e = intercept[IllegalArgumentException] {
+        Engine.sqlStreamInsert(spark, s"""
           INSERT INTO $sink
           SELECT k, SUM(v) OVER (PARTITION BY k ORDER BY ts) AS s,
-                 SUM(v) OVER (ORDER BY ts) AS s2
+                 SUM(v) OVER (PARTITION BY k ORDER BY v) AS s2
           FROM $src""",
           java.nio.file.Files.createTempDirectory("graft-over-mm").toString)
-        try q.processAllAvailable() finally q.stop()
       }
-      assert(e.getMessage != null)
+      assert(e.getMessage.contains("unsupported streaming OVER"), e.getMessage)
       // RESPECT NULLS cannot ride the NaN-sentinel encoding and differs
       // from the reference's IGNORE-NULLS aggregates: rejected in lower()
       val e2 = intercept[IllegalArgumentException] {
@@ -568,7 +583,9 @@ class StreamOverSqlSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-spec OVER without the RocksDB provider rejects loudly") {
+  test("multi-spec OVER on the default session equals batch") {
+    // no provider set by hand: the chained transformWithState passes
+    // start on RocksDB through the provider rule
     val (src, sink) = (s"ovr_src_mrej_$h", s"ovr_sink_mrej_$h")
     Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
     Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
@@ -577,20 +594,43 @@ class StreamOverSqlSpec extends AnyFunSuite {
       CREATE TABLE $src (k BIGINT, g STRING, v DOUBLE, ts TIMESTAMP,
         WATERMARK FOR ts AS ts - INTERVAL '5' MINUTE)""")
     Engine.sql(spark,
-      s"CREATE TABLE $sink (a DOUBLE, b DOUBLE) USING parquet")
-    val e = intercept[IllegalArgumentException] {
-      Engine.sqlStreamInsert(spark, s"""
-        INSERT INTO $sink
-        SELECT SUM(v) OVER (PARTITION BY k ORDER BY ts) AS a,
-               SUM(v) OVER (PARTITION BY g ORDER BY ts) AS b
-        FROM $src""",
-        java.nio.file.Files.createTempDirectory("graft-over-mrej").toString)
+      s"CREATE TABLE $sink (ts TIMESTAMP, a DOUBLE, b DOUBLE) USING parquet")
+    val q = Engine.sqlStreamInsert(spark, s"""
+      INSERT INTO $sink
+      SELECT ts, SUM(v) OVER (PARTITION BY k ORDER BY ts) AS a,
+             SUM(v) OVER (PARTITION BY g ORDER BY ts) AS b
+      FROM $src""",
+      java.nio.file.Files.createTempDirectory("graft-over-mrej").toString)
+    try {
+      Engine.sql(spark, s"""INSERT INTO $src VALUES
+        (1, 'a', 10.0, TIMESTAMP '2024-01-01 00:00:01'),
+        (2, 'a', 7.0,  TIMESTAMP '2024-01-01 00:00:03'),
+        (1, 'b', 2.5,  TIMESTAMP '2024-01-01 00:00:05')""")
+      q.processAllAvailable(); q.processAllAvailable(); q.processAllAvailable()
+      Engine.sql(spark, s"""INSERT INTO $src VALUES
+        (7, 'x', 0.0, TIMESTAMP '2024-01-01 01:00:00')""")
+      q.processAllAvailable(); q.processAllAvailable()
+      Engine.sql(spark, s"""INSERT INTO $src VALUES
+        (7, 'x', 0.0, TIMESTAMP '2024-01-01 02:00:00')""")
+      q.processAllAvailable(); q.processAllAvailable()
+      val cutoff = java.sql.Timestamp.valueOf("2024-01-01 00:50:00").getTime
+      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getDouble(1), r.getDouble(2)))
+        .filter(_._1 < cutoff).toSet
+      val got = canon(spark.table(sink).select("ts", "a", "b"))
+      val want = canon(WatermarkDdl.read(spark, src).select(col("ts"),
+        sum("v").over(Window.partitionBy("k").orderBy("ts")).as("a"),
+        sum("v").over(Window.partitionBy("g").orderBy("ts")).as("b")))
+      assert(want.size == 3, s"fixture drift: $want")
+      assert(got == want, s"multi-spec OVER diverged:\n$got\nvs\n$want")
+      assert(stateOps(q) == Seq.fill(2)(("transformWithStateExec", true)),
+        s"state operators: ${stateOps(q)}")
+    } finally {
+      q.stop()
+      Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
+      Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
+      Engine.sql(spark, s"DROP TABLE IF EXISTS $sink")
     }
-    assert(e.getMessage.contains("RocksDB"),
-      s"expected the RocksDB-provider guidance, got: ${e.getMessage}")
-    Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
-    Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
-    Engine.sql(spark, s"DROP TABLE IF EXISTS $sink")
   }
 
   /** Geometric mean as a user-defined OVER aggregate: accumulator =

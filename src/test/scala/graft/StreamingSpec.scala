@@ -327,26 +327,32 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import StatefulOps.{OverFrame, SlotOp}
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val watermarked = in.toDF().toDF("k", "ts", "vs")
-      .withWatermark("ts", "10 seconds")
-      .as[(Long, Timestamp, Seq[Double])]
-    // slot 0 sums, slot 1 takes the frame MIN with NaN-as-NULL inputs
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
-      Vector.fill(2)(OverFrame.Rows(3)), Vector(SlotOp.Sum, SlotOp.Min))
-    val q = out.toDF("k", "t", "vs", "aggs").writeStream
-      .outputMode("append").format("memory").queryName("minmax_out").start()
-    in.addData((1L, ts(10), Seq(1.0, Double.NaN)), // NULL min input
-      (1L, ts(20), Seq(2.0, 5.0)), (1L, ts(30), Seq(0.5, 2.0)))
-    q.processAllAvailable()
-    in.addData((1L, ts(100), Seq(0.0, Double.NaN))) // releases 10..30
-    q.processAllAvailable()
-    in.addData((1L, ts(200), Seq(0.0, Double.NaN))) // releases 100
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("minmax_out")
-      .selectExpr("t", "aggs[0]", "aggs[1]")
-      .as[(Long, Double, Double)].collect().sortBy(_._1).toSeq
+    def run(sink: String, over: TestSpark.OverPass): Seq[(Long, Double, Double)] = {
+      val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+      val watermarked = in.toDF().toDF("k", "ts", "vs")
+        .withWatermark("ts", "10 seconds")
+        .as[(Long, Timestamp, Seq[Double])]
+      // slot 0 sums, slot 1 takes the frame MIN with NaN-as-NULL inputs
+      val out = over(watermarked,
+        Vector.fill(2)(OverFrame.Rows(3)), Vector(SlotOp.Sum, SlotOp.Min))
+      val q = out.toDF("k", "t", "vs", "aggs").writeStream
+        .outputMode("append").format("memory").queryName(sink).start()
+      in.addData((1L, ts(10), Seq(1.0, Double.NaN)), // NULL min input
+        (1L, ts(20), Seq(2.0, 5.0)), (1L, ts(30), Seq(0.5, 2.0)))
+      q.processAllAvailable()
+      in.addData((1L, ts(100), Seq(0.0, Double.NaN))) // releases 10..30
+      q.processAllAvailable()
+      in.addData((1L, ts(200), Seq(0.0, Double.NaN))) // releases 100
+      q.processAllAvailable()
+      q.stop()
+      spark.table(sink)
+        .selectExpr("t", "aggs[0]", "aggs[1]")
+        .as[(Long, Double, Double)].collect().sortBy(_._1).toSeq
+    }
+    val got = TestSpark.withRocksDB(run("minmax_out", TestSpark.overTws))
+    val ref = run("minmax_ref", TestSpark.overFmgws)
+    // NaN-safe comparison: Scala's == on Double treats NaN != NaN
+    assert(got.map(_.toString) == ref.map(_.toString), s"tws=$got ref=$ref")
     // t10: 1-row frame, min input NULL -> NaN sentinel survives;
     // t20: min(NaN, 5) skips the NaN; t30: min over all three = 2;
     // t100: frame rows 20,30,100 -> min(5, 2, NaN) = 2
@@ -387,24 +393,28 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming OVER: running sum released in event-time order") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val watermarked = in.toDF().toDF("k", "ts", "vs")
-      .withWatermark("ts", "10 seconds")
-      .as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
-      Vector(StatefulOps.OverFrame.Unbounded), null)
-    val q = out.toDF("k", "t", "v", "running").writeStream
-      .outputMode("append").format("memory").queryName("rs_out").start()
-    // arrive out of order: 100(v=3), 50(v=1), 80(v=2)
-    in.addData((1L, ts(100), Seq(3.0)), (1L, ts(50), Seq(1.0)), (1L, ts(80), Seq(2.0)))
-    q.processAllAvailable()
-    in.addData((1L, ts(200), Seq(4.0))) // watermark -> 190, releases 50,80,100
-    q.processAllAvailable()
-    in.addData((1L, ts(500), Seq(9.0))) // releases 200
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("rs_out").as[(Long, Long, Seq[Double], Seq[Double])]
-      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).sortBy(_._2).toSeq
+    def run(sink: String, over: TestSpark.OverPass): Seq[(Long, Long, Double, Double)] = {
+      val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+      val watermarked = in.toDF().toDF("k", "ts", "vs")
+        .withWatermark("ts", "10 seconds")
+        .as[(Long, Timestamp, Seq[Double])]
+      val out = over(watermarked, Vector(StatefulOps.OverFrame.Unbounded), null)
+      val q = out.toDF("k", "t", "v", "running").writeStream
+        .outputMode("append").format("memory").queryName(sink).start()
+      // arrive out of order: 100(v=3), 50(v=1), 80(v=2)
+      in.addData((1L, ts(100), Seq(3.0)), (1L, ts(50), Seq(1.0)), (1L, ts(80), Seq(2.0)))
+      q.processAllAvailable()
+      in.addData((1L, ts(200), Seq(4.0))) // watermark -> 190, releases 50,80,100
+      q.processAllAvailable()
+      in.addData((1L, ts(500), Seq(9.0))) // releases 200
+      q.processAllAvailable()
+      q.stop()
+      spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])]
+        .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).sortBy(_._2).toSeq
+    }
+    val got = TestSpark.withRocksDB(run("rs_out", TestSpark.overTws))
+    val ref = run("rs_ref", TestSpark.overFmgws)
+    assert(got == ref, s"tws=$got ref=$ref")
     // running sums follow EVENT time order despite arrival order
     assert(got.map(r => (r._2, r._4)).take(4) ==
       Seq((50000L, 1.0), (80000L, 3.0), (100000L, 6.0), (200000L, 10.0)), s"got: $got")
@@ -660,22 +670,27 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val data = for (k <- 1L to 2L; i <- 0 until 12)
       yield (k, ts(10L * i + k), (i * 7 % 5) + k * 0.5)
-    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val watermarked = in.toDF().toDF("k", "ts", "vs")
-      .withWatermark("ts", "5 seconds")
-      .as[(Long, Timestamp, Seq[Double])]
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
-      Vector(StatefulOps.OverFrame.Rows(3)), null)
-    val q = out.toDF("k", "t", "v", "agg").writeStream
-      .outputMode("append").format("memory").queryName("rb_out").start()
-    data.sortBy(_._2.getTime).grouped(8).foreach { chunk =>
-      in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
+    def run(sink: String, over: TestSpark.OverPass): Set[(Long, Long, Double, Double)] = {
+      val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+      val watermarked = in.toDF().toDF("k", "ts", "vs")
+        .withWatermark("ts", "5 seconds")
+        .as[(Long, Timestamp, Seq[Double])]
+      val out = over(watermarked,
+        Vector(StatefulOps.OverFrame.Rows(3)), null)
+      val q = out.toDF("k", "t", "v", "agg").writeStream
+        .outputMode("append").format("memory").queryName(sink).start()
+      data.sortBy(_._2.getTime).grouped(8).foreach { chunk =>
+        in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
+      }
+      in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0))) // flush watermark
+      runToCompletion(q)
+      spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])]
+        .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
+        .filter(_._2 < 100000000L)
     }
-    in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0))) // flush watermark
-    runToCompletion(q)
-    val streamed = spark.table("rb_out").as[(Long, Long, Seq[Double], Seq[Double])]
-      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
-      .filter(_._2 < 100000000L)
+    val streamed = TestSpark.withRocksDB(run("rb_out", TestSpark.overTws))
+    val ref = run("rb_ref", TestSpark.overFmgws)
+    assert(streamed == ref, s"tws=$streamed\nref=$ref")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"k").orderBy($"t").rowsBetween(-2, 0)
     val batch = data.toDF("k", "ts", "v")
@@ -691,23 +706,28 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val data = for (k <- 1L to 2L; i <- 0 until 12)
       yield (k, ts(7L * i + k), (i * 3 % 4) + k.toDouble)
-    val in = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val watermarked = in.toDF().toDF("k", "ts", "vs")
-      .withWatermark("ts", "5 seconds")
-      .as[(Long, Timestamp, Seq[Double])]
     val rangeMs = 20000L
-    val out = StatefulOps.overMultiAggsByKey(watermarked,
-      Vector(StatefulOps.OverFrame.Range(rangeMs)), null)
-    val q = out.toDF("k", "t", "v", "agg").writeStream
-      .outputMode("append").format("memory").queryName("rgb_out").start()
-    data.sortBy(_._2.getTime).grouped(10).foreach { chunk =>
-      in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
+    def run(sink: String, over: TestSpark.OverPass): Set[(Long, Long, Double, Double)] = {
+      val in = MemoryStream[(Long, Timestamp, Seq[Double])]
+      val watermarked = in.toDF().toDF("k", "ts", "vs")
+        .withWatermark("ts", "5 seconds")
+        .as[(Long, Timestamp, Seq[Double])]
+      val out = over(watermarked,
+        Vector(StatefulOps.OverFrame.Range(rangeMs)), null)
+      val q = out.toDF("k", "t", "v", "agg").writeStream
+        .outputMode("append").format("memory").queryName(sink).start()
+      data.sortBy(_._2.getTime).grouped(10).foreach { chunk =>
+        in.addData(chunk.map(r => (r._1, r._2, Seq(r._3))).toSeq); q.processAllAvailable()
+      }
+      in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0)))
+      runToCompletion(q)
+      spark.table(sink).as[(Long, Long, Seq[Double], Seq[Double])]
+        .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
+        .filter(_._2 < 100000000L)
     }
-    in.addData((1L, ts(100000), Seq(0.0)), (2L, ts(100000), Seq(0.0)))
-    runToCompletion(q)
-    val streamed = spark.table("rgb_out").as[(Long, Long, Seq[Double], Seq[Double])]
-      .collect().map(r => (r._1, r._2, r._3.head, r._4.head)).toSet
-      .filter(_._2 < 100000000L)
+    val streamed = TestSpark.withRocksDB(run("rgb_out", TestSpark.overTws))
+    val ref = run("rgb_ref", TestSpark.overFmgws)
+    assert(streamed == ref, s"tws=$streamed\nref=$ref")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"k").orderBy($"t").rangeBetween(-rangeMs, 0)
     val batch = data.toDF("k", "ts", "v")

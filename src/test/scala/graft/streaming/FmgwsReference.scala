@@ -7,11 +7,13 @@ import scala.collection.mutable
 
 /** Test-only flatMapGroupsWithState references for the operators whose
   * single implementation is a transformWithState processor: the
-  * retractable top-N ([[RetractTws]]) and the four changelog stream
-  * joins ([[StreamJoinTws]]). Each body is the GroupState fold that used
-  * to ship beside the port, kept verbatim so the equality specs
-  * (RetractTwsSpec, StreamJoinTwsSpec) still replay every script against
-  * an independent implementation on the default state store provider. */
+  * retractable top-N ([[RetractTws]]), the four changelog stream joins
+  * ([[StreamJoinTws]]) and the event-time OVER pass ([[StatefulTws]]).
+  * Each body is the GroupState fold that used to ship beside the port,
+  * kept verbatim so the equality specs (RetractTwsSpec,
+  * StreamJoinTwsSpec, StatefulTwsSpec, StreamingSpec) still replay every
+  * script against an independent implementation on the default state
+  * store provider. */
 object FmgwsReference {
   import Cdc.{Delete, Insert, UpdateAfter}
   import Retract.{isAdd, isRetract}
@@ -212,5 +214,87 @@ object FmgwsReference {
             state: GroupState[(Seq[(L, Int)], Seq[(R, Int)])]) =>
           processKey(key, rows, state, padLeft = true, padRight = true)
       }
+  }
+
+  /** Event-time streaming OVER as the flatMapGroupsWithState fused pass
+    * StreamOverSql used to lower a single-spec statement onto — the
+    * independent body the OVER equality specs (StatefulTwsSpec,
+    * StreamingSpec) replay every script against; the shipped body is
+    * [[StatefulTws.overMultiAggsChained]]. Each row, released in
+    * event-time order, is annotated with a value VECTOR's per-slot
+    * aggregates — slot i reduces with ops(i)
+    * over frames(i) (`ops = null` means all-Sum) — so one stateful pass
+    * serves several OVER items, with different windows too (Slots.Multi;
+    * the reference chains one operator per window instead —
+    * StreamExecOverAggregate.java). A SUM is a value slot, COUNT an
+    * indicator slot, AVG a sum slot divided by a count slot downstream.
+    * Each frame is one of Flink's
+    * RowTime{Rows,Range}{Unbounded,Bounded}PrecedingFunction family:
+    * `Unbounded` the running aggregate, `Rows(n)` the last n rows
+    * (RowTimeRowsBoundedPrecedingFunction.java:56), `Range(ms)` the rows
+    * with t in [cur - ms, cur], `UnboundedRange` SQL's default frame; in
+    * both RANGE frames rowtime peers share one value. NaN encodes a NULL
+    * input — skipped by every op (SQL NULL-ignoring aggregates); an
+    * all-NaN frame reduces to NaN. Rows release once the watermark passes
+    * them and late rows drop; the unbounded frames keep a permanent
+    * accumulator, the bounded ones O(pending + frame) state. */
+  def overMultiAggsByKey[K: Encoder](
+      ds: Dataset[(K, java.sql.Timestamp, Seq[Double])],
+      frames: IndexedSeq[StatefulOps.OverFrame], ops: IndexedSeq[StatefulOps.SlotOp])(
+      implicit e1: Encoder[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])],
+      e2: Encoder[(K, Long, Seq[Double], Seq[Double])])
+      : Dataset[(K, Long, Seq[Double], Seq[Double])] = {
+    require(frames != null && frames.nonEmpty, "overMultiAggsByKey: no frames")
+    require(ops == null || ops.length == frames.length,
+      s"overMultiAggsByKey: ${frames.length} frames but ${ops.length} ops")
+
+    // tie order, peer sharing, per-slot frames and NULL-skip live in ONE
+    // place (Slots.Multi) shared with the chained TWS pass — see its
+    // scaladoc.
+    // RANGE frames: rows sharing a rowtime are SQL PEERS — the frame's
+    // upper bound is the current row's TIME, so every peer's frame
+    // contains all of them and they read ONE shared aggregate (Flink's
+    // RowTimeRange{Bounded,Unbounded}PrecedingFunction fires one timer
+    // per timestamp and emits the same accumulator to the whole list).
+    // Peer groups cannot split across micro-batches: all non-late rows
+    // at a timestamp release in the batch where the watermark crossed
+    // it, and a same-t row arriving after that is late and dropped.
+    val multi = new StatefulOps.Slots.Multi(frames, ops)
+
+    def update(key: K, rows: Iterator[(K, java.sql.Timestamp, Seq[Double])],
+        state: GroupState[(Seq[(Long, Seq[Double])], Seq[Double], Seq[(Long, Seq[Double])])])
+        : Iterator[(K, Long, Seq[Double], Seq[Double])] = {
+      val (pending0, acc0, frame0) = state.getOption.getOrElse(
+        (Seq.empty[(Long, Seq[Double])], Seq.empty[Double],
+          Seq.empty[(Long, Seq[Double])]))
+      val wm = state.getCurrentWatermarkMs()
+      val buf = pending0 ++ rows.map { r =>
+        require(r._3.length == frames.length,
+          s"overMultiAggsByKey: row carries ${r._3.length} slots, frames has ${frames.length}")
+        (r._2.getTime, r._3)
+      }.filter(_._1 > wm)
+      val (ready, pending) = buf.partition(_._1 <= wm)
+      // release takes its rows in the total (t, values) order
+      val (outRows, acc, frm) =
+        multi.release(ready.sortWith(StatefulOps.Slots.tieLess), acc0, frame0)
+      val out = outRows.map { case (t, v, sums) => (key, t, v, sums) }
+      // the unbounded accumulators are PERMANENT state (Flink's
+      // unbounded-preceding functions): a contributing-nothing
+      // invocation must not reset them
+      val removable =
+        if (multi.permanent) state.getOption.isEmpty
+        else pending0.isEmpty && frame0.isEmpty
+      if (pending.isEmpty && out.isEmpty && removable) {
+        if (state.exists) state.remove()
+      } else {
+        state.update((pending, acc, frm))
+        if (pending.nonEmpty)
+          state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
+      }
+      out.iterator
+    }
+
+    ds.groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 }
