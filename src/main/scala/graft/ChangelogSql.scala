@@ -3,6 +3,21 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving,
+  UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Descending,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
+  LessThanOrEqual, Literal, UnspecifiedFrame, WindowExpression,
+  WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner,
+  LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct,
+  Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Offset, Project,
+  Sort, SubqueryAlias, UnresolvedHint}
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.types.IntegerType
+
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Changelog-mode SQL entry — the front door's analog of Flink's
@@ -94,12 +109,18 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * CONTINUOUS: `INSERT INTO sink SELECT …` over changelogs
   * (Engine.sqlStreamInsert) is the streaming form. [[route]] parses the
-  * body ONCE into its [[Route]] — top-N over a subquery, top-N,
-  * aggregate over an aggregate, COUNT(DISTINCT) aggregate, sign-algebra
-  * aggregate, aggregate over a join, join; first match wins — and
-  * [[start]] lowers it: every aggregate level through [[aggLevel]],
-  * every query through [[startStream]]. EXPLAIN CHANGELOG_MODE over
-  * the INSERT prints [[Route.line]].
+  * body ONCE with Spark's SQL parser and matches that parsed (never
+  * analyzed) LogicalPlan — Project/Aggregate/Filter/Join/SubqueryAlias
+  * over UnresolvedRelations, the relational plan Flink's changelog
+  * inference also decides on — into its [[Route]]: top-N over a
+  * subquery, top-N, aggregate over an aggregate, COUNT(DISTINCT)
+  * aggregate, sign-algebra aggregate, aggregate over a join, join;
+  * first match wins. WHERE, HAVING and computed ORDER BY items reach
+  * the lowerings as the statement's own text, sliced by each parsed
+  * node's position ([[Sliced]]). [[start]] lowers the route: every
+  * aggregate level through [[aggLevel]], every query through
+  * [[startStream]]. EXPLAIN CHANGELOG_MODE over the INSERT prints
+  * [[Route.line]].
   */
 object ChangelogSql {
 
@@ -653,7 +674,7 @@ object ChangelogSql {
               // a JOIN chain reports the join lowering's chosen
               // per-side weight columns + admissibility (the weights
               // lowerJoin will bind, by its ordinal naming)
-              val joinChain = parseJoinChain(c.relation).filter(_.size > 1)
+              val joinChain = chainOfSql(spark, stmt).filter(_.size > 1)
               joinChain match {
                 case Some(chain) if hasAgg || c.groupBy.isDefined || isDistinct =>
                   val clIdxs = chain.zipWithIndex.collect {
@@ -768,7 +789,7 @@ object ChangelogSql {
         // a linear join chain with exactly ONE changelog lowers through
         // the sign/netting algebra; every other composite shape keeps
         // the loud guard
-        lowerJoin(spark, c, aggClauses, allClauses).orElse {
+        lowerJoin(spark, stmt, c, aggClauses, allClauses).orElse {
           compositeGuard(spark, stmt, c.groupBy.isDefined, refsMeta); None
         }
     }
@@ -781,94 +802,6 @@ object ChangelogSql {
     * left part — None for the first relation; `on` its ON text. */
   private[graft] case class ChainRel(name: String, alias: Option[String],
       joinType: Option[String], on: Option[String])
-
-  private val JoinHeads = Set("JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS")
-
-  /** Parse a linear `rel [AS a] [<type> JOIN rel [AS a] ON ...]*` chain
-    * on the token stream; None for anything else (subqueries, commas,
-    * USING, NATURAL, LATERAL — those keep the composite guard). */
-  private def parseJoinChain(fromText: String): Option[Seq[ChainRel]] = {
-    import graft.util.SqlTokens
-    import graft.util.SqlTokens.Kind
-    val b = blank(fromText)
-    val t = SqlTokens.structural(SqlTokens.tokenize(b))
-    var i = 0
-    def word(j: Int): String =
-      if (j < t.length && t(j).kind == Kind.Ident) t(j).word(b) else ""
-    // a (possibly dot-qualified, possibly backticked) identifier
-    def relName(): Option[String] = {
-      if (i >= t.length || t(i).kind != Kind.Ident || JoinHeads(word(i))) return None
-      val sb = new StringBuilder(t(i).text(b).replace("`", ""))
-      i += 1
-      while (i + 1 < t.length && t(i).kind == Kind.Op && t(i).text(b) == "." &&
-        t(i + 1).kind == Kind.Ident) {
-        sb.append(".").append(t(i + 1).text(b).replace("`", ""))
-        i += 2
-      }
-      Some(sb.toString)
-    }
-    def relWithAlias(joinType: Option[String], on: Option[String]): Option[ChainRel] = {
-      val name = relName().getOrElse(return None)
-      var alias: Option[String] = None
-      if (word(i) == "AS") {
-        i += 1
-        alias = relName()
-        if (alias.isEmpty) return None
-      } else if (i < t.length && t(i).kind == Kind.Ident &&
-        !JoinHeads(word(i)) && word(i) != "ON") {
-        alias = relName()
-        if (alias.isEmpty) return None
-      }
-      Some(ChainRel(name, alias, joinType, on))
-    }
-    val out = Seq.newBuilder[ChainRel]
-    out += relWithAlias(None, None).getOrElse(return None)
-    while (i < t.length) {
-      // the join phrase
-      val jt = word(i) match {
-        case "JOIN"  => i += 1; "INNER"
-        case "INNER" if word(i + 1) == "JOIN" => i += 2; "INNER"
-        case "CROSS" if word(i + 1) == "JOIN" => i += 2; "CROSS"
-        case d @ ("LEFT" | "RIGHT" | "FULL") if word(i + 1) == "JOIN" =>
-          i += 2; d
-        case d @ ("LEFT" | "RIGHT" | "FULL")
-          if word(i + 1) == "OUTER" && word(i + 2) == "JOIN" => i += 3; d
-        case _ => return None // comma list, USING, NATURAL, anything else
-      }
-      val name = relName().getOrElse(return None)
-      var alias: Option[String] = None
-      if (word(i) == "AS") { i += 1; alias = relName(); if (alias.isEmpty) return None }
-      else if (i < t.length && t(i).kind == Kind.Ident &&
-        !JoinHeads(word(i)) && word(i) != "ON") {
-        alias = relName(); if (alias.isEmpty) return None
-      }
-      val on = if (jt == "CROSS") None else {
-        if (word(i) != "ON") return None
-        i += 1
-        val start = if (i < t.length) t(i).start else b.length
-        // the ON expression runs to the next DEPTH-0 join head
-        var depth = 0
-        var stop = fromText.length
-        var j = i
-        var found = false
-        while (j < t.length && !found) {
-          t(j).kind match {
-            case Kind.LParen => depth += 1
-            case Kind.RParen => depth -= 1
-            case Kind.Ident if depth == 0 && JoinHeads(t(j).word(b)) =>
-              stop = t(j).start; found = true
-            case _ => ()
-          }
-          if (!found) j += 1
-        }
-        i = j
-        Some(fromText.substring(start, stop).trim)
-      }
-      out += ChainRel(name, alias, Some(jt), on)
-    }
-    val chain = out.result()
-    if (chain.size >= 2) Some(chain) else None
-  }
 
   /** Lower an aggregate over a join chain reading changelogs — Flink
     * propagates changelog mode through joins
@@ -888,9 +821,9 @@ object ChangelogSql {
     * fully-retracted key would never null-pad — silent wrongness
     * (FULL is both at once). Returns None when the statement is not
     * this shape at all (the composite guard then decides). */
-  private def lowerJoin(spark: SparkSession, c: Clauses,
+  private def lowerJoin(spark: SparkSession, stmt: String, c: Clauses,
       aggClauses: String, allClauses: String): Option[DataFrame] = {
-    val chain = parseJoinChain(c.relation).getOrElse(return None)
+    val chain = chainOfSql(spark, stmt).filter(_.size > 1).getOrElse(return None)
     val clIdxs = chain.zipWithIndex.collect {
       case (r, i) if isChangelogRel(spark, r.name) => i
     }
@@ -1008,10 +941,7 @@ object ChangelogSql {
     // any call the registry classifies as an aggregate — ANYWHERE in the
     // statement (a scalar subquery aggregating the changelog is just as
     // wrong as a top-level aggregate)
-    val calls = callNames(b)
-    val aggShaped = groupByDefined || calls.exists(n =>
-      Supported(n) || StreamOverSql.customAgg(n).isDefined ||
-        isAggregateFn(spark, n).contains(true))
+    val aggShaped = groupByDefined || callNames(b).exists(isAggCall(spark, _))
     if (aggShaped) throw new IllegalArgumentException(
       s"aggregate over a composite FROM reading changelog relation" +
         s"${if (changelogRels.size > 1) "s" else ""} " +
@@ -1311,50 +1241,13 @@ object ChangelogSql {
     }
   }
 
-  /** The chain's single changelog relation, when `fromText` is either a
-    * bare changelog relation or a linear join of exactly one changelog
-    * with other relations. */
-  private def changelogOfFrom(
-      spark: SparkSession, fromText: String): Option[(Seq[ChainRel], Int)] =
-    fromText match {
-      case RelRe(name, alias) if isChangelogRel(spark, name) =>
-        Some((Seq(ChainRel(name, Option(alias), None, None)), 0))
-      case RelRe(_, _) => None
-      case _ => parseJoinChain(fromText).flatMap { chain =>
-        chain.zipWithIndex.collect {
-          case (r, i) if isChangelogRel(spark, r.name) => i
-        } match {
-          case Seq(i) => Some((chain, i))
-          case _      => None
-        }
-      }
-    }
-
-  /** The sign-algebra route's test: a changelog AGGREGATE over one
-    * changelog relation, bare or joined to other relations, that does
-    * not read row_kind/cdc_ts itself (such a statement is a raw
-    * changelog passthrough — the plain append-insert path's job).
-    * Returns the relation chain and the changelog's index in it. */
-  private def signAggChain(
-      spark: SparkSession, c: Clauses): Option[(Seq[ChainRel], Int)] =
-    changelogOfFrom(spark, c.relation).filter { _ =>
-      val aggish = blank(c.selectList) + " " +
-        c.having.map(blank).getOrElse("")
-      val all = aggish + " " + c.where.map(blank).getOrElse("") + " " +
-        c.groupBy.map(blank).getOrElse("") + " " + blank(c.relation)
-      val refsMeta = Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-        ("(?i)\\b" + m + "\\b").r.findFirstIn(all).isDefined)
-      !refsMeta && (c.groupBy.isDefined || callNames(aggish).exists(n =>
-        Supported(n) || retractableUda(n).isDefined))
-    }
-
   /** Lower the SELECT of a continuous changelog aggregate onto one
     * update-mode streaming aggregation. Returns (df, upsert keys): df's
     * columns are the user's select list plus a hidden boolean `LiveCol`
     * — false means the group emptied (or left the HAVING set) and the
     * sink must DELETE it; keys are the GROUP BY columns' OUTPUT names
     * (the upsert key of the refreshed rows). `chain(clIdx)` is the
-    * changelog relation [[signAggChain]] found. */
+    * changelog relation [[route]] found. */
   private def signAgg(spark: SparkSession, c: Clauses, chain: Seq[ChainRel],
       clIdx: Int): (DataFrame, Seq[String], Seq[String]) = {
     val name = chain(clIdx).name
@@ -1392,15 +1285,9 @@ object ChangelogSql {
       "ORDER BY / LIMIT are not available on a CONTINUOUS changelog " +
         "aggregate (update mode has no final ordering); aggregate the " +
         "materialized sink instead")
-    val bl = blank(c.selectList)
-    val aggClauses = bl + " " + c.having.map(blank).getOrElse("")
-    val all = aggClauses + " " + c.where.map(blank).getOrElse("") + " " +
-      c.groupBy.map(blank).getOrElse("") + " " + blank(c.relation)
-    require(!Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-      ("(?i)\\b" + m + "\\b").r.findFirstIn(all).isDefined),
-      "a continuous changelog AGGREGATE cannot reference " +
-        "row_kind/cdc_ts (the sign algebra consumes them); read the raw " +
-        "changelog with a plain streaming SELECT instead")
+    // [[route]] picks this lowering only when no clause names row_kind
+    // or cdc_ts (that is a raw changelog passthrough)
+    val aggClauses = blank(c.selectList) + " " + c.having.map(blank).getOrElse("")
     require(!"""(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined,
       "SELECT DISTINCT over a continuous changelog is not supported; " +
         "use GROUP BY (same live-group semantics, update-mode output)")
@@ -1723,99 +1610,257 @@ object ChangelogSql {
     sources.KafkaConnector.upsertEncode(aligned, declared, pk, opts)
   }
 
+  // ---- the continuous INSERT body as Spark's parsed plan --------------
+
+  /** One SELECT block of the parsed INSERT body. The plan is never
+    * analyzed (registered retractable aggregates are not in Spark's
+    * function registry): columns resolve against the relation schemas
+    * ([[relationColumns]]). `ordered`: ORDER BY, LIMIT or OFFSET. */
+  private[graft] case class Block(items: Seq[Expression],
+      groupBy: Option[Seq[Expression]], having: Option[Sliced],
+      where: Option[Sliced], from: LogicalPlan, distinct: Boolean,
+      ordered: Boolean) {
+    def exprs: Seq[Expression] =
+      items ++ where.map(_.e) ++ groupBy.toSeq.flatten ++ having.map(_.e)
+  }
+
+  /** A parsed expression and the statement text it spans from offset
+    * `at`, enclosing parentheses included: the user's own text, which
+    * the lowerings and the route line read. */
+  private[graft] case class Sliced(e: Expression, sql: String, at: Int)
+
+  /** [start, stop] of `n` in its statement; a plan's hull over its nodes
+    * (a Join's own origin starts at JOIN). */
+  private def span(n: TreeNode[_]): (Int, Int) = {
+    val os = (n match {
+      case p: LogicalPlan => p.collect { case q => q.origin }
+      case _ => Seq(n.origin)
+    }).filter(o => o.startIndex.isDefined && o.stopIndex.isDefined)
+    if (os.isEmpty) (-1, -1)
+    else (os.map(_.startIndex.get).min, os.map(_.stopIndex.get).max)
+  }
+
+  /** The statement text `n` spans. */
+  private def sqlOf(n: TreeNode[_]): String = {
+    val (s, t) = span(n)
+    val text = n match {
+      case p: LogicalPlan =>
+        p.collectFirst { case q if q.origin.sqlText.isDefined => q.origin.sqlText.get }
+      case _ => n.origin.sqlText
+    }
+    text.filter(_ => s >= 0).fold(n.toString)(_.substring(s, t + 1))
+  }
+
+  /** `e` with its text, grown over the parentheses that enclose it
+    * within [lo, hi]: `(a OR b)` keeps them. */
+  private def sliced(e: Expression, lo: Int, hi: Int): Sliced = {
+    val (s0, t0) = span(e)
+    val text = e.origin.sqlText.filter(_ => s0 >= 0)
+      .getOrElse(return Sliced(e, e.toString, -1))
+    def next(i: Int, d: Int) = Iterator.iterate(i + d)(_ + d)
+      .find(j => j < lo || j > hi || !text(j).isWhitespace).get
+    var (s, t) = (s0, t0)
+    while (next(s, -1) >= lo && next(t, 1) <= hi &&
+        text(next(s, -1)) == '(' && text(next(t, 1)) == ')') {
+      s = next(s, -1)
+      t = next(t, 1)
+    }
+    Sliced(e, text.substring(s, t + 1), s)
+  }
+
+  /** A clause's top-level AND conjuncts. A parenthesized AND stays one
+    * conjunct, as does one whose terms span its whole text (BETWEEN). */
+  private def conjuncts(c: Sliced): Seq[Sliced] = c.e match {
+    case And(l, r) if c.at == span(c.e)._1 =>
+      val (lo, hi) = span(c.e)
+      val terms = conjuncts(sliced(l, lo, hi)) ++ conjuncts(sliced(r, lo, hi))
+      if (terms.exists(t => span(t.e) == span(c.e))) Seq(c) else terms
+    case _ => Seq(c)
+  }
+
+  /** The SELECT block `p` is, when it is one. */
+  private def block(p: LogicalPlan, ordered: Boolean = false): Option[Block] = {
+    def make(items: Seq[Expression], groupBy: Option[Seq[Expression]],
+        having: Option[Sliced], child: LogicalPlan) = Some(child match {
+      case f: Filter =>
+        val (lo, hi) = span(f)
+        Block(items, groupBy, having, Some(sliced(f.condition, lo, hi)),
+          f.child, distinct = false, ordered)
+      case from => Block(items, groupBy, having, None, from, false, ordered)
+    })
+    def grouped(a: Aggregate, having: Option[Sliced]) =
+      make(a.aggregateExpressions, Option.when(a.groupingExpressions.nonEmpty)(
+        a.groupingExpressions), having, a.child)
+    p match {
+      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset =>
+        block(p.children.head, ordered = true)
+      case d: Distinct => block(d.child, ordered).map(_.copy(distinct = true))
+      case h: UnresolvedHint => block(h.child, ordered)
+      case h @ UnresolvedHaving(cond, a: Aggregate) =>
+        val (lo, hi) = span(h)
+        grouped(a, Some(sliced(cond, lo, hi)))
+      case a: Aggregate => grouped(a, None)
+      case pr: Project => make(pr.projectList, None, None, pr.child)
+      case _ => None
+    }
+  }
+
+  /** A FROM subquery's alias; None for an unaliased one. */
+  private def aliasOf(id: org.apache.spark.sql.catalyst.AliasIdentifier) =
+    Some(id.name).filterNot(_.startsWith(SubqueryAlias.generateSubqueryName()))
+
+  /** A FROM of relations, each optionally aliased — one, or a linear
+    * chain joined INNER/LEFT/RIGHT/FULL with ON, or CROSS; None for
+    * anything else (subqueries, comma lists, USING, NATURAL). */
+  private def chainOf(p: LogicalPlan): Option[Seq[ChainRel]] = p match {
+    case r: UnresolvedRelation =>
+      Some(Seq(ChainRel(r.multipartIdentifier.mkString("."), None, None, None)))
+    case SubqueryAlias(id, r: UnresolvedRelation) => Some(Seq(ChainRel(
+      r.multipartIdentifier.mkString("."), Some(id.name), None, None)))
+    case j: Join =>
+      val jt = (j.joinType, j.condition.isDefined) match {
+        case (Cross, false) => "CROSS"
+        case (Inner, true) => "INNER"
+        case (LeftOuter, true) => "LEFT"
+        case (RightOuter, true) => "RIGHT"
+        case (FullOuter, true) => "FULL"
+        case _ => return None
+      }
+      for (l <- chainOf(j.left); r <- chainOf(j.right) if r.size == 1)
+        yield l :+ r.head.copy(joinType = Some(jt), on = j.condition.map(sqlOf))
+    case _ => None
+  }
+
+  /** The FROM chain of SELECT statement `stmt`; None when Spark's parser
+    * rejects it or its FROM is no chain of relations. */
+  private def chainOfSql(spark: SparkSession, stmt: String): Option[Seq[ChainRel]] =
+    scala.util.Try(spark.sessionState.sqlParser.parsePlan(stmt)).toOption
+      .flatMap(block(_)).flatMap(b => chainOf(b.from))
+
+  /** Every column, alias and function name the expressions mention. */
+  private def namesIn(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+    case a: UnresolvedAttribute => a.nameParts
+    case a: Alias => Seq(a.name)
+    case f: UnresolvedFunction => f.nameParts
+  }.flatten)
+
+  /** The first encoding column among `names`, if any. */
+  private def encodingIn(names: Seq[String],
+      encodings: Seq[String] = Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol)) =
+    encodings.find(m => names.exists(_.equalsIgnoreCase(m)))
+
+  /** The upper-cased function names called in `es`. */
+  private def calls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+    case f: UnresolvedFunction => f.nameParts.last.toUpperCase
+  }).distinct
+
+  /** Is `fn` an aggregate: a supported or registered one, or one the
+    * session's registry classifies so? */
+  private def isAggCall(spark: SparkSession, fn: String): Boolean =
+    Supported(fn) || StreamOverSql.customAgg(fn).isDefined ||
+      isAggregateFn(spark, fn).contains(true)
+
+  /** GROUP BY, or an aggregate call in the select list or HAVING. */
+  private def aggregates(spark: SparkSession, b: Block): Boolean =
+    b.groupBy.isDefined ||
+      calls(b.items ++ b.having.map(_.e)).exists(isAggCall(spark, _))
+
+  /** `COUNT(*)`'s argument: the parser's literal 1 spanning the call. */
+  private def isStarArg(f: UnresolvedFunction, arg: Expression): Boolean =
+    arg.isInstanceOf[UnresolvedStar] ||
+      (arg.isInstanceOf[Literal] && span(arg) == span(f))
+
+  /** Does this SELECT read a changelog anywhere down its FROM-subquery
+    * nesting? (Depth-recursive: a rollup of a rollup routes too.) */
+  private def refsChangelogDeep(spark: SparkSession, p: LogicalPlan): Boolean =
+    block(p).exists(b =>
+      chainOf(b.from).exists(_.exists(r => isChangelogRel(spark, r.name))) ||
+        (b.from match {
+          case SubqueryAlias(_, deeper) => refsChangelogDeep(spark, deeper)
+          case _ => false
+        }))
+
   // ---- continuous retractable top-N (rank/RetractableTopNFunction) ---
 
   /** The reference's streaming top-N statement shape over a retract
     * input: `SELECT ... FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY
     * k ORDER BY item [ASC|DESC], ...) AS rn FROM changelog) WHERE
-    * rn <= N`. ORDER BY items may be bare columns OR computed
-    * EXPRESSIONS (Flink ranks computed fields the planner materializes
-    * into the row; here they project into derived columns before the
-    * state boundary). The OVER group is balanced-paren matched —
-    * expression items can carry nested parens/commas/literals — and
-    * expression text is sliced from the ORIGINAL statement so literals
-    * survive; the clause skeleton matches on blanked text. */
-  private val TopNHeadRe =
-    """(?is)^\s*SELECT\s+(.*?)\s+FROM\s*\(\s*SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s*OVER\s*\($""".r
-  private val TopNTailRe =
-    ("""(?is)^\s*AS\s+`?(\w+)`?\s+FROM\s+`?(\w+)`?\s*\)""" +
-      """(?:\s+(?:AS\s+)?(\w+))?\s+WHERE\s+`?[\w.]*?(\w+)`?\s*(<=|<)\s*(\d+)\s*$""").r
-  private val TopNSpecRe =
-    """(?is)^\s*(?:PARTITION\s+BY\s+(.*?)\s+)?ORDER\s+BY\s+(.*?)\s*$""".r
-
-  private val OrderItemRe = """(?is)^(.*?)(?:\s+(ASC|DESC))?$""".r
-
-  /** orderItems: (bare column name OR expression text, isDescending)
-    * per ORDER BY item, in order — `isBareOrderCol` distinguishes. */
+    * rn <= N`. orderItems: (bare column name OR the statement's own text
+    * of a computed EXPRESSION, isDescending) per ORDER BY item —
+    * `isBareOrderCol` distinguishes; computed items project into derived
+    * columns before the state boundary, as Flink's planner materializes
+    * computed rank fields into the row. */
   private[graft] case class TopNShape(outer: Seq[String], parts: Seq[String],
       orderItems: Seq[(String, Boolean)], rnAlias: String, rel: String, n: Int)
 
   private[graft] def isBareOrderCol(text: String): Boolean =
-    text.matches("""\w+""")
+    text.nonEmpty && text.forall(c => c < 128 && (c.isLetterOrDigit || c == '_'))
 
-  /** PARTITION BY / ORDER BY item extraction from an OVER spec —
-    * shared by the plain top-N parse and the composed top-N-over-
-    * aggregate parse. `spec` is the ORIGINAL text (expression literals
-    * survive), `specB` its blanked mirror, `bare` the alias stripper. */
-  private def topNSpecItems(spec: String, specB: String,
-      bare: String => String): Option[(Seq[String], Seq[(String, Boolean)])] = {
-    val sm = TopNSpecRe.findFirstMatchIn(specB).getOrElse(return None)
-    // no PARTITION BY = the GLOBAL top-N (Flink's parallelism-1
-    // rank): one constant state key
-    val partCols = Option(sm.group(1)).map(_.split(",").toSeq.map(bare)
-      .filter(_.nonEmpty)).getOrElse(Seq.empty)
-    if (sm.group(2) == null) return None
-    // the ORDER BY item list comes from the ORIGINAL text (an
-    // expression's literals must survive); offsets match because
-    // blanking is length-preserving
-    val orderText = spec.substring(sm.start(2), sm.end(2))
-    // each item `col|expr [ASC|DESC]`; SQL's default sort direction
-    // is ASCENDING — a missing keyword must NOT read DESC
-    val items = graft.util.SqlSplit.splitTopLevel(orderText)
-      .map(_.trim).map {
-        case OrderItemRe(e, dir) =>
-          val desc = Option(dir).exists(_.equalsIgnoreCase("DESC"))
-          val t = e.trim
-          if (t.matches("""[\w.`]+""")) (bare(t), desc) else (t, desc)
-        case _ => return None
-      }
-    if (items.isEmpty || items.exists(_._1.isEmpty)) return None
-    Some((partCols, items))
-  }
-
-  private def parseStreamTopN(
-      spark: SparkSession, select: String): Option[TopNShape] = {
-    val stmt = select.trim.replaceAll(";\\s*$", "")
-    val b = blank(stmt)
-    val om = """(?is)ROW_NUMBER\s*\(\s*\)\s*OVER\s*\(""".r
-      .findFirstMatchIn(b).getOrElse(return None)
-    val open = om.end - 1
-    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, open)).getOrElse(return None)
-    val head = b.substring(0, om.end)
-    val specB = b.substring(open + 1, close)
-    val spec = stmt.substring(open + 1, close)
-    val tailB = b.substring(close + 1)
-    (head, tailB) match {
-      case (TopNHeadRe(outer), TopNTailRe(rn, rel, alias, rnRef, op, nStr))
-          if isChangelogRel(spark, rel) =>
-        val aliasOpt = Option(alias)
-        def bare(s: String): String = {
-          val t = s.trim.replace("`", "")
-          aliasOpt.filter(a => t.toLowerCase.startsWith(a.toLowerCase + "."))
-            .map(a => t.drop(a.length + 1)).getOrElse(t)
-        }
-        if (bare(rnRef) != rn) return None
-        val outerCols = graft.util.SqlSplit.splitTopLevel(outer).map(bare)
-        val (partCols, items) =
-          topNSpecItems(spec, specB, bare).getOrElse(return None)
-        if (!(outerCols ++ partCols).forall(_.matches("""\w+"""))) return None
-        val n0 = nStr.toInt
-        val n = if (op == "<") n0 - 1 else n0
-        if (n < 1) return None
-        Some(TopNShape(outerCols, partCols, items, rn, rel, n))
+  /** `SELECT <cols> FROM (SELECT *, ROW_NUMBER() OVER ([PARTITION BY
+    * cols] ORDER BY items) AS rn FROM <from>) [a] WHERE rn <= N` (or
+    * `rn < N`, `N >= rn`, `N > rn`): the shape, `rel` still empty, and
+    * `from`. A qualifier must name the ranked or the inner subquery. */
+  private def topNOf(plan: LogicalPlan): Option[(TopNShape, LogicalPlan)] = {
+    def plain(b: Block) =
+      b.groupBy.isEmpty && b.having.isEmpty && !b.distinct && !b.ordered
+    val outer = block(plan).filter(plain).getOrElse(return None)
+    val (rankAlias, ranked) = outer.from match {
+      case SubqueryAlias(id, child) => (aliasOf(id), block(child)
+        .filter(b => plain(b) && b.where.isEmpty).getOrElse(return None))
+      case _ => return None
+    }
+    val (rn, spec) = ranked.items match {
+      case Seq(UnresolvedStar(None), Alias(WindowExpression(
+          f: UnresolvedFunction, spec: WindowSpecDefinition), rn))
+          if f.nameParts.map(_.toUpperCase) == Seq("ROW_NUMBER") &&
+            f.arguments.isEmpty && spec.orderSpec.nonEmpty &&
+            spec.frameSpecification == UnspecifiedFrame => (rn, spec)
+      case _ => return None
+    }
+    val aliases = rankAlias ++ (ranked.from match {
+      case SubqueryAlias(id, _) => aliasOf(id)
+      case _ => None
+    })
+    def bare(e: Expression): Option[String] = e match {
+      case a: UnresolvedAttribute if a.nameParts.size == 1 || (a.nameParts.size == 2 &&
+          aliases.exists(_.equalsIgnoreCase(a.nameParts.head))) =>
+        Some(a.nameParts.last).filter(isBareOrderCol)
       case _ => None
     }
+    val isRn: Expression => Boolean = {
+      case a: UnresolvedAttribute => a.nameParts.last.equalsIgnoreCase(rn)
+      case _ => false
+    }
+    val n = outer.where.map(_.e) match {
+      case Some(LessThanOrEqual(r, Literal(k: Int, IntegerType))) if isRn(r) => k
+      case Some(LessThan(r, Literal(k: Int, IntegerType))) if isRn(r) => k - 1
+      case Some(GreaterThanOrEqual(Literal(k: Int, IntegerType), r)) if isRn(r) => k
+      case Some(GreaterThan(Literal(k: Int, IntegerType), r)) if isRn(r) => k - 1
+      case _ => return None
+    }
+    val items = spec.orderSpec.map { o =>
+      val (lo, hi) = span(o)
+      (bare(o.child).getOrElse(sliced(o.child, lo, hi).sql),
+        o.direction == Descending)
+    }
+    Option.when(n >= 1)((TopNShape(outer.items.map(bare(_).getOrElse(return None)),
+      spec.partitionSpec.map(bare(_).getOrElse(return None)), items, rn, "", n),
+      ranked.from))
   }
+
+  /** Top-N over one changelog relation, or over a subquery reading
+    * changelogs (an aggregate, or a plain two-changelog join). */
+  private def topNRoute(spark: SparkSession, plan: LogicalPlan): Option[Route] =
+    topNOf(plan).flatMap {
+      case (shape, r: UnresolvedRelation) if r.multipartIdentifier.size == 1 &&
+          isChangelogRel(spark, r.multipartIdentifier.head) =>
+        val sh = shape.copy(rel = r.multipartIdentifier.head)
+        Some(Route.TopN(sh, topNFastEligible(spark, sh)))
+      case (shape, SubqueryAlias(_, inner)) if refsChangelogDeep(spark, inner) =>
+        Some(Route.TopNAgg(shape.copy(rel = "<inner aggregate>"),
+          subqueryRoute(spark, inner)))
+      case _ => None
+    }
 
   /** RankProcessStrategy analysis (the reference's
     * RankProcessStrategy.java): UpdateFastStrategy when the statement is
@@ -1995,40 +2040,61 @@ object ChangelogSql {
 
   // ---- continuous two-sided retraction JOIN (StreamExecJoin) ---------
 
-  /** One side of a parsed continuous join statement. */
+  /** One side of a parsed continuous join statement; `filters` are the
+    * WHERE conjuncts that read this side only ([[joinSides]]). */
   private[graft] case class StreamJoinSide(rel: String, alias: Option[String],
-      keyCols: Seq[String], selected: Seq[(String, String)]) // (col, outName)
+      keyCols: Seq[String], selected: Seq[(String, String)], // (col, outName)
+      filters: Seq[String])
 
   /** `orderTags`: the select list's side per item in STATEMENT order
     * (0 = left, 1 = right) — replays the user's column order across the
-    * per-side splits. `whereConjs`: the WHERE clause's top-level AND
-    * conjuncts (side classification happens in the lowering, where the
-    * schemas are at hand). */
+    * per-side splits. */
   private[graft] case class StreamJoinShape(
       left: StreamJoinSide, right: StreamJoinSide, joinType: String,
-      orderTags: Seq[Int], whereConjs: Seq[String])
+      orderTags: Seq[Int])
 
-  /** The FROM/ON/WHERE analysis shared by the plain continuous-join
-    * statement and the agg-over-join statement: relation chain, join
-    * type, per-side name/column resolution, equi-key pairs. */
-  private case class JoinCore(
-      lRel: ChainRel, rRel: ChainRel, joinType: String,
-      lName: String, rName: String,
-      lCols: Seq[String], rCols: Seq[String],
-      pairs: Seq[(String, String)], whereConjs: Seq[String],
-      scope: Scope)
+  /** The inputs a join or an aggregate level reads: input i is named
+    * `names(i)` (an alias, a relation name, or "" for an unaliased
+    * subquery) and carries `cols(i)`; two inputs are a join's sides.
+    * `missing` words a one-input level's unknown-column error. */
+  private[graft] case class Sides(names: Seq[String], cols: Seq[Seq[String]],
+      missing: String => String) {
+    def joined: Boolean = names.size == 2
+    /** The input-stream column that carries input `side`'s `col`. */
+    def ref(side: Int, col: String): String =
+      if (joined) joinAggRef(side, col) else col
 
-  /** Does the select list (or HAVING) call an aggregate function? */
-  private def joinSelectHasAgg(spark: SparkSession, c: Clauses): Boolean =
-    callNames(blank(c.selectList) + " " +
-      c.having.map(blank).getOrElse("")).exists(n =>
-      Supported(n) || StreamOverSql.customAgg(n).isDefined ||
-        isAggregateFn(spark, n).contains(true))
+    /** (input, column) of a reference: a qualifier names the input, an
+      * unqualified column must be on exactly one input. */
+    def resolve(a: UnresolvedAttribute, bad: String => Nothing): (Int, String) = {
+      def canon(i: Int, n: String, missing: => String) =
+        (i, cols(i).find(_.equalsIgnoreCase(n)).getOrElse(bad(missing)))
+      a.nameParts match {
+        case Seq(q, n) => names.indexWhere(x => x.nonEmpty && x.equalsIgnoreCase(q)) match {
+          case -1 => bad(s"unknown qualifier '$q' in ${a.name}" +
+            (if (joined) s" (sides: ${names.mkString(", ")})" else ""))
+          case i => canon(i, n, if (joined) s"column $n not found" else missing(n))
+        }
+        case Seq(n) => cols.indices.filter(i => cols(i).exists(_.equalsIgnoreCase(n))) match {
+          case Seq(i) => canon(i, n, "")
+          case Seq() =>
+            bad(if (joined) s"column $n not found on either side" else missing(n))
+          case _ => bad(s"column $n is ambiguous (both sides carry it) — qualify it")
+        }
+        case _ => bad(s"cannot resolve column reference: ${a.name}")
+      }
+    }
+  }
 
-  private def parseJoinCore(spark: SparkSession, c: Clauses,
+  /** The FROM/ON analysis shared by the plain continuous-join statement
+    * and the agg-over-join statement. */
+  private case class JoinCore(lRel: ChainRel, rRel: ChainRel,
+      joinType: String, sides: Sides, pairs: Seq[(String, String)])
+
+  private def joinCore(spark: SparkSession, b: Block,
       bad: String => Nothing): JoinCore = {
-    val chain = parseJoinChain(c.relation).getOrElse(
-      bad(s"FROM must be a linear `a JOIN b ON ...` chain, got: ${c.relation}"))
+    val chain = chainOf(b.from).getOrElse(
+      bad(s"FROM must be a linear `a JOIN b ON ...` chain, got: ${sqlOf(b.from)}"))
     val clCount = chain.count(r => isChangelogRel(spark, r.name))
     if (chain.size != 2 || clCount != 2) bad(
       s"exactly TWO changelog relations join continuously (got ${chain.size} " +
@@ -2037,302 +2103,200 @@ object ChangelogSql {
         "and join that changelog next")
     val Seq(lRel, rRel) = chain
     val jt = rRel.joinType.getOrElse("INNER")
-    if (jt == "CROSS") bad(
-      "CROSS JOIN of two changelogs has no key to partition state by; " +
-        "give an ON equi-condition")
-    val all = blank(c.selectList) + " " + blank(c.relation) + " " +
-      c.where.map(blank).getOrElse("") + " " +
-      c.groupBy.map(blank).getOrElse("") + " " +
-      c.having.map(blank).getOrElse("")
-    Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).foreach(m =>
-      if (("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
-          .findFirstIn(all).isDefined)
-        bad(s"the statement references encoding column $m — there is no " +
-          "raw passthrough for a two-changelog join; the operator " +
-          "consumes the encodings"))
-    // side resolution: qualifier = alias (or bare table name), else
-    // unique column membership
-    val lName = lRel.alias.getOrElse(lRel.name.split('.').last)
-    val rName = rRel.alias.getOrElse(rRel.name.split('.').last)
+    def noKey = bad("CROSS JOIN of two changelogs has no key to partition " +
+      "state by; give an ON equi-condition")
+    if (jt == "CROSS") noKey
+    val on = b.from.collect { case j: Join => j.condition }.flatten
+    encodingIn(namesIn(b.exprs ++ on)).foreach(m => bad(s"the statement " +
+      s"references encoding column $m — there is no raw passthrough for a " +
+      "two-changelog join; the operator consumes the encodings"))
+    val Seq(lName, rName) = chain.map(r => r.alias.getOrElse(r.name.split('.').last))
     if (lName.equalsIgnoreCase(rName)) bad(
       s"both sides resolve to the name '$lName' — alias one of them")
-    val lCols = relationColumns(spark, lRel.name).getOrElse(
-      bad(s"cannot resolve ${lRel.name}")).filterNot(encodingCol)
-    val rCols = relationColumns(spark, rRel.name).getOrElse(
-      bad(s"cannot resolve ${rRel.name}")).filterNot(encodingCol)
-    def resolve(ref0: String): (Int, String) = {
-      val ref = ref0.trim.replace("`", "")
-      def canon(cols: Seq[String], n: String): String =
-        cols.find(_.equalsIgnoreCase(n)).getOrElse(
-          bad(s"column $n not found"))
-      ref.split('.') match {
-        case Array(q, n) if q.equalsIgnoreCase(lName) => (0, canon(lCols, n))
-        case Array(q, n) if q.equalsIgnoreCase(rName) => (1, canon(rCols, n))
-        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref " +
-          s"(sides: $lName, $rName)")
-        case Array(n) =>
-          val inL = lCols.exists(_.equalsIgnoreCase(n))
-          val inR = rCols.exists(_.equalsIgnoreCase(n))
-          if (inL && inR) bad(s"column $n is ambiguous (both sides carry " +
-            "it) — qualify it")
-          if (inL) (0, canon(lCols, n))
-          else if (inR) (1, canon(rCols, n))
-          else bad(s"column $n not found on either side")
-        case _ => bad(s"cannot resolve column reference: $ref0")
-      }
-    }
-    // ON: a top-level conjunction of side-crossing equalities — the
-    // keyed-exchange contract (Flink hashes both inputs by the equi-key,
+    val sides = Sides(Seq(lName, rName), chain.map(r => relationColumns(spark, r.name)
+      .getOrElse(bad(s"cannot resolve ${r.name}")).filterNot(encodingCol)), _ => "")
+    // ON: a conjunction of side-crossing equalities — the keyed-exchange
+    // contract (Flink hashes both inputs by the equi-key,
     // StreamExecJoin.java:132's joinSpec)
-    val on = rRel.on.getOrElse(bad("CROSS JOIN of two changelogs has no " +
-      "key to partition state by; give an ON equi-condition"))
-    val EqRe = """(?s)^\(*\s*([\w.`]+)\s*=\s*([\w.`]+)\s*\)*$""".r
-    val pairs = graft.util.SqlSplit.splitTopLevelAnd(on).map(_.trim).map {
-      case EqRe(a, b) =>
-        (resolve(a), resolve(b)) match {
-          case ((0, la), (1, rb)) => (la, rb)
-          case ((1, ra), (0, lb)) => (lb, ra)
-          case _ => bad(s"ON conjunct '$a = $b' must compare one LEFT " +
-            "column with one RIGHT column")
-        }
-      case other => bad(s"ON supports equality conjuncts only (the state " +
-        s"is keyed by the equi-key), got: $other")
-    }
-    if (pairs.isEmpty) bad("empty ON condition")
-    JoinCore(lRel, rRel, jt, lName, rName, lCols, rCols, pairs,
-      c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_)).getOrElse(Nil),
-      Scope(resolve, side => if (side == 0) lName else rName, joinAggRef))
+    val (lo, hi) = span(b.from)
+    val pairs = conjuncts(sliced(on.headOption.getOrElse(noKey), lo, hi)).map(c =>
+      c.e match {
+        case EqualTo(x: UnresolvedAttribute, y: UnresolvedAttribute) =>
+          (sides.resolve(x, bad), sides.resolve(y, bad)) match {
+            case ((0, l), (1, r)) => (l, r)
+            case ((1, r), (0, l)) => (l, r)
+            case _ => bad(s"ON conjunct '${sqlOf(x)} = ${sqlOf(y)}' must " +
+              "compare one LEFT column with one RIGHT column")
+          }
+        case _ => bad("ON supports equality conjuncts only (the state is " +
+          s"keyed by the equi-key), got: ${c.sql}")
+      })
+    JoinCore(lRel, rRel, jt, sides, pairs)
   }
 
-  /** Validate + extract the continuous-join statement shape; throws a
-    * loud, specific error for every inadmissible variant. */
-  private def parseStreamJoinShape(
-      spark: SparkSession, c: Clauses): StreamJoinShape = {
-    val bad = failWith("continuous two-sided retraction JOIN")
-    if (c.groupBy.isDefined || c.having.isDefined || joinSelectHasAgg(spark, c))
-      bad("this statement AGGREGATES the join — it belongs to the " +
-        "agg-over-join route (Route.JoinAgg), which the front door " +
-        "dispatches first; reaching here means it was called directly")
-    if (c.orderBy.isDefined || c.limit.isDefined) bad(
-      "ORDER BY / LIMIT have no meaning on a continuous changelog")
-    val core = parseJoinCore(spark, c, bad)
-    if (callNames(blank(c.selectList)).nonEmpty) bad(
-      "the select list must be bare (optionally qualified, optionally " +
-        "aliased) columns — compute expressions on the materialized sink")
-    // select items: (side, col, outName); output names must be distinct
-    val ItemRe = """(?is)^(.*?)(?:\s+AS\s+`?(\w+)`?)?$""".r
-    val items = graft.util.SqlSplit.splitTopLevel(c.selectList)
-      .map(_.trim).map {
-        case ItemRe(e, a) =>
-          val (side, col0) = core.scope.resolve(e)
-          (side, col0, Option(a).getOrElse(col0))
-      }
-    val dup = items.groupBy(_._3.toLowerCase).collect {
-      case (n, g) if g.size > 1 => n
-    }
-    if (dup.nonEmpty) bad(s"duplicate output column name(s): " +
-      s"${dup.mkString(", ")} — alias them apart")
-    StreamJoinShape(
-      StreamJoinSide(core.lRel.name, core.lRel.alias, core.pairs.map(_._1),
-        items.collect { case (0, col0, out) => (col0, out) }),
-      StreamJoinSide(core.rRel.name, core.rRel.alias, core.pairs.map(_._2),
-        items.collect { case (1, col0, out) => (col0, out) }),
-      core.joinType, items.map(_._1), core.whereConjs)
-  }
-
-  /** Classify each WHERE conjunct onto ONE side by attempted analysis
-    * against that side's (aliased) schema, and enforce outer-join
-    * pushability: a deterministic payload predicate commutes with a
-    * changelog (a retraction passes iff the row it retracts did), so a
-    * single-side conjunct filters its side's stream BEFORE the join
-    * state — exactly Catalyst's own pushdown rule — but a predicate on
-    * a NULL-PADDED side would also erase pads (post-join WHERE
-    * semantics differ from pushdown there), and a cross-side predicate
-    * is a join condition, so both reject loudly. Returns (left
-    * conjuncts, right conjuncts). */
-  private def classifyJoinWhere(spark: SparkSession, sh: StreamJoinShape)
-      : (Seq[String], Seq[String]) = {
-    if (sh.whereConjs.isEmpty) return (Nil, Nil)
-    def bad(msg: String): Nothing = throw new IllegalArgumentException(
-      s"continuous two-sided retraction JOIN: $msg")
-    def probe(rel: String, alias: Option[String]) = {
-      val name = alias.getOrElse(rel.split('.').last)
-      spark.table(rel).alias(name)
-    }
-    val lProbe = probe(sh.left.rel, sh.left.alias)
-    val rProbe = probe(sh.right.rel, sh.right.alias)
-    // does the conjunct reference any COLUMN of either side? (a
-    // both-sides-resolvable conjunct over a SHARED column name is
-    // ambiguous — SQL errors there; only a pure constant predicate is
-    // genuinely side-neutral)
-    val allCols = (lProbe.columns ++ rProbe.columns).map(_.toLowerCase).toSet
-    def refsAnyColumn(conj: String): Boolean = {
-      val b = blank(conj)
-      """[A-Za-z_]\w*""".r.findAllMatchIn(b).exists { m =>
-        val isCall = b.drop(m.end).dropWhile(_.isWhitespace).startsWith("(")
-        !isCall && allCols(m.group(0).toLowerCase)
+  /** The join shape: each side carries `selected(side)`, and each WHERE
+    * conjunct goes to ONE side by the columns it references (each side's
+    * columns under its name). A deterministic payload predicate commutes
+    * with a changelog (a retraction passes iff the row it retracts did),
+    * so a single-side conjunct filters its side's stream BEFORE the join
+    * state — exactly Catalyst's own pushdown rule — but a predicate on a
+    * NULL-PADDED side would also erase pads (post-join WHERE semantics
+    * differ from pushdown there), and a cross-side predicate is a join
+    * condition, so both reject loudly. */
+  private def joinSides(spark: SparkSession, core: JoinCore,
+      where: Option[Sliced], selected: Int => Seq[(String, String)],
+      orderTags: Seq[Int], bad: String => Nothing): StreamJoinShape = {
+    val rels = Seq(core.lRel, core.rRel)
+    val cols = rels.map(r => relationColumns(spark, r.name).getOrElse(Nil))
+    def onSide(side: Int)(a: UnresolvedAttribute) = {
+      def has(c: String) = cols(side).exists(_.equalsIgnoreCase(c))
+      a.nameParts match {
+        case Seq(c) => has(c)
+        case Seq(q, c, _*) =>
+          (q.equalsIgnoreCase(core.sides.names(side)) && has(c)) || has(q)
+        case _ => false
       }
     }
-    val (l, r) = (Seq.newBuilder[String], Seq.newBuilder[String])
-    sh.whereConjs.foreach { conj =>
-      val onL = scala.util.Try(lProbe.filter(expr(conj))).isSuccess
-      val onR = scala.util.Try(rProbe.filter(expr(conj))).isSuccess
-      val side = (onL, onR) match {
+    val filters = where.toSeq.flatMap(conjuncts).map { c =>
+      val refs = c.e.collect { case a: UnresolvedAttribute => a }
+      val side = (refs.forall(onSide(0)), refs.forall(onSide(1))) match {
         case (true, false) => 0
         case (false, true) => 1
-        case (true, true) if !refsAnyColumn(conj) => 0 // pure constant
-        case (true, true) => bad(s"WHERE conjunct ($conj) is ambiguous " +
+        case (true, true) if refs.isEmpty => 0 // pure constant
+        case (true, true) => bad(s"WHERE conjunct (${c.sql}) is ambiguous " +
           "— it resolves against BOTH sides; qualify the column(s) " +
           "with the side's alias")
-        case _ => bad(s"WHERE conjunct ($conj) must reference exactly " +
+        case _ => bad(s"WHERE conjunct (${c.sql}) must reference exactly " +
           "one side — a cross-side predicate is a join condition (put " +
           "equalities in ON) and anything else filters the materialized " +
           "sink (FINAL_STATE)")
       }
-      val padded = (side == 0 && (sh.joinType == "RIGHT" || sh.joinType == "FULL")) ||
-        (side == 1 && (sh.joinType == "LEFT" || sh.joinType == "FULL"))
-      if (padded) bad(
-        s"WHERE conjunct ($conj) filters the null-padded side of a " +
-          s"${sh.joinType} join — pushing it would erase pads and " +
+      if (Seq("FULL", if (side == 0) "RIGHT" else "LEFT").contains(core.joinType))
+        bad(s"WHERE conjunct (${c.sql}) filters the null-padded side of a " +
+          s"${core.joinType} join — pushing it would erase pads and " +
           "post-join WHERE over pads is a different statement; filter " +
           "the materialized sink (FINAL_STATE) instead")
-      if (side == 0) l += conj else r += conj
+      (side, c.sql)
     }
-    (l.result(), r.result())
+    val Seq(l, r) = Seq(0, 1).map(side => StreamJoinSide(rels(side).name,
+      rels(side).alias, core.pairs.map(p => if (side == 0) p._1 else p._2),
+      selected(side), filters.collect { case (`side`, w) => w }))
+    StreamJoinShape(l, r, core.joinType, orderTags)
+  }
+
+  /** Validate + extract the continuous-join statement shape; throws a
+    * loud, specific error for every inadmissible variant. */
+  private def joinShape(spark: SparkSession, b: Block): StreamJoinShape = {
+    val bad = failWith("continuous two-sided retraction JOIN")
+    if (b.ordered) bad(
+      "ORDER BY / LIMIT have no meaning on a continuous changelog")
+    if (b.distinct) bad("SELECT DISTINCT has no meaning on a join's retract " +
+      "changelog; GROUP BY the columns instead")
+    val core = joinCore(spark, b, bad)
+    // select items: (side, col, outName); output names must be distinct
+    val items = b.items.map {
+      case a: UnresolvedAttribute =>
+        val (s, c) = core.sides.resolve(a, bad); (s, c, c)
+      case Alias(a: UnresolvedAttribute, out) =>
+        val (s, c) = core.sides.resolve(a, bad); (s, c, out)
+      case _ => bad("the select list must be bare (optionally qualified, " +
+        "optionally aliased) columns — compute expressions on the " +
+        "materialized sink")
+    }
+    val dup = items.groupBy(_._3.toLowerCase).collect { case (n, g) if g.size > 1 => n }
+    if (dup.nonEmpty) bad(s"duplicate output column name(s): " +
+      s"${dup.mkString(", ")} — alias them apart")
+    joinSides(spark, core, b.where,
+      side => items.collect { case (`side`, c, out) => (c, out) }, items.map(_._1), bad)
   }
 
   // ---- continuous agg-over-join (StreamExecJoin -> StreamExecGroupAggregate)
 
   /** One aggregate call in an agg-over-join select list. `side`/`col`
     * are (-1, "") for COUNT(*); `srcText` is the original expression
-    * text (HAVING substitution + EXPLAIN rendering). */
+    * text (EXPLAIN rendering). */
   private[graft] case class JoinAggCall(fn: String, distinct: Boolean,
       side: Int, col: String, out: String, srcText: String)
 
-  /** How one aggregate level names its input: `resolve` maps a column
-    * reference to (side, column), `qual` names a side's admissible
-    * qualifier (the HAVING rewrite) and `ref` the input-stream column
-    * that carries a resolved column. */
-  private[graft] case class Scope(resolve: String => (Int, String),
-      qual: Int => String, ref: (Int, String) => String)
-
-  /** The scope of a level over ONE input named `name` (an alias, a
-    * relation name, or "" for an unaliased subquery): a reference is
-    * `col` or `name.col`; `missing` words the unknown-column error. */
-  private def singleScope(name: String, cols: Seq[String],
-      missing: String => String, bad: String => Nothing): Scope = {
-    def canon(n: String): String =
-      cols.find(_.equalsIgnoreCase(n)).getOrElse(bad(missing(n)))
-    def resolve(ref0: String): (Int, String) = {
-      val ref = ref0.trim.replace("`", "")
-      ref.split('.') match {
-        case Array(q, n) if q.equalsIgnoreCase(name) => (0, canon(n))
-        case Array(q, _) => bad(s"unknown qualifier '$q' in $ref")
-        case Array(n) => (0, canon(n))
-        case _ => bad(s"cannot resolve column reference: $ref0")
-      }
-    }
-    Scope(resolve, _ => if (name.isEmpty) "__none__" else name, (_, c0) => c0)
-  }
-
-  /** One aggregate level of a continuous statement: its clauses, its
-    * scope, and its select list parsed against that scope — the GROUP
-    * BY items (side, col, output name; the outputs are the sink's upsert
-    * key), the aggregate calls, and the select list's statement order
-    * across both kinds (Left(groupIdx) | Right(aggIdx)). */
-  private[graft] case class AggLevel(c: Clauses, scope: Scope,
-      groupItems: Seq[(Int, String, String)], aggs: Seq[JoinAggCall],
-      selectOrder: Seq[Either[Int, Int]])
+  /** One aggregate level of a continuous statement: its WHERE conjuncts
+    * and HAVING, its inputs, and its select list parsed against them —
+    * the GROUP BY items (side, col, output name; the outputs are the
+    * sink's upsert key), the aggregate calls, and the select list's
+    * statement order across both kinds (Left(groupIdx) | Right(aggIdx)). */
+  private[graft] case class AggLevel(where: Seq[String], having: Option[Sliced],
+      sides: Sides, groupItems: Seq[(Int, String, String)],
+      aggs: Seq[JoinAggCall], selectOrder: Seq[Either[Int, Int]])
 
   /** Internal (collision-free) name of a joined column inside the
     * agg-over-join topology. */
   private def joinAggRef(side: Int, col: String): String =
     if (side == 0) s"__jl_$col" else s"__jr_$col"
 
-  /** Parse + validate an aggregate select list and its GROUP BY against
-    * a level's scope — the walk every aggregate level shares (bare
+  /** Validate an aggregate select list and its GROUP BY against a
+    * level's inputs — the walk every aggregate level shares (bare
     * relation, two-changelog join, aggregate subquery). Group items come
     * in GROUP BY order; the select order is anchored onto them. */
-  private def parseAggLevel(c: Clauses, scope: Scope,
-      bad: String => Nothing): AggLevel = {
-    val resolve = scope.resolve
-    if (c.orderBy.isDefined || c.limit.isDefined) bad(
+  private def levelOf(b: Block, sides: Sides, bad: String => Nothing): AggLevel = {
+    if (b.ordered) bad(
       "ORDER BY / LIMIT have no meaning on a continuous changelog")
-    require(!"""(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined,
+    require(!b.distinct,
       "SELECT DISTINCT over a continuous changelog is not supported; " +
         "GROUP BY the columns instead (same live-group semantics)")
-    val AggFns = Set("COUNT", "SUM", "AVG", "MIN", "MAX")
-    val ItemRe = """(?is)^(.*?)(?:\s+AS\s+`?(\w+)`?)?$""".r
-    val CallRe = """(?is)^([A-Za-z_]\w*)\s*\(\s*(DISTINCT\s+)?(.*?)\s*\)$""".r
-    val BareRe = """(?s)^[\w.`]+$""".r
-    val aggsB = Seq.newBuilder[JoinAggCall]
-    val bareB = Seq.newBuilder[(Int, String, String)] // (side, col, out)
-    var aggIdx = -1
-    var bareIdx = -1
-    val selectOrder = graft.util.SqlSplit.splitTopLevel(c.selectList)
-      .map(_.trim).map {
-        case ItemRe(e0, a) =>
-          val e = e0.trim
-          blank(e) match {
-            case CallRe(fn0, dist, arg0) =>
-              val fn = fn0.toUpperCase
-              if (!AggFns(fn)) bad(s"$fn(...) in the select list: only " +
-                "COUNT/SUM/AVG/MIN/MAX have a retraction-consuming " +
-                "rewrite over a join; compute scalar expressions on the " +
-                "materialized sink")
-              if (dist != null && fn != "COUNT") bad(
-                s"$fn(DISTINCT ...) needs a per-group distinct-value " +
-                  "state the rewrite does not keep; only COUNT(DISTINCT " +
-                  "col) is supported")
-              // slice the ORIGINAL text for the arg (blanked text has
-              // literals erased); CallRe groups align because blanking
-              // is position-preserving
-              val arg = e.substring(e.indexOf('(') + 1,
-                e.lastIndexOf(')')).trim
-                .replaceFirst("(?is)^DISTINCT\\s+", "").trim
-              val (side, col0) =
-                if (arg == "*") {
-                  if (fn != "COUNT") bad(s"$fn(*) is not an aggregate")
-                  (-1, "")
-                } else if (BareRe.findFirstIn(arg).isDefined)
-                  resolve(arg)
-                else bad(s"aggregate argument ($arg) must be a bare " +
-                  "column — project computed arguments into the source " +
-                  "changelog relations")
-              val out = Option(a).getOrElse(bad(
-                s"alias the aggregate ($e) with AS <name> — it names " +
-                  "the sink column"))
-              aggsB += JoinAggCall(fn, dist != null, side, col0, out,
-                e.replaceAll("\\s+", " "))
-              aggIdx += 1
-              Right(aggIdx)
-            case b if BareRe.findFirstIn(b).isDefined =>
-              val (side, col0) = resolve(e)
-              bareB += ((side, col0, Option(a).getOrElse(col0)))
-              bareIdx += 1
-              Left(bareIdx)
-            case _ => bad(s"select item ($e) must be a bare column or an " +
-              "aggregate call; compute expressions on the materialized sink")
-          }
+    // Left((side, col, out)) per bare column, Right(call) per aggregate
+    val items = b.items.map { item =>
+      val (e, alias) = item match {
+        case Alias(c, n) => (c, Some(n))
+        case u: UnresolvedAlias => (u.child, None)
+        case other => (other, None)
       }
-    val aggs = aggsB.result()
-    val bares = bareB.result()
+      e match {
+        case f: UnresolvedFunction if f.filter.isEmpty && !f.ignoreNulls &&
+            f.orderingWithinGroup.isEmpty =>
+          val fn = f.nameParts.last.toUpperCase
+          if (!Supported(fn)) bad(s"$fn(...) in the select list: only " +
+            "COUNT/SUM/AVG/MIN/MAX have a retraction-consuming " +
+            "rewrite over a join; compute scalar expressions on the " +
+            "materialized sink")
+          if (f.isDistinct && fn != "COUNT") bad(
+            s"$fn(DISTINCT ...) needs a per-group distinct-value " +
+              "state the rewrite does not keep; only COUNT(DISTINCT " +
+              "col) is supported")
+          val (side, col0) = f.arguments match {
+            case Seq(x) if isStarArg(f, x) =>
+              if (fn != "COUNT") bad(s"$fn(*) is not an aggregate")
+              (-1, "")
+            case Seq(x: UnresolvedAttribute) => sides.resolve(x, bad)
+            case args => bad(s"aggregate argument (${args.map(sqlOf)
+              .mkString(", ")}) must be a bare column — project computed " +
+              "arguments into the source changelog relations")
+          }
+          Right(JoinAggCall(fn, f.isDistinct, side, col0, alias.getOrElse(bad(
+            s"alias the aggregate (${sqlOf(e)}) with AS <name> — it names " +
+              "the sink column")), sqlOf(e).split(Array(' ', '\t', '\n', '\r'))
+            .filter(_.nonEmpty).mkString(" ")))
+        case a: UnresolvedAttribute =>
+          val (side, col0) = sides.resolve(a, bad)
+          Left((side, col0, alias.getOrElse(col0)))
+        case _ => bad(s"select item (${sqlOf(e)}) must be a bare column or " +
+          "an aggregate call; compute expressions on the materialized sink")
+      }
+    }
+    val aggs = items.collect { case Right(a) => a }
+    val bares = items.collect { case Left(g) => g }
     if (aggs.isEmpty) bad("no aggregate in the select list; a plain " +
       "projection of the join is the join statement itself (GROUP BY " +
       "without aggregates = DISTINCT, which FINAL_STATE(sink) answers)")
     // GROUP BY items: bare columns; the bare select items must be
     // exactly the grouped columns (anything else has no single value)
-    val groupRefs = c.groupBy.toSeq
-      .flatMap(graft.util.SqlSplit.splitTopLevel(_)).map(_.trim).map { g =>
-        if (BareRe.findFirstIn(blank(g)).isEmpty) bad(
-          s"GROUP BY item ($g) must be a bare column — project computed " +
-            "grouping keys into the source changelog relations")
-        resolve(g)
-      }
+    val groupRefs = b.groupBy.toSeq.flatten.map {
+      case a: UnresolvedAttribute => sides.resolve(a, bad)
+      case g => bad(s"GROUP BY item (${sqlOf(g)}) must be a bare column — " +
+        "project computed grouping keys into the source changelog relations")
+    }
     if (groupRefs.isEmpty && bares.nonEmpty) bad(
       s"non-aggregated column ${bares.head._2} without GROUP BY")
     val groupItems = groupRefs.map { case (side, col0) =>
-      bares.find(b => b._1 == side && b._2.equalsIgnoreCase(col0)) match {
+      bares.find(g => g._1 == side && g._2.equalsIgnoreCase(col0)) match {
         case Some((_, _, out)) => (side, col0, out)
         case None => bad(s"GROUP BY column $col0 must appear in the " +
           "select list — it is the sink's upsert key")
@@ -2347,80 +2311,73 @@ object ChangelogSql {
       .groupBy(_.toLowerCase).collect { case (n, g) if g.size > 1 => n }
     if (dup.nonEmpty) bad(s"duplicate output column name(s): " +
       s"${dup.mkString(", ")} — alias them apart")
-    // re-anchor Left() from statement-order bare-item index to the
-    // matching groupItems index (bare items == grouped columns, proven
-    // above, but the two lists may order them differently)
-    val anchored = selectOrder.map {
-      case Left(bi) =>
-        val (side, col0, _) = bares(bi)
+    // the select order: bare items anchor onto their groupItems index
+    // (bare items == grouped columns, proven above, but the two lists
+    // may order them differently)
+    var aggIdx = -1
+    val selectOrder = items.map {
+      case Left((side, col0, _)) =>
         Left(groupItems.indexWhere(g => g._1 == side && g._2 == col0))
-      case r => r
+      case Right(_) => aggIdx += 1; Right(aggIdx)
     }
-    AggLevel(c, scope, groupItems, aggs, anchored)
+    AggLevel(b.where.toSeq.flatMap(conjuncts).map(_.sql), b.having, sides,
+      groupItems, aggs, selectOrder)
   }
 
-  /** Parse an aggregate over a two-changelog join: the aggregate level
-    * over the join's output, and the synthesized join shape — each side
+  /** An aggregate over a two-changelog join: the aggregate level over
+    * the join's output, and the synthesized join shape — each side
     * carries exactly the columns the level reads, under collision-free
-    * internal names ([[joinAggRef]]). The level's WHERE is cleared: it
-    * filters each side below the join state instead
-    * ([[classifyJoinWhere]]). */
-  private def parseJoinAgg(spark: SparkSession, c: Clauses): Route.JoinAgg = {
+    * internal names ([[joinAggRef]]). The WHERE filters each side below
+    * the join state ([[joinSides]]), not the level. */
+  private def joinAgg(spark: SparkSession, b: Block): Route.JoinAgg = {
     val bad = failWith("continuous aggregate over a two-changelog JOIN")
-    val core = parseJoinCore(spark, c, bad)
-    val level = parseAggLevel(c.copy(where = None), core.scope, bad)
+    val core = joinCore(spark, b, bad)
+    val level = levelOf(b.copy(where = None), core.sides, bad)
     val needed = (level.groupItems.map(g => (g._1, g._2)) ++
       level.aggs.filter(_.side >= 0).map(a => (a.side, a.col))).distinct
-    def sideSel(side: Int) = needed.collect {
-      case (s0, col0) if s0 == side => (col0, joinAggRef(side, col0))
+    def sel(side: Int) = needed.collect {
+      case (`side`, col0) => (col0, joinAggRef(side, col0))
     }
-    val (lSel, rSel) = (sideSel(0), sideSel(1))
-    val join = StreamJoinShape(
-      StreamJoinSide(core.lRel.name, core.lRel.alias,
-        core.pairs.map(_._1), lSel),
-      StreamJoinSide(core.rRel.name, core.rRel.alias,
-        core.pairs.map(_._2), rSel),
-      core.joinType,
-      Seq.fill(lSel.size)(0) ++ Seq.fill(rSel.size)(1),
-      core.whereConjs)
-    Route.JoinAgg(join, level)
+    Route.JoinAgg(joinSides(spark, core, b.where, sel,
+      Seq.fill(sel(0).size)(0) ++ Seq.fill(sel(1).size)(1), bad), level)
   }
 
-  /** Rewrite a HAVING clause onto the aggregate stage's OUTPUT columns:
-    * each aggregate call that textually matches a select-list aggregate
-    * (whitespace/case/qualifier-insensitive — `qual(side)` names the
-    * admissible qualifier) becomes its alias, each grouped column its
-    * output name; alias references pass through. Any aggregate call
-    * left after substitution rejects loudly — the state only keeps the
-    * accumulators the select list declared. */
-  private def rewriteAggHaving(spark: SparkSession, h: String,
-      aggs: Seq[JoinAggCall], groupItems: Seq[(Int, String, String)],
-      qual: Int => String, bad: String => Nothing): String = {
-    import java.util.regex.Pattern
-    var s = h
-    aggs.foreach { a =>
-      val argPat =
-        if (a.col.isEmpty) "\\*"
-        else s"(?:${Pattern.quote(qual(a.side))}\\s*\\.\\s*)?`?" +
-          Pattern.quote(a.col) + "`?"
-      val pat = s"(?i)\\b${a.fn}\\s*\\(\\s*" +
-        (if (a.distinct) "DISTINCT\\s+" else "") + argPat + "\\s*\\)"
-      s = s.replaceAll(pat,
-        java.util.regex.Matcher.quoteReplacement("`" + a.out + "`"))
+  /** HAVING over the aggregate stage's OUTPUT columns: each aggregate
+    * call a select-list aggregate computes (same function, DISTINCT and
+    * column, qualified by its input's name or not) becomes that
+    * aggregate's alias and each grouped column its output name, spliced
+    * into the clause's own text; alias references pass through. Any
+    * other aggregate call rejects loudly — the state only keeps the
+    * declared accumulators. */
+  private def havingOnOutputs(spark: SparkSession, level: AggLevel,
+      h: Sliced, bad: String => Nothing): String = {
+    def refers(a: UnresolvedAttribute, side: Int, col: String) = a.nameParts match {
+      case Seq(c) => c.equalsIgnoreCase(col)
+      case Seq(q, c) => c.equalsIgnoreCase(col) &&
+        level.sides.names(side).nonEmpty && q.equalsIgnoreCase(level.sides.names(side))
+      case _ => false
     }
-    groupItems.foreach { case (side, col0, out) =>
-      val pat = s"(?i)\\b(?:${Pattern.quote(qual(side))}\\s*\\.\\s*)?`?" +
-        Pattern.quote(col0) + "`?\\b"
-      s = s.replaceAll(pat, "`" + out + "`")
+    def subst(e: Expression): Seq[((Int, Int), String)] = e match {
+      case f: UnresolvedFunction if isAggCall(spark, f.nameParts.last.toUpperCase) =>
+        val fn = f.nameParts.last.toUpperCase
+        val out = level.aggs.find(a => a.fn == fn && a.distinct == f.isDistinct &&
+          (f.arguments match {
+            case Seq(x) if isStarArg(f, x) => a.col.isEmpty
+            case Seq(x: UnresolvedAttribute) => a.col.nonEmpty && refers(x, a.side, a.col)
+            case _ => false
+          })).getOrElse(bad(s"HAVING aggregate $fn(...) does not " +
+            "match any select-list aggregate — the state only keeps the " +
+            "declared accumulators; alias the aggregate in the select list " +
+            "and reference it (by alias or by repeating the exact expression)"))
+        Seq(span(f) -> s"`${out.out}`")
+      case a: UnresolvedAttribute => level.groupItems.collectFirst {
+        case (side, c0, out) if refers(a, side, c0) => span(a) -> s"`$out`"
+      }.toSeq
+      case other => other.children.flatMap(subst)
     }
-    val leftoverAgg = callNames(blank(s)).find(n =>
-      Supported(n) || StreamOverSql.customAgg(n).isDefined ||
-        isAggregateFn(spark, n).contains(true))
-    leftoverAgg.foreach(n => bad(s"HAVING aggregate $n(...) does not " +
-      "match any select-list aggregate — the state only keeps the " +
-      "declared accumulators; alias the aggregate in the select list " +
-      "and reference it (by alias or by repeating the exact expression)"))
-    s
+    subst(h.e).sortBy(-_._1._1).foldLeft(h.sql) { case (t, ((s, e), r)) =>
+      t.substring(0, s - h.at) + r + t.substring(e - h.at + 1)
+    }
   }
 
   /** The join-operator part of the route line, shared by the plain join
@@ -2428,7 +2385,7 @@ object ChangelogSql {
     * downstream-operator tail). */
   private def joinExplainCore(spark: SparkSession, sh: StreamJoinShape)
       : String = {
-    val (lW, rW) = classifyJoinWhere(spark, sh)
+    val (lW, rW) = (sh.left.filters, sh.right.filters)
     val key = sh.left.keyCols.zip(sh.right.keyCols)
       .map { case (l, r) => s"$l = $r" }.mkString(" AND ")
     val pads =
@@ -2478,7 +2435,7 @@ object ChangelogSql {
     * last retraction). DECLARED UPSERT inputs chain ChangelogNormalize
     * first ([[retractStreamOf]]), or fuse it into the join state
     * ([[joinSideFusable]]). WHERE pushes single-side conjuncts to their
-    * side's stream BEFORE the join state ([[classifyJoinWhere]]).
+    * side's stream BEFORE the join state ([[joinSides]]).
     * The plain join statement sinks this stream directly (a join output
     * has no upsert key, so the live result is `FINAL_STATE(sink)`); the
     * agg-over-join statement and a composed top-N chain their operator
@@ -2495,7 +2452,7 @@ object ChangelogSql {
   private def joinChangelogStream(
       spark: SparkSession, sh: StreamJoinShape): DataFrame = {
     import spark.implicits._
-    val (lWhere, rWhere) = classifyJoinWhere(spark, sh)
+    val (lWhere, rWhere) = (sh.left.filters, sh.right.filters)
     val fuseL = joinSideFusable(spark, sh.left, lWhere)
     val fuseR = joinSideFusable(spark, sh.right, rWhere)
     def sideStream(side: StreamJoinSide, filters: Seq[String],
@@ -2782,98 +2739,6 @@ object ChangelogSql {
   // ---- composed statements: top-N over an aggregate (StreamExecGroup-
   //      Aggregate -> StreamExecRank) and aggregates over aggregates ---
 
-  private val TopNAsFromParenRe =
-    """(?is)^\s*AS\s+`?(\w+)`?\s+FROM\s*\(""".r
-  private val TopNAfterInnerRe =
-    ("""(?is)^(?:\s+(?:AS\s+)?(\w+))?\s*\)\s+WHERE\s+""" +
-      """`?[\w.]*?(\w+)`?\s*(<=|<)\s*(\d+)\s*$""").r
-
-  /** Parse the composed statement `SELECT ... FROM (SELECT *,
-    * ROW_NUMBER() OVER (...) AS rn FROM ( <inner aggregate> ) [x] )
-    * WHERE rn <= N` — the reference's rank-over-aggregate plan shape.
-    * Returns the top-N shape (partition/order/outer columns reference
-    * the INNER aggregate's OUTPUTS; rel is a marker label) and the
-    * inner select text. */
-  private def parseStreamTopNOverAgg(
-      spark: SparkSession, select: String): Option[(TopNShape, String)] = {
-    val stmt = select.trim.replaceAll(";\\s*$", "")
-    val b = blank(stmt)
-    val om = """(?is)ROW_NUMBER\s*\(\s*\)\s*OVER\s*\(""".r
-      .findFirstMatchIn(b).getOrElse(return None)
-    val open = om.end - 1
-    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, open)).getOrElse(return None)
-    val head = b.substring(0, om.end)
-    val specB = b.substring(open + 1, close)
-    val spec = stmt.substring(open + 1, close)
-    val am = TopNAsFromParenRe.findFirstMatchIn(b.substring(close + 1))
-      .getOrElse(return None)
-    val rn = am.group(1)
-    val innerOpen = close + 1 + am.end - 1
-    val innerClose = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, innerOpen))
-      .getOrElse(return None)
-    val inner = stmt.substring(innerOpen + 1, innerClose)
-    if ("""(?is)^\s*SELECT\b""".r.findFirstIn(blank(inner)).isEmpty)
-      return None
-    // the inner must reference a changelog relation somewhere down its
-    // nesting — else this is a batch/windowed subquery shape some
-    // other route owns
-    if (!refsChangelogDeep(spark, inner)) return None
-    val after = b.substring(innerClose + 1)
-    val tm = TopNAfterInnerRe.findFirstMatchIn(after).getOrElse(return None)
-    val (aliasOpt, rnRef, op, nStr) = (Option(tm.group(1)), tm.group(2),
-      tm.group(3), tm.group(4))
-    def bare(s0: String): String = {
-      val t = s0.trim.replace("`", "")
-      aliasOpt.filter(a => t.toLowerCase.startsWith(a.toLowerCase + "."))
-        .map(a => t.drop(a.length + 1)).getOrElse(t)
-    }
-    if (bare(rnRef) != rn) return None
-    val outer = head match {
-      case TopNHeadRe(o) => o
-      case _ => return None
-    }
-    val outerCols = graft.util.SqlSplit.splitTopLevel(outer).map(bare)
-    val (partCols, items) =
-      topNSpecItems(spec, specB, bare).getOrElse(return None)
-    if (!(outerCols ++ partCols).forall(_.matches("""\w+"""))) return None
-    val n0 = nStr.toInt
-    val n = if (op == "<") n0 - 1 else n0
-    if (n < 1) return None
-    Some((TopNShape(outerCols, partCols, items, rn, "<inner aggregate>", n),
-      inner))
-  }
-
-  /** Extract a parenthesized FROM-subquery: `( <inner> ) [alias]`.
-    * Returns (inner text, alias or None). */
-  private def parenSubquery(fromText: String): Option[(String, Option[String])] = {
-    val t = fromText.trim
-    if (!t.startsWith("(")) return None
-    val b = blank(t)
-    val close = scala.util.Try(graft.util.SqlSplit.matchParenOrFail(b, 0)).getOrElse(return None)
-    val inner = t.substring(1, close)
-    val rest = t.substring(close + 1).trim
-    val alias =
-      if (rest.isEmpty) None
-      else """(?is)^(?:AS\s+)?`?(\w+)`?$""".r.findFirstMatchIn(rest)
-        .map(_.group(1)).orElse(return None)
-    Some((inner, alias))
-  }
-
-  /** Does this SELECT read a changelog relation anywhere down its
-    * FROM-subquery nesting? (The dispatch test for composed shapes —
-    * depth-recursive so a rollup-of-a-rollup still routes here.) */
-  private def refsChangelogDeep(spark: SparkSession, sel: String): Boolean =
-    parse(sel).exists { ic =>
-      parseJoinChain(ic.relation).map(_.map(_.name))
-        .getOrElse(ic.relation.trim match {
-          case RelRe(n, _) => Seq(n)
-          case _ => Seq.empty
-        }).exists(isChangelogRel(spark, _)) ||
-      parenSubquery(ic.relation).exists { case (deeper, _) =>
-        refsChangelogDeep(spark, deeper)
-      }
-    }
-
   /** Parse a TWS aggregate over ONE changelog relation: the COUNT(DISTINCT)
     * statement (the one aggregate the sign-algebra route cannot express
     * — Spark bans distinct aggregation on a streaming DataFrame — lowers
@@ -2883,27 +2748,20 @@ object ChangelogSql {
     * downstream operator consumes in append mode). Returns the relation,
     * its name in the statement and the parsed level. */
   private def relAggLevel(
-      spark: SparkSession, c: Clauses): (String, String, AggLevel) = {
+      spark: SparkSession, b: Block): (String, String, AggLevel) = {
     val bad = failWith("continuous aggregate over a changelog")
-    val (rel, alias) = c.relation.trim match {
-      case RelRe(n, a) if isChangelogRel(spark, n) => (n, Option(a))
-      case other => bad("the inner FROM must be ONE changelog relation " +
-        s"or a two-changelog JOIN, got: $other")
+    val (rel, alias) = chainOf(b.from) match {
+      case Some(Seq(r)) if isChangelogRel(spark, r.name) => (r.name, r.alias)
+      case _ => bad("the inner FROM must be ONE changelog relation " +
+        s"or a two-changelog JOIN, got: ${sqlOf(b.from)}")
     }
-    val all = blank(c.selectList) + " " +
-      c.where.map(blank).getOrElse("") + " " +
-      c.groupBy.map(blank).getOrElse("") + " " +
-      c.having.map(blank).getOrElse("")
-    Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).foreach(m =>
-      if (("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
-          .findFirstIn(all).isDefined)
-        bad(s"the statement references encoding column $m — the " +
-          "aggregate consumes the encodings"))
+    encodingIn(namesIn(b.exprs)).foreach(m => bad(s"the statement " +
+      s"references encoding column $m — the aggregate consumes the encodings"))
     val name = alias.getOrElse(rel.split('.').last)
     val cols = relationColumns(spark, rel).getOrElse(
       bad(s"cannot resolve $rel")).filterNot(encodingCol)
-    (rel, name, parseAggLevel(c,
-      singleScope(name, cols, n => s"column $n not found on $rel", bad), bad))
+    (rel, name, levelOf(b,
+      Sides(Seq(name), Seq(cols), n => s"column $n not found on $rel"), bad))
   }
 
   /** Lower one aggregate LEVEL over `src` (row_kind + the level's input
@@ -2919,18 +2777,16 @@ object ChangelogSql {
     * last) — and its GROUP BY output names, the sink's upsert key. */
   private def aggLevel(spark: SparkSession, level: AggLevel, src: DataFrame,
       retract: Boolean, bad: String => Nothing): (DataFrame, Seq[String]) = {
-    val filtered = level.c.where.map(graft.util.SqlSplit.splitTopLevelAnd(_))
-      .getOrElse(Nil).foldLeft(src)((d, w) => d.filter(expr(w)))
-    val ref = level.scope.ref
+    val filtered = level.where.foldLeft(src)((d, w) => d.filter(expr(w)))
+    val ref = level.sides.ref _
     val agged = loweredGroupAgg(spark, filtered,
       level.groupItems.map { case (side, c0, out) => (ref(side, c0), out) },
       level.aggs.map(a => (a, if (a.col.isEmpty) "" else ref(a.side, a.col))),
       level.selectOrder, retract, bad)
-    val having = level.c.having.map { h =>
-      val rewritten = rewriteAggHaving(spark, h, level.aggs,
-        level.groupItems, level.scope.qual, bad)
+    val having = level.having.map { h =>
+      val rewritten = havingOnOutputs(spark, level, h, bad)
       try expr(rewritten)
-      catch { case e: Exception => bad(s"HAVING ($h) did not resolve " +
+      catch { case e: Exception => bad(s"HAVING (${h.sql}) did not resolve " +
         s"against the aggregate outputs (rewritten: $rewritten): " +
         e.getMessage) }
     }
@@ -2981,16 +2837,16 @@ object ChangelogSql {
     /** An aggregate over an aggregate subquery `inner` aliased `alias` —
       * StreamExecGroupAggregate feeding a second one, the inner emitting
       * UPDATE_BEFORE/AFTER pairs; any nesting depth. */
-    final case class NestedAgg(c: Clauses, inner: String,
+    final case class NestedAgg(b: Block, inner: LogicalPlan,
         alias: Option[String]) extends Aggregate
     /** The TWS aggregate over ONE changelog relation ([[relAggLevel]]);
       * as a whole statement, the COUNT(DISTINCT) aggregates. */
-    final case class RelAgg(c: Clauses) extends Aggregate
+    final case class RelAgg(b: Block) extends Aggregate
     /** The sign-algebra aggregate over one changelog, bare or joined to
       * static relations ([[signAgg]]). */
-    final case class SignAgg(c: Clauses, chain: Seq[ChainRel], clIdx: Int)
+    final case class SignAgg(select: String, chain: Seq[ChainRel], clIdx: Int)
         extends Route
-    /** An aggregate over a two-changelog join ([[parseJoinAgg]]) —
+    /** An aggregate over a two-changelog join ([[joinAgg]]) —
       * StreamExecJoin feeding StreamExecGroupAggregate: the join's +I/-D
       * delta stream re-keys on the GROUP BY columns into the TWS
       * aggregate, two keyed exchanges per micro-batch (equi-key into the
@@ -3003,60 +2859,72 @@ object ChangelogSql {
   }
 
   /** The route of INSERT body `select`, or None when it is no continuous
-    * changelog statement (the append path's). First match wins, in this
-    * order: top-N over a subquery, top-N, aggregate over an aggregate,
-    * COUNT(DISTINCT) over one changelog, sign-algebra aggregate,
-    * aggregate over a two-changelog join, two-changelog join. A shape a
-    * route owns but cannot lower (a malformed join, a bad subquery)
-    * rejects here with that route's error — never with the append
-    * path's misleading watermark complaint. */
-  private[graft] def route(spark: SparkSession, select: String): Option[Route] =
-    parseStreamTopNOverAgg(spark, select).map { case (shape, inner) =>
-      Route.TopNAgg(shape, subqueryRoute(spark, inner)): Route
-    }.orElse(parseStreamTopN(spark, select).map(shape =>
-      Route.TopN(shape, topNFastEligible(spark, shape))))
-    .orElse(parse(select).flatMap { c =>
-      def aggregates = c.groupBy.isDefined || joinSelectHasAgg(spark, c)
-      val nested =
-        if (aggregates) parenSubquery(c.relation).filter { case (inner, _) =>
-          refsChangelogDeep(spark, inner)
-        }
-        else None
-      def countsDistinct = c.relation.trim match {
-        case RelRe(n, _) if isChangelogRel(spark, n) =>
-          """(?is)\bCOUNT\s*\(\s*DISTINCT\b""".r
-            .findFirstIn(blank(c.selectList)).isDefined
-        case _ => false
+    * changelog statement (the append path's). The body is parsed ONCE
+    * with Spark's parser and the route is a match over that parsed plan;
+    * a body the parser rejects (window TVFs, MATCH_RECOGNIZE) or that
+    * reads no changelog goes to the append path, which keeps its own
+    * errors. First match wins, in this order: top-N over a subquery,
+    * top-N, aggregate over an aggregate, COUNT(DISTINCT) over one
+    * changelog, sign-algebra aggregate, aggregate over a two-changelog
+    * join, two-changelog join. A shape a route owns but cannot lower (a
+    * malformed join, a bad subquery) rejects here with that route's
+    * error — never with the append path's misleading watermark
+    * complaint. */
+  private[graft] def route(spark: SparkSession, select: String): Option[Route] = {
+    val plan =
+      try spark.sessionState.sqlParser.parsePlan(select)
+      catch { case scala.util.control.NonFatal(_) => return None }
+    topNRoute(spark, plan).orElse(block(plan).flatMap { b =>
+      val chain = chainOf(b.from)
+      val changelogs = chain.toSeq.flatten.zipWithIndex.collect {
+        case (r, i) if isChangelogRel(spark, r.name) => i
       }
-      nested.map { case (inner, alias) => Route.NestedAgg(c, inner, alias) }
-        .orElse(Option.when(countsDistinct)(Route.RelAgg(c)))
-        .orElse(signAggChain(spark, c).map { case (chain, i) =>
-          Route.SignAgg(c, chain, i) })
-        .orElse(Option.when(readsTwoChangelogs(spark, c))(
-          if (c.having.isDefined || aggregates) parseJoinAgg(spark, c)
-          else Route.Join(parseStreamJoinShape(spark, c))))
+      val nested = b.from match {
+        case SubqueryAlias(id, inner) if aggregates(spark, b) &&
+            refsChangelogDeep(spark, inner) =>
+          Some(Route.NestedAgg(b, inner, aliasOf(id)))
+        case _ => None
+      }
+      // COUNT(DISTINCT) has no sign-algebra form: the TWS aggregate's
+      // counted-value state
+      def countsDistinct = b.items.exists(_.exists {
+        case f: UnresolvedFunction =>
+          f.isDistinct && f.nameParts.last.equalsIgnoreCase("COUNT")
+        case _ => false
+      })
+      // the sign algebra: an aggregate of ONE changelog, bare or joined
+      // to other relations, that does not read row_kind/cdc_ts itself
+      // (that is a raw changelog passthrough, the append path's job)
+      def signAggregates = encodingIn(namesIn(b.exprs ++ b.from.collect {
+          case j: Join => j.condition }.flatten),
+          Seq(streaming.Cdc.RowKind, "cdc_ts")).isEmpty &&
+        (b.groupBy.isDefined || calls(b.items ++ b.having.map(_.e)).exists(n =>
+          Supported(n) || retractableUda(n).isDefined))
+      nested
+        .orElse(Option.when(chain.exists(_.size == 1) &&
+          changelogs.nonEmpty && countsDistinct)(Route.RelAgg(b)))
+        .orElse(Option.when(changelogs.size == 1 && signAggregates)(
+          Route.SignAgg(select, chain.get, changelogs.head)))
+        .orElse(Option.when(changelogs.size >= 2)(
+          if (b.having.isDefined || aggregates(spark, b)) joinAgg(spark, b)
+          else Route.Join(joinShape(spark, b))))
     })
+  }
 
-  /** Does FROM join two (or more) changelog relations? (Everything
-    * about the shape beyond this — INNER-ness, equi-ON, bare-column
-    * select — is validated LOUDLY by the join parse.) */
-  private def readsTwoChangelogs(spark: SparkSession, c: Clauses): Boolean =
-    parseJoinChain(c.relation).exists(
-      _.count(r => isChangelogRel(spark, r.name)) >= 2)
-
-  /** The route of a composed statement's subquery `sel`: an aggregate of
+  /** The route of a composed statement's subquery `p`: an aggregate of
     * a deeper subquery, a plain two-changelog join, an aggregate of a
     * two-changelog join, else an aggregate of ONE changelog relation. */
-  private def subqueryRoute(spark: SparkSession, sel: String): Route.Subquery = {
-    val c = parse(sel).getOrElse(failWith(
-      "continuous aggregate over a changelog")(s"unparseable inner statement: $sel"))
-    parenSubquery(c.relation) match {
-      case Some((deeper, alias)) => Route.NestedAgg(c, deeper, alias)
-      case None if readsTwoChangelogs(spark, c) =>
-        if (c.groupBy.isDefined || c.having.isDefined ||
-            joinSelectHasAgg(spark, c)) parseJoinAgg(spark, c)
-        else Route.Join(parseStreamJoinShape(spark, c))
-      case None => Route.RelAgg(c)
+  private def subqueryRoute(spark: SparkSession, p: LogicalPlan): Route.Subquery = {
+    val b = block(p).getOrElse(failWith("continuous aggregate over a " +
+      "changelog")(s"unparseable inner statement: ${sqlOf(p)}"))
+    b.from match {
+      case SubqueryAlias(id, deeper) if !deeper.isInstanceOf[UnresolvedRelation] =>
+        Route.NestedAgg(b, deeper, aliasOf(id))
+      case from if chainOf(from).exists(
+          _.count(r => isChangelogRel(spark, r.name)) >= 2) =>
+        if (aggregates(spark, b) || b.having.isDefined) joinAgg(spark, b)
+        else Route.Join(joinShape(spark, b))
+      case _ => Route.RelAgg(b)
     }
   }
 
@@ -3099,13 +2967,13 @@ object ChangelogSql {
       case _: Route.NestedAgg =>
         "nested continuous aggregation tree (one GROUP AGGREGATE per " +
           "level, each in RETRACT pair emission)"
-      case Route.RelAgg(c) =>
-        val (rel, _, level) = relAggLevel(spark, c)
+      case Route.RelAgg(b) =>
+        val (rel, _, level) = relAggLevel(spark, b)
         "retraction-consuming GROUP AGGREGATE (GroupAggFunction on " +
           s"transformWithState) over $rel — group key: (" +
           level.groupItems.map(_._3).mkString(", ") + "); aggregates: " +
           level.aggs.map(a => a.srcText + " AS " + a.out).mkString(", ") +
-          level.c.having.map(h => s"; HAVING $h").getOrElse("") +
+          level.having.map(h => s"; HAVING ${h.sql}").getOrElse("") +
           " [RETRACT pair emission]"
       case Route.JoinAgg(join, level) =>
         joinAggLine(spark, join, level) + " [RETRACT pair emission]"
@@ -3126,7 +2994,7 @@ object ChangelogSql {
       "transformWithState; per-group scalar accumulators, counted-value " +
       "MapState for MIN/MAX/COUNT DISTINCT with the current extreme " +
       s"cached) — group key: ($keys); aggregates: $aggList" +
-      level.c.having.map(h => s"; HAVING $h").getOrElse("")
+      level.having.map(h => s"; HAVING ${h.sql}").getOrElse("")
   }
 
   /** Lower aggregate route `r` onto [[aggLevel]] over its input stream:
@@ -3137,20 +3005,21 @@ object ChangelogSql {
   private def lowerAgg(spark: SparkSession, r: Route.Aggregate,
       retract: Boolean, bad: String => Nothing): (DataFrame, Seq[String]) =
     r match {
-      case Route.NestedAgg(c, inner, alias) =>
-        if (!(c.groupBy.isDefined || joinSelectHasAgg(spark, c))) bad(
+      case Route.NestedAgg(b, inner, alias) =>
+        if (!aggregates(spark, b)) bad(
           "a nested subquery level must aggregate (plain projections " +
-            "fold into the level above); got: " + c.selectList)
+            "fold into the level above); got: " +
+            b.items.map(sqlOf).mkString(", "))
         val src = subqueryStream(spark, subqueryRoute(spark, inner), bad)
         val name = alias.getOrElse("")
         val cols = src.columns.toSeq.filterNot(_ == streaming.Cdc.RowKind)
-        val level = parseAggLevel(c, singleScope(name, cols, n =>
+        val level = levelOf(b, Sides(Seq(name), Seq(cols), n =>
           s"column $n is not an output of the inner aggregate " +
-            s"(outputs: ${cols.mkString(", ")})", bad), bad)
+            s"(outputs: ${cols.mkString(", ")})"), bad)
         aggLevel(spark, level, if (name.isEmpty) src else src.alias(name),
           retract, bad)
-      case Route.RelAgg(c) =>
-        val (rel, name, level) = relAggLevel(spark, c)
+      case Route.RelAgg(b) =>
+        val (rel, name, level) = relAggLevel(spark, b)
         aggLevel(spark, level, retractStreamOf(spark, rel).alias(name),
           retract, bad)
       case Route.JoinAgg(join, level) =>
@@ -3192,7 +3061,10 @@ object ChangelogSql {
           else retractStreamOf(spark, shape.rel)
         val (out, keys) = topNLog(spark, shape, src, fast)
         (out, "append", upsertSinkWriter(spark, sink, keys))
-      case Route.SignAgg(c, chain, clIdx) =>
+      case Route.SignAgg(select, chain, clIdx) =>
+        // the sign-algebra lowering rewrites the statement's clause text
+        val c = parse(select).getOrElse(throw new IllegalArgumentException(
+          s"continuous changelog aggregate: no SELECT clauses in: $select"))
         val (df, keys, monotoneCols) = signAgg(spark, c, chain, clIdx)
         (upsertLog(df), "update",
           upsertSinkWriter(spark, sink, keys, monotoneCols))

@@ -760,10 +760,15 @@ object Engine {
                       .cast(f.dataType)): _*))
               }.start())
           case None =>
-            // an extended sink's computed columns are virtual: write the base
+            // an extended sink's computed columns are virtual: write the
+            // base. A sink nobody declared rejects, as Flink's INSERT INTO
+            // an unknown table does
             val target =
               if (spark.catalog.tableExists(s"__${sink}_base")) s"__${sink}_base"
-              else sink
+              else if (spark.catalog.tableExists(sink)) sink
+              else throw new IllegalArgumentException(
+                s"INSERT INTO $sink: no such table — declare the sink " +
+                  "(CREATE TABLE) before starting the continuous INSERT")
             ChangelogSql.startStream(spark, df, "append", checkpointDir)(
               _.toTable(target))
         }

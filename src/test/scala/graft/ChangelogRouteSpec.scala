@@ -170,7 +170,41 @@ class ChangelogRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"SELECT row_kind, g, x FROM $A",
       "append INSERT (continuous append-mode when a referenced " +
       "source declares WATERMARK/PROCTIME, plain batch write " +
-      "otherwise)"))
+      "otherwise)"),
+    // the same shapes spelled differently: the rank bound written
+    // `N >= rn`, an aliased ranked subquery over an aggregate, an
+    // aggregate aliased without AS
+    Case("topn_bound_first", Some("TopN"),
+      s"""SELECT g, k, x, rn FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x DESC) AS rn
+        FROM $A) z WHERE 5 >= rn""",
+      "continuous top-N, RetractStrategy " +
+      "(RetractableTopNFunction: MapState dataState + sorted " +
+      "counts) -> upsert changelog keyed by (partition columns, " +
+      "rank)"),
+    Case("topn_agg_ranked_alias", Some("TopNAgg(RelAgg)"),
+      s"""SELECT z.g, z.n, z.rn FROM (
+        SELECT *, ROW_NUMBER() OVER (ORDER BY n DESC) AS rn
+        FROM ( SELECT g, COUNT(*) AS n FROM $A GROUP BY g ) t
+      ) z WHERE z.rn <= 2""",
+      "retraction-consuming GROUP AGGREGATE (GroupAggFunction on " +
+      "transformWithState) over rt_a — group key: (g); " +
+      "aggregates: COUNT(*) AS n [RETRACT pair emission] -> " +
+      "continuous top-N, RetractStrategy (RetractableTopNFunction: " +
+      "MapState dataState + sorted counts) over (rn) -> upsert " +
+      "changelog keyed by (partition columns, rank)"),
+    Case("join_agg_implicit_alias", Some("JoinAgg"),
+      s"""SELECT b.seg, COUNT(*) n FROM $A a JOIN $B b ON a.k = b.k
+        GROUP BY b.seg""",
+      "continuous two-sided retraction JOIN (INNER, " +
+      "StreamingJoinOperator) — per-side state: MapState[payload " +
+      "-> live count] per join key (left rt_a, right rt_b; key: k " +
+      "= k) -> retraction-consuming GROUP AGGREGATE " +
+      "(GroupAggFunction on transformWithState; per-group scalar " +
+      "accumulators, counted-value MapState for MIN/MAX/COUNT " +
+      "DISTINCT with the current extreme cached) — group key: " +
+      "(seg); aggregates: COUNT(*) AS n -> upsert changelog keyed " +
+      "by the GROUP BY columns"))
 
   cases.foreach { c =>
     test(s"route and EXPLAIN route line: ${c.name}") {

@@ -231,6 +231,32 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("empty body"), e.getMessage)
   }
 
+  test("reject: continuous append INSERT into an undeclared sink") {
+    val h = math.abs(getClass.getName.hashCode)
+    val (src, sink) = (s"fdn_src_$h", s"fdn_nosink_$h")
+    Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
+    Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
+    Engine.sql(spark, s"DROP TABLE IF EXISTS $sink")
+    Engine.sql(spark, s"""
+      CREATE TABLE $src (k BIGINT, v BIGINT, ts TIMESTAMP,
+        WATERMARK FOR ts AS ts - INTERVAL '1' SECOND)""")
+    try {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-nosink").toString
+      val running = spark.streams.active.length
+      val e = intercept[IllegalArgumentException] {
+        Engine.sqlStreamInsert(spark,
+          s"INSERT INTO $sink SELECT k, v FROM $src WHERE v > 0", ckpt)
+      }
+      assert(e.getMessage.contains(s"INSERT INTO $sink: no such table"),
+        e.getMessage)
+      assert(!spark.catalog.tableExists(sink), "the sink was created")
+      assert(spark.streams.active.length == running, "a query started")
+    } finally {
+      Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
+      Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
+    }
+  }
+
   test("reject: extended WITH missing AS / missing main statement") {
     evRows.createOrReplaceTempView("neg_ev")
     try {

@@ -371,6 +371,7 @@ class SqlHintsSpec extends AnyFunSuite {
     Engine.sql(spark, s"""
       CREATE TABLE $fct (oid BIGINT, cust BIGINT, ts TIMESTAMP,
         WATERMARK FOR ts AS ts - INTERVAL '1' SECOND)""")
+    Engine.sql(spark, s"CREATE TABLE $sink (oid BIGINT, cname STRING) USING parquet")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-slkp").toString
     val q = Engine.sqlStreamInsert(spark, s"""
       INSERT INTO $sink

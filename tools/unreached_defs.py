@@ -1,16 +1,31 @@
 #!/usr/bin/env python3
-"""List the public defs in src/main that nothing else in src/main names.
+"""List the public defs in src/main that no front door reaches.
 
-A def counts when it is neither private, protected nor an override, and
-its name appears on no other line of src/main/**/*.scala outside
-comments. Comments (`//` and nested `/* ... */`, scaladoc included) are
-blanked before the words are collected, so a name that only a doc
-comment mentions no longer hides its def; string literals are kept,
-because an `s"...$name..."` interpolation is a real use. Such a def is
-reached, if at all, only from specs, perfbench or outside callers: a
-candidate to give a front door, justify in COVERAGE.md, or delete. The
-scan is textual, so a name shared with any other identifier hides its
-def.
+Reachability is a fixed point over src/main/**/*.scala, comments
+blanked (`//` and nested `/* ... */`, scaladoc included; string
+literals are kept, because an `s"...$name..."` interpolation is a real
+use):
+
+- roots: every def of the front-door objects — `SparkEntry`, `Engine`,
+  `GraftExtensions`, the gateway (`SqlGateway`) and the SQL function
+  registry (`GraftFunctions`) — every `main`, and every `override` or
+  `implicit` def (the runtime or the compiler calls those);
+- top-level code (any line outside a def body: vals, object and class
+  bodies — the `queries` of the `SparkEntry` modules among them) names
+  defs as a root does;
+- a def is reached when a reached def's body or top-level code names it
+  outside the def's own body, so a name that occurs only in its own
+  body (a `require` message, a recursive call) does not reach it, nor
+  does a call from an unreached def.
+
+Where several defs share a short name, a qualified occurrence
+`Owner.name` reaches only the def of that owner; an unqualified one
+reaches the def of an enclosing owner when there is one, else every def
+of that name. A def body runs from its `def` line to the last line
+indented deeper than it (plus its closing brace); defs local to another
+def are never listed. Everything listed is reached, if at all, only
+from specs, perfbench or outside callers: a candidate to give a front
+door, justify in COVERAGE.md, or delete.
 
 Usage: python3 tools/unreached_defs.py [--check] [src/main]
 Prints `path:line: Object.def` per def, then the count on stderr.
@@ -29,10 +44,12 @@ DEF = re.compile(r'^\s*((?:(?:final|implicit|override|lazy|inline|'
 OWNER = re.compile(r'^(\s*)(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?|'
                    r'final|sealed|abstract|implicit|case)\s+)*'
                    r'(?:object|class|trait)\s+([A-Za-z_]\w*)')
-WORD = re.compile(r'[A-Za-z_]\w*')
+WORD = re.compile(r'(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)')
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
 SECTION = 'Library surface without a front door'
 BULLET = re.compile(r'^- `([\w$]+\.[\w$]+)`')
+FRONT_DOORS = {'SparkEntry', 'Engine', 'GraftExtensions', 'SqlGateway',
+               'GraftFunctions'}
 
 
 def strip_comments(text):
@@ -81,40 +98,114 @@ def strip_comments(text):
     return ''.join(out)
 
 
-def scan(root):
-    """(path, line, Object.def) of every unreached public def."""
-    lines = []  # (path, line number, code with comments blanked)
-    for d, _, files in sorted(os.walk(root)):
-        for f in sorted(files):
+def indent(line):
+    return len(line) - len(line.lstrip())
+
+
+def read(root):
+    """[(path, [code lines with comments blanked])] under `root`."""
+    files = []
+    for d, _, names in sorted(os.walk(root)):
+        for f in sorted(names):
             if f.endswith('.scala'):
                 path = os.path.join(d, f)
                 with open(path, encoding='utf-8') as fh:
-                    code = strip_comments(fh.read())
-                lines += [(path, i, l)
-                          for i, l in enumerate(code.split('\n'), 1)]
-    lines_of = collections.defaultdict(set)
-    for k, (_, _, l) in enumerate(lines):
-        for w in set(WORD.findall(l)):
-            lines_of[w].add(k)
-    found = []
-    owners = []  # (indent, name) of the enclosing declarations
-    for k, (path, i, l) in enumerate(lines):
-        if i == 1:
-            owners = []
-        o = OWNER.match(l)
-        if o:
-            indent = len(o.group(1))
-            owners = [x for x in owners if x[0] < indent] + [(indent, o.group(2))]
+                    files.append((path, strip_comments(fh.read()).split('\n')))
+    return files
+
+
+def scan(root):
+    """(path, line, Object.def) of every public def no front door reaches."""
+    files = read(root)
+    defs = []   # dicts: path, line, owner, chain, name, start, end, public, root, local
+    uses = []   # (def index or None for top-level, chain, qualifier, name, file, line)
+    for fi, (path, lines) in enumerate(files):
+        owners = []      # (indent, name) of the enclosing declarations
+        open_defs = []   # indices into defs whose bodies are open
+        chains = []
+        for k, l in enumerate(lines):
+            if l.strip():
+                ind = indent(l)
+                while open_defs and k > defs[open_defs[-1]]['end']:
+                    open_defs.pop()
+                owners = [x for x in owners if x[0] < ind or
+                          (x[0] == ind and l.strip().startswith(('}', ')')))]
+            o = OWNER.match(l)
+            if o:
+                owners.append((len(o.group(1)), o.group(2)))
+            chain = tuple(n for _, n in owners)
+            chains.append(chain)
+            m = DEF.match(l)
+            if m and not o:
+                ind = indent(l)
+                end = k
+                j = k + 1
+                while j < len(lines):
+                    if not lines[j].strip() or indent(lines[j]) > ind:
+                        if lines[j].strip():
+                            end = j
+                        j += 1
+                        continue
+                    if indent(lines[j]) == ind and \
+                            lines[j].strip().startswith(('}', ')')):
+                        end = j
+                    break
+                mods = m.group(1)
+                owner = chain[-1] if chain else '?'
+                defs.append(dict(
+                    path=path, line=k + 1, owner=owner, chain=chain,
+                    name=m.group(2), start=k, end=end, file=fi,
+                    public=not re.search(r'private|protected|override', mods),
+                    local=bool(open_defs),
+                    root=(bool(re.search(r'override|implicit', mods)) or
+                          m.group(2) == 'main' or
+                          any(c in FRONT_DOORS for c in chain))))
+                open_defs.append(len(defs) - 1)
+            inner = open_defs[-1] if open_defs else None
+            for w in WORD.finditer(l):
+                uses.append((inner, chain, w.group(1), w.group(2), fi, k))
+    by_name = collections.defaultdict(list)
+    for i, d in enumerate(defs):
+        by_name[d['name']].append(i)
+    # the enclosing defs of a line: a use reaches nothing whose body holds it
+    def targets(chain, qual, name, fi, k):
+        cands = [i for i in by_name.get(name, ())
+                 if not (defs[i]['file'] == fi and
+                         defs[i]['start'] <= k <= defs[i]['end'])]
+        if len(cands) > 1:
+            if qual is not None and any(defs[i]['owner'] == qual for i in cands):
+                cands = [i for i in cands if defs[i]['owner'] == qual]
+            else:
+                near = [i for i in cands if defs[i]['owner'] in chain]
+                cands = near or cands
+        return cands
+    body_uses = collections.defaultdict(list)   # def index -> uses in its body
+    reached = set()
+    work = []
+    for inner, chain, qual, name, fi, k in uses:
+        if inner is None:
+            work += targets(chain, qual, name, fi, k)
+        else:
+            body_uses[inner].append((chain, qual, name, fi, k))
+    work += [i for i, d in enumerate(defs) if d['root']]
+    # a use inside a nested def body belongs to every enclosing def too
+    for i, d in enumerate(defs):
+        if d['local']:
+            for j, e in enumerate(defs):
+                if j != i and e['file'] == d['file'] and \
+                        e['start'] < d['start'] and d['end'] <= e['end']:
+                    body_uses[j] += body_uses[i]
+    while work:
+        i = work.pop()
+        if i in reached:
             continue
-        m = DEF.match(l)
-        if not m or re.search(r'private|protected|override', m.group(1)):
-            continue
-        if lines_of[m.group(2)] - {k}:
-            continue
-        indent = len(l) - len(l.lstrip())
-        owner = next((name for ind, name in reversed(owners) if ind < indent), '?')
-        found.append((path, i, f'{owner}.{m.group(2)}'))
-    return found
+        reached.add(i)
+        for chain, qual, name, fi, k in body_uses[i]:
+            work += [t for t in targets(chain, qual, name, fi, k)
+                     if t not in reached]
+    return [(d['path'], d['line'], f"{d['owner']}.{d['name']}")
+            for i, d in enumerate(defs)
+            if d['public'] and not d['local'] and i not in reached]
 
 
 def coverage_bullets(path='COVERAGE.md'):
