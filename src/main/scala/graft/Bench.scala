@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.graft.BusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -46,10 +47,13 @@ object Bench {
 
   /** Times one pass of a query. The clock covers the query only; the
     * `[bench]` line prints after the listener bus has drained, so its
-    * counters hold every event of the pass. */
+    * counters hold every event of the pass. `compiles` is the pass's
+    * Janino compile count (`CodegenMetrics`, JVM-wide): codegen cache
+    * misses. */
   private def timedPass(spark: SparkSession, counters: Counters, name: String,
       pass: Int)(run: => Unit): Either[Throwable, Double] = {
     counters.reset()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val r = try { run; Right((System.nanoTime() - t0) / 1e9) }
       catch { case e: Throwable => Left(e) }
@@ -57,7 +61,8 @@ object Bench {
     val outcome = r.fold(e => s"error=${e.getClass.getSimpleName}", t => f"wall_s=$t%.3f")
     println(f"[bench] $name pass=$pass $outcome jobs=${counters.jobs.get} " +
       f"stages=${counters.stages.get} tasks=${counters.tasks.get} " +
-      f"task_s=${counters.taskMs.get / 1000.0}%.2f")
+      f"task_s=${counters.taskMs.get / 1000.0}%.2f " +
+      f"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
     r
   }
 

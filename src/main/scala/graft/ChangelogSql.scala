@@ -3091,10 +3091,14 @@ object ChangelogSql {
         val (log, keys) = lowerAgg(spark, agg, retract = false, failWith(what))
         (log, "append", upsertSinkWriter(spark, sink, keys))
     }
-    // every micro-batch, stamped with its commit sequence, goes to `write`
+    // every micro-batch, stamped with its commit sequence, goes to `write`.
+    // The stamp is a zero-argument UDF, which generated code reads through
+    // its references: a Long literal is inlined into the generated Java,
+    // so every batch would compile a class of its own.
     startStream(spark, log, outputMode, checkpointDir)(
       _.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        write(batch.withColumn(SeqCol, lit(batchId)), batchId)
+        val stamp = udf(() => batchId).asNonNullable()
+        write(batch.withColumn(SeqCol, stamp()), batchId)
       }.start())
   }
 

@@ -14,6 +14,9 @@ object Engine {
   private lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
     .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Entries of Spark's JVM-wide codegen cache (`CodeGenerator.cache`). */
+  private[graft] val CodegenCacheEntries = 1000
+
   /** The one session factory: every main and the test suite build here. */
   def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus): SparkSession = {
     val s = SparkSession.builder()
@@ -28,6 +31,16 @@ object Engine {
       // onto Spark 4.1's TimeType, which ships behind this flag.
       .config("spark.sql.timeType.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // Spark's codegen cache is keyed by (class loader, code). With
+      // artifact isolation every streaming query's cloned session gets its
+      // own loader, so identical code compiles again per query and per
+      // restart; the engine adds no per-session jars or files, so all
+      // sessions share one artifact state and one loader.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // the default 100 entries is below one JVM's working set of
+      // generated classes (about 230 after two restarts of three
+      // continuous statements), so every micro-batch evicted and recompiled
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s

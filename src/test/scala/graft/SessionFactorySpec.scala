@@ -15,6 +15,12 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.sql.timeType.enabled") == "true")
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    // one artifact state (one class loader) for every session, and a
+    // codegen cache above the working set
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Engine.CodegenCacheEntries.toString)
+    assert(spark.newSession().conf.get("spark.sql.artifact.isolation.enabled") == "false")
     assert(spark.sparkContext.master == "local[4]")
   }
 
