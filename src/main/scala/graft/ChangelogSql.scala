@@ -8,13 +8,14 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
   UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Descending,
   EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
-  LessThanOrEqual, Literal, UnspecifiedFrame, WindowExpression,
-  WindowSpecDefinition}
+  LessThanOrEqual, Literal, NullsFirst, SortOrder, SubqueryExpression,
+  UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner,
   LeftOuter, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct,
-  Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Offset, Project,
-  Sort, SubqueryAlias, UnresolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command,
+  Distinct, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Offset,
+  ParsedStatement, Project, Sort, SubqueryAlias, UnresolvedHint}
 import org.apache.spark.sql.catalyst.trees.TreeNode
 import org.apache.spark.sql.types.IntegerType
 
@@ -74,6 +75,19 @@ import java.util.concurrent.atomic.AtomicInteger
   * window functions, or carry subqueries are deliberate raw-changelog
   * reads and fall through untouched.
   *
+  * ONE READING: [[sql]] and [[explainChangelog]] parse the statement
+  * ONCE with Spark's SQL parser and decide on that parsed (never
+  * analyzed) plan, like the continuous [[route]] below: a SELECT is a
+  * [[Block]] (select list, WHERE, GROUP BY, HAVING, DISTINCT, ORDER BY,
+  * LIMIT) over a FROM chain ([[chainOf]]), its calls are the parsed
+  * function nodes, and the relations it reads are the plan's census
+  * ([[relationsOf]]: every relation named anywhere, subqueries and CTE
+  * bodies included) — normalization, the composite guard and EXPLAIN's
+  * mode lines all read that census. The rewrites splice each call's
+  * replacement at its parsed position in the statement's own text. A
+  * statement Spark's parser rejects reads no changelog here and falls
+  * through.
+  *
   * JOINS: Flink propagates changelog mode through the whole tree
   * (FlinkChangelogModeInferenceProgram; joins consume and produce
   * retractions, StreamingJoinOperator.java:36). In batch that
@@ -132,125 +146,7 @@ object ChangelogSql {
   private def failWith(what: String): String => Nothing =
     msg => throw new IllegalArgumentException(s"$what: $msg")
 
-  /** Top-level clause offsets (paren depth 0 of the blanked text). */
-  private[graft] case class Clauses(selectList: String, relation: String,
-      where: Option[String], groupBy: Option[String],
-      having: Option[String], orderBy: Option[String],
-      limit: Option[String])
-
-  private def parse(stmt0: String): Option[Clauses] = {
-    import graft.util.SqlTokens
-    // trailing semicolon would make the relation token unparseable and
-    // silently fall a changelog aggregate through to plain SQL
-    val stmt = stmt0.trim.replaceAll(";\\s*$", "")
-    // clause boundaries walk the TOKEN stream (SqlTokens.structural —
-    // the single lexical layer): a keyword inside a string literal is a
-    // Str token, one inside a comment never reaches the walk, a
-    // backtick-quoted `from` is a QUOTED identifier and never a clause
-    // keyword, and a paren inside either can't desync the depth count —
-    // the bug classes the old blanked-regex slicing had to handle one
-    // by one are impossible by construction here
-    val toks = SqlTokens.structural(SqlTokens.tokenize(stmt))
-    def word(i: Int): String =
-      if (i < toks.length && toks(i).kind == SqlTokens.Kind.Ident &&
-          stmt.charAt(toks(i).start) != '`') toks(i).word(stmt)
-      else ""
-    if (word(0) != "SELECT") return None
-    // first DEPTH-0 occurrence of each clause keyword; depth-0 means a
-    // window's OVER(... ORDER BY) or a subquery's clauses never split
-    // the outer statement. Two-word clauses pair with the NEXT
-    // structural token, so comments between GROUP and BY are fine.
-    val found = scala.collection.mutable.Map.empty[String, (Int, Int)]
-    var depth = 0
-    var i = 1
-    while (i < toks.length) {
-      toks(i).kind match {
-        case SqlTokens.Kind.LParen => depth += 1
-        case SqlTokens.Kind.RParen => depth -= 1
-        case SqlTokens.Kind.Ident if depth == 0 =>
-          word(i) match {
-            case "FROM" | "WHERE" | "HAVING" | "LIMIT" =>
-              val k = word(i)
-              if (!found.contains(k))
-                found(k) = (toks(i).start, toks(i).end)
-            case "GROUP" | "ORDER" if word(i + 1) == "BY" =>
-              val k = word(i) + " BY"
-              if (!found.contains(k))
-                found(k) = (toks(i).start, toks(i + 1).end)
-            case _ => ()
-          }
-        case _ => ()
-      }
-      i += 1
-    }
-    val from = found.get("FROM").getOrElse(return None)
-    val where = found.get("WHERE")
-    val group = found.get("GROUP BY")
-    val havingKw = found.get("HAVING")
-    val order = found.get("ORDER BY")
-    val limit = found.get("LIMIT")
-    val boundaries =
-      (Seq(from) ++ where ++ group ++ havingKw ++ order ++ limit)
-        .map(_._1).sorted
-    // slices come from a COMMENT-BLANKED copy (comments are whitespace
-    // to SQL — leaving them in would, e.g., make a relation slice
-    // `t /* c */` fail the bare-relation shape); literal contents stay
-    val src = {
-      val arr = stmt.toCharArray
-      SqlTokens.tokenize(stmt).foreach { t =>
-        if (t.kind == SqlTokens.Kind.Comment) {
-          var j = t.start
-          while (j < t.end) { arr(j) = ' '; j += 1 }
-        }
-      }
-      new String(arr)
-    }
-    def sliceAfter(kwEnd: Int): String = {
-      val next = boundaries.filter(_ > kwEnd)
-      val stop = if (next.isEmpty) stmt.length else next.head
-      src.substring(kwEnd, stop).trim
-    }
-    Some(Clauses(
-      src.substring(toks(0).end, from._1).trim,
-      sliceAfter(from._2),
-      where.map(w => sliceAfter(w._2)),
-      group.map(g => sliceAfter(g._2)),
-      havingKw.map(h => sliceAfter(h._2)),
-      order.map(o => sliceAfter(o._2)),
-      limit.map(l => sliceAfter(l._2))))
-  }
-
-  /** Single bare (possibly qualified) relation with an optional alias —
-    * the shape the two-stage lowering rewrites. Anything else in FROM
-    * (joins, subqueries, comma lists, set operations spilling into the
-    * relation slice) takes the composite guard instead. */
-  private val RelRe =
-    """(?is)^`?([\w.]+)`?(?:\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?)?$""".r
-
-  /** Every `ident (` call site in blanked text. */
-  private val FnRe = """(?i)\b([A-Za-z_]\w*)\s*\(""".r
-
   private val Supported = Set("COUNT", "SUM", "AVG", "MIN", "MAX")
-
-  /** Call-LIKE syntax that is not a catalog function: CAST targets and
-    * parameterized type names, plus EXTRACT-style keyword forms the
-    * registry does not describe. */
-  private val SyntacticForms = Set(
-    "CAST", "TRY_CAST", "DECIMAL", "DEC", "NUMERIC", "VARCHAR", "CHAR",
-    "CHARACTER", "INTERVAL")
-
-  /** SQL keywords that can precede '(' in expression position without
-    * being calls (`x IN (...)`, `CASE WHEN (...)`, `a AND (b OR c)`). */
-  private val KeywordForms = Set(
-    "AND", "OR", "NOT", "IN", "WHEN", "THEN", "ELSE", "CASE", "END",
-    "LIKE", "ILIKE", "RLIKE", "REGEXP", "BETWEEN", "IS", "EXISTS", "ALL",
-    "ANY", "SOME", "ASC", "DESC", "DIV", "ON", "USING", "AS", "BY",
-    "DISTINCT", "ESCAPE", "SELECT", "FROM", "WHERE", "HAVING", "GROUP",
-    "ORDER", "LIMIT", "OFFSET", "UNION", "EXCEPT", "INTERSECT", "OVER")
-
-  private def callNames(blanked: String): Seq[String] =
-    FnRe.findAllMatchIn(blanked).map(_.group(1).toUpperCase)
-      .filterNot(KeywordForms).toSeq.distinct
 
   /** Registered retractable UDA for `fn`, if any. */
   private def retractableUda(
@@ -258,6 +154,10 @@ object ChangelogSql {
     StreamOverSql.customAgg(fn).collect {
       case r: streaming.StatefulOps.RetractableOverAgg => r
     }
+
+  /** Has `fn` a retraction-consuming rewrite ([[rewriteWith]])? */
+  private def rewritable(fn: String): Boolean =
+    Supported(fn) || retractableUda(fn).isDefined
 
   /** Classify `name` through the session's function registry
     * (FunctionRegistry is the engine's ground truth for what a name
@@ -288,14 +188,14 @@ object ChangelogSql {
         "materialize the final state first (Cdc.upsertMaterialize) and " +
         "aggregate that")
 
-  /** ALLOWLIST check over the aggregate-carrying clauses: every call
+  /** ALLOWLIST check over the aggregate-carrying expressions: every call
     * must be a supported aggregate, a registered retractable UDA, or a
     * registry-classified non-aggregate. Returns the UDA names in use. */
   private def checkAllowlist(
-      spark: SparkSession, rel: String, aggClauses: String): Seq[String] = {
-    val calls = callNames(aggClauses)
-    calls.foreach { n =>
-      if (!Supported(n) && !SyntacticForms(n)) {
+      spark: SparkSession, rel: String, es: Seq[Expression]): Seq[String] = {
+    val names = calls(es)
+    names.foreach { n =>
+      if (!Supported(n)) {
         StreamOverSql.customAgg(n) match {
           case Some(_: streaming.StatefulOps.RetractableOverAgg) => ()
           case Some(_) => rejectAgg(n, rel,
@@ -311,13 +211,14 @@ object ChangelogSql {
         }
       }
     }
-    calls.filter(n => retractableUda(n).isDefined)
+    names.filter(n => retractableUda(n).isDefined)
   }
 
-  /** Rewrite every supported-aggregate / retractable-UDA call in `list`
-    * into its retraction-consuming form. `weight` is `__net` (live
-    * multiset, netting path) or `__sign` (±1 per change row, the
-    * SINGLE-EXCHANGE path: COUNT/SUM/AVG and retractable UDAs
+  /** `s` with every supported-aggregate / retractable-UDA call rewritten
+    * into its retraction-consuming form, spliced at the call's parsed
+    * position (a FILTER clause after the call stays). `weight` is
+    * `__net` (live multiset, netting path) or `__sign` (±1 per change
+    * row, the SINGLE-EXCHANGE path: COUNT/SUM/AVG and retractable UDAs
     * distribute over the change signs — Σ over live rows == Σ x·sign
     * over change rows — so no netting shuffle is needed; MIN/MAX
     * callers never reach the sign path) — or a PRODUCT of per-side
@@ -325,19 +226,17 @@ object ChangelogSql {
     * f·s₁·s₂). `liveCond` is the MIN/MAX live filter matching the
     * weight (e.g. `__net > 0`, or a conjunction over the sides);
     * None = sign path, where MIN/MAX must not appear. */
-  private def rewriteWith(list: String, weight: String, grouped: Boolean,
+  private def rewriteWith(s: Sliced, weight: String, grouped: Boolean,
       streamMinMax: Boolean = false,
       liveCond: Option[String] = None): String = {
-    val b = blank(list)
-    val sb = new StringBuilder
-    var last = 0
-    FnRe.findAllMatchIn(b).foreach { m =>
-      val fn = m.group(1).toUpperCase
-      if (m.start >= last && (Supported(fn) || retractableUda(fn).isDefined)) {
-        val open = b.indexOf('(', m.start)
-        val close = graft.util.SqlSplit.matchParenOrFail(b, open)
-        val arg = list.substring(open + 1, close).trim
-        require(!arg.toUpperCase.startsWith("DISTINCT"),
+    def subst(e: Expression): Seq[((Int, Int), String)] = e match {
+      case f: UnresolvedFunction if rewritable(f.nameParts.last.toUpperCase) =>
+        val fn = f.nameParts.last.toUpperCase
+        val text = f.origin.sqlText.get
+        val open = text.indexOf('(', span(f)._1)
+        val close = graft.util.SqlSplit.matchParenOrFail(text, open)
+        val arg = text.substring(open + 1, close).trim
+        require(!f.isDistinct,
           s"changelog aggregate $fn(DISTINCT ...) is not supported; " +
             "aggregate the materialized state instead")
         // COALESCE on GLOBAL counts only: a fully-retracted input nets to
@@ -374,12 +273,17 @@ object ChangelogSql {
           case uda => // registered retractable UDA: weighted-fold UDAF
             s"${udafName(uda)}(CAST(($arg) AS DOUBLE), CAST($weight AS BIGINT))"
         }
-        sb.append(list.substring(last, m.start)).append(repl)
-        last = close + 1
-      }
+        Seq((span(f)._1, close) -> repl)
+      case other => other.children.flatMap(subst)
     }
-    sb.append(list.substring(last)).toString
+    splice(s, subst(s.e))
   }
+
+  /** `s`'s text with each statement range [start, stop] replaced. */
+  private def splice(s: Sliced, edits: Seq[((Int, Int), String)]): String =
+    edits.sortBy(-_._1._1).foldLeft(s.sql) { case (t, ((a, z), r)) =>
+      t.substring(0, a - s.at) + r + t.substring(z - s.at + 1)
+    }
 
   // ---- retractable user-defined aggregates ---------------------------
 
@@ -442,10 +346,6 @@ object ChangelogSql {
 
   private def isChangelogRel(spark: SparkSession, rel: String): Boolean =
     relationColumns(spark, rel).exists(_.contains(streaming.Cdc.RowKind))
-
-  /** Table identifiers in FROM/JOIN position anywhere in the blanked
-    * statement (subqueries included) — the composite guard's reach. */
-  private val FromJoinIdRe = """(?is)\b(?:FROM|JOIN)\s+`?([\w.]+)`?""".r
 
   /** The relation's declared UPSERT key columns, when it is an
     * UPSERT-mode changelog (row_kind ∈ {+U, -D}, keyed — the encoding
@@ -514,13 +414,9 @@ object ChangelogSql {
     * themselves are deliberate raw reads and skip normalization.
     * Returns (shadowed names, prior temp-view frames to restore). */
   private def normalizeUpsertRels(
-      spark: SparkSession, stmt: String): Seq[(String, Option[DataFrame])] = {
-    val b = blank(stmt)
-    val rawRead = Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).exists(m =>
-      ("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
-        .findFirstIn(b).isDefined)
-    if (rawRead) return Nil
-    FromJoinIdRe.findAllMatchIn(b).map(_.group(1)).toSeq.distinct.flatMap { rel =>
+      spark: SparkSession, plan: LogicalPlan): Seq[(String, Option[DataFrame])] = {
+    if (readsEncoding(plan)) return Nil
+    relationsOf(plan).flatMap { rel =>
       upsertKeysOf(spark, rel) match {
         case Some(keys) if isChangelogRel(spark, rel) =>
           val cols = relationColumns(spark, rel).getOrElse(Seq.empty)
@@ -628,11 +524,13 @@ object ChangelogSql {
     * per-relation changelog modes and the lowering this entry selects,
     * above the lowered Spark plan. The mode vocabulary is the
     * reference's: insert-only [+I], retract [+I,-U,+U,-D], upsert
-    * [+U,-D] with its key. */
+    * [+U,-D] with its key. The relations are the parsed statement's
+    * census ([[relationsOf]]); a statement Spark's parser rejects lists
+    * none. */
   def explainChangelog(spark: SparkSession, stmt: String): DataFrame = {
     import spark.implicits._
-    val b = blank(stmt)
-    val rels = FromJoinIdRe.findAllMatchIn(b).map(_.group(1)).toSeq.distinct
+    val parsedPlan = parsed(spark, stmt)
+    val rels = parsedPlan.toSeq.flatMap(relationsOf)
     def upsertOf(r: String) =
       upsertKeysOf(spark, r).filter(_ => isChangelogRel(spark, r))
     val modeLines = rels.map { r =>
@@ -643,15 +541,12 @@ object ChangelogSql {
       }
       s"  $r: $mode"
     }
-    val rawRead = Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol).exists(m =>
-      ("(?i)\\b" + java.util.regex.Pattern.quote(m) + "\\b").r
-        .findFirstIn(b).isDefined)
     val upsertRels = rels.filter(r => upsertOf(r).isDefined)
     val retractRels = rels.filter(r =>
       upsertOf(r).isEmpty && isChangelogRel(spark, r))
     val route: Seq[String] =
       if (upsertRels.isEmpty && retractRels.isEmpty) Nil
-      else if (rawRead)
+      else if (parsedPlan.exists(readsEncoding(_)))
         Seq("  route: RAW changelog read (encoding columns referenced) — " +
           "no rewrite")
       else {
@@ -659,68 +554,8 @@ object ChangelogSql {
           if (upsertRels.isEmpty) Nil
           else Seq("  route: ChangelogNormalize (keep-last per key) " +
             s"applied to: ${upsertRels.mkString(", ")}")
-        val agg =
-          if (retractRels.isEmpty) Nil
-          else parse(stmt) match {
-            case Some(c) =>
-              val aggClauses = blank(c.selectList) + " " +
-                c.having.map(blank).getOrElse("") + " " +
-                c.orderBy.map(blank).getOrElse("")
-              val isDistinct =
-                """(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined
-              val hasAgg = callNames(aggClauses).exists(Supported)
-              val needsNet = isDistinct ||
-                """(?i)\b(MIN|MAX)\s*\(""".r.findFirstIn(aggClauses).isDefined
-              // a JOIN chain reports the join lowering's chosen
-              // per-side weight columns + admissibility (the weights
-              // lowerJoin will bind, by its ordinal naming)
-              val joinChain = chainOfSql(spark, stmt).filter(_.size > 1)
-              joinChain match {
-                case Some(chain) if hasAgg || c.groupBy.isDefined || isDistinct =>
-                  val clIdxs = chain.zipWithIndex.collect {
-                    case (r, i) if isChangelogRel(spark, r.name) => i
-                  }
-                  val wName = (j: Int) =>
-                    if (needsNet) s"__net_$j" else s"__sign_$j"
-                  val sides = clIdxs.zipWithIndex.map { case (idx, j) =>
-                    s"${chain(idx).name} -> ${wName(j)}"
-                  }
-                  val joint = clIdxs.indices.map(wName).mkString(" * ")
-                  val inadmissible = chain.zipWithIndex.drop(1).collectFirst {
-                    case (r, i) if !(r.joinType.contains("INNER") ||
-                        r.joinType.contains("CROSS") ||
-                        (clIdxs.size == 1 &&
-                          ((r.joinType.contains("LEFT") && clIdxs.head < i) ||
-                           (r.joinType.contains("RIGHT") && clIdxs.head == i)))) =>
-                      s"  route: INADMISSIBLE join shape — changelog on " +
-                        s"the padded side of a ${r.joinType.getOrElse("?")} " +
-                        "JOIN (the statement will reject loudly)"
-                  }
-                  inadmissible.map(Seq(_)).getOrElse(Seq(
-                    "  route: changelog join lowering — per-side weight " +
-                      s"columns: ${sides.mkString(", ")}; joint weight = " +
-                      joint + (if (needsNet)
-                        " (netted multiplicities; live = all nets > 0)"
-                      else " (±1 sign products, zero extra exchange)")))
-                case Some(_) =>
-                  Seq("  route: raw changelog join read — no rewrite")
-                case None =>
-                  if (!hasAgg && c.groupBy.isEmpty && !isDistinct)
-                    Seq("  route: raw changelog projection — no rewrite")
-                  else if (needsNet)
-                    Seq("  route: retraction-consuming aggregate — NETTED " +
-                      "live multiset (net<>0 filter; MIN/MAX or DISTINCT " +
-                      "need surviving rows)")
-                  else
-                    Seq("  route: retraction-consuming aggregate — " +
-                      "single-exchange ±1 sign algebra (COUNT/SUM/AVG " +
-                      "distribute over change signs)")
-              }
-            case None =>
-              Seq("  route: composite statement — see this module's " +
-                "admissible-shape guards")
-          }
-        norm ++ agg
+        norm ++ Option.when(retractRels.nonEmpty)(
+          "  route: " + loweringLine(spark, parsedPlan.get))
       }
     val plan = scala.util.Try(
       Engine.sql(spark, stmt).queryExecution.explainString(
@@ -730,18 +565,60 @@ object ChangelogSql {
       "\n\n== Physical Plan ==\n" + plan).toDF("plan")
   }
 
+  /** The lowering [[sqlInner]] picks for statement `plan`, which reads
+    * a retract changelog: a join chain reports the per-side weight
+    * columns [[lowerJoin]] binds (by its ordinal naming) and their
+    * admissibility. */
+  private def loweringLine(spark: SparkSession, plan: LogicalPlan): String =
+    shapeOf(plan) match {
+      case Some((b, chain)) if chain.size > 1 =>
+        if (!aggregating(b)) "raw changelog join read — no rewrite"
+        else {
+          val clIdxs = changelogsIn(spark, chain)
+          val net = needsNet(b)
+          val wName = (j: Int) => if (net) s"__net_$j" else s"__sign_$j"
+          paddedJoin(chain, clIdxs) match {
+            case Some((r, _)) =>
+              "INADMISSIBLE join shape — changelog on the padded side of a " +
+                s"${r.joinType.getOrElse("?")} JOIN (the statement will " +
+                "reject loudly)"
+            case None =>
+              "changelog join lowering — per-side weight columns: " +
+                clIdxs.zipWithIndex.map { case (idx, j) =>
+                  s"${chain(idx).name} -> ${wName(j)}"
+                }.mkString(", ") + "; joint weight = " +
+                clIdxs.indices.map(wName).mkString(" * ") + (if (net)
+                  " (netted multiplicities; live = all nets > 0)"
+                else " (±1 sign products, zero extra exchange)")
+          }
+        }
+      case Some((b, _)) =>
+        if (!aggregating(b)) "raw changelog projection — no rewrite"
+        else if (needsNet(b))
+          "retraction-consuming aggregate — NETTED live multiset (net<>0 " +
+            "filter; MIN/MAX or DISTINCT need surviving rows)"
+        else
+          "retraction-consuming aggregate — single-exchange ±1 sign " +
+            "algebra (COUNT/SUM/AVG distribute over change signs)"
+      case None =>
+        "composite statement — see this module's admissible-shape guards"
+    }
+
   /** Lower `stmt` if it is a supported aggregate over a changelog
     * relation; None = not this entry's statement (plain fall-through).
-    * The changelog signal is the RESOLVED schema, never text. Throws
-    * for aggregate statements that read a changelog in a shape with no
-    * retraction-consuming rewrite (composite FROM, unsupported or
-    * unclassifiable aggregate calls). UPSERT-mode relations (declared
+    * The statement is parsed ONCE with Spark's parser; one that parser
+    * rejects reads no changelog here. The changelog signal is the
+    * RESOLVED schema of the relations the parsed plan names, never text.
+    * Throws for aggregate statements that read a changelog in a shape
+    * with no retraction-consuming rewrite (composite FROM, unsupported
+    * or unclassifiable aggregate calls). UPSERT-mode relations (declared
     * `graft.upsert.keys`) are normalized FIRST (ChangelogNormalize) —
     * and since the normalized state is a plain relation, the statement
     * over it executes directly. */
   def sql(spark: SparkSession, stmt: String): Option[DataFrame] = {
-    val shadows = normalizeUpsertRels(spark, stmt)
-    if (shadows.isEmpty) sqlInner(spark, stmt)
+    val plan = parsed(spark, stmt).getOrElse(return None)
+    val shadows = normalizeUpsertRels(spark, plan)
+    if (shadows.isEmpty) sqlInner(spark, plan)
     // with shadows active the statement must still execute THROUGH the
     // extended dispatch (WatermarkDdl owns INSERT-into-connector routing
     // and the healing CREATE path) — the shadow views stay bound for the
@@ -749,49 +626,32 @@ object ChangelogSql {
     // spark.sql here would lose that routing (e.g. INSERT INTO
     // <connector table> SELECT ... FROM <upsert table> would try to
     // write the catalog view and fail)
-    else try sqlInner(spark, stmt).orElse(Some(WatermarkDdl.sql(spark, stmt)))
+    else try sqlInner(spark, plan).orElse(Some(WatermarkDdl.sql(spark, stmt)))
     finally shadows.foreach {
       case (name, Some(prior)) => prior.createOrReplaceTempView(name)
       case (name, None)        => spark.catalog.dropTempView(name): Unit
     }
   }
 
-  private def sqlInner(spark: SparkSession, stmt: String): Option[DataFrame] = {
-    val c = parse(stmt).getOrElse {
-      // WITH-led (and otherwise clause-unparseable) SELECT forms still
-      // cross the composite guard: a CTE statement aggregating a
-      // changelog has no rewrite, and plain SQL would count change rows
-      val b = blank(stmt)
-      if ("""(?is)^\s*(WITH|SELECT)\b""".r.findFirstIn(b).isDefined) {
-        val refsMeta = Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-          ("(?i)\\b" + m + "\\b").r.findFirstIn(b).isDefined)
-        compositeGuard(spark, stmt,
-          groupByDefined = """(?is)\bGROUP\s+BY\b""".r.findFirstIn(b).isDefined,
-          refsMeta = refsMeta)
+  /** The lowering of parsed statement `plan`: untouched when it reads
+    * no changelog or names row_kind/cdc_ts (a deliberate raw changelog
+    * read); a single changelog relation takes the two-stage rewrite, a
+    * linear join chain [[lowerJoin]], and every other query reading a
+    * changelog the composite guard. */
+  private def sqlInner(spark: SparkSession, plan: LogicalPlan): Option[DataFrame] = {
+    val changelogs = relationsOf(plan).filter(isChangelogRel(spark, _))
+    if (changelogs.isEmpty ||
+        readsEncoding(plan, Seq(streaming.Cdc.RowKind, "cdc_ts"))) return None
+    def guarded = { compositeGuard(spark, plan, changelogs); None }
+    shapeOf(plan) match {
+      case Some((b, Seq(r))) =>
+        if (isChangelogRel(spark, r.name)) lowerBare(spark, b, r.name, r.alias)
+        else None // single non-changelog relation: untouched
+      case Some((b, chain)) => lowerJoin(spark, b, chain).orElse(guarded)
+      case None => plan match {
+        case _: Command | _: ParsedStatement => None // not a query
+        case _ => guarded
       }
-      return None
-    }
-    val bl = blank(c.selectList)
-    // the three AGGREGATE-CARRYING clauses share one scan: an aggregate
-    // hiding in HAVING or ORDER BY needs the same rewrite (or the same
-    // loud reject) as one in the select list
-    val aggClauses = bl + " " + c.having.map(blank).getOrElse("") + " " +
-      c.orderBy.map(blank).getOrElse("")
-    val allClauses = aggClauses + " " + c.where.map(blank).getOrElse("") +
-      " " + c.groupBy.map(blank).getOrElse("")
-    val refsMeta = Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-      ("(?i)\\b" + m + "\\b").r.findFirstIn(allClauses).isDefined)
-    c.relation match {
-      case RelRe(name, alias) if isChangelogRel(spark, name) =>
-        lowerBare(spark, c, name, Option(alias), aggClauses, allClauses, refsMeta)
-      case RelRe(_, _) => None // single non-changelog relation: untouched
-      case _ =>
-        // a linear join chain with exactly ONE changelog lowers through
-        // the sign/netting algebra; every other composite shape keeps
-        // the loud guard
-        lowerJoin(spark, stmt, c, aggClauses, allClauses).orElse {
-          compositeGuard(spark, stmt, c.groupBy.isDefined, refsMeta); None
-        }
     }
   }
 
@@ -803,6 +663,29 @@ object ChangelogSql {
   private[graft] case class ChainRel(name: String, alias: Option[String],
       joinType: Option[String], on: Option[String])
 
+  /** The indexes of `chain`'s changelog relations. */
+  private def changelogsIn(spark: SparkSession, chain: Seq[ChainRel]): Seq[Int] =
+    chain.indices.filter(i => isChangelogRel(spark, chain(i).name))
+
+  /** The first join of `chain` that puts a changelog (`clIdxs`) on a
+    * null-padded side, and why it is inadmissible. One changelog joins
+    * INNER/CROSS freely, LEFT only from the left (preserved) part and
+    * RIGHT only as the right operand; several join INNER/CROSS only. */
+  private def paddedJoin(chain: Seq[ChainRel],
+      clIdxs: Seq[Int]): Option[(ChainRel, String)] =
+    chain.zipWithIndex.drop(1).collectFirst(Function.unlift { case (r, i) =>
+      r.joinType.get match {
+        case "INNER" | "CROSS" => None
+        case _ if clIdxs.size > 1 => Some(r -> ("multiple changelogs " +
+          "compose with INNER/CROSS joins only (an outer join would need " +
+          "padded-side retraction semantics)"))
+        case "LEFT" if clIdxs.head < i => None
+        case "RIGHT" if clIdxs.head == i => None
+        case "FULL" => Some(r -> "FULL pads both sides")
+        case t => Some(r -> s"the changelog must be on the $t-preserved side")
+      }
+    })
+
   /** Lower an aggregate over a join chain reading changelogs — Flink
     * propagates changelog mode through joins
     * (FlinkChangelogModeInferenceProgram; StreamingJoinOperator.java:36
@@ -812,71 +695,39 @@ object ChangelogSql {
     * multiplicities) distribute through the join and the joint weight
     * is their PRODUCT — `Σ f over live tuples == Σ f · s₁·s₂·…` over
     * change-row tuples, the batch form of two retraction streams
-    * meeting in StreamingJoinOperator. Admissible shapes: ONE changelog
-    * joins static relations with INNER/CROSS freely, LEFT only with the
-    * changelog in the left (preserved) part, RIGHT only with the
-    * changelog as the right operand; MULTIPLE changelogs join with
-    * INNER/CROSS only. A changelog on a PADDED side is rejected: its
-    * dead pairs would still "match" the preserved side, so a
-    * fully-retracted key would never null-pad — silent wrongness
-    * (FULL is both at once). Returns None when the statement is not
-    * this shape at all (the composite guard then decides). */
-  private def lowerJoin(spark: SparkSession, stmt: String, c: Clauses,
-      aggClauses: String, allClauses: String): Option[DataFrame] = {
-    val chain = chainOfSql(spark, stmt).filter(_.size > 1).getOrElse(return None)
-    val clIdxs = chain.zipWithIndex.collect {
-      case (r, i) if isChangelogRel(spark, r.name) => i
-    }
-    if (clIdxs.isEmpty) return None // no changelog anywhere: untouched
-    // raw intent / unsupported positions: fall back to the guard's
-    // decision (ON conditions are part of the statement's references)
-    val withFrom = allClauses + " " + blank(c.relation)
-    if (Seq(streaming.Cdc.RowKind, "cdc_ts").exists(m =>
-      ("(?i)\\b" + m + "\\b").r.findFirstIn(withFrom).isDefined)) return None
-    if ("""(?i)\bOVER\s*\(""".r.findFirstIn(allClauses).isDefined) return None
-    if ("""(?i)\(\s*SELECT\b""".r.findFirstIn(allClauses).isDefined) return None
-    val udas = checkAllowlist(spark, chain(clIdxs.head).name, aggClauses)
-    val isDistinct =
-      """(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined
-    val hasAgg = callNames(aggClauses).exists(Supported) || udas.nonEmpty
-    if (!hasAgg && c.groupBy.isEmpty && !isDistinct) return None // raw join read
-    // join-type admissibility (join i connects rels [0..i-1] with rel i)
-    chain.zipWithIndex.drop(1).foreach { case (r, i) =>
-      def bad(msg: String): Nothing = throw new IllegalArgumentException(
+    * meeting in StreamingJoinOperator. Admissible shapes: [[paddedJoin]].
+    * A changelog on a PADDED side is rejected: its dead pairs would
+    * still "match" the preserved side, so a fully-retracted key would
+    * never null-pad — silent wrongness (FULL is both at once). Returns
+    * None when the statement is not this shape at all (the composite
+    * guard then decides). */
+  private def lowerJoin(spark: SparkSession, b: Block,
+      chain: Seq[ChainRel]): Option[DataFrame] = {
+    val clIdxs = changelogsIn(spark, chain)
+    if (clIdxs.isEmpty) return None // no changelog in the chain
+    if (windowOrSubquery(b.exprs ++ b.order)) return None
+    val udas = checkAllowlist(spark, chain(clIdxs.head).name, aggExprs(b))
+    if (!aggregating(b)) return None // raw join read
+    paddedJoin(chain, clIdxs).foreach { case (r, why) =>
+      throw new IllegalArgumentException(
         s"changelog relation${if (clIdxs.size > 1) "s" else ""} " +
           s"${clIdxs.map(chain(_).name).mkString(", ")} under a " +
-          s"${r.joinType.get} JOIN: $msg — a fully-retracted key " +
+          s"${r.joinType.get} JOIN: $why — a fully-retracted key " +
           "would still match and never null-pad, so no retraction-consuming " +
           "rewrite exists; materialize the final state first " +
           "(Cdc.upsertMaterialize) and join that")
-      r.joinType.get match {
-        case "INNER" | "CROSS" => ()
-        case _ if clIdxs.size > 1 => bad(
-          "multiple changelogs compose with INNER/CROSS joins only " +
-            "(an outer join would need padded-side retraction semantics)")
-        case "LEFT" if clIdxs.head < i => ()
-        case "RIGHT" if clIdxs.head == i => ()
-        case "FULL" => bad("FULL pads both sides")
-        case t => bad(s"the changelog must be on the $t-preserved side")
-      }
     }
     registerUdafs(spark, udas)
-    val sign = when(col(streaming.Cdc.RowKind)
-      .isin(streaming.Cdc.Insert, streaming.Cdc.UpdateAfter), 1)
-      .otherwise(-1)
-    val needsNet = isDistinct ||
-      """(?i)\b(MIN|MAX)\s*\(""".r.findFirstIn(aggClauses).isDefined
+    val net = needsNet(b)
     // one stage-1 frame per changelog, each with an ORDINAL weight
-    // column (the joint weight is their product)
-    val refd = """[A-Za-z_]\w*""".r.findAllIn(withFrom)
-      .map(_.toLowerCase).toSet
+    // column (the joint weight is their product); netting keeps the
+    // referenced columns, the ON conditions' among them (the join keys)
+    val refd = namesIn(b.exprs ++ b.order ++ b.on).map(_.toLowerCase).toSet
     val stages: Seq[(Int, DataFrame, String)] =
       clIdxs.zipWithIndex.map { case (idx, j) =>
         val src0 = spark.table(chain(idx).name)
-        if (!needsNet) (idx, src0.withColumn(s"__sign_$j", sign), s"__sign_$j")
+        if (!net) (idx, src0.withColumn(s"__sign_$j", sign), s"__sign_$j")
         else {
-          // referenced columns include the ON conditions' (netting must
-          // preserve the join keys)
           val dataCols = src0.columns.toSeq.filterNot(n =>
             n == streaming.Cdc.RowKind || n == "cdc_ts")
             .filter(n => refd(n.toLowerCase))
@@ -888,7 +739,7 @@ object ChangelogSql {
     val weight =
       if (stages.size == 1) stages.head._3
       else stages.map(_._3).mkString("(", " * ", ")")
-    val liveCond = if (!needsNet) None
+    val liveCond = if (!net) None
       else Some(stages.map(s => s"${s._3} > 0").mkString("(", " AND ", ")"))
     // extra changelogs (beyond the first, which assembleStage2 binds)
     // get their own stage-1 views, dropped once the statement's
@@ -918,7 +769,7 @@ object ChangelogSql {
         }
         prefix + base + r.on.fold("")(o => s" ON $o")
       }.mkString(" ")
-    try assembleStage2(spark, c, stages.head._2, weight, fromSql,
+    try assembleStage2(spark, b, stages.head._2, weight, fromSql,
       whereInStage2 = true, liveCond = liveCond)
     finally extraViews.values.foreach(v => spark.catalog.dropTempView(v): Unit)
   }
@@ -929,23 +780,20 @@ object ChangelogSql {
     * changelog (row_kind/cdc_ts referenced). An AGGREGATE over a
     * changelog reached through any OTHER composite FROM must reject
     * loudly — counting retraction rows as data is exactly the
-    * wrongness this module bans. */
-  private def compositeGuard(spark: SparkSession, stmt: String,
-      groupByDefined: Boolean, refsMeta: Boolean): Unit = {
-    if (refsMeta) return // deliberate raw changelog read
-    val b = blank(stmt)
-    val changelogRels = FromJoinIdRe.findAllMatchIn(b).map(_.group(1))
-      .toSeq.distinct.filter(r => isChangelogRel(spark, r))
-    if (changelogRels.isEmpty) return
+    * wrongness this module bans. `changelogs`: the changelog relations
+    * the statement's census names. */
+  private def compositeGuard(spark: SparkSession, plan: LogicalPlan,
+      changelogs: Seq[String]): Unit = {
     // aggregate-shaped: GROUP BY, a supported-aggregate or UDA call, or
     // any call the registry classifies as an aggregate — ANYWHERE in the
     // statement (a scalar subquery aggregating the changelog is just as
     // wrong as a top-level aggregate)
-    val aggShaped = groupByDefined || callNames(b).exists(isAggCall(spark, _))
+    val aggShaped = nodesOf(plan).exists(_.isInstanceOf[Aggregate]) ||
+      calls(exprsOf(plan)).exists(isAggCall(spark, _))
     if (aggShaped) throw new IllegalArgumentException(
       s"aggregate over a composite FROM reading changelog relation" +
-        s"${if (changelogRels.size > 1) "s" else ""} " +
-        s"${changelogRels.mkString(", ")} has no retraction-consuming " +
+        s"${if (changelogs.size > 1) "s" else ""} " +
+        s"${changelogs.mkString(", ")} has no retraction-consuming " +
         "rewrite (running it as plain SQL would aggregate retraction " +
         "rows as data); supported: ONE changelog joined to static " +
         "relations with INNER/CROSS joins (LEFT/RIGHT only with the " +
@@ -954,66 +802,73 @@ object ChangelogSql {
         "that, or reference row_kind explicitly to read the raw changelog")
   }
 
-  private def lowerBare(
-      spark: SparkSession, c: Clauses, name: String, alias: Option[String],
-      aggClauses: String, allClauses: String,
-      refsMeta: Boolean): Option[DataFrame] = {
-    if (refsMeta) return None // raw changelog read: untouched
-    // window functions (agg OVER) and subqueries are beyond this
-    // entry's rewrite: the user is reading the changelog itself (OVER)
-    // or mixing in other relations — both keep the documented
-    // raw-fall-through semantics rather than a half-right rewrite
-    if ("""(?i)\bOVER\s*\(""".r.findFirstIn(allClauses).isDefined) return None
-    if ("""(?i)\(\s*SELECT\b""".r.findFirstIn(allClauses).isDefined) return None
-    // ALLOWLIST over the aggregate-carrying clauses — runs even when no
-    // supported aggregate is present: `SELECT MAX_BY(k, x) FROM cl` has
-    // no COUNT/SUM/AVG/MIN/MAX and no GROUP BY, yet silently running it
-    // raw would aggregate change rows as data
-    val udas = checkAllowlist(spark, name, aggClauses)
-    val isDistinct =
-      """(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined
-    val hasAgg = callNames(aggClauses).exists(Supported) || udas.nonEmpty
+  /** The aggregate-carrying expressions: select list, HAVING, ORDER BY. */
+  private def aggExprs(b: Block): Seq[Expression] =
+    b.items ++ b.having.map(_.e) ++ b.order
+
+  /** GROUP BY, DISTINCT, or a rewritable aggregate call: the block
+    * consumes retractions (else it is a raw changelog projection). */
+  private def aggregating(b: Block): Boolean =
+    b.groupBy.isDefined || b.distinct || calls(aggExprs(b)).exists(rewritable)
+
+  /** MIN/MAX need surviving VALUES and DISTINCT live ROWS: the netted
+    * live multiset instead of the ±1 sign algebra. */
+  private def needsNet(b: Block): Boolean =
+    b.distinct || calls(aggExprs(b)).exists(n => n == "MIN" || n == "MAX")
+
+  /** Does any of `es` hold a window function or a subquery? Both are
+    * beyond the two-stage rewrite: the user reads the changelog itself
+    * (OVER) or mixes in other relations, and keeps the documented
+    * raw-fall-through semantics rather than a half-right rewrite. */
+  private def windowOrSubquery(es: Seq[Expression]): Boolean =
+    es.exists(_.exists {
+      case _: WindowExpression | _: SubqueryExpression => true
+      case _ => false
+    })
+
+  private def lowerBare(spark: SparkSession, b: Block, name: String,
+      alias: Option[String]): Option[DataFrame] = {
+    if (windowOrSubquery(b.exprs ++ b.order)) return None
+    // ALLOWLIST over the aggregate-carrying expressions — runs even when
+    // no supported aggregate is present: `SELECT MAX_BY(k, x) FROM cl`
+    // has no COUNT/SUM/AVG/MIN/MAX and no GROUP BY, yet silently running
+    // it raw would aggregate change rows as data
+    val udas = checkAllowlist(spark, name, aggExprs(b))
     // plain projection (no aggregate, no GROUP BY, no DISTINCT): a raw
     // changelog read, untouched
-    if (!hasAgg && c.groupBy.isEmpty && !isDistinct) return None
+    if (!aggregating(b)) return None
     registerUdafs(spark, udas)
     val src0 = spark.table(name)
     val src = alias.fold(src0)(a => src0.as(a))
-    val sign = when(col(streaming.Cdc.RowKind)
-      .isin(streaming.Cdc.Insert, streaming.Cdc.UpdateAfter), 1)
-      .otherwise(-1)
-    val filtered = c.where.fold(src)(w => src.filter(expr(w)))
+    val filtered = b.where.fold(src)(w => src.filter(expr(w.sql)))
     // SINGLE-EXCHANGE shortcut: COUNT/SUM/AVG and retractable UDAs
-    // distribute over the change signs, so without MIN/MAX (which need
-    // surviving VALUES) or DISTINCT (which needs live ROWS) the netting
-    // shuffle — the dominant cost at scale — is skipped entirely: the
-    // statement aggregates the raw changelog with a ±1 weight column
-    // and pays only its own GROUP BY exchange, partial-aggregated
-    // map-side.
-    val needsNet = isDistinct ||
-      """(?i)\b(MIN|MAX)\s*\(""".r.findFirstIn(aggClauses).isDefined
+    // distribute over the change signs, so without MIN/MAX or DISTINCT
+    // ([[needsNet]]) the netting shuffle — the dominant cost at scale —
+    // is skipped entirely: the statement aggregates the raw changelog
+    // with a ±1 weight column and pays only its own GROUP BY exchange,
+    // partial-aggregated map-side.
+    val net = needsNet(b)
     val (stage1, weight) =
-      if (!needsNet) (filtered.withColumn("__sign", sign), "__sign")
+      if (!net) (filtered.withColumn("__sign", sign), "__sign")
       else {
         // stage 1: live multiset — net the signs per distinct payload
-        // row, projected to the REFERENCED columns (GROUP BY ∪ aggregate
-        // args ∪ WHERE/HAVING/ORDER BY columns): netting commutes with
+        // row, projected to the REFERENCED columns (the names the
+        // statement's expressions read): netting commutes with
         // projection on a well-formed changelog (every retraction
         // matches a prior insertion), so unreferenced payload columns
         // never ride the exchange. Fully-retracted rows (net 0) leave
         // the live multiset.
-        val refd = """[A-Za-z_]\w*""".r.findAllIn(allClauses)
-          .map(_.toLowerCase).toSet
+        val refd = namesIn(b.exprs ++ b.order).map(_.toLowerCase).toSet
         val dataCols = src0.columns.toSeq.filterNot(n =>
           n == streaming.Cdc.RowKind || n == "cdc_ts")
           .filter(n => refd(n.toLowerCase))
         (filtered.groupBy(dataCols.map(col): _*).agg(sum(sign).as("__net"))
           .filter(col("__net") =!= 0), "__net")
       }
-    assembleStage2(spark, c, stage1, weight,
+    assembleStage2(spark, b, stage1, weight,
       view => s"$view${alias.fold("")(a => s" AS $a")}",
       whereInStage2 = false, // the bare path filtered BEFORE netting
-      liveCond = if (needsNet) Some("__net > 0") else None)
+      liveCond = if (net) Some("__net > 0") else None)
   }
 
   /** Stage 2 shared by the bare-relation and join lowerings: the user's
@@ -1023,12 +878,12 @@ object ChangelogSql {
     * join (predicates may read the static sides); the bare path already
     * filtered before netting (same live multiset — the predicate is
     * deterministic on the payload — but a smaller netting exchange). */
-  private def assembleStage2(spark: SparkSession, c: Clauses,
+  private def assembleStage2(spark: SparkSession, b: Block,
       stage1: DataFrame, weight: String,
       fromSqlOf: String => String, whereInStage2: Boolean,
       liveCond: Option[String]): Option[DataFrame] = {
-    val grouped = c.groupBy.isDefined
-    def rewrite(s: String) =
+    val grouped = b.groupBy.isDefined
+    def rewrite(s: Sliced) =
       rewriteWith(s, weight, grouped, liveCond = liveCond)
     // ORDER BY can carry aggregates too (ORDER BY COUNT(*)) — netted
     // like every other aggregate position. On GROUPED statements the
@@ -1038,34 +893,27 @@ object ChangelogSql {
     // rewrites are exactly that) — so aggregate order items are
     // projected as HIDDEN columns and the sort runs on the DataFrame,
     // where only resolved attributes are referenced.
-    val orderItems: Seq[(String, Option[String], Option[String])] =
-      c.orderBy.toSeq.flatMap(graft.util.SqlSplit.splitTopLevel(_)).map { it =>
-        val OrdRe = """(?is)^(.*?)(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?\s*$""".r
-        it.trim match {
-          case OrdRe(e, dir, nulls) =>
-            (e.trim, Option(dir).map(_.toUpperCase), Option(nulls).map(_.toUpperCase))
-        }
-      }
-    def itemHasAgg(e: String): Boolean =
-      callNames(blank(e)).exists(n => Supported(n) || retractableUda(n).isDefined)
-    val hiddenSort = grouped && orderItems.exists(i => itemHasAgg(i._1))
+    val orderItems = b.order.map(o => (sliced(o.child), o))
+    def itemHasAgg(e: Expression): Boolean = calls(Seq(e)).exists(rewritable)
+    val hiddenSort = grouped && orderItems.exists(i => itemHasAgg(i._1.e))
     val view = s"__graft_changelog_live_${counter.incrementAndGet()}"
     stage1.createOrReplaceTempView(view)
     try {
       // stage 2: the user's statement with retract-aware aggregates
       val sqlText = new StringBuilder("SELECT ")
-        .append(rewrite(c.selectList))
-      val hidden = if (!hiddenSort) Seq.empty else
-        orderItems.zipWithIndex.collect { case ((e, _, _), i) if itemHasAgg(e) =>
+        .append(if (b.distinct) "DISTINCT " else "")
+        .append(selectList(b).map(rewrite).mkString(", "))
+      val hidden = if (!hiddenSort) Map.empty[Int, String] else
+        orderItems.zipWithIndex.collect { case ((e, _), i) if itemHasAgg(e.e) =>
           val name = s"__graft_ord_$i"
           sqlText.append(", ").append(rewrite(e)).append(s" AS $name")
           i -> name
-        }.toMap.toSeq
-      val hiddenByIdx = hidden.toMap
+        }.toMap
       sqlText.append(" FROM ").append(fromSqlOf(view))
       if (whereInStage2)
-        c.where.foreach(w => sqlText.append(" WHERE ").append(w))
-      c.groupBy.foreach(g => sqlText.append(" GROUP BY ").append(g))
+        b.where.foreach(w => sqlText.append(" WHERE ").append(w.sql))
+      b.groupBy.foreach(g =>
+        sqlText.append(" GROUP BY ").append(g.map(sqlOf).mkString(", ")))
       // grouped statements guard against PHANTOM groups: a group whose
       // rows all retracted has live count 0 and must be ABSENT (Flink's
       // GroupAggFunction deletes the group when its count drops to 0) —
@@ -1074,43 +922,49 @@ object ChangelogSql {
       // dropped them and the guard is belt and braces. Global aggregates
       // stay unguarded: one row over empty input is correct SQL.
       val guard = if (grouped) Some(s"SUM($weight) <> 0") else None
-      val havingParts = c.having.map(h => s"(${rewrite(h)})").toSeq ++ guard
+      val havingParts = b.having.map(h => s"(${rewrite(h)})").toSeq ++ guard
       if (havingParts.nonEmpty)
         sqlText.append(" HAVING ").append(havingParts.mkString(" AND "))
       if (!hiddenSort) {
-        orderItems.zipWithIndex.foreach { case ((e, dir, nulls), i) =>
+        orderItems.zipWithIndex.foreach { case ((e, o), i) =>
           sqlText.append(if (i == 0) " ORDER BY " else ", ").append(rewrite(e))
-          dir.foreach(d => sqlText.append(" ").append(d))
-          nulls.foreach(n => sqlText.append(" NULLS ").append(n))
+          if (o.direction == Descending) sqlText.append(" DESC")
+          if (o.nullOrdering != o.direction.defaultNullOrdering)
+            sqlText.append(if (o.nullOrdering == NullsFirst) " NULLS FIRST"
+              else " NULLS LAST")
         }
-        c.limit.foreach(l => sqlText.append(" LIMIT ").append(l))
+        b.limit.foreach(l => sqlText.append(" LIMIT ").append(sqlOf(l)))
+        b.offset.foreach(o => sqlText.append(" OFFSET ").append(sqlOf(o)))
         Some(spark.sql(sqlText.toString))
       } else {
         val df = spark.sql(sqlText.toString)
         val userCols = df.columns.filterNot(_.startsWith("__graft_ord_"))
-        val sortCols = orderItems.zipWithIndex.map { case ((e, dir, nulls), i) =>
-          val base = hiddenByIdx.get(i) match {
+        val sortCols = orderItems.zipWithIndex.map { case ((e, o), i) =>
+          val base = hidden.get(i) match {
             case Some(name) => col(name)
             // positional ORDER BY resolves against the USER select list
             // (hidden columns are appended after it)
-            case None if e.matches("""\d+""") => col(userCols(e.toInt - 1))
-            case None => expr(e)
+            case None => e.e match {
+              case Literal(k: Int, IntegerType) => col(userCols(k - 1))
+              case _ => expr(e.sql)
+            }
           }
-          (dir, nulls) match {
-            case (Some("DESC"), Some("FIRST")) => base.desc_nulls_first
-            case (Some("DESC"), Some("LAST"))  => base.desc_nulls_last
-            case (Some("DESC"), None)          => base.desc
-            case (_, Some("FIRST"))            => base.asc_nulls_first
-            case (_, Some("LAST"))             => base.asc_nulls_last
-            case _                             => base.asc
+          (o.direction, o.nullOrdering) match {
+            case (Descending, NullsFirst) => base.desc_nulls_first
+            case (Descending, _)          => base.desc_nulls_last
+            case (_, NullsFirst)          => base.asc_nulls_first
+            case _                        => base.asc_nulls_last
           }
+        }
+        def count(e: Expression, what: String): Int = {
+          val n = Some(e).collect { case Literal(k: Int, IntegerType) => k }
+          require(n.isDefined, s"$what over a changelog aggregate must be " +
+            s"a literal count, got: ${sqlOf(e)}")
+          n.get
         }
         val sorted = df.orderBy(sortCols: _*)
-        val limited = c.limit.fold(sorted) { l =>
-          require(l.trim.matches("""\d+"""),
-            s"LIMIT over a changelog aggregate must be a literal count, got: $l")
-          sorted.limit(l.trim.toInt)
-        }
+        val skipped = b.offset.fold(sorted)(o => sorted.offset(count(o, "OFFSET")))
+        val limited = b.limit.fold(skipped)(l => skipped.limit(count(l, "LIMIT")))
         Some(limited.select(userCols.map(col): _*))
       }
     } finally spark.catalog.dropTempView(view): Unit
@@ -1133,6 +987,10 @@ object ChangelogSql {
   private[graft] val MaxRetName = "__graft_cl_maxret"
   private val LiveCol = "__graft_cl_live"
   private[graft] val SeqCol = "__graft_cl_seq"
+
+  /** A change row's sign: +1 for +I/+U, -1 for -U/-D. */
+  private def sign = when(col(streaming.Cdc.RowKind)
+    .isin(streaming.Cdc.Insert, streaming.Cdc.UpdateAfter), 1).otherwise(-1)
 
   /** The changelog encoding columns a continuous operator consumes. */
   private def encodingCol(n: String): Boolean =
@@ -1248,7 +1106,7 @@ object ChangelogSql {
     * sink must DELETE it; keys are the GROUP BY columns' OUTPUT names
     * (the upsert key of the refreshed rows). `chain(clIdx)` is the
     * changelog relation [[route]] found. */
-  private def signAgg(spark: SparkSession, c: Clauses, chain: Seq[ChainRel],
+  private def signAgg(spark: SparkSession, b: Block, chain: Seq[ChainRel],
       clIdx: Int): (DataFrame, Seq[String], Seq[String]) = {
     val name = chain(clIdx).name
     // the ±1 sign algebra below assumes a RETRACT changelog (every
@@ -1267,73 +1125,60 @@ object ChangelogSql {
           s"join side ${r.name} is a STREAM — a continuous changelog " +
             "aggregate joins static relations only (a retraction must " +
             "join exactly the rows its insert joined)")
-      if (i > 0) {
-        def bad(msg: String): Nothing = throw new IllegalArgumentException(
-          s"changelog relation $name on the null-padded side of a " +
-            s"${r.joinType.getOrElse("?")} JOIN: $msg — no " +
-            "retraction-consuming rewrite exists")
-        r.joinType.foreach {
-          case "INNER" | "CROSS" => ()
-          case "LEFT" if clIdx < i => ()
-          case "RIGHT" if clIdx == i => ()
-          case "FULL" => bad("FULL pads both sides")
-          case t => bad(s"the changelog must be on the $t-preserved side")
-        }
-      }
     }
-    require(c.orderBy.isEmpty && c.limit.isEmpty,
+    paddedJoin(chain, Seq(clIdx)).foreach { case (r, why) =>
+      throw new IllegalArgumentException(
+        s"changelog relation $name on the null-padded side of a " +
+          s"${r.joinType.getOrElse("?")} JOIN: $why — no " +
+          "retraction-consuming rewrite exists")
+    }
+    require(!b.ordered,
       "ORDER BY / LIMIT are not available on a CONTINUOUS changelog " +
         "aggregate (update mode has no final ordering); aggregate the " +
         "materialized sink instead")
     // [[route]] picks this lowering only when no clause names row_kind
     // or cdc_ts (that is a raw changelog passthrough)
-    val aggClauses = blank(c.selectList) + " " + c.having.map(blank).getOrElse("")
-    require(!"""(?is)^\s*DISTINCT\b""".r.findFirstIn(c.selectList).isDefined,
+    require(!b.distinct,
       "SELECT DISTINCT over a continuous changelog is not supported; " +
         "use GROUP BY (same live-group semantics, update-mode output)")
-    val udas = checkAllowlist(spark, name, aggClauses)
+    val udas = checkAllowlist(spark, name, b.items ++ b.having.map(_.e))
     registerUdafs(spark, udas)
     registerStreamMinMax(spark)
-    def rewrite(s: String) =
+    def rewrite(s: Sliced) =
       rewriteWith(s, "__sign", grouped = true, streamMinMax = true)
     // upsert keys: every GROUP BY item must be a bare column that appears
     // in the select list (possibly aliased) — the sink needs a key
-    val selectItems = graft.util.SqlSplit.splitTopLevel(c.selectList)
-    val ItemRe = """(?is)^(.*?)(?:\s+AS\s+`?(\w+)`?)?$""".r
-    val keys = c.groupBy.toSeq.flatMap(graft.util.SqlSplit.splitTopLevel(_))
-      .map { g =>
-        val gcol = g.trim.replace("`", "")
-        require(gcol.matches("""[\w.]+"""),
-          s"streaming changelog GROUP BY items must be bare columns, got: $g")
-        val out = selectItems.map(_.trim).collectFirst {
-          case ItemRe(e, a) if e.trim.replace("`", "")
-            .equalsIgnoreCase(gcol) => Option(a).getOrElse(gcol.split('.').last)
-        }
-        out.getOrElse(throw new IllegalArgumentException(
-          s"GROUP BY column $gcol must appear in the select list — it is " +
-            "the sink's upsert key"))
-      }
+    def same(a: UnresolvedAttribute, g: UnresolvedAttribute) =
+      a.nameParts.map(_.toLowerCase) == g.nameParts.map(_.toLowerCase)
+    val keys = b.groupBy.toSeq.flatten.map {
+      case g: UnresolvedAttribute =>
+        b.items.collectFirst {
+          case a: UnresolvedAttribute if same(a, g) => g.nameParts.last
+          case Alias(a: UnresolvedAttribute, out) if same(a, g) => out
+        }.getOrElse(throw new IllegalArgumentException(
+          s"GROUP BY column ${g.nameParts.mkString(".")} must appear in " +
+            "the select list — it is the sink's upsert key"))
+      case g => throw new IllegalArgumentException(
+        s"streaming changelog GROUP BY items must be bare columns, got: ${sqlOf(g)}")
+    }
     // MODIFIED-MONOTONICITY derivation (the planner fact behind the
     // reference's RankProcessStrategy.UpdateFastStrategy — FlinkRelMd
     // ModifiedMonotonicity): over an INSERT-ONLY input with no HAVING
     // (a group leaving a HAVING set emits a -D, breaking monotonicity
-    // downstream), COUNT and MAX outputs are monotonically
-    // non-decreasing per group. Recorded on the sink so a downstream
-    // top-1 statement can pick the O(1)-state fast route.
+    // downstream), COUNT and MAX of a column (or a constant) are
+    // monotonically non-decreasing per group. Recorded on the sink so a
+    // downstream top-1 statement can pick the O(1)-state fast route.
+    def monotone(f: UnresolvedFunction) = f.filter.isEmpty &&
+      f.orderingWithinGroup.isEmpty && (f.arguments match {
+        case Seq(_: UnresolvedAttribute | _: Literal) =>
+          f.nameParts.last.equalsIgnoreCase("COUNT") ||
+            (f.nameParts.last.equalsIgnoreCase("MAX") && !f.isDistinct)
+        case _ => false
+      })
     val monotoneCols: Seq[String] =
-      if (!isInsertOnlyRel(spark, name) || c.having.isDefined) Seq.empty
-      else {
-        val MonotoneAggRe =
-          """(?is)^(?:COUNT\s*\(\s*(?:\*|(?:DISTINCT\s+)?[\w.`]+)\s*\)|MAX\s*\(\s*[\w.`]+\s*\))\s*$""".r
-        selectItems.map(_.trim).collect {
-          case ItemRe(e, a) if a != null &&
-            MonotoneAggRe.findFirstIn(blank(e.trim)).isDefined => a
-        }
-      }
+      if (!isInsertOnlyRel(spark, name) || b.having.isDefined) Seq.empty
+      else b.items.collect { case Alias(f: UnresolvedFunction, out) if monotone(f) => out }
     val src = retractStreamOf(spark, name)
-    val sign = when(col(streaming.Cdc.RowKind)
-      .isin(streaming.Cdc.Insert, streaming.Cdc.UpdateAfter), 1)
-      .otherwise(-1)
     val prior = spark.sessionState.catalog.getTempView(name).isDefined
     val priorDf = if (prior) Some(spark.table(name)) else None
     val signed = src.withColumn("__sign", sign)
@@ -1348,13 +1193,14 @@ object ChangelogSql {
       // DELETE, not silently stop updating (Flink's Calc over an update
       // stream forwards the retraction)
       val live = (Seq(s"SUM(__sign) <> 0") ++
-        c.having.map(h => s"(${rewrite(h)})")).mkString(" AND ")
+        b.having.map(h => s"(${rewrite(h)})")).mkString(" AND ")
       val sqlText = new StringBuilder("SELECT ")
-        .append(rewrite(c.selectList))
+        .append(selectList(b).map(rewrite).mkString(", "))
         .append(", ").append(live).append(s" AS $LiveCol")
-        .append(" FROM ").append(c.relation)
-      c.where.foreach(w => sqlText.append(" WHERE ").append(w))
-      c.groupBy.foreach(g => sqlText.append(" GROUP BY ").append(g))
+        .append(" FROM ").append(sqlOf(b.from))
+      b.where.foreach(w => sqlText.append(" WHERE ").append(w.sql))
+      b.groupBy.foreach(g =>
+        sqlText.append(" GROUP BY ").append(g.map(sqlOf).mkString(", ")))
       val df = spark.sql(sqlText.toString)
       assert(df.isStreaming, "changelog aggregate lost streaming-ness")
       (df, keys, monotoneCols)
@@ -1612,16 +1458,21 @@ object ChangelogSql {
 
   // ---- the continuous INSERT body as Spark's parsed plan --------------
 
-  /** One SELECT block of the parsed INSERT body. The plan is never
-    * analyzed (registered retractable aggregates are not in Spark's
-    * function registry): columns resolve against the relation schemas
-    * ([[relationColumns]]). `ordered`: ORDER BY, LIMIT or OFFSET. */
+  /** One SELECT block of a parsed statement (a batch SELECT or a
+    * continuous INSERT body). The plan is never analyzed (registered
+    * retractable aggregates are not in Spark's function registry):
+    * columns resolve against the relation schemas ([[relationColumns]]).
+    * `ordered`: ORDER BY, LIMIT or OFFSET. */
   private[graft] case class Block(items: Seq[Expression],
       groupBy: Option[Seq[Expression]], having: Option[Sliced],
       where: Option[Sliced], from: LogicalPlan, distinct: Boolean,
-      ordered: Boolean) {
+      order: Seq[SortOrder] = Nil, limit: Option[Expression] = None,
+      offset: Option[Expression] = None) {
     def exprs: Seq[Expression] =
       items ++ where.map(_.e) ++ groupBy.toSeq.flatten ++ having.map(_.e)
+    def ordered: Boolean = order.nonEmpty || limit.isDefined || offset.isDefined
+    /** The ON conditions of the FROM's joins. */
+    def on: Seq[Expression] = from.collect { case j: Join => j.condition }.flatten
   }
 
   /** A parsed expression and the statement text it spans from offset
@@ -1629,11 +1480,13 @@ object ChangelogSql {
     * the lowerings and the route line read. */
   private[graft] case class Sliced(e: Expression, sql: String, at: Int)
 
-  /** [start, stop] of `n` in its statement; a plan's hull over its nodes
-    * (a Join's own origin starts at JOIN). */
+  /** [start, stop] of `n` in its statement: the hull over its subtree's
+    * nodes (a Join's own origin starts at JOIN, an `IS NOT NULL`'s at
+    * IS). */
   private def span(n: TreeNode[_]): (Int, Int) = {
     val os = (n match {
       case p: LogicalPlan => p.collect { case q => q.origin }
+      case e: Expression => e.collect { case x => x.origin }
       case _ => Seq(n.origin)
     }).filter(o => o.startIndex.isDefined && o.stopIndex.isDefined)
     if (os.isEmpty) (-1, -1)
@@ -1652,8 +1505,9 @@ object ChangelogSql {
   }
 
   /** `e` with its text, grown over the parentheses that enclose it
-    * within [lo, hi]: `(a OR b)` keeps them. */
-  private def sliced(e: Expression, lo: Int, hi: Int): Sliced = {
+    * within [lo, hi] (`(a OR b)` keeps them); by default exactly its
+    * own text. */
+  private def sliced(e: Expression, lo: Int = 0, hi: Int = -1): Sliced = {
     val (s0, t0) = span(e)
     val text = e.origin.sqlText.filter(_ => s0 >= 0)
       .getOrElse(return Sliced(e, e.toString, -1))
@@ -1679,23 +1533,25 @@ object ChangelogSql {
   }
 
   /** The SELECT block `p` is, when it is one. */
-  private def block(p: LogicalPlan, ordered: Boolean = false): Option[Block] = {
+  private def block(p: LogicalPlan): Option[Block] = {
     def make(items: Seq[Expression], groupBy: Option[Seq[Expression]],
         having: Option[Sliced], child: LogicalPlan) = Some(child match {
       case f: Filter =>
         val (lo, hi) = span(f)
         Block(items, groupBy, having, Some(sliced(f.condition, lo, hi)),
-          f.child, distinct = false, ordered)
-      case from => Block(items, groupBy, having, None, from, false, ordered)
+          f.child, distinct = false)
+      case from => Block(items, groupBy, having, None, from, distinct = false)
     })
     def grouped(a: Aggregate, having: Option[Sliced]) =
       make(a.aggregateExpressions, Option.when(a.groupingExpressions.nonEmpty)(
         a.groupingExpressions), having, a.child)
     p match {
-      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset =>
-        block(p.children.head, ordered = true)
-      case d: Distinct => block(d.child, ordered).map(_.copy(distinct = true))
-      case h: UnresolvedHint => block(h.child, ordered)
+      case s: Sort => block(s.child).map(_.copy(order = s.order))
+      case l: GlobalLimit => block(l.child).map(_.copy(limit = Some(l.limitExpr)))
+      case l: LocalLimit => block(l.child)
+      case o: Offset => block(o.child).map(_.copy(offset = Some(o.offsetExpr)))
+      case d: Distinct => block(d.child).map(_.copy(distinct = true))
+      case h: UnresolvedHint => block(h.child)
       case h @ UnresolvedHaving(cond, a: Aggregate) =>
         val (lo, hi) = span(h)
         grouped(a, Some(sliced(cond, lo, hi)))
@@ -1704,6 +1560,46 @@ object ChangelogSql {
       case _ => None
     }
   }
+
+  /** The select list's items, each with its text (alias included). */
+  private def selectList(b: Block): Seq[Sliced] = b.items.map {
+    case u: UnresolvedAlias => sliced(u.child)
+    case e => sliced(e)
+  }
+
+  /** Statement `stmt` as Spark's parsed plan; None when the parser
+    * rejects it. */
+  private def parsed(spark: SparkSession, stmt: String): Option[LogicalPlan] =
+    try Some(spark.sessionState.sqlParser.parsePlan(stmt))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Every plan node of `p`: its subtree, the plans of its subquery
+    * expressions and its CTE bodies (`innerChildren`, which `collect`
+    * does not visit). */
+  private def nodesOf(p: LogicalPlan): Seq[LogicalPlan] =
+    p +: (p.children ++ p.innerChildren.collect { case q: LogicalPlan => q } ++
+      p.subqueries).flatMap(nodesOf)
+
+  /** Every expression of the statement `p`, subqueries and CTEs included. */
+  private def exprsOf(p: LogicalPlan): Seq[Expression] =
+    nodesOf(p).flatMap(_.expressions)
+
+  /** Does statement `p` name one of the `encodings` anywhere — a
+    * deliberate raw changelog read? */
+  private def readsEncoding(p: LogicalPlan, encodings: Seq[String] =
+      Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol)): Boolean =
+    encodingIn(namesIn(exprsOf(p)), encodings).isDefined
+
+  /** The relation census of statement `p`: every relation it names,
+    * subqueries and CTE bodies included, in statement order. */
+  private def relationsOf(p: LogicalPlan): Seq[String] =
+    nodesOf(p).collect { case r: UnresolvedRelation => r }
+      .sortBy(_.origin.startIndex.getOrElse(Int.MaxValue))
+      .map(_.multipartIdentifier.mkString(".")).distinct
+
+  /** The SELECT block `p` is and its FROM chain, when it is both. */
+  private def shapeOf(p: LogicalPlan): Option[(Block, Seq[ChainRel])] =
+    block(p).flatMap(b => chainOf(b.from).map(b -> _))
 
   /** A FROM subquery's alias; None for an unaliased one. */
   private def aliasOf(id: org.apache.spark.sql.catalyst.AliasIdentifier) =
@@ -1731,12 +1627,6 @@ object ChangelogSql {
     case _ => None
   }
 
-  /** The FROM chain of SELECT statement `stmt`; None when Spark's parser
-    * rejects it or its FROM is no chain of relations. */
-  private def chainOfSql(spark: SparkSession, stmt: String): Option[Seq[ChainRel]] =
-    scala.util.Try(spark.sessionState.sqlParser.parsePlan(stmt)).toOption
-      .flatMap(block(_)).flatMap(b => chainOf(b.from))
-
   /** Every column, alias and function name the expressions mention. */
   private def namesIn(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
     case a: UnresolvedAttribute => a.nameParts
@@ -1749,9 +1639,11 @@ object ChangelogSql {
       encodings: Seq[String] = Seq(streaming.Cdc.RowKind, "cdc_ts", SeqCol)) =
     encodings.find(m => names.exists(_.equalsIgnoreCase(m)))
 
-  /** The upper-cased function names called in `es`. */
+  /** The upper-cased function names called in `es` (the parser builds
+    * FIRST, LAST and ANY_VALUE as aggregate expressions). */
   private def calls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
     case f: UnresolvedFunction => f.nameParts.last.toUpperCase
+    case a: AggregateExpression => a.aggregateFunction.prettyName.toUpperCase
   }).distinct
 
   /** Is `fn` an aggregate: a supported or registered one, or one the
@@ -2106,8 +1998,7 @@ object ChangelogSql {
     def noKey = bad("CROSS JOIN of two changelogs has no key to partition " +
       "state by; give an ON equi-condition")
     if (jt == "CROSS") noKey
-    val on = b.from.collect { case j: Join => j.condition }.flatten
-    encodingIn(namesIn(b.exprs ++ on)).foreach(m => bad(s"the statement " +
+    encodingIn(namesIn(b.exprs ++ b.on)).foreach(m => bad(s"the statement " +
       s"references encoding column $m — there is no raw passthrough for a " +
       "two-changelog join; the operator consumes the encodings"))
     val Seq(lName, rName) = chain.map(r => r.alias.getOrElse(r.name.split('.').last))
@@ -2119,7 +2010,7 @@ object ChangelogSql {
     // contract (Flink hashes both inputs by the equi-key,
     // StreamExecJoin.java:132's joinSpec)
     val (lo, hi) = span(b.from)
-    val pairs = conjuncts(sliced(on.headOption.getOrElse(noKey), lo, hi)).map(c =>
+    val pairs = conjuncts(sliced(b.on.headOption.getOrElse(noKey), lo, hi)).map(c =>
       c.e match {
         case EqualTo(x: UnresolvedAttribute, y: UnresolvedAttribute) =>
           (sides.resolve(x, bad), sides.resolve(y, bad)) match {
@@ -2375,9 +2266,7 @@ object ChangelogSql {
       }.toSeq
       case other => other.children.flatMap(subst)
     }
-    subst(h.e).sortBy(-_._1._1).foldLeft(h.sql) { case (t, ((s, e), r)) =>
-      t.substring(0, s - h.at) + r + t.substring(e - h.at + 1)
-    }
+    splice(h, subst(h.e))
   }
 
   /** The join-operator part of the route line, shared by the plain join
@@ -2697,9 +2586,6 @@ object ChangelogSql {
         when(col(sortSrc(i)).isNotNull,
           expr(s"graft_sort_key(`${sortSrc(i)}`, '$label', true)"))
       } else lit(null).cast("string")
-    val sign = when(col(streaming.Cdc.RowKind)
-      .isin(streaming.Cdc.Insert, streaming.Cdc.UpdateAfter), lit(1))
-      .otherwise(lit(-1))
     val keyCol =
       if (groupRefs.isEmpty) lit("")
       else to_json(struct(groupRefs.zipWithIndex.map {
@@ -2844,7 +2730,7 @@ object ChangelogSql {
     final case class RelAgg(b: Block) extends Aggregate
     /** The sign-algebra aggregate over one changelog, bare or joined to
       * static relations ([[signAgg]]). */
-    final case class SignAgg(select: String, chain: Seq[ChainRel], clIdx: Int)
+    final case class SignAgg(b: Block, chain: Seq[ChainRel], clIdx: Int)
         extends Route
     /** An aggregate over a two-changelog join ([[joinAgg]]) —
       * StreamExecJoin feeding StreamExecGroupAggregate: the join's +I/-D
@@ -2871,14 +2757,10 @@ object ChangelogSql {
     * error — never with the append path's misleading watermark
     * complaint. */
   private[graft] def route(spark: SparkSession, select: String): Option[Route] = {
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(select)
-      catch { case scala.util.control.NonFatal(_) => return None }
+    val plan = parsed(spark, select).getOrElse(return None)
     topNRoute(spark, plan).orElse(block(plan).flatMap { b =>
       val chain = chainOf(b.from)
-      val changelogs = chain.toSeq.flatten.zipWithIndex.collect {
-        case (r, i) if isChangelogRel(spark, r.name) => i
-      }
+      val changelogs = chain.toSeq.flatMap(changelogsIn(spark, _))
       val nested = b.from match {
         case SubqueryAlias(id, inner) if aggregates(spark, b) &&
             refsChangelogDeep(spark, inner) =>
@@ -2895,16 +2777,14 @@ object ChangelogSql {
       // the sign algebra: an aggregate of ONE changelog, bare or joined
       // to other relations, that does not read row_kind/cdc_ts itself
       // (that is a raw changelog passthrough, the append path's job)
-      def signAggregates = encodingIn(namesIn(b.exprs ++ b.from.collect {
-          case j: Join => j.condition }.flatten),
+      def signAggregates = encodingIn(namesIn(b.exprs ++ b.on),
           Seq(streaming.Cdc.RowKind, "cdc_ts")).isEmpty &&
-        (b.groupBy.isDefined || calls(b.items ++ b.having.map(_.e)).exists(n =>
-          Supported(n) || retractableUda(n).isDefined))
+        (b.groupBy.isDefined || calls(b.items ++ b.having.map(_.e)).exists(rewritable))
       nested
         .orElse(Option.when(chain.exists(_.size == 1) &&
           changelogs.nonEmpty && countsDistinct)(Route.RelAgg(b)))
         .orElse(Option.when(changelogs.size == 1 && signAggregates)(
-          Route.SignAgg(select, chain.get, changelogs.head)))
+          Route.SignAgg(b, chain.get, changelogs.head)))
         .orElse(Option.when(changelogs.size >= 2)(
           if (b.having.isDefined || aggregates(spark, b)) joinAgg(spark, b)
           else Route.Join(joinShape(spark, b))))
@@ -3061,11 +2941,8 @@ object ChangelogSql {
           else retractStreamOf(spark, shape.rel)
         val (out, keys) = topNLog(spark, shape, src, fast)
         (out, "append", upsertSinkWriter(spark, sink, keys))
-      case Route.SignAgg(select, chain, clIdx) =>
-        // the sign-algebra lowering rewrites the statement's clause text
-        val c = parse(select).getOrElse(throw new IllegalArgumentException(
-          s"continuous changelog aggregate: no SELECT clauses in: $select"))
-        val (df, keys, monotoneCols) = signAgg(spark, c, chain, clIdx)
+      case Route.SignAgg(b, chain, clIdx) =>
+        val (df, keys, monotoneCols) = signAgg(spark, b, chain, clIdx)
         (upsertLog(df), "update",
           upsertSinkWriter(spark, sink, keys, monotoneCols))
       case Route.Join(sh) =>

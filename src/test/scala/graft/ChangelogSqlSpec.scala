@@ -211,7 +211,12 @@ class ChangelogSqlSpec extends AnyFunSuite {
         "SELECT COUNT(*) AS n FROM (SELECT * FROM cl_rejj) t",
         "SELECT COUNT(*) AS n FROM cl_rejj UNION ALL SELECT COUNT(*) FROM dim_rejj",
         // multiple changelogs compose with INNER/CROSS only
-        "SELECT COUNT(*) AS n FROM cl_rejj a LEFT JOIN cl_rejj b ON a.k = b.k")) {
+        "SELECT COUNT(*) AS n FROM cl_rejj a LEFT JOIN cl_rejj b ON a.k = b.k",
+        // a comma-listed FROM is no join chain, whichever relation comes
+        // first, and neither is one inside a plain WITH body
+        "SELECT COUNT(*) AS n, SUM(x) AS t FROM dim_rejj d, cl_rejj c WHERE d.g = c.g",
+        "WITH j AS (SELECT COUNT(*) AS n, SUM(x) AS t FROM dim_rejj d, cl_rejj c " +
+          "WHERE d.g = c.g) SELECT * FROM j")) {
         val e = intercept[IllegalArgumentException](Engine.sql(spark, bad))
         assert(e.getMessage.contains("retraction-consuming") ||
           e.getMessage.contains("materialize the final state"),

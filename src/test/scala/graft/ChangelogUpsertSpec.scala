@@ -370,6 +370,82 @@ class ChangelogUpsertSpec extends AnyFunSuite {
     }
   }
 
+  test("EXPLAIN CHANGELOG_MODE pins every batch mode and route line byte for byte") {
+    import spark.implicits._
+    val t = s"ups_pin_$h"
+    mkUpsertTable(t)
+    Seq(("+I", 1L, "g1", 4.0), ("-D", 2L, "g1", 4.0))
+      .toDF("row_kind", "cdc_ts", "g", "x").createOrReplaceTempView("pin_cl")
+    Seq(("+I", 1L, "g1", 2.0)).toDF("row_kind", "cdc_ts", "g", "y")
+      .createOrReplaceTempView("pin_cl2")
+    Seq(("g1", "west")).toDF("g", "nm").createOrReplaceTempView("pin_dim")
+    val retract = "retract [+I, -U, +U, -D]"
+    val upsert = s"  $t: upsert [+U, -D] keyed by (k)"
+    val sign = "  route: retraction-consuming aggregate — single-exchange " +
+      "±1 sign algebra (COUNT/SUM/AVG distribute over change signs)"
+    val netted = "  route: retraction-consuming aggregate — NETTED live " +
+      "multiset (net<>0 filter; MIN/MAX or DISTINCT need surviving rows)"
+    val composite = "  route: composite statement — see this module's " +
+      "admissible-shape guards"
+    // (statement, the "== Changelog Modes ==" block)
+    val rows = Seq(
+      s"SELECT COUNT(*) AS n FROM $t" -> Seq(upsert,
+        s"  route: ChangelogNormalize (keep-last per key) applied to: $t"),
+      "SELECT g, COUNT(*) AS n FROM pin_cl GROUP BY g" ->
+        Seq(s"  pin_cl: $retract", sign),
+      "SELECT g, MIN(x) AS lo FROM pin_cl GROUP BY g" ->
+        Seq(s"  pin_cl: $retract", netted),
+      "SELECT DISTINCT g FROM pin_cl" -> Seq(s"  pin_cl: $retract", netted),
+      "SELECT row_kind, g FROM pin_cl" -> Seq(s"  pin_cl: $retract",
+        "  route: RAW changelog read (encoding columns referenced) — no rewrite"),
+      "SELECT g, x FROM pin_cl WHERE x > 0" -> Seq(s"  pin_cl: $retract",
+        "  route: raw changelog projection — no rewrite"),
+      "SELECT nm FROM pin_dim" -> Seq("  pin_dim: insert-only [+I]"),
+      "SELECT d.nm AS nm, COUNT(*) AS n FROM pin_cl c JOIN pin_dim d " +
+        "ON c.g = d.g GROUP BY d.nm" -> Seq(s"  pin_cl: $retract",
+        "  pin_dim: insert-only [+I]",
+        "  route: changelog join lowering — per-side weight columns: " +
+          "pin_cl -> __sign_0; joint weight = __sign_0 (±1 sign products, " +
+          "zero extra exchange)"),
+      "SELECT MIN(c.x) AS lo FROM pin_cl c JOIN pin_cl2 e ON c.g = e.g" ->
+        Seq(s"  pin_cl: $retract", s"  pin_cl2: $retract",
+          "  route: changelog join lowering — per-side weight columns: " +
+            "pin_cl -> __net_0, pin_cl2 -> __net_1; joint weight = " +
+            "__net_0 * __net_1 (netted multiplicities; live = all nets > 0)"),
+      s"SELECT COUNT(*) AS n FROM $t u JOIN pin_cl c ON u.k = c.g" ->
+        Seq(upsert, s"  pin_cl: $retract",
+          s"  route: ChangelogNormalize (keep-last per key) applied to: $t",
+          "  route: changelog join lowering — per-side weight columns: " +
+            s"$t -> __sign_0, pin_cl -> __sign_1; joint weight = " +
+            "__sign_0 * __sign_1 (±1 sign products, zero extra exchange)"),
+      "SELECT d.nm AS nm, COUNT(*) AS n FROM pin_dim d LEFT JOIN pin_cl c " +
+        "ON c.g = d.g GROUP BY d.nm" -> Seq("  pin_dim: insert-only [+I]",
+        s"  pin_cl: $retract",
+        "  route: INADMISSIBLE join shape — changelog on the padded side " +
+          "of a LEFT JOIN (the statement will reject loudly)"),
+      "SELECT c.g, d.nm FROM pin_cl c JOIN pin_dim d ON c.g = d.g" ->
+        Seq(s"  pin_cl: $retract", "  pin_dim: insert-only [+I]",
+          "  route: raw changelog join read — no rewrite"),
+      "WITH w AS (SELECT 1 AS one) SELECT COUNT(*) AS n FROM pin_cl" ->
+        Seq(s"  pin_cl: $retract", composite),
+      // a comma-listed FROM is no join chain: every relation it lists
+      // has its mode line, and the statement takes the composite guard
+      "SELECT COUNT(*) AS n FROM pin_dim d, pin_cl c WHERE d.g = c.g" ->
+        Seq("  pin_dim: insert-only [+I]", s"  pin_cl: $retract", composite),
+      "SELECT COUNT(*) AS n FROM pin_cl c, pin_dim d WHERE d.g = c.g" ->
+        Seq(s"  pin_cl: $retract", "  pin_dim: insert-only [+I]", composite))
+    try rows.foreach { case (stmt, lines) =>
+      val plan = Engine.sql(spark, s"EXPLAIN CHANGELOG_MODE $stmt")
+        .as[String].collect().head
+      val modes = plan.stripPrefix("== Changelog Modes ==\n")
+        .split("\n\n== Physical Plan ==").head
+      assert(modes == lines.mkString("\n"), s"\n$stmt\n$modes")
+    } finally {
+      Seq("pin_cl", "pin_cl2", "pin_dim").foreach(spark.catalog.dropTempView)
+      spark.sql(s"DROP TABLE IF EXISTS $t"): Unit
+    }
+  }
+
   test("normalizeUpsert emits the full retract transition stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -383,13 +383,14 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
     }
   }
 
-  // ---- group 3b: changelog clause boundaries walk TOKENS --------------
-  // The changelog parser's clause slicing runs on SqlTokens.structural
-  // offsets: clause keywords hiding in literals/comments, comments
-  // splitting two-word clauses, and backtick-quoted keyword-named
-  // columns must all slice correctly — each case pins the FINAL-STATE
-  // answer (1 group, count 1, sum 6.0), which the raw change rows
-  // (3 rows) would break.
+  // ---- group 3b: a changelog SELECT is read off Spark's parsed plan ----
+  // The batch front door parses each statement once with Spark's parser
+  // and reads clauses, calls and relations off that plan: clause
+  // keywords hiding in literals/comments, comments splitting two-word
+  // clauses, backtick-quoted keyword-named columns and relations listed
+  // anywhere in a comma-listed FROM must all come out right — each case
+  // pins the FINAL-STATE answer (1 group, count 1, sum 6.0), which the
+  // raw change rows (3 rows) would break.
 
   private def withChangelog[A](f: String => A): A = {
     import spark.implicits._
@@ -453,6 +454,28 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
         .as[(Long, Double)].collect().toSeq
       assert(r == Seq((1L, 7.0)), s"got $r")
     } finally spark.catalog.dropTempView(v)
+  }
+
+  test("relation census: a comma-listed FROM normalizes an upsert table in any position") {
+    import spark.implicits._
+    val (u, d) = ("neg_cltok_ups", "neg_cltok_dim")
+    spark.sql(s"DROP TABLE IF EXISTS $u")
+    // the upsert form of the changelog above: g1 set to 4.0, then 6.0
+    Seq(("+U", 1L, "g1", 4.0), ("+U", 2L, "g1", 6.0))
+      .toDF("row_kind", "cdc_ts", "g", "x").write.saveAsTable(u)
+    spark.sql(s"ALTER TABLE $u SET TBLPROPERTIES ('graft.upsert.keys' = 'g')")
+    Seq(("g1", "n1")).toDF("g", "nm").createOrReplaceTempView(d)
+    try {
+      for (from <- Seq(s"$d d, $u p", s"$u p, $d d")) {
+        val r = Engine.sql(spark,
+          s"SELECT COUNT(*) AS n, SUM(p.x) AS t FROM $from WHERE d.g = p.g")
+          .as[(Long, Double)].collect().toSeq
+        assert(r == Seq((1L, 6.0)), s"FROM $from got $r")
+      }
+    } finally {
+      spark.catalog.dropTempView(d)
+      spark.sql(s"DROP TABLE IF EXISTS $u"): Unit
+    }
   }
 
   // ---- group 5: WatermarkDdl clause boundaries are token-walked (r14
