@@ -17,6 +17,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command,
   Distinct, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Offset,
   ParsedStatement, Project, Sort, SubqueryAlias, UnresolvedHint}
 import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.catalyst.util.quoteIdentifier
 import org.apache.spark.sql.types.IntegerType
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -646,7 +647,7 @@ object ChangelogSql {
     shapeOf(plan) match {
       case Some((b, Seq(r))) =>
         if (isChangelogRel(spark, r.name)) lowerBare(spark, b, r.name, r.alias)
-        else None // single non-changelog relation: untouched
+        else guarded // the changelog is read in a subquery
       case Some((b, chain)) => lowerJoin(spark, b, chain).orElse(guarded)
       case None => plan match {
         case _: Command | _: ParsedStatement => None // not a query
@@ -848,6 +849,10 @@ object ChangelogSql {
     // with a ±1 weight column and pays only its own GROUP BY exchange,
     // partial-aggregated map-side.
     val net = needsNet(b)
+    val payload = src0.columns.toSeq.filterNot(n =>
+      n == streaming.Cdc.RowKind || n == "cdc_ts")
+    // a `*` item reads every payload column, and names none
+    val star = b.items.exists(_.isInstanceOf[UnresolvedStar])
     val (stage1, weight) =
       if (!net) (filtered.withColumn("__sign", sign), "__sign")
       else {
@@ -859,16 +864,15 @@ object ChangelogSql {
         // never ride the exchange. Fully-retracted rows (net 0) leave
         // the live multiset.
         val refd = namesIn(b.exprs ++ b.order).map(_.toLowerCase).toSet
-        val dataCols = src0.columns.toSeq.filterNot(n =>
-          n == streaming.Cdc.RowKind || n == "cdc_ts")
-          .filter(n => refd(n.toLowerCase))
+        val dataCols = if (star) payload else payload.filter(n => refd(n.toLowerCase))
         (filtered.groupBy(dataCols.map(col): _*).agg(sum(sign).as("__net"))
           .filter(col("__net") =!= 0), "__net")
       }
     assembleStage2(spark, b, stage1, weight,
       view => s"$view${alias.fold("")(a => s" AS $a")}",
       whereInStage2 = false, // the bare path filtered BEFORE netting
-      liveCond = if (net) Some("__net > 0") else None)
+      liveCond = if (net) Some("__net > 0") else None,
+      starCols = if (star) payload else Nil)
   }
 
   /** Stage 2 shared by the bare-relation and join lowerings: the user's
@@ -877,11 +881,12 @@ object ChangelogSql {
     * produces. `whereInStage2`: the join path must filter AFTER the
     * join (predicates may read the static sides); the bare path already
     * filtered before netting (same live multiset — the predicate is
-    * deterministic on the payload — but a smaller netting exchange). */
+    * deterministic on the payload — but a smaller netting exchange).
+    * `starCols`: the columns a `*` item projects (never the weight). */
   private def assembleStage2(spark: SparkSession, b: Block,
       stage1: DataFrame, weight: String,
       fromSqlOf: String => String, whereInStage2: Boolean,
-      liveCond: Option[String]): Option[DataFrame] = {
+      liveCond: Option[String], starCols: Seq[String] = Nil): Option[DataFrame] = {
     val grouped = b.groupBy.isDefined
     def rewrite(s: Sliced) =
       rewriteWith(s, weight, grouped, liveCond = liveCond)
@@ -902,7 +907,11 @@ object ChangelogSql {
       // stage 2: the user's statement with retract-aware aggregates
       val sqlText = new StringBuilder("SELECT ")
         .append(if (b.distinct) "DISTINCT " else "")
-        .append(selectList(b).map(rewrite).mkString(", "))
+        .append(selectList(b).map {
+          case Sliced(_: UnresolvedStar, _, _) if starCols.nonEmpty =>
+            starCols.map(quoteIdentifier).mkString(", ")
+          case item => rewrite(item)
+        }.mkString(", "))
       val hidden = if (!hiddenSort) Map.empty[Int, String] else
         orderItems.zipWithIndex.collect { case ((e, _), i) if itemHasAgg(e.e) =>
           val name = s"__graft_ord_$i"
@@ -1494,7 +1503,7 @@ object ChangelogSql {
   }
 
   /** The statement text `n` spans. */
-  private def sqlOf(n: TreeNode[_]): String = {
+  private[graft] def sqlOf(n: TreeNode[_]): String = {
     val (s, t) = span(n)
     val text = n match {
       case p: LogicalPlan =>
@@ -1507,7 +1516,7 @@ object ChangelogSql {
   /** `e` with its text, grown over the parentheses that enclose it
     * within [lo, hi] (`(a OR b)` keeps them); by default exactly its
     * own text. */
-  private def sliced(e: Expression, lo: Int = 0, hi: Int = -1): Sliced = {
+  private[graft] def sliced(e: Expression, lo: Int = 0, hi: Int = -1): Sliced = {
     val (s0, t0) = span(e)
     val text = e.origin.sqlText.filter(_ => s0 >= 0)
       .getOrElse(return Sliced(e, e.toString, -1))
@@ -1533,7 +1542,7 @@ object ChangelogSql {
   }
 
   /** The SELECT block `p` is, when it is one. */
-  private def block(p: LogicalPlan): Option[Block] = {
+  private[graft] def block(p: LogicalPlan): Option[Block] = {
     def make(items: Seq[Expression], groupBy: Option[Seq[Expression]],
         having: Option[Sliced], child: LogicalPlan) = Some(child match {
       case f: Filter =>
@@ -1569,7 +1578,7 @@ object ChangelogSql {
 
   /** Statement `stmt` as Spark's parsed plan; None when the parser
     * rejects it. */
-  private def parsed(spark: SparkSession, stmt: String): Option[LogicalPlan] =
+  private[graft] def parsed(spark: SparkSession, stmt: String): Option[LogicalPlan] =
     try Some(spark.sessionState.sqlParser.parsePlan(stmt))
     catch { case scala.util.control.NonFatal(_) => None }
 
@@ -1602,7 +1611,7 @@ object ChangelogSql {
     block(p).flatMap(b => chainOf(b.from).map(b -> _))
 
   /** A FROM subquery's alias; None for an unaliased one. */
-  private def aliasOf(id: org.apache.spark.sql.catalyst.AliasIdentifier) =
+  private[graft] def aliasOf(id: org.apache.spark.sql.catalyst.AliasIdentifier) =
     Some(id.name).filterNot(_.startsWith(SubqueryAlias.generateSubqueryName()))
 
   /** A FROM of relations, each optionally aliased — one, or a linear
@@ -1658,7 +1667,7 @@ object ChangelogSql {
       calls(b.items ++ b.having.map(_.e)).exists(isAggCall(spark, _))
 
   /** `COUNT(*)`'s argument: the parser's literal 1 spanning the call. */
-  private def isStarArg(f: UnresolvedFunction, arg: Expression): Boolean =
+  private[graft] def isStarArg(f: UnresolvedFunction, arg: Expression): Boolean =
     arg.isInstanceOf[UnresolvedStar] ||
       (arg.isInstanceOf[Literal] && span(arg) == span(f))
 

@@ -660,7 +660,7 @@ object Engine {
             // stateful OVER operators (StreamExecOverAggregate role).
             // Composed form — OVER above a streaming join/subquery
             // (`SELECT ... OVER ... FROM (SELECT ... JOIN ...) t`) —
-            // lifts the subquery first (lowerComposed). A streaming OVER
+            // lowers the subquery as the input. A streaming OVER
             // that fits NEITHER shape is rejected LOUDLY here instead of
             // falling into spark.sql's unsupported-operation error at
             // stream start; an OVER that spark.sql can genuinely plan
@@ -701,7 +701,7 @@ object Engine {
                   "lowerings. Use MatchRecognize.runStream (the " +
                   "StreamExecMatch NFA) for continuous pattern output, or " +
                   "run the statement in batch via sql()")
-            else StreamOverSql.lowerComposed(spark, select2).getOrElse {
+            else StreamOverSql.lower(spark, select2).getOrElse {
               val df = spark.sql(select2)
               val streamingWindow = df.queryExecution.analyzed.collect {
                 case w: org.apache.spark.sql.catalyst.plans.logical.Window

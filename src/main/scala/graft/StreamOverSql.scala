@@ -1,8 +1,17 @@
 package graft
 
 import graft.streaming.StatefulOps
+import graft.streaming.StatefulOps.OverFrame
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
+  CurrentRow, Expression, NullsFirst, RangeFrame, RowFrame, SortOrder,
+  SpecifiedWindowFrame, UnboundedPreceding, UnspecifiedFrame,
+  WindowExpression, WindowFrame}
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DayTimeIntervalType, IntegerType}
 
 /** Streaming OVER aggregation through the SQL front door — the
   * StreamExecOverAggregate role (reference flink-table-planner
@@ -18,59 +27,49 @@ import org.apache.spark.sql.functions._
   * into one operator. The pass runs on transformWithState, so the
   * statement starts on the RocksDB provider (`ChangelogSql.startStream`).
   *
-  * Supported statement shape:
+  * Supported statement shape, read once off Spark's parsed plan
+  * ([[lower]]), so every spelling the parser accepts reads alike:
   * {{{
   * SELECT <pk>, <rowtime>,
   *        SUM(expr) OVER w AS s, COUNT(expr|*) OVER w AS c, AVG(expr) OVER w AS a,
   *        MIN(expr) OVER w AS lo, MAX(expr) OVER w AS hi
-  * FROM <watermarked table> [WHERE <predicate>]
+  * FROM <watermarked table> | (<streaming subquery>) [AS] a
+  * [WHERE <predicate>]
   * -- w = ([PARTITION BY <pk>] ORDER BY <rowtime> [ROWS n PRECEDING |
   * --      RANGE INTERVAL '<n>' <unit> PRECEDING | UNBOUNDED])
   * }}}
-  * Without PARTITION BY the whole stream shares one state key — a
-  * parallelism-1 operator by construction, exactly Flink's
-  * non-partitioned OVER (a result-shaping operator, not a data-path one).
+  * Items share ONE ORDER BY rowtime; FRAMES may differ per item (one
+  * fused pass, each slot over its own window, Slots.Multi) and so may
+  * PARTITION BY: each distinct partition spec is one pass of a CHAINED
+  * pipeline, the reference's one-StreamExecOverAggregate-per-window
+  * chain. Without PARTITION BY the whole stream shares one state key —
+  * Flink's parallelism-1 non-partitioned OVER. FIRST_VALUE/LAST_VALUE
+  * follow the reference's aggregates (FirstValueAggFunction: first/last
+  * NON-NULL, i.e. IGNORE NULLS — batch spark.sql needs an explicit
+  * IGNORE NULLS for the same result). Non-aggregate select items must
+  * be the partition column, the rowtime, or one of the aggregated
+  * expressions (projected as nullable DOUBLE — the aggregate's input,
+  * NULLs preserved). The ORDER BY column must be the table's declared
+  * WATERMARK attribute. Rows are released in watermark order. Tied
+  * rowtimes follow the standard: under a RANGE frame — explicit, or the
+  * implicit default — tied rows are PEERS and share one aggregate value
+  * (Flink's RowTimeRange*Function semantics, and what the same text
+  * computes in batch); under a ROWS frame they are processed
+  * row-at-a-time in deterministic (t, values) order.
   *
-  * Ordering by a declared `PROCTIME()` attribute instead of the
-  * watermark column selects the PROCESSING-TIME executors (Flink's
-  * ProcTime{Rows,Range}{Bounded,Unbounded}PrecedingFunction family):
-  * rows aggregate in per-key arrival order with no watermark buffering,
-  * processing time being the micro-batch tick — so RANGE frames treat a
-  * key's whole micro-batch as peers, Flink's same-proctime peer rule at
-  * batch granularity (see StatefulOps.procOverAggsByKey).
-  * Any number of SUM/COUNT/AVG/MIN/MAX/FIRST_VALUE/LAST_VALUE items
-  * sharing ONE ORDER BY rowtime; since r8 the FRAMES may DIFFER per
-  * item — items sharing a PARTITION BY run in one fused pass, each slot
-  * aggregating over its own window (Slots.Multi) — and since r9 the
-  * PARTITION BY may differ per item too: each distinct partition spec
-  * becomes one pass of a CHAINED pipeline (one spec = a chain of length
-  * one), exactly the reference's one-StreamExecOverAggregate-per-window
-  * operator chain.
-  * MIN/MAX/FIRST_VALUE/LAST_VALUE ride a NaN-sentinel slot with a
-  * Min/Max/First/Last combine op (a NaN DATA value is indistinguishable
-  * from NULL there — the standard float-aggregate caveat);
-  * FIRST_VALUE/LAST_VALUE follow the reference's aggregates
-  * (FirstValueAggFunction: first/last NON-NULL, i.e. IGNORE NULLS —
-  * batch spark.sql needs an explicit IGNORE NULLS for the same result).
-  * Non-aggregate select items must be the partition column, the
-  * rowtime, or one of the aggregated expressions (projected as nullable
-  * DOUBLE — the aggregate's input, NULLs preserved). The ORDER BY column must be
-  * the table's declared WATERMARK attribute. Rows are released in
-  * watermark order. Tied rowtimes follow the standard: under a RANGE
-  * frame — explicit, or the implicit default when no frame clause is
-  * written — tied rows are PEERS and share one aggregate value (Flink's
-  * RowTimeRange*Function semantics, and what the same text computes in
-  * batch); under a ROWS frame they are processed row-at-a-time in
-  * deterministic (t, values) order, the bounded and unbounded frames
-  * alike.
+  * Ordering by a declared `PROCTIME()` attribute instead selects the
+  * PROCESSING-TIME executors (Flink's ProcTime*PrecedingFunction
+  * family): rows aggregate in per-key arrival order with no watermark
+  * buffering, processing time being the micro-batch tick — so RANGE
+  * frames treat a key's whole micro-batch as peers
+  * (StatefulOps.procOverAggsByKey).
   *
-  * NULL semantics: all five aggregates ignore NULL inputs, and a frame
+  * NULL semantics: every aggregate ignores NULL inputs, and a frame
   * with no non-null inputs reads NULL — exact SQL semantics, including
   * SUM (NULL inputs ride a NaN sentinel every combine op skips). A NaN
   * DATA value would be indistinguishable from NULL under that encoding
   * (batch spark.sql propagates NaN for the same text), so NaN inputs are
-  * rejected EAGERLY with a clear error by default — set
-  * `graft.streamOver.nanInput=allow` to accept them reading back NULL.
+  * rejected EAGERLY with a clear error.
   *
   * Watermark caveat: Catalyst pushes a WHERE predicate that doesn't
   * reference the rowtime BELOW the EventTimeWatermark node
@@ -81,20 +80,6 @@ import org.apache.spark.sql.functions._
   * WHERE or declare a tighter watermark delay.
   */
 object StreamOverSql {
-
-  private val subCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Same-length literal blanking (shared implementation — SqlSplit). */
-  private def blanked(s: String): String =
-    graft.util.SqlSplit.blankLiterals(s)
-
-  private val SelRe =
-    """(?is)^\s*SELECT\s+(.+?)\s+FROM\s+`?(\w+)`?\s*(?:\bWHERE\s+(.+?))?\s*;?\s*$""".r
-  private val OverItemRe =
-    ("""(?is)^\s*([A-Za-z_]\w*)\s*\(\s*(.+?|\*)\s*\)""" +
-      """(?:\s+(IGNORE|RESPECT)\s+NULLS)?\s+OVER\s*\(\s*""" +
-      """(?:PARTITION\s+BY\s+`?(\w+)`?\s+)?ORDER\s+BY\s+`?(\w+)`?\s*(.*?)\)""" +
-      """\s*(?:AS\s+`?(\w+)`?)?\s*$""").r
 
   private val BuiltinOverFns =
     Set("SUM", "COUNT", "AVG", "MIN", "MAX", "FIRST_VALUE", "LAST_VALUE")
@@ -126,196 +111,130 @@ object StreamOverSql {
     * aggregates are admissible over changelog relations too). */
   private[graft] def customAgg(fn: String): Option[StatefulOps.OverAgg] =
     Option(customAggs.get(fn.toUpperCase))
-  private val RowsFrameRe =
-    """(?is)^\s*ROWS\s+BETWEEN\s+(\d+)\s+PRECEDING\s+AND\s+CURRENT\s+ROW\s*$""".r
-  private val RangeFrameRe =
-    ("""(?is)^\s*RANGE\s+BETWEEN\s+INTERVAL\s+'(\d+)'\s+""" +
-      """(SECOND|MINUTE|HOUR|DAY)S?\s+PRECEDING\s+AND\s+CURRENT\s+ROW\s*$""").r
-  private val UnboundedFrameRe =
-    ("""(?is)^\s*(?:(ROWS|RANGE)\s+(?:BETWEEN\s+UNBOUNDED\s+PRECEDING\s+""" +
-      """AND\s+CURRENT\s+ROW|UNBOUNDED\s+PRECEDING))?\s*$""").r
-  private val AliasRe = """(?is)^\s*(.+?)\s+AS\s+`?(\w+)`?\s*$""".r
 
-  private final case class AggItem(fn: String, valueText: String,
-      nullsOpt: Option[String], pk: Option[String], rowtime: String,
-      frameText: String, aliasOpt: Option[String]) {
+  /** One OVER item: `fn(arg)` (`arg` None = `*`) over its window: the
+    * PARTITION BY column, the ORDER BY column and the frame. `nulls`:
+    * the IGNORE/RESPECT NULLS clause written between the call and OVER. */
+  private final case class AggItem(fn: String, arg: Option[ChangelogSql.Sliced],
+      nulls: Option[String], pk: Option[String], rowtime: String,
+      frame: OverFrame, aliasOpt: Option[String]) {
+    def argText: String = arg.fold("*")(_.sql)
     /** A single unaliased item keeps the historical `sum_over` name;
       * multiple items disambiguate by position. */
     def alias(idx: Int, total: Int): String = aliasOpt.getOrElse(
       fn.toLowerCase + (if (total == 1) "_over" else s"_over$idx"))
   }
 
-  private def parseOverItem(item: String): Option[AggItem] = item match {
-    case OverItemRe(f, v, nl, p, o, fr, al)
-        if BuiltinOverFns(f.toUpperCase) || customAgg(f).isDefined =>
-      Some(AggItem(f.toUpperCase, v.trim, Option(nl).map(_.toUpperCase),
-        Option(p), o, fr.trim, Option(al)))
+  /** The window function `e` is, when the select item is one, and its
+    * alias. */
+  private def overOf(e: Expression): Option[(WindowExpression, Option[String])] =
+    e match {
+      case Alias(w: WindowExpression, name) => Some((w, Some(name)))
+      case UnresolvedAlias(w: WindowExpression, _) => Some((w, None))
+      case _ => None
+    }
+
+  /** The frame `f` denotes: no frame clause is the SQL default, RANGE
+    * UNBOUNDED PRECEDING (peer-sharing, as batch spark.sql and DuckDB);
+    * None for one this lowering does not run. */
+  private def frameOf(f: WindowFrame): Option[OverFrame] = f match {
+    case UnspecifiedFrame => Some(OverFrame.UnboundedRange)
+    case SpecifiedWindowFrame(t, lo, CurrentRow) => (t, lo) match {
+      case (RowFrame, UnboundedPreceding) => Some(OverFrame.Unbounded)
+      case (RangeFrame, UnboundedPreceding) => Some(OverFrame.UnboundedRange)
+      // `n PRECEDING` reads -n; an interval reads microseconds
+      case (RowFrame, n) if n.foldable && n.dataType == IntegerType =>
+        Some(n.eval().asInstanceOf[Int]).filter(_ <= 0).map(k => OverFrame.Rows(1 - k))
+      case (RangeFrame, n) if n.foldable && n.dataType.isInstanceOf[DayTimeIntervalType] =>
+        Some(n.eval().asInstanceOf[Long]).filter(us => us <= 0 && us % 1000 == 0)
+          .map(us => OverFrame.Range(-us / 1000))
+      case _ => None
+    }
     case _ => None
   }
 
-  private def frameOk(fr: String): Boolean =
-    UnboundedFrameRe.matches(fr) || RowsFrameRe.matches(fr) ||
-      RangeFrameRe.matches(fr)
-
-  /** Dispatch predicate — SHAPE-PRECISE: true only when the whole
-    * statement fits the supported single-table form (one or more
-    * SUM/COUNT/AVG/MIN/MAX/FIRST_VALUE/LAST_VALUE OVER items sharing one
-    * ORDER BY rowtime; frames AND PARTITION BY may differ per item —
-    * shared-spec items fuse into one pass, distinct specs chain). A
-    * statement that
-    * merely CONTAINS an OVER — e.g. a window function on the batch-side
-    * subquery of a stream-batch join — must fall through to spark.sql,
-    * which plans it as before; a statement that fits the shape but is
-    * semantically invalid (wrong ORDER BY column, extra select items)
-    * stays here and is rejected loudly by [[lower]]. */
-  def matches(select: String): Boolean = select match {
-    case SelRe(itemsText, _, _) =>
-      val items = graft.util.SqlSplit.splitTopLevel(itemsText).map(_.trim)
-      val overs = items.filter(i => """(?is)\bOVER\b""".r.findFirstIn(i).isDefined)
-      overs.nonEmpty && {
-        val parsed = overs.map(parseOverItem)
-        parsed.forall(_.isDefined) && {
-          val ps = parsed.flatten
-          // one shared ORDER BY rowtime; PARTITION BY may differ per item
-          // (multi-spec statements lower onto CHAINED passes, the
-          // reference's one-operator-per-window shape)
-          ps.forall(p => frameOk(p.frameText)) &&
-            ps.map(_.rowtime).distinct.size == 1
-        }
-      }
-    case _ => false
-  }
-
-  private val FromSubHeadRe = """(?is)^\s*SELECT\s+(.+?)\s+FROM\s*\(""".r
-  private val AliasHeadRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)\b(.*)$""".r
-
-  /** Remove `alias.`-qualified prefixes outside string literals, so a
-    * select list written against a subquery alias resolves against the
-    * lifted single-table view ("t.price" -> "price"). */
-  private def stripQualifier(text: String, alias: String): String = {
-    val b = blanked(text)
-    val re = ("""(?i)\b""" + java.util.regex.Pattern.quote(alias) + """\s*\.\s*""").r
-    val cut = re.findAllMatchIn(b).map(m => (m.start, m.end)).toList
-    if (cut.isEmpty) text
-    else {
-      val sb = new StringBuilder
-      var i = 0
-      cut.foreach { case (s, e) => sb.append(text.substring(i, s)); i = e }
-      sb.append(text.substring(i)).toString
-    }
-  }
-
-  /** COMPOSED streaming OVER — the round-7 verdict's "streaming OVER +
-    * join" gap: `SELECT <over items> FROM (<subquery>) [AS] a [WHERE ...]`
-    * where the subquery is arbitrary streaming SQL (typically a
-    * stream-batch or stream-stream join that assembles the OVER's input).
-    * The subquery lowers through spark.sql first (the caller has already
-    * shadowed watermarked sources with streaming reads), binds as a
-    * generated temp view, alias qualifiers are stripped from the outer
-    * items, and the rewritten single-table statement takes the normal
-    * [[lower]] path. The watermark column is recognized through Spark's
-    * event-time column METADATA (spark.watermarkDelayMs survives
-    * projection, rename and joins), since a lifted view has no catalog
-    * watermark declaration. None = not this shape (caller decides whether
-    * to fall through to spark.sql or reject loudly). */
-  def lowerComposed(spark: SparkSession, select: String): Option[DataFrame] = {
-    if (matches(select)) return Some(lower(spark, select))
-    val b = blanked(select)
-    if ("""(?is)\bOVER\s*\(""".r.findFirstIn(b).isEmpty) return None
-    val head = FromSubHeadRe.findFirstMatchIn(b).getOrElse(return None)
-    val open = head.end - 1
-    val close = graft.util.SqlSplit.matchParen(b, open)
-    if (close < 0) return None
-    val inner = select.substring(open + 1, close).trim
-    if (!inner.regionMatches(true, 0, "SELECT", 0, 6)) return None
-    var tail = select.substring(close + 1)
-    var aliasOpt: Option[String] = None
-    tail match {
-      case AliasHeadRe(w, rest) if !w.equalsIgnoreCase("WHERE") =>
-        aliasOpt = Some(w); tail = rest
-      case _ => ()
-    }
-    // an inner that doesn't analyze is not this shape — let the caller's
-    // spark.sql path report the error on the ORIGINAL statement text
-    val innerDf = scala.util.Try(spark.sql(inner)).getOrElse(return None)
-    if (!innerDf.isStreaming) return None // batch statement: spark.sql plans it whole
-    val view = s"__graft_over_sub_${subCounter.incrementAndGet()}"
-    innerDf.createOrReplaceTempView(view)
-    // drop the generated view whichever way this returns: on the None
-    // path nothing references it, and on the lowered path analysis has
-    // already captured the subquery's plan inside the returned DataFrame
-    try {
-      val items0 = select.substring(head.start(1), head.end(1))
-      val strip = (s: String) => aliasOpt.map(a => stripQualifier(s, a)).getOrElse(s)
-      val rewritten = s"SELECT ${strip(items0)} FROM $view ${strip(tail)}".trim
-      if (matches(rewritten)) Some(lower(spark, rewritten)) else None
-    } finally spark.catalog.dropTempView(view): Unit
-  }
-
-  /** Lower the SELECT to a STREAMING DataFrame. Resolves `FROM <table>`
-    * via `spark.table` — callers (sqlStreamInsert) shadow the name with
-    * the watermarked streaming view first. */
-  def lower(spark: SparkSession, select: String): DataFrame = {
+  /** Lower the statement to a STREAMING DataFrame when it is a streaming
+    * OVER; None = not this shape, and the caller falls through to
+    * spark.sql. The statement is parsed once with Spark's parser; its
+    * SELECT block gives the OVER items, the WHERE and the FROM. A
+    * statement that merely CONTAINS an OVER — a window function on the
+    * batch-side subquery of a stream-batch join, or an OVER inside a
+    * larger expression — is not this shape; one that is, but is
+    * semantically invalid (wrong ORDER BY column, extra select items),
+    * throws. The FROM is a relation — callers (sqlStreamInsert) shadow
+    * the name with the watermarked streaming view first — or the
+    * COMPOSED form `FROM (<subquery>) [AS] a`: the subquery is arbitrary
+    * streaming SQL (typically a join assembling the OVER's input),
+    * lowered through spark.sql and aliased `a`. */
+  def lower(spark: SparkSession, select: String): Option[DataFrame] = {
+    import ChangelogSql.{aliasOf, block, isStarArg, parsed, sliced, sqlOf}
     import graft.streaming.StatefulTws
-    import graft.streaming.StatefulOps.{OverFrame, SlotOp}
+    import graft.streaming.StatefulOps.SlotOp
     import spark.implicits._
-    val (itemsText, table, whereOpt) = select match {
-      case SelRe(items, t, w) => (items, t, Option(w))
-      case _ => throw new IllegalArgumentException(
-        "streaming OVER supports SELECT <items> FROM <table> [WHERE ...]; " +
-          s"got: $select")
+    val b = parsed(spark, select).flatMap(block).filter(b => b.groupBy.isEmpty &&
+      b.having.isEmpty && !b.distinct && !b.ordered).getOrElse(return None)
+    val (table, fromAlias, body) = b.from match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        (Some(r.multipartIdentifier.head), None, None)
+      case SubqueryAlias(id, q) => (None, aliasOf(id), Some(q))
+      case _ => return None
     }
-    val items = graft.util.SqlSplit.splitTopLevel(itemsText).map(_.trim)
-    val isOver: Seq[Boolean] =
-      items.map(i => """(?is)\bOVER\b""".r.findFirstIn(i).isDefined)
-    val overTexts = items.zip(isOver).collect { case (i, true) => i }
-    require(overTexts.nonEmpty, "no OVER item in streaming OVER statement")
-    val aggs = overTexts.map { i =>
-      parseOverItem(i).getOrElse(throw new IllegalArgumentException(
-        "unsupported OVER item (need SUM|COUNT|AVG(expr) OVER (PARTITION " +
-          s"BY col ORDER BY rowtime [ROWS|RANGE frame]) [AS alias]): $i"))
+    // a column, bare or qualified by the FROM's alias (else its table)
+    val quals = fromAlias.orElse(table).toSeq
+    def colName(e: Expression): Option[String] = e match {
+      case UnresolvedAttribute(Seq(c)) => Some(c)
+      case UnresolvedAttribute(Seq(q, c)) if quals.exists(_.equalsIgnoreCase(q)) => Some(c)
+      case _ => None
     }
+    val overs = b.items.map(overOf)
+    if (overs.forall(_.isEmpty) || b.items.zip(overs).exists { case (i, o) =>
+        o.isEmpty && i.exists(_.isInstanceOf[WindowExpression]) }) return None
+    val aggs = overs.flatten.map { case (w, aliasOpt) =>
+      val f = Some(w.windowFunction).collect { case f: UnresolvedFunction => f }
+        .filter(f => f.nameParts.size == 1 && f.arguments.size == 1 &&
+          !f.isDistinct && f.filter.isEmpty && f.orderingWithinGroup.isEmpty)
+        .getOrElse(return None)
+      val fn = f.nameParts.head.toUpperCase
+      if (!BuiltinOverFns(fn) && customAgg(fn).isEmpty) return None
+      val spec = w.windowSpec
+      val pk = spec.partitionSpec match {
+        case Seq() => None
+        case Seq(p) => Some(colName(p).getOrElse(return None))
+        case _ => return None
+      }
+      val rowtime = spec.orderSpec match {
+        case Seq(SortOrder(c, Ascending, NullsFirst, _)) => colName(c).getOrElse(return None)
+        case _ => return None
+      }
+      // IGNORE NULLS is in the plan, RESPECT NULLS only in the text
+      // between the call's closing parenthesis and the window spec
+      val text = graft.util.SqlSplit.blankLiterals(f.origin.sqlText.get)
+      val close = graft.util.SqlSplit.matchParen(text, text.indexOf('(', f.origin.startIndex.get))
+      val nulls = if (f.ignoreNulls) Some("IGNORE") else Some("RESPECT").filter(_ =>
+        text.substring(close + 1, spec.origin.startIndex.get).toUpperCase.contains("RESPECT"))
+      val arg = f.arguments.head
+      AggItem(fn, Option.when(!isStarArg(f, arg))(sliced(arg)), nulls, pk,
+        rowtime, frameOf(spec.frameSpecification).getOrElse(return None), aliasOpt)
+    }
+    // one shared ORDER BY: one event-time clock per statement
+    if (aggs.map(_.rowtime).distinct.size > 1) return None
+    // the composed form's subquery: the caller has already shadowed
+    // watermarked sources with streaming reads
+    val sub = body.map(q => scala.util.Try(spark.sql(sqlOf(q))).toOption
+      .filter(_.isStreaming).getOrElse(return None))
+      .map(df => fromAlias.fold(df)(df.alias))
+
     val aliases = aggs.zipWithIndex.map { case (a, i) => a.alias(i, aggs.size) }
     require(aliases.distinct.size == aliases.size,
       s"duplicate OVER output aliases: ${aliases.mkString(", ")}")
-    // one shared ORDER BY; FRAMES may differ per item (fused in one pass,
-    // Slots.Multi) and PARTITION BY may differ per item — each distinct
-    // partition spec becomes one CHAINED stateful pass (the reference's
-    // one-StreamExecOverAggregate-per-window chain). Different ORDER BY
-    // columns stay rejected (one event-time clock per statement).
-    require(aggs.map(_.rowtime).distinct.size == 1,
-      "every OVER item must share one ORDER BY rowtime column " +
-        s"(got: ${aggs.map(_.rowtime).distinct})")
-    // distinct partition specs in first-appearance order. PARTITION BY
-    // is optional (Flink's non-partitioned OVER): without it the whole
-    // stream shares ONE state key — a parallelism-1 operator by
-    // construction, same as the reference's global OVER
+    // distinct partition specs in first-appearance order, one chained
+    // pass each; None = the non-partitioned OVER's one state key
     val specs: Seq[Option[String]] = aggs.map(_.pk).distinct
     val rowtime = aggs.head.rowtime
-    def parseFrame(text: String): OverFrame = text match {
-      // no frame clause = the SQL default, RANGE UNBOUNDED PRECEDING —
-      // peer-sharing semantics, same as batch spark.sql / DuckDB
-      case UnboundedFrameRe(kw) =>
-        if (kw != null && kw.equalsIgnoreCase("ROWS")) OverFrame.Unbounded
-        else OverFrame.UnboundedRange
-      case RowsFrameRe(n) => OverFrame.Rows(n.toInt + 1)
-      case RangeFrameRe(n, unit) =>
-        OverFrame.Range(n.toLong * (unit.toUpperCase match {
-          case "SECOND" => 1000L
-          case "MINUTE" => 60000L
-          case "HOUR" => 3600000L
-          case "DAY" => 86400000L
-        }))
-      case other => throw new IllegalArgumentException(
-        s"unsupported OVER frame for streaming: $other")
-    }
     aggs.foreach { a =>
-      require(BuiltinOverFns(a.fn) || customAgg(a.fn).isDefined,
-        s"unsupported OVER aggregate ${a.fn}")
-      require(a.fn != "COUNT" || a.valueText == "*" ||
-          !a.valueText.contains("("),
-        s"COUNT supports * or a plain column, got COUNT(${a.valueText})")
-      require(a.fn == "COUNT" || a.valueText != "*", s"${a.fn}(*) is not SQL")
+      require(a.fn != "COUNT" || a.arg.isEmpty || !a.argText.contains("("),
+        s"COUNT supports * or a plain column, got COUNT(${a.argText})")
+      require(a.fn == "COUNT" || a.arg.isDefined, s"${a.fn}(*) is not SQL")
       // FIRST_VALUE/LAST_VALUE follow the reference's aggregate
       // semantics — first/last NON-NULL value (FirstValueAggFunction /
       // LastValueAggFunction), i.e. IGNORE NULLS. RESPECT NULLS cannot
@@ -323,26 +242,26 @@ object StreamOverSql {
       // from the reference; rejected loudly. NOTE: batch spark.sql
       // defaults to RESPECT NULLS for the same text — write IGNORE NULLS
       // explicitly for batch/stream parity on NULL data.
-      require(a.nullsOpt.isEmpty ||
+      require(a.nulls.isEmpty ||
           Set("FIRST_VALUE", "LAST_VALUE")(a.fn),
-        s"${a.fn} does not take an ${a.nullsOpt.getOrElse("")} NULLS clause")
-      require(!a.nullsOpt.contains("RESPECT"),
+        s"${a.fn} does not take an ${a.nulls.getOrElse("")} NULLS clause")
+      require(!a.nulls.contains("RESPECT"),
         s"${a.fn} RESPECT NULLS is not supported: the reference's " +
           "FIRST_VALUE/LAST_VALUE aggregates ignore NULLs")
     }
 
-    val wmCol = scala.util.Try(
-      WatermarkDdl.watermarkCol(spark, table)).toOption.flatten
+    val wmCol = table.flatMap(t =>
+      scala.util.Try(WatermarkDdl.watermarkCol(spark, t)).toOption.flatten)
     // ORDER BY a declared PROCTIME() attribute selects the
     // processing-time executors (ProcTime*Function family): arrival-order
     // aggregation, no watermark buffering
-    val procTime = scala.util.Try(
-      WatermarkDdl.proctimeCol(spark, table)).toOption.flatten.contains(rowtime)
-    val src0 = spark.table(table)
-    // A lifted subquery view (lowerComposed) has no catalog watermark
-    // declaration; Spark marks the event-time attribute with column
-    // metadata (EventTimeWatermark.delayKey) that survives projection,
-    // rename and joins — accept that as the declared rowtime.
+    val procTime = table.exists(t => scala.util.Try(
+      WatermarkDdl.proctimeCol(spark, t)).toOption.flatten.contains(rowtime))
+    val src0 = sub.getOrElse(spark.table(table.get))
+    // A subquery has no catalog watermark declaration; Spark marks the
+    // event-time attribute with column metadata
+    // (EventTimeWatermark.delayKey, spark.watermarkDelayMs) that survives
+    // projection, rename and joins — accept that as the declared rowtime.
     val wmMeta = src0.schema.find(_.name == rowtime)
       .exists(f => f.metadata.contains("spark.watermarkDelayMs"))
     require(procTime || wmCol.contains(rowtime) || wmMeta,
@@ -350,8 +269,8 @@ object StreamOverSql {
         s"(${wmCol.getOrElse("<none>")}), a watermarked (event-time) " +
         s"column of the input, or a PROCTIME() attribute, got $rowtime")
     require(src0.isStreaming,
-      s"$table did not resolve to a streaming read (batch OVER is spark.sql's job)")
-    val src = whereOpt.map(src0.where).getOrElse(src0)
+      s"${table.mkString} did not resolve to a streaming read (batch OVER is spark.sql's job)")
+    val src = b.where.map(w => src0.where(w.sql)).getOrElse(src0)
     require(src.schema(rowtime).dataType ==
       org.apache.spark.sql.types.TimestampType,
       s"rowtime $rowtime must be TIMESTAMP, got ${src.schema(rowtime).dataType}")
@@ -367,44 +286,42 @@ object StreamOverSql {
     // SUM(v) + COUNT(v) + AVG(v) over one window share one value and one
     // indicator slot — every buffered row in state carries the minimal
     // vector; the same aggregate over a different frame is its own slot.
-    def norm(s: String): String = s.toLowerCase.replaceAll("[\\s`]+", "")
+    // an expression up to case and qualifiers: the key of a slot's
+    // input and of a projected item
+    def norm(e: Expression): Expression = e.transformUp {
+      case a: UnresolvedAttribute =>
+        UnresolvedAttribute(Seq(colName(a).getOrElse(a.name).toLowerCase))
+      case f: UnresolvedFunction => f.copy(nameParts = f.nameParts.map(_.toLowerCase))
+    }
+    def key(a: AggItem): Option[Expression] = a.arg.map(s => norm(s.e))
     val slotCols = Vector.newBuilder[Column]
     val slotOps = Vector.newBuilder[SlotOp]
     val slotFrames = Vector.newBuilder[OverFrame]
     var nSlots = 0
-    val slotCache = scala.collection.mutable.Map.empty[(String, String, String), Int]
-    def slotOf(a: AggItem, kind: String, txt: String,
+    val slotCache =
+      scala.collection.mutable.Map.empty[(String, Option[Expression], OverFrame), Int]
+    def slotOf(a: AggItem, kind: String,
         op: SlotOp = SlotOp.Sum)(c: => Column): Int =
-      slotCache.getOrElseUpdate((kind, txt, norm(a.frameText)),
-        { slotCols += c; slotOps += op; slotFrames += parseFrame(a.frameText)
+      slotCache.getOrElseUpdate((kind, key(a), a.frame),
+        { slotCols += c; slotOps += op; slotFrames += a.frame
           nSlots += 1; nSlots - 1 })
     // NULL inputs ride a NaN sentinel — so a genuine NaN DATA value would
     // silently read back NULL, diverging from batch spark.sql where NaN
     // propagates. Guard the ambiguity EAGERLY (one codegen'd isnan branch
     // per slot): a NaN input fails the query with a clear message.
-    // graft.streamOver.nanInput=allow restores the documented
-    // NaN-reads-as-NULL behavior for pipelines that accept it.
-    val rejectNaN = spark.conf.get(
-      "graft.streamOver.nanInput", "reject") != "allow"
-    def sentinel(ve: Column): Column = {
-      val guarded =
-        if (!rejectNaN) ve
-        else when(isnan(ve), raise_error(lit(
-          "NaN input to a streaming OVER aggregate: the NaN-sentinel NULL " +
-            "encoding cannot represent it (batch OVER would propagate NaN). " +
-            "Filter NaNs out, or set graft.streamOver.nanInput=allow to " +
-            "read them back as NULL")).cast("double")).otherwise(ve)
-      coalesce(guarded, lit(Double.NaN))
-    }
-    def valueSlot(a: AggItem): Int = slotOf(a, "val", norm(a.valueText))(
-      sentinel(expr(a.valueText).cast("double")))
+    def sentinel(ve: Column): Column = coalesce(
+      when(isnan(ve), raise_error(lit(
+        "NaN input to a streaming OVER aggregate: the NaN-sentinel NULL " +
+          "encoding cannot represent it (batch OVER would propagate NaN). " +
+          "Filter NaNs out")).cast("double")).otherwise(ve),
+      lit(Double.NaN))
+    def valueSlot(a: AggItem): Int = slotOf(a, "val")(
+      sentinel(expr(a.argText).cast("double")))
     def indicatorSlot(a: AggItem): Int =
-      if (a.valueText == "*") slotOf(a, "star", "")(lit(1.0))
-      else slotOf(a, "ind", norm(a.valueText))(
-        when(expr(a.valueText).isNotNull, 1.0).otherwise(0.0))
+      if (a.arg.isEmpty) slotOf(a, "star")(lit(1.0))
+      else slotOf(a, "ind")(when(expr(a.argText).isNotNull, 1.0).otherwise(0.0))
     def opSlot(a: AggItem, kind: String, op: SlotOp): Int =
-      slotOf(a, kind, norm(a.valueText), op)(
-        sentinel(expr(a.valueText).cast("double")))
+      slotOf(a, kind, op)(sentinel(expr(a.argText).cast("double")))
     val aggSlots: Seq[(AggItem, Int, Int)] = aggs.map { a =>
       a.fn match {
         case "SUM" => (a, valueSlot(a), -1)
@@ -414,8 +331,8 @@ object StreamOverSql {
         case "MAX" => (a, opSlot(a, "max", SlotOp.Max), -1)
         case "FIRST_VALUE" => (a, opSlot(a, "first", SlotOp.First), -1)
         case "LAST_VALUE" => (a, opSlot(a, "last", SlotOp.Last), -1)
-        case fn => // registered user-defined aggregate (parseOverItem
-          // admits only built-ins and registry hits)
+        case fn => // registered user-defined aggregate (the item
+          // reader admits only built-ins and registry hits)
           (a, opSlot(a, s"uda:$fn", SlotOp.Agg(customAgg(fn).get)), -1)
       }
     }
@@ -430,26 +347,32 @@ object StreamOverSql {
     // aggregated solely by COUNT cannot be projected); pk/rowtime
     // entries are added last and win collisions, so a projected `k`
     // stays the key column even when SUM(k) is among the aggregates.
-    val valueSlotByText: Map[String, Int] =
+    def colKey(c: String): Expression = UnresolvedAttribute(Seq(c.toLowerCase))
+    val valueSlotByExpr: Map[Expression, Int] =
       aggSlots.collect { case (a, s, _) if a.fn != "COUNT" =>
-        norm(a.valueText) -> s }.reverse.toMap // first declaration wins
-    val known: Map[String, String] =
-      valueSlotByText.map { case (txt, s) => txt -> s"v$s" } ++
-        Map(norm(rowtime) -> "t") ++
-        specs.zipWithIndex.collect { case (Some(p), i) => norm(p) -> s"k$i" }
-    var overPos = -1
-    val outCols: Seq[(String, String)] = items.zip(isOver).map {
-      case (_, true) =>
-        overPos += 1
-        (s"__agg$overPos", aliases(overPos))
-      case (AliasRe(e, al), _) => (norm(e), al)
-      case (e, _) => (norm(e), e.trim.replace("`", ""))
-    }
-    outCols.foreach { case (e, _) =>
-      require(e.startsWith("__agg") || known.contains(e),
-        s"streaming OVER select items must be the partition column, the " +
-          s"rowtime or an aggregated expression (COUNT-only doesn't " +
-          s"qualify — its 0/1 indicator is not the value); got '$e'") }
+        key(a).get -> s }.reverse.toMap // first declaration wins
+    val known: Map[Expression, String] =
+      valueSlotByExpr.map { case (e, s) => e -> s"v$s" } ++
+        Map(colKey(rowtime) -> "t") ++
+        specs.zipWithIndex.collect { case (Some(p), i) => colKey(p) -> s"k$i" }
+    // each item: Left(its OVER position) or Right(its key), and its name
+    val overPos = overs.scanLeft(-1)((i, o) => if (o.isDefined) i + 1 else i).tail
+    val outCols: Seq[(Either[Int, Expression], String)] =
+      b.items.zip(overs).zip(overPos).map {
+        case ((_, Some(_)), i) => (Left(i), aliases(i))
+        case ((item, None), _) =>
+          val (e, name) = item match {
+            case Alias(e, al) => (e, al)
+            case UnresolvedAlias(e, _) => (e, sliced(e).sql.replace("`", ""))
+            case a: UnresolvedAttribute => (a, a.nameParts.last)
+            case e => (e, sliced(e).sql)
+          }
+          require(known.contains(norm(e)),
+            s"streaming OVER select items must be the partition column, the " +
+              s"rowtime or an aggregated expression (COUNT-only doesn't " +
+              s"qualify — its 0/1 indicator is not the value); got '${sliced(e).sql}'")
+          (Right(norm(e)), name)
+      }
 
     val frames = slotFrames.result()
     val ops = slotOps.result()
@@ -554,9 +477,8 @@ object StreamOverSql {
             .otherwise(sumAt(j, s))
       }
     }
-    val projected = outCols.map { case (e, alias) =>
-      (if (e.startsWith("__agg")) aggCol(e.stripPrefix("__agg").toInt)
-       else known(e) match {
+    val projected = outCols.map { case (e, name) =>
+      (e.fold(aggCol, k => known(k) match {
          case "t" => col("ts")
          case ks if ks.startsWith("k") =>
            val i = ks.stripPrefix("k").toInt
@@ -568,8 +490,8 @@ object StreamOverSql {
          case vs => // NaN sentinel = the row's own input was NULL
            val v = col("vals").getItem(vs.stripPrefix("v").toInt)
            when(isnan(v), lit(null).cast("double")).otherwise(v)
-       }).as(alias)
+       })).as(name)
     }
-    ran.select(projected: _*)
+    Some(ran.select(projected: _*))
   }
 }

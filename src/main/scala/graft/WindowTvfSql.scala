@@ -535,18 +535,13 @@ object WindowTvfSql {
 
     // slot assembly — the StreamOverSql NaN-sentinel family: NULL inputs
     // ride NaN (skipped by every combine op), genuine NaN data rejects
-    // eagerly unless graft.streamOver.nanInput=allow
-    val rejectNaN = spark.conf.get("graft.streamOver.nanInput", "reject") != "allow"
-    def sentinel(ve: Column): Column = {
-      val guarded =
-        if (!rejectNaN) ve
-        else when(isnan(ve), raise_error(lit(
-          "NaN input to a streaming CUMULATE aggregate: the NaN-sentinel " +
-            "NULL encoding cannot represent it. Filter NaNs out, or set " +
-            "graft.streamOver.nanInput=allow to read them back as NULL"))
-          .cast("double")).otherwise(ve)
-      coalesce(guarded, lit(Double.NaN))
-    }
+    // eagerly
+    def sentinel(ve: Column): Column = coalesce(
+      when(isnan(ve), raise_error(lit(
+        "NaN input to a streaming CUMULATE aggregate: the NaN-sentinel " +
+          "NULL encoding cannot represent it. Filter NaNs out"))
+        .cast("double")).otherwise(ve),
+      lit(Double.NaN))
     def norm(s: String): String = s.toLowerCase.replaceAll("[\\s`]+", "")
     val slotCols = Vector.newBuilder[Column]
     val slotOps = Vector.newBuilder[SlotOp]

@@ -299,6 +299,19 @@ class ChangelogSqlSpec extends AnyFunSuite {
     } finally spark.catalog.dropTempView("cl_dis")
   }
 
+  test("SELECT DISTINCT * nets every payload column and projects exactly those") {
+    changelog().createOrReplaceTempView("cl_star")
+    try {
+      val df = Engine.sql(spark, "SELECT DISTINCT * FROM cl_star")
+      assert(df.columns.toSeq == Seq("g", "k", "x"), df.columns.toSeq)
+      val got = df.collect().map(r => (r.getString(0), r.getString(1),
+        Option(r.get(2)).map(_.asInstanceOf[Double]))).toSet
+      // the live rows: k1 updated to 25.0, k2 deleted
+      assert(got == Set(("g1", "k1", Some(25.0)), ("g1", "k3", None),
+        ("g2", "k4", Some(7.0))), s"got $got")
+    } finally spark.catalog.dropTempView("cl_star")
+  }
+
   test("DDL doors: CTAS/INSERT bodies lower; persistent views and WITH reject") {
     import spark.implicits._
     changelog().createOrReplaceTempView("cl_ddl")

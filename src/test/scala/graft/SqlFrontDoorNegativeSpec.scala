@@ -456,6 +456,17 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
     } finally spark.catalog.dropTempView(v)
   }
 
+  test("relation census: an aggregate over a static FROM whose subquery reads a changelog rejects") {
+    import spark.implicits._
+    Seq("g1", "g2").toDF("g").createOrReplaceTempView("neg_cldim")
+    try withChangelog { cl =>
+      // read as plain SQL, the subquery would see the raw change rows
+      val e = intercept[IllegalArgumentException](Engine.sql(spark,
+        s"SELECT COUNT(*) AS n FROM neg_cldim WHERE g IN (SELECT g FROM $cl)"))
+      assert(e.getMessage.contains("composite FROM"), e.getMessage)
+    } finally spark.catalog.dropTempView("neg_cldim"): Unit
+  }
+
   test("relation census: a comma-listed FROM normalizes an upsert table in any position") {
     import spark.implicits._
     val (u, d) = ("neg_cltok_ups", "neg_cltok_dim")

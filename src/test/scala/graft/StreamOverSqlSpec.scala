@@ -22,10 +22,12 @@ class StreamOverSqlSpec extends AnyFunSuite {
       o.customMetrics.keySet().toString.toLowerCase.contains("rocksdb")))
 
   /** Runs the one-OVER-item statement with `overClause` end to end and
-    * asserts batch-window equality; returns [[stateOps]] of the query. */
+    * asserts batch-window equality; returns [[stateOps]] of the query.
+    * `select` spells the statement over the source table it is given. */
   private def runOne(tag: String, overClause: String,
       batchFrame: org.apache.spark.sql.expressions.WindowSpec,
-      tied: Boolean = false): Seq[(String, Boolean)] = {
+      tied: Boolean = false,
+      select: String => String = null): Seq[(String, Boolean)] = {
     val (src, sink) = (s"ovr_src_${tag}_$h", s"ovr_sink_${tag}_$h")
     Engine.sql(spark, s"DROP VIEW IF EXISTS $src")
     Engine.sql(spark, s"DROP TABLE IF EXISTS __${src}_base")
@@ -42,10 +44,10 @@ class StreamOverSqlSpec extends AnyFunSuite {
     Engine.sql(spark,
       s"CREATE TABLE $sink (k BIGINT, ts TIMESTAMP, v DOUBLE, agg DOUBLE) USING parquet")
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-over-$tag").toString
-    val q = Engine.sqlStreamInsert(spark, s"""
-      INSERT INTO $sink
+    val body = Option(select).fold(s"""
       SELECT k, ts, v, SUM(v) OVER (PARTITION BY k ORDER BY ts $overClause) AS agg
-      FROM $src WHERE v < 900""", ckpt)
+      FROM $src WHERE v < 900""")(_(src))
+    val q = Engine.sqlStreamInsert(spark, s"INSERT INTO $sink $body", ckpt)
     try {
       // the junk v=5000 row exercises the WHERE path; it is filtered
       // BELOW the watermark node (see StreamOverSql scaladoc) so it
@@ -113,6 +115,34 @@ class StreamOverSqlSpec extends AnyFunSuite {
     runOne("range", "RANGE BETWEEN INTERVAL '90' SECOND PRECEDING AND CURRENT ROW",
       Window.partitionBy("k").orderBy(col("ts").cast("long") * 1000)
         .rangeBetween(-90000, 0))
+  }
+
+  // spellings Spark's parser reads as the unbounded statement above:
+  // each must lower to the same running SUM
+  private val spellings: Seq[(String, String, String => String)] = Seq(
+    ("a comment before the OVER item", "cmt", src => s"""
+      SELECT k, ts, v,
+             -- the running sum
+             SUM(v) OVER (PARTITION BY k ORDER BY ts) AS agg
+      FROM $src WHERE v < 900"""),
+    ("no space before OVER", "nosp", src => s"""
+      SELECT k, ts, v, SUM(v)OVER (PARTITION BY k ORDER BY ts) AS agg
+      FROM $src WHERE v < 900"""),
+    ("a comment after the FROM relation", "fromcmt", src => s"""
+      SELECT k, ts, v, SUM(v) OVER (PARTITION BY k ORDER BY ts) AS agg
+      FROM $src -- source
+      WHERE v < 900"""),
+    ("every column qualified by its table", "qual", src => s"""
+      SELECT $src.k, $src.ts, $src.v,
+             SUM($src.v) OVER (PARTITION BY $src.k ORDER BY $src.ts) AS agg
+      FROM $src WHERE $src.v < 900"""))
+
+  spellings.foreach { case (label, tag, select) =>
+    test(s"spelling: $label equals the batch window result") {
+      runOne(tag, "", Window.partitionBy("k").orderBy("ts")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow),
+        select = select)
+    }
   }
 
   test("tied rowtimes share the default (RANGE unbounded) frame value") {
