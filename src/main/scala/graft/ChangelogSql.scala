@@ -637,22 +637,39 @@ object ChangelogSql {
   /** The lowering of parsed statement `plan`: untouched when it reads
     * no changelog or names row_kind/cdc_ts (a deliberate raw changelog
     * read); a single changelog relation takes the two-stage rewrite, a
-    * linear join chain [[lowerJoin]], and every other query reading a
-    * changelog the composite guard. */
+    * linear join chain [[lowerJoin]] (None from either = a raw read of
+    * the FROM chain, rejected when an unlowered join aggregates), and
+    * every other query reading a changelog rejects in the composite
+    * guard. */
   private def sqlInner(spark: SparkSession, plan: LogicalPlan): Option[DataFrame] = {
     val changelogs = relationsOf(plan).filter(isChangelogRel(spark, _))
     if (changelogs.isEmpty ||
         readsEncoding(plan, Seq(streaming.Cdc.RowKind, "cdc_ts"))) return None
-    def guarded = { compositeGuard(spark, plan, changelogs); None }
+    def guarded = compositeGuard(spark, plan, changelogs)
     shapeOf(plan) match {
-      case Some((b, Seq(r))) =>
-        if (isChangelogRel(spark, r.name)) lowerBare(spark, b, r.name, r.alias)
-        else guarded // the changelog is read in a subquery
-      case Some((b, chain)) => lowerJoin(spark, b, chain).orElse(guarded)
+      // a changelog read in a subquery or a CTE
+      case Some((b, _)) if readsChangelogOutside(spark, plan, b.from) => guarded
+      case Some((b, Seq(r))) => lowerBare(spark, b, r.name, r.alias)
+      case Some((b, chain)) => lowerJoin(spark, b, chain).orElse {
+        rejectAggregate(spark, plan, changelogs); None
+      }
       case None => plan match {
         case _: Command | _: ParsedStatement => None // not a query
         case _ => guarded
       }
+    }
+  }
+
+  /** Does statement `p` read a changelog anywhere but as a relation of
+    * its top-level FROM chain `from` (in a subquery expression or a CTE
+    * body)? */
+  private def readsChangelogOutside(spark: SparkSession, p: LogicalPlan,
+      from: LogicalPlan): Boolean = {
+    val chain = from.collect { case r: UnresolvedRelation => r }
+    nodesOf(p).exists {
+      case r: UnresolvedRelation => !chain.exists(_ eq r) &&
+        isChangelogRel(spark, r.multipartIdentifier.mkString("."))
+      case _ => false
     }
   }
 
@@ -700,12 +717,11 @@ object ChangelogSql {
     * A changelog on a PADDED side is rejected: its dead pairs would
     * still "match" the preserved side, so a fully-retracted key would
     * never null-pad — silent wrongness (FULL is both at once). Returns
-    * None when the statement is not this shape at all (the composite
-    * guard then decides). */
+    * None when the statement does not aggregate, or holds a window or a
+    * subquery. */
   private def lowerJoin(spark: SparkSession, b: Block,
       chain: Seq[ChainRel]): Option[DataFrame] = {
     val clIdxs = changelogsIn(spark, chain)
-    if (clIdxs.isEmpty) return None // no changelog in the chain
     if (windowOrSubquery(b.exprs ++ b.order)) return None
     val udas = checkAllowlist(spark, chain(clIdxs.head).name, aggExprs(b))
     if (!aggregating(b)) return None // raw join read
@@ -722,16 +738,16 @@ object ChangelogSql {
     val net = needsNet(b)
     // one stage-1 frame per changelog, each with an ORDINAL weight
     // column (the joint weight is their product); netting keeps the
-    // referenced columns, the ON conditions' among them (the join keys)
+    // referenced columns, the ON conditions' among them (the join keys),
+    // and every payload column when a `*` item reads them all
     val refd = namesIn(b.exprs ++ b.order ++ b.on).map(_.toLowerCase).toSet
+    val star = b.items.exists(_.isInstanceOf[UnresolvedStar])
     val stages: Seq[(Int, DataFrame, String)] =
       clIdxs.zipWithIndex.map { case (idx, j) =>
         val src0 = spark.table(chain(idx).name)
         if (!net) (idx, src0.withColumn(s"__sign_$j", sign), s"__sign_$j")
         else {
-          val dataCols = src0.columns.toSeq.filterNot(n =>
-            n == streaming.Cdc.RowKind || n == "cdc_ts")
-            .filter(n => refd(n.toLowerCase))
+          val dataCols = payloadOf(src0).filter(n => star || refd(n.toLowerCase))
           (idx, src0.groupBy(dataCols.map(col): _*)
             .agg(sum(sign).as(s"__net_$j")).filter(col(s"__net_$j") =!= 0),
             s"__net_$j")
@@ -770,38 +786,62 @@ object ChangelogSql {
         }
         prefix + base + r.on.fold("")(o => s" ON $o")
       }.mkString(" ")
+    // a `*` item (or `q.*`) projects the chain's columns, qualified by
+    // the names fromSql binds, never a weight
+    lazy val qualified = chain.zipWithIndex.map { case (r, i) =>
+      val q = r.alias.getOrElse(r.name.split('.').last)
+      val cols = if (clIdxs.contains(i)) payloadOf(spark.table(r.name))
+        else relationColumns(spark, r.name).getOrElse(Nil)
+      q -> cols.map(c => s"${quoteIdentifier(q)}.${quoteIdentifier(c)}")
+    }
+    def starCols(s: UnresolvedStar): Seq[String] = s.target match {
+      case None => qualified.flatMap(_._2)
+      case Some(t) => qualified.filter(_._1.equalsIgnoreCase(t.last)).flatMap(_._2)
+    }
     try assembleStage2(spark, b, stages.head._2, weight, fromSql,
-      whereInStage2 = true, liveCond = liveCond)
+      whereInStage2 = true, liveCond = liveCond, starCols = starCols)
     finally extraViews.values.foreach(v => spark.catalog.dropTempView(v): Unit)
   }
 
-  /** Composite FROM (subquery / comma list / set operation / join
-    * shapes beyond [[lowerJoin]]): plain SQL is correct only when no
+  /** Composite FROM (subquery / comma list / set operation / CTE) or a
+    * changelog read in a subquery: plain SQL is correct only when no
     * changelog is read, or when the user deliberately reads the raw
-    * changelog (row_kind/cdc_ts referenced). An AGGREGATE over a
-    * changelog reached through any OTHER composite FROM must reject
-    * loudly — counting retraction rows as data is exactly the
-    * wrongness this module bans. `changelogs`: the changelog relations
-    * the statement's census names. */
+    * changelog (row_kind/cdc_ts referenced; [[sqlInner]] lets both
+    * through before this guard). Anything else rejects loudly: an
+    * aggregate would count retraction rows as data, and a subquery or
+    * set operation would treat a retracted row as live (`WHERE g IN
+    * (SELECT g FROM changelog)` keeps a fully deleted g). `changelogs`:
+    * the changelog relations the statement's census names. */
   private def compositeGuard(spark: SparkSession, plan: LogicalPlan,
-      changelogs: Seq[String]): Unit = {
-    // aggregate-shaped: GROUP BY, a supported-aggregate or UDA call, or
-    // any call the registry classifies as an aggregate — ANYWHERE in the
-    // statement (a scalar subquery aggregating the changelog is just as
-    // wrong as a top-level aggregate)
-    val aggShaped = nodesOf(plan).exists(_.isInstanceOf[Aggregate]) ||
-      calls(exprsOf(plan)).exists(isAggCall(spark, _))
-    if (aggShaped) throw new IllegalArgumentException(
-      s"aggregate over a composite FROM reading changelog relation" +
-        s"${if (changelogs.size > 1) "s" else ""} " +
-        s"${changelogs.mkString(", ")} has no retraction-consuming " +
-        "rewrite (running it as plain SQL would aggregate retraction " +
-        "rows as data); supported: ONE changelog joined to static " +
-        "relations with INNER/CROSS joins (LEFT/RIGHT only with the " +
-        "changelog on the preserved side). Otherwise materialize the " +
-        "final state first (Cdc.upsertMaterialize) and join/aggregate " +
-        "that, or reference row_kind explicitly to read the raw changelog")
+      changelogs: Seq[String]): Nothing = {
+    rejectAggregate(spark, plan, changelogs)
+    throw new IllegalArgumentException(
+      s"a subquery, CTE or composite FROM reading ${relsOf(changelogs)} would " +
+        "read its change rows as live rows (a retracted row still matches); " +
+        "read the live state through FINAL_STATE(<changelog>), or reference " +
+        "row_kind explicitly to read the raw changelog")
   }
+
+  /** Rejects statement `plan` when it is aggregate-shaped: GROUP BY, a
+    * supported-aggregate or UDA call, or any call the registry
+    * classifies as an aggregate — ANYWHERE in the statement (a scalar
+    * subquery aggregating the changelog is just as wrong as a top-level
+    * aggregate). */
+  private def rejectAggregate(spark: SparkSession, plan: LogicalPlan,
+      changelogs: Seq[String]): Unit =
+    if (nodesOf(plan).exists(_.isInstanceOf[Aggregate]) ||
+        calls(exprsOf(plan)).exists(isAggCall(spark, _)))
+      throw new IllegalArgumentException(
+        s"aggregate over a composite FROM reading ${relsOf(changelogs)} has no " +
+          "retraction-consuming rewrite (running it as plain SQL would aggregate " +
+          "retraction rows as data); supported: ONE changelog joined to static " +
+          "relations with INNER/CROSS joins (LEFT/RIGHT only with the " +
+          "changelog on the preserved side). Otherwise materialize the " +
+          "final state first (Cdc.upsertMaterialize) and join/aggregate " +
+          "that, or reference row_kind explicitly to read the raw changelog")
+
+  private def relsOf(changelogs: Seq[String]): String =
+    s"changelog relation${if (changelogs.size > 1) "s" else ""} ${changelogs.mkString(", ")}"
 
   /** The aggregate-carrying expressions: select list, HAVING, ORDER BY. */
   private def aggExprs(b: Block): Seq[Expression] =
@@ -849,8 +889,7 @@ object ChangelogSql {
     // with a ±1 weight column and pays only its own GROUP BY exchange,
     // partial-aggregated map-side.
     val net = needsNet(b)
-    val payload = src0.columns.toSeq.filterNot(n =>
-      n == streaming.Cdc.RowKind || n == "cdc_ts")
+    val payload = payloadOf(src0)
     // a `*` item reads every payload column, and names none
     val star = b.items.exists(_.isInstanceOf[UnresolvedStar])
     val (stage1, weight) =
@@ -872,8 +911,12 @@ object ChangelogSql {
       view => s"$view${alias.fold("")(a => s" AS $a")}",
       whereInStage2 = false, // the bare path filtered BEFORE netting
       liveCond = if (net) Some("__net > 0") else None,
-      starCols = if (star) payload else Nil)
+      starCols = _ => payload.map(quoteIdentifier))
   }
+
+  /** A changelog frame's payload columns: all but the encoding. */
+  private def payloadOf(cl: DataFrame): Seq[String] =
+    cl.columns.toSeq.filterNot(n => n == streaming.Cdc.RowKind || n == "cdc_ts")
 
   /** Stage 2 shared by the bare-relation and join lowerings: the user's
     * statement with retract-aware aggregates over the stage-1 frame,
@@ -882,11 +925,13 @@ object ChangelogSql {
     * join (predicates may read the static sides); the bare path already
     * filtered before netting (same live multiset — the predicate is
     * deterministic on the payload — but a smaller netting exchange).
-    * `starCols`: the columns a `*` item projects (never the weight). */
+    * `starCols`: the column references a `*` item projects (never the
+    * weight); none keeps the item as written. */
   private def assembleStage2(spark: SparkSession, b: Block,
       stage1: DataFrame, weight: String,
       fromSqlOf: String => String, whereInStage2: Boolean,
-      liveCond: Option[String], starCols: Seq[String] = Nil): Option[DataFrame] = {
+      liveCond: Option[String],
+      starCols: UnresolvedStar => Seq[String] = _ => Nil): Option[DataFrame] = {
     val grouped = b.groupBy.isDefined
     def rewrite(s: Sliced) =
       rewriteWith(s, weight, grouped, liveCond = liveCond)
@@ -908,8 +953,8 @@ object ChangelogSql {
       val sqlText = new StringBuilder("SELECT ")
         .append(if (b.distinct) "DISTINCT " else "")
         .append(selectList(b).map {
-          case Sliced(_: UnresolvedStar, _, _) if starCols.nonEmpty =>
-            starCols.map(quoteIdentifier).mkString(", ")
+          case Sliced(s: UnresolvedStar, _, _) if starCols(s).nonEmpty =>
+            starCols(s).mkString(", ")
           case item => rewrite(item)
         }.mkString(", "))
       val hidden = if (!hiddenSort) Map.empty[Int, String] else

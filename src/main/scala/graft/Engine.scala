@@ -41,6 +41,9 @@ object Engine {
       // generated classes (about 230 after two restarts of three
       // continuous statements), so every micro-batch evicted and recompiled
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // file: paths (checkpoints, state stores, sinks) without a chmod or
+      // readlink child process per file
+      .config(graft.util.LocalFs.SessionConf.toMap)
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s

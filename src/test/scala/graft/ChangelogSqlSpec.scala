@@ -216,7 +216,10 @@ class ChangelogSqlSpec extends AnyFunSuite {
         // first, and neither is one inside a plain WITH body
         "SELECT COUNT(*) AS n, SUM(x) AS t FROM dim_rejj d, cl_rejj c WHERE d.g = c.g",
         "WITH j AS (SELECT COUNT(*) AS n, SUM(x) AS t FROM dim_rejj d, cl_rejj c " +
-          "WHERE d.g = c.g) SELECT * FROM j")) {
+          "WHERE d.g = c.g) SELECT * FROM j",
+        // an aggregate window over an admissible join has no rewrite
+        "SELECT c.k, SUM(c.x) OVER (PARTITION BY d.region) AS t " +
+          "FROM cl_rejj c JOIN dim_rejj d ON c.g = d.g")) {
         val e = intercept[IllegalArgumentException](Engine.sql(spark, bad))
         assert(e.getMessage.contains("retraction-consuming") ||
           e.getMessage.contains("materialize the final state"),
@@ -310,6 +313,31 @@ class ChangelogSqlSpec extends AnyFunSuite {
       assert(got == Set(("g1", "k1", Some(25.0)), ("g1", "k3", None),
         ("g2", "k4", Some(7.0))), s"got $got")
     } finally spark.catalog.dropTempView("cl_star")
+  }
+
+  test("SELECT DISTINCT * over a changelog join projects the chain's columns, no weight") {
+    import spark.implicits._
+    changelog().createOrReplaceTempView("cl_jstar")
+    Seq(("g1", "west"), ("g2", "east")).toDF("g", "nm").createOrReplaceTempView("dim_jstar")
+    try {
+      val df = Engine.sql(spark,
+        "SELECT DISTINCT * FROM cl_jstar c JOIN dim_jstar d ON c.g = d.g")
+      assert(df.columns.toSeq == Seq("g", "k", "x", "g", "nm"), df.columns.toSeq)
+      val got = df.collect().map(r => (r.getString(1),
+        Option(r.get(2)).map(_.asInstanceOf[Double]), r.getString(4))).toSet
+      // the live rows: k1 updated to 25.0, k2 deleted
+      assert(got == Set(("k1", Some(25.0), "west"), ("k3", None, "west"),
+        ("k4", Some(7.0), "east")), s"got $got")
+      // a qualified star projects its own relation
+      val dims = Engine.sql(spark,
+        "SELECT DISTINCT d.* FROM cl_jstar c JOIN dim_jstar d ON c.g = d.g")
+      assert(dims.columns.toSeq == Seq("g", "nm"), dims.columns.toSeq)
+      assert(dims.as[(String, String)].collect().toSet ==
+        Set(("g1", "west"), ("g2", "east")))
+    } finally {
+      spark.catalog.dropTempView("cl_jstar")
+      spark.catalog.dropTempView("dim_jstar"): Unit
+    }
   }
 
   test("DDL doors: CTAS/INSERT bodies lower; persistent views and WITH reject") {

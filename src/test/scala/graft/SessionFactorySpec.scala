@@ -21,6 +21,11 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
       Engine.CodegenCacheEntries.toString)
     assert(spark.newSession().conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    // file: paths go through the fork-free local file system
+    assert(conf.get("spark.hadoop.fs.file.impl") ==
+      classOf[graft.util.ForkFreeLocalFileSystem].getName)
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[graft.util.ForkFreeLocalFs].getName)
     assert(spark.sparkContext.master == "local[4]")
   }
 

@@ -467,6 +467,27 @@ class SqlFrontDoorNegativeSpec extends AnyFunSuite {
     } finally spark.catalog.dropTempView("neg_cldim"): Unit
   }
 
+  test("relation census: a non-aggregate SELECT whose subquery reads a changelog rejects") {
+    import spark.implicits._
+    Seq("g1", "g2").toDF("g").createOrReplaceTempView("neg_cldim2")
+    try withChangelog { cl =>
+      // g1's only live row survives, g2 never existed: as plain SQL the
+      // subquery would also match rows the changelog retracted
+      val e = intercept[IllegalArgumentException](Engine.sql(spark,
+        s"SELECT * FROM neg_cldim2 WHERE g IN (SELECT g FROM $cl WHERE x = 4.0)"))
+      assert(e.getMessage.contains("change rows as live rows"), e.getMessage)
+      assert(e.getMessage.contains(cl), e.getMessage)
+      // naming row_kind is the documented raw read
+      val raw = Engine.sql(spark, s"SELECT * FROM neg_cldim2 WHERE g IN " +
+        s"(SELECT g FROM $cl WHERE x = 4.0 AND row_kind = '-D')").as[String].collect()
+      assert(raw.toSeq == Seq("g1"), raw.toSeq)
+      // the live state through FINAL_STATE: x = 4.0 was deleted
+      val live = Engine.sql(spark, s"SELECT * FROM neg_cldim2 WHERE g IN " +
+        s"(SELECT g FROM FINAL_STATE($cl) WHERE x = 4.0)").as[String].collect()
+      assert(live.isEmpty, live.toSeq)
+    } finally spark.catalog.dropTempView("neg_cldim2"): Unit
+  }
+
   test("relation census: a comma-listed FROM normalizes an upsert table in any position") {
     import spark.implicits._
     val (u, d) = ("neg_cltok_ups", "neg_cltok_dim")
